@@ -1,5 +1,7 @@
 package graft.etl
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -30,8 +32,9 @@ final case class AbsolutePeriod(startNs: Long, endNs: Long) extends CollectionPe
   * map here, SURVEY.md §2.3 J2), and merge-store (K1, last-wins).
   *
   * `collectOnce` is one micro-batch; the scheduler (ServiceManager or
-  * Structured Streaming foreachBatch) decides cadence. Errors are logged
-  * and swallowed — at-least-once, skip-on-failure (T5).
+  * Structured Streaming foreachBatch) decides cadence. Non-fatal errors are
+  * logged and swallowed — at-least-once, skip-on-failure (T5); fatal errors
+  * and interrupts propagate.
   */
 final class CollectionTask(
     val name: String,
@@ -50,25 +53,24 @@ final class CollectionTask(
   def collectOnce(spark: SparkSession, nowNs: Long): Unit =
     try {
       val p = period.periodAt(nowNs)
-      // Persist the batch: the non-empty probe and the merge below would
-      // otherwise each evaluate the full read pipeline (an API-backed read
-      // would hit the source twice per collection).
+      // Persist the batch: the merge's bucket probe fills the cache and its
+      // write reads it, so an API-backed read hits the source once per
+      // collection. An empty window is a no-op merge.
       val data = evaluate.evaluate(spark, readIds, p)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        if (!data.isEmpty) {
-          val mapping = spark.createDataFrame(readIds.zip(storeIds))
-            .toDF("series_id", "__store_id")
-          val rekeyed = data.join(broadcast(mapping), Seq("series_id"))
-            .select(col("__store_id").as("series_id"), col("ts"), col("value"))
-          store.merge(container, rekeyed, overwrite = false)
-        }
+        val mapping = spark.createDataFrame(readIds.zip(storeIds))
+          .toDF("series_id", "__store_id")
+        val rekeyed = data.join(broadcast(mapping), Seq("series_id"))
+          .select(col("__store_id").as("series_id"), col("ts"), col("value"))
+        store.merge(container, rekeyed, overwrite = false)
       } finally data.unpersist()
       batchesOk += 1
       lastError = None
     } catch {
-      case e: Throwable =>
-        // log-and-swallow (data_collection_task.py:136-150)
+      case NonFatal(e) =>
+        // log-and-swallow (data_collection_task.py:136-150); fatal errors
+        // and interrupts propagate to the caller
         org.apache.log4j.Logger.getLogger(getClass).warn(s"collect $name failed", e)
         lastError = Some(e)
     }

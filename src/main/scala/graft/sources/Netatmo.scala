@@ -145,8 +145,10 @@ object Netatmo {
   * — used for metadata (find's dt inference); the paginated DATA path reads
   * the fixture file through the [[NetatmoV2]] DataSource V2 scan, whose
   * `planInputPartitions` turns the reference's sequential block-cursor loop
-  * (repository.py:150-200) into per-block input partitions. No driver-side
-  * probe action remains on the read path.
+  * (repository.py:150-200) into per-block input partitions. The catalog is
+  * bound once per source, on the first `read` (the reference builds its
+  * station catalog once at start-up, start_collection_netatmo.py:59); every
+  * later `read` runs no driver-side action at all.
   */
 final class NetatmoSource(catalogDf: DataFrame, eventsPoints: DataFrame,
     eventsPath: String, blockSize: Int = 1024) extends SeriesSource {
@@ -157,11 +159,13 @@ final class NetatmoSource(catalogDf: DataFrame, eventsPoints: DataFrame,
     * axis in long format; the engine-side column algebra reconstructs the
     * API's row-major surface — the shared per-module time axis × requested
     * measurements grid (pivot transpose P6, repository.py:142-143) with
-    * missing cells as NaN (P5, repository.py:88-91).
+    * missing cells as NaN (P5, repository.py:88-91) — in ONE shuffle: a
+    * `groupBy("ts")` row per axis point carrying one cell per requested
+    * type, exploded back to long format.
     */
   def getMeasurements(userId: Long, types: Seq[String], period: Period): DataFrame = {
-    val spark = eventsPoints.sparkSession
-    val raw = spark.read.format("graft-netatmo")
+    require(types.nonEmpty, "getMeasurements needs at least one measurement type")
+    val raw = eventsPoints.sparkSession.read.format("graft-netatmo")
       .option("path", eventsPath)
       .option("userId", userId)
       .option("types", types.mkString(","))
@@ -173,40 +177,42 @@ final class NetatmoSource(catalogDf: DataFrame, eventsPoints: DataFrame,
     // raw readings ever land on the same grid cell (e.g. distinct ns
     // timestamps truncating to one µs tick), the pivot semantics keep the
     // max — same collapse the row-major pivot applied (P6).
-    val vals = raw.groupBy("ts", "data_type").agg(max("value").as("value"))
-    val axis = vals.select("ts").distinct()
-    val typesDf = spark.createDataset(types)(
-      org.apache.spark.sql.Encoders.STRING).toDF("data_type")
-    axis.crossJoin(broadcast(typesDf))
-      .join(vals, Seq("ts", "data_type"), "left")
-      .withColumn("value", coalesce(col("value"), lit(Double.NaN)))
-      .select(col("ts"), col("data_type"), col("value"))
+    val cells = types.indices.map(i =>
+      max(when(col("data_type") === types(i), col("value"))).as(s"c$i"))
+    raw.groupBy("ts").agg(cells.head, cells.tail: _*)
+      .select(col("ts"), explode(array(types.indices.map(i => struct(
+        lit(types(i)).as("data_type"),
+        coalesce(col(s"c$i"), lit(Double.NaN)).as("value"))): _*)).as("cell"))
+      .select(col("ts"), col("cell.data_type"), col("cell.value"))
   }
 
-  /** Read callback (S3, repository.py:220-265): parse ids (P2), bind to the
-    * catalog (J1 — the catalog is metadata-scale, so the bind for the
-    * requested handful of ids is a driver-side lookup against a collected
-    * broadcast copy), group by (station, module) so N series on one module
-    * cost ONE paginated fetch with only the requested measurement columns
-    * (request coalescing + projection pushdown, repository.py:242-255), and
-    * re-key rows to the verbatim requested ids.
+  /** The catalog as a driver-side map (station, module, data_type) →
+    * user_id: metadata-scale, collected once on the first [[read]].
     */
-  def read(spark: SparkSession, ids: Seq[String], period: Period): DataFrame = {
-    val parsed: Seq[(String, Map[String, String])] =
-      ids.map(id => id -> Identifiers.parseNetatmoIdStr(id))
-    val cat = catalogDf
+  private lazy val catalogKeys: Map[(String, String, String), Long] =
+    catalogDf
       .select("station_name", "module_name", "data_type", "user_id")
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2)) -> r.getLong(3))
       .toMap
-    val bound = parsed.map { case (id, p) =>
+
+  /** Read callback (S3, repository.py:220-265): parse ids (P2), bind to the
+    * catalog (J1 — a driver-side lookup in [[catalogKeys]]), group by
+    * (station, module) so N series on one module cost ONE paginated fetch
+    * with only the requested measurement columns (request coalescing +
+    * projection pushdown, repository.py:242-255), and re-key rows to the
+    * verbatim requested ids.
+    */
+  def read(spark: SparkSession, ids: Seq[String], period: Period): DataFrame = {
+    val bound = ids.map { id =>
+      val p = Identifiers.parseNetatmoIdStr(id)
       val key = (p("station_name"), p("module_name"), p("data_type"))
-      val uid = cat.getOrElse(key,
+      val uid = catalogKeys.getOrElse(key,
         throw new IllegalArgumentException(s"id not in catalog: $id"))
       (id, uid, p("module_name"), p("data_type"))
     }
-    // One lazy V2 scan per module — no driver actions here at all (the old
-    // per-block probe loop is gone); Spark schedules every module's block
+    // One lazy V2 scan per module — after the first call's catalog bind no
+    // driver action runs here; Spark schedules every module's block
     // partitions together when the unioned plan executes.
     val groups = bound.groupBy { case (_, uid, module, _) => (uid, module) }.toSeq
     val parts = groups.map { case ((uid, _), group) =>

@@ -35,6 +35,15 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
 
   def exists(container: String): Boolean = fs.exists(new Path(containerPath(container)))
 
+  /** Whether a container (or its staging) directory holds any bucket
+    * directory, i.e. any points.
+    */
+  private def hasBuckets(dir: Path): Boolean =
+    fs.exists(dir) && fs.listStatus(dir).exists(_.getPath.getName.startsWith("bucket="))
+
+  private def hasBuckets(container: String): Boolean =
+    hasBuckets(new Path(containerPath(container)))
+
   /** Staging siblings of the container directory. Both live OUTSIDE the
     * container so Spark partition discovery never sees them: a backup left
     * behind by a crash must not surface as extra rows (and a `bucket=N.__old`
@@ -123,15 +132,22 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
     java.lang.Math.floorMod(c.getValue, numBuckets.toLong).toInt
   }
 
+  /** The stored columns, bucket partition included: reads pass it to
+    * `spark.read` instead of inferring it from a parquet footer, which would
+    * cost a Spark job per read.
+    */
+  private val storedSchema = "series_id STRING, ts BIGINT, value DOUBLE, bucket INT"
+
+  private def scan(container: String): DataFrame =
+    spark.read.schema(storedSchema).parquet(containerPath(container))
+
   /** Full container scan; callers filter by id/period (filters push down). */
   def read(container: String): DataFrame = {
     recoverIfNeeded(container)
-    val dir = new Path(containerPath(container))
-    val hasData = fs.exists(dir) && fs.listStatus(dir).exists(_.getPath.getName.startsWith("bucket="))
-    if (!hasData)
+    if (!hasBuckets(container))
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], model.pointSchema)
     else
-      spark.read.parquet(containerPath(container)).select("series_id", "ts", "value")
+      scan(container).select("series_id", "ts", "value")
   }
 
   /** Period-covering read of specific series
@@ -140,12 +156,10 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
     */
   def read(container: String, ids: Seq[String], period: Period): DataFrame = {
     recoverIfNeeded(container)
-    val dir = new Path(containerPath(container))
-    val hasData = fs.exists(dir) && fs.listStatus(dir).exists(_.getPath.getName.startsWith("bucket="))
-    if (!hasData)
+    if (!hasBuckets(container))
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], model.pointSchema)
     val buckets = ids.map(bucketOf).distinct
-    spark.read.parquet(containerPath(container))
+    scan(container)
       .where(col("bucket").isin(buckets: _*))
       .where(col("series_id").isin(ids: _*))
       .where(col("ts") >= period.startNs && col("ts") < period.endNs)
@@ -157,15 +171,18 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
     * axis, colliding timestamps take the NEW value (last-writer-wins), and
     * untouched series/points survive
     * (reference: weather/service/data_collection_task.py:121-126, semantics
-    * proven in weather/test/test_dtss_host.py:102-134).
+    * proven in weather/test/test_dtss_host.py:102-134). Duplicate
+    * (series_id, ts) rows within one batch keep the largest value, whether
+    * or not the container exists yet. A non-overwrite merge of an empty
+    * batch leaves the store as it was.
     *
     * Scale: only the buckets present in the incoming batch are read,
-    * merged (one shuffle on the row_number window, AQE-sized) and swapped;
-    * the rest of the container is untouched. The per-bucket swap is
-    * rename-checked with a backup — a crash mid-swap never loses data —
-    * and the merge is idempotent (re-merging the same batch is a no-op,
-    * T4 late/duplicate handling), so a retry after a partial swap
-    * converges.
+    * merged (one exchange, hash on bucket, shared by the last-wins window
+    * and the bucket-partitioned write) and swapped; the rest of the
+    * container is untouched. The per-bucket swap is rename-checked with a
+    * backup — a crash mid-swap never loses data — and the merge is
+    * idempotent (re-merging the same batch is a no-op, T4 late/duplicate
+    * handling), so a retry after a partial swap converges.
     */
   def merge(container: String, incoming: DataFrame, overwrite: Boolean = false): Unit =
     SeriesStore.containerLock(containerPath(container)).synchronized {
@@ -188,43 +205,59 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
       col("value").cast("double"))
       .withColumn("bucket", bucketCol)
 
-    val fresh = overwrite || !exists(container) ||
-      !fs.listStatus(target).exists(_.getPath.getName.startsWith("bucket="))
-    if (fresh) {
-      if (fs.exists(target)) fs.delete(target, true)
-      write(newData, target)
-      return
-    }
-
+    val fresh = overwrite || !hasBuckets(container)
     // Bounded rewrite: only buckets the batch touches. The distinct-bucket
-    // probe is metadata-scale (≤ numBuckets values).
-    val affected: Seq[Int] = newData.select("bucket").distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    if (affected.isEmpty) return
+    // probe is metadata-scale (≤ numBuckets values); a fresh container has
+    // no old rows to read, so it skips the probe.
+    val affected: Seq[Int] =
+      if (fresh) Nil
+      else newData.select("bucket").distinct().collect().map(_.getInt(0)).toSeq.sorted
+    if (!fresh && affected.isEmpty) return
 
-    val old = spark.read.parquet(containerPath(container))
-      .where(col("bucket").isin(affected: _*))
-      .select(col("series_id"), col("ts"), col("value"), col("bucket"))
-      .withColumn("__gen", lit(0))
     val nw = newData.withColumn("__gen", lit(1))
-    // value.desc as secondary key: if one batch carries duplicate
-    // (series_id, ts) rows the survivor is still deterministic.
-    val w = Window.partitionBy("series_id", "ts")
+    val batch =
+      if (fresh) nw
+      else scan(container).where(col("bucket").isin(affected: _*))
+        .withColumn("__gen", lit(0))
+        .unionByName(nw)
+    // One exchange: hash on bucket clusters every (bucket, series_id, ts)
+    // group of the window, and the window's sort is the write's
+    // (bucket, series_id, ts) file order. value.desc as secondary key: if
+    // one batch carries duplicate (series_id, ts) rows the survivor is
+    // still deterministic. The width is pinned — a bare REPARTITION_BY_COL
+    // is AQE-coalescable back to one partition on small inputs, serializing
+    // the sort and the parquet write.
+    val w = Window.partitionBy("bucket", "series_id", "ts")
       .orderBy(col("__gen").desc, col("value").desc)
-    val merged = old.unionByName(nw)
+    val merged = batch
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions", "32").toInt, col("bucket"))
       .withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1)
       .drop("__rn", "__gen")
 
     // Parquet can't be rewritten in place while being read: stage the merged
-    // buckets to a tmp sibling, then swap each affected bucket directory.
-    // Every rename is checked; on failure the bucket's backup is restored.
-    // Backups live in the sibling `.__bak` dir, never inside the container:
-    // a hard crash mid-swap leaves recoverable state that [[sweepStaging]]
-    // repairs, and no reader ever discovers a backup as a partition.
+    // buckets to a tmp sibling. A fresh container is the staged directory
+    // moved into place — unless nothing was staged: an empty batch leaves
+    // the store as it was, and only an overwrite empties the container.
     val tmp = tmpDirOf(container)
     if (fs.exists(tmp)) fs.delete(tmp, true)
-    write(merged, tmp)
+    merged.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(tmp.toString)
+    if (fresh) {
+      if (!overwrite && !hasBuckets(tmp)) {
+        fs.delete(tmp, true)
+        return
+      }
+      if (fs.exists(target)) fs.delete(target, true)
+      if (!fs.rename(tmp, target))
+        throw new java.io.IOException(s"merge: failed to move $tmp into place at $target")
+      return
+    }
+
+    // Swap each affected bucket directory. Every rename is checked; on
+    // failure the bucket's backup is restored. Backups live in the sibling
+    // `.__bak` dir, never inside the container: a hard crash mid-swap leaves
+    // recoverable state that [[sweepStaging]] repairs, and no reader ever
+    // discovers a backup as a partition.
     val bakRoot = bakDirOf(container)
     fs.mkdirs(bakRoot)
     affected.foreach { b =>
@@ -300,16 +333,6 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
         try sweepStaging(container)
         finally releaseProcessLock(container)
       }
-
-  private def write(df: DataFrame, path: Path): Unit =
-    // pinned width — a bare REPARTITION_BY_COL is AQE-coalescable back to
-    // one partition on small inputs, serializing the sort + parquet write
-    df.repartition(df.sparkSession.conf
-        .get("spark.sql.shuffle.partitions", "32").toInt, col("bucket"))
-      .sortWithinPartitions("bucket", "series_id", "ts")
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(path.toString)
 }
 
 object SeriesStore {

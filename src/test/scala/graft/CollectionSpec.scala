@@ -71,6 +71,35 @@ class CollectionSpec extends SparkSpec {
     assert(acc.value == 60L, s"pipeline evaluated ${acc.value} rows for 60 inputs — double evaluation")
   }
 
+  test("a window with no readings is a no-op collection") {
+    val store = new SeriesStore(spark, tmpDir("graft-empty-window"), numBuckets = 2)
+    val ev = new Evaluate(Map("mock1" -> new MockSource("mock1")))
+    val empty = new CollectionTask("empty", ev, store, "cont", Seq("mock1://n/1"),
+      Seq("shyft://cont/n"), AbsolutePeriod(60 * S, 60 * S))
+    empty.collectOnce(spark, nowNs = 0L)
+    assert(empty.healthy, s"empty collect failed: ${empty.lastError}")
+    assert(!store.exists("cont"), "an empty window must not create the container")
+
+    mkTask(store, windowS = 60).collectOnce(spark, nowNs = 60 * S)
+    empty.collectOnce(spark, nowNs = 0L)
+    assert(empty.healthy && empty.batchesOk == 2)
+    assert(store.read("cont").count() == 60)
+  }
+
+  test("an interrupt in the source propagates out of collectOnce") {
+    val interrupted = new SeriesSource {
+      val name = "intr"
+      def read(s: SparkSession, ids: Seq[String], period: Period): DataFrame =
+        throw new InterruptedException("collector stopped")
+      def find(s: SparkSession, query: String): Seq[TsInfo] = Seq.empty
+    }
+    val store = new SeriesStore(spark, tmpDir("graft-intr"), numBuckets = 2)
+    val task = new CollectionTask("intr", new Evaluate(Map("intr" -> interrupted)),
+      store, "c", Seq("intr://x/1"), Seq("shyft://c/x"), AbsolutePeriod(0L, 10 * S))
+    intercept[InterruptedException](task.collectOnce(spark, nowNs = 0L))
+    assert(task.batchesOk == 0)
+  }
+
   test("runForever drives tick and health-check on a real clock until stopped") {
     val store = new SeriesStore(spark, tmpDir("graft-forever"), numBuckets = 2)
     val task = mkTask(store, windowS = 10)

@@ -1,7 +1,19 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.core.Tables
 import graft.ts.{Evaluate, SeriesStore}
@@ -17,6 +29,60 @@ class PlanSpec extends SparkSpec {
 
   private def planOf(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  private object Aqe extends AdaptiveSparkPlanHelper
+
+  /** Shuffle exchanges of a physical plan, inside adaptive query stages too. */
+  private def shuffles(plan: SparkPlan): Seq[ShuffleExchangeExec] =
+    Aqe.collect(plan) { case e: ShuffleExchangeExec => e }
+
+  /** The Spark jobs `body` runs and the SQL executions it completes.
+    * Listener events arrive asynchronously but in order, so a marker query
+    * run after `body` closes the window.
+    */
+  private def observe(body: => Unit): (Int, Seq[QueryExecution]) = {
+    val markerDesc = "plan-spec-marker"
+    val marker = spark.range(1)
+    val jobs = new AtomicInteger(0)
+    val plans = new ConcurrentLinkedQueue[QueryExecution]()
+    val closed = new CountDownLatch(1)
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (!Option(e.properties).exists(_.getProperty("spark.job.description") == markerDesc))
+          jobs.incrementAndGet()
+    }
+    val planListener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe eq marker.queryExecution) closed.countDown() else plans.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.sparkContext.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    try {
+      body
+      spark.sparkContext.setJobDescription(markerDesc)
+      try marker.collect() finally spark.sparkContext.setJobDescription(null)
+      assert(closed.await(60, TimeUnit.SECONDS), "listener bus did not deliver the marker")
+    } finally {
+      spark.listenerManager.unregister(planListener)
+      spark.sparkContext.removeSparkListener(jobListener)
+    }
+    (jobs.get(), plans.asScala.toSeq)
+  }
+
+  /** A netatmo source over the test events and every id of one station
+    * (two modules), for the whole time range.
+    */
+  private def netatmoFixture() = {
+    val t = Tables(spark, sfDir)
+    val cat = graft.sources.Netatmo.catalog(graft.sources.Netatmo.rawConfig(t.eventsUs))
+    val src = new graft.sources.NetatmoSource(cat,
+      t.eventsUs.select("user_id", "event_type", "ts", "value"), s"$sfDir/events.parquet")
+    val uid = cat.limit(1).collect()(0).getAs[Long]("user_id")
+    val rows = cat.where(col("user_id") === uid).select("source_id", "module_name", "data_type").collect()
+    (src, uid, rows.toSeq.map(r => (r.getString(0), r.getString(1), r.getString(2))),
+      Period(Long.MinValue / 2, Long.MaxValue / 2))
+  }
 
   test("filters push down to the parquet scan") {
     val df = SparkEntry.queries("q4_filter")(spark, sfDir)
@@ -92,6 +158,47 @@ class PlanSpec extends SparkSpec {
       .option("blockSize", 16)
       .load()
     assert(v2.rdd.getNumPartitions > 1, "each block must be its own partition")
+  }
+
+  test("netatmo fetch is one shuffle per module") {
+    val (src, uid, ids, all) = netatmoFixture()
+    val modules = ids.groupBy(_._2)
+    assert(modules.size == 2, s"fixture station should carry two modules: $ids")
+    modules.values.foreach { mod =>
+      val plan = src.getMeasurements(uid, mod.map(_._3), all).queryExecution.executedPlan
+      assert(shuffles(plan).size == 1, plan.toString.take(3000))
+    }
+    val read = src.read(spark, ids.map(_._1), all).queryExecution.executedPlan
+    assert(shuffles(read).size == 2, read.toString.take(3000))
+  }
+
+  test("a second netatmo read runs no Spark job: the catalog is bound once") {
+    val (src, _, ids, all) = netatmoFixture()
+    val (first, _) = observe(src.read(spark, ids.map(_._1), all))
+    assert(first > 0, "the first read binds the catalog with a Spark job")
+    val (second, _) = observe(src.read(spark, ids.map(_._1), all))
+    assert(second == 0, s"second read ran $second jobs")
+  }
+
+  test("a merge into an existing container is one exchange on bucket, no second sort") {
+    val store = new SeriesStore(spark, tmpDir("graft-merge-plan"), numBuckets = 4)
+    def pts(t0: Long) = (t0 until t0 + 16).map(t => (s"shyft://c/s-${t % 5}", t, t.toDouble))
+      .toDF("series_id", "ts", "value")
+    store.merge("c", pts(0L))
+    val (_, plans) = observe(store.merge("c", pts(8L)))
+    val writes = plans.map(_.executedPlan)
+      .filter(p => Aqe.find(p)(_.isInstanceOf[DataWritingCommandExec]).nonEmpty)
+    assert(writes.size == 1, s"expected one write, got ${writes.size}")
+    val plan = writes.head
+    val ex = shuffles(plan)
+    assert(ex.size == 1, plan.toString.take(3000))
+    ex.head.outputPartitioning match {
+      case h: HashPartitioning =>
+        assert(h.expressions.map(_.sql).mkString.contains("bucket"), h.toString)
+      case other => fail(s"merge exchange is not hashed on bucket: $other")
+    }
+    assert(Aqe.collect(plan) { case s: SortExec => s }.size == 1, plan.toString.take(3000))
+    assert(store.read("c").count() == 16 + 8)
   }
 
   test("sessionize is a single shuffle: rollup reuses the window partitioning") {

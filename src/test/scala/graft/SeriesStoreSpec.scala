@@ -68,6 +68,36 @@ class SeriesStoreSpec extends SparkSpec {
     store.merge("c", series(Seq(1, 2, 3), t0 = 0))
     store.merge("c", series(Seq(1), t0 = 0).where("value > 999"))
     assert(store.read("c").count() == 3)
+    // a missing container stays missing
+    store.merge("new", series(Seq(1), t0 = 0).where("value > 999"))
+    assert(!store.exists("new"), "an empty batch must not create its container")
+    assert(store.read("new").count() == 0)
+  }
+
+  test("duplicate points in one batch keep one survivor, into a new or an existing container") {
+    val dups = Seq((id, 0L, 1.0), (id, 0L, 5.0), (id, S, 2.0), (id, S, 2.0))
+      .toDF("series_id", "ts", "value")
+    val want = Seq(0L -> 5.0, 1L -> 2.0) // the largest value of a duplicate wins
+    def stored(store: SeriesStore, c: String) =
+      store.read(c).orderBy("ts").collect().map(r => (r.getLong(1) / S, r.getDouble(2))).toSeq
+
+    val store = new SeriesStore(spark, tmpDir("graft-dups"), numBuckets = 2)
+    store.merge("fresh", dups)
+    assert(stored(store, "fresh") == want)
+    store.merge("over", series(Seq(7.0), t0 = 9))
+    store.merge("over", dups, overwrite = true)
+    assert(stored(store, "over") == want)
+    store.merge("old", series(Seq(7.0), t0 = 9))
+    store.merge("old", dups)
+    assert(stored(store, "old") == want :+ (9L -> 7.0))
+  }
+
+  test("an overwrite with an empty batch empties the container") {
+    val store = new SeriesStore(spark, tmpDir("graft-overwrite-empty"), numBuckets = 2)
+    store.merge("c", series(Seq(1, 2, 3), t0 = 0))
+    store.merge("c", series(Seq(1), t0 = 0).where("value > 999"), overwrite = true)
+    assert(store.exists("c"))
+    assert(store.read("c").count() == 0)
   }
 
   test("merge rewrites only the buckets the batch touches") {
