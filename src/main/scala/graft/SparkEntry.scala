@@ -1642,7 +1642,11 @@ object SparkEntry {
     queries("q1_agg")(spark, "/root/testdata/sf0.001")
 
   // --------------------------------------------------------------------
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    baseQueries ++ twins.map(t => t.name -> t.run)
+
+  /** The rows with their own oracle; [[twins]] adds the rest. */
+  private[graft] def baseQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- relational anchors (scan/filter/agg/join; Catalyst baseline) ----
     "q1_agg" -> ((s, dir) => {
       Tables(s, dir).lineitem
@@ -2213,17 +2217,6 @@ object SparkEntry {
     "clf_quality_frozen" -> ((s, dir) =>
       frozenClfScore(s, dir, ClfFrozenDir)(
         TextOps.logregScoreFrozen(_, _))),
-    // the same frozen serving through the TVF surface: the spliced plan
-    // IS logregScoreFrozen's (kernel map), SQL-drivable end to end
-    "sql_clf_score" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      frozenClfScore(s, dir, ClfSqlFrozenDir) { (docs, mF) =>
-        docs.createOrReplaceTempView("graft_sql_docs_clf")
-        mF.createOrReplaceTempView("graft_sql_clf_model")
-        s.sql("SELECT * FROM graft_clf_score(" +
-          "'graft_sql_docs_clf', 'graft_sql_clf_model')")
-      }
-    }),
     // model-in-the-loop curation AT INGEST: the scoring kernel is a
     // narrow stateless map, so the stream face is the batch operator
     // verbatim (StreamOpsSpec drives it as a real MemoryStream)
@@ -2292,26 +2285,6 @@ object SparkEntry {
     "sample_domain_budget" -> ((s, dir) =>
       WebOps.domainBudgetCap(webSynthDocs(Tables(s, dir).documents),
         budgetTokens = 60)),
-    // the same three web operators through the SQL TVF surface — spliced
-    // plans ARE the Scala plans, oracles aliased to the originals
-    "sql_web_canonical" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      webSynthDocs(Tables(s, dir).documents)
-        .createOrReplaceTempView("graft_sql_webdocs")
-      s.sql("SELECT * FROM graft_web_canonical('graft_sql_webdocs')")
-    }),
-    "sql_domain_stats" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      webSynthDocs(Tables(s, dir).documents)
-        .createOrReplaceTempView("graft_sql_webdocs_st")
-      s.sql("SELECT * FROM graft_domain_stats('graft_sql_webdocs_st')")
-    }),
-    "sql_domain_budget" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      webSynthDocs(Tables(s, dir).documents)
-        .createOrReplaceTempView("graft_sql_webdocs_bd")
-      s.sql("SELECT * FROM graft_domain_budget('graft_sql_webdocs_bd', 60)")
-    }),
     // robots/blocklist gate: docs from blocked registered domains or
     // blocked canonical-URL prefixes dropped by broadcast anti-joins —
     // the crawl-curation filter in front of everything else
@@ -2319,14 +2292,6 @@ object SparkEntry {
       WebOps.blocklistFilter(webSynthDocs(Tables(s, dir).documents),
           webBlocklist(s))
         .select("doc_id", "url", "canonical_url", "domain")),
-    "sql_web_blocklist" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      webSynthDocs(Tables(s, dir).documents)
-        .createOrReplaceTempView("graft_sql_webdocs_bl")
-      webBlocklist(s).createOrReplaceTempView("graft_sql_blocklist")
-      s.sql("SELECT doc_id, url, canonical_url, domain FROM " +
-        "graft_web_blocklist('graft_sql_webdocs_bl', 'graft_sql_blocklist')")
-    }),
     // streaming URL-identity dedup in batch mode: the crawl-ingest face —
     // canonical-key state (keeper id + variant count) via
     // flatMapGroupsWithState; batch parity == WebOps.urlDedup exactly
@@ -2339,15 +2304,6 @@ object SparkEntry {
     "web_crawl_rate" -> ((s, dir) =>
       WebOps.crawlRate(crawlFetches(Tables(s, dir)),
         windowMs = 3600000L, maxFetches = 2)),
-    "stream_crawl_rate" -> ((s, dir) =>
-      graft.streaming.StreamOps.crawlRateStream(crawlFetches(Tables(s, dir)),
-        windowMs = 3600000L, maxFetches = 2, watermark = "1 minute")),
-    "sql_crawl_rate" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      crawlFetches(Tables(s, dir))
-        .createOrReplaceTempView("graft_sql_fetches")
-      s.sql("SELECT * FROM graft_crawl_rate('graft_sql_fetches', 3600000, 2)")
-    }),
     // outlink extraction: every http(s) mention in page text, exploded
     // with its canonical identity + target registered domain — the
     // crawl-frontier feed; extraction is a narrow map riding the scan
@@ -2357,12 +2313,6 @@ object SparkEntry {
     // and distinct-page counts — one partial-combined agg on the pair key
     "web_link_graph" -> ((s, dir) =>
       WebOps.linkGraph(webLinkedDocs(Tables(s, dir).documents))),
-    "sql_link_graph" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      webLinkedDocs(Tables(s, dir).documents)
-        .createOrReplaceTempView("graft_sql_webdocs_lk")
-      s.sql("SELECT * FROM graft_link_graph('graft_sql_webdocs_lk')")
-    }),
     // robots-rules verdicts (RFC 9309: longest match wins, allow on tie,
     // default allow): every URL annotated with (allowed, matched_prefix)
     // — rules broadcast as per-domain arrays, zero corpus shuffle
@@ -2371,69 +2321,22 @@ object SparkEntry {
           robotsRules(s))
         .select("doc_id", "url", "domain", "path", "allowed",
           "matched_prefix")),
-    "sql_web_robots" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      webSynthDocs(Tables(s, dir).documents)
-        .createOrReplaceTempView("graft_sql_webdocs_rb")
-      robotsRules(s).createOrReplaceTempView("graft_sql_robots")
-      s.sql("SELECT doc_id, url, domain, path, allowed, matched_prefix " +
-        "FROM graft_web_robots('graft_sql_webdocs_rb', 'graft_sql_robots')")
-    }),
-    // the robots verdict is a stateless narrow map over a stream-static
-    // broadcast, so the stream face is the batch operator verbatim
-    // (StreamOpsSpec drives it as a real MemoryStream)
-    "stream_robots" -> ((s, dir) =>
-      graft.streaming.StreamOps.robotsStream(
-          webSynthDocs(Tables(s, dir).documents), robotsRules(s))
-        .select("doc_id", "url", "domain", "path", "allowed",
-          "matched_prefix")),
-    // blocklist gate at ingest: narrow map + stream-static broadcast
-    // anti-joins — batch parity by construction
-    "stream_blocklist" -> ((s, dir) =>
-      graft.streaming.StreamOps.blocklistStream(
-          webSynthDocs(Tables(s, dir).documents), webBlocklist(s))
-        .select("doc_id", "url", "canonical_url", "domain")),
     // crawl frontier: outlink mentions whose canonical identity is not a
     // corpus page — one agg on the canonical key + a shuffled anti-join
     // reusing the same partitioning (both sides corpus-scale)
     "web_frontier" -> ((s, dir) =>
       WebOps.frontier(webLinkedDocs(Tables(s, dir).documents))),
-    "sql_frontier" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      webLinkedDocs(Tables(s, dir).documents)
-        .createOrReplaceTempView("graft_sql_webdocs_fr")
-      s.sql("SELECT * FROM graft_web_frontier('graft_sql_webdocs_fr')")
-    }),
     // domain-scoped boilerplate: lines repeating across most pages of
     // their own registered domain (nav/footer chrome) — one agg on the
     // (domain, line-key) pair, domain doc counts joined at metadata level
     "web_boilerplate" -> ((s, dir) =>
       WebOps.domainBoilerplate(webPageDocs(Tables(s, dir).documents))),
-    "sql_boilerplate" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      webPageDocs(Tables(s, dir).documents)
-        .createOrReplaceTempView("graft_sql_webdocs_bp")
-      s.sql("SELECT * FROM " +
-        "graft_domain_boilerplate('graft_sql_webdocs_bp', 0.6, 2)")
-    }),
     // politeness scheduler: earliest feasible fetch time per domain under
     // a minimum gap — the sequential-looking recurrence unrolled to two
     // sharded prefix scans (rank + running max), Zipfian-skew-safe
     "web_fetch_schedule" -> ((s, dir) =>
       WebOps.fetchSchedule(crawlFetches(Tables(s, dir)),
         delayMs = 60000L)),
-    "sql_fetch_schedule" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      crawlFetches(Tables(s, dir))
-        .createOrReplaceTempView("graft_sql_fetches_sc")
-      s.sql(
-        "SELECT * FROM graft_fetch_schedule('graft_sql_fetches_sc', 60000)")
-    }),
-    // the same recurrence continued across micro-batches: two longs of
-    // state per domain (count + running max), slots emitted final
-    "stream_fetch_schedule" -> ((s, dir) =>
-      graft.streaming.StreamOps.fetchScheduleStream(
-        crawlFetches(Tables(s, dir)), delayMs = 60000L).toDF()),
 
     // ---- post-training (SFT / preference) data prep: turn-structure
     // validation, chat-template rendering with loss-span offsets,
@@ -2474,24 +2377,6 @@ object SparkEntry {
       TextOps.decontaminate(ChatOps.userPrompts(chatSynthTurns(docs)),
         bench, n = 5, idCol = "conv_id")
     }),
-    "sql_sft_stats" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      chatSynthTurns(Tables(s, dir).documents)
-        .createOrReplaceTempView("graft_sql_turns_st")
-      s.sql("SELECT * FROM graft_sft_stats('graft_sql_turns_st')")
-    }),
-    "sql_pref_bias" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      prefSynthPairs(Tables(s, dir).documents)
-        .createOrReplaceTempView("graft_sql_pairs_pb")
-      s.sql("SELECT * FROM graft_pref_bias('graft_sql_pairs_pb')")
-    }),
-    // SFT-ingest dedup: rendered-identity state (keeper + copy count, two
-    // longs per distinct conversation) continued across micro-batches
-    "stream_sft_dedup" -> ((s, dir) =>
-      graft.streaming.StreamOps.convDedupStream(
-        ChatOps.renderChat(chatVariantTurns(Tables(s, dir).documents))
-          .select("conv_id", "text")).toDF()),
     // chat-template packing: rendered conversations laid end-to-end into
     // fixed 256-token training windows (render is one bounded-group agg;
     // the global offset is the sharded prefix scan — shardWidth 100
@@ -3400,11 +3285,6 @@ object SparkEntry {
     "stream_line_dedup" -> ((s, dir) =>
       graft.streaming.StreamOps.lineDedupStream(
         lineSynthDocs(Tables(s, dir).documents)).toDF()),
-    // streaming near-dup detection, batch face: must equal dedup_minhash
-    // exactly (same banding expression, same Jaccard arithmetic)
-    "stream_near_dups" -> ((s, dir) =>
-      graft.streaming.StreamOps.nearDupStream(
-        Tables(s, dir).documents.select("doc_id", "text")).toDF()),
     // streaming SEMANTIC near-dup detection, batch face: within-cell
     // cosine pairs against the frozen full-corpus codebook — the same
     // cells dedup_semantic prunes over (shared kmeans chain in the twin)
@@ -3442,55 +3322,7 @@ object SparkEntry {
         e.where(col("vec_id") < 5), cellsSeq, cbSeq, cdF,
         topK = 3, nprobe = 3).toDF()
     }),
-    // the same frozen serving through the SQL TVF surface: the spliced
-    // plan IS ivfPqAdcTopKFrozen's, built over temp views of the
-    // read-back frozen relations
-    "sql_ann_serve" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      val e = Tables(s, dir).embeddings
-      val n = e.count()
-      val (ceF, cbF, cdF) = amortizedFreeze(SqlAnnFrozenDir, s"ivfpq-$n") {
-        Similarity.ivfPqReadFrozen(s, SqlAnnFrozenDir, s"ivfpq-$n")
-      } {
-        val (cells, cb, cd) = Similarity.ivfPqTrain(e, m = 8, kc = 64,
-          iters = 1)
-        Similarity.ivfPqFreeze(cells, cb, cd, s"ivfpq-$n", SqlAnnFrozenDir)
-      }
-      e.where(col("vec_id") < 5)
-        .createOrReplaceTempView("graft_sql_ann_queries")
-      ceF.createOrReplaceTempView("graft_sql_ann_cells")
-      cbF.createOrReplaceTempView("graft_sql_ann_codebooks")
-      cdF.createOrReplaceTempView("graft_sql_ann_codes")
-      s.sql("SELECT * FROM graft_ann_serve('graft_sql_ann_queries', " +
-        "'graft_sql_ann_cells', 'graft_sql_ann_codebooks', " +
-        "'graft_sql_ann_codes', 3, 3)")
-    }),
-    // streaming KMV sketch in batch mode: equals sketch_kmv exactly
-    "stream_kmv" -> ((s, dir) =>
-      graft.streaming.StreamOps.kmvStream(
-        Tables(s, dir).events, k = 64, "event_type", "user_id")
-        .toDF().withColumnRenamed("grp", "event_type")),
-    // streaming HLL sketch in batch mode: equals sketch_hll exactly
-    "stream_hll" -> ((s, dir) =>
-      graft.streaming.StreamOps.hllStream(
-        Tables(s, dir).events, p = 10, "event_type", "user_id")
-        .toDF().withColumnRenamed("grp", "event_type")),
-    // streaming quantile sample in batch mode: equals sketch_quantile exactly
-    "stream_quantile" -> ((s, dir) =>
-      graft.streaming.StreamOps.quantileStream(
-        Tables(s, dir).events, k = 64, "event_type", "event_id", "value")
-        .toDF().withColumnRenamed("grp", "event_type")),
     // streaming CMS cells in batch mode: equals cmsSketch exactly
-    // streaming repeat suppression in batch mode: batch face of
-    // Sessionize.firstPerWindow (associative struct-min + count)
-    "stream_dedup_window" -> ((s, dir) =>
-      graft.streaming.StreamOps.dedupWindowStream(
-        Tables(s, dir).eventsUs, 3600L * NsPerS).toDF()),
-    // streaming sessionization's batch face: one micro-batch holding the
-    // whole frame must equal Sessionize.sessions row for row
-    "stream_sessions" -> ((s, dir) =>
-      graft.streaming.StreamOps.sessionStream(
-        Tables(s, dir).eventsUs, gapNs = 1800000000000L).toDF()),
     "stream_cms" -> ((s, dir) =>
       graft.streaming.StreamOps.cmsStream(
         Tables(s, dir).documents
@@ -3505,329 +3337,6 @@ object SparkEntry {
           col("min_value"), col("max_value"), col("n_points"))
     }),
 
-    // ---- pure-SQL drivability: the same pipeline operators reached
-    // through the GraftTableFunctions table-valued surface; each oracle is
-    // aliased to the original query's, so the gate proves the SQL path
-    // hashes identically to the Scala path ----
-    "sql_sessionize" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).eventsUs.createOrReplaceTempView("graft_sql_events")
-      s.sql("SELECT * FROM graft_sessionize('graft_sql_events', 1800000000000)")
-    }),
-    "sql_bm25" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).documents.createOrReplaceTempView("graft_sql_documents")
-      s.sql("SELECT * FROM graft_bm25('graft_sql_documents', 'table scan sort key', 20)")
-    }),
-    "sql_resample" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      pts(s, dir).createOrReplaceTempView("graft_sql_points")
-      s.sql("SELECT * FROM graft_resample('graft_sql_points', 86400000000000)")
-    }),
-    "sql_quantile_sketch" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).events.createOrReplaceTempView("graft_sql_events")
-      s.sql("SELECT * FROM graft_quantile_sketch('graft_sql_events', 64, " +
-        "'event_type', 'event_id', 'value')")
-    }),
-    "sql_semantic_dedup" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).embeddings.createOrReplaceTempView("graft_sql_embeddings")
-      s.sql("SELECT * FROM graft_semantic_dedup('graft_sql_embeddings', 0.4, 8, 2)")
-    }),
-    "sql_dedup_clusters" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).documents.createOrReplaceTempView("graft_sql_documents")
-      s.sql("SELECT * FROM graft_dedup_clusters('graft_sql_documents')")
-    }),
-    "sql_hll" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).events.createOrReplaceTempView("graft_sql_events")
-      s.sql("SELECT * FROM graft_hll_distinct('graft_sql_events', 10, " +
-        "'event_type', 'user_id')")
-    }),
-    "sql_cms" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).documents
-        .select(explode(TextOps.tokens(col("text"))).as("term"))
-        .createOrReplaceTempView("graft_sql_terms")
-      s.sql("SELECT * FROM graft_cms_topk('graft_sql_terms', 'term', 20)")
-    }),
-    "sql_sample" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).documents.createOrReplaceTempView("graft_sql_documents")
-      s.sql("SELECT doc_id, lang FROM graft_sample('graft_sql_documents', " +
-        "'doc_id', 0.1)")
-    }),
-    "sql_compaction" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).documents.createOrReplaceTempView("graft_sql_documents")
-      s.sql("SELECT * FROM graft_compaction_plan('graft_sql_documents', 4096)")
-    }),
-    "sql_dedup_exact" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).documents.createOrReplaceTempView("graft_sql_documents")
-      s.sql("SELECT * FROM graft_exact_dedup('graft_sql_documents')")
-    }),
-    // the line-dedup family through the TVF surface: same synthesized
-    // multi-line corpus, same default boilerplate threshold — plans
-    // identical to text_line_dedup / text_line_clean by construction
-    "sql_line_dedup" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      lineSynthDocs(Tables(s, dir).documents)
-        .createOrReplaceTempView("graft_sql_docs_ld")
-      s.sql("SELECT * FROM graft_line_dedup('graft_sql_docs_ld', 3)")
-    }),
-    "sql_line_clean" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      lineSynthDocs(Tables(s, dir).documents)
-        .createOrReplaceTempView("graft_sql_docs_lc")
-      s.sql("SELECT * FROM graft_line_clean('graft_sql_docs_lc', 3)")
-    }),
-    "sql_outliers" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).embeddings.createOrReplaceTempView("graft_sql_embeddings")
-      s.sql("SELECT * FROM graft_label_outliers('graft_sql_embeddings')")
-    }),
-    "sql_quality" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).documents.createOrReplaceTempView("graft_sql_documents")
-      s.sql("SELECT doc_id, n_chars_m, n_tokens, mean_token_len, " +
-        "alnum_ratio, space_ratio, stopword_ratio, quality_score " +
-        "FROM graft_quality('graft_sql_documents')")
-    }),
-    "sql_ks_drift" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).events.withColumn("in_a", col("ts") < T2)
-        .createOrReplaceTempView("graft_sql_events_sliced")
-      s.sql("SELECT grp AS event_type, n_a, n_b, ks_d, ks_crit, drifted " +
-        "FROM graft_ks_drift('graft_sql_events_sliced', 'event_type', " +
-        "'value', 'in_a', 50.0)")
-    }),
-    "sql_psi_drift" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).events.withColumn("in_a", col("ts") < T2)
-        .createOrReplaceTempView("graft_sql_events_sliced")
-      s.sql("SELECT grp AS event_type, n_a, n_b, n_bins_hit, psi, psi_flag " +
-        "FROM graft_psi_drift('graft_sql_events_sliced', 'event_type', " +
-        "'value', 'in_a', 0.0, 500.0, 10)")
-    }),
-    "sql_survival" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).events.createOrReplaceTempView("graft_sql_ev_sv")
-      s.sql("SELECT * FROM graft_survival('graft_sql_ev_sv', 48, " +
-        s"${3600L * NsPerS})")
-    }),
-    "sql_kcore" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Dedup.minhashNearDups(Tables(s, dir).documents)
-        .createOrReplaceTempView("graft_sql_pairs_kc")
-      s.sql("SELECT * FROM graft_kcore('graft_sql_pairs_kc', 2)")
-    }),
-    "sql_adamic_adar" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Dedup.minhashNearDups(Tables(s, dir).documents)
-        .createOrReplaceTempView("graft_sql_pairs_aa")
-      s.sql("SELECT * FROM graft_adamic_adar('graft_sql_pairs_aa', 64)")
-    }),
-    "sql_rake" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).documents.createOrReplaceTempView("graft_sql_docs_rk")
-      s.sql("SELECT * FROM graft_rake('graft_sql_docs_rk', 50, 4)")
-    }),
-    "sql_containment_join" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      val docs = Tables(s, dir).documents.select("doc_id", "text")
-      docs.createOrReplaceTempView("graft_sql_cj_left")
-      docs.where(col("doc_id") % 17 === 0
-          && size(TextOps.tokens(col("text"))) >= 46)
-        .select((col("doc_id") + lit(1L << 41)).as("doc_id"),
-          array_join(slice(TextOps.tokens(col("text")), 5, 40), " ").as("text"))
-        .createOrReplaceTempView("graft_sql_cj_right")
-      s.sql("SELECT * FROM graft_containment_join('graft_sql_cj_left', 'graft_sql_cj_right', 0.8)")
-    }),
-    "sql_semantic_join" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      val e = Tables(s, dir).embeddings
-      e.where(col("vec_id") % 10 =!= 0)
-        .createOrReplaceTempView("graft_sql_sj_left")
-      e.where(col("vec_id") % 10 === 0)
-        .createOrReplaceTempView("graft_sql_sj_right")
-      s.sql("SELECT * FROM graft_semantic_join('graft_sql_sj_left', 'graft_sql_sj_right', 0.4, 8, 2)")
-    }),
-    "sql_silhouette" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).embeddings.createOrReplaceTempView("graft_sql_embeddings")
-      s.sql("SELECT * FROM graft_silhouette('graft_sql_embeddings', 8, 2)")
-    }),
-    "sql_modularity" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      val docs = Tables(s, dir).documents
-      Dedup.minhashNearDups(docs)
-        .createOrReplaceTempView("graft_sql_mh_pairs")
-      docs.select("doc_id", "source")
-        .createOrReplaceTempView("graft_sql_doc_labels")
-      s.sql("SELECT * FROM graft_modularity('graft_sql_mh_pairs', 'graft_sql_doc_labels')")
-    }),
-    "sql_crosstab" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).documents.createOrReplaceTempView("graft_sql_documents")
-      s.sql("SELECT * FROM graft_crosstab('graft_sql_documents', 'source', 'lang', 'de,en,es,fr,zh')")
-    }),
-    "sql_minhash_join" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      val corpus = nearDupCorpus(s, dir)
-      corpus.where(col("doc_id") < CopyIdTag)
-        .createOrReplaceTempView("graft_sql_mj_left")
-      corpus.where(col("doc_id") >= CopyIdTag)
-        .createOrReplaceTempView("graft_sql_mj_right")
-      s.sql("SELECT * FROM graft_minhash_join('graft_sql_mj_left', 'graft_sql_mj_right')")
-    }),
-    "sql_dsir" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).documents.withColumn("is_en", col("lang") === "en")
-        .createOrReplaceTempView("graft_sql_docs_dsir")
-      s.sql("SELECT * FROM graft_dsir('graft_sql_docs_dsir', 'is_en', 100)")
-    }),
-    "sql_curate" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      val docs = Tables(s, dir).documents
-      docs.createOrReplaceTempView("graft_sql_documents")
-      Sampling.assignSplit(docs, "doc_id",
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .where(col("split") === "test")
-        .createOrReplaceTempView("graft_sql_bench_curate")
-      s.sql("SELECT * FROM graft_curate('graft_sql_documents', 'graft_sql_bench_curate')")
-    }),
-    "sql_dtw" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).eventsUs.where(col("user_id") < 10)
-        .select(concat(lit("shyft://events/u"), col("user_id"), lit("/"),
-          col("event_type")).as("series_id"), col("ts"), col("value"))
-        .createOrReplaceTempView("graft_sql_pts_dtw")
-      s.sql(s"SELECT * FROM graft_dtw('graft_sql_pts_dtw', ${86400L * NsPerS})")
-    }),
-    "sql_winnow_dups" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).documents.createOrReplaceTempView("graft_sql_docs_w")
-      s.sql("SELECT * FROM graft_winnow_dups('graft_sql_docs_w', 5, 4, 5, 50)")
-    }),
-    "sql_skipgrams" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).documents.createOrReplaceTempView("graft_sql_docs_sg")
-      s.sql("SELECT * FROM graft_skipgrams('graft_sql_docs_sg', 2)")
-    }),
-    "sql_holt" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      pts(s, dir).createOrReplaceTempView("graft_sql_points_h")
-      s.sql("SELECT * FROM graft_holt('graft_sql_points_h', 3)")
-    }),
-    "sql_cdc_scd2" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      changeLog(s, dir).createOrReplaceTempView("graft_sql_clog")
-      s.sql("SELECT * FROM graft_cdc_scd2('graft_sql_clog')")
-    }),
-    "sql_text_cdc_dups" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).documents.createOrReplaceTempView("graft_sql_docs_cdc")
-      s.sql("SELECT * FROM graft_text_cdc_dups('graft_sql_docs_cdc', 4, 5, 3, 50)")
-    }),
-    "sql_kcenter" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).embeddings.createOrReplaceTempView("graft_sql_emb_kc")
-      s.sql("SELECT * FROM graft_kcenter('graft_sql_emb_kc', 8)")
-    }),
-    "sql_readability" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).documents.createOrReplaceTempView("graft_sql_docs_rd")
-      s.sql("SELECT * FROM graft_readability('graft_sql_docs_rd')")
-    }),
-    "sql_assoc_rules" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).eventsUs.createOrReplaceTempView("graft_sql_ev_ar")
-      s.sql("SELECT * FROM graft_assoc_rules('graft_sql_ev_ar')")
-    }),
-    "sql_calendar_profile" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).events.createOrReplaceTempView("graft_sql_ev_cal")
-      s.sql("SELECT * FROM graft_calendar_profile('graft_sql_ev_cal')")
-    }),
-    "sql_novelty" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).documents.createOrReplaceTempView("graft_sql_docs_nv")
-      s.sql("SELECT * FROM graft_novelty('graft_sql_docs_nv', 3)")
-    }),
-    "sql_benford" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).orders.createOrReplaceTempView("graft_sql_ord_bf")
-      s.sql("SELECT * FROM graft_benford('graft_sql_ord_bf', " +
-          "'o_orderpriority', 'o_totalprice')")
-        .withColumnRenamed("grp", "o_orderpriority")
-    }),
-    "sql_ljungbox" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      pts(s, dir).createOrReplaceTempView("graft_sql_pts_lb")
-      s.sql("SELECT * FROM graft_ljungbox('graft_sql_pts_lb', 6)")
-    }),
-    "sql_isotropy" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).embeddings.createOrReplaceTempView("graft_sql_emb_iso")
-      s.sql("SELECT * FROM graft_isotropy('graft_sql_emb_iso')")
-    }),
-    "sql_spearman" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).eventsUs.where(col("user_id") < 25)
-        .select(concat(lit("shyft://events/u"), col("user_id"), lit("/"),
-          col("event_type")).as("series_id"), col("ts"), col("value"))
-        .createOrReplaceTempView("graft_sql_pts_sp")
-      s.sql(s"SELECT * FROM graft_spearman('graft_sql_pts_sp', ${86400L * NsPerS})")
-    }),
-    "sql_motifs" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      pts(s, dir).createOrReplaceTempView("graft_sql_pts_mo")
-      s.sql(s"SELECT * FROM graft_motifs('graft_sql_pts_mo', ${3600L * NsPerS})")
-    }),
-    "sql_pacf" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      pts(s, dir).createOrReplaceTempView("graft_sql_pts_pc")
-      s.sql("SELECT * FROM graft_pacf('graft_sql_pts_pc', 6)")
-    }),
-    "sql_completeness" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).events.createOrReplaceTempView("graft_sql_ev_cp")
-      s.sql("SELECT * FROM graft_completeness('graft_sql_ev_cp')")
-    }),
-    "sql_rp" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      Tables(s, dir).embeddings.createOrReplaceTempView("graft_sql_emb_rp")
-      // long-form like vec_rp (whose oracle this query shares): the
-      // driver's pandas compare cannot sort/hash raw array cells
-      s.sql("SELECT vec_id, dim, rp_v FROM " +
-        "graft_random_project('graft_sql_emb_rp', 16, 64) " +
-        "LATERAL VIEW OUTER posexplode(rp) pe AS dim, rp_v")
-    }),
-    "sql_lsh_plan" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      s.sql("SELECT * FROM graft_lsh_plan(32, 0.8)")
-    }),
-    "sql_minhash_eval" -> ((s, dir) => {
-      graft.core.GraftTableFunctions.registerAll(s)
-      nearDupCorpus(s, dir).where(col("doc_id") % CopyIdTag % 10 === 0)
-        .createOrReplaceTempView("graft_sql_docs_me")
-      s.sql("SELECT * FROM graft_minhash_eval('graft_sql_docs_me')")
-    }),
-
-    // incremental cluster maintenance: bootstrap on a third of the corpus,
-    // ingest the rest in two batches — the EXACTNESS contract says the
-    // result equals a full dedup_clusters recompute, so the oracle is
-    // dedup_clusters' own
-    "dedup_incremental" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents.select("doc_id", "text")
-      var st = IncrementalDedup.bootstrap(docs.where(col("doc_id") % 3 === 0))
-      st = IncrementalDedup.addBatch(st, docs.where(col("doc_id") % 3 === 1))
-      st = IncrementalDedup.addBatch(st, docs.where(col("doc_id") % 3 === 2))
-      IncrementalDedup.clusters(st)
-    }),
     // incremental SEMANTIC dedup: codebook trained on the bootstrap 2/3
     // and frozen; the batch ids interleave below existing ids, so both
     // the batch-verdict and tighten-existing paths execute. EXACTNESS
@@ -3844,92 +3353,362 @@ object SparkEntry {
   )
 
   // --------------------------------------------------------------------
+  /** A row whose oracle is another row's: `run` reaches the operator of
+    * row `of` through another face — the SQL table functions, a stream's
+    * batch face, incremental maintenance — and must hash equal to it. A
+    * frozen-model twin serves from its own frozen dir, so it names the
+    * same serving oracle pointed at that dir.
+    */
+  private[graft] final case class Twin(name: String, of: String,
+      oracle: Option[String], run: (SparkSession, String) => DataFrame)
+
+  private def twin(name: String, of: String, oracle: Option[String] = None)(
+      run: (SparkSession, String) => DataFrame): Twin = Twin(name, of, oracle, run)
+
+  /** The one path of the sql_* twins into the SQL surface: register the
+    * table functions, expose each `(name, frame)` as a temp view, run `sql`.
+    */
+  private def viaSql(s: SparkSession, views: (String, DataFrame)*)(
+      sql: String): DataFrame = {
+    graft.core.GraftTableFunctions.registerAll(s)
+    views.foreach { case (name, df) => df.createOrReplaceTempView(name) }
+    s.sql(sql)
+  }
+
+  private[graft] def twins: Seq[Twin] = Seq(
+    // ---- stream batch faces and incremental maintenance ----
+    twin("stream_crawl_rate", of = "web_crawl_rate") { (s, dir) =>
+      graft.streaming.StreamOps.crawlRateStream(crawlFetches(Tables(s, dir)),
+        windowMs = 3600000L, maxFetches = 2, watermark = "1 minute") },
+    // the robots verdict is a stateless narrow map over a stream-static
+    // broadcast, so the stream face is the batch operator verbatim
+    // (StreamOpsSpec drives it as a real MemoryStream)
+    twin("stream_robots", of = "web_robots") { (s, dir) =>
+      graft.streaming.StreamOps.robotsStream(
+          webSynthDocs(Tables(s, dir).documents), robotsRules(s))
+        .select("doc_id", "url", "domain", "path", "allowed",
+          "matched_prefix") },
+    // blocklist gate at ingest: narrow map + stream-static broadcast
+    // anti-joins — batch parity by construction
+    twin("stream_blocklist", of = "web_blocklist") { (s, dir) =>
+      graft.streaming.StreamOps.blocklistStream(
+          webSynthDocs(Tables(s, dir).documents), webBlocklist(s))
+        .select("doc_id", "url", "canonical_url", "domain") },
+    // the politeness recurrence continued across micro-batches: two longs
+    // of state per domain (count + running max), slots emitted final
+    twin("stream_fetch_schedule", of = "web_fetch_schedule") { (s, dir) =>
+      graft.streaming.StreamOps.fetchScheduleStream(
+        crawlFetches(Tables(s, dir)), delayMs = 60000L).toDF() },
+    // SFT-ingest dedup: rendered-identity state (keeper + copy count, two
+    // longs per distinct conversation) continued across micro-batches
+    twin("stream_sft_dedup", of = "sft_dedup") { (s, dir) =>
+      graft.streaming.StreamOps.convDedupStream(
+        ChatOps.renderChat(chatVariantTurns(Tables(s, dir).documents))
+          .select("conv_id", "text")).toDF() },
+    // streaming near-dup detection, batch face: must equal dedup_minhash
+    // exactly (same banding expression, same Jaccard arithmetic)
+    twin("stream_near_dups", of = "dedup_minhash") { (s, dir) =>
+      graft.streaming.StreamOps.nearDupStream(
+        Tables(s, dir).documents.select("doc_id", "text")).toDF() },
+    // the streaming sketches in batch mode equal the batch sketches exactly
+    twin("stream_kmv", of = "sketch_kmv") { (s, dir) =>
+      graft.streaming.StreamOps.kmvStream(
+        Tables(s, dir).events, k = 64, "event_type", "user_id")
+        .toDF().withColumnRenamed("grp", "event_type") },
+    twin("stream_hll", of = "sketch_hll") { (s, dir) =>
+      graft.streaming.StreamOps.hllStream(
+        Tables(s, dir).events, p = 10, "event_type", "user_id")
+        .toDF().withColumnRenamed("grp", "event_type") },
+    twin("stream_quantile", of = "sketch_quantile") { (s, dir) =>
+      graft.streaming.StreamOps.quantileStream(
+        Tables(s, dir).events, k = 64, "event_type", "event_id", "value")
+        .toDF().withColumnRenamed("grp", "event_type") },
+    // streaming repeat suppression in batch mode: batch face of
+    // Sessionize.firstPerWindow (associative struct-min + count)
+    twin("stream_dedup_window", of = "events_dedup_window") { (s, dir) =>
+      graft.streaming.StreamOps.dedupWindowStream(
+        Tables(s, dir).eventsUs, 3600L * NsPerS).toDF() },
+    // streaming sessionization's batch face: one micro-batch holding the
+    // whole frame must equal Sessionize.sessions row for row
+    twin("stream_sessions", of = "events_sessionize") { (s, dir) =>
+      graft.streaming.StreamOps.sessionStream(
+        Tables(s, dir).eventsUs, gapNs = 1800000000000L).toDF() },
+    // incremental cluster maintenance: bootstrap on a third of the corpus,
+    // ingest the rest in two batches — the EXACTNESS contract says the
+    // result equals a full dedup_clusters recompute
+    twin("dedup_incremental", of = "dedup_clusters") { (s, dir) =>
+      val docs = Tables(s, dir).documents.select("doc_id", "text")
+      var st = IncrementalDedup.bootstrap(docs.where(col("doc_id") % 3 === 0))
+      st = IncrementalDedup.addBatch(st, docs.where(col("doc_id") % 3 === 1))
+      st = IncrementalDedup.addBatch(st, docs.where(col("doc_id") % 3 === 2))
+      IncrementalDedup.clusters(st) },
+
+    // ---- pure-SQL drivability: the same operators reached through the
+    // GraftTableFunctions table-valued surface, whose builders splice the
+    // Scala calls' plans — the gate proves the SQL path hashes identically
+    // to the Scala path ----
+    // frozen serving: the spliced plan IS logregScoreFrozen's (kernel map)
+    twin("sql_clf_score", of = "clf_quality_frozen",
+        oracle = Some(clfFrozenTwinSql(ClfSqlFrozenDir))) { (s, dir) =>
+      frozenClfScore(s, dir, ClfSqlFrozenDir) { (docs, mF) =>
+        viaSql(s, "graft_sql_docs_clf" -> docs, "graft_sql_clf_model" -> mF)(
+          "SELECT * FROM graft_clf_score('graft_sql_docs_clf', 'graft_sql_clf_model')")
+      } },
+    // frozen ANN serving: the spliced plan IS ivfPqAdcTopKFrozen's, built
+    // over temp views of the read-back frozen relations
+    twin("sql_ann_serve", of = "stream_ann_topk",
+        oracle = Some(annFrozenTwinSql(SqlAnnFrozenDir))) { (s, dir) =>
+      val e = Tables(s, dir).embeddings
+      val n = e.count()
+      val (ceF, cbF, cdF) = amortizedFreeze(SqlAnnFrozenDir, s"ivfpq-$n") {
+        Similarity.ivfPqReadFrozen(s, SqlAnnFrozenDir, s"ivfpq-$n")
+      } {
+        val (cells, cb, cd) = Similarity.ivfPqTrain(e, m = 8, kc = 64,
+          iters = 1)
+        Similarity.ivfPqFreeze(cells, cb, cd, s"ivfpq-$n", SqlAnnFrozenDir)
+      }
+      viaSql(s, "graft_sql_ann_queries" -> e.where(col("vec_id") < 5),
+        "graft_sql_ann_cells" -> ceF, "graft_sql_ann_codebooks" -> cbF,
+        "graft_sql_ann_codes" -> cdF)(
+        "SELECT * FROM graft_ann_serve('graft_sql_ann_queries', " +
+        "'graft_sql_ann_cells', 'graft_sql_ann_codebooks', " +
+        "'graft_sql_ann_codes', 3, 3)") },
+    twin("sql_web_canonical", of = "web_canonical_url") { (s, dir) =>
+      viaSql(s, "graft_sql_webdocs" -> webSynthDocs(Tables(s, dir).documents))(
+        "SELECT * FROM graft_web_canonical('graft_sql_webdocs')") },
+    twin("sql_domain_stats", of = "web_domain_stats") { (s, dir) =>
+      viaSql(s, "graft_sql_webdocs_st" -> webSynthDocs(Tables(s, dir).documents))(
+        "SELECT * FROM graft_domain_stats('graft_sql_webdocs_st')") },
+    twin("sql_domain_budget", of = "sample_domain_budget") { (s, dir) =>
+      viaSql(s, "graft_sql_webdocs_bd" -> webSynthDocs(Tables(s, dir).documents))(
+        "SELECT * FROM graft_domain_budget('graft_sql_webdocs_bd', 60)") },
+    twin("sql_web_blocklist", of = "web_blocklist") { (s, dir) =>
+      viaSql(s, "graft_sql_webdocs_bl" -> webSynthDocs(Tables(s, dir).documents),
+        "graft_sql_blocklist" -> webBlocklist(s))(
+        "SELECT doc_id, url, canonical_url, domain FROM " +
+        "graft_web_blocklist('graft_sql_webdocs_bl', 'graft_sql_blocklist')") },
+    twin("sql_crawl_rate", of = "web_crawl_rate") { (s, dir) =>
+      viaSql(s, "graft_sql_fetches" -> crawlFetches(Tables(s, dir)))(
+        "SELECT * FROM graft_crawl_rate('graft_sql_fetches', 3600000, 2)") },
+    twin("sql_link_graph", of = "web_link_graph") { (s, dir) =>
+      viaSql(s, "graft_sql_webdocs_lk" -> webLinkedDocs(Tables(s, dir).documents))(
+        "SELECT * FROM graft_link_graph('graft_sql_webdocs_lk')") },
+    twin("sql_web_robots", of = "web_robots") { (s, dir) =>
+      viaSql(s, "graft_sql_webdocs_rb" -> webSynthDocs(Tables(s, dir).documents),
+        "graft_sql_robots" -> robotsRules(s))(
+        "SELECT doc_id, url, domain, path, allowed, matched_prefix " +
+        "FROM graft_web_robots('graft_sql_webdocs_rb', 'graft_sql_robots')") },
+    twin("sql_frontier", of = "web_frontier") { (s, dir) =>
+      viaSql(s, "graft_sql_webdocs_fr" -> webLinkedDocs(Tables(s, dir).documents))(
+        "SELECT * FROM graft_web_frontier('graft_sql_webdocs_fr')") },
+    twin("sql_boilerplate", of = "web_boilerplate") { (s, dir) =>
+      viaSql(s, "graft_sql_webdocs_bp" -> webPageDocs(Tables(s, dir).documents))(
+        "SELECT * FROM graft_domain_boilerplate('graft_sql_webdocs_bp', 0.6, 2)") },
+    twin("sql_fetch_schedule", of = "web_fetch_schedule") { (s, dir) =>
+      viaSql(s, "graft_sql_fetches_sc" -> crawlFetches(Tables(s, dir)))(
+        "SELECT * FROM graft_fetch_schedule('graft_sql_fetches_sc', 60000)") },
+    twin("sql_sft_stats", of = "sft_turn_stats") { (s, dir) =>
+      viaSql(s, "graft_sql_turns_st" -> chatSynthTurns(Tables(s, dir).documents))(
+        "SELECT * FROM graft_sft_stats('graft_sql_turns_st')") },
+    twin("sql_pref_bias", of = "pref_length_bias") { (s, dir) =>
+      viaSql(s, "graft_sql_pairs_pb" -> prefSynthPairs(Tables(s, dir).documents))(
+        "SELECT * FROM graft_pref_bias('graft_sql_pairs_pb')") },
+    twin("sql_sessionize", of = "events_sessionize") { (s, dir) =>
+      viaSql(s, "graft_sql_events" -> Tables(s, dir).eventsUs)(
+        "SELECT * FROM graft_sessionize('graft_sql_events', 1800000000000)") },
+    twin("sql_bm25", of = "text_bm25") { (s, dir) =>
+      viaSql(s, "graft_sql_documents" -> Tables(s, dir).documents)(
+        "SELECT * FROM graft_bm25('graft_sql_documents', 'table scan sort key', 20)") },
+    twin("sql_resample", of = "ts_resample") { (s, dir) =>
+      viaSql(s, "graft_sql_points" -> pts(s, dir))(
+        "SELECT * FROM graft_resample('graft_sql_points', 86400000000000)") },
+    twin("sql_quantile_sketch", of = "sketch_quantile") { (s, dir) =>
+      viaSql(s, "graft_sql_events" -> Tables(s, dir).events)(
+        "SELECT * FROM graft_quantile_sketch('graft_sql_events', 64, " +
+        "'event_type', 'event_id', 'value')") },
+    twin("sql_semantic_dedup", of = "dedup_semantic") { (s, dir) =>
+      viaSql(s, "graft_sql_embeddings" -> Tables(s, dir).embeddings)(
+        "SELECT * FROM graft_semantic_dedup('graft_sql_embeddings', 0.4, 8, 2)") },
+    twin("sql_dedup_clusters", of = "dedup_clusters") { (s, dir) =>
+      viaSql(s, "graft_sql_documents" -> Tables(s, dir).documents)(
+        "SELECT * FROM graft_dedup_clusters('graft_sql_documents')") },
+    twin("sql_hll", of = "sketch_hll") { (s, dir) =>
+      viaSql(s, "graft_sql_events" -> Tables(s, dir).events)(
+        "SELECT * FROM graft_hll_distinct('graft_sql_events', 10, " +
+        "'event_type', 'user_id')") },
+    twin("sql_cms", of = "sketch_cms") { (s, dir) =>
+      viaSql(s, "graft_sql_terms" -> Tables(s, dir).documents
+        .select(explode(TextOps.tokens(col("text"))).as("term")))(
+        "SELECT * FROM graft_cms_topk('graft_sql_terms', 'term', 20)") },
+    twin("sql_sample", of = "sample_fraction") { (s, dir) =>
+      viaSql(s, "graft_sql_documents" -> Tables(s, dir).documents)(
+        "SELECT doc_id, lang FROM graft_sample('graft_sql_documents', " +
+        "'doc_id', 0.1)") },
+    twin("sql_compaction", of = "layout_compaction") { (s, dir) =>
+      viaSql(s, "graft_sql_documents" -> Tables(s, dir).documents)(
+        "SELECT * FROM graft_compaction_plan('graft_sql_documents', 4096)") },
+    twin("sql_dedup_exact", of = "dedup_exact") { (s, dir) =>
+      viaSql(s, "graft_sql_documents" -> Tables(s, dir).documents)(
+        "SELECT * FROM graft_exact_dedup('graft_sql_documents')") },
+    // the line-dedup family: same synthesized multi-line corpus, same
+    // default boilerplate threshold as text_line_dedup / text_line_clean
+    twin("sql_line_dedup", of = "text_line_dedup") { (s, dir) =>
+      viaSql(s, "graft_sql_docs_ld" -> lineSynthDocs(Tables(s, dir).documents))(
+        "SELECT * FROM graft_line_dedup('graft_sql_docs_ld', 3)") },
+    twin("sql_line_clean", of = "text_line_clean") { (s, dir) =>
+      viaSql(s, "graft_sql_docs_lc" -> lineSynthDocs(Tables(s, dir).documents))(
+        "SELECT * FROM graft_line_clean('graft_sql_docs_lc', 3)") },
+    twin("sql_outliers", of = "vec_outliers") { (s, dir) =>
+      viaSql(s, "graft_sql_embeddings" -> Tables(s, dir).embeddings)(
+        "SELECT * FROM graft_label_outliers('graft_sql_embeddings')") },
+    twin("sql_quality", of = "text_quality") { (s, dir) =>
+      viaSql(s, "graft_sql_documents" -> Tables(s, dir).documents)(
+        "SELECT doc_id, n_chars_m, n_tokens, mean_token_len, " +
+        "alnum_ratio, space_ratio, stopword_ratio, quality_score " +
+        "FROM graft_quality('graft_sql_documents')") },
+    twin("sql_ks_drift", of = "profile_ks_drift") { (s, dir) =>
+      viaSql(s, "graft_sql_events_sliced" ->
+          Tables(s, dir).events.withColumn("in_a", col("ts") < T2))(
+        "SELECT grp AS event_type, n_a, n_b, ks_d, ks_crit, drifted " +
+        "FROM graft_ks_drift('graft_sql_events_sliced', 'event_type', " +
+        "'value', 'in_a', 50.0)") },
+    twin("sql_psi_drift", of = "profile_psi_drift") { (s, dir) =>
+      viaSql(s, "graft_sql_events_sliced" ->
+          Tables(s, dir).events.withColumn("in_a", col("ts") < T2))(
+        "SELECT grp AS event_type, n_a, n_b, n_bins_hit, psi, psi_flag " +
+        "FROM graft_psi_drift('graft_sql_events_sliced', 'event_type', " +
+        "'value', 'in_a', 0.0, 500.0, 10)") },
+    twin("sql_survival", of = "events_survival") { (s, dir) =>
+      viaSql(s, "graft_sql_ev_sv" -> Tables(s, dir).events)(
+        s"SELECT * FROM graft_survival('graft_sql_ev_sv', 48, ${3600L * NsPerS})") },
+    twin("sql_kcore", of = "graph_kcore") { (s, dir) =>
+      viaSql(s, "graft_sql_pairs_kc" -> Dedup.minhashNearDups(Tables(s, dir).documents))(
+        "SELECT * FROM graft_kcore('graft_sql_pairs_kc', 2)") },
+    twin("sql_adamic_adar", of = "graph_adamic_adar") { (s, dir) =>
+      viaSql(s, "graft_sql_pairs_aa" -> Dedup.minhashNearDups(Tables(s, dir).documents))(
+        "SELECT * FROM graft_adamic_adar('graft_sql_pairs_aa', 64)") },
+    twin("sql_rake", of = "text_rake") { (s, dir) =>
+      viaSql(s, "graft_sql_docs_rk" -> Tables(s, dir).documents)(
+        "SELECT * FROM graft_rake('graft_sql_docs_rk', 50, 4)") },
+    twin("sql_containment_join", of = "dedup_containment_cross") { (s, dir) =>
+      val docs = Tables(s, dir).documents.select("doc_id", "text")
+      viaSql(s, "graft_sql_cj_left" -> docs,
+        "graft_sql_cj_right" -> docs.where(col("doc_id") % 17 === 0
+            && size(TextOps.tokens(col("text"))) >= 46)
+          .select((col("doc_id") + lit(1L << 41)).as("doc_id"),
+            array_join(slice(TextOps.tokens(col("text")), 5, 40), " ").as("text")))(
+        "SELECT * FROM graft_containment_join('graft_sql_cj_left', 'graft_sql_cj_right', 0.8)") },
+    twin("sql_semantic_join", of = "dedup_sem_cross") { (s, dir) =>
+      val e = Tables(s, dir).embeddings
+      viaSql(s, "graft_sql_sj_left" -> e.where(col("vec_id") % 10 =!= 0),
+        "graft_sql_sj_right" -> e.where(col("vec_id") % 10 === 0))(
+        "SELECT * FROM graft_semantic_join('graft_sql_sj_left', 'graft_sql_sj_right', 0.4, 8, 2)") },
+    twin("sql_silhouette", of = "vec_silhouette") { (s, dir) =>
+      viaSql(s, "graft_sql_embeddings" -> Tables(s, dir).embeddings)(
+        "SELECT * FROM graft_silhouette('graft_sql_embeddings', 8, 2)") },
+    twin("sql_modularity", of = "graph_modularity") { (s, dir) =>
+      val docs = Tables(s, dir).documents
+      viaSql(s, "graft_sql_mh_pairs" -> Dedup.minhashNearDups(docs),
+        "graft_sql_doc_labels" -> docs.select("doc_id", "source"))(
+        "SELECT * FROM graft_modularity('graft_sql_mh_pairs', 'graft_sql_doc_labels')") },
+    twin("sql_crosstab", of = "profile_crosstab") { (s, dir) =>
+      viaSql(s, "graft_sql_documents" -> Tables(s, dir).documents)(
+        "SELECT * FROM graft_crosstab('graft_sql_documents', 'source', 'lang', 'de,en,es,fr,zh')") },
+    twin("sql_minhash_join", of = "dedup_cross") { (s, dir) =>
+      val corpus = nearDupCorpus(s, dir)
+      viaSql(s, "graft_sql_mj_left" -> corpus.where(col("doc_id") < CopyIdTag),
+        "graft_sql_mj_right" -> corpus.where(col("doc_id") >= CopyIdTag))(
+        "SELECT * FROM graft_minhash_join('graft_sql_mj_left', 'graft_sql_mj_right')") },
+    twin("sql_dsir", of = "sample_dsir") { (s, dir) =>
+      viaSql(s, "graft_sql_docs_dsir" ->
+          Tables(s, dir).documents.withColumn("is_en", col("lang") === "en"))(
+        "SELECT * FROM graft_dsir('graft_sql_docs_dsir', 'is_en', 100)") },
+    twin("sql_curate", of = "pipeline_curate") { (s, dir) =>
+      val docs = Tables(s, dir).documents
+      viaSql(s, "graft_sql_documents" -> docs,
+        "graft_sql_bench_curate" -> Sampling.assignSplit(docs, "doc_id",
+            Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
+          .where(col("split") === "test"))(
+        "SELECT * FROM graft_curate('graft_sql_documents', 'graft_sql_bench_curate')") },
+    twin("sql_dtw", of = "ts_dtw") { (s, dir) =>
+      viaSql(s, "graft_sql_pts_dtw" -> Tables(s, dir).eventsUs.where(col("user_id") < 10)
+        .select(concat(lit("shyft://events/u"), col("user_id"), lit("/"),
+          col("event_type")).as("series_id"), col("ts"), col("value")))(
+        s"SELECT * FROM graft_dtw('graft_sql_pts_dtw', ${86400L * NsPerS})") },
+    twin("sql_winnow_dups", of = "dedup_winnow") { (s, dir) =>
+      viaSql(s, "graft_sql_docs_w" -> Tables(s, dir).documents)(
+        "SELECT * FROM graft_winnow_dups('graft_sql_docs_w', 5, 4, 5, 50)") },
+    twin("sql_skipgrams", of = "text_skipgrams") { (s, dir) =>
+      viaSql(s, "graft_sql_docs_sg" -> Tables(s, dir).documents)(
+        "SELECT * FROM graft_skipgrams('graft_sql_docs_sg', 2)") },
+    twin("sql_holt", of = "ts_holt") { (s, dir) =>
+      viaSql(s, "graft_sql_points_h" -> pts(s, dir))(
+        "SELECT * FROM graft_holt('graft_sql_points_h', 3)") },
+    twin("sql_cdc_scd2", of = "cdc_scd2") { (s, dir) =>
+      viaSql(s, "graft_sql_clog" -> changeLog(s, dir))(
+        "SELECT * FROM graft_cdc_scd2('graft_sql_clog')") },
+    twin("sql_text_cdc_dups", of = "text_cdc_dups") { (s, dir) =>
+      viaSql(s, "graft_sql_docs_cdc" -> Tables(s, dir).documents)(
+        "SELECT * FROM graft_text_cdc_dups('graft_sql_docs_cdc', 4, 5, 3, 50)") },
+    twin("sql_kcenter", of = "vec_kcenter") { (s, dir) =>
+      viaSql(s, "graft_sql_emb_kc" -> Tables(s, dir).embeddings)(
+        "SELECT * FROM graft_kcenter('graft_sql_emb_kc', 8)") },
+    twin("sql_readability", of = "text_readability") { (s, dir) =>
+      viaSql(s, "graft_sql_docs_rd" -> Tables(s, dir).documents)(
+        "SELECT * FROM graft_readability('graft_sql_docs_rd')") },
+    twin("sql_assoc_rules", of = "events_assoc_rules") { (s, dir) =>
+      viaSql(s, "graft_sql_ev_ar" -> Tables(s, dir).eventsUs)(
+        "SELECT * FROM graft_assoc_rules('graft_sql_ev_ar')") },
+    twin("sql_calendar_profile", of = "events_calendar_profile") { (s, dir) =>
+      viaSql(s, "graft_sql_ev_cal" -> Tables(s, dir).events)(
+        "SELECT * FROM graft_calendar_profile('graft_sql_ev_cal')") },
+    twin("sql_novelty", of = "text_novelty") { (s, dir) =>
+      viaSql(s, "graft_sql_docs_nv" -> Tables(s, dir).documents)(
+        "SELECT * FROM graft_novelty('graft_sql_docs_nv', 3)") },
+    twin("sql_benford", of = "profile_benford") { (s, dir) =>
+      viaSql(s, "graft_sql_ord_bf" -> Tables(s, dir).orders)(
+          "SELECT * FROM graft_benford('graft_sql_ord_bf', " +
+          "'o_orderpriority', 'o_totalprice')")
+        .withColumnRenamed("grp", "o_orderpriority") },
+    twin("sql_ljungbox", of = "ts_ljungbox") { (s, dir) =>
+      viaSql(s, "graft_sql_pts_lb" -> pts(s, dir))(
+        "SELECT * FROM graft_ljungbox('graft_sql_pts_lb', 6)") },
+    twin("sql_isotropy", of = "vec_isotropy") { (s, dir) =>
+      viaSql(s, "graft_sql_emb_iso" -> Tables(s, dir).embeddings)(
+        "SELECT * FROM graft_isotropy('graft_sql_emb_iso')") },
+    twin("sql_spearman", of = "ts_spearman") { (s, dir) =>
+      viaSql(s, "graft_sql_pts_sp" -> Tables(s, dir).eventsUs.where(col("user_id") < 25)
+        .select(concat(lit("shyft://events/u"), col("user_id"), lit("/"),
+          col("event_type")).as("series_id"), col("ts"), col("value")))(
+        s"SELECT * FROM graft_spearman('graft_sql_pts_sp', ${86400L * NsPerS})") },
+    twin("sql_motifs", of = "ts_motifs") { (s, dir) =>
+      viaSql(s, "graft_sql_pts_mo" -> pts(s, dir))(
+        s"SELECT * FROM graft_motifs('graft_sql_pts_mo', ${3600L * NsPerS})") },
+    twin("sql_pacf", of = "ts_pacf") { (s, dir) =>
+      viaSql(s, "graft_sql_pts_pc" -> pts(s, dir))(
+        "SELECT * FROM graft_pacf('graft_sql_pts_pc', 6)") },
+    twin("sql_completeness", of = "profile_completeness") { (s, dir) =>
+      viaSql(s, "graft_sql_ev_cp" -> Tables(s, dir).events)(
+        "SELECT * FROM graft_completeness('graft_sql_ev_cp')") },
+    // long-form like vec_rp: the oracle compare (tools/compare.py) cannot
+    // sort/hash raw array cells
+    twin("sql_rp", of = "vec_rp") { (s, dir) =>
+      viaSql(s, "graft_sql_emb_rp" -> Tables(s, dir).embeddings)(
+        "SELECT vec_id, dim, rp_v FROM " +
+        "graft_random_project('graft_sql_emb_rp', 16, 64) " +
+        "LATERAL VIEW OUTER posexplode(rp) pe AS dim, rp_v") },
+    twin("sql_lsh_plan", of = "dedup_lsh_plan") { (s, _) =>
+      viaSql(s)("SELECT * FROM graft_lsh_plan(32, 0.8)") },
+    twin("sql_minhash_eval", of = "dedup_eval") { (s, dir) =>
+      viaSql(s, "graft_sql_docs_me" ->
+          nearDupCorpus(s, dir).where(col("doc_id") % CopyIdTag % 10 === 0))(
+        "SELECT * FROM graft_minhash_eval('graft_sql_docs_me')") }
+  )
+
+  // --------------------------------------------------------------------
   def oracleSql: Map[String, String] = {
-    // the sql_* queries run the SAME operators through the table-valued
-    // SQL surface (GraftTableFunctions), so their oracles ARE the
-    // originals' — aliased below the base map, guaranteeing the
-    // "unchanged hashes" contract by construction
     val base = oracleSqlBase
-    base ++ Map(
-      "sql_sessionize" -> base("events_sessionize"),
-      "sql_bm25" -> base("text_bm25"),
-      "sql_resample" -> base("ts_resample"),
-      "sql_dedup_clusters" -> base("dedup_clusters"),
-      // the TVF surface must splice the SAME plans as the Scala calls
-      "sql_quantile_sketch" -> base("sketch_quantile"),
-      "sql_semantic_dedup" -> base("dedup_semantic"),
-      "sql_hll" -> base("sketch_hll"),
-      "sql_cms" -> base("sketch_cms"),
-      "sql_sample" -> base("sample_fraction"),
-      "sql_compaction" -> base("layout_compaction"),
-      "sql_dedup_exact" -> base("dedup_exact"),
-      "sql_line_dedup" -> base("text_line_dedup"),
-      "sql_line_clean" -> base("text_line_clean"),
-      "sql_outliers" -> base("vec_outliers"),
-      "sql_quality" -> base("text_quality"),
-      "sql_ks_drift" -> base("profile_ks_drift"),
-      "sql_psi_drift" -> base("profile_psi_drift"),
-      "sql_winnow_dups" -> base("dedup_winnow"),
-      "sql_skipgrams" -> base("text_skipgrams"),
-      "sql_holt" -> base("ts_holt"),
-      "sql_cdc_scd2" -> base("cdc_scd2"),
-      "sql_text_cdc_dups" -> base("text_cdc_dups"),
-      "sql_kcenter" -> base("vec_kcenter"),
-      "sql_readability" -> base("text_readability"),
-      "sql_assoc_rules" -> base("events_assoc_rules"),
-      "sql_calendar_profile" -> base("events_calendar_profile"),
-      "sql_novelty" -> base("text_novelty"),
-      "sql_benford" -> base("profile_benford"),
-      "sql_ljungbox" -> base("ts_ljungbox"),
-      "sql_isotropy" -> base("vec_isotropy"),
-      "sql_spearman" -> base("ts_spearman"),
-      "sql_motifs" -> base("ts_motifs"),
-      "sql_completeness" -> base("profile_completeness"),
-      "sql_rp" -> base("vec_rp"),
-      "sql_lsh_plan" -> base("dedup_lsh_plan"),
-      "sql_minhash_eval" -> base("dedup_eval"),
-      "sql_pacf" -> base("ts_pacf"),
-      "sql_survival" -> base("events_survival"),
-      "sql_kcore" -> base("graph_kcore"),
-      "sql_adamic_adar" -> base("graph_adamic_adar"),
-      "sql_rake" -> base("text_rake"),
-      "sql_dtw" -> base("ts_dtw"),
-      "sql_dsir" -> base("sample_dsir"),
-      "sql_web_canonical" -> base("web_canonical_url"),
-      "sql_domain_stats" -> base("web_domain_stats"),
-      "sql_domain_budget" -> base("sample_domain_budget"),
-      "sql_web_blocklist" -> base("web_blocklist"),
-      "sql_crawl_rate" -> base("web_crawl_rate"),
-      "stream_crawl_rate" -> base("web_crawl_rate"),
-      "sql_link_graph" -> base("web_link_graph"),
-      "sql_web_robots" -> base("web_robots"),
-      "stream_robots" -> base("web_robots"),
-      "stream_blocklist" -> base("web_blocklist"),
-      "sql_frontier" -> base("web_frontier"),
-      "sql_fetch_schedule" -> base("web_fetch_schedule"),
-      "stream_fetch_schedule" -> base("web_fetch_schedule"),
-      "sql_boilerplate" -> base("web_boilerplate"),
-      "sql_sft_stats" -> base("sft_turn_stats"),
-      "sql_pref_bias" -> base("pref_length_bias"),
-      "stream_sft_dedup" -> base("sft_dedup"),
-      "sql_curate" -> base("pipeline_curate"),
-      "sql_minhash_join" -> base("dedup_cross"),
-      "sql_semantic_join" -> base("dedup_sem_cross"),
-      "sql_containment_join" -> base("dedup_containment_cross"),
-      "sql_silhouette" -> base("vec_silhouette"),
-      "sql_modularity" -> base("graph_modularity"),
-      "sql_crosstab" -> base("profile_crosstab"),
-      // incremental maintenance must equal the full recompute exactly
-      "dedup_incremental" -> base("dedup_clusters"),
-      // the streaming face scores pairs with the batch kernel's arithmetic
-      "stream_near_dups" -> base("dedup_minhash"),
-      // the streaming sketch's batch face IS the batch sketch
-      "stream_kmv" -> base("sketch_kmv"),
-      "stream_hll" -> base("sketch_hll"),
-      // the streaming window dedup's batch face IS firstPerWindow
-      "stream_dedup_window" -> base("events_dedup_window"),
-      "stream_sessions" -> base("events_sessionize"),
-      "stream_quantile" -> base("sketch_quantile"))
+    base ++ twins.map(t => t.name -> t.oracle.getOrElse(base(t.of)))
   }
 
   private def oracleSqlBase: Map[String, String] = Map(
@@ -5626,7 +5405,6 @@ object SparkEntry {
     // One twin per face, pointed at THAT face's freeze dir (trainings can
     // differ in the last ulp, so faces never share a model).
     "clf_quality_frozen" -> clfFrozenTwinSql(ClfFrozenDir),
-    "sql_clf_score" -> clfFrozenTwinSql(ClfSqlFrozenDir),
     "stream_clf_score" -> clfFrozenTwinSql(ClfStreamFrozenDir),
 
     "text_hashed_features" ->
@@ -8395,10 +8173,6 @@ object SparkEntry {
     // (adc asc, id asc) rank) must land on exactly these rows.
     "stream_ann_topk" -> annFrozenTwinSql(StreamAnnFrozenDir),
 
-    // Twin of sql_ann_serve: identical serving arithmetic (the TVF
-    // splices the SAME ivfPqAdcTopKFrozen plan the batch face builds),
-    // reading the SQL face's own frozen dir.
-    "sql_ann_serve" -> annFrozenTwinSql(SqlAnnFrozenDir),
 
     // Twin of sim_pq_addbatch: encode the held-out batch (vec_id % 3 = 0)
     // against the bootstrap-frozen codebooks — per (vector, subspace) the

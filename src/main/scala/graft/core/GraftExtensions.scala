@@ -1,71 +1,26 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{Decimal, DoubleType, IntegerType, LongType, StringType}
 
 import graft.functions.{CharNgramCodes, MinHashSig, PolyHash, SimHashSig, SimHashSigWide, SortedArrayJaccard, SrpBucket, VecCosine, VecDot, VecSqDist}
+import graft.ops.{Cdc, Cooccurrence, Layout, Retention, Sessionize}
+import graft.pipeline.{ChatOps, Components, Curation, Dedup, Profile, Sampling, Similarity,
+  Sketches, TextCdc, TextOps, WebOps}
+import graft.ts.SeriesOps
 
-/** SQL surface of the engine's custom Catalyst expressions. Install with
+/** SQL surface of the engine: the custom Catalyst expressions of
+  * [[GraftFunctions]] and the table-valued functions of
+  * [[GraftTableFunctions]]. Install with
   * `spark.sql.extensions=graft.core.GraftExtensions` (cluster-wide) or call
-  * [[GraftFunctions.registerAll]] on an existing session. Exposes:
-  *
-  *  - `poly_hash(str, seed)` — the shared rolling hash
-  *  - `minhash_sig(text, k, n)` — k-shingle MinHash signature, n hashes
-  *  - `simhash_sig(text, k, bits)` — k-shingle SimHash signature
-  *  - `sorted_jaccard(a, b)` — exact Jaccard of sorted distinct arrays
-  *  - `char_ngram_codes(text, n)` — sorted distinct base-37 n-gram codes
-  *  - `vec_cosine(a, b)` — single-pass cosine of float/double vectors
-  *  - `srp_bucket(vec, planes)` — signed-random-projection LSH bucket id
-  *
-  * plus the table-valued surface of [[GraftTableFunctions]], which lets a
-  * SQL-only caller reach whole-relation pipeline operators:
-  *
-  *  - `graft_sessionize('view', gap_ns)` — gap-based sessionization
-  *  - `graft_bm25('view', 'query terms', k)` — Okapi BM25 top-k retrieval
-  *  - `graft_resample('view', width_ns)` — fixed-width series resampling
-  *  - `graft_dedup_clusters('view')` — MinHash-LSH near-dup cluster labels
-  *  - `graft_quantile_sketch('view', k, grp, key, val)` — bottom-k quantiles
-  *  - `graft_semantic_dedup('view', thr, k, iters)` — SemDeDup pruning
-  *  - `graft_hll_distinct('view', p, grp, key)` — HLL distinct per group
-  *  - `graft_cms_topk('view', term, k)` — count-min heavy hitters
-  *  - `graft_sample('view', id, fraction)` — deterministic row sample
-  *  - `graft_compaction_plan('view', bytes)` — small-file compaction manifest
-  *  - `graft_exact_dedup('view')` — exact duplicate groups
-  *  - `graft_label_outliers('view')` — per-label embedding outlier z-scores
-  *  - `graft_quality('view')` — per-document quality scores
-  *  - `graft_clf_score('docs', 'model')` — frozen-logreg document scoring
-  *  - `graft_ann_serve('q', 'cells', 'cb', 'codes', k, np)` — frozen IVF-PQ ANN
-  *  - `graft_line_dedup('view', df)` — CCNet line-level dedup verdicts
-  *  - `graft_line_clean('view', df)` — CCNet cleaned-corpus rebuild
-  *  - `graft_ks_drift('view', grp, val, slice, w)` — exact KS drift per group
-  *  - `graft_psi_drift('view', grp, val, slice, lo, hi, bins)` — PSI drift
-  *  - `graft_winnow_dups('view', k, w, shared, df)` — winnowing near-dups
-  *  - `graft_skipgrams('view', window)` — skip-gram pair counts
-  *  - `graft_holt('view', horizon)` — Holt smoothing + forecasts
-  *  - `graft_cdc_scd2('view')` — SCD2 changelog historization
-  *  - `graft_text_cdc_dups('view', w, bits, shared, df)` — sub-doc CDC dedup
-  *  - `graft_kcenter('view', k)` — greedy k-center diversity coreset
-  *  - `graft_readability('view')` — Flesch ease + FK grade per doc
-  *  - `graft_assoc_rules('view')` — directional association rules
-  *  - `graft_calendar_profile('view')` — dow×hour activity matrix
-  *  - `graft_novelty('view', k)` — per-doc k-shingle novelty
-  *  - `graft_benford('view', grp, val)` — Benford first-digit audit
-  *  - `graft_ljungbox('view', h)` — Ljung–Box whiteness test per series
-  *  - `graft_isotropy('view')` — embedding isotropy audit
-  *  - `graft_spearman('view', dt_ns)` — Spearman series-pair correlation
-  *  - `graft_motifs('view', dt_ns)` — sliding-window SAX motif census
-  *  - `graft_completeness('view')` — per-column null/NaN/empty audit
-  *  - `graft_random_project('view', d_out, d_in)` — JL sign projection
-  *  - `graft_lsh_plan(n, target)` — LSH banding S-curve planner
-  *  - `graft_minhash_eval('view')` — measured dedup precision/recall
-  *  - `graft_pacf('view', h)` — Durbin–Levinson partial autocorrelation
-  *  - `graft_survival('view', censor_days, day_ns)` — Kaplan–Meier curve
-  *  - `graft_kcore('view', k)` — k-core membership of a pair graph
-  *  - `graft_adamic_adar('view', max_deg)` — 2-hop link prediction
-  *  - `graft_rake('view', top_n, max_len)` — RAKE keyphrases
-  *  - `graft_dtw('view', dt_ns)` — DTW distance between series pairs
+  * each registry's `registerAll` on an existing session. The declarations
+  * in those two objects are the one list of what SQL can call: each starts
+  * with the function's signature and usage text, which is also what
+  * `DESCRIBE FUNCTION` prints.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   def apply(ext: SparkSessionExtensions): Unit = {
@@ -74,589 +29,335 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 }
 
+/** Declares a SQL function from its signature string `name(p1, p2, ...)`:
+  * the signature supplies the function name, the usage text, the arity
+  * and the parameter names of error messages. [[SqlDecl.Args]] reads each
+  * call's literal arguments with one set of rules for both registries.
+  */
+private[graft] object SqlDecl {
+  private val Shape = """(\w+)\(([\w, ]*)\)""".r
+
+  type Entry[T] = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => T)
+
+  def apply[T](owner: Class[_], sig: String, doc: String)(build: Args => T): Entry[T] =
+    sig match {
+      case Shape(name, ps) =>
+        val params = ps.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+        val info = new ExpressionInfo(owner.getName, null, name, s"$sig - $doc",
+          "", "", "", "", "", "", "built-in")
+        (FunctionIdentifier(name), info, exprs => build(new Args(sig, params, exprs)))
+      case _ => throw new IllegalArgumentException(s"malformed SQL signature: $sig")
+    }
+
+  /** One call's arguments, checked against the declared arity. Integer
+    * parameters take INT or BIGINT literals and reject values outside
+    * their type; numeric parameters also take integer literals.
+    */
+  final class Args private[SqlDecl] (sig: String, params: Seq[String],
+      exprs: Seq[Expression]) {
+    if (exprs.length != params.length) throw new IllegalArgumentException(
+      s"$sig takes ${params.length} arguments, got ${exprs.length}")
+
+    private def fail(i: Int, what: String): Nothing =
+      throw new IllegalArgumentException(
+        s"$sig: ${params(i)} must be $what, got ${exprs(i)}")
+
+    def expr(i: Int): Expression = exprs(i)
+
+    def str(i: Int): String = exprs(i) match {
+      case Literal(s, StringType) if s != null => s.toString
+      case _ => fail(i, "a string literal")
+    }
+
+    def long(i: Int): Long = exprs(i) match {
+      case Literal(v: Int, IntegerType) => v.toLong
+      case Literal(v: Long, LongType) => v
+      case _ => fail(i, "an integer literal")
+    }
+
+    def int(i: Int): Int = {
+      val v = long(i)
+      if (!v.isValidInt) throw new IllegalArgumentException(
+        s"$sig: ${params(i)} = $v is outside the int range")
+      v.toInt
+    }
+
+    def double(i: Int): Double = exprs(i) match {
+      case Literal(v: Decimal, _) => v.toDouble
+      case Literal(v: Double, DoubleType) => v
+      case Literal(v: Int, IntegerType) => v.toDouble
+      case Literal(v: Long, LongType) => v.toDouble
+      case _ => fail(i, "a numeric literal")
+    }
+
+    /** The table or (temp) view named by a string argument. */
+    def rel(i: Int): DataFrame = SparkSession.active.table(str(i))
+
+    /** The column named by a string argument. */
+    def column(i: Int): Column = col(str(i))
+  }
+}
+
 /** Table-valued functions exposing whole-relation pipeline operators to
   * pure-SQL callers: `SELECT * FROM graft_sessionize('events_view',
-  * 1800000000000)`. The first argument names a table or (temp) view in the
+  * 1800000000000)`. Table arguments name a table or (temp) view in the
   * session catalog; the remaining arguments are literals. The builder runs
-  * at analysis time: it resolves the named relation, applies the same
+  * at analysis time: it resolves the named relations, applies the same
   * DataFrame-level operator the Scala API exposes, and splices the
   * resulting analyzed plan into the query — so a SQL invocation plans
   * IDENTICALLY to the Scala call (same shuffles, same broadcasts), proven
   * by the sql_* twin queries hashing equal to their Scala originals.
   *
-  * `graft_dedup_clusters` note: the operator is iterative (connected
-  * components with per-round checkpointing), so resolving it executes the
-  * bounded label-propagation jobs during analysis of the outer query —
-  * the cost is the operator itself, not an extra penalty, but EXPLAIN on
-  * such a query is not free.
+  * Iterative operators (`graft_dedup_clusters`: connected components with
+  * per-round checkpointing) and frozen-model readers run their bounded
+  * jobs while the outer query is analyzed — the cost is the
+  * operator itself, not an extra penalty, but EXPLAIN on such a query is
+  * not free.
   */
 object GraftTableFunctions {
 
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftTableFunctions.type].getName, null, name,
-      usage, "", "", "", "", "", "", "built-in")
-
-  private def strArg(e: Expression, what: String): String = e match {
-    case Literal(s, org.apache.spark.sql.types.StringType) if s != null => s.toString
-    case other => throw new IllegalArgumentException(
-      s"$what must be a string literal, got $other")
-  }
-
-  private def longArg(e: Expression, what: String): Long = e match {
-    case Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v.toLong
-    case Literal(v: Long, org.apache.spark.sql.types.LongType) => v
-    case other => throw new IllegalArgumentException(
-      s"$what must be an integer literal, got $other")
-  }
-
-  private def intArg(e: Expression, what: String): Int =
-    longArg(e, what).toInt
-
-  private def doubleArg(e: Expression, what: String): Double = e match {
-    case Literal(v: org.apache.spark.sql.types.Decimal, _) => v.toDouble
-    case Literal(v: Double, org.apache.spark.sql.types.DoubleType) => v
-    case Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v.toDouble
-    case other => throw new IllegalArgumentException(
-      s"$what must be a numeric literal, got $other")
-  }
-
-  private def rel(name: String): DataFrame = SparkSession.active.table(name)
-
-  private def plan(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
+  private def tvf(sig: String, doc: String)(build: SqlDecl.Args => DataFrame)
+      : SqlDecl.Entry[LogicalPlan] =
+    SqlDecl(getClass, sig, doc)(a => build(a).queryExecution.analyzed)
 
   val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan)] = Seq(
-    (FunctionIdentifier("graft_sessionize"),
-      info("graft_sessionize",
-        "graft_sessionize(table, gap_ns) - gap-based sessionization of an event table"),
-      (exprs: Seq[Expression]) => plan(graft.ops.Sessionize.sessions(
-        rel(strArg(exprs(0), "table name")), longArg(exprs(1), "gap_ns")))),
-    (FunctionIdentifier("graft_bm25"),
-      info("graft_bm25",
-        "graft_bm25(table, query, k) - Okapi BM25 top-k document retrieval"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.TextOps.bm25(
-        rel(strArg(exprs(0), "table name")), strArg(exprs(1), "query"),
-        intArg(exprs(2), "k")))),
-    (FunctionIdentifier("graft_resample"),
-      info("graft_resample",
-        "graft_resample(table, width_ns) - fixed-width resampling of a series table"),
-      (exprs: Seq[Expression]) => plan(graft.ts.SeriesOps.resample(
-        rel(strArg(exprs(0), "table name")), longArg(exprs(1), "width_ns")))),
-    (FunctionIdentifier("graft_dedup_clusters"),
-      info("graft_dedup_clusters",
-        "graft_dedup_clusters(table) - MinHash-LSH near-duplicate cluster labels"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.Components.dedupClusters(
-        rel(strArg(exprs(0), "table name"))))),
-    (FunctionIdentifier("graft_quantile_sketch"),
-      info("graft_quantile_sketch",
-        "graft_quantile_sketch(table, k, group_col, key_col, value_col) - " +
-          "mergeable bottom-k sample quantiles per group"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.Sketches.quantileSketch(
-        rel(strArg(exprs(0), "table name")), intArg(exprs(1), "k"),
-        Seq(strArg(exprs(2), "group column")), strArg(exprs(3), "key column"),
-        strArg(exprs(4), "value column")))),
-    (FunctionIdentifier("graft_semantic_dedup"),
-      info("graft_semantic_dedup",
-        "graft_semantic_dedup(table, threshold, k, iters) - SemDeDup-style " +
-          "embedding dedup: kmeans cells + within-cell cosine pruning"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.Similarity.semanticDedup(
-        rel(strArg(exprs(0), "table name")), doubleArg(exprs(1), "threshold"),
-        intArg(exprs(2), "k"), intArg(exprs(3), "iters")))),
-    (FunctionIdentifier("graft_hll_distinct"),
-      info("graft_hll_distinct",
-        "graft_hll_distinct(table, p, group_col, key_col) - HyperLogLog " +
-          "approximate distinct keys per group (2^p registers)"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.Sketches.hllDistinct(
-        rel(strArg(exprs(0), "table name")), intArg(exprs(1), "p"),
-        Seq(strArg(exprs(2), "group column")), strArg(exprs(3), "key column")))),
-    (FunctionIdentifier("graft_cms_topk"),
-      info("graft_cms_topk",
-        "graft_cms_topk(table, term_col, k) - count-min-sketch heavy " +
-          "hitters: top-k terms with one-sided frequency estimates"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.Sketches.cmsTopK(
-        rel(strArg(exprs(0), "table name")), strArg(exprs(1), "term column"),
-        intArg(exprs(2), "k")))),
-    (FunctionIdentifier("graft_sample"),
-      info("graft_sample",
-        "graft_sample(table, id_col, fraction) - deterministic hash-bucket " +
-          "row sample (layout- and run-invariant)"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.Sampling.deterministicSample(
-        rel(strArg(exprs(0), "table name")), strArg(exprs(1), "id column"),
-        doubleArg(exprs(2), "fraction")))),
-    (FunctionIdentifier("graft_compaction_plan"),
-      info("graft_compaction_plan",
-        "graft_compaction_plan(table, target_bytes) - small-file compaction " +
-          "manifest: roll docs into files of ~target_bytes in id order"),
-      (exprs: Seq[Expression]) => plan(graft.ops.Layout.compactionPlan(
-        rel(strArg(exprs(0), "table name")), longArg(exprs(1), "target_bytes")))),
-    (FunctionIdentifier("graft_exact_dedup"),
-      info("graft_exact_dedup",
-        "graft_exact_dedup(table) - exact duplicate groups by full-text " +
-          "hash, lowest id canonical"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.Dedup.exact(
-        rel(strArg(exprs(0), "table name"))))),
-    (FunctionIdentifier("graft_label_outliers"),
-      info("graft_label_outliers",
-        "graft_label_outliers(table) - embedding centroid-distance z-scores " +
-          "within each label (mislabel/noise screening)"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.Similarity.labelOutliers(
-        rel(strArg(exprs(0), "table name"))))),
-    (FunctionIdentifier("graft_quality"),
-      info("graft_quality",
-        "graft_quality(table) - per-document composite quality score " +
-          "(length, stopword, alnum ratios)"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.TextOps.qualityScore(
-        rel(strArg(exprs(0), "table name"))))),
-    (FunctionIdentifier("graft_clf_score"),
-      info("graft_clf_score",
-        "graft_clf_score(docs_table, model_table) - score documents " +
-          "against a frozen logreg quality model (weights + moments)"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.TextOps.logregScoreFrozen(
-        rel(strArg(exprs(0), "docs table name")),
-        rel(strArg(exprs(1), "model table name"))))),
-    (FunctionIdentifier("graft_ann_serve"),
-      info("graft_ann_serve",
-        "graft_ann_serve(queries_table, cells_table, codebooks_table, " +
-          "codes_table, top_k, nprobe) - ANN top-k over a frozen IVF-PQ " +
-          "index: coarse cell probe + cell-pruned ADC code scoring"),
-      (exprs: Seq[Expression]) => plan(
-        graft.pipeline.Similarity.ivfPqAdcTopKFrozen(
-          rel(strArg(exprs(0), "queries table name")),
-          rel(strArg(exprs(1), "cells table name")),
-          rel(strArg(exprs(2), "codebooks table name")),
-          rel(strArg(exprs(3), "codes table name")),
-          intArg(exprs(4), "top_k"), intArg(exprs(5), "nprobe")))),
-    (FunctionIdentifier("graft_line_dedup"),
-      info("graft_line_dedup",
-        "graft_line_dedup(table, boilerplate_df) - CCNet line-level dedup: " +
-          "per-line first-occurrence + boilerplate-frequency verdicts"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.TextOps.lineDedup(
-        rel(strArg(exprs(0), "table name")),
-        boilerplateDf = longArg(exprs(1), "boilerplate_df")))),
-    (FunctionIdentifier("graft_line_clean"),
-      info("graft_line_clean",
-        "graft_line_clean(table, boilerplate_df) - CCNet cleaned corpus: " +
-          "docs rebuilt from kept lines + per-doc removal accounting"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.TextOps.lineClean(
-        rel(strArg(exprs(0), "table name")),
-        boilerplateDf = longArg(exprs(1), "boilerplate_df")))),
-    (FunctionIdentifier("graft_web_canonical"),
-      info("graft_web_canonical",
-        "graft_web_canonical(table) - canonical URL identity + registered " +
-          "domain per doc (expects doc_id, url columns)"),
-      (exprs: Seq[Expression]) => plan {
-        val df = rel(strArg(exprs(0), "table name"))
-        df.select(org.apache.spark.sql.functions.col("doc_id"),
-          org.apache.spark.sql.functions.col("url"),
-          graft.pipeline.WebOps.canonicalizeUrl(
-            org.apache.spark.sql.functions.col("url")).as("canonical_url"),
-          graft.pipeline.WebOps.urlDomain(
-            org.apache.spark.sql.functions.col("url")).as("domain"))
-      }),
-    (FunctionIdentifier("graft_domain_stats"),
-      info("graft_domain_stats",
-        "graft_domain_stats(table) - per registered domain: doc/token/lang " +
-          "counts + mean quality score (expects doc_id, url, text, lang)"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.WebOps.domainStats(
-        rel(strArg(exprs(0), "table name"))))),
-    (FunctionIdentifier("graft_domain_budget"),
-      info("graft_domain_budget",
-        "graft_domain_budget(table, budget_tokens) - per-domain token-budget " +
-          "cap in doc_id order (expects doc_id, url, text)"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.WebOps.domainBudgetCap(
-        rel(strArg(exprs(0), "table name")),
-        longArg(exprs(1), "budget_tokens")))),
-    (FunctionIdentifier("graft_crawl_rate"),
-      info("graft_crawl_rate",
-        "graft_crawl_rate(table, window_ms, max_fetches) - per registered " +
-          "domain and tumbling event-time window: fetch count + over-limit " +
-          "verdict (expects url, ts epoch-ns columns)"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.WebOps.crawlRate(
-        rel(strArg(exprs(0), "table name")),
-        longArg(exprs(1), "window_ms"), longArg(exprs(2), "max_fetches")))),
-    (FunctionIdentifier("graft_web_blocklist"),
-      info("graft_web_blocklist",
-        "graft_web_blocklist(docs_table, blocklist_table) - drop docs " +
-          "whose registered domain or canonical-URL prefix is blocklisted " +
-          "(blocklist columns: kind in {domain, prefix}, pattern)"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.WebOps.blocklistFilter(
-        rel(strArg(exprs(0), "docs table name")),
-        rel(strArg(exprs(1), "blocklist table name"))))),
-    (FunctionIdentifier("graft_link_graph"),
-      info("graft_link_graph",
-        "graft_link_graph(table) - registered-domain link graph from " +
-          "http(s) mentions in page text: (src_domain, dst_domain) edges " +
-          "with link + distinct-page counts (expects doc_id, url, text)"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.WebOps.linkGraph(
-        rel(strArg(exprs(0), "table name"))))),
-    (FunctionIdentifier("graft_domain_boilerplate"),
-      info("graft_domain_boilerplate",
-        "graft_domain_boilerplate(table, min_ratio, min_docs) - flag lines " +
-          "repeating across most pages of their own registered domain " +
-          "(site chrome); expects doc_id, url, text columns"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.WebOps.domainBoilerplate(
-        rel(strArg(exprs(0), "table name")),
-        minRatio = doubleArg(exprs(1), "min_ratio"),
-        minDocs = longArg(exprs(2), "min_docs")))),
-    (FunctionIdentifier("graft_fetch_schedule"),
-      info("graft_fetch_schedule",
-        "graft_fetch_schedule(table, delay_ms) - politeness scheduler: " +
-          "earliest feasible fetch time per registered domain under a " +
-          "minimum gap (expects event_id, url, ts epoch-ns columns)"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.WebOps.fetchSchedule(
-        rel(strArg(exprs(0), "table name")),
-        longArg(exprs(1), "delay_ms")))),
-    (FunctionIdentifier("graft_web_frontier"),
-      info("graft_web_frontier",
-        "graft_web_frontier(table) - crawl frontier: outlink mentions " +
-          "whose canonical identity is not already a corpus page, with " +
-          "mention/citing-domain counts (expects doc_id, url, text)"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.WebOps.frontier(
-        rel(strArg(exprs(0), "table name"))))),
-    (FunctionIdentifier("graft_web_robots"),
-      info("graft_web_robots",
-        "graft_web_robots(docs_table, rules_table) - robots-rules verdicts " +
-          "(longest match, allow on tie, default allow) per URL; rules " +
-          "columns: domain, directive in {allow, disallow}, path_prefix"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.WebOps.robotsEval(
-        rel(strArg(exprs(0), "docs table name")),
-        rel(strArg(exprs(1), "rules table name"))))),
-    (FunctionIdentifier("graft_sft_stats"),
-      info("graft_sft_stats",
-        "graft_sft_stats(table) - per-conversation structural validation " +
-          "of an SFT turns table: role/empty counts, alternation and " +
-          "first-speaker checks (expects conv_id, turn_no, role, content)"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.ChatOps.turnStats(
-        rel(strArg(exprs(0), "table name"))))),
-    (FunctionIdentifier("graft_chat_render"),
-      info("graft_chat_render",
-        "graft_chat_render(table) - chat-template rendering of an SFT " +
-          "turns table to one training string per conversation (expects " +
-          "conv_id, turn_no, role, content)"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.ChatOps.renderChat(
-        rel(strArg(exprs(0), "table name"))))),
-    (FunctionIdentifier("graft_pref_bias"),
-      info("graft_pref_bias",
-        "graft_pref_bias(table) - preference-pair length-bias audit per " +
-          "source: longer-chosen ratio + mean token delta (expects " +
-          "source, chosen, rejected)"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.ChatOps.prefLengthBias(
-        rel(strArg(exprs(0), "table name"))))),
-    (FunctionIdentifier("graft_ks_drift"),
-      info("graft_ks_drift",
-        "graft_ks_drift(table, group_col, value_col, slice_col, shard_width) - " +
-          "exact two-sample KS drift per group (slice_col: boolean, true = slice A)"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.Profile.ksDrift(
-        rel(strArg(exprs(0), "table name")), strArg(exprs(1), "group column"),
-        strArg(exprs(2), "value column"),
-        org.apache.spark.sql.functions.col(strArg(exprs(3), "slice column")),
-        doubleArg(exprs(4), "shard_width")))),
-    (FunctionIdentifier("graft_psi_drift"),
-      info("graft_psi_drift",
-        "graft_psi_drift(table, group_col, value_col, slice_col, lo, hi, n_bins) - " +
-          "binned population-stability-index drift per group"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.Profile.psiDrift(
-        rel(strArg(exprs(0), "table name")), strArg(exprs(1), "group column"),
-        strArg(exprs(2), "value column"),
-        org.apache.spark.sql.functions.col(strArg(exprs(3), "slice column")),
-        doubleArg(exprs(4), "lo"), doubleArg(exprs(5), "hi"),
-        intArg(exprs(6), "n_bins")))),
-    (FunctionIdentifier("graft_winnow_dups"),
-      info("graft_winnow_dups",
-        "graft_winnow_dups(table, k, window, min_shared, max_df) - " +
-          "near-dup pairs by shared MOSS winnowing fingerprints"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.TextOps.winnowNearDups(
-        rel(strArg(exprs(0), "table name")), intArg(exprs(1), "k"),
-        intArg(exprs(2), "window"), intArg(exprs(3), "min_shared"),
-        intArg(exprs(4), "max_df")))),
-    (FunctionIdentifier("graft_skipgrams"),
-      info("graft_skipgrams",
-        "graft_skipgrams(table, window) - skip-gram (center, context) " +
-          "pair counts for embedding training"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.TextOps.skipgrams(
-        rel(strArg(exprs(0), "table name")), intArg(exprs(1), "window")))),
-    (FunctionIdentifier("graft_holt"),
-      info("graft_holt",
-        "graft_holt(table, horizon) - Holt double exponential smoothing " +
-          "per series with h-step linear forecasts"),
-      (exprs: Seq[Expression]) => plan(graft.ts.SeriesOps.holt(
-        rel(strArg(exprs(0), "table name")),
-        horizon = intArg(exprs(1), "horizon")))),
-    (FunctionIdentifier("graft_cdc_scd2"),
-      info("graft_cdc_scd2",
-        "graft_cdc_scd2(table) - SCD2 historization of an " +
-          "(op, id, payload, seq) changelog"),
-      (exprs: Seq[Expression]) => plan(graft.ops.Cdc.scd2(
-        rel(strArg(exprs(0), "table name"))))),
-    (FunctionIdentifier("graft_text_cdc_dups"),
-      info("graft_text_cdc_dups",
-        "graft_text_cdc_dups(table, window, mask_bits, min_shared, max_df)" +
-          " - sub-document near-dup pairs by shared content-defined chunks"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.TextCdc.cdcDups(
-        rel(strArg(exprs(0), "table name")), intArg(exprs(1), "window"),
-        intArg(exprs(2), "mask_bits"), intArg(exprs(3), "min_shared"),
-        intArg(exprs(4), "max_df")))),
-    (FunctionIdentifier("graft_kcenter"),
-      info("graft_kcenter",
-        "graft_kcenter(table, k) - greedy k-center diversity coreset " +
-          "over an embedding table"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.Similarity.kCenters(
-        rel(strArg(exprs(0), "table name")), intArg(exprs(1), "k")))),
-    (FunctionIdentifier("graft_readability"),
-      info("graft_readability",
-        "graft_readability(table) - Flesch reading ease and " +
-          "Flesch-Kincaid grade per document"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.TextOps.readability(
-        rel(strArg(exprs(0), "table name"))))),
-    (FunctionIdentifier("graft_assoc_rules"),
-      info("graft_assoc_rules",
-        "graft_assoc_rules(table) - directional association rules " +
-          "(support, confidence, lift) over user event baskets"),
-      (exprs: Seq[Expression]) => plan(graft.ops.Cooccurrence.assocRules(
-        rel(strArg(exprs(0), "table name"))))),
-    (FunctionIdentifier("graft_calendar_profile"),
-      info("graft_calendar_profile",
-        "graft_calendar_profile(table) - per-type UTC dow x hour event " +
-          "count and value stats"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.Profile.calendarProfile(
-        rel(strArg(exprs(0), "table name"))))),
-    (FunctionIdentifier("graft_novelty"),
-      info("graft_novelty",
-        "graft_novelty(table, k) - per-document k-shingle novelty vs " +
-          "everything earlier in id order"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.TextOps.ngramNovelty(
-        rel(strArg(exprs(0), "table name")), k = intArg(exprs(1), "k")))),
-    (FunctionIdentifier("graft_benford"),
-      info("graft_benford",
-        "graft_benford(table, group_col, value_col) - Benford first-digit " +
-          "audit with per-group chi-square verdict"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.Profile.benford(
-        rel(strArg(exprs(0), "table name")), strArg(exprs(1), "group column"),
-        strArg(exprs(2), "value column")))),
-    (FunctionIdentifier("graft_ljungbox"),
-      info("graft_ljungbox",
-        "graft_ljungbox(table, max_lag) - per-series Ljung-Box whiteness " +
-          "test with adaptive df and 5% verdict"),
-      (exprs: Seq[Expression]) => plan(graft.ts.SeriesOps.ljungBox(
-        rel(strArg(exprs(0), "table name")), intArg(exprs(1), "max_lag")))),
-    (FunctionIdentifier("graft_isotropy"),
-      info("graft_isotropy",
-        "graft_isotropy(table) - one-row embedding isotropy audit " +
-          "(pair-cosine moments, centroid-offset ratio)"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.Similarity.isotropy(
-        rel(strArg(exprs(0), "table name"))))),
-    (FunctionIdentifier("graft_spearman"),
-      info("graft_spearman",
-        "graft_spearman(table, dt_ns) - Spearman rank correlation between " +
-          "series pairs on a dt_ns resample grid"),
-      (exprs: Seq[Expression]) => plan(graft.ts.SeriesOps.spearmanCorrelation(
-        rel(strArg(exprs(0), "table name")), longArg(exprs(1), "dt_ns")))),
-    (FunctionIdentifier("graft_motifs"),
-      info("graft_motifs",
-        "graft_motifs(table, dt_ns) - sliding-window SAX motif census " +
-          "over the resampled observation sequence"),
-      (exprs: Seq[Expression]) => plan(graft.ts.SeriesOps.saxMotifs(
-        rel(strArg(exprs(0), "table name")), longArg(exprs(1), "dt_ns")))),
-    (FunctionIdentifier("graft_completeness"),
-      info("graft_completeness",
-        "graft_completeness(table) - per-column null/NaN/empty audit " +
-          "with the usable fraction"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.Profile.completeness(
-        rel(strArg(exprs(0), "table name"))))),
-    (FunctionIdentifier("graft_random_project"),
-      info("graft_random_project",
-        "graft_random_project(table, d_out, d_in) - JL sign random " +
-          "projection of an embedding table"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.Similarity.randomProject(
-        rel(strArg(exprs(0), "table name")), intArg(exprs(1), "d_out"),
-        intArg(exprs(2), "d_in")))),
-    (FunctionIdentifier("graft_lsh_plan"),
-      info("graft_lsh_plan",
-        "graft_lsh_plan(n_hashes, target_jaccard) - LSH banding S-curve " +
-          "planner (no table argument: the grid is generated)"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.Dedup.lshPlan(
-        SparkSession.active, intArg(exprs(0), "n_hashes"),
-        doubleArg(exprs(1), "target_jaccard")))),
-    (FunctionIdentifier("graft_pacf"),
-      info("graft_pacf",
-        "graft_pacf(table, max_lag) - per-series partial autocorrelation " +
-          "via the Durbin-Levinson recursion"),
-      (exprs: Seq[Expression]) => plan(graft.ts.SeriesOps.pacf(
-        rel(strArg(exprs(0), "table name")), intArg(exprs(1), "max_lag")))),
-    (FunctionIdentifier("graft_minhash_eval"),
-      info("graft_minhash_eval",
-        "graft_minhash_eval(table) - measured precision/recall of the " +
-          "MinHash-LSH dedup vs brute-force exact Jaccard on the table"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.Dedup.minhashEval(
-        rel(strArg(exprs(0), "table name"))))),
-    (FunctionIdentifier("graft_survival"),
-      info("graft_survival",
-        "graft_survival(table, censor_days, day_ns) - Kaplan-Meier " +
-          "survival curve over user lifetimes with right-censoring"),
-      (exprs: Seq[Expression]) => plan(graft.ops.Retention.survival(
-        rel(strArg(exprs(0), "table name")),
-        censorDays = longArg(exprs(1), "censor_days"),
-        dayNs = longArg(exprs(2), "day_ns")))),
-    (FunctionIdentifier("graft_kcore"),
-      info("graft_kcore",
-        "graft_kcore(table, k) - k-core membership of an id_a/id_b pair " +
-          "graph by synchronous peeling"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.Components.kCore(
-        rel(strArg(exprs(0), "table name")), intArg(exprs(1), "k")))),
-    (FunctionIdentifier("graft_adamic_adar"),
-      info("graft_adamic_adar",
-        "graft_adamic_adar(table, max_deg) - Adamic-Adar 2-hop link " +
-          "prediction over an id_a/id_b pair graph"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.Components.adamicAdar(
-        rel(strArg(exprs(0), "table name")), intArg(exprs(1), "max_deg")))),
-    (FunctionIdentifier("graft_rake"),
-      info("graft_rake",
-        "graft_rake(table, top_n, max_len) - RAKE keyphrase extraction " +
-          "over a doc_id/text table"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.TextOps.rakePhrases(
-        rel(strArg(exprs(0), "table name")), intArg(exprs(1), "top_n"),
-        intArg(exprs(2), "max_len")))),
-    (FunctionIdentifier("graft_dtw"),
-      info("graft_dtw",
-        "graft_dtw(table, dt_ns) - dynamic-time-warping distance between " +
-          "every series pair on the dt_ns-resampled axis"),
-      (exprs: Seq[Expression]) => plan(graft.ts.SeriesOps.dtw(
-        rel(strArg(exprs(0), "table name")), longArg(exprs(1), "dt_ns")))),
-    (FunctionIdentifier("graft_dsir"),
-      info("graft_dsir",
-        "graft_dsir(table, target_col, k) - DSIR importance resampling: " +
-          "the k docs whose hashed-gram distribution best matches the rows " +
-          "where boolean target_col is true (Gumbel top-k, deterministic)"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.Sampling.dsirResample(
-        rel(strArg(exprs(0), "table name")),
-        org.apache.spark.sql.functions.col(strArg(exprs(1), "target column")),
-        intArg(exprs(2), "k")))),
-    (FunctionIdentifier("graft_semantic_join"),
-      info("graft_semantic_join",
-        "graft_semantic_join(left_table, right_table, threshold, k, iters) " +
-          "- cross-corpus paraphrase-level contamination pairs: cells " +
-          "frozen on the left corpus, same-cell cross cosine >= threshold"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.Similarity.semanticJoin(
-        rel(strArg(exprs(0), "left table name")),
-        rel(strArg(exprs(1), "right table name")),
-        doubleArg(exprs(2), "threshold"),
-        intArg(exprs(3), "k"), intArg(exprs(4), "iters")))),
-    (FunctionIdentifier("graft_silhouette"),
-      info("graft_silhouette",
-        "graft_silhouette(table, k, iters) - simplified (centroid) " +
-          "silhouette clustering-quality scores per vector"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.Similarity.silhouette(
-        rel(strArg(exprs(0), "table name")),
-        intArg(exprs(1), "k"), intArg(exprs(2), "iters")))),
-    (FunctionIdentifier("graft_modularity"),
-      info("graft_modularity",
-        "graft_modularity(pairs_table, labels_table) - Newman modularity " +
-          "of the label partition against the pair graph, one row per label"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.Components.modularity(
-        rel(strArg(exprs(0), "pairs table name")),
-        rel(strArg(exprs(1), "labels table name"))))),
-    (FunctionIdentifier("graft_crosstab"),
-      info("graft_crosstab",
-        "graft_crosstab(table, row_col, col_col, values_csv) - contingency " +
-          "matrix with explicit comma-separated pivot values, cells " +
-          "zero-filled"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.Profile.crosstab(
-        rel(strArg(exprs(0), "table name")),
-        strArg(exprs(1), "row column"), strArg(exprs(2), "pivot column"),
-        strArg(exprs(3), "comma-separated pivot values").split(",").toSeq))),
-    (FunctionIdentifier("graft_containment_join"),
-      info("graft_containment_join",
-        "graft_containment_join(left_table, right_table, threshold) - " +
-          "exact asymmetric containment of the (small) right side's docs " +
-          "in the left corpus (quoted-benchmark contamination)"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.Dedup.containmentJoin(
-        rel(strArg(exprs(0), "left table name")),
-        rel(strArg(exprs(1), "right table name")),
-        doubleArg(exprs(2), "threshold")))),
-    (FunctionIdentifier("graft_minhash_join"),
-      info("graft_minhash_join",
-        "graft_minhash_join(left_table, right_table) - cross-corpus " +
-          "near-duplicate pairs (doc-level fuzzy contamination check): " +
-          "banded MinHash-LSH candidates verified by exact shingle Jaccard"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.Dedup.minhashJoin(
-        rel(strArg(exprs(0), "left table name")),
-        rel(strArg(exprs(1), "right table name"))))),
-    (FunctionIdentifier("graft_curate"),
-      info("graft_curate",
-        "graft_curate(docs_table, bench_table) - the end-to-end curation " +
-          "pipeline: gopher gate + exact/near dedup keepers + 5-gram " +
-          "decontamination flags per document"),
-      (exprs: Seq[Expression]) => plan(graft.pipeline.Curation.curate(
-        rel(strArg(exprs(0), "docs table name")),
-        rel(strArg(exprs(1), "bench table name")))))
+    tvf("graft_sessionize(table, gap_ns)", "gap-based sessionization of an event table") {
+      a => Sessionize.sessions(a.rel(0), a.long(1)) },
+    tvf("graft_bm25(table, query, k)", "Okapi BM25 top-k document retrieval") {
+      a => TextOps.bm25(a.rel(0), a.str(1), a.int(2)) },
+    tvf("graft_resample(table, width_ns)", "fixed-width resampling of a series table") {
+      a => SeriesOps.resample(a.rel(0), a.long(1)) },
+    tvf("graft_dedup_clusters(table)", "MinHash-LSH near-duplicate cluster labels") {
+      a => Components.dedupClusters(a.rel(0)) },
+    tvf("graft_quantile_sketch(table, k, group_col, key_col, value_col)",
+        "mergeable bottom-k sample quantiles per group") {
+      a => Sketches.quantileSketch(a.rel(0), a.int(1), Seq(a.str(2)), a.str(3), a.str(4)) },
+    tvf("graft_semantic_dedup(table, threshold, k, iters)",
+        "SemDeDup-style embedding dedup: kmeans cells + within-cell cosine pruning") {
+      a => Similarity.semanticDedup(a.rel(0), a.double(1), a.int(2), a.int(3)) },
+    tvf("graft_hll_distinct(table, p, group_col, key_col)",
+        "HyperLogLog approximate distinct keys per group (2^p registers)") {
+      a => Sketches.hllDistinct(a.rel(0), a.int(1), Seq(a.str(2)), a.str(3)) },
+    tvf("graft_cms_topk(table, term_col, k)",
+        "count-min-sketch heavy hitters: top-k terms with one-sided frequency estimates") {
+      a => Sketches.cmsTopK(a.rel(0), a.str(1), a.int(2)) },
+    tvf("graft_sample(table, id_col, fraction)",
+        "deterministic hash-bucket row sample (layout- and run-invariant)") {
+      a => Sampling.deterministicSample(a.rel(0), a.str(1), a.double(2)) },
+    tvf("graft_compaction_plan(table, target_bytes)",
+        "small-file compaction manifest: roll docs into files of ~target_bytes in id order") {
+      a => Layout.compactionPlan(a.rel(0), a.long(1)) },
+    tvf("graft_exact_dedup(table)",
+        "exact duplicate groups by full-text hash, lowest id canonical") {
+      a => Dedup.exact(a.rel(0)) },
+    tvf("graft_label_outliers(table)",
+        "embedding centroid-distance z-scores within each label (mislabel/noise screening)") {
+      a => Similarity.labelOutliers(a.rel(0)) },
+    tvf("graft_quality(table)",
+        "per-document composite quality score (length, stopword, alnum ratios)") {
+      a => TextOps.qualityScore(a.rel(0)) },
+    tvf("graft_clf_score(docs_table, model_table)",
+        "score documents against a frozen logreg quality model (weights + moments)") {
+      a => TextOps.logregScoreFrozen(a.rel(0), a.rel(1)) },
+    tvf("graft_ann_serve(queries_table, cells_table, codebooks_table, codes_table, top_k, nprobe)",
+        "ANN top-k over a frozen IVF-PQ index: coarse cell probe + cell-pruned ADC code scoring") {
+      a => Similarity.ivfPqAdcTopKFrozen(a.rel(0), a.rel(1), a.rel(2), a.rel(3), a.int(4),
+        a.int(5)) },
+    tvf("graft_line_dedup(table, boilerplate_df)",
+        "CCNet line-level dedup: per-line first-occurrence + boilerplate-frequency verdicts") {
+      a => TextOps.lineDedup(a.rel(0), boilerplateDf = a.long(1)) },
+    tvf("graft_line_clean(table, boilerplate_df)",
+        "CCNet cleaned corpus: docs rebuilt from kept lines + per-doc removal accounting") {
+      a => TextOps.lineClean(a.rel(0), boilerplateDf = a.long(1)) },
+    tvf("graft_web_canonical(table)",
+        "canonical URL identity + registered domain per doc (expects doc_id, url columns)") { a =>
+      a.rel(0).select(col("doc_id"), col("url"),
+        WebOps.canonicalizeUrl(col("url")).as("canonical_url"),
+        WebOps.urlDomain(col("url")).as("domain")) },
+    tvf("graft_domain_stats(table)", "per registered domain: doc/token/lang counts + mean " +
+        "quality score (expects doc_id, url, text, lang)") {
+      a => WebOps.domainStats(a.rel(0)) },
+    tvf("graft_domain_budget(table, budget_tokens)",
+        "per-domain token-budget cap in doc_id order (expects doc_id, url, text)") {
+      a => WebOps.domainBudgetCap(a.rel(0), a.long(1)) },
+    tvf("graft_crawl_rate(table, window_ms, max_fetches)", "per registered domain and " +
+        "tumbling event-time window: fetch count + over-limit verdict (expects url, ts epoch-ns)") {
+      a => WebOps.crawlRate(a.rel(0), a.long(1), a.long(2)) },
+    tvf("graft_web_blocklist(docs_table, blocklist_table)", "drop docs whose registered " +
+        "domain or canonical-URL prefix is blocklisted (blocklist: kind, pattern)") {
+      a => WebOps.blocklistFilter(a.rel(0), a.rel(1)) },
+    tvf("graft_link_graph(table)", "registered-domain link graph from http(s) mentions in page " +
+        "text: (src_domain, dst_domain) edges with link + distinct-page counts") {
+      a => WebOps.linkGraph(a.rel(0)) },
+    tvf("graft_domain_boilerplate(table, min_ratio, min_docs)", "flag lines repeating across " +
+        "most pages of their own registered domain (site chrome; expects doc_id, url, text)") {
+      a => WebOps.domainBoilerplate(a.rel(0), minRatio = a.double(1), minDocs = a.long(2)) },
+    tvf("graft_fetch_schedule(table, delay_ms)", "politeness scheduler: earliest feasible " +
+        "fetch time per registered domain under a minimum gap (expects event_id, url, ts)") {
+      a => WebOps.fetchSchedule(a.rel(0), a.long(1)) },
+    tvf("graft_web_frontier(table)", "crawl frontier: outlink mentions whose canonical " +
+        "identity is not already a corpus page, with mention/citing-domain counts") {
+      a => WebOps.frontier(a.rel(0)) },
+    tvf("graft_web_robots(docs_table, rules_table)", "robots-rules verdicts (longest match, " +
+        "allow on tie, default allow) per URL; rules: domain, directive, path_prefix") {
+      a => WebOps.robotsEval(a.rel(0), a.rel(1)) },
+    tvf("graft_sft_stats(table)", "per-conversation structural validation of an SFT turns " +
+        "table (expects conv_id, turn_no, role, content)") {
+      a => ChatOps.turnStats(a.rel(0)) },
+    tvf("graft_chat_render(table)", "chat-template rendering of an SFT turns table to one " +
+        "training string per conversation") {
+      a => ChatOps.renderChat(a.rel(0)) },
+    tvf("graft_pref_bias(table)", "preference-pair length-bias audit per source: " +
+        "longer-chosen ratio + mean token delta (expects source, chosen, rejected)") {
+      a => ChatOps.prefLengthBias(a.rel(0)) },
+    tvf("graft_ks_drift(table, group_col, value_col, slice_col, shard_width)",
+        "exact two-sample KS drift per group (slice_col: boolean, true = slice A)") {
+      a => Profile.ksDrift(a.rel(0), a.str(1), a.str(2), a.column(3), a.double(4)) },
+    tvf("graft_psi_drift(table, group_col, value_col, slice_col, lo, hi, n_bins)",
+        "binned population-stability-index drift per group") { a =>
+      Profile.psiDrift(a.rel(0), a.str(1), a.str(2), a.column(3), a.double(4), a.double(5),
+        a.int(6)) },
+    tvf("graft_winnow_dups(table, k, window, min_shared, max_df)",
+        "near-dup pairs by shared MOSS winnowing fingerprints") {
+      a => TextOps.winnowNearDups(a.rel(0), a.int(1), a.int(2), a.int(3), a.int(4)) },
+    tvf("graft_skipgrams(table, window)",
+        "skip-gram (center, context) pair counts for embedding training") {
+      a => TextOps.skipgrams(a.rel(0), a.int(1)) },
+    tvf("graft_holt(table, horizon)",
+        "Holt double exponential smoothing per series with h-step linear forecasts") {
+      a => SeriesOps.holt(a.rel(0), horizon = a.int(1)) },
+    tvf("graft_cdc_scd2(table)", "SCD2 historization of an (op, id, payload, seq) changelog") {
+      a => Cdc.scd2(a.rel(0)) },
+    tvf("graft_text_cdc_dups(table, window, mask_bits, min_shared, max_df)",
+        "sub-document near-dup pairs by shared content-defined chunks") {
+      a => TextCdc.cdcDups(a.rel(0), a.int(1), a.int(2), a.int(3), a.int(4)) },
+    tvf("graft_kcenter(table, k)",
+        "greedy k-center diversity coreset over an embedding table") {
+      a => Similarity.kCenters(a.rel(0), a.int(1)) },
+    tvf("graft_readability(table)", "Flesch reading ease and Flesch-Kincaid grade per document") {
+      a => TextOps.readability(a.rel(0)) },
+    tvf("graft_assoc_rules(table)",
+        "directional association rules (support, confidence, lift) over user event baskets") {
+      a => Cooccurrence.assocRules(a.rel(0)) },
+    tvf("graft_calendar_profile(table)",
+        "per-type UTC dow x hour event count and value stats") {
+      a => Profile.calendarProfile(a.rel(0)) },
+    tvf("graft_novelty(table, k)",
+        "per-document k-shingle novelty vs everything earlier in id order") {
+      a => TextOps.ngramNovelty(a.rel(0), k = a.int(1)) },
+    tvf("graft_benford(table, group_col, value_col)",
+        "Benford first-digit audit with per-group chi-square verdict") {
+      a => Profile.benford(a.rel(0), a.str(1), a.str(2)) },
+    tvf("graft_ljungbox(table, max_lag)",
+        "per-series Ljung-Box whiteness test with adaptive df and 5% verdict") {
+      a => SeriesOps.ljungBox(a.rel(0), a.int(1)) },
+    tvf("graft_isotropy(table)",
+        "one-row embedding isotropy audit (pair-cosine moments, centroid-offset ratio)") {
+      a => Similarity.isotropy(a.rel(0)) },
+    tvf("graft_spearman(table, dt_ns)",
+        "Spearman rank correlation between series pairs on a dt_ns resample grid") {
+      a => SeriesOps.spearmanCorrelation(a.rel(0), a.long(1)) },
+    tvf("graft_motifs(table, dt_ns)",
+        "sliding-window SAX motif census over the resampled observation sequence") {
+      a => SeriesOps.saxMotifs(a.rel(0), a.long(1)) },
+    tvf("graft_completeness(table)", "per-column null/NaN/empty audit with the usable fraction") {
+      a => Profile.completeness(a.rel(0)) },
+    tvf("graft_random_project(table, d_out, d_in)",
+        "JL sign random projection of an embedding table") {
+      a => Similarity.randomProject(a.rel(0), a.int(1), a.int(2)) },
+    tvf("graft_lsh_plan(n_hashes, target_jaccard)",
+        "LSH banding S-curve planner (no table argument: the grid is generated)") {
+      a => Dedup.lshPlan(SparkSession.active, a.int(0), a.double(1)) },
+    tvf("graft_pacf(table, max_lag)",
+        "per-series partial autocorrelation via the Durbin-Levinson recursion") {
+      a => SeriesOps.pacf(a.rel(0), a.int(1)) },
+    tvf("graft_minhash_eval(table)", "measured precision/recall of the MinHash-LSH dedup vs " +
+        "brute-force exact Jaccard on the table") {
+      a => Dedup.minhashEval(a.rel(0)) },
+    tvf("graft_survival(table, censor_days, day_ns)",
+        "Kaplan-Meier survival curve over user lifetimes with right-censoring") {
+      a => Retention.survival(a.rel(0), censorDays = a.long(1), dayNs = a.long(2)) },
+    tvf("graft_kcore(table, k)",
+        "k-core membership of an id_a/id_b pair graph by synchronous peeling") {
+      a => Components.kCore(a.rel(0), a.int(1)) },
+    tvf("graft_adamic_adar(table, max_deg)",
+        "Adamic-Adar 2-hop link prediction over an id_a/id_b pair graph") {
+      a => Components.adamicAdar(a.rel(0), a.int(1)) },
+    tvf("graft_rake(table, top_n, max_len)", "RAKE keyphrase extraction over a doc_id/text table") {
+      a => TextOps.rakePhrases(a.rel(0), a.int(1), a.int(2)) },
+    tvf("graft_dtw(table, dt_ns)",
+        "dynamic-time-warping distance between every series pair on the dt_ns-resampled axis") {
+      a => SeriesOps.dtw(a.rel(0), a.long(1)) },
+    tvf("graft_dsir(table, target_col, k)", "DSIR importance resampling: the k docs whose " +
+        "hashed-gram distribution best matches the rows where boolean target_col is true") {
+      a => Sampling.dsirResample(a.rel(0), a.column(1), a.int(2)) },
+    tvf("graft_semantic_join(left_table, right_table, threshold, k, iters)",
+        "cross-corpus paraphrase-level contamination pairs: cells frozen on the left corpus, " +
+          "same-cell cross cosine >= threshold") {
+      a => Similarity.semanticJoin(a.rel(0), a.rel(1), a.double(2), a.int(3), a.int(4)) },
+    tvf("graft_silhouette(table, k, iters)",
+        "simplified (centroid) silhouette clustering-quality scores per vector") {
+      a => Similarity.silhouette(a.rel(0), a.int(1), a.int(2)) },
+    tvf("graft_modularity(pairs_table, labels_table)", "Newman modularity of the label " +
+        "partition against the pair graph, one row per label") {
+      a => Components.modularity(a.rel(0), a.rel(1)) },
+    tvf("graft_crosstab(table, row_col, col_col, values_csv)", "contingency matrix with " +
+        "explicit comma-separated pivot values, cells zero-filled") {
+      a => Profile.crosstab(a.rel(0), a.str(1), a.str(2), a.str(3).split(",").toSeq) },
+    tvf("graft_containment_join(left_table, right_table, threshold)", "exact asymmetric " +
+        "containment of the (small) right side's docs in the left corpus") {
+      a => Dedup.containmentJoin(a.rel(0), a.rel(1), a.double(2)) },
+    tvf("graft_minhash_join(left_table, right_table)", "cross-corpus near-duplicate pairs: " +
+        "banded MinHash-LSH candidates verified by exact shingle Jaccard") {
+      a => Dedup.minhashJoin(a.rel(0), a.rel(1)) },
+    tvf("graft_curate(docs_table, bench_table)", "the end-to-end curation pipeline: gopher " +
+        "gate + exact/near dedup keepers + 5-gram decontamination flags per document") {
+      a => Curation.curate(a.rel(0), a.rel(1)) }
   )
 
   /** Register every table function on an already-built session. */
   def registerAll(spark: SparkSession): Unit = {
     val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.tableFunctionRegistry
-    all.foreach { case (id, inf, builder) =>
-      reg.registerFunction(id, inf, builder)
-    }
+    all.foreach { case (id, inf, builder) => reg.registerFunction(id, inf, builder) }
   }
 }
 
 object GraftFunctions {
 
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[PolyHash].getName.stripSuffix("PolyHash") + name,
-      null, name, usage, "", "", "", "", "", "", "built-in")
-
-  private def intArg(e: Expression, what: String): Int = e match {
-    case Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v
-    case other => throw new IllegalArgumentException(
-      s"$what must be an integer literal, got $other")
-  }
+  private def fn(sig: String, doc: String)(build: SqlDecl.Args => Expression)
+      : SqlDecl.Entry[Expression] =
+    SqlDecl(getClass, sig, doc)(build)
 
   val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("poly_hash"),
-      info("PolyHash", "poly_hash(str, seed) - seeded polynomial rolling hash mod 1e9+7"),
-      // widen integer-literal seeds: SQL `poly_hash(s, 0)` sends an INT
-      (exprs: Seq[Expression]) =>
-        PolyHash(exprs(0), Cast(exprs(1), org.apache.spark.sql.types.LongType))),
-    (FunctionIdentifier("minhash_sig"),
-      info("MinHashSig", "minhash_sig(text, k, n) - MinHash signature over k-token shingles"),
-      (exprs: Seq[Expression]) =>
-        MinHashSig(exprs(0), intArg(exprs(1), "shingle k"), intArg(exprs(2), "numHashes"))),
-    (FunctionIdentifier("simhash_sig"),
-      info("SimHashSig", "simhash_sig(text, k, bits) - SimHash signature over k-token shingles"),
-      (exprs: Seq[Expression]) =>
-        SimHashSig(exprs(0), intArg(exprs(1), "shingle k"), intArg(exprs(2), "bits"))),
-    (FunctionIdentifier("simhash_sig_wide"),
-      info("SimHashSigWide",
-        "simhash_sig_wide(text, k, seeds) - multi-seed wide SimHash as little-endian 64-bit words"),
-      (exprs: Seq[Expression]) =>
-        SimHashSigWide(exprs(0), intArg(exprs(1), "shingle k"), intArg(exprs(2), "seeds"))),
-    (FunctionIdentifier("sorted_jaccard"),
-      info("SortedArrayJaccard", "sorted_jaccard(a, b) - exact Jaccard of sorted distinct arrays"),
-      (exprs: Seq[Expression]) => SortedArrayJaccard(exprs(0), exprs(1))),
-    (FunctionIdentifier("char_ngram_codes"),
-      info("CharNgramCodes", "char_ngram_codes(text, n) - sorted distinct base-37 n-gram codes"),
-      (exprs: Seq[Expression]) => CharNgramCodes(exprs(0), intArg(exprs(1), "n-gram length"))),
-    (FunctionIdentifier("vec_cosine"),
-      info("VecCosine", "vec_cosine(a, b) - single-pass cosine similarity of numeric vectors"),
-      (exprs: Seq[Expression]) => VecCosine(exprs(0), exprs(1))),
-    (FunctionIdentifier("vec_sqdist"),
-      info("VecSqDist", "vec_sqdist(a, b) - single-pass squared L2 distance of numeric vectors"),
-      (exprs: Seq[Expression]) => VecSqDist(exprs(0), exprs(1))),
-    (FunctionIdentifier("vec_dot"),
-      info("VecDot", "vec_dot(a, b) - single-pass dot product of numeric vectors"),
-      (exprs: Seq[Expression]) => VecDot(exprs(0), exprs(1))),
-    (FunctionIdentifier("srp_bucket"),
-      info("SrpBucket", "srp_bucket(vec, planes) - signed-random-projection LSH bucket id"),
-      (exprs: Seq[Expression]) => SrpBucket(exprs(0), intArg(exprs(1), "planes")))
+    // widen integer-literal seeds: SQL `poly_hash(s, 0)` sends an INT
+    fn("poly_hash(str, seed)", "seeded polynomial rolling hash mod 1e9+7") {
+      a => PolyHash(a.expr(0), Cast(a.expr(1), LongType)) },
+    fn("minhash_sig(text, k, n)", "MinHash signature over k-token shingles") {
+      a => MinHashSig(a.expr(0), a.int(1), a.int(2)) },
+    fn("simhash_sig(text, k, bits)", "SimHash signature over k-token shingles") {
+      a => SimHashSig(a.expr(0), a.int(1), a.int(2)) },
+    fn("simhash_sig_wide(text, k, seeds)",
+        "multi-seed wide SimHash as little-endian 64-bit words") {
+      a => SimHashSigWide(a.expr(0), a.int(1), a.int(2)) },
+    fn("sorted_jaccard(a, b)", "exact Jaccard of sorted distinct arrays") {
+      a => SortedArrayJaccard(a.expr(0), a.expr(1)) },
+    fn("char_ngram_codes(text, n)", "sorted distinct base-37 n-gram codes") {
+      a => CharNgramCodes(a.expr(0), a.int(1)) },
+    fn("vec_cosine(a, b)", "single-pass cosine similarity of numeric vectors") {
+      a => VecCosine(a.expr(0), a.expr(1)) },
+    fn("vec_sqdist(a, b)", "single-pass squared L2 distance of numeric vectors") {
+      a => VecSqDist(a.expr(0), a.expr(1)) },
+    fn("vec_dot(a, b)", "single-pass dot product of numeric vectors") {
+      a => VecDot(a.expr(0), a.expr(1)) },
+    fn("srp_bucket(vec, planes)", "signed-random-projection LSH bucket id") {
+      a => SrpBucket(a.expr(0), a.int(1)) }
   )
 
   /** Register every function on an already-built session. */
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
+  def registerAll(spark: SparkSession): Unit = {
     val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
-    all.foreach { case (id, inf, builder) =>
-      reg.registerFunction(id, inf, builder)
-    }
+    all.foreach { case (id, inf, builder) => reg.registerFunction(id, inf, builder) }
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.core.{GraftTableFunctions, Tables}
+import graft.core.{GraftFunctions, GraftTableFunctions, Tables}
 
 /** The pure-SQL drivability contract: every graft_* table-valued function
   * must return EXACTLY what the Scala API call returns — same rows, same
@@ -91,7 +91,40 @@ class SqlSurfaceSpec extends SparkSpec {
     t.events.createOrReplaceTempView("sqlspec_events_ar")
     t.documents.select(explode(graft.pipeline.TextOps.tokens(col("text"))).as("term"))
       .createOrReplaceTempView("sqlspec_terms_s")
+    import graft.pipeline.WebOps
+    import spark.implicits._
+    // web pages: a url, a line of site chrome and one outlink mention each;
+    // fetches: one url per event on five domains
+    val d = col("doc_id")
+    val webDocs = t.documents.select(d,
+      concat(lit("https://www.d"), d % 7, lit(".com/p/"), d).as("url"),
+      concat(lit("home | about\n"), col("text"), lit("\nsee https://d"),
+        (d + 1) % 9, lit(".com/p/"), d % 50).as("text"))
+    webDocs.createOrReplaceTempView("sqlspec_webdocs_s")
+    val fetches = t.events.select(col("event_id"), col("ts"),
+      concat(lit("https://e"), col("user_id") % 5, lit(".co.uk/e/"),
+        col("event_id")).as("url"))
+    fetches.createOrReplaceTempView("sqlspec_fetches_s")
+    val robots = Seq(("d1.com", "disallow", "/p/1"), ("d1.com", "allow", "/p/13"))
+      .toDF("domain", "directive", "path_prefix")
+    robots.createOrReplaceTempView("sqlspec_robots_s")
     val cases: Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
+      "SELECT * FROM graft_line_dedup('sqlspec_webdocs_s', 3)" ->
+        graft.pipeline.TextOps.lineDedup(webDocs, boilerplateDf = 3),
+      "SELECT * FROM graft_line_clean('sqlspec_webdocs_s', 3)" ->
+        graft.pipeline.TextOps.lineClean(webDocs, boilerplateDf = 3),
+      "SELECT * FROM graft_link_graph('sqlspec_webdocs_s')" ->
+        WebOps.linkGraph(webDocs),
+      "SELECT * FROM graft_web_frontier('sqlspec_webdocs_s')" ->
+        WebOps.frontier(webDocs),
+      "SELECT * FROM graft_domain_boilerplate('sqlspec_webdocs_s', 0.6, 2)" ->
+        WebOps.domainBoilerplate(webDocs, minRatio = 0.6, minDocs = 2),
+      "SELECT * FROM graft_web_robots('sqlspec_webdocs_s', 'sqlspec_robots_s')" ->
+        WebOps.robotsEval(webDocs, robots),
+      "SELECT * FROM graft_crawl_rate('sqlspec_fetches_s', 3600000, 2)" ->
+        WebOps.crawlRate(fetches, windowMs = 3600000L, maxFetches = 2),
+      "SELECT * FROM graft_fetch_schedule('sqlspec_fetches_s', 60000)" ->
+        WebOps.fetchSchedule(fetches, delayMs = 60000L),
       "SELECT * FROM graft_hll_distinct('sqlspec_events_s', 10, 'event_type', 'user_id')" ->
         graft.pipeline.Sketches.hllDistinct(t.events, 10, Seq("event_type"), "user_id"),
       "SELECT * FROM graft_cms_topk('sqlspec_terms_s', 'term', 20)" ->
@@ -132,7 +165,6 @@ class SqlSurfaceSpec extends SparkSpec {
       concat(lit("u"), col("user_id")).as("series_id"),
       col("ts").cast("long").as("ts"), col("value"))
       .createOrReplaceTempView("sqlspec_points_h")
-    import spark.implicits._
     val pairsSweep = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L))
       .toDF("id_a", "id_b")
     pairsSweep.createOrReplaceTempView("sqlspec_pairs_s")
@@ -188,7 +220,13 @@ class SqlSurfaceSpec extends SparkSpec {
     docsDsir.createOrReplaceTempView("sqlspec_docs_dsir")
     val benchSweep = t.documents.where(col("doc_id") % 10 === 0)
     benchSweep.createOrReplaceTempView("sqlspec_bench_s")
+    // a frozen two-bucket logreg model (bias at b = -1)
+    val clfModel = Seq((-1, 0.1, 0.0, 1.0), (0, 0.5, 1.0, 2.0), (1, -0.25, 0.5, 1.5))
+      .toDF("b", "w", "mu", "sd")
+    clfModel.createOrReplaceTempView("sqlspec_clf_model")
     val curationCases: Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
+      "SELECT * FROM graft_clf_score('sqlspec_docs_s', 'sqlspec_clf_model')" ->
+        graft.pipeline.TextOps.logregScoreFrozen(t.documents, clfModel),
       "SELECT * FROM graft_dsir('sqlspec_docs_dsir', 'is_en', 50)" ->
         graft.pipeline.Sampling.dsirResample(docsDsir, col("is_en"), k = 50),
       "SELECT * FROM graft_curate('sqlspec_docs_s', 'sqlspec_bench_s')" ->
@@ -329,5 +367,58 @@ class SqlSurfaceSpec extends SparkSpec {
       spark.sql("SELECT * FROM graft_sessionize(upper('x'), 1)").collect()
     }
     assert(e.getMessage != null)
+  }
+
+  test("a wrong argument count fails at analysis with the function's signature") {
+    GraftTableFunctions.registerAll(spark)
+    Tables(spark, sfDir).documents.createOrReplaceTempView("sqlspec_arity")
+    for ((args, got) <- Seq("'table scan'" -> 2, "'table scan', 2, 99" -> 4)) {
+      val e = intercept[Exception] {
+        spark.sql(s"SELECT * FROM graft_bm25('sqlspec_arity', $args)").collect()
+      }
+      assert(e.getMessage.contains(
+        s"graft_bm25(table, query, k) takes 3 arguments, got $got"), e.getMessage)
+    }
+  }
+
+  test("one literal reader for both registries: type, int range and arity " +
+    "errors name the function") {
+    GraftFunctions.registerAll(spark)
+    GraftTableFunctions.registerAll(spark)
+    Tables(spark, sfDir).documents.createOrReplaceTempView("sqlspec_lit")
+    // (select list, None = analyzes, Some(fragment) = fails at analysis with it)
+    val table: Seq[(String, Option[String])] = Seq(
+      "minhash_sig('a b c', 2, 4)" -> None,
+      // a bigint literal is read where an int is expected when it fits
+      "minhash_sig('a b c', 2L, 4)" -> None,
+      "minhash_sig('a b c', 4294967298, 4)" ->
+        Some("minhash_sig(text, k, n): k = 4294967298 is outside the int range"),
+      "srp_bucket(array(1.0D), -2147483649)" ->
+        Some("srp_bucket(vec, planes): planes = -2147483649 is outside the int range"),
+      "char_ngram_codes('ab', 2.5)" ->
+        Some("char_ngram_codes(text, n): n must be an integer literal"),
+      "minhash_sig('a b c', 2)" ->
+        Some("minhash_sig(text, k, n) takes 3 arguments, got 2"),
+      "* FROM graft_bm25('sqlspec_lit', 'table scan', 2L)" -> None,
+      "* FROM graft_bm25('sqlspec_lit', 'table scan', 4294967298)" ->
+        Some("graft_bm25(table, query, k): k = 4294967298 is outside the int range"),
+      "* FROM graft_bm25('sqlspec_lit', 7, 2)" ->
+        Some("graft_bm25(table, query, k): query must be a string literal"),
+      "* FROM graft_sessionize('sqlspec_lit', 1.5)" ->
+        Some("graft_sessionize(table, gap_ns): gap_ns must be an integer literal"),
+      // a bigint literal is read where a double is expected, like an int;
+      // an out-of-range one then meets the operator's own range check
+      "* FROM graft_sample('sqlspec_lit', 'doc_id', 1L)" -> None,
+      "* FROM graft_sample('sqlspec_lit', 'doc_id', 3000000000)" ->
+        Some("fraction must be in [0,1], got 3.0E9"))
+    for ((select, expected) <- table) {
+      val sql = s"SELECT $select"
+      expected match {
+        case None => spark.sql(sql).schema
+        case Some(msg) =>
+          val e = intercept[Exception](spark.sql(sql))
+          assert(e.getMessage.contains(msg), s"$sql: ${e.getMessage}")
+      }
+    }
   }
 }
