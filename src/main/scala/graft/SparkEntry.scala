@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Sessions, Tables}
+import graft.functions.RpProject
 import graft.ops.{AsofJoin, Retention, Sessionize}
 import graft.pipeline.{Audio, Bpe, ChatOps, Components, Curation, Dedup, Export, IncrementalDedup, IncrementalSemDedup, Multimodal, Packing, Profile, Sampling, SemiStructured, Similarity, Sketches, TextCdc, TextOps, Video, WebOps}
 import graft.sources.{Netatmo, NetatmoSource}
@@ -52,17 +53,17 @@ object SparkEntry {
       "(a, c) -> (a * 31 + c) % 1000000007)"
 
   /** DuckDB twin of Similarity.randomProject(16, 64)'s projection list for
-    * a double-list variable `v` — sign literals from the SAME driver-side
-    * rpSign function that built the Spark expression, same left-to-right
-    * signed chain. Shared by vec_rp and sim_rp_topk so they cannot drift.
+    * a double-list variable `v` — sign literals from the SAME rpSign
+    * function the projection kernel reads, same left-to-right signed
+    * chain. Shared by vec_rp and sim_rp_topk so they cannot drift.
     */
   private def rpListSql(v: String): String = {
     val scale = math.sqrt(16.0)
     (0 until 16).map { o =>
       val chain = (0 until 64).map { i =>
         val t = s"$v[${i + 1}]"
-        if (i == 0) { if (Similarity.rpSign(o, i) > 0) t else s"(- $t)" }
-        else if (Similarity.rpSign(o, i) > 0) s"+ $t" else s"- $t"
+        if (i == 0) { if (RpProject.rpSign(o, i) > 0) t else s"(- $t)" }
+        else if (RpProject.rpSign(o, i) > 0) s"+ $t" else s"- $t"
       }.mkString(" ")
       s"($chain) / $scale"
     }.mkString(", ")
@@ -7095,9 +7096,9 @@ object SparkEntry {
         |FROM u JOIN st USING (dim)""".stripMargin,
 
     // Twin of Similarity.randomProject(16, 64): the sign literals come
-    // from the SAME driver-side rpSign function that built the Spark
-    // expression, and each output dim is the same left-to-right signed
-    // chain over v[1..64] — bit-identical accumulation in both engines.
+    // from the SAME rpSign function the projection kernel reads, and each
+    // output dim is the same left-to-right signed chain over v[1..64] —
+    // bit-identical accumulation in both engines.
     // Null vectors are dropped on BOTH sides (randomProject filters
     // them; without the WHERE this twin would emit 16 null rows per
     // null vector). A wrong-dim vector raises on the Spark side — the

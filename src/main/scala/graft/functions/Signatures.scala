@@ -971,10 +971,11 @@ case class VecSqDist(left: Expression, right: Expression)
   * form exploded k candidate rows per vector (each materializing the
   * vector array) through a sort-based struct-min aggregate and one
   * shuffle; this is a narrow map, zero shuffle, k·dim flops per row.
-  * Null semantics: a null/empty-model, a length-mismatched vector, or a
-  * null element yields NULL (the well-formed corpus never hits these; the
-  * degenerate struct-with-null-dist ordering of the aggregate form was
-  * never reachable for the same reason).
+  * Null semantics: an empty model, a length-mismatched vector, a null
+  * element, or a vector no centroid is strictly nearer than +Inf to (a
+  * NaN or infinite element) yields NULL (the well-formed corpus never hits
+  * these; the degenerate struct-with-null-dist ordering of the aggregate
+  * form was never reachable for the same reason).
   *
   * Codegen-real (not CodegenFallback): this projection IS the k-means /
   * PQ / IVF assignment hot path — a fallback put a virtual `eval` and an
@@ -988,8 +989,8 @@ case class VecSqDist(left: Expression, right: Expression)
 case class ArgminSqDist(child: Expression, clusters: Seq[Long],
     centroids: Seq[Seq[Double]])
     extends UnaryExpression {
-  require(clusters.nonEmpty && clusters.length == centroids.length,
-    s"argmin_sqdist needs matching non-empty clusters/centroids, got " +
+  require(clusters.length == centroids.length,
+    s"argmin_sqdist needs matching clusters/centroids, got " +
       s"${clusters.length}/${centroids.length}")
   require(clusters.sliding(2).forall(w => w.length < 2 || w(0) < w(1)),
     "argmin_sqdist centroids must be sorted by strictly increasing cluster id")
@@ -1053,7 +1054,8 @@ case class ArgminSqDist(child: Expression, clusters: Seq[Long],
       val getA = if (floatElems) s"(double) $a.getFloat" else s"$a.getDouble"
       // same loop as eval: centroid order, left-to-right element fold,
       // strict < keeps the first (lowest-id) minimum; any null element or
-      // length mismatch nulls the whole result mid-loop
+      // length mismatch nulls the whole result mid-loop, and no centroid
+      // below +Inf (NaN/Inf distances, empty model) leaves best at -1: null
       s"""
          |int $n = $a.numElements();
          |int $best = -1;
@@ -1069,6 +1071,7 @@ case class ArgminSqDist(child: Expression, clusters: Seq[Long],
          |  }
          |  if (!${ev.isNull} && $d < $bestD) { $bestD = $d; $best = $c; }
          |}
+         |if (!${ev.isNull} && $best < 0) ${ev.isNull} = true;
          |if (!${ev.isNull}) {
          |  ${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
          |    new Object[] { $idsRef[$best], $bestD });
@@ -1078,6 +1081,126 @@ case class ArgminSqDist(child: Expression, clusters: Seq[Long],
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+/** Johnson–Lindenstrauss sign projection of one vector in ONE pass:
+  * `rp[o] = (±v[0] ± v[1] ± … ± v[dIn−1]) / √dOut`, with the seeded signs
+  * of [[RpProject.rpSign]].
+  *
+  * Fold contract (bit-identical to the DuckDB twin that spells the chain
+  * out, and to the column-chain reference in SimilaritySpec): a float
+  * element widens to double; each component starts from its term 0 (not
+  * `0.0 +`, which would turn a leading −0.0 into +0.0), adds `(±x)` left
+  * to right, then divides by `√dOut`. A null element nulls every
+  * component (a null term nulls each sum); a vector that is not exactly
+  * `dIn` wide raises `randomProject: expected dim <dIn>, got <n>`.
+  *
+  * Codegen-real: the sign matrix is referenced, not inlined, so the plan
+  * and the generated source stay O(1) in dOut·dIn. [[doGenCode]] emits
+  * the same loop as `eval` (KernelCodegenSpec parity).
+  */
+case class RpProject(child: Expression, dOut: Int, dIn: Int)
+    extends UnaryExpression {
+  require(dOut >= 1, s"dOut must be positive, got $dOut")
+  require(dIn >= 1, s"dIn must be positive, got $dIn")
+
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"rp_project expects array<float|double>, got ${other.catalogString}")
+  }
+
+  private lazy val floatElems = child.dataType match {
+    case ArrayType(FloatType, _) => true
+    case _                       => false
+  }
+  private lazy val signs: Array[Array[Double]] =
+    Array.tabulate(dOut, dIn)(RpProject.rpSign)
+  private lazy val scale = math.sqrt(dOut.toDouble)
+
+  override protected def nullSafeEval(v: Any): Any = {
+    val a = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+    val n = a.numElements()
+    if (n != dIn) throw RpProject.widthError(dIn, n)
+    val x = new Array[Double](n)
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i)) return new GenericArrayData(new Array[Any](dOut))
+      x(i) = if (floatElems) a.getFloat(i).toDouble else a.getDouble(i)
+      i += 1
+    }
+    val out = new Array[Double](dOut)
+    var o = 0
+    while (o < dOut) {
+      val s = signs(o)
+      var acc = s(0) * x(0)
+      i = 1
+      while (i < n) { acc += s(i) * x(i); i += 1 }
+      out(o) = acc / scale
+      o += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => {
+      val signsRef = ctx.addReferenceObj("rpSigns", signs, "double[][]")
+      val n = ctx.freshName("n")
+      val x = ctx.freshName("x")
+      val hasNull = ctx.freshName("hasNull")
+      val scale = ctx.freshName("scale")
+      val out = ctx.freshName("out")
+      val o = ctx.freshName("o")
+      val i = ctx.freshName("i")
+      val s = ctx.freshName("s")
+      val acc = ctx.freshName("acc")
+      val getA = if (floatElems) s"(double) $a.getFloat" else s"$a.getDouble"
+      val arrayData = classOf[GenericArrayData].getName
+      s"""
+         |int $n = $a.numElements();
+         |if ($n != $dIn) throw graft.functions.RpProject$$.MODULE$$.widthError($dIn, $n);
+         |double[] $x = new double[$n];
+         |boolean $hasNull = false;
+         |for (int $i = 0; $i < $n && !$hasNull; $i++) {
+         |  if ($a.isNullAt($i)) $hasNull = true; else $x[$i] = $getA($i);
+         |}
+         |if ($hasNull) {
+         |  ${ev.value} = new $arrayData(new Object[$dOut]);
+         |} else {
+         |  double $scale = java.lang.Math.sqrt((double) $dOut);
+         |  double[] $out = new double[$dOut];
+         |  for (int $o = 0; $o < $dOut; $o++) {
+         |    double[] $s = $signsRef[$o];
+         |    double $acc = $s[0] * $x[0];
+         |    for (int $i = 1; $i < $n; $i++) $acc += $s[$i] * $x[$i];
+         |    $out[$o] = $acc / $scale;
+         |  }
+         |  ${ev.value} = new $arrayData($out);
+         |}
+       """.stripMargin
+    })
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object RpProject {
+
+  /** Fixed seeded ±1 sign for cell (o, i) of the random-projection matrix
+    * — plain integer avalanche computed on the JVM, so the kernel and the
+    * SQL twin's sign literals come from this one function (no cross-engine
+    * hash replication needed).
+    */
+  private[graft] def rpSign(o: Int, i: Int): Double = {
+    var h = o * 0x9E3779B9 + i * 0x85EBCA6B
+    h ^= h >>> 16; h *= 0x7FEB352D; h ^= h >>> 15
+    if ((h & 1) == 0) 1.0 else -1.0
+  }
+
+  def widthError(dIn: Int, n: Int): IllegalArgumentException =
+    new IllegalArgumentException(s"randomProject: expected dim $dIn, got $n")
 }
 
 /** Hamming distance of two packed signature word arrays in ONE pass —
@@ -1229,6 +1352,9 @@ object Signatures {
 
   def vecDot(a: Column, b: Column): Column =
     GraftBridge.column(VecDot(GraftBridge.expression(a), GraftBridge.expression(b)))
+
+  def rpProject(vec: Column, dOut: Int, dIn: Int): Column =
+    GraftBridge.column(RpProject(GraftBridge.expression(vec), dOut, dIn))
 
   def argminSqDist(vec: Column, clusters: Seq[Long],
       centroids: Seq[Seq[Double]]): Column =

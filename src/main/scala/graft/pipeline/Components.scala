@@ -1,7 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** Connected components over an edge list, and the dedup-cluster resolution
   * built on it (near-dup PAIRS → duplicate GROUPS → canonical keeper).
@@ -25,6 +27,13 @@ import org.apache.spark.sql.functions._
   */
 object Components {
 
+  /** Edge count up to which a graph's iteration working set is one
+    * in-memory task (16 B per long pair ⇒ ≤ ~3 MB): [[connectedComponents]]
+    * runs its union-find tail and [[pageRank]] all of its rounds in one
+    * `mapPartitions` task over `coalesce(1)` at or below it.
+    */
+  private[pipeline] val SmallEdgeBound = 200000L
+
   /** Connected components of the undirected graph given as an edge list.
     * Returns one row per non-isolated vertex: (id, component), where
     * `component` is the smallest vertex id in the component. Vertices not
@@ -46,9 +55,8 @@ object Components {
     // partitions). At scale the early rounds stay wide and only the
     // converged tail collapses — the same adaptive idea as AQE coalescing,
     // driven by the exact count the convergence probe already pays for.
-    val smallEdgeBound = 200000L
     def shape(df: DataFrame, edgeCount: Long): DataFrame =
-      if (edgeCount <= smallEdgeBound) df.coalesce(1) else df
+      if (edgeCount <= SmallEdgeBound) df.coalesce(1) else df
 
     val tIn = System.nanoTime()
     // One eager checkpoint materializes the (possibly expensive) upstream
@@ -85,7 +93,7 @@ object Components {
     // 84/71/140 jobs — with executor task time under 10% of wall). A
     // single mapPartitions over the coalesced edges runs union-find to the
     // SAME fixpoint (component = min member id, integers, no float order)
-    // in one job with zero driver materialization: ≤ smallEdgeBound edges
+    // in one job with zero driver materialization: ≤ SmallEdgeBound edges
     // (16 B each ⇒ ≤ ~3 MB) is one in-memory task by the same bound that
     // already reshaped these rounds to one partition. Above the bound the
     // star rounds run unchanged and the tail switch engages only after
@@ -121,7 +129,7 @@ object Components {
     var sig = probe(cur)
     if (sys.env.contains("GRAFT_CC_DEBUG"))
       System.err.println(s"[cc] init edges=${sig._1} t=${(System.nanoTime() - t0) / 1e6} ms")
-    if (sig._1 > 0L && sig._1 <= smallEdgeBound) return unionFindTail(cur)
+    if (sig._1 > 0L && sig._1 <= SmallEdgeBound) return unionFindTail(cur)
     cur = shape(cur, sig._1)
     var it = 0
     var done = sig._1 == 0L
@@ -155,7 +163,7 @@ object Components {
       // the star transforms preserve the component partition AND keep every
       // non-isolated vertex as an endpoint, so the single-task fixpoint on
       // the contracted edge set labels identically to more star rounds
-      if (!done && nsig._1 > 0L && nsig._1 <= smallEdgeBound)
+      if (!done && nsig._1 > 0L && nsig._1 <= SmallEdgeBound)
         return unionFindTail(cur)
       if (sys.env.contains("GRAFT_CC_DEBUG"))
         System.err.println(s"[cc] round $it edges=${nsig._1} done=$done " +
@@ -228,22 +236,6 @@ object Components {
         (col("id") === col("component")).as("is_canonical"))
   }
 
-  /** PageRank over an undirected edge list (symmetrized, deduplicated):
-    * `iters` rounds of `r = (1−d)/N + d·Σ r_nbr/deg_nbr` over the nodes
-    * that appear in at least one edge — on a near-dup graph this ranks
-    * cluster centrality, a keeper-selection signal richer than
-    * smallest-id. Isolated documents never enter (their rank is the
-    * uniform floor by definition).
-    *
-    * Scale shape per round: one edge-keyed join against the (node, rank)
-    * table and one partial-combined sum on the destination key — the
-    * standard distributed PageRank step; the per-round
-    * [[graft.core.Lineage.truncate]] truncates plan lineage exactly as in
-    * [[graft.pipeline.Similarity.kmeans]] (without it round r re-executes
-    * every earlier round; reliable `checkpoint()` when the session has a
-    * checkpoint dir, `localCheckpoint()` otherwise). `N` is collected once
-    * (metadata-scale: one count of the node table).
-    */
   /** Per-node triangle participation and local clustering coefficient over
     * an undirected graph — the structural diagnostic of a near-dup graph:
     * high-triangle nodes sit inside genuinely duplicated content families
@@ -321,17 +313,88 @@ object Components {
           .otherwise(lit(0.0)))
   }
 
+  /** Both orientations of every edge, deduplicated and materialized once:
+    * the incoming `edges` plan can be arbitrarily expensive (the near-dup
+    * graph is a whole LSH pipeline), and every round reads the result. One
+    * explode, not a self-union — a union references the upstream plan
+    * twice and executes it twice (cross-branch reuse never fires on
+    * differing projections), the same fix as [[degreeDistribution]].
+    */
+  private[graft] def symmetrize(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    graft.core.Lineage.truncate(
+      edges.select(explode(array(
+          struct(col(srcCol).as("src"), col(dstCol).as("dst")),
+          struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("e"))
+        .select(col("e.src"), col("e.dst"))
+        .distinct())
+
+  /** PageRank over an undirected edge list (symmetrized, deduplicated):
+    * `iters` rounds of `r = (1−d)/N + d·Σ r_nbr/deg_nbr` over the nodes
+    * that appear in at least one edge — on a near-dup graph this ranks
+    * cluster centrality, a keeper-selection signal richer than
+    * smallest-id. Isolated documents never enter (their rank is the
+    * uniform floor by definition). Output: (doc_id, deg, rank).
+    *
+    * Scale shape: the symmetrized edge list is materialized and counted
+    * once. At or below [[SmallEdgeBound]] edges — the bound
+    * [[connectedComponents]] uses for its union-find tail — every round
+    * runs in ONE `mapPartitions` task over `coalesce(1)`: the rounds on a
+    * near-dup graph of a few hundred edges are pure scheduling otherwise
+    * (a join, an aggregate and a checkpoint per round on a table of a
+    * few dozen rows). Above the bound each round is one edge-keyed join
+    * against the (node, rank) table and one partial-combined sum on the
+    * destination key — the standard distributed PageRank step — with
+    * per-round [[graft.core.Lineage.truncate]] as in
+    * [[graft.pipeline.Similarity.kmeans]] (without it round r re-executes
+    * every earlier round; reliable `checkpoint()` when the session has a
+    * checkpoint dir, `localCheckpoint()` otherwise).
+    */
   def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85,
       srcCol: String = "id_a", dstCol: String = "id_b"): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
-    // materialize the symmetrized edge list once: the incoming `edges` plan
-    // can be arbitrarily expensive (the near-dup graph is a whole LSH
-    // pipeline), and without this every round's contrib join re-executes it
-    val sym = graft.core.Lineage.truncate(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-        .unionByName(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-        .distinct())
+    val sym = symmetrize(edges, srcCol, dstCol)
+    if (sym.count() <= SmallEdgeBound) pageRankOneTask(sym, iters, damping)
+    else pageRankRounds(sym, iters, damping)
+  }
+
+  /** All PageRank rounds over the materialized symmetric edges `sym`
+    * (src, dst) in one task, with the distributed rounds' double-op
+    * sequence: `rank / deg` contributions summed per destination, then
+    * `(1−d)/N + d·c`. Edges are sorted by (dst, src) inside the task, so
+    * each sum runs in one fixed order whatever the input layout.
+    */
+  private[graft] def pageRankOneTask(sym: DataFrame, iters: Int,
+      damping: Double): DataFrame = {
+    val schema = StructType(Seq(sym.schema("src").copy(name = "doc_id"),
+      StructField("deg", LongType, nullable = false),
+      StructField("rank", DoubleType, nullable = false)))
+    sym.coalesce(1).sortWithinPartitions("dst", "src")
+      .mapPartitions { rows =>
+        val index = new java.util.HashMap[Any, Int]()
+        val ids = scala.collection.mutable.ArrayBuffer[Any]()
+        def node(id: Any): Int =
+          index.computeIfAbsent(id, _ => { ids += id; ids.size - 1 })
+        val edges = rows.map(r => (node(r.get(0)), node(r.get(1)))).toArray
+        val n = ids.size
+        val deg = new Array[Long](n)
+        edges.foreach { case (s, _) => deg(s) += 1 }
+        var rank = Array.fill(n)(1.0 / n)
+        for (_ <- 1 to iters) {
+          val c = new Array[Double](n)
+          edges.foreach { case (s, d) => c(d) += rank(s) / deg(s) }
+          rank = c.map(x => (1 - damping) / n + damping * x)
+        }
+        Iterator.tabulate(n)(v => Row(ids(v), deg(v), rank(v)))
+      }(RowEncoder.encoderFor(schema))
+  }
+
+  /** The distributed PageRank rounds over the materialized symmetric
+    * edges `sym` (src, dst): one join and one partial-combined sum per
+    * round, lineage-truncated per round.
+    */
+  private[graft] def pageRankRounds(sym: DataFrame, iters: Int,
+      damping: Double): DataFrame = {
     val deg = graft.core.Lineage.truncate(
       sym.groupBy("src").agg(count(lit(1)).as("deg")))
     val n = deg.count()
@@ -379,10 +442,7 @@ object Components {
       srcCol: String = "id_a", dstCol: String = "id_b",
       idCol: String = "doc_id", labelCol: String = "label"): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val sym = graft.core.Lineage.truncate(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-        .unionByName(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-        .distinct())
+    val sym = symmetrize(edges, srcCol, dstCol)
     val nodes = sym.select(col("src").as("id")).distinct()
     val seed = graft.core.Lineage.truncate(
       seeds.select(col(idCol).as("id"), col(labelCol).as("seed_label")))

@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.expressions.KnownNotNull
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -655,17 +656,6 @@ object Similarity {
         transform(col("__pm"), p => p.getField("__z")).as("zvec"))
   }
 
-  /** Fixed seeded ±1 sign for cell (o, i) of the random-projection matrix
-    * — plain integer avalanche computed on the DRIVER, so the Spark plan
-    * and the SQL twin both receive identical sign literals (no cross-
-    * engine hash replication needed).
-    */
-  private[graft] def rpSign(o: Int, i: Int): Double = {
-    var h = o * 0x9E3779B9 + i * 0x85EBCA6B
-    h ^= h >>> 16; h *= 0x7FEB352D; h ^= h >>> 15
-    if ((h & 1) == 0) 1.0 else -1.0
-  }
-
   /** Johnson–Lindenstrauss random projection to `dOut` dimensions with a
     * seeded ±1 sign matrix (Achlioptas 2003: the dense Gaussian matrix can
     * be replaced by independent signs with the same distance-preservation
@@ -675,41 +665,27 @@ object Similarity {
     * data's top direction, PQ learns codebooks; this needs no pass over
     * the data at all).
     *
-    * `rp[o] = Σ_i sign(o,i) · v[i] / √dOut` is emitted as one UNROLLED
-    * codegen expression per output dimension — signed element sums in
-    * fixed left-to-right order, so the accumulation order is pinned and
-    * the doubles are bit-identical cross-engine (the twin spells out the
-    * same chain). Map-only: no shuffle, no state, nothing collected.
+    * `rp[o] = Σ_i sign(o,i) · v[i] / √dOut` is one
+    * [[graft.functions.RpProject]] kernel call per vector. Its fold
+    * contract pins the accumulation order: each component starts from its
+    * term 0, adds `(±x)` left to right in double precision, then divides
+    * by `√dOut`, so the doubles are bit-identical cross-engine (the twin
+    * spells out the same chain). A null element nulls every component.
+    * Map-only: no shuffle, no state, nothing collected; null vectors are
+    * dropped.
     *
-    * Rows whose vector is not exactly `dIn` wide raise (a silent
-    * element_at null would zero-poison the projection — same contract as
+    * Rows whose vector is not exactly `dIn` wide raise
+    * `randomProject: expected dim <dIn>, got <n>` (a silent null would
+    * zero-poison the projection — same contract as
     * `hammingNearDupsWide`'s width check).
     */
   def randomProject(corpus: DataFrame, dOut: Int = 16, dIn: Int = 64,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    require(dOut >= 1, s"dOut must be positive, got $dOut")
-    require(dIn >= 1, s"dIn must be positive, got $dIn")
-    val checked = corpus
-      .select(col(idCol).as("vec_id"), col(vecCol).as("__v"))
-      .where(col("__v").isNotNull)
-      .withColumn("__v",
-        when(size(col("__v")) === dIn, col("__v"))
-          .otherwise(raise_error(format_string(
-            s"randomProject: expected dim $dIn, got %s", size(col("__v"))))))
-    val scale = math.sqrt(dOut.toDouble)
-    // NOTE (r14-opt): tried the single-element-transform let-binding idiom
-    // here (the registeredDomain lesson) to stop CollapseProject inlining
-    // the width-check into every element_at — it was SLOWER (interpreted
-    // HOF body vs Spark's method-split codegen of the unrolled tree:
-    // sim_rp_topk 3.0 → 3.5 s). The inlined width-check is size()+branch
-    // per term, which codegen handles fine; keep the unrolled form.
-    val outs = (0 until dOut).map { o =>
-      (0 until dIn).map { i =>
-        val e = element_at(col("__v"), i + 1).cast("double")
-        if (rpSign(o, i) > 0) e else -e
-      }.reduceLeft(_ + _) / lit(scale)
-    }
-    checked.select(col("vec_id"), array(outs: _*).as("rp"))
+    // the filter drops null vectors, so the kernel's input is known
+    // non-null and `rp` stays a non-nullable column
+    val v = GraftBridge.column(KnownNotNull(GraftBridge.expression(col(vecCol))))
+    corpus.where(col(vecCol).isNotNull).select(col(idCol).as("vec_id"),
+      graft.functions.Signatures.rpProject(v, dOut, dIn).as("rp"))
   }
 
   /** RP-shortlisted exact top-k: score candidates in the `dOut`-dim
@@ -724,7 +700,7 @@ object Similarity {
     * and the refine join touches `shortlist` rows per query.
     *
     * Both rankings break ties (sim desc, id asc) on bit-identical doubles
-    * (pinned projection chain, single-pass cosine), so the shortlist cut
+    * (pinned projection fold, single-pass cosine), so the shortlist cut
     * is deterministic cross-engine.
     */
   def rpTopK(queries: DataFrame, corpus: DataFrame, k: Int, shortlist: Int,

@@ -240,6 +240,35 @@ class ComponentsSpec extends SparkSpec {
     expect.foreach { case (v, r) => assert(math.abs(shuffled(v) - r) < 1e-12) }
   }
 
+  test("pageRank's one-task and distributed rounds both match the dense reference on messy random graphs") {
+    val rnd = new scala.util.Random(23)
+    for (trial <- 0 until 3) {
+      // three components on disjoint id ranges (more where the random
+      // edges leave gaps), then duplicated, reversed and self-loop edges
+      val base = (0 until 3).flatMap { c =>
+        Seq.fill(25)((c * 1000L + rnd.nextInt(15), c * 1000L + rnd.nextInt(15)))
+      }
+      val edges = base ++ base.take(10) ++ base.takeRight(10).map(_.swap) ++
+        Seq((5L, 5L), (1003L, 1003L), (2999L, 2999L))
+      val expect = brutePageRank(edges, 4)
+      val expectDeg = (edges ++ edges.map(_.swap)).distinct.groupBy(_._1)
+        .view.mapValues(_.size.toLong).toMap
+      val sym = Components.symmetrize(edges.toDF("id_a", "id_b"), "id_a", "id_b")
+      val oneTask = Components.pageRankOneTask(sym, 4, 0.85)
+      val rounds = Components.pageRankRounds(sym, 4, 0.85)
+      assert(oneTask.schema == rounds.schema, s"trial $trial")
+      for ((path, df) <- Seq("one task" -> oneTask, "rounds" -> rounds)) {
+        val got = df.collect().map(r => r.getAs[Long]("doc_id") ->
+          ((r.getAs[Long]("deg"), r.getAs[Double]("rank")))).toMap
+        assert(got.keySet == expect.keySet, s"trial $trial $path")
+        expect.foreach { case (v, r) =>
+          assert(got(v)._1 == expectDeg(v), s"trial $trial $path node $v deg")
+          assert(math.abs(got(v)._2 - r) < 1e-12, s"trial $trial $path node $v")
+        }
+      }
+    }
+  }
+
   test("reliable-checkpoint mode: identical components and ranks, blocks on disk") {
     // Same computations with a checkpoint dir configured: Lineage.truncate
     // must switch every iterative truncation to cluster-durable

@@ -46,6 +46,14 @@ class KernelCodegenSpec extends SparkSpec {
     assert(gen.nonEmpty)
   }
 
+  /** One row per expression, in column `v`. Each row's value depends on
+    * `id`, so the optimizer cannot fold a kernel over it to a literal (a
+    * folded kernel runs interpreted `eval` in both modes).
+    */
+  private def rowsPerExpr(s: SparkSession, exprs: String*): DataFrame =
+    s.range(exprs.size).selectExpr("id", exprs.zipWithIndex
+      .map { case (e, i) => s"WHEN $i THEN $e" }.mkString("CASE id ", " ", " END AS v"))
+
   /** Adversarial vector pairs: float×double mixes, equal/mismatched
     * lengths, empties, zero norms, NaN/Inf elements, null elements, null
     * arrays — every branch of the three vector kernels.
@@ -233,6 +241,70 @@ class KernelCodegenSpec extends SparkSpec {
         .map(r => r.getSeq[Double](1).toSeq).toSeq
       emb.select(emb("vec_id"),
         Signatures.argminSqDist(emb("v"), Seq(0L, 1L, 2L, 3L), cents).as("m"))
+    }
+  }
+
+  test("ArgminSqDist: no centroid nearer than +Inf is null in both modes (NaN, +Inf, zero centroids)") {
+    // a NaN or infinite distance never passes the strict < against the
+    // +Inf start, so no centroid wins; neither does an empty model
+    val clusters = Seq(2L, 5L)
+    val cents = Seq(Seq(1.0, 2.0, 3.0), Seq(0.0, 0.0, 0.5))
+    def build(s: SparkSession) = {
+      val df = rowsPerExpr(s,
+        "array(cast('NaN' as double), 1.0d, 2.0d)",
+        "array(1.0d, cast('Infinity' as double), 2.0d)",
+        "array(cast('-Infinity' as double), 1.0d, 2.0d)",
+        "array(1.0d, 2.0d, 3.0d)")
+      df.select(df("id"),
+        Signatures.argminSqDist(df("v"), clusters, cents).as("m"),
+        Signatures.argminSqDist(df("v"), Nil, Nil).as("m_none"))
+    }
+    assertParity(build)
+    val got = inMode(codegen = true)(s => build(s).orderBy("id").collect())
+    assert(got.take(3).forall(_.isNullAt(1)), got.toSeq)
+    assert(got(3).getStruct(1).getLong(0) == 2L)
+    assert(got.forall(_.isNullAt(2)), got.toSeq)
+  }
+
+  test("RpProject codegen == interpreted (float/double, NaN, ±Inf, -0.0, null element, null array)") {
+    def vec(f: String) = s"transform(sequence(1, 64), i -> $f)"
+    assertParity { s =>
+      val df = rowsPerExpr(s,
+        vec("sin(i * 1.7d) * 3.0d"),
+        vec("if(i = 5, cast('NaN' as double), i * 0.5d)"),
+        vec("if(i = 9, cast('Infinity' as double), i * 0.5d)"),
+        vec("if(i = 1, cast('-Infinity' as double), i * 0.5d)"),
+        vec("if(i = 2, cast('Infinity' as double), if(i = 3, cast('-Infinity' as double), 1.0d))"),
+        vec("-0.0d"),
+        vec("if(i = 20, cast(null as double), i * 0.5d)"),
+        "cast(null as array<double>)")
+      df.select(df("id"),
+        Signatures.rpProject(df("v"), 16, 64).as("rp_d"),
+        Signatures.rpProject(df("v").cast("array<float>"), 16, 64).as("rp_f"),
+        Signatures.rpProject(df("v"), 3, 64).as("rp_d3"))
+    }
+  }
+
+  test("RpProject codegen == interpreted over real embeddings") {
+    assertParity { s =>
+      val emb = s.read.parquet(s"$sfDir/embeddings.parquet")
+        .selectExpr("vec_id", "embedding").orderBy("vec_id").limit(64)
+      emb.select(emb("vec_id"),
+        Signatures.rpProject(emb("embedding"), 16, 64).as("rp"),
+        Signatures.rpProject(emb("embedding").cast("array<double>"), 16, 64).as("rp_d"))
+    }
+  }
+
+  test("RpProject: a wrong width fails with the named error in both modes") {
+    for (codegen <- Seq(true, false)) {
+      val ex = intercept[Exception](inMode(codegen) { s =>
+        val df = rowsPerExpr(s, "array(1.0d, 2.0d, 3.0d)")
+        df.select(Signatures.rpProject(df("v"), 16, 64)).collect()
+      })
+      val msgs = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+        .map(e => String.valueOf(e.getMessage))
+      assert(msgs.exists(_.contains("randomProject: expected dim 64, got 3")),
+        s"codegen=$codegen: $ex")
     }
   }
 }

@@ -12,10 +12,12 @@ import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.core.Tables
+import graft.pipeline.Dedup
 import graft.ts.{Evaluate, SeriesStore}
 import graft.ts.model.Period
 
@@ -35,6 +37,10 @@ class PlanSpec extends SparkSpec {
   /** Shuffle exchanges of a physical plan, inside adaptive query stages too. */
   private def shuffles(plan: SparkPlan): Seq[ShuffleExchangeExec] =
     Aqe.collect(plan) { case e: ShuffleExchangeExec => e }
+
+  /** Join operators of a physical plan, inside adaptive query stages too. */
+  private def joins(plan: SparkPlan): Int =
+    Aqe.collect(plan) { case j: BaseJoinExec => j }.size
 
   /** The Spark jobs `body` runs and the SQL executions it completes.
     * Listener events arrive asynchronously but in order, so a marker query
@@ -625,12 +631,36 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("Join"), plan.take(3000))
   }
 
-  test("random projection is map-only: the unrolled chain rides the scan in codegen") {
+  test("random projection is map-only: the projection kernel rides the scan in codegen") {
     val plan = planOf(SparkEntry.queries("vec_rp")(spark, sfDir))
     assert(!plan.contains("Exchange"), s"map-only, got:\n${plan.take(3000)}")
+    assert(plan.contains("rpproject(") && !plan.contains("element_at"), plan.take(3000))
     // the "*(n)" stage marker is how executedPlan.toString shows a
     // WholeStageCodegen span
     assert(plan.contains("*(1)"), plan.take(3000))
+  }
+
+  test("graph operators symmetrize the near-dup graph in one pass over the pair pipeline") {
+    // a self-union of the pair list runs the whole pair pipeline (the
+    // candidate join and the shingle-set verify) once per branch; the
+    // symmetric edge materialization must run exactly the pair list's joins
+    // (both counted in the final adaptive plan of an executed query)
+    val (_, pairPlans) = observe(
+      Dedup.minhashNearDups(Tables(spark, sfDir).documents).collect())
+    val pairJoins = pairPlans.map(qe => joins(qe.executedPlan)).max
+    assert(pairJoins > 0)
+    for (q <- Seq("graph_pagerank", "graph_labelprop")) {
+      val (_, plans) = observe(SparkEntry.queries(q)(spark, sfDir))
+      val most = plans.map(qe => joins(qe.executedPlan)).max
+      assert(most == pairJoins, s"$q: a construction plan runs $most joins, " +
+        s"the pair list $pairJoins")
+    }
+  }
+
+  test("graph_pagerank at sf0.01 builds with at most 12 jobs: a small graph ranks in one task") {
+    val sf001 = s"${new java.io.File(sfDir).getParent}/sf0.01"
+    val (jobs, _) = observe(SparkEntry.queries("graph_pagerank")(spark, sf001))
+    assert(jobs <= 12, s"graph_pagerank construction ran $jobs jobs")
   }
 
   test("rpTopK broadcasts the query side everywhere: no cartesian pair scan") {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.{RpProject, Signatures}
 import graft.pipeline.Similarity
 
 /** Similarity search: centroid training must be dimension-agnostic (the
@@ -852,12 +853,12 @@ class SimilaritySpec extends SparkSpec {
         r.getAs[scala.collection.Seq[Double]]("rp").toArray).toMap
     assert(got.size == 30)
     assert(got(1L).length == 16)
-    // exact replay of the unrolled left-assoc chain
+    // exact replay of the left-assoc signed chain
     def rpLocal(v: Array[Float]): Array[Double] =
       Array.tabulate(16) { o =>
         (0 until 64).map { i =>
           val e = v(i).toDouble
-          if (Similarity.rpSign(o, i) > 0) e else -e
+          if (RpProject.rpSign(o, i) > 0) e else -e
         }.reduceLeft(_ + _) / 4.0
       }
     vecs.foreach { case (id, v) =>
@@ -881,6 +882,40 @@ class SimilaritySpec extends SparkSpec {
     val ex = intercept[Exception](Similarity.randomProject(bad).collect())
     assert(ex.getMessage.contains("randomProject") ||
       Option(ex.getCause).exists(_.getMessage.contains("randomProject")))
+  }
+
+  test("randomProject kernel is bit-identical to the unrolled column chain it replaced (sf0.001 embeddings)") {
+    // the reference: the column chain randomProject emitted before the
+    // kernel — per output dim, 64 signed element_at terms summed left to
+    // right, then / √16
+    def chain(v: org.apache.spark.sql.Column) = array((0 until 16).map { o =>
+      (0 until 64).map { i =>
+        val e = element_at(v, i + 1).cast("double")
+        if (RpProject.rpSign(o, i) > 0) e else -e
+      }.reduceLeft(_ + _) / lit(math.sqrt(16.0))
+    }: _*)
+    def bits(df: org.apache.spark.sql.DataFrame) = df.collect().map(r => r.get(0) ->
+      r.getSeq[java.lang.Double](1).map(d =>
+        Option(d).map(x => java.lang.Double.doubleToRawLongBits(x)))).toMap
+    val e = emb.where(col("embedding").isNotNull)
+    // float elements, the same widened to double, and a null element on
+    // every third vector (which nulls all 16 components)
+    val inputs = Seq(
+      col("embedding"),
+      col("embedding").cast("array<double>"),
+      transform(col("embedding"), (x, i) =>
+        when(i === 7 && col("vec_id") % 3 === 0, lit(null)).otherwise(x)))
+    val projected = inputs.map { v =>
+      val in = e.select(col("vec_id"), v.as("embedding"))
+      val got = Similarity.randomProject(in)
+      val ref = in.select(col("vec_id"), chain(col("embedding")).as("rp"))
+      assert(got.schema == ref.schema)
+      val (g, r) = (bits(got), bits(ref))
+      assert(g.size == e.count() && g == r)
+      g
+    }
+    assert(projected(2).values.count(_.forall(_.isEmpty)) ==
+      e.where(col("vec_id") % 3 === 0).count(), "a null element nulls every component")
   }
 
   test("isotropy: identical corpus saturates at cos 1; orthogonal one-hots read 0 with exact anisotropy") {
