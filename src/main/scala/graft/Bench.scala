@@ -1,4 +1,6 @@
 package graft
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -133,15 +135,23 @@ object Bench {
         System.err.println(s"[bench] gate baseline: $latest (no pin found)")
         readTimes(latest)
       }
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // A query that throws has no time: it is listed under "failed" in the
+    // sidecar and on stderr, never recorded as a timing.
+    val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      (System.nanoTime() - t0) / 1e9
+      try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[bench] FAILED $name: $e")
+        failures(name) = String.valueOf(e)
+        None
+      }
     }
-    val firstPass = selected.map { case (name, fn) =>
-      val sec = timeOnce(fn)
-      System.err.println(f"[bench] $name%-24s $sec%8.2f s")
-      (name, fn, sec)
+    val firstPass = selected.flatMap { case (name, fn) =>
+      timeOnce(name, fn).map { sec =>
+        System.err.println(f"[bench] $name%-24s $sec%8.2f s")
+        (name, fn, sec)
+      }
     }
     // Contention sanity gate (asked for by the r9 AND r10 verdicts after
     // phantom 5-7× rows sailed into two certified artifacts): a query
@@ -168,7 +178,7 @@ object Bench {
         var best = sec
         var tries = 0
         while (tries < 2 && best > 2 * prev * calRatio) {
-          best = math.min(best, timeOnce(fn)); tries += 1
+          timeOnce(name, fn).foreach(t => best = math.min(best, t)); tries += 1
         }
         rerunLog += ((name, sec, best, prev))
         if (best > 2 * prev * calRatio)
@@ -186,10 +196,13 @@ object Bench {
     val reruns = rerunLog.result().map { case (n, first, best, prev) =>
       s"\"$n\":{\"first\":$first,\"kept\":$best,\"prev\":$prev}"
     }.mkString("{", ",", "}")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val failed = failures.map { case (n, e) => s"\"$n\":${mapper.writeValueAsString(e)}" }
+      .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val calAfter = calibrate()
     System.err.println(f"[bench] calibration_after $calAfter%.3f s")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"reruns":$reruns,"calibration_before":$calBefore,"calibration_after":$calAfter,"cal_ratio_vs_pin":$calRatio,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"reruns":$reruns,"failed":$failed,"calibration_before":$calBefore,"calibration_after":$calAfter,"cal_ratio_vs_pin":$calRatio,"sf":"$sfDir"}"""
     println(json)
     // Durable sidecar with ALL per-query timings: the driver's artifact
     // collector keeps only a tail of stdout, which has silently dropped the

@@ -28,13 +28,19 @@ final case class AbsolutePeriod(startNs: Long, endNs: Long) extends CollectionPe
 
 /** The read→store ETL task (reference: weather/service/data_collection_task.py:73-150):
   * evaluate the source ids over the collection window, re-key onto the
-  * paired store ids (positional zip in the reference → an explicit ordinal
-  * map here, SURVEY.md §2.3 J2), and merge-store (K1, last-wins).
+  * paired store ids, and merge-store (K1, last-wins). The re-key is the
+  * reference's positional zip: the point rows of request position `i`
+  * (their `ordinal`) go to `storeIds(i)`, a literal array lookup — so a
+  * read id listed twice feeds each of its store ids once, never a cross
+  * product (SURVEY.md §2.3 J2).
   *
   * `collectOnce` is one micro-batch; the scheduler (ServiceManager or
   * Structured Streaming foreachBatch) decides cadence. Non-fatal errors are
   * logged and swallowed — at-least-once, skip-on-failure (T5); fatal errors
-  * and interrupts propagate.
+  * and interrupts propagate. Health is read off the task: `lastError`,
+  * `batchesOk`, and for the last successful batch its point count, its
+  * collection time and its latency — all from values the cycle computes
+  * anyway, so they cost no Spark job.
   */
 final class CollectionTask(
     val name: String,
@@ -49,23 +55,31 @@ final class CollectionTask(
 
   @volatile var lastError: Option[Throwable] = None
   @volatile var batchesOk: Long = 0L
+  /** Points in the last merged batch (the merge's bucket probe counts them). */
+  @volatile var lastBatchPoints: Long = 0L
+  /** The `nowNs` of the last successful collection; 0 before the first. */
+  @volatile var lastSuccessNs: Long = 0L
+  /** Wall time of the last successful `collectOnce`, in ms. */
+  @volatile var lastLatencyMs: Double = 0.0
 
   def collectOnce(spark: SparkSession, nowNs: Long): Unit =
     try {
+      val t0 = System.nanoTime()
       val p = period.periodAt(nowNs)
       // Persist the batch: the merge's bucket probe fills the cache and its
       // write reads it, so an API-backed read hits the source once per
       // collection. An empty window is a no-op merge.
       val data = evaluate.evaluate(spark, readIds, p)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val mapping = spark.createDataFrame(readIds.zip(storeIds))
-          .toDF("series_id", "__store_id")
-        val rekeyed = data.join(broadcast(mapping), Seq("series_id"))
-          .select(col("__store_id").as("series_id"), col("ts"), col("value"))
-        store.merge(container, rekeyed, overwrite = false)
-      } finally data.unpersist()
+      val rekeyed = data.select(typedLit(storeIds).getItem(col("ordinal")).as("series_id"),
+        col("ts"), col("value"))
+      val merged =
+        try store.merge(container, rekeyed, overwrite = false)
+        finally data.unpersist()
       batchesOk += 1
+      lastBatchPoints = merged.points
+      lastSuccessNs = nowNs
+      lastLatencyMs = (System.nanoTime() - t0) / 1e6
       lastError = None
     } catch {
       case NonFatal(e) =>

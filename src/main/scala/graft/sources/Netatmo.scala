@@ -155,17 +155,15 @@ final class NetatmoSource(catalogDf: DataFrame, eventsPoints: DataFrame,
 
   val name = "netatmo"
 
-  /** Paginated fetch (S1+S2): the V2 scan emits every block of the module's
-    * axis in long format; the engine-side column algebra reconstructs the
+  /** Paginated fetch (S1+S2): the bare V2 scan. Its page readers emit the
     * API's row-major surface — the shared per-module time axis × requested
     * measurements grid (pivot transpose P6, repository.py:142-143) with
-    * missing cells as NaN (P5, repository.py:88-91) — in ONE shuffle: a
-    * `groupBy("ts")` row per axis point carrying one cell per requested
-    * type, exploded back to long format.
+    * missing cells as NaN (P5, repository.py:88-91) — already in long
+    * format, one row per (axis point, requested type).
     */
   def getMeasurements(userId: Long, types: Seq[String], period: Period): DataFrame = {
     require(types.nonEmpty, "getMeasurements needs at least one measurement type")
-    val raw = eventsPoints.sparkSession.read.format("graft-netatmo")
+    eventsPoints.sparkSession.read.format("graft-netatmo")
       .option("path", eventsPath)
       .option("userId", userId)
       .option("types", types.mkString(","))
@@ -173,17 +171,6 @@ final class NetatmoSource(catalogDf: DataFrame, eventsPoints: DataFrame,
       .option("endNs", period.endNs)
       .option("blockSize", blockSize)
       .load()
-    // The API surface is one CELL per (axis point, measurement): should two
-    // raw readings ever land on the same grid cell (e.g. distinct ns
-    // timestamps truncating to one µs tick), the pivot semantics keep the
-    // max — same collapse the row-major pivot applied (P6).
-    val cells = types.indices.map(i =>
-      max(when(col("data_type") === types(i), col("value"))).as(s"c$i"))
-    raw.groupBy("ts").agg(cells.head, cells.tail: _*)
-      .select(col("ts"), explode(array(types.indices.map(i => struct(
-        lit(types(i)).as("data_type"),
-        coalesce(col(s"c$i"), lit(Double.NaN)).as("value"))): _*)).as("cell"))
-      .select(col("ts"), col("cell.data_type"), col("cell.value"))
   }
 
   /** The catalog as a driver-side map (station, module, data_type) →
@@ -201,7 +188,8 @@ final class NetatmoSource(catalogDf: DataFrame, eventsPoints: DataFrame,
     * (station, module) so N series on one module cost ONE paginated fetch
     * with only the requested measurement columns (request coalescing +
     * projection pushdown, repository.py:242-255), and re-key rows to the
-    * verbatim requested ids.
+    * verbatim requested ids through a literal data_type → ids map: every id
+    * that binds a measurement gets its rows, with no join.
     */
   def read(spark: SparkSession, ids: Seq[String], period: Period): DataFrame = {
     val bound = ids.map { id =>
@@ -216,14 +204,10 @@ final class NetatmoSource(catalogDf: DataFrame, eventsPoints: DataFrame,
     // partitions together when the unioned plan executes.
     val groups = bound.groupBy { case (_, uid, module, _) => (uid, module) }.toSeq
     val parts = groups.map { case ((uid, _), group) =>
-      val types = group.map(_._4).distinct
-      val fetched = getMeasurements(uid, types, period)
-      val keyMap = group.map { case (id, _, _, dt) => (dt, id) }
-      fetched
-        .join(
-          broadcast(spark.createDataFrame(keyMap).toDF("data_type", "series_id")),
-          Seq("data_type"))
-        .select(col("series_id"), col("ts"), col("value"))
+      val idsOf = group.groupMap(_._4)(_._1).view.mapValues(_.distinct).toMap
+      getMeasurements(uid, group.map(_._4).distinct, period)
+        .select(explode(typedLit(idsOf).getItem(col("data_type"))).as("series_id"),
+          col("ts"), col("value"))
     }
     parts.reduce(_ unionByName _)
   }

@@ -2,11 +2,14 @@ package graft.sources
 
 import java.util.{Map => JMap}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -26,12 +29,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * executor — the blocks of one module run in parallel, and no driver
   * `.collect()` probe ever executes.
   *
+  * Blocks are cut on distinct axis timestamps, so no timestamp is split
+  * across two pages: each page reader builds the API's grid for its own
+  * block ([[NetatmoV2.pageGrid]]: one cell per (axis point, requested type),
+  * NaN where the type has no reading) and emits it in long format. The scan
+  * is the whole fetch — no exchange, no join on top.
+  *
   * {{{
   *   spark.read.format("graft-netatmo")
   *     .option("path", eventsParquet).option("userId", 7)
   *     .option("types", "click,view").option("blockSize", 1024)
   *     .option("startNs", t0).option("endNs", t1)
-  *     .load()   // => (ts, data_type, value), long format
+  *     .load()   // => (ts, data_type, value), one row per grid cell
   * }}}
   *
   * [[FixtureDeviceApi]] is the device-API stand-in: it streams the module's
@@ -52,13 +61,44 @@ class NetatmoV2 extends TableProvider with org.apache.spark.sql.sources.DataSour
 }
 
 object NetatmoV2 {
-  /** One module block in long format: the engine-side transpose (P6) and
-    * NaN fill (P5) happen on top of this, in the engine's column algebra.
+  /** One module block in long format: the API's row-major grid (P6) with
+    * missing cells as NaN (P5), one row per (axis point, requested type).
     */
   val schema: StructType = StructType(Seq(
     StructField("ts", LongType, nullable = false),
     StructField("data_type", StringType, nullable = false),
     StructField("value", DoubleType, nullable = false)))
+
+  /** The API surface of one page: the page's axis (every timestamp with a
+    * reading of any requested type) × `types`, in long format, ordered by
+    * (ts, position in `types`). A cell with no reading is NaN (P5,
+    * repository.py:88-91); raw readings that land on one cell (distinct ns
+    * timestamps truncating to one µs tick) collapse to their max, NaN
+    * greatest — Spark's `max` order, the collapse the row-major pivot
+    * applies (P6, repository.py:142-143). Pages hold whole timestamps, so
+    * the grid of a module is the concatenation of its pages' grids.
+    */
+  private[sources] def pageGrid(types: Seq[String])(
+      fetch: ((Long, String, Double) => Unit) => Unit): Iterator[(Long, String, Double)] = {
+    val slot = types.distinct.zipWithIndex.toMap
+    // per axis point: the cell values, then one "has a reading" flag per cell
+    val axis = new java.util.TreeMap[java.lang.Long, (Array[Double], Array[Boolean])]()
+    fetch { (ts, dataType, v) =>
+      val i = slot(dataType)
+      val (row, hit) = axis.computeIfAbsent(ts,
+        _ => (new Array[Double](slot.size), new Array[Boolean](slot.size)))
+      if (!hit(i) || SQLOrderingUtil.compareDoubles(v, row(i)) > 0) row(i) = v
+      hit(i) = true
+    }
+    axis.entrySet().iterator().asScala.flatMap { e =>
+      val ts = e.getKey.longValue()
+      val (row, hit) = e.getValue
+      types.iterator.map { t =>
+        val i = slot(t)
+        (ts, t, if (hit(i)) row(i) else Double.NaN)
+      }
+    }
+  }
 }
 
 /** Fixture device API: filtered streaming reads of the events parquet via
@@ -264,15 +304,12 @@ private[sources] class NetatmoScanBuilder(options: CaseInsensitiveStringMap)
       (partition: InputPartition) => {
         val pg = partition.asInstanceOf[NetatmoPage]
         new PartitionReader[InternalRow] {
-          // One buffered page fetch per partition — the API-response analog;
-          // bounded by blockSize axis points × requested measurement types.
-          private val rows = {
-            val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Double)]
+          // One buffered page fetch per partition — the API-response analog,
+          // bounded by blockSize axis points × requested measurement types —
+          // pivoted to the page's grid and streamed out in long format.
+          private val rows = NetatmoV2.pageGrid(pg.types) { emit =>
             FixtureDeviceApi.moduleEvents(pg.path, pg.userId, pg.types.toSet,
-              pg.loTs, if (pg.hiTs == Long.MaxValue) Long.MaxValue else pg.hiTs + 1) {
-              (ts, et, v) => buf += ((ts, et, v)); ()
-            }
-            buf.iterator
+              pg.loTs, if (pg.hiTs == Long.MaxValue) Long.MaxValue else pg.hiTs + 1)(emit)
           }
           private var cur: (Long, String, Double) = _
           override def next(): Boolean =

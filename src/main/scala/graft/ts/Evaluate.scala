@@ -13,8 +13,9 @@ import graft.ts.model.Period
   * (:211-216), fanned out per repository (:218-223), input order restored by
   * ordinal (:225-231). Requested-id lists are small (metadata-scale), so the
   * grouping runs on the driver; the *data* never leaves executors — each
-  * source contributes a lazy DataFrame and the union/orderBy is one Catalyst
-  * plan, letting AQE plan the combined scan.
+  * source contributes a lazy DataFrame, and the union plus the ordinal
+  * restore (a literal id → ordinals map, exploded per row) is one narrow
+  * Catalyst plan over the combined scan.
   */
 final class Evaluate(registry: Map[String, SeriesSource]) {
 
@@ -35,16 +36,15 @@ final class Evaluate(registry: Map[String, SeriesSource]) {
         throw new IllegalArgumentException(s"id has no scheme: $id"))
     }
     // read each id once even when requested at several ordinals — the
-    // ordinal join below fans the points back out per request position
+    // literal id → ordinals map below fans the points back out per request
+    // position: a narrow explode, no join and no shuffle of the points
     val parts: Seq[DataFrame] = byScheme.toSeq.map { case (scheme, group) =>
       source(scheme).read(spark, group.map(_._1).distinct, period)
     }
-    val union = parts.reduce(_ unionByName _)
-    val ordinals = spark.createDataFrame(withOrd.map { case (id, i) => (id, i) })
-      .toDF("series_id", "ordinal")
-    // ordinal table is tiny → broadcast join, no shuffle of the point data
-    union.join(broadcast(ordinals), Seq("series_id"))
-      .select(col("ordinal"), col("series_id"), col("ts"), col("value"))
+    val ordinalsOf = withOrd.groupMap(_._1)(_._2)
+    parts.reduce(_ unionByName _)
+      .select(explode(typedLit(ordinalsOf).getItem(col("series_id"))).as("ordinal"),
+        col("series_id"), col("ts"), col("value"))
   }
 
   /** Metadata find routed by scheme

@@ -1,7 +1,7 @@
 package graft.ts
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -176,27 +176,49 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
     * or not the container exists yet. A non-overwrite merge of an empty
     * batch leaves the store as it was.
     *
-    * Scale: only the buckets present in the incoming batch are read,
-    * merged (one exchange, hash on bucket, shared by the last-wins window
-    * and the bucket-partitioned write) and swapped; the rest of the
-    * container is untouched. The per-bucket swap is rename-checked with a
+    * Scale: into an existing container, one partition-local pass over the
+    * batch ([[probe]]) learns the buckets it touches and its point count;
+    * only those buckets are read, merged (one exchange, hash on bucket,
+    * shared by the last-wins window and the bucket-partitioned write) and
+    * swapped; the rest of the container is untouched. The per-bucket swap is rename-checked with a
     * backup — a crash mid-swap never loses data — and the merge is
     * idempotent (re-merging the same batch is a no-op, T4 late/duplicate
     * handling), so a retry after a partial swap converges.
+    *
+    * Returns the batch's point count and the buckets the merge rewrote.
     */
-  def merge(container: String, incoming: DataFrame, overwrite: Boolean = false): Unit =
+  def merge(container: String, incoming: DataFrame, overwrite: Boolean = false): MergeResult =
     SeriesStore.containerLock(containerPath(container)).synchronized {
       acquireProcessLock(container)
       try mergeLocked(container, incoming, overwrite)
       finally releaseProcessLock(container)
     }
 
+  /** The batch's distinct buckets and its row count in one job and no
+    * exchange: each partition emits its bucket set and row count, the
+    * driver unions them. A persisted batch is filled by this pass, so the
+    * merge's write reads the cache instead of the source.
+    */
+  private def probe(newData: DataFrame): MergeResult = {
+    import spark.implicits._
+    val n = numBuckets
+    val parts = newData.select("bucket").as[Int].mapPartitions { it =>
+      val seen = new java.util.BitSet(n)
+      var points = 0L
+      it.foreach { b => seen.set(b); points += 1 }
+      Iterator.single((seen.toLongArray, points))
+    }.collect()
+    val buckets = new java.util.BitSet(n)
+    parts.foreach { case (bits, _) => buckets.or(java.util.BitSet.valueOf(bits)) }
+    MergeResult(parts.map(_._2).sum, buckets.stream().toArray.toSeq)
+  }
+
   /** Merges are serialized per container within the JVM (the reference's
     * DtsServer serializes them in its server process) AND across drivers by
     * the best-effort [[acquireProcessLock]] lock file; at cluster scale the
     * container maps to a table format whose transaction log replaces both.
     */
-  private def mergeLocked(container: String, incoming: DataFrame, overwrite: Boolean): Unit = {
+  private def mergeLocked(container: String, incoming: DataFrame, overwrite: Boolean): MergeResult = {
     sweepStaging(container)
     val target = new Path(containerPath(container))
     val newData = incoming.select(
@@ -205,16 +227,17 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
       col("value").cast("double"))
       .withColumn("bucket", bucketCol)
 
+    // Bounded rewrite: only buckets the batch touches, learnt by the probe,
+    // which also counts the batch. A fresh container has no old rows to
+    // read, so it skips the probe, and its write counts the batch instead.
     val fresh = overwrite || !hasBuckets(container)
-    // Bounded rewrite: only buckets the batch touches. The distinct-bucket
-    // probe is metadata-scale (≤ numBuckets values); a fresh container has
-    // no old rows to read, so it skips the probe.
-    val affected: Seq[Int] =
-      if (fresh) Nil
-      else newData.select("bucket").distinct().collect().map(_.getInt(0)).toSeq.sorted
-    if (!fresh && affected.isEmpty) return
+    val probed = if (fresh) MergeResult(0L, Nil) else probe(newData)
+    val affected = probed.buckets
+    if (!fresh && affected.isEmpty) return probed
+    val counted = Observation()
 
-    val nw = newData.withColumn("__gen", lit(1))
+    val nw = (if (fresh) newData.observe(counted, count(lit(1)).as("points")) else newData)
+      .withColumn("__gen", lit(1))
     val batch =
       if (fresh) nw
       else scan(container).where(col("bucket").isin(affected: _*))
@@ -243,14 +266,17 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
     if (fs.exists(tmp)) fs.delete(tmp, true)
     merged.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(tmp.toString)
     if (fresh) {
-      if (!overwrite && !hasBuckets(tmp)) {
+      val staged = fs.listStatus(tmp).map(_.getPath.getName)
+        .collect { case n if n.startsWith("bucket=") => n.stripPrefix("bucket=").toInt }.sorted.toSeq
+      if (!overwrite && staged.isEmpty) {
         fs.delete(tmp, true)
-        return
+        return MergeResult(0L, Nil)
       }
       if (fs.exists(target)) fs.delete(target, true)
       if (!fs.rename(tmp, target))
         throw new java.io.IOException(s"merge: failed to move $tmp into place at $target")
-      return
+      // the optimizer drops the observation only from a batch it proves empty
+      return MergeResult(counted.get.get("points").fold(0L)(_.asInstanceOf[Long]), staged)
     }
 
     // Swap each affected bucket directory. Every rename is checked; on
@@ -287,6 +313,7 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
     }
     fs.delete(bakRoot, true)
     fs.delete(tmp, true)
+    probed
   }
 
   /** Repair state left by a merge that died mid-swap (process crash, not
@@ -334,6 +361,11 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
         finally releaseProcessLock(container)
       }
 }
+
+/** What one [[SeriesStore.merge]] did: the incoming batch's point count
+  * and the buckets it rewrote, ascending.
+  */
+final case class MergeResult(points: Long, buckets: Seq[Int])
 
 object SeriesStore {
   // JVM-wide per-container-path lock table, shared by every store instance

@@ -31,8 +31,15 @@ class CollectionSpec extends SparkSpec {
     task.collectOnce(spark, nowNs = 3600 * S)
     assert(task.healthy, s"first collect failed: ${task.lastError}")
     assert(store.read("cont").count() == 3600)
+    // health of the last batch: a fresh container counts it in its write
+    assert(task.lastBatchPoints == 3600)
+    assert(task.lastSuccessNs == 3600 * S)
+    assert(task.lastLatencyMs > 0.0)
 
     task.collectOnce(spark, nowNs = 7200 * S)
+    // into the existing container the bucket probe counts the batch
+    assert(task.lastBatchPoints == 3600)
+    assert(task.lastSuccessNs == 7200 * S)
     val pts = store.read("cont")
     assert(pts.count() == 7200)
     val ts = pts.agg(org.apache.spark.sql.functions.min("ts"),
@@ -41,6 +48,22 @@ class CollectionSpec extends SparkSpec {
     assert(ts.getLong(1) == 7199 * S)         // axis end (1 s resolution)
     // contiguity: n distinct timestamps == span/dt + 1
     assert(pts.select("ts").distinct().count() == 7200)
+  }
+
+  test("re-keying is the positional zip: a read id listed twice feeds each store id once") {
+    val store = new SeriesStore(spark, tmpDir("graft-zip"), numBuckets = 2)
+    val ev = new Evaluate(Map("mock1" -> new MockSource("mock1")))
+    val task = new CollectionTask("zip", ev, store, "cont",
+      readIds = Seq("mock1://n/1", "mock1://n/1"),
+      storeIds = Seq("shyft://cont/a", "shyft://cont/b"),
+      period = RelativePeriod(60 * S))
+    task.collectOnce(spark, nowNs = 60 * S)
+    assert(task.healthy, s"collect failed: ${task.lastError}")
+    task.collectOnce(spark, nowNs = 60 * S)
+    assert(task.lastBatchPoints == 120, "each ordinal's 60 points, no cross product")
+    val perId = store.read("cont").groupBy("series_id").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(perId == Map("shyft://cont/a" -> 60L, "shyft://cont/b" -> 60L))
   }
 
   test("overlapping windows reconcile idempotently (late/duplicate handling)") {
@@ -83,6 +106,7 @@ class CollectionSpec extends SparkSpec {
     mkTask(store, windowS = 60).collectOnce(spark, nowNs = 60 * S)
     empty.collectOnce(spark, nowNs = 0L)
     assert(empty.healthy && empty.batchesOk == 2)
+    assert(empty.lastBatchPoints == 0)
     assert(store.read("cont").count() == 60)
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -69,6 +70,93 @@ class NetatmoSpec extends SparkSpec {
     assert(rowsOf(paged) == rowsOf(single))
     // multi-block actually exercised: axis longer than one small block
     assert(single.select("ts").distinct().count() > 16)
+  }
+
+  /** The engine-side pivot the page reader replaced: raw readings grouped
+    * by ts in one shuffle, one max per requested type, NaN where a type has
+    * no reading, exploded back to long format. Kept here only as the
+    * reference for the reader's grid.
+    */
+  private def referencePivot(raw: DataFrame, types: Seq[String]): DataFrame = {
+    val cells = types.indices.map(i =>
+      max(when(col("data_type") === types(i), col("value"))).as(s"c$i"))
+    raw.groupBy("ts").agg(cells.head, cells.tail: _*)
+      .select(col("ts"), explode(array(types.indices.map(i => struct(
+        lit(types(i)).as("data_type"),
+        coalesce(col(s"c$i"), lit(Double.NaN)).as("value"))): _*)).as("cell"))
+      .select(col("ts"), col("cell.data_type"), col("cell.value"))
+  }
+
+  private def fetch(path: String, userId: Long, types: Seq[String], blockSize: Int): DataFrame =
+    spark.read.format("graft-netatmo").option("path", path).option("userId", userId)
+      .option("types", types.mkString(",")).option("blockSize", blockSize).load()
+
+  test("the page reader's grid matches the engine-side pivot: NaN fill, max collapse, any block size") {
+    import spark.implicits._
+    val path = tmpDir("graft-netatmo-grid")
+    // epoch-ns ticks; the reader truncates them to the µs grid
+    val readings = Seq(
+      (1L, "A", 1000L, 1.0), (1L, "A", 1500L, 3.0),             // one cell: max
+      (1L, "B", 1200L, Double.NaN), (1L, "B", 1900L, 5.0),      // one cell: NaN is greatest
+      (1L, "A", 2000L, 2.0),                                    // B has no reading here
+      (1L, "B", 3000L, -1.0), (1L, "B", 3001L, -1.5),           // A has no reading here
+      (1L, "C", 4000L, 9.0),                                    // type not requested
+      (2L, "A", 2000L, 100.0))                                  // another module
+      .toDF("user_id", "event_type", "ts", "value")
+    // optional columns, like a device API's export
+    spark.createDataFrame(readings.rdd,
+      org.apache.spark.sql.types.StructType(readings.schema.map(_.copy(nullable = true))))
+      .coalesce(1).write.mode("overwrite").parquet(path)
+    val types = Seq("A", "B")
+    val got = fetch(path, 1L, types, blockSize = 1 << 20)
+    assert(rowsOf(got) == Seq(
+      Seq("1000", "A", "3.0"), Seq("1000", "B", "NaN"),
+      Seq("2000", "A", "2.0"), Seq("2000", "B", "NaN"),
+      Seq("3000", "A", "NaN"), Seq("3000", "B", "-1.0")))
+    val raw = spark.read.parquet(path)
+      .where(col("user_id") === 1L && col("event_type").isin(types: _*))
+      .select((expr("ts div 1000") * 1000L).as("ts"), col("event_type").as("data_type"), col("value"))
+    assert(rowsOf(got) == rowsOf(referencePivot(raw, types)))
+    // one page per axis point assembles to the same grid as one page
+    val paged = fetch(path, 1L, types, blockSize = 1)
+    assert(paged.rdd.getNumPartitions == 3)
+    assert(rowsOf(paged) == rowsOf(got))
+  }
+
+  test("the page reader's grid matches the engine-side pivot on the fixture module") {
+    val row = cat.limit(1).collect()(0)
+    val uid = row.getAs[Long]("user_id")
+    val types = cat.where(col("user_id") === uid && col("module_name") === row.getAs[String]("module_name"))
+      .select("data_type").collect().map(_.getString(0)).toSeq
+    val raw = eventsPoints.where(col("user_id") === uid && col("event_type").isin(types: _*))
+      .select(col("ts"), col("event_type").as("data_type"), col("value"))
+    val want = rowsOf(referencePivot(raw, types))
+    assert(rowsOf(fetch(eventsPath, uid, types, blockSize = 1)) == want)
+    assert(rowsOf(fetch(eventsPath, uid, types, blockSize = 1 << 20)) == want)
+  }
+
+  test("re-keying keeps the fan-out: two ids naming one measurement both get every row") {
+    val row = cat.limit(1).collect()(0)
+    val (st, mod, dt) = (row.getAs[String]("station_name"), row.getAs[String]("module_name"),
+      row.getAs[String]("data_type"))
+    val id = Identifiers.netatmoIdStr(st, mod, dt)
+    // the parser accepts the parameters in any order: the same measurement
+    val reordered = s"netatmo://?data_type=$dt&module_name=$mod&station_name=$st"
+    val src = new NetatmoSource(cat, eventsPoints, eventsPath)
+    val all = Period(Long.MinValue / 2, Long.MaxValue / 2)
+    val want = rowsOf(src.read(spark, Seq(id), all).drop("series_id"))
+    assert(want.nonEmpty)
+
+    val read = src.read(spark, Seq(id, reordered), all)
+    Seq(id, reordered).foreach { i =>
+      assert(rowsOf(read.where(col("series_id") === i).drop("series_id")) == want, i)
+    }
+    val ev = new Evaluate(Map("netatmo" -> src)).evaluate(spark, Seq(id, reordered, id), all)
+    Seq(0 -> id, 1 -> reordered, 2 -> id).foreach { case (ord, i) =>
+      val mine = ev.where(col("ordinal") === ord)
+      assert(mine.select("series_id").distinct().collect().map(_.getString(0)).toSeq == Seq(i))
+      assert(rowsOf(mine.drop("ordinal", "series_id")) == want, s"ordinal $ord")
+    }
   }
 
   test("read binds ids via the catalog and re-keys to the verbatim id") {

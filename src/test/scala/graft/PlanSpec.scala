@@ -17,6 +17,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.core.Tables
+import graft.etl.{AbsolutePeriod, CollectionTask}
 import graft.pipeline.Dedup
 import graft.ts.{Evaluate, SeriesStore}
 import graft.ts.model.Period
@@ -114,11 +115,12 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
   }
 
-  test("evaluate's ordinal restore is a broadcast join, never a shuffle of points") {
-    val store = new SeriesStore(spark, tmpDir("graft-plan"))
-    val ev = Evaluate.default(store)
-    val df = ev.evaluate(spark, Seq("mock1://a/1", "mock2://b/2"), Period.ofSeconds(0, 10))
-    assert(planOf(df).contains("BroadcastHashJoin"))
+  test("evaluate's ordinal restore adds no join and no exchange") {
+    val (src, _, ids, all) = netatmoFixture()
+    // a repeated id fans out to both of its ordinals without a join
+    val plan = new Evaluate(Map("netatmo" -> src))
+      .evaluate(spark, ids.map(_._1) :+ ids.head._1, all).queryExecution.executedPlan
+    assert(shuffles(plan).isEmpty && joins(plan) == 0, plan.toString.take(3000))
   }
 
   test("store reads prune to the requested ids' bucket partitions") {
@@ -166,16 +168,16 @@ class PlanSpec extends SparkSpec {
     assert(v2.rdd.getNumPartitions > 1, "each block must be its own partition")
   }
 
-  test("netatmo fetch is one shuffle per module") {
+  test("netatmo fetch and read plan no exchange and no join") {
     val (src, uid, ids, all) = netatmoFixture()
     val modules = ids.groupBy(_._2)
     assert(modules.size == 2, s"fixture station should carry two modules: $ids")
     modules.values.foreach { mod =>
       val plan = src.getMeasurements(uid, mod.map(_._3), all).queryExecution.executedPlan
-      assert(shuffles(plan).size == 1, plan.toString.take(3000))
+      assert(shuffles(plan).isEmpty && joins(plan) == 0, plan.toString.take(3000))
     }
     val read = src.read(spark, ids.map(_._1), all).queryExecution.executedPlan
-    assert(shuffles(read).size == 2, read.toString.take(3000))
+    assert(shuffles(read).isEmpty && joins(read) == 0, read.toString.take(3000))
   }
 
   test("a second netatmo read runs no Spark job: the catalog is bound once") {
@@ -184,6 +186,23 @@ class PlanSpec extends SparkSpec {
     assert(first > 0, "the first read binds the catalog with a Spark job")
     val (second, _) = observe(src.read(spark, ids.map(_._1), all))
     assert(second == 0, s"second read ran $second jobs")
+  }
+
+  test("a collection cycle into an existing container runs at most 3 jobs") {
+    val (src, _, ids, all) = netatmoFixture()
+    val store = new SeriesStore(spark, tmpDir("graft-cycle-jobs"), numBuckets = 4)
+    val task = new CollectionTask("cycle", new Evaluate(Map("netatmo" -> src)), store, "c",
+      ids.map(_._1), ids.map { case (_, m, dt) => s"shyft://c/$m/$dt" },
+      AbsolutePeriod(all.startNs, all.endNs))
+    // the first cycle binds the catalog and creates the container
+    task.collectOnce(spark, nowNs = 1L)
+    assert(task.healthy, s"first cycle failed: ${task.lastError}")
+    // the probe, the merge's shuffle stage and its write; the health fields
+    // come from these jobs and add none
+    val (jobs, _) = observe(task.collectOnce(spark, nowNs = 2L))
+    assert(task.healthy, s"second cycle failed: ${task.lastError}")
+    assert(jobs <= 3, s"a collection cycle ran $jobs jobs")
+    assert(task.lastBatchPoints > 0 && task.lastSuccessNs == 2L && task.lastLatencyMs > 0.0)
   }
 
   test("a merge into an existing container is one exchange on bucket, no second sort") {

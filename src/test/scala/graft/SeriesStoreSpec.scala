@@ -2,7 +2,7 @@ package graft
 
 import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 
-import graft.ts.SeriesStore
+import graft.ts.{MergeResult, SeriesStore}
 import graft.ts.model.Period
 
 /** Golden merge-store semantics, mirroring the reference's
@@ -106,7 +106,8 @@ class SeriesStoreSpec extends SparkSpec {
     // seed series across several buckets
     val seed = (0 until 40).map(i => (s"shyft://c/series-$i", i.toLong * S, i.toDouble))
       .toDF("series_id", "ts", "value")
-    store.merge("c", seed)
+    val seeded = store.merge("c", seed)
+    assert(seeded.points == 40)
 
     def bucketFiles: Map[String, Set[String]] = {
       val root = new java.io.File(s"$warehouse/c")
@@ -115,10 +116,11 @@ class SeriesStoreSpec extends SparkSpec {
     }
     val before = bucketFiles
     assert(before.size > 1, "seed should span multiple buckets")
+    assert(seeded.buckets == before.keys.map(_.stripPrefix("bucket=").toInt).toSeq.sorted)
 
     // upsert one series → exactly its bucket rewritten
     val one = Seq(("shyft://c/series-0", 1000L * S, 9.9)).toDF("series_id", "ts", "value")
-    store.merge("c", one)
+    assert(store.merge("c", one) == MergeResult(1L, Seq(store.bucketOf("shyft://c/series-0"))))
     val after = bucketFiles
     val touched = s"bucket=${store.bucketOf("shyft://c/series-0")}"
     assert(after(touched) != before(touched), "affected bucket must be rewritten")
