@@ -1,17 +1,97 @@
 package graft
+import java.util.Properties
+import scala.collection.mutable
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+
+import graft.core.Sessions
+
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
+  /** Execution counters of one timed row, the sidecar's `layers` entry:
+    * jobs started while the row's DataFrame is built (construction), jobs,
+    * stages and tasks of building and counting it, and their summed
+    * executor run time.
+    */
+  final case class Layers(constructionJobs: Int = 0, jobs: Int = 0,
+      stages: Int = 0, tasks: Int = 0, taskMs: Long = 0L) {
+    def json: String = s"""{"construction_jobs":$constructionJobs,"jobs":$jobs,""" +
+      s""""stages":$stages,"tasks":$tasks,"task_ms":$taskMs}"""
+  }
+
+  private val RowProp = "graft.bench.row"
+  private val PhaseProp = "graft.bench.phase"
+  private val Construction = "construction"
+
+  /** Counts per row what [[timeRow]] runs, keyed by the row local property
+    * its jobs and stages carry; jobs, stages and tasks without it are not
+    * counted. Events arrive asynchronously: read [[layers]] after
+    * [[drain]].
+    */
+  final class RowCounters extends SparkListener {
+    private val rows = mutable.Map.empty[String, Layers]
+    private val stageRow = mutable.Map.empty[Int, String]
+    private def rowOf(p: Properties): Option[String] =
+      Option(p).flatMap(p => Option(p.getProperty(RowProp)))
+    private def bump(row: String)(f: Layers => Layers): Unit =
+      rows(row) = f(rows.getOrElse(row, Layers()))
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      rowOf(e.properties).foreach(bump(_) { l =>
+        val built = if (e.properties.getProperty(PhaseProp) == Construction) 1 else 0
+        l.copy(constructionJobs = l.constructionJobs + built, jobs = l.jobs + 1)
+      })
+    }
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = synchronized {
+      rowOf(e.properties).foreach(stageRow(e.stageInfo.stageId) = _)
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+      stageRow.get(e.stageInfo.stageId).foreach(bump(_)(l => l.copy(stages = l.stages + 1)))
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      stageRow.get(e.stageId).foreach(bump(_) { l =>
+        l.copy(tasks = l.tasks + 1,
+          taskMs = l.taskMs + Option(e.taskMetrics).fold(0L)(_.executorRunTime))
+      })
+    }
+
+    def layers: Map[String, Layers] = synchronized(rows.toMap)
+
+    /** Waits until the listener bus has delivered every event posted so
+      * far. Runs no Spark job.
+      */
+    def drain(spark: SparkSession): Unit =
+      GraftBridge.drainListenerBus(spark.sparkContext, timeoutMs = 120000L)
+  }
+
+  /** Builds `fn`'s DataFrame and counts it; returns the wall seconds. With
+    * a `row`, its jobs carry it for [[RowCounters]], and the jobs started
+    * while the DataFrame is built are marked construction. Adds no Spark
+    * job and no action.
+    */
+  def timeRow(spark: SparkSession, sfDir: String, fn: Query, row: Option[String]): Double = {
+    val sc = spark.sparkContext
+    val t0 = System.nanoTime()
+    sc.setLocalProperty(RowProp, row.orNull)
+    try {
+      sc.setLocalProperty(PhaseProp, Construction)
+      val df = fn(spark, sfDir)
+      sc.setLocalProperty(PhaseProp, null)
+      df.count()
+    } finally {
+      sc.setLocalProperty(RowProp, null)
+      sc.setLocalProperty(PhaseProp, null)
+    }
+    (System.nanoTime() - t0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Sessions.local("graft-bench", cores = cpus)
     // Optional dev filter: SPARK_GRAFT_ONLY=comma,separated,names
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -137,18 +217,20 @@ object Bench {
       }
     // A query that throws has no time: it is listed under "failed" in the
     // sidecar and on stderr, never recorded as a timing.
-    val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
+    val failures = mutable.LinkedHashMap.empty[String, String]
+    // The first timed pass of each row is attributed to it for "layers";
+    // the contention gate's re-runs below are not.
+    val counters = new RowCounters
+    spark.sparkContext.addSparkListener(counters)
+    def timeOnce(name: String, fn: Query, attribute: Boolean): Option[Double] =
+      try Some(timeRow(spark, sfDir, fn, if (attribute) Some(name) else None))
       catch { case NonFatal(e) =>
         System.err.println(s"[bench] FAILED $name: $e")
         failures(name) = String.valueOf(e)
         None
       }
-    }
     val firstPass = selected.flatMap { case (name, fn) =>
-      timeOnce(name, fn).map { sec =>
+      timeOnce(name, fn, attribute = true).map { sec =>
         System.err.println(f"[bench] $name%-24s $sec%8.2f s")
         (name, fn, sec)
       }
@@ -178,7 +260,7 @@ object Bench {
         var best = sec
         var tries = 0
         while (tries < 2 && best > 2 * prev * calRatio) {
-          timeOnce(name, fn).foreach(t => best = math.min(best, t)); tries += 1
+          timeOnce(name, fn, attribute = false).foreach(t => best = math.min(best, t)); tries += 1
         }
         rerunLog += ((name, sec, best, prev))
         if (best > 2 * prev * calRatio)
@@ -199,10 +281,18 @@ object Bench {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val failed = failures.map { case (n, e) => s"\"$n\":${mapper.writeValueAsString(e)}" }
       .mkString("{", ",", "}")
+    try counters.drain(spark)
+    catch { case e: java.util.concurrent.TimeoutException =>
+      System.err.println(s"[bench] listener bus did not drain, layers may be short: $e")
+    }
+    val counted = counters.layers
+    val layers = results.map { case (n, _) =>
+      s"\"$n\":${counted.getOrElse(n, Layers()).json}"
+    }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val calAfter = calibrate()
     System.err.println(f"[bench] calibration_after $calAfter%.3f s")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"reruns":$reruns,"failed":$failed,"calibration_before":$calBefore,"calibration_after":$calAfter,"cal_ratio_vs_pin":$calRatio,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"layers":$layers,"reruns":$reruns,"failed":$failed,"calibration_before":$calBefore,"calibration_after":$calAfter,"cal_ratio_vs_pin":$calRatio,"sf":"$sfDir"}"""
     println(json)
     // Durable sidecar with ALL per-query timings: the driver's artifact
     // collector keeps only a tail of stdout, which has silently dropped the

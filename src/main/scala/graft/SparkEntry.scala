@@ -3094,8 +3094,8 @@ object SparkEntry {
       Similarity.knnGraph(Tables(s, dir).embeddings, k = 3, nprobe = 3,
         kCells = 8)),
     // the exact quadratic baseline the cell-blocked default is audited
-    // against (recall measured in RecallAudit; equality when every cell
-    // is probed is spec-pinned)
+    // against (SimilaritySpec pins the recall floor and the equality when
+    // every cell is probed)
     "vec_knn_brute" -> ((s, dir) =>
       Similarity.knnGraphBrute(Tables(s, dir).embeddings, k = 3)),
     // greedy k-center coreset (farthest-point traversal, k = 8): the

@@ -39,7 +39,7 @@ object Sessions {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
-  /** Local session for tests / tools. */
+  /** Local session for tests, `graft.Bench` and `graft.Verify`. */
   def local(appName: String = "graft", cores: Int = 4): SparkSession = {
     val s = tune(
       SparkSession.builder().master(s"local[$cores]").appName(appName)
@@ -53,19 +53,14 @@ object Sessions {
     s
   }
 
-  /** Apply the runtime-settable configs to an externally built session
-    * (the driver harness builds its own). Safe to call repeatedly.
+  /** The partition count of an explicit-width shuffle: `parts0` if
+    * positive, else the session's `spark.sql.shuffle.partitions` (its
+    * registered default when the session leaves it unset).
     */
-  def ensureRuntimeConfs(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.files.minPartitionNum",
-      spark.sparkContext.defaultParallelism.toString)
-    // see tune(): many-small-buffer object aggregates (PQ training's
-    // (subspace, cluster) means) must not sort-fallback at 128 keys
-    spark.conf.set(
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "8192")
-    spark
+  def partsOf(spark: SparkSession, parts0: Int = 0): Int = {
+    val parts = if (parts0 > 0) parts0
+      else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    require(parts >= 1, s"parts must be >= 1, got $parts")
+    parts
   }
 }

@@ -9,13 +9,12 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * Every query entry point receives `(spark, sfDir)`; this is the single
   * place that knows the on-disk layout, so filters/projections written on
   * the returned DataFrames push straight down into the parquet scans.
+  * It reads under the session's confs as they are: a session built by
+  * [[Sessions]] carries the ones this layout assumes (`nanosAsLong`, UTC).
   */
 final case class Tables(spark: SparkSession, dir: String) {
 
-  def apply(name: String): DataFrame = {
-    Sessions.ensureRuntimeConfs(spark)
-    spark.read.parquet(s"$dir/$name.parquet")
-  }
+  def apply(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
 
   def lineitem: DataFrame = apply("lineitem")
   def orders: DataFrame = apply("orders")

@@ -32,9 +32,10 @@ final class VecMeanBuf(var n: Long, var sums: Array[Double])
   *
   * Contract (the k-means corpora guarantee both; violations fail LOUDLY
   * instead of silently diverging from the replaced per-position averages):
-  * all non-null input arrays in a group share one width, and elements are
-  * non-null. A null ARRAY contributes nothing (posexplode emitted no rows
-  * for it); a group with only null arrays evaluates to null.
+  * all non-empty input arrays in a group share one width, and elements are
+  * non-null. A null or zero-width ARRAY contributes nothing (posexplode
+  * emitted no rows for it); a group with only such arrays evaluates to
+  * null.
   */
 case class VecMeanAgg(child: Expression,
     mutableAggBufferOffset: Int = 0,
@@ -57,6 +58,7 @@ case class VecMeanAgg(child: Expression,
     if (v == null) return b
     val a = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
     val n = a.numElements()
+    if (n == 0) return b
     if (b.sums == null) b.sums = new Array[Double](n)
     require(b.sums.length == n,
       s"vec_mean: ragged vector widths in one group (${b.sums.length} vs $n)")

@@ -127,7 +127,7 @@ object Retention {
       "f_score" -> (-col("frequency")).cast("double"),
       "m_score" -> when(col("monetary").isNull, lit(Double.MaxValue))
         .otherwise(-col("monetary")).cast("double"))
-    val parts = graft.pipeline.Prefix.partsOf(perUser)
+    val parts = graft.core.Sessions.partsOf(perUser.sparkSession)
     val mod = math.max(1L, n / (1L << 12))
     val sampleRows = perUser
       .where(pmod(xxhash64(col(userCol).cast("long")), lit(mod)) === 0)

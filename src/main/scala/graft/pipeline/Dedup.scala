@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Sessions
 import graft.functions.PolyHash
 
 /** Deduplication operators for pretraining-scale corpora (exact, MinHash+LSH,
@@ -112,7 +113,7 @@ object Dedup {
     // join downstream: minhashEval's pair scoring ran as one task) this
     // spread exists to parallelize. REPARTITION_BY_NUM is exempt.
     df.repartition(
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt,
+      Sessions.partsOf(df.sparkSession),
       col(idCol))
 
   /** The banding explode shared by the batch path ([[lshBuckets]]) and the
@@ -430,8 +431,7 @@ object Dedup {
     // back to one partition on small inputs, serializing the gram-scale
     // verify join behind it (same trap as spreadById — REPARTITION_BY_COL
     // vs REPARTITION_BY_NUM)
-    val shuffleN = left.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
+    val shuffleN = Sessions.partsOf(left.sparkSession)
     val cands = lg.join(rprefix, Seq("__sh"))
       .select("id_a", "id_b").distinct()
       .repartition(shuffleN, col("id_a"), col("id_b"))
@@ -726,8 +726,7 @@ object Dedup {
       // AQE-coalescable to one partition on small inputs, serializing the
       // gram-array verify join behind it — same trap as containmentJoin's
       // candidate stream above
-      .repartition(df.sparkSession.conf
-        .get("spark.sql.shuffle.partitions").toInt,
+      .repartition(Sessions.partsOf(df.sparkSession),
         col("id_a"), col("id_b"))
     (grams, pairs)
   }

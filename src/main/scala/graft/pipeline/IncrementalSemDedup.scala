@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Sessions
+
 /** Incremental SEMANTIC dedup — the embedding-side twin of
   * [[IncrementalDedup]], completing the batch/incremental symmetry for the
   * dedup families: a continuously-ingesting corpus keeps its SemDeDup
@@ -105,8 +107,7 @@ object IncrementalSemDedup {
     val allVecs = state.vectors.unionByName(nb)
     val matches = graft.core.Lineage.truncate(newOld.unionByName(newNew)
       // pinned width (AQE-proof) — see Similarity.embeddingNearDups
-      .repartition(nb.sparkSession.conf
-        .get("spark.sql.shuffle.partitions", "32").toInt,
+      .repartition(Sessions.partsOf(nb.sparkSession),
         col("id_a"), col("id_b"))
       .join(allVecs.select(col("vec_id").as("id_a"), col("vec").as("va")), Seq("id_a"))
       .join(allVecs.select(col("vec_id").as("id_b"), col("vec").as("vb")), Seq("id_b"))

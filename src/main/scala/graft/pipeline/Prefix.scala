@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Sessions
+
 /** Distributed exclusive/inclusive prefix sums over an id-ordered stream —
   * the primitive under sequence packing, compaction planning, and
   * token-budget sampling. A naive `sum(x) OVER (ORDER BY id)` is a
@@ -99,8 +101,7 @@ object Prefix {
     // A frame carrying __shard from a previous chained scan is ALREADY
     // partitioned on these keys (same idCol/shardWidth contract), so the
     // chain pays no second exchange.
-    val shuffleN = df.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "64").toInt
+    val shuffleN = Sessions.partsOf(df.sparkSession)
     val sharded = if (df.columns.contains("__shard")) df
       else {
         val s0 = df.withColumn("__shard", expr(s"`$idCol` div $shardWidth"))
@@ -131,6 +132,35 @@ object Prefix {
       .drop("__local_end", "__prefix")
     if (keepShard) joined else joined.drop("__shard")
   }
+
+  /** Reduce a (key, tie) sample to `parts − 1` sorted distinct boundary
+    * keys — the picker [[globalRowNumber]] uses, exposed so multi-metric
+    * callers ([[globalRowNumberBounded]]) can draw one sample and slice
+    * it per key.
+    */
+  def pickBounds(sample: Array[(Option[Double], Long)],
+      parts: Int): Array[(Option[Double], Long)] = {
+    val sorted = sample
+      .sortBy { case (k, t) => (k.getOrElse(Double.NegativeInfinity), t) }
+    if (sorted.isEmpty) Array.empty
+    else (1 until parts)
+      .map(i => sorted(((i.toLong * sorted.length) / parts).toInt))
+      .distinct.toArray
+  }
+
+  // try_cast throughout: under ANSI (Spark 4's default) a plain cast of an
+  // uncastable tie would throw the generic CAST_INVALID_INPUT before the
+  // contract guard could fire; try_cast nulls instead, so the raise_error
+  // below is the ONE error surface in both ANSI and legacy modes
+  private def guarded(df: DataFrame, key: Column, tie: Column): DataFrame =
+    df.withColumn("__gk", key.cast("double"))
+      .withColumn("__gt",
+        when(tie.isNull || tie.try_cast("long").isNull,
+          raise_error(concat(
+            lit("globalRowNumber: tie must be a non-null long-castable " +
+              "value (unique-tie contract); got: "),
+            coalesce(tie.cast("string"), lit("null")))).cast("long"))
+          .otherwise(tie.try_cast("long")))
 
   /** Append `rankCol` = exact global `row_number()` under
     * (`key` asc, `tie` asc) — the distributed form of
@@ -167,49 +197,10 @@ object Prefix {
     * callers already have it); it only sizes the sample draw, so an
     * estimate is fine.
     */
-  /** Resolve the partition count: explicit if positive, else the session's
-    * shuffle-partition setting.
-    */
-  def partsOf(df: DataFrame, parts0: Int = 0): Int = {
-    val parts = if (parts0 > 0) parts0
-      else df.sparkSession.conf.get("spark.sql.shuffle.partitions", "64").toInt
-    require(parts >= 1, s"parts must be >= 1, got $parts")
-    parts
-  }
-
-  /** Reduce a (key, tie) sample to `parts − 1` sorted distinct boundary
-    * keys — the picker [[globalRowNumber]] uses, exposed so multi-metric
-    * callers ([[globalRowNumberBounded]]) can draw one sample and slice
-    * it per key.
-    */
-  def pickBounds(sample: Array[(Option[Double], Long)],
-      parts: Int): Array[(Option[Double], Long)] = {
-    val sorted = sample
-      .sortBy { case (k, t) => (k.getOrElse(Double.NegativeInfinity), t) }
-    if (sorted.isEmpty) Array.empty
-    else (1 until parts)
-      .map(i => sorted(((i.toLong * sorted.length) / parts).toInt))
-      .distinct.toArray
-  }
-
-  // try_cast throughout: under ANSI (Spark 4's default) a plain cast of an
-  // uncastable tie would throw the generic CAST_INVALID_INPUT before the
-  // contract guard could fire; try_cast nulls instead, so the raise_error
-  // below is the ONE error surface in both ANSI and legacy modes
-  private def guarded(df: DataFrame, key: Column, tie: Column): DataFrame =
-    df.withColumn("__gk", key.cast("double"))
-      .withColumn("__gt",
-        when(tie.isNull || tie.try_cast("long").isNull,
-          raise_error(concat(
-            lit("globalRowNumber: tie must be a non-null long-castable " +
-              "value (unique-tie contract); got: "),
-            coalesce(tie.cast("string"), lit("null")))).cast("long"))
-          .otherwise(tie.try_cast("long")))
-
   def globalRowNumber(df: DataFrame, key: Column, tie: Column,
       rankCol: String, n: Long, parts0: Int = 0,
       sampleTarget: Int = 1 << 12): DataFrame = {
-    val parts = partsOf(df, parts0)
+    val parts = Sessions.partsOf(df.sparkSession, parts0)
     val base = guarded(df, key, tie)
     val mod = math.max(1L, n / math.max(1, sampleTarget))
     val sample = base
@@ -247,8 +238,7 @@ object Prefix {
     // the same two reasons as [[scan]]: identical exchange subtrees for the
     // two branches below (reuse — input executes once) and AQE-proof width
     // so a small rank pass is not serialized onto one partition
-    val shuffleN = df.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "64").toInt
+    val shuffleN = Sessions.partsOf(df.sparkSession)
     val withPid = base.withColumn("__pid", pid)
       .repartition(shuffleN, col("__pid"))
     val localW = Window.partitionBy("__pid")

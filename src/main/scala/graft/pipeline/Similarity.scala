@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.KnownNotNull
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Sessions
+
 /** Similarity search over an embedding column (`array<float>`).
   *
   * Baseline: brute-force cosine top-k — a broadcast of the (small) query set
@@ -96,7 +98,7 @@ object Similarity {
     // partition on small inputs, serializing the per-row vector kernels
     // and the brute audit joins downstream (see Dedup.spreadById)
     df.repartition(
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt,
+      Sessions.partsOf(df.sparkSession),
       col(idCol))
 
   /** Reciprocal-rank fusion of two ranked retrieval lists (Cormack et al.
@@ -863,8 +865,7 @@ object Similarity {
       // pinned width — a bare REPARTITION_BY_COL is AQE-coalescable back
       // to one partition on small inputs, serializing the pair-verify
       // joins behind it (the Dedup.spreadById trap)
-      .repartition(corpus.sparkSession.conf
-        .get("spark.sql.shuffle.partitions", "32").toInt,
+      .repartition(Sessions.partsOf(corpus.sparkSession),
         col("id_a"), col("id_b"))
     pairs
       .join(v.select(col("id").as("id_a"), col("v").as("va")), Seq("id_a"))
@@ -1015,8 +1016,7 @@ object Similarity {
     val (ra, rv) = side(right, "id_b", "vb")
     la.join(ra, Seq("cell"))
       // pinned width (AQE-proof) — see embeddingNearDups' pair spread
-      .repartition(left.sparkSession.conf
-        .get("spark.sql.shuffle.partitions", "32").toInt,
+      .repartition(Sessions.partsOf(left.sparkSession),
         col("id_a"), col("id_b"))
       .join(lv, Seq("id_a"))
       .join(rv, Seq("id_b"))
@@ -1330,7 +1330,7 @@ object Similarity {
     */
   private[graft] def freezeShards(s: org.apache.spark.sql.SparkSession,
       rows: Long): Int = {
-    val shuffleN = s.conf.get("spark.sql.shuffle.partitions").toInt
+    val shuffleN = Sessions.partsOf(s)
     math.max(1, math.min(shuffleN, math.ceil(rows / 2e6).toInt))
   }
 
@@ -1934,7 +1934,8 @@ object Similarity {
     * [[knnGraphBrute]]'s; across cells it is the standard IVF
     * approximation (a neighbor hiding in an unprobed cell is unseen —
     * recall tunes via `nprobe`, and honestly depends on the corpus
-    * having cluster structure at all; RecallAudit measures it).
+    * having cluster structure at all; SimilaritySpec pins its edge
+    * recall on a clustered corpus).
     *
     * `kCells` DEFAULTS to the corpus-scaled [[cellsFor]] policy (√n —
     * one count() to size it), so the no-tuning invocation is the 100 TB
@@ -1978,8 +1979,7 @@ object Similarity {
       // shuffle write at sf0.1, the dominant task time of the query).
       // Per-query candidate rows must co-locate for the ranking anyway;
       // hashing the query id spreads hot cells' queries uniformly.
-      .repartition(corpus.sparkSession.conf
-        .get("spark.sql.shuffle.partitions", "32").toInt,
+      .repartition(Sessions.partsOf(corpus.sparkSession),
         col("query_id"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("cos_sim").desc, col("neighbor_id").asc)

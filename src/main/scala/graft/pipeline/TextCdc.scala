@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.Sessions
+
 /** Content-defined chunking over document TEXT — the sub-document dedup
   * face of the text family (the LBFS/FastCDC storage-dedup technique the
   * audio modality already has in [[Audio.cdcChunks]]).
@@ -58,7 +60,7 @@ object TextCdc {
       // pinned width: REPARTITION_BY_COL is AQE-coalescable back to one
       // partition on small inputs, which serializes the per-char kernel
       .repartition(
-        docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt,
+        Sessions.partsOf(docs.sparkSession),
         col("doc_id"))
     val out: Dataset[Row] = projected.mapPartitions { it =>
       it.flatMap { row =>

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Sessions
 import graft.functions.PolyHash
 
 /** Text-analysis operators for large-scale training-data pipelines: ASCII
@@ -854,8 +855,7 @@ object TextOps {
       // pinned width — a bare REPARTITION_BY_COL is AQE-coalescable back
       // to one partition on small inputs, serializing the gram-count agg
       // and the self-join behind it (the Dedup.spreadById trap)
-      .repartition(df.sparkSession.conf
-        .get("spark.sql.shuffle.partitions", "32").toInt, col("gh"))
+      .repartition(Sessions.partsOf(df.sparkSession), col("gh"))
     // max(pos) >= 0 is vacuously true (positions are non-negative); it is
     // here ONLY so column pruning cannot drop `pos` from this branch —
     // pruned, the two exchange children differ by one column and the
@@ -1237,7 +1237,7 @@ object TextOps {
     require(k >= 1 && window >= 1, s"need k >= 1, window >= 1; got k=$k window=$window")
     val cap = WinnowPosCap
     df.repartition(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt,
+        Sessions.partsOf(df.sparkSession),
         col(idCol)) // pinned: REPARTITION_BY_COL is AQE-coalescable to 1
       .select(col(idCol),
         explode(graft.functions.Signatures.winnowEncoded(col(textCol), k, window)).as("we"))

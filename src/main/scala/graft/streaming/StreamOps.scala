@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
+import graft.core.Sessions
 import graft.ts.SeriesStore
 import graft.ts.model.Period
 
@@ -967,7 +968,7 @@ object StreamOps {
       modelId: String, batchId: Long,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val s = batch.sparkSession
-    val shuffleN = s.conf.get("spark.sql.shuffle.partitions").toInt
+    val shuffleN = Sessions.partsOf(s)
     val hconf = s.sparkContext.hadoopConfiguration
     val dest = new org.apache.hadoop.fs.Path(s"$base/codes/model_id=$modelId")
     val fs = dest.getFileSystem(hconf)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Sessions
 import graft.ts.model.Period
 
 /** Parquet warehouse of series points: one directory per container, the
@@ -253,7 +254,7 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
     val w = Window.partitionBy("bucket", "series_id", "ts")
       .orderBy(col("__gen").desc, col("value").desc)
     val merged = batch
-      .repartition(spark.conf.get("spark.sql.shuffle.partitions", "32").toInt, col("bucket"))
+      .repartition(Sessions.partsOf(spark), col("bucket"))
       .withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1)
       .drop("__rn", "__gen")

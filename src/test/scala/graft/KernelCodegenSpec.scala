@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.Signatures
+import graft.functions.{Signatures, VecMeanAgg}
 
 /** Bit-parity of the codegen'd vector/jaccard kernels against their
   * interpreted `eval` path.
@@ -306,5 +306,24 @@ class KernelCodegenSpec extends SparkSpec {
       assert(msgs.exists(_.contains("randomProject: expected dim 64, got 3")),
         s"codegen=$codegen: $ex")
     }
+  }
+
+  /** `vecMean` of the rows per expression, in each mode. */
+  private def vecMeanInModes(exprs: String*): Seq[Option[Seq[Double]]] =
+    for (codegen <- Seq(true, false)) yield inMode(codegen) { s =>
+      val df = rowsPerExpr(s, exprs: _*)
+      Option(df.agg(VecMeanAgg.vecMean(df("v"))).head().getSeq[Double](0))
+    }
+
+  test("VecMeanAgg: a group of zero-width arrays is null in both modes, like a group of nulls") {
+    val empty = "cast(array() as array<double>)"
+    assert(vecMeanInModes(empty, empty, "cast(null as array<double>)") == Seq(None, None))
+  }
+
+  test("VecMeanAgg: zero-width arrays beside width-d ones contribute nothing in both modes") {
+    val empty = "cast(array() as array<double>)"
+    val want = Some(Seq(2.0, 4.0))
+    assert(vecMeanInModes(empty, "array(1.0d, 2.0d)", empty, "array(3.0d, 6.0d)", empty) ==
+      Seq(want, want))
   }
 }

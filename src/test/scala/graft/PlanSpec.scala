@@ -840,4 +840,28 @@ class PlanSpec extends SparkSpec {
     assert(scanStr.contains("PartitionFilters") && scanStr.contains("cell"),
       "probed-cell restriction must reach the codes scan as a partition filter")
   }
+
+  test("Bench's row counters equal observe's counts, stay with their row and add no job") {
+    val rows = Seq("graph_pagerank", "sim_rp_topk")
+    val fns = rows.map(SparkEntry.queries)
+    fns.foreach(_(spark, sfDir).count()) // warm, as Bench's warm-up pass does
+    val counters = new Bench.RowCounters
+    spark.sparkContext.addSparkListener(counters)
+    val (measured, _) = try observe {
+      rows.zip(fns).foreach { case (r, fn) => Bench.timeRow(spark, sfDir, fn, Some(r)) }
+      Bench.timeRow(spark, sfDir, fns.head, None) // unattributed: counted nowhere
+      counters.drain(spark)
+    } finally spark.sparkContext.removeSparkListener(counters)
+    val layers = counters.layers
+    assert(layers.keySet == rows.toSet, layers)
+    val jobs = rows.zip(fns).map { case (r, fn) =>
+      val (built, _) = observe(fn(spark, sfDir))
+      val (all, _) = observe(fn(spark, sfDir).count())
+      val l = layers(r)
+      assert(l.constructionJobs == built && l.jobs == all, s"$r: $l vs $built built, $all in all")
+      assert(l.stages >= 1 && l.tasks >= l.stages && l.taskMs >= 0, s"$r: $l")
+      all
+    }
+    assert(measured == jobs.sum + jobs.head, s"measured rows ran $measured jobs, $jobs unmeasured")
+  }
 }

@@ -14,6 +14,55 @@ class SimilaritySpec extends SparkSpec {
 
   private lazy val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
 
+  /** Deterministic clustered corpus for the recall floor: `groups` well-
+    * separated clusters (near-orthogonal centers, small deterministic
+    * per-dimension jitter) of `perGroup` vectors each, dim = 2·groups.
+    * This is the regime ANN methods are FOR — on the bench's near-uniform
+    * synthetic embeddings (top cosine ≈ 0.33) no sublinear method retains
+    * recall (hyperplane/cell membership of a weakly-correlated neighbor is
+    * a coin flip — the curse of dimensionality), so the absolute floor is
+    * pinned here.
+    */
+  private def clusteredCorpus(groups: Int = 8, perGroup: Int = 50) =
+    corpus(groups, perGroup, dim = 2 * groups, jitter = 0.05f) { (g, d) =>
+      if (d == 2 * g) 1.0f else if (d == 2 * g + 1) 0.5f else 0.0f
+    }
+
+  /** Mid-separation corpus: clusters whose centers OVERLAP on shared
+    * dimensions (center g is 1.0 on dim g and 0.8 on dim g+1, so adjacent
+    * centers have cosine ≈ 0.6) with 12× the jitter of [[clusteredCorpus]].
+    * The regime between the well-separated floor corpus and the hopeless
+    * uniform bench embeddings — where real embedding spaces live: SRP
+    * hyperplanes cut through the fattened cluster interiors, so the SRP
+    * family measurably loses recall (measured 0.85 at 8×25) while
+    * label-cell IVF holds 1.0 — the discrimination the well-separated
+    * corpus cannot show (everything measures 1.0 there).
+    */
+  private def overlappingCorpus(groups: Int = 8, perGroup: Int = 50) =
+    corpus(groups, perGroup, dim = groups + 1, jitter = 0.6f) { (g, d) =>
+      if (d == g) 1.0f else if (d == g + 1) 0.8f else 0.0f
+    }
+
+  /** `groups` × `perGroup` vectors (vec_id, label = group, embedding): each
+    * element is its group's center plus a deterministic jitter in
+    * [0, `jitter`).
+    */
+  private def corpus(groups: Int, perGroup: Int, dim: Int, jitter: Float)(
+      center: (Int, Int) => Float): org.apache.spark.sql.DataFrame = {
+    val rows = for {
+      g <- 0 until groups
+      i <- 0 until perGroup
+    } yield {
+      val id = (g * perGroup + i).toLong
+      val v = Array.tabulate(dim) { d =>
+        center(g, d) + (((id * 1315423911L + d * 2654435761L) % 1000L + 1000L) % 1000L)
+          .toFloat / 1000f * jitter
+      }
+      (id, g.toLong, v)
+    }
+    rows.toDF("vec_id", "label", "embedding")
+  }
+
   test("centroids are per-dimension means for ANY dimension (here 3-dim)") {
     val d = Seq(
       (1L, "a", Array(1.0f, 2.0f, 3.0f)),
@@ -299,10 +348,10 @@ class SimilaritySpec extends SparkSpec {
 
   test("ANN recall floor: >= 0.9 vs brute force on clustered data at fixed params") {
     // the regime ANN methods are for: well-separated clusters (on the
-    // bench's near-uniform embeddings no sublinear method retains recall —
-    // RecallAudit records that curve honestly). Floor pinned at 0.9 with
+    // bench's near-uniform embeddings no sublinear method retains recall;
+    // ROUND_r06.md records that curve). Floor pinned at 0.9 with
     // real margin: all three methods measure 1.0 on this corpus.
-    val c = RecallAudit.clusteredCorpus(spark)
+    val c = clusteredCorpus()
     val q = c.where(col("vec_id") % 50 === 0) // one query per cluster
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("query_id", "neighbor_id").collect()
@@ -320,7 +369,7 @@ class SimilaritySpec extends SparkSpec {
     assert(rMp >= 0.9, s"srpTopKMultiprobe recall@5 $rMp < 0.9")
     // PQ serving shape: the exact re-rank over a tie-group-covering
     // shortlist restores the compressed index to full recall (raw ADC at
-    // this code size measures 0.28 — RecallAudit records the ladder)
+    // this code size measures 0.28, ROUND_r06.md records the ladder)
     val rPq = recall(pairs(
       Similarity.pqTopKRerank(q, c, topK = 5, candidates = 100, m = 2, kc = 8)))
     assert(rPq >= 0.9, s"pqTopKRerank recall@5 $rPq < 0.9")
@@ -341,8 +390,8 @@ class SimilaritySpec extends SparkSpec {
     // SRP hyperplanes cut through the fattened cluster interiors, so this
     // corpus discriminates (SRP family measures 0.85, IVF 1.0) where the
     // well-separated corpus reads 1.0 across the board — the floor pins
-    // against regressions in hashing/probing, the audit records the curve
-    val c = RecallAudit.overlappingCorpus(spark, perGroup = 25)
+    // against regressions in hashing/probing
+    val c = overlappingCorpus(perGroup = 25)
     val q = c.where(col("vec_id") % 25 === 0) // one query per cluster
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("query_id", "neighbor_id").collect()
@@ -795,7 +844,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("rpTopK: full shortlist equals brute force exactly; recall floor on clustered data; shortlist < k refuses") {
-    val c = RecallAudit.clusteredCorpus(spark)
+    val c = clusteredCorpus()
     val n = c.count().toInt
     val q = c.where(col("vec_id") % 50 === 0)
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Int, Double)] =
@@ -820,7 +869,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("sqTopK: full shortlist equals brute force exactly; int8 shortlist recall floor; shortlist < k refuses") {
-    val c = RecallAudit.clusteredCorpus(spark)
+    val c = clusteredCorpus()
     val n = c.count().toInt
     val q = c.where(col("vec_id") % 50 === 0)
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Int, Double)] =
