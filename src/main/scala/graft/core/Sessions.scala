@@ -1,5 +1,10 @@
 package graft.core
 
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermission
+
+import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 
 /** Session factory with the configs this engine assumes everywhere.
@@ -13,6 +18,11 @@ import org.apache.spark.sql.SparkSession
   *    `Tables.events` via `unix_micros`. Either way the engine keeps time as
   *    epoch-nano longs end-to-end (cheap, exact, timezone-free) and only
   *    converts to timestamps at display boundaries (SeriesOps.displayMs).
+  *  - `file:` paths go through [[PosixLocalFileSystem]]: Hadoop's local
+  *    FileSystem whose permission call is a `java.nio` call instead of a
+  *    forked `chmod` (see there). A session built another way keeps
+  *    Hadoop's stock local FileSystem, with the same files, bytes and mode
+  *    bits, only slower to create them.
   */
 object Sessions {
 
@@ -38,6 +48,7 @@ object Sessions {
       .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[PosixLocalFileSystem].getName)
 
   /** Local session for tests, `graft.Bench` and `graft.Verify`. */
   def local(appName: String = "graft", cores: Int = 4): SparkSession = {
@@ -62,5 +73,41 @@ object Sessions {
       else spark.conf.get("spark.sql.shuffle.partitions").toInt
     require(parts >= 1, s"parts must be >= 1, got $parts")
     parts
+  }
+}
+
+/** Hadoop's `file:` FileSystem (checksums, umask handling and every other
+  * call unchanged) over a raw FS that sets permissions with
+  * `Files.setPosixFilePermissions`. Without the native `libhadoop`, the
+  * stock `RawLocalFileSystem.setPermission` forks a `chmod` process, and it
+  * runs on every file create (twice with the `.crc` file) and every
+  * `mkdirs`, so each parquet part file a write commits costs several
+  * process starts. The mode bits are the same; a mode with bits
+  * beyond `rwxrwxrwx` (sticky, setuid), which `java.nio` cannot express,
+  * and a non-POSIX file system still take Hadoop's own path.
+  */
+class PosixLocalFileSystem extends LocalFileSystem(new PosixLocalFileSystem.Raw)
+
+object PosixLocalFileSystem {
+  private val bits = Array(
+    PosixFilePermission.OTHERS_EXECUTE, PosixFilePermission.OTHERS_WRITE,
+    PosixFilePermission.OTHERS_READ, PosixFilePermission.GROUP_EXECUTE,
+    PosixFilePermission.GROUP_WRITE, PosixFilePermission.GROUP_READ,
+    PosixFilePermission.OWNER_EXECUTE, PosixFilePermission.OWNER_WRITE,
+    PosixFilePermission.OWNER_READ)
+
+  private val posix =
+    java.nio.file.FileSystems.getDefault.supportedFileAttributeViews.contains("posix")
+
+  final class Raw extends RawLocalFileSystem {
+    override def setPermission(p: Path, permission: FsPermission): Unit = {
+      val mode = permission.toShort.toInt
+      if (!posix || (mode & ~0x1ff) != 0) super.setPermission(p, permission)
+      else {
+        val perms = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
+        for (i <- bits.indices if (mode & (1 << i)) != 0) perms.add(bits(i))
+        Files.setPosixFilePermissions(pathToFile(p).toPath, perms)
+      }
+    }
   }
 }

@@ -2,8 +2,10 @@ package graft.etl
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 
 import graft.ts.{Evaluate, SeriesStore}
 import graft.ts.model.Period
@@ -53,6 +55,12 @@ final class CollectionTask(
 
   require(readIds.length == storeIds.length, "read/store id vectors must zip")
 
+  /** The store id of each request position, one literal built once with
+    * the type `typedLit` would derive (no reflection per cycle).
+    */
+  private val storeIdOf = GraftBridge.column(
+    Literal.create(storeIds, ArrayType(StringType, containsNull = true)))
+
   @volatile var lastError: Option[Throwable] = None
   @volatile var batchesOk: Long = 0L
   /** Points in the last merged batch (the merge's bucket probe counts them). */
@@ -71,7 +79,7 @@ final class CollectionTask(
       // collection. An empty window is a no-op merge.
       val data = evaluate.evaluate(spark, readIds, p)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val rekeyed = data.select(typedLit(storeIds).getItem(col("ordinal")).as("series_id"),
+      val rekeyed = data.select(storeIdOf.getItem(col("ordinal")).as("series_id"),
         col("ts"), col("value"))
       val merged =
         try store.merge(container, rekeyed, overwrite = false)
@@ -91,6 +99,13 @@ final class CollectionTask(
 
   def healthy: Boolean = lastError.isEmpty
 }
+
+/** What [[ServiceManager.health]] reports for one task: its last
+  * successful batch (points, collection time `nowNs`, latency in ms), its
+  * last error, and how many times `healthCheck` has restarted it.
+  */
+final case class TaskHealth(name: String, lastBatchPoints: Long, lastSuccessNs: Long,
+    lastLatencyMs: Double, lastError: Option[Throwable], restarts: Long)
 
 /** Periodic task supervision (reference: weather/service/service_manager.py:21-98):
   * run each task every `waitTime`, health-check every `healthCheckInterval`,
@@ -113,14 +128,28 @@ final class ServiceManager(spark: SparkSession,
       } else None
     }
 
+  // read by health(), possibly from another thread than the one restarting
+  private val restarts =
+    tasks.map { case (t, _) => t.name -> new java.util.concurrent.atomic.AtomicLong() }.toMap
+
   /** Health probe: restart = clear error and run immediately (T6). */
   def healthCheck(nowNs: Long): Seq[String] =
     tasks.flatMap { case (task, _) =>
       if (!task.healthy) {
+        restarts(task.name).incrementAndGet()
         task.lastError = None
         task.collectOnce(spark, nowNs)
         Some(task.name)
       } else None
+    }
+
+  /** One snapshot per task, in task order, from values the cycles already
+    * computed: it runs no Spark job.
+    */
+  def health(): Seq[TaskHealth] =
+    tasks.map { case (t, _) =>
+      TaskHealth(t.name, t.lastBatchPoints, t.lastSuccessNs, t.lastLatencyMs,
+        t.lastError, restarts(t.name).get)
     }
 
   @volatile private var stopped = false

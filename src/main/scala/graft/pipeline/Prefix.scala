@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.MetadataBuilder
 
 import graft.core.Sessions
 
@@ -25,6 +26,10 @@ import graft.core.Sessions
   */
 object Prefix {
 
+  /** `__shard` metadata keys: the id column and width that cut the shards. */
+  private val ShardIdKey = "graft.prefix.idCol"
+  private val ShardWidthKey = "graft.prefix.shardWidth"
+
   /** Append `endCol` = inclusive running sum of `valCol` in `idCol` order
     * (within `groupCols` if given). The exclusive prefix is
     * `endCol - valCol`. Values must be non-negative longs at the caller's
@@ -41,16 +46,19 @@ object Prefix {
     * the input subtree twice through two sibling corpus exchanges.
     *
     * `keepShard = true` retains the internal `__shard` column (named
-    * `__shard`, = `idCol div shardWidth`) in the output so a CHAINED scan
-    * over the same `idCol`/`shardWidth` can reuse the established
-    * partitioning; a scan whose input already carries `__shard` trusts it
-    * (internal contract: only pass such a frame between consecutive
-    * Prefix scans with identical idCol and shardWidth).
+    * `__shard`, = `idCol div shardWidth`, its metadata recording both) in
+    * the output so a CHAINED scan over the same `idCol`/`shardWidth` can
+    * reuse the established partitioning. Chaining is an explicit opt-in:
+    * only a scan called with `chained = true` uses the input's `__shard`,
+    * and only one a `keepShard` scan with the same `idCol` and `shardWidth`
+    * made. Any other input carrying `__shard` fails with an
+    * `IllegalArgumentException` naming the mismatch.
     */
   def runningSum(df: DataFrame, idCol: String, valCol: String,
       groupCols: Seq[String] = Nil, shardWidth: Long = 1L << 20,
-      endCol: String = "__end", keepShard: Boolean = false): DataFrame =
-    scan(df, idCol, valCol, groupCols, shardWidth, endCol, keepShard,
+      endCol: String = "__end", keepShard: Boolean = false,
+      chained: Boolean = false): DataFrame =
+    scan(df, idCol, valCol, groupCols, shardWidth, endCol, keepShard, chained,
       sum(col(valCol)),
       (prefix, localEnd) => coalesce(prefix, lit(0L)) + localEnd,
       sum(col("__total")))
@@ -67,8 +75,9 @@ object Prefix {
     */
   def runningMax(df: DataFrame, idCol: String, valCol: String,
       groupCols: Seq[String] = Nil, shardWidth: Long = 1L << 20,
-      endCol: String = "__end", keepShard: Boolean = false): DataFrame =
-    scan(df, idCol, valCol, groupCols, shardWidth, endCol, keepShard,
+      endCol: String = "__end", keepShard: Boolean = false,
+      chained: Boolean = false): DataFrame =
+    scan(df, idCol, valCol, groupCols, shardWidth, endCol, keepShard, chained,
       max(col(valCol)),
       (prefix, localEnd) => greatest(prefix, localEnd),
       max(col("__total")))
@@ -80,9 +89,21 @@ object Prefix {
     */
   private def scan(df: DataFrame, idCol: String, valCol: String,
       groupCols: Seq[String], shardWidth: Long, endCol: String,
-      keepShard: Boolean, fold: Column,
+      keepShard: Boolean, chained: Boolean, fold: Column,
       combine: (Column, Column) => Column, prefixFold: Column): DataFrame = {
     require(shardWidth > 0, s"shardWidth must be positive, got $shardWidth")
+    val shardMeta = new MetadataBuilder()
+      .putString(ShardIdKey, idCol).putLong(ShardWidthKey, shardWidth).build()
+    val carried = df.schema.find(_.name == "__shard")
+    if (chained) {
+      val meta = carried.map(_.metadata).getOrElse(throw new IllegalArgumentException(
+        "Prefix scan: chained = true, but the input has no __shard column"))
+      require(meta == shardMeta,
+        s"Prefix scan: the input's __shard was not cut by idCol=$idCol, " +
+          s"shardWidth=$shardWidth (its metadata: ${meta.json})")
+    } else require(carried.isEmpty,
+      "Prefix scan: the input carries a __shard column; pass chained = true " +
+        "for the output of a keepShard scan, or drop it")
     val grp = groupCols.map(col)
     // The ONE corpus exchange of the scan, as an EXPLICIT pinned-width
     // repartition on the window's own partition keys rather than the
@@ -98,13 +119,12 @@ object Prefix {
     //    otherwise coalesce to one partition and serialize the window
     //    (the width is the session's shuffle.partitions — cluster-sized
     //    in production, never a local constant).
-    // A frame carrying __shard from a previous chained scan is ALREADY
-    // partitioned on these keys (same idCol/shardWidth contract), so the
-    // chain pays no second exchange.
+    // A chained frame, checked above, is ALREADY partitioned on these keys
+    // by the previous scan, so the chain pays no second exchange.
     val shuffleN = Sessions.partsOf(df.sparkSession)
-    val sharded = if (df.columns.contains("__shard")) df
+    val sharded = if (chained) df
       else {
-        val s0 = df.withColumn("__shard", expr(s"`$idCol` div $shardWidth"))
+        val s0 = df.select(col("*"), expr(s"`$idCol` div $shardWidth").as("__shard", shardMeta))
         s0.repartition(shuffleN, (grp :+ col("__shard")): _*)
       }
     val keys = grp :+ col("__shard")

@@ -1,7 +1,9 @@
 package graft.ts
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, MapType, StringType}
 
 import graft.ts.model.Period
 
@@ -41,9 +43,11 @@ final class Evaluate(registry: Map[String, SeriesSource]) {
     val parts: Seq[DataFrame] = byScheme.toSeq.map { case (scheme, group) =>
       source(scheme).read(spark, group.map(_._1).distinct, period)
     }
-    val ordinalsOf = withOrd.groupMap(_._1)(_._2)
+    // the type typedLit would derive, stated instead of reflected per call
+    val ordinalsOf = GraftBridge.column(Literal.create(withOrd.groupMap(_._1)(_._2),
+      MapType(StringType, ArrayType(IntegerType, containsNull = false), valueContainsNull = true)))
     parts.reduce(_ unionByName _)
-      .select(explode(typedLit(ordinalsOf).getItem(col("series_id"))).as("ordinal"),
+      .select(explode(ordinalsOf.getItem(col("series_id"))).as("ordinal"),
         col("series_id"), col("ts"), col("value"))
   }
 

@@ -168,4 +168,29 @@ class CollectionSpec extends SparkSpec {
     assert(task.healthy)
     assert(store.read("c").count() == 10)
   }
+
+  test("service manager health: one snapshot per task, a failing task's error and restarts") {
+    val down = new SeriesSource {
+      val name = "down"
+      def read(s: SparkSession, ids: Seq[String], period: Period): DataFrame =
+        throw new RuntimeException("source outage")
+      def find(s: SparkSession, query: String): Seq[TsInfo] = Seq.empty
+    }
+    val store = new SeriesStore(spark, tmpDir("graft-health"), numBuckets = 2)
+    val ok = mkTask(store, windowS = 60)
+    val bad = new CollectionTask("bad", new Evaluate(Map("down" -> down)),
+      store, "d", Seq("down://x/1"), Seq("shyft://d/x"), AbsolutePeriod(0L, 10 * S))
+    val mgr = new ServiceManager(spark, Seq(ok -> (300 * S), bad -> (300 * S)))
+    assert(mgr.health().map(h => (h.name, h.lastBatchPoints, h.lastError, h.restarts)) ==
+      Seq(("t", 0L, None, 0L), ("bad", 0L, None, 0L)))
+
+    mgr.tick(60 * S)
+    mgr.healthCheck(70 * S)
+    mgr.healthCheck(80 * S)
+    val Seq(good, failing) = mgr.health()
+    assert(good.name == "t" && good.lastBatchPoints == 60 && good.lastSuccessNs == 60 * S &&
+      good.lastLatencyMs > 0.0 && good.lastError.isEmpty && good.restarts == 0)
+    assert(failing.name == "bad" && failing.lastSuccessNs == 0L && failing.restarts == 2)
+    assert(failing.lastError.map(_.getMessage).contains("source outage"))
+  }
 }

@@ -1,10 +1,11 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.sources.{Netatmo, NetatmoSource}
+import graft.sources.{Netatmo, NetatmoSource, NetatmoV2}
 import graft.ts.{Evaluate, Identifiers}
 import graft.ts.model.Period
 
@@ -133,6 +134,50 @@ class NetatmoSpec extends SparkSpec {
     val want = rowsOf(referencePivot(raw, types))
     assert(rowsOf(fetch(eventsPath, uid, types, blockSize = 1)) == want)
     assert(rowsOf(fetch(eventsPath, uid, types, blockSize = 1 << 20)) == want)
+  }
+
+  /** The requested types of each module of the first catalog station. */
+  private def stationModules(): (Long, Seq[Seq[String]]) = {
+    val uid = cat.limit(1).collect()(0).getAs[Long]("user_id")
+    val mods = cat.where(col("user_id") === uid).select("module_name", "data_type").collect()
+      .groupMap(_.getString(0))(_.getString(1)).toSeq.sortBy(_._1).map(_._2.toSeq.sorted)
+    (uid, mods)
+  }
+
+  private val everything = (Long.MinValue / 2, Long.MaxValue / 2)
+
+  test("a scan plans its pages once: later planning calls return the first call's pages") {
+    val (uid, mods) = stationModules()
+    for (blockSize <- Seq(1, 16, 1024)) {
+      val before = NetatmoV2.planningPasses.get()
+      val plan = fetch(eventsPath, uid, mods.head, blockSize).queryExecution.executedPlan
+      val scan = plan.collectFirst { case b: BatchScanExec => b.batch }.get
+      val first = scan.planInputPartitions().toSeq
+      val again = scan.planInputPartitions().toSeq
+      assert(NetatmoV2.planningPasses.get() - before == 1, s"blockSize=$blockSize")
+      val fresh = NetatmoV2.planPages(eventsPath, uid, Seq(mods.head), everything._1,
+        everything._2, blockSize, NetatmoV2.schema.fieldNames.toSeq)
+      assert(first == fresh && again == fresh, s"blockSize=$blockSize")
+      assert(fresh.nonEmpty)
+    }
+  }
+
+  test("one planning pass over a station's modules plans each module's own pages") {
+    val (uid, mods) = stationModules()
+    assert(mods.size == 2, s"fixture station should carry two modules: $mods")
+    def plan(ms: Seq[Seq[String]]) = NetatmoV2.planPages(eventsPath, uid, ms,
+      everything._1, everything._2, 16, NetatmoV2.schema.fieldNames.toSeq)
+    val before = NetatmoV2.planningPasses.get()
+    val both = plan(mods)
+    assert(NetatmoV2.planningPasses.get() - before == 1)
+    assert(both == plan(Seq(mods(0))) ++ plan(Seq(mods(1))))
+    assert(both.map(_.types).distinct == mods)
+    // the station scan serves each module's grid, as its own scan would
+    val station = spark.read.format("graft-netatmo").option("path", eventsPath)
+      .option("userId", uid).option("types", mods.map(_.mkString(",")).mkString(";"))
+      .option("blockSize", 16).load()
+    assert(rowsOf(station) ==
+      rowsOf(fetch(eventsPath, uid, mods(0), 16).union(fetch(eventsPath, uid, mods(1), 16))))
   }
 
   test("re-keying keeps the fan-out: two ids naming one measurement both get every row") {

@@ -205,6 +205,21 @@ class PlanSpec extends SparkSpec {
     assert(task.lastBatchPoints > 0 && task.lastSuccessNs == 2L && task.lastLatencyMs > 0.0)
   }
 
+  test("a collection cycle plans each station's pages in one driver pass") {
+    val (src, _, ids, all) = netatmoFixture()
+    assert(ids.map(_._2).distinct.size == 2, s"fixture station should carry two modules: $ids")
+    val store = new SeriesStore(spark, tmpDir("graft-cycle-passes"), numBuckets = 4)
+    val task = new CollectionTask("passes", new Evaluate(Map("netatmo" -> src)), store, "c",
+      ids.map(_._1), ids.map { case (_, m, dt) => s"shyft://c/$m/$dt" },
+      AbsolutePeriod(all.startNs, all.endNs))
+    task.collectOnce(spark, nowNs = 1L)
+    val before = graft.sources.NetatmoV2.planningPasses.get()
+    task.collectOnce(spark, nowNs = 2L)
+    assert(task.healthy, s"second cycle failed: ${task.lastError}")
+    val passes = graft.sources.NetatmoV2.planningPasses.get() - before
+    assert(passes == 1, s"a collection cycle made $passes page-planning passes")
+  }
+
   test("a merge into an existing container is one exchange on bucket, no second sort") {
     val store = new SeriesStore(spark, tmpDir("graft-merge-plan"), numBuckets = 4)
     def pts(t0: Long) = (t0 until t0 + 16).map(t => (s"shyft://c/s-${t % 5}", t, t.toDouble))
