@@ -48,17 +48,16 @@ object Prefix {
     * `keepShard = true` retains the internal `__shard` column (named
     * `__shard`, = `idCol div shardWidth`, its metadata recording both) in
     * the output so a CHAINED scan over the same `idCol`/`shardWidth` can
-    * reuse the established partitioning. Chaining is an explicit opt-in:
-    * only a scan called with `chained = true` uses the input's `__shard`,
-    * and only one a `keepShard` scan with the same `idCol` and `shardWidth`
-    * made. Any other input carrying `__shard` fails with an
-    * `IllegalArgumentException` naming the mismatch.
+    * reuse the established partitioning: a scan reuses the input's
+    * `__shard` only when its metadata names the scan's own `idCol` and
+    * `shardWidth`. Any other input carrying `__shard` (a stale column, or
+    * one cut at another width) fails with an `IllegalArgumentException`
+    * naming the mismatch.
     */
   def runningSum(df: DataFrame, idCol: String, valCol: String,
       groupCols: Seq[String] = Nil, shardWidth: Long = 1L << 20,
-      endCol: String = "__end", keepShard: Boolean = false,
-      chained: Boolean = false): DataFrame =
-    scan(df, idCol, valCol, groupCols, shardWidth, endCol, keepShard, chained,
+      endCol: String = "__end", keepShard: Boolean = false): DataFrame =
+    scan(df, idCol, valCol, groupCols, shardWidth, endCol, keepShard,
       sum(col(valCol)),
       (prefix, localEnd) => coalesce(prefix, lit(0L)) + localEnd,
       sum(col("__total")))
@@ -75,9 +74,8 @@ object Prefix {
     */
   def runningMax(df: DataFrame, idCol: String, valCol: String,
       groupCols: Seq[String] = Nil, shardWidth: Long = 1L << 20,
-      endCol: String = "__end", keepShard: Boolean = false,
-      chained: Boolean = false): DataFrame =
-    scan(df, idCol, valCol, groupCols, shardWidth, endCol, keepShard, chained,
+      endCol: String = "__end", keepShard: Boolean = false): DataFrame =
+    scan(df, idCol, valCol, groupCols, shardWidth, endCol, keepShard,
       max(col(valCol)),
       (prefix, localEnd) => greatest(prefix, localEnd),
       max(col("__total")))
@@ -89,21 +87,17 @@ object Prefix {
     */
   private def scan(df: DataFrame, idCol: String, valCol: String,
       groupCols: Seq[String], shardWidth: Long, endCol: String,
-      keepShard: Boolean, chained: Boolean, fold: Column,
+      keepShard: Boolean, fold: Column,
       combine: (Column, Column) => Column, prefixFold: Column): DataFrame = {
     require(shardWidth > 0, s"shardWidth must be positive, got $shardWidth")
     val shardMeta = new MetadataBuilder()
       .putString(ShardIdKey, idCol).putLong(ShardWidthKey, shardWidth).build()
     val carried = df.schema.find(_.name == "__shard")
-    if (chained) {
-      val meta = carried.map(_.metadata).getOrElse(throw new IllegalArgumentException(
-        "Prefix scan: chained = true, but the input has no __shard column"))
-      require(meta == shardMeta,
-        s"Prefix scan: the input's __shard was not cut by idCol=$idCol, " +
-          s"shardWidth=$shardWidth (its metadata: ${meta.json})")
-    } else require(carried.isEmpty,
-      "Prefix scan: the input carries a __shard column; pass chained = true " +
-        "for the output of a keepShard scan, or drop it")
+    carried.foreach { f =>
+      require(f.metadata == shardMeta,
+        s"Prefix scan: the input's __shard was not cut by a keepShard scan with " +
+          s"idCol=$idCol, shardWidth=$shardWidth (its metadata: ${f.metadata.json})")
+    }
     val grp = groupCols.map(col)
     // The ONE corpus exchange of the scan, as an EXPLICIT pinned-width
     // repartition on the window's own partition keys rather than the
@@ -122,7 +116,7 @@ object Prefix {
     // A chained frame, checked above, is ALREADY partitioned on these keys
     // by the previous scan, so the chain pays no second exchange.
     val shuffleN = Sessions.partsOf(df.sparkSession)
-    val sharded = if (chained) df
+    val sharded = if (carried.isDefined) df
       else {
         val s0 = df.select(col("*"), expr(s"`$idCol` div $shardWidth").as("__shard", shardMeta))
         s0.repartition(shuffleN, (grp :+ col("__shard")): _*)

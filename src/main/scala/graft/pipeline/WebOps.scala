@@ -487,7 +487,7 @@ object WebOps {
     // once — the URL→PSL-domain projection runs exactly once, below that
     // exchange), and the SECOND scan reuses the FIRST's (domain, __shard)
     // partitioning via the retained __shard column (same idCol, same
-    // shardWidth — the chained-scan opt-in), so it adds no exchange at
+    // shardWidth — the chained-scan contract), so it adds no exchange at
     // all. The barrier repartitions this replaced existed only to stop the
     // two-branch double execution the new scan shape no longer has.
     val base = fetches.select(col(idCol),
@@ -500,7 +500,7 @@ object WebOps {
       .drop("__one", "__cum")
       .withColumn("__v", col("arrival_ms") - lit(delayMs) * col("fetch_rank"))
     Prefix.runningMax(ranked, idCol, "__v", groupCols = Seq("domain"),
-        shardWidth = shardWidth, endCol = "__m", chained = true)
+        shardWidth = shardWidth, endCol = "__m")
       .withColumn("scheduled_ms", lit(delayMs) * col("fetch_rank") + col("__m"))
       .withColumn("wait_ms", col("scheduled_ms") - col("arrival_ms"))
       .drop("__v", "__m")

@@ -163,20 +163,12 @@ final class NetatmoSource(catalogDf: DataFrame, eventsPoints: DataFrame,
     * missing cells as NaN (P5, repository.py:88-91) — already in long
     * format, one row per (axis point, requested type).
     */
-  def getMeasurements(userId: Long, types: Seq[String], period: Period): DataFrame =
-    getStationMeasurements(userId, Seq(types), period)
-
-  /** [[getMeasurements]] for several modules of one station in one scan:
-    * each module keeps its own axis, and the pages of all of them are
-    * planned in one driver pass (the [[NetatmoV2]] planning contract).
-    */
-  def getStationMeasurements(userId: Long, modules: Seq[Seq[String]], period: Period): DataFrame = {
-    require(modules.nonEmpty && modules.forall(_.nonEmpty),
-      "getMeasurements needs at least one measurement type per module")
+  def getMeasurements(userId: Long, types: Seq[String], period: Period): DataFrame = {
+    require(types.nonEmpty, "getMeasurements needs at least one measurement type")
     eventsPoints.sparkSession.read.format("graft-netatmo")
       .option("path", eventsPath)
       .option("userId", userId)
-      .option("types", modules.map(_.mkString(",")).mkString(";"))
+      .option("types", types.mkString(","))
       .option("startNs", period.startNs)
       .option("endNs", period.endNs)
       .option("blockSize", blockSize)
@@ -194,15 +186,12 @@ final class NetatmoSource(catalogDf: DataFrame, eventsPoints: DataFrame,
       .toMap
 
   /** Read callback (S3, repository.py:220-265): parse ids (P2), bind to the
-    * catalog (J1 — a driver-side lookup in [[catalogKeys]]), and fetch each
-    * station's requested modules in ONE paginated scan with only the
-    * requested measurement columns (request coalescing + projection
-    * pushdown, repository.py:242-255), so its pages are planned in one
-    * driver pass. Rows are re-keyed to the verbatim requested ids through a
-    * literal data_type → ids map: every id that binds a measurement gets
-    * its rows, with no join. A type requested under two modules of one
-    * station would make that map ambiguous, so such a station gets one
-    * scan per module instead.
+    * catalog (J1 — a driver-side lookup in [[catalogKeys]]), group by
+    * (station, module) so N series on one module cost ONE paginated fetch
+    * with only the requested measurement columns (request coalescing +
+    * projection pushdown, repository.py:242-255), and re-key rows to the
+    * verbatim requested ids through a literal data_type → ids map: every id
+    * that binds a measurement gets its rows, with no join.
     */
   def read(spark: SparkSession, ids: Seq[String], period: Period): DataFrame = {
     val bound = ids.map { id =>
@@ -212,24 +201,18 @@ final class NetatmoSource(catalogDf: DataFrame, eventsPoints: DataFrame,
         throw new IllegalArgumentException(s"id not in catalog: $id"))
       (id, uid, p("module_name"), p("data_type"))
     }
-    // One lazy V2 scan per station — after the first call's catalog bind no
-    // driver action runs here; Spark schedules every scan's block
+    // One lazy V2 scan per module — after the first call's catalog bind no
+    // driver action runs here; Spark schedules every module's block
     // partitions together when the unioned plan executes.
-    val parts = bound.groupBy(_._2).toSeq.flatMap { case (uid, station) =>
-      val modules = station.groupBy(_._3).values.toSeq
-      val typesOf = modules.map(_.map(_._4).distinct)
-      val scans =
-        if (typesOf.flatten.distinct.size == typesOf.map(_.size).sum) Seq(modules)
-        else modules.map(Seq(_))
-      scans.map { scan =>
-        val idsOf = scan.flatten.groupMap(_._4)(_._1).view.mapValues(_.distinct).toMap
-        // the type typedLit would derive, stated instead of reflected per read
-        val idsOfLit = GraftBridge.column(Literal.create(idsOf,
-          MapType(StringType, ArrayType(StringType, containsNull = true), valueContainsNull = true)))
-        getStationMeasurements(uid, scan.map(_.map(_._4).distinct), period)
-          .select(explode(idsOfLit.getItem(col("data_type"))).as("series_id"),
-            col("ts"), col("value"))
-      }
+    val groups = bound.groupBy { case (_, uid, module, _) => (uid, module) }.toSeq
+    val parts = groups.map { case ((uid, _), group) =>
+      val idsOf = group.groupMap(_._4)(_._1).view.mapValues(_.distinct).toMap
+      // the type typedLit would derive, stated instead of reflected per read
+      val idsOfLit = GraftBridge.column(Literal.create(idsOf,
+        MapType(StringType, ArrayType(StringType, containsNull = true), valueContainsNull = true)))
+      getMeasurements(uid, group.map(_._4).distinct, period)
+        .select(explode(idsOfLit.getItem(col("data_type"))).as("series_id"),
+          col("ts"), col("value"))
     }
     parts.reduce(_ unionByName _)
   }

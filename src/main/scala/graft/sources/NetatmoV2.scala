@@ -23,31 +23,23 @@ import org.apache.spark.unsafe.types.UTF8String
   * The reference advances a `start` cursor one past each block's last
   * returned point, one sequential API round trip at a time. Spark-first,
   * pagination is PLANNING metadata, not a driver loop: ONE metadata pass
-  * ([[NetatmoV2.planPages]]) resolves each module's time axis into block
-  * boundary offsets (`ceil(n_axis / blockSize)` blocks per module), and
-  * each `InputPartition` then fetches its own block independently on an
-  * executor — the blocks run in parallel, and no driver `.collect()` probe
-  * ever executes.
+  * ([[NetatmoV2.planPages]]) resolves the module's shared time axis into
+  * block boundary offsets (`ceil(n_axis / blockSize)` blocks), and each
+  * `InputPartition` then fetches its own block independently on an
+  * executor — the blocks of one module run in parallel, and no driver
+  * `.collect()` probe ever executes.
   *
-  * Planning contract:
-  *  - `types` lists the requested measurement types of ONE station
-  *    (`userId`), grouped by module: `;` separates modules, `,` the types
-  *    of one module (`"CO2,Noise;Humidity,Temperature"`). Every module
-  *    keeps its own axis and its own pages; a plain `"click,view"` is one
-  *    module.
-  *  - One driver pass over the station's readings plans the pages of
-  *    every module of the scan, and the pages are memoized in the `Scan`:
-  *    Spark plans a scan more than once (`persist` plans it eagerly, and
-  *    execution re-plans the copied physical node), and each later call
-  *    returns the first call's pages. [[NetatmoV2.planningPasses]] counts
-  *    the passes.
+  * Planning contract: the pages are planned once per `Scan` and memoized
+  * there. Spark plans a scan more than once (`persist` plans it eagerly,
+  * and execution re-plans the copied physical node); each later
+  * `planInputPartitions` returns the first call's pages.
+  * [[NetatmoV2.planningPasses]] counts the passes.
   *
   * Blocks are cut on distinct axis timestamps, so no timestamp is split
   * across two pages: each page reader builds the API's grid for its own
-  * block ([[NetatmoV2.pageGrid]]: one cell per (axis point, requested type
-  * of the page's module), NaN where the type has no reading) and emits it
-  * in long format. The scan is the whole fetch — no exchange, no join on
-  * top.
+  * block ([[NetatmoV2.pageGrid]]: one cell per (axis point, requested type),
+  * NaN where the type has no reading) and emits it in long format. The scan
+  * is the whole fetch — no exchange, no join on top.
   *
   * {{{
   *   spark.read.format("graft-netatmo")
@@ -84,33 +76,26 @@ object NetatmoV2 {
     StructField("value", DoubleType, nullable = false)))
 
   /** Driver-side page-planning passes run in this JVM: one per planned
-    * scan, whatever its module count (see the planning contract above).
+    * scan (see the planning contract above).
     */
   val planningPasses = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Plan the pages of every module of one station in ONE pass over its
-    * readings in [startNs, endNs): each module's axis (every timestamp with
-    * a reading of one of its types) is cut into blocks of `blockSize`
-    * distinct timestamps, so a page holds whole timestamps. Pages come
-    * module by module, in `modules` order, each module's in time order —
-    * the same pages one pass per module would plan. Driver state after the
-    * pass is O(n_axis / blockSize) boundary pairs per module.
+  /** The S2 cursor loop as offsets: one pass over the module's readings in
+    * [startNs, endNs) cuts its axis (every timestamp with a reading of one
+    * of `types`) into blocks of `blockSize` distinct timestamps, so a page
+    * holds whole timestamps. Driver state after the pass is
+    * O(n_axis / blockSize) boundary pairs.
     */
-  private[graft] def planPages(path: String, userId: Long, modules: Seq[Seq[String]],
+  private[graft] def planPages(path: String, userId: Long, types: Seq[String],
       startNs: Long, endNs: Long, blockSize: Int, columns: Seq[String]): Seq[NetatmoPage] = {
     planningPasses.incrementAndGet()
-    val axes = modules.map(_ => new java.util.TreeSet[java.lang.Long]())
-    val axesOf: Map[String, Seq[java.util.TreeSet[java.lang.Long]]] =
-      modules.zip(axes).flatMap { case (types, axis) => types.map(_ -> axis) }
-        .groupMap(_._1)(_._2)
-    FixtureDeviceApi.moduleEvents(path, userId, axesOf.keySet, startNs, endNs) {
-      (ts, dataType, _) => axesOf(dataType).foreach(_.add(ts))
+    val axis = new java.util.TreeSet[java.lang.Long]()
+    FixtureDeviceApi.moduleEvents(path, userId, types.toSet, startNs, endNs) {
+      (ts, _, _) => axis.add(ts); ()
     }
-    modules.zip(axes).flatMap { case (types, axis) =>
-      axis.asScala.iterator.map(_.longValue()).grouped(blockSize).map { block =>
-        NetatmoPage(path, userId, types, block.head, block.last, columns)
-      }
-    }
+    axis.asScala.iterator.map(_.longValue()).grouped(blockSize).map { block =>
+      NetatmoPage(path, userId, types, block.head, block.last, columns)
+    }.toSeq
   }
 
   /** The API surface of one page: the page's axis (every timestamp with a
@@ -298,10 +283,9 @@ private[sources] class NetatmoScanBuilder(options: CaseInsensitiveStringMap)
   // has no data" instead of surfacing the misconfiguration
   private val userId = Option(options.get("userId")).map(_.toLong).getOrElse(
     throw new IllegalArgumentException("graft-netatmo requires option 'userId'"))
-  /** The requested types, one group per module (see the planning contract). */
-  private val modules: Seq[Seq[String]] =
-    Option(options.get("types")).toSeq.flatMap(_.split(";").toSeq)
-      .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty)).filter(_.nonEmpty)
+  private val types: Seq[String] =
+    Option(options.get("types")).map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
+      .getOrElse(Seq.empty)
   private val startNs = options.getLong("startNs", Long.MinValue / 2)
   private val endNs = options.getLong("endNs", Long.MaxValue / 2)
   private val blockSize = options.getInt("blockSize", 1024)
@@ -313,12 +297,11 @@ private[sources] class NetatmoScanBuilder(options: CaseInsensitiveStringMap)
     override def readSchema(): StructType = required
     override def toBatch: Batch = this
     override def description(): String =
-      s"graft-netatmo user=$userId types=[${modules.map(_.mkString(",")).mkString(";")}] " +
-        s"blockSize=$blockSize"
+      s"graft-netatmo user=$userId types=[${types.mkString(",")}] blockSize=$blockSize"
 
     /** The S2 cursor loop as offsets, planned once per scan. */
     private lazy val pages: Array[InputPartition] =
-      NetatmoV2.planPages(path, userId, modules, startNs, endNs, blockSize,
+      NetatmoV2.planPages(path, userId, types, startNs, endNs, blockSize,
         required.fieldNames.toSeq).toArray
 
     override def planInputPartitions(): Array[InputPartition] = pages.clone()

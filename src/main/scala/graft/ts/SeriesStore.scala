@@ -120,12 +120,11 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
   def ensureContainer(container: String): Unit =
     fs.mkdirs(new Path(containerPath(container)))
 
-  /** Bucket assignment of a series-id column as a Catalyst column
-    * (codegen'd crc32 over the id's UTF-8 bytes) — MUST stay in sync with
-    * [[bucketOf]].
+  /** Bucket assignment as a Catalyst column (codegen'd crc32 over the id's
+    * UTF-8 bytes) — MUST stay in sync with [[bucketOf]].
     */
-  private def bucketCol(seriesId: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    pmod(crc32(seriesId.cast("binary")), lit(numBuckets.toLong)).cast("int")
+  private def bucketCol: org.apache.spark.sql.Column =
+    pmod(crc32(col("series_id").cast("binary")), lit(numBuckets.toLong)).cast("int")
 
   /** Driver-side twin of [[bucketCol]] for partition pruning of id reads. */
   def bucketOf(seriesId: String): Int = {
@@ -202,10 +201,14 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
     * merge's write reads the cache instead of the source.
     */
   private def probe(newData: DataFrame): MergeResult = {
-    val parts = newData.select("bucket").as(Encoders.scalaInt)
-      .mapPartitions(new SeriesStore.ProbePartition(numBuckets))(SeriesStore.ProbeEncoder)
-      .collect()
-    val buckets = new java.util.BitSet(numBuckets)
+    val n = numBuckets
+    val parts = newData.select("bucket").as(Encoders.scalaInt).mapPartitions { it =>
+      val seen = new java.util.BitSet(n)
+      var points = 0L
+      it.foreach { b => seen.set(b); points += 1 }
+      Iterator.single((seen.toLongArray, points))
+    }(SeriesStore.ProbeEncoder).collect()
+    val buckets = new java.util.BitSet(n)
     parts.foreach { case (bits, _) => buckets.or(java.util.BitSet.valueOf(bits)) }
     MergeResult(parts.map(_._2).sum, buckets.stream().toArray.toSeq)
   }
@@ -218,9 +221,11 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
   private def mergeLocked(container: String, incoming: DataFrame, overwrite: Boolean): MergeResult = {
     sweepStaging(container)
     val target = new Path(containerPath(container))
-    val id = col("series_id").cast("string")
-    val newData = incoming.select(id.as("series_id"), col("ts").cast("long").as("ts"),
-      col("value").cast("double").as("value"), bucketCol(id).as("bucket"))
+    val newData = incoming.select(
+      col("series_id").cast("string"),
+      col("ts").cast("long"),
+      col("value").cast("double"))
+      .withColumn("bucket", bucketCol)
 
     // Bounded rewrite: only buckets the batch touches, learnt by the probe,
     // which also counts the batch. A fresh container has no old rows to
@@ -231,17 +236,13 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
     if (!fresh && affected.isEmpty) return probed
     val counted = Observation()
 
-    // Each stage is one select: every Dataset step re-runs the analyzer over
-    // the whole plan built so far. Old rows are generation 0, the batch's 1;
-    // both sides carry (series_id, ts, value, bucket, __gen) in that order.
-    val stored = Seq("series_id", "ts", "value", "bucket").map(col)
     val nw = (if (fresh) newData.observe(counted, count(lit(1)).as("points")) else newData)
-      .select(stored :+ lit(1).as("__gen"): _*)
+      .withColumn("__gen", lit(1))
     val batch =
       if (fresh) nw
       else scan(container).where(col("bucket").isin(affected: _*))
-        .select(stored :+ lit(0).as("__gen"): _*)
-        .union(nw)
+        .withColumn("__gen", lit(0))
+        .unionByName(nw)
     // One exchange: hash on bucket clusters every (bucket, series_id, ts)
     // group of the window, and the window's sort is the write's
     // (bucket, series_id, ts) file order. value.desc as secondary key: if
@@ -253,9 +254,9 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
       .orderBy(col("__gen").desc, col("value").desc)
     val merged = batch
       .repartition(Sessions.partsOf(spark), col("bucket"))
-      .select(stored :+ row_number().over(w).as("__rn"): _*)
+      .withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1)
-      .select(stored: _*)
+      .drop("__rn", "__gen")
 
     // Parquet can't be rewritten in place while being read: stage the merged
     // buckets to a tmp sibling. A fresh container is the staged directory
@@ -367,21 +368,10 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
 final case class MergeResult(points: Long, buckets: Seq[Int])
 
 object SeriesStore {
-  /** The probe's per-partition (bucket bit set, row count), derived once. */
-  private val ProbeEncoder = Encoders.product[(Array[Long], Long)]
-
-  /** One partition's probe: its bucket set and row count. A named function
-    * class, so no closure is cleaned per merge.
+  /** The probe's per-partition (bucket bit set, row count) encoder,
+    * derived once per JVM instead of reflected on every merge.
     */
-  private final class ProbePartition(numBuckets: Int)
-      extends (Iterator[Int] => Iterator[(Array[Long], Long)]) with Serializable {
-    def apply(it: Iterator[Int]): Iterator[(Array[Long], Long)] = {
-      val seen = new java.util.BitSet(numBuckets)
-      var points = 0L
-      it.foreach { b => seen.set(b); points += 1 }
-      Iterator.single((seen.toLongArray, points))
-    }
-  }
+  private val ProbeEncoder = Encoders.product[(Array[Long], Long)]
 
   // JVM-wide per-container-path lock table, shared by every store instance
   private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()

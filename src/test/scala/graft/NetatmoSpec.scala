@@ -136,48 +136,59 @@ class NetatmoSpec extends SparkSpec {
     assert(rowsOf(fetch(eventsPath, uid, types, blockSize = 1 << 20)) == want)
   }
 
-  /** The requested types of each module of the first catalog station. */
-  private def stationModules(): (Long, Seq[Seq[String]]) = {
-    val uid = cat.limit(1).collect()(0).getAs[Long]("user_id")
-    val mods = cat.where(col("user_id") === uid).select("module_name", "data_type").collect()
-      .groupMap(_.getString(0))(_.getString(1)).toSeq.sortBy(_._1).map(_._2.toSeq.sorted)
-    (uid, mods)
-  }
-
-  private val everything = (Long.MinValue / 2, Long.MaxValue / 2)
-
   test("a scan plans its pages once: later planning calls return the first call's pages") {
-    val (uid, mods) = stationModules()
+    val row = cat.limit(1).collect()(0)
+    val uid = row.getAs[Long]("user_id")
+    val types = cat.where(col("user_id") === uid && col("module_name") === row.getAs[String]("module_name"))
+      .select("data_type").collect().map(_.getString(0)).toSeq
     for (blockSize <- Seq(1, 16, 1024)) {
       val before = NetatmoV2.planningPasses.get()
-      val plan = fetch(eventsPath, uid, mods.head, blockSize).queryExecution.executedPlan
+      val plan = fetch(eventsPath, uid, types, blockSize).queryExecution.executedPlan
       val scan = plan.collectFirst { case b: BatchScanExec => b.batch }.get
       val first = scan.planInputPartitions().toSeq
       val again = scan.planInputPartitions().toSeq
       assert(NetatmoV2.planningPasses.get() - before == 1, s"blockSize=$blockSize")
-      val fresh = NetatmoV2.planPages(eventsPath, uid, Seq(mods.head), everything._1,
-        everything._2, blockSize, NetatmoV2.schema.fieldNames.toSeq)
+      val fresh = NetatmoV2.planPages(eventsPath, uid, types, Long.MinValue / 2,
+        Long.MaxValue / 2, blockSize, NetatmoV2.schema.fieldNames.toSeq)
       assert(first == fresh && again == fresh, s"blockSize=$blockSize")
       assert(fresh.nonEmpty)
     }
   }
 
-  test("one planning pass over a station's modules plans each module's own pages") {
-    val (uid, mods) = stationModules()
-    assert(mods.size == 2, s"fixture station should carry two modules: $mods")
-    def plan(ms: Seq[Seq[String]]) = NetatmoV2.planPages(eventsPath, uid, ms,
-      everything._1, everything._2, 16, NetatmoV2.schema.fieldNames.toSeq)
-    val before = NetatmoV2.planningPasses.get()
-    val both = plan(mods)
-    assert(NetatmoV2.planningPasses.get() - before == 1)
-    assert(both == plan(Seq(mods(0))) ++ plan(Seq(mods(1))))
-    assert(both.map(_.types).distinct == mods)
-    // the station scan serves each module's grid, as its own scan would
-    val station = spark.read.format("graft-netatmo").option("path", eventsPath)
-      .option("userId", uid).option("types", mods.map(_.mkString(",")).mkString(";"))
-      .option("blockSize", 16).load()
-    assert(rowsOf(station) ==
-      rowsOf(fetch(eventsPath, uid, mods(0), 16).union(fetch(eventsPath, uid, mods(1), 16))))
+  test("read keys each module's rows to its own ids when two modules of a station share a type") {
+    import spark.implicits._
+    val path = tmpDir("graft-netatmo-shared-type")
+    // one station: A on both modules, C on the main unit, B on the submodule
+    val readings = Seq(
+      (1L, "A", 1000L, 1.0), (1L, "B", 2000L, 2.0), (1L, "C", 3000L, 3.0),
+      (1L, "A", 4000L, 4.0), (1L, "B", 4000L, 5.0), (1L, "C", 5000L, 6.0))
+      .toDF("user_id", "event_type", "ts", "value")
+    // optional columns, like a device API's export
+    spark.createDataFrame(readings.rdd,
+      org.apache.spark.sql.types.StructType(readings.schema.map(_.copy(nullable = true))))
+      .coalesce(1).write.mode("overwrite").parquet(path)
+    val events = spark.read.parquet(path)
+    // rawConfig deals types out alternately (Main: A, C; Outdoor: B); add
+    // A to the submodule as well, like Temperature on a main unit and on
+    // its outdoor module
+    val shared = Netatmo.catalog(Netatmo.rawConfig(events).withColumn("modules",
+      transform(col("modules"), m => m.withField("data_type", array_union(m("data_type"), array(lit("A")))))))
+    val ids = shared.select("source_id", "module_name", "data_type")
+      .as[(String, String, String)].collect().toSeq
+    assert(ids.count(_._3 == "A") == 2, s"A should be on both modules: $ids")
+    val typesOf = ids.groupMap(_._2)(_._3)
+    val all = Period(Long.MinValue / 2, Long.MaxValue / 2)
+    val src = new NetatmoSource(shared, events, path, blockSize = 2)
+    val got = src.read(spark, ids.map(_._1), all)
+    def rowsOfId(id: String) = rowsOf(got.where(col("series_id") === id).select("ts", "value"))
+    for ((id, module, dt) <- ids) {
+      val want = src.getMeasurements(1L, typesOf(module), all)
+        .where(col("data_type") === dt).select("ts", "value")
+      assert(rowsOfId(id) == rowsOf(want), id)
+    }
+    // each module's axis pads its own NaNs, so the two A series differ
+    val Seq(a1, a2) = ids.filter(_._3 == "A").map(_._1)
+    assert(rowsOfId(a1) != rowsOfId(a2))
   }
 
   test("re-keying keeps the fan-out: two ids naming one measurement both get every row") {

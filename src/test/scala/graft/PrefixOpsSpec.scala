@@ -59,7 +59,7 @@ class PrefixOpsSpec extends SparkSpec {
       ("b", 1L, 100L), ("b", 3L, 100L)))
   }
 
-  test("a scan trusts an input __shard only when chained from a keepShard scan of the same width") {
+  test("a scan trusts an input __shard only when a keepShard scan of the same width cut it") {
     val rows = (0L until 40L).map(i => (i, 1L))
     val df = rows.toDF("id", "v")
     // a stale __shard: cut by another width, and not from a keepShard scan
@@ -67,18 +67,15 @@ class PrefixOpsSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] {
       Prefix.runningSum(stale, "id", "v", shardWidth = 8L, endCol = "end")
     }
-    assert(e.getMessage.contains("carries a __shard column"), e.getMessage)
-    val e2 = intercept[IllegalArgumentException] {
-      Prefix.runningSum(stale, "id", "v", shardWidth = 8L, endCol = "end", chained = true)
-    }
-    assert(e2.getMessage.contains("was not cut by idCol=id, shardWidth=8"), e2.getMessage)
+    assert(e.getMessage.contains("was not cut by a keepShard scan with idCol=id, shardWidth=8"),
+      e.getMessage)
     // a keepShard scan's output chains only at its own width
     val first = Prefix.runningSum(df, "id", "v", shardWidth = 8L, endCol = "c1", keepShard = true)
-    val e3 = intercept[IllegalArgumentException] {
-      Prefix.runningMax(first, "id", "v", shardWidth = 16L, endCol = "m", chained = true)
+    val e2 = intercept[IllegalArgumentException] {
+      Prefix.runningMax(first, "id", "v", shardWidth = 16L, endCol = "m")
     }
-    assert(e3.getMessage.contains("shardWidth=16"), e3.getMessage)
-    val chained = Prefix.runningMax(first, "id", "c1", shardWidth = 8L, endCol = "m", chained = true)
+    assert(e2.getMessage.contains("shardWidth=16"), e2.getMessage)
+    val chained = Prefix.runningMax(first, "id", "c1", shardWidth = 8L, endCol = "m")
       .select("id", "m").as[(Long, Long)].collect().toMap
     assert(chained == rows.map { case (i, _) => i -> (i + 1) }.toMap)
   }
