@@ -176,7 +176,7 @@ object Bench {
     // r12 vec_kmeans 2.3× drift sailed past the gate (r12 verdict item 1).
     // Falls back to the latest-run file only when no pin exists.
     val gateBaseline = sys.env.getOrElse("SPARK_GRAFT_GATE_BASELINE",
-      "/root/repo/BENCH_gate_baseline.json")
+      "BENCH_gate_baseline.json")
     def readTimes(path: String): Map[String, Double] = try {
       val node = new com.fasterxml.jackson.databind.ObjectMapper()
         .readTree(java.nio.file.Files.readString(
@@ -211,7 +211,7 @@ object Bench {
         // custom SPARK_GRAFT_BENCH_OUT (a run writing elsewhere must not
         // gate against a stale default-path file)
         val latest = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-          "/root/repo/BENCH_full_latest.json")
+          "BENCH_full_latest.json")
         System.err.println(s"[bench] gate baseline: $latest (no pin found)")
         readTimes(latest)
       }
@@ -302,9 +302,11 @@ object Bench {
     // baseline the contention gate diffs against (bit in round 11: a
     // 10-query dev run overwrote the 313-query certified file). Filtered
     // runs land in a sidecar unless SPARK_GRAFT_BENCH_OUT says otherwise.
+    // Default paths are relative: they resolve against the working
+    // directory, which for `sbt run` (forked) is the checkout being run.
     val defaultOut =
-      if (only.isDefined) "/root/repo/BENCH_subset_latest.json"
-      else "/root/repo/BENCH_full_latest.json"
+      if (only.isDefined) "BENCH_subset_latest.json"
+      else "BENCH_full_latest.json"
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultOut)), json)
     catch { case e: Throwable =>

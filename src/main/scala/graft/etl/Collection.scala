@@ -82,7 +82,7 @@ final class CollectionTask(
       val rekeyed = data.select(storeIdOf.getItem(col("ordinal")).as("series_id"),
         col("ts"), col("value"))
       val merged =
-        try store.merge(container, rekeyed, overwrite = false)
+        try store.merge(container, rekeyed)
         finally data.unpersist()
       batchesOk += 1
       lastBatchPoints = merged.points

@@ -175,14 +175,18 @@ final class NetatmoSource(catalogDf: DataFrame, eventsPoints: DataFrame,
       .load()
   }
 
-  /** The catalog as a driver-side map (station, module, data_type) →
-    * user_id: metadata-scale, collected once on the first [[read]].
+  /** The catalog as a driver-side map (station, module, data_type) → the
+    * measurement's row: metadata-scale, collected once on the first
+    * [[read]] or [[find]].
     */
-  private lazy val catalogKeys: Map[(String, String, String), Long] =
+  private lazy val catalogKeys: Map[(String, String, String), NetatmoSource.Bound] =
     catalogDf
-      .select("station_name", "module_name", "data_type", "user_id")
+      .select("station_name", "module_name", "data_type", "user_id", "source_id", "tz",
+        "last_setup", "last_seen")
       .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2)) -> r.getLong(3))
+      .map(r => (r.getString(0), r.getString(1), r.getString(2)) ->
+        NetatmoSource.Bound(r.getLong(3), r.getString(4), r.getString(5),
+          r.getAs[Long](6), r.getAs[Long](7)))
       .toMap
 
   /** Read callback (S3, repository.py:220-265): parse ids (P2), bind to the
@@ -198,7 +202,7 @@ final class NetatmoSource(catalogDf: DataFrame, eventsPoints: DataFrame,
       val p = Identifiers.parseNetatmoIdStr(id)
       val key = (p("station_name"), p("module_name"), p("data_type"))
       val uid = catalogKeys.getOrElse(key,
-        throw new IllegalArgumentException(s"id not in catalog: $id"))
+        throw new IllegalArgumentException(s"id not in catalog: $id")).userId
       (id, uid, p("module_name"), p("data_type"))
     }
     // One lazy V2 scan per module — after the first call's catalog bind no
@@ -218,39 +222,39 @@ final class NetatmoSource(catalogDf: DataFrame, eventsPoints: DataFrame,
   }
 
   /** Metadata find (repository.py:279-306): parse the query id, bind the
-    * catalog measurement, emit one TsInfo with the station's Olson tz, the
-    * module's lifetime as data period / created / modified
-    * (`data_period=[module.last_setup, module.last_seen]`,
+    * catalog measurement through [[catalogKeys]], emit one TsInfo with the
+    * station's Olson tz, the module's lifetime as data period / created /
+    * modified (`data_period=[module.last_setup, module.last_seen]`,
     * repository.py:292-301), and the measurement's modal delta as delta_t
     * (the reference emits NaN there because the real API carries no dt;
     * the fixture API can infer it, matching the store-side find and A3).
-    * Metadata-scale result: the collects are deliberate.
+    * An id not in the catalog finds nothing. After the first bind, one job:
+    * the modal delta over the measurement's points, selected by literal
+    * predicates that reach the scan.
     */
   def find(spark: SparkSession, query: String): Seq[TsInfo] = {
     val p = Identifiers.parseNetatmoIdStr(query)
-    val hits = Netatmo.lookup(catalogDf, p("station_name"), p("module_name"), p("data_type"))
-      .select("source_id", "tz", "user_id", "data_type", "last_setup", "last_seen")
-    // ONE job: semi-join the point table down to the matched measurements,
-    // infer each one's modal delta, and join it back onto the hits — instead
-    // of a lookup collect plus one dtMode job per hit.
-    val dt = graft.ts.SeriesOps.dtMode(
-      eventsPoints
-        .join(broadcast(hits.select(
-          col("user_id"), col("data_type").as("event_type"))), Seq("user_id", "event_type"), "left_semi")
-        .select(concat(col("user_id"), lit("/"), col("event_type")).as("series_id"),
-          col("ts"), col("value")))
-    hits
-      .join(broadcast(dt), concat(col("user_id"), lit("/"), col("data_type")) === col("series_id"), "left")
-      .collect().toSeq.map { r =>
-        TsInfo(
-          name = r.getAs[String]("source_id"),
-          pointFx = "instant",
-          deltaTNs = Option(r.getAs[java.lang.Long]("dt_mode_ns")).map(_.toLong).getOrElse(0L),
-          olsonTzId = r.getAs[String]("tz"),
-          dataPeriodStartNs = r.getAs[Long]("last_setup"),
-          dataPeriodEndNs = r.getAs[Long]("last_seen"),
-          createdNs = r.getAs[Long]("last_setup"),
-          modifiedNs = r.getAs[Long]("last_seen"))
-      }
+    catalogKeys.get((p("station_name"), p("module_name"), p("data_type"))).toSeq.map { b =>
+      val dt = graft.ts.SeriesOps.dtMode(
+        eventsPoints
+          .where(col("user_id") === b.userId && col("event_type") === p("data_type"))
+          .select(lit(b.sourceId).as("series_id"), col("ts"), col("value")))
+        .collect()
+      TsInfo(
+        name = b.sourceId,
+        pointFx = "instant",
+        deltaTNs = dt.headOption.fold(0L)(_.getAs[Long]("dt_mode_ns")),
+        olsonTzId = b.tz,
+        dataPeriodStartNs = b.lastSetup,
+        dataPeriodEndNs = b.lastSeen,
+        createdNs = b.lastSetup,
+        modifiedNs = b.lastSeen)
+    }
   }
+}
+
+object NetatmoSource {
+  /** One catalog measurement as [[NetatmoSource]] binds it. */
+  private final case class Bound(userId: Long, sourceId: String, tz: String,
+      lastSetup: Long, lastSeen: Long)
 }

@@ -51,14 +51,18 @@ object SyntheticV2 {
     StructField("ts", LongType, nullable = false),
     StructField("value", DoubleType, nullable = false)))
 
-  private val MockValueRe = ".*/(-?[0-9.]+)$".r
+  private val MockValueRe = "mock[0-9]+://.*/(-?(?:[0-9]+\\.?[0-9]*|\\.[0-9]+))".r
 
-  /** Value encoded by the id: mock ids carry it in the path, heartbeat is
-    * the constant 1.0 (heartbeat.py:54, utilities.py:64).
+  /** Value encoded by the id: `heartbeat://…` is the constant 1.0
+    * (heartbeat.py:54), `mockN://…/<number>` carries it as the last path
+    * segment (utilities.py:64). Any other id is not a synthetic series and
+    * fails with an `IllegalArgumentException` that names it.
     */
   def valueOf(id: String): Double = id match {
-    case MockValueRe(v) if id.startsWith("mock") => v.toDouble
-    case _                                       => 1.0
+    case MockValueRe(v)                       => v.toDouble
+    case _ if id.startsWith("heartbeat://")   => 1.0
+    case _ => throw new IllegalArgumentException(
+      s"not a synthetic series id (heartbeat://… or mockN://…/<number>): $id")
   }
 }
 
@@ -87,6 +91,7 @@ private[sources] class SyntheticScanBuilder(options: CaseInsensitiveStringMap)
   private val ids: Seq[String] =
     Option(options.get("ids")).map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
       .getOrElse(Seq.empty)
+  ids.foreach(SyntheticV2.valueOf) // a bad id fails here, on the driver, not in a task
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = SyntheticV2.schema
 

@@ -27,7 +27,7 @@ object StreamOps {
       .outputMode(OutputMode.Append)
       .trigger(Trigger.ProcessingTime(triggerMs))
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        store.merge(container, batch.toDF(), overwrite = false); ()
+        store.merge(container, batch.toDF()); ()
       }
       .start()
 

@@ -1,7 +1,7 @@
 package graft.ts
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Encoders, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -36,14 +36,13 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
 
   def exists(container: String): Boolean = fs.exists(new Path(containerPath(container)))
 
-  /** Whether a container (or its staging) directory holds any bucket
-    * directory, i.e. any points.
+  /** The container's live buckets, from one listing: the numbers of its
+    * `bucket=N` directories, empty when the container does not exist.
     */
-  private def hasBuckets(dir: Path): Boolean =
-    fs.exists(dir) && fs.listStatus(dir).exists(_.getPath.getName.startsWith("bucket="))
-
-  private def hasBuckets(container: String): Boolean =
-    hasBuckets(new Path(containerPath(container)))
+  private def liveBuckets(container: String): Set[Int] =
+    try fs.listStatus(new Path(containerPath(container))).iterator.map(_.getPath.getName)
+      .collect { case n if n.startsWith("bucket=") => n.stripPrefix("bucket=").toInt }.toSet
+    catch { case _: java.io.FileNotFoundException => Set.empty }
 
   /** Staging siblings of the container directory. Both live OUTSIDE the
     * container so Spark partition discovery never sees them: a backup left
@@ -145,7 +144,7 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
   /** Full container scan; callers filter by id/period (filters push down). */
   def read(container: String): DataFrame = {
     recoverIfNeeded(container)
-    if (!hasBuckets(container))
+    if (liveBuckets(container).isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], model.pointSchema)
     else
       scan(container).select("series_id", "ts", "value")
@@ -157,7 +156,7 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
     */
   def read(container: String, ids: Seq[String], period: Period): DataFrame = {
     recoverIfNeeded(container)
-    if (!hasBuckets(container))
+    if (liveBuckets(container).isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], model.pointSchema)
     val buckets = ids.map(bucketOf).distinct
     scan(container)
@@ -167,31 +166,32 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
       .select("series_id", "ts", "value")
   }
 
-  /** Merge-store (K1): upsert points; `overwrite=false` is the reference's
+  /** Merge-store (K1): upsert points with the reference's
     * `overwrite_on_write=False` point-level union — new points extend the
     * axis, colliding timestamps take the NEW value (last-writer-wins), and
     * untouched series/points survive
     * (reference: weather/service/data_collection_task.py:121-126, semantics
     * proven in weather/test/test_dtss_host.py:102-134). Duplicate
-    * (series_id, ts) rows within one batch keep the largest value, whether
-    * or not the container exists yet. A non-overwrite merge of an empty
-    * batch leaves the store as it was.
+    * (series_id, ts) rows within one batch keep the largest value. A merge
+    * of an empty batch leaves the store as it was and creates no container.
     *
-    * Scale: into an existing container, one partition-local pass over the
-    * batch ([[probe]]) learns the buckets it touches and its point count;
-    * only those buckets are read, merged (one exchange, hash on bucket,
-    * shared by the last-wins window and the bucket-partitioned write) and
-    * swapped; the rest of the container is untouched. The per-bucket swap is rename-checked with a
-    * backup — a crash mid-swap never loses data — and the merge is
-    * idempotent (re-merging the same batch is a no-op, T4 late/duplicate
-    * handling), so a retry after a partial swap converges.
+    * One path, whether or not the container exists: one partition-local
+    * pass over the batch ([[probe]]) learns the buckets it touches and its
+    * point count; one listing of the container says which of them are live;
+    * only those are read, merged with the batch (one exchange, hash on
+    * bucket, shared by the last-wins window and the bucket-partitioned
+    * write) and swapped; the rest of the container is untouched. The
+    * per-bucket swap is rename-checked with a backup — a crash mid-swap
+    * never loses data — and the merge is idempotent (re-merging the same
+    * batch is a no-op, T4 late/duplicate handling), so a retry after a
+    * partial swap converges.
     *
     * Returns the batch's point count and the buckets the merge rewrote.
     */
-  def merge(container: String, incoming: DataFrame, overwrite: Boolean = false): MergeResult =
+  def merge(container: String, incoming: DataFrame): MergeResult =
     SeriesStore.containerLock(containerPath(container)).synchronized {
       acquireProcessLock(container)
-      try mergeLocked(container, incoming, overwrite)
+      try mergeLocked(container, incoming)
       finally releaseProcessLock(container)
     }
 
@@ -218,7 +218,7 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
     * the best-effort [[acquireProcessLock]] lock file; at cluster scale the
     * container maps to a table format whose transaction log replaces both.
     */
-  private def mergeLocked(container: String, incoming: DataFrame, overwrite: Boolean): MergeResult = {
+  private def mergeLocked(container: String, incoming: DataFrame): MergeResult = {
     sweepStaging(container)
     val target = new Path(containerPath(container))
     val newData = incoming.select(
@@ -228,19 +228,17 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
       .withColumn("bucket", bucketCol)
 
     // Bounded rewrite: only buckets the batch touches, learnt by the probe,
-    // which also counts the batch. A fresh container has no old rows to
-    // read, so it skips the probe, and its write counts the batch instead.
-    val fresh = overwrite || !hasBuckets(container)
-    val probed = if (fresh) MergeResult(0L, Nil) else probe(newData)
+    // which also counts the batch; of those, only the live ones hold old rows.
+    val probed = probe(newData)
     val affected = probed.buckets
-    if (!fresh && affected.isEmpty) return probed
-    val counted = Observation()
+    if (affected.isEmpty) return probed
+    val live = liveBuckets(container)
+    val old = affected.filter(live)
 
-    val nw = (if (fresh) newData.observe(counted, count(lit(1)).as("points")) else newData)
-      .withColumn("__gen", lit(1))
+    val nw = newData.withColumn("__gen", lit(1))
     val batch =
-      if (fresh) nw
-      else scan(container).where(col("bucket").isin(affected: _*))
+      if (old.isEmpty) nw
+      else scan(container).where(col("bucket").isin(old: _*))
         .withColumn("__gen", lit(0))
         .unionByName(nw)
     // One exchange: hash on bucket clusters every (bucket, series_id, ts)
@@ -259,25 +257,9 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
       .drop("__rn", "__gen")
 
     // Parquet can't be rewritten in place while being read: stage the merged
-    // buckets to a tmp sibling. A fresh container is the staged directory
-    // moved into place — unless nothing was staged: an empty batch leaves
-    // the store as it was, and only an overwrite empties the container.
+    // buckets to a tmp sibling ([[sweepStaging]] has cleared it).
     val tmp = tmpDirOf(container)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
     merged.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(tmp.toString)
-    if (fresh) {
-      val staged = fs.listStatus(tmp).map(_.getPath.getName)
-        .collect { case n if n.startsWith("bucket=") => n.stripPrefix("bucket=").toInt }.sorted.toSeq
-      if (!overwrite && staged.isEmpty) {
-        fs.delete(tmp, true)
-        return MergeResult(0L, Nil)
-      }
-      if (fs.exists(target)) fs.delete(target, true)
-      if (!fs.rename(tmp, target))
-        throw new java.io.IOException(s"merge: failed to move $tmp into place at $target")
-      // the optimizer drops the observation only from a batch it proves empty
-      return MergeResult(counted.get.get("points").fold(0L)(_.asInstanceOf[Long]), staged)
-    }
 
     // Swap each affected bucket directory. Every rename is checked; on
     // failure the bucket's backup is restored. Backups live in the sibling
@@ -285,6 +267,7 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
     // recoverable state that [[sweepStaging]] repairs, and no reader ever
     // discovers a backup as a partition.
     val bakRoot = bakDirOf(container)
+    fs.mkdirs(target)
     fs.mkdirs(bakRoot)
     affected.foreach { b =>
       val name = s"bucket=$b"
@@ -296,7 +279,7 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
         // (cannot happen: affected came from newData) — fail loudly.
         throw new java.io.IOException(s"merge: staged bucket missing: $src")
       }
-      val hadOld = fs.exists(dst)
+      val hadOld = live(b)
       if (hadOld) {
         if (fs.exists(bak)) fs.delete(bak, true)
         if (!fs.rename(dst, bak))

@@ -3,6 +3,7 @@ package graft.ts
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SyntheticV2
 import graft.ts.model.{Period, TsInfo}
 
 /** Pluggable per-scheme series source, the Spark equivalent of the
@@ -91,16 +92,8 @@ final class HeartbeatSource extends SeriesSource {
   * `mock1://<name>/<float>` (reference: weather/test/utilities.py:31-74).
   */
 final class MockSource(val name: String, dtNs: Long = Period.Second) extends SeriesSource {
-  private val ValueRe = ".*/(-?[0-9.]+)$".r
-
   def read(spark: SparkSession, ids: Seq[String], period: Period): DataFrame = {
-    val rows = ids.map { id =>
-      val v = id match {
-        case ValueRe(x) => x.toDouble
-        case _          => throw new IllegalArgumentException(s"bad $name id: $id")
-      }
-      (id, v)
-    }
+    val rows = ids.map(id => (id, SyntheticV2.valueOf(id)))
     val idDf = spark.createDataFrame(rows).toDF("series_id", "value")
     val per = spark.range(period.startNs, period.endNs, dtNs).select(col("id").as("ts"))
     idDf.crossJoin(per).select(col("series_id"), col("ts"), col("value"))

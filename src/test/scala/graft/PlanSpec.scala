@@ -226,20 +226,37 @@ class PlanSpec extends SparkSpec {
     def pts(t0: Long) = (t0 until t0 + 16).map(t => (s"shyft://c/s-${t % 5}", t, t.toDouble))
       .toDF("series_id", "ts", "value")
     store.merge("c", pts(0L))
-    val (_, plans) = observe(store.merge("c", pts(8L)))
-    val writes = plans.map(_.executedPlan)
-      .filter(p => Aqe.find(p)(_.isInstanceOf[DataWritingCommandExec]).nonEmpty)
-    assert(writes.size == 1, s"expected one write, got ${writes.size}")
-    val plan = writes.head
-    val ex = shuffles(plan)
-    assert(ex.size == 1, plan.toString.take(3000))
-    ex.head.outputPartitioning match {
-      case h: HashPartitioning =>
-        assert(h.expressions.map(_.sql).mkString.contains("bucket"), h.toString)
-      case other => fail(s"merge exchange is not hashed on bucket: $other")
+    // a merge into a new container takes the same path and plan
+    for ((container, total) <- Seq("c" -> (16 + 8), "new" -> 16)) {
+      val (jobs, plans) = observe(store.merge(container, pts(8L)))
+      // the probe, the merge's shuffle stage and its write
+      assert(jobs == 3, s"a merge into container $container ran $jobs jobs")
+      val writes = plans.map(_.executedPlan)
+        .filter(p => Aqe.find(p)(_.isInstanceOf[DataWritingCommandExec]).nonEmpty)
+      assert(writes.size == 1, s"expected one write, got ${writes.size}")
+      val plan = writes.head
+      val ex = shuffles(plan)
+      assert(ex.size == 1, plan.toString.take(3000))
+      ex.head.outputPartitioning match {
+        case h: HashPartitioning =>
+          assert(h.expressions.map(_.sql).mkString.contains("bucket"), h.toString)
+        case other => fail(s"merge exchange is not hashed on bucket: $other")
+      }
+      assert(Aqe.collect(plan) { case s: SortExec => s }.size == 1, plan.toString.take(3000))
+      assert(store.read(container).count() == total)
     }
-    assert(Aqe.collect(plan) { case s: SortExec => s }.size == 1, plan.toString.take(3000))
-    assert(store.read("c").count() == 16 + 8)
+  }
+
+  test("a second netatmo find runs no job that derives the catalog") {
+    val (src, _, ids, _) = netatmoFixture()
+    val (first, _) = observe(src.find(spark, ids.head._1))
+    val (second, plans) = observe(src.find(spark, ids.last._1))
+    // the catalog's derivation aggregates the events with collect_list
+    def derivesCatalog(qe: QueryExecution) = qe.analyzed.toString.contains("collect_list")
+    assert(!plans.exists(derivesCatalog), plans.map(_.analyzed.toString.take(2000)).mkString("\n"))
+    // one query: the measurement's modal delta
+    assert(plans.size == 1, s"a second find ran ${plans.size} queries")
+    assert(second == 2 && first > second, s"first find ran $first jobs, the second $second")
   }
 
   test("sessionize is a single shuffle: rollup reuses the window partitioning") {

@@ -84,20 +84,9 @@ class SeriesStoreSpec extends SparkSpec {
     val store = new SeriesStore(spark, tmpDir("graft-dups"), numBuckets = 2)
     store.merge("fresh", dups)
     assert(stored(store, "fresh") == want)
-    store.merge("over", series(Seq(7.0), t0 = 9))
-    store.merge("over", dups, overwrite = true)
-    assert(stored(store, "over") == want)
     store.merge("old", series(Seq(7.0), t0 = 9))
     store.merge("old", dups)
     assert(stored(store, "old") == want :+ (9L -> 7.0))
-  }
-
-  test("an overwrite with an empty batch empties the container") {
-    val store = new SeriesStore(spark, tmpDir("graft-overwrite-empty"), numBuckets = 2)
-    store.merge("c", series(Seq(1, 2, 3), t0 = 0))
-    store.merge("c", series(Seq(1), t0 = 0).where("value > 999"), overwrite = true)
-    assert(store.exists("c"))
-    assert(store.read("c").count() == 0)
   }
 
   test("merge rewrites only the buckets the batch touches") {
@@ -117,6 +106,9 @@ class SeriesStoreSpec extends SparkSpec {
     val before = bucketFiles
     assert(before.size > 1, "seed should span multiple buckets")
     assert(seeded.buckets == before.keys.map(_.stripPrefix("bucket=").toInt).toSeq.sorted)
+    // a new container is its bucket directories and nothing else
+    val root = new java.io.File(s"$warehouse/c").list().toSeq
+    assert(root.forall(_.startsWith("bucket=")), s"container root holds $root")
 
     // upsert one series → exactly its bucket rewritten
     val one = Seq(("shyft://c/series-0", 1000L * S, 9.9)).toDF("series_id", "ts", "value")
@@ -214,6 +206,32 @@ class SeriesStoreSpec extends SparkSpec {
     assert(store.read("c").count() == 6)
   }
 
+  test("failed swap rename into a new container fails loudly; a re-merge lands every point once") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.faulty.impl", classOf[FaultyFs].getName)
+    val warehouse = tmpDir("graft-crash-new")
+    val store = new SeriesStore(spark, "faulty://" + warehouse, numBuckets = 4)
+    val pts = (0 until 20).map(i => (s"shyft://c/s-$i", i.toLong * S, i.toDouble))
+      .toDF("series_id", "ts", "value")
+    assert(pts.select("series_id").as[String].collect().map(store.bucketOf).distinct.length > 1,
+      "the batch should span several buckets")
+
+    // the first bucket goes live, the second rename fails: a partial swap
+    FaultyFs.tmpRenamesToPass.set(1)
+    FaultyFs.failNextTmpRename.set(true)
+    val e = intercept[java.io.IOException](store.merge("c", pts))
+    assert(e.getMessage.contains("merge: failed to move") && e.getMessage.contains("into place"),
+      e.getMessage)
+    FaultyFs.failNextTmpRename.set(false)
+    assert(new java.io.File(s"$warehouse/c").list().count(_.startsWith("bucket=")) == 1)
+
+    store.merge("c", pts)
+    val got = store.read("c").orderBy("ts").collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+    assert(got.toSeq == (0 until 20).map(i => (s"shyft://c/s-$i", i.toLong * S, i.toDouble)))
+    val left = new java.io.File(warehouse).list().toSeq
+    assert(left == Seq("c"), s"staging siblings left behind: $left")
+  }
+
   // ---- cross-process merge guard (the lock FILE, not the JVM monitor) ----
 
   test("second driver holding the lock: merge fails loudly, container intact") {
@@ -269,7 +287,9 @@ class SeriesStoreSpec extends SparkSpec {
 
 /** Local filesystem that fails the next rename whose source is a `.__tmp`
   * staging dir — injects the exact failure mode SeriesStore.merge must
-  * survive (the second rename of the container swap).
+  * survive (the second rename of the container swap). `tmpRenamesToPass`
+  * lets that many such renames succeed first, so the failure can land
+  * mid-swap.
   */
 class FaultyFs extends RawLocalFileSystem {
   override def getScheme: String = "faulty"
@@ -277,7 +297,8 @@ class FaultyFs extends RawLocalFileSystem {
   override def rename(src: Path, dst: Path): Boolean =
     // match only the container swap (tmp-staged bucket dir → live container),
     // not the parquet committer's own renames inside the staging dir
-    if (FaultyFs.failNextTmpRename.get() && src.toString.matches(".*\\.__tmp/bucket=\\d+$")) {
+    if (FaultyFs.failNextTmpRename.get() && src.toString.matches(".*\\.__tmp/bucket=\\d+$") &&
+        FaultyFs.tmpRenamesToPass.getAndUpdate(n => math.max(0, n - 1)) == 0) {
       FaultyFs.failNextTmpRename.set(false)
       false
     } else super.rename(src, dst)
@@ -285,4 +306,5 @@ class FaultyFs extends RawLocalFileSystem {
 
 object FaultyFs {
   val failNextTmpRename = new java.util.concurrent.atomic.AtomicBoolean(false)
+  val tmpRenamesToPass = new java.util.concurrent.atomic.AtomicInteger(0)
 }

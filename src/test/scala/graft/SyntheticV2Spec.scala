@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.sources.SyntheticV2
 import graft.ts.{HeartbeatSource, MockSource}
 import graft.ts.model.Period
 
@@ -54,6 +55,20 @@ class SyntheticV2Spec extends SparkSpec {
     val df = v2("heartbeat://cb/ping", 0, 1000)
     assert(df.rdd.getNumPartitions == 4)
     assert(df.count() == 1000)
+  }
+
+  test("an id that names no synthetic series fails on the driver, naming the id") {
+    Seq("mock1://a/b", "foo://x").foreach { bad =>
+      val direct = intercept[IllegalArgumentException](SyntheticV2.valueOf(bad))
+      assert(direct.getMessage.contains(bad), direct.getMessage)
+      // planning the scan checks the ids: no task runs, so no SparkException wraps it
+      val scan = intercept[IllegalArgumentException](v2(s"heartbeat://cb/ping,$bad", 0, 10).count())
+      assert(scan.getMessage.contains(bad), scan.getMessage)
+      val mock = intercept[IllegalArgumentException](
+        new MockSource("mock1").read(spark, Seq(bad), Period.ofSeconds(0, 10)))
+      assert(mock.getMessage.contains(bad), mock.getMessage)
+    }
+    assert(SyntheticV2.valueOf("mock2://b/-2.5") == -2.5 && SyntheticV2.valueOf("heartbeat://cb/ping") == 1.0)
   }
 
   test("column pruning reaches the reader") {
