@@ -177,44 +177,49 @@ object Bench {
     // Falls back to the latest-run file only when no pin exists.
     val gateBaseline = sys.env.getOrElse("SPARK_GRAFT_GATE_BASELINE",
       "BENCH_gate_baseline.json")
-    def readTimes(path: String): Map[String, Double] = try {
+    // One read per baseline file: its per-query times, the calibration
+    // probe of its run and the sf dir it timed.
+    final case class Baseline(times: Map[String, Double], cal: Option[Double],
+        sf: Option[String])
+    def readBaseline(path: String): Option[Baseline] = try {
       val node = new com.fasterxml.jackson.databind.ObjectMapper()
         .readTree(java.nio.file.Files.readString(
           java.nio.file.Paths.get(path)))
-      val qs = node.get("queries")
-      val it = qs.fields()
+      val it = node.get("queries").fields()
       val b = Map.newBuilder[String, Double]
       while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asDouble() }
-      b.result()
-    } catch { case _: Throwable => Map.empty }
-    def readCal(path: String): Option[Double] = try {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(java.nio.file.Files.readString(
-          java.nio.file.Paths.get(path)))
-      Option(node.get("calibration_before")).map(_.asDouble())
+      Some(Baseline(b.result(), Option(node.get("calibration_before")).map(_.asDouble()),
+        Option(node.get("sf")).map(_.asText())))
     } catch { case _: Throwable => None }
-    // Normalize the gate by machine state: when the pin carries its own
-    // calibration, a machine now running k× slower relaxes the 2× rule
+    val pin = readBaseline(gateBaseline).filter(_.times.nonEmpty)
+    // no pin: fall back to the LAST run's own sidecar, honoring a custom
+    // SPARK_GRAFT_BENCH_OUT (a run writing elsewhere must not gate against
+    // a stale default-path file)
+    val (basePath, baseline) =
+      if (pin.isDefined) (s"$gateBaseline (pinned)", pin)
+      else {
+        val latest = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+          "BENCH_full_latest.json")
+        (s"$latest (no pin found)", readBaseline(latest))
+      }
+    // Times of another scale factor say nothing about this run's: the gate
+    // and its calibration apply only to a baseline of the same sf dir.
+    val sameSf = baseline.filter(_.sf.contains(sfDir))
+    if (baseline.isDefined && sameSf.isEmpty)
+      System.err.println(s"[bench] no contention gate: $basePath timed " +
+        s"sf ${baseline.flatMap(_.sf).getOrElse("(unrecorded)")}, this run is $sfDir")
+    else System.err.println(s"[bench] gate baseline: $basePath")
+    // Normalize the gate by machine state: when the baseline carries its
+    // own calibration, a machine now running k× slower relaxes the 2× rule
     // by k (clamped to [0.5, 3] so a broken probe can't disable the
     // gate) — the gate flags ENGINE regressions, not VM day-state.
-    val calRatio = readCal(gateBaseline)
+    val calRatio = sameSf.flatMap(_.cal)
       .map(pc => math.max(0.5, math.min(3.0, calBefore / pc)))
       .getOrElse(1.0)
     if (calRatio != 1.0)
       System.err.println(f"[bench] gate calibration ratio $calRatio%.3f " +
-        "(machine now vs pin)")
-    val pinned = readTimes(gateBaseline)
-    val prevTimes: Map[String, Double] =
-      if (pinned.nonEmpty) { System.err.println(s"[bench] gate baseline: $gateBaseline (pinned)"); pinned }
-      else {
-        // no pin: fall back to the LAST run's own sidecar, honoring a
-        // custom SPARK_GRAFT_BENCH_OUT (a run writing elsewhere must not
-        // gate against a stale default-path file)
-        val latest = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-          "BENCH_full_latest.json")
-        System.err.println(s"[bench] gate baseline: $latest (no pin found)")
-        readTimes(latest)
-      }
+        "(machine now vs baseline)")
+    val prevTimes: Map[String, Double] = sameSf.fold(Map.empty[String, Double])(_.times)
     // A query that throws has no time: it is listed under "failed" in the
     // sidecar and on stderr, never recorded as a timing.
     val failures = mutable.LinkedHashMap.empty[String, String]

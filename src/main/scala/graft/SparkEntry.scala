@@ -1,650 +1,41 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
-import graft.functions.RpProject
-import graft.ops.{AsofJoin, Retention, Sessionize}
-import graft.pipeline.{Audio, Bpe, ChatOps, Components, Curation, Dedup, Export, IncrementalDedup, IncrementalSemDedup, Multimodal, Packing, Profile, Sampling, SemiStructured, Similarity, Sketches, TextCdc, TextOps, Video, WebOps}
-import graft.sources.{Netatmo, NetatmoSource}
-import graft.ts.{Evaluate, Rdp, SeriesOps, SeriesStore, StoreSource, HeartbeatSource, MockSource}
-import graft.ts.model.{AverageValue, Period}
+import graft.rows._
 
 /** Driver contract: every implemented operator from SURVEY.md §2 (plus the
   * training-data pipeline extensions) is registered here as a named query
   * over the driver's parquet tables, with a DuckDB-equivalent oracle SQL.
   * Column names are aliased identically on both sides — the driver's compare
-  * sorts columns by name before hashing.
+  * sorts columns by name before hashing. The rows are declared once each, a
+  * family per file, in [[graft.rows]].
   */
 object SparkEntry {
 
-  // ---- shared time constants (events span 2024-01; epoch ns) ----
-  private val NsPerS = 1000L * 1000 * 1000
-  private val T0 = 1704412800L * NsPerS // 2024-01-05
-  private val T1 = 1704844800L * NsPerS // 2024-01-10
-  private val T2 = 1705276800L * NsPerS // 2024-01-15
-  private val T3 = 1705708800L * NsPerS // 2024-01-20
+  /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
+  def entry(spark: SparkSession): DataFrame =
+    queries("q1_agg")(spark, "/root/testdata/sf0.001")
 
-  private def pts(s: SparkSession, dir: String): DataFrame =
-    Tables(s, dir).points.select("series_id", "ts", "value")
+  /** Every row, its faces with it, one family after another. */
+  private[graft] lazy val rows: Seq[QueryRow] = Seq(
+    RelationalRows.rows, ProfilingRows.rows, SeriesRows.rows, TextRows.rows,
+    SamplingRows.rows, WebRows.rows, PostTrainingRows.rows, SketchRows.rows,
+    DedupRows.rows, SimilarityRows.rows, MultimodalRows.rows,
+    StreamingRows.rows).flatten
 
-  /** DuckDB twin of Tables.points (same series_id/ts/value derivation). */
-  private val PointsCte =
-    "SELECT 'shyft://events/u' || user_id || '/' || event_type AS series_id, " +
-      "epoch_ns(ts) AS ts, value FROM events"
+  private lazy val declared: Seq[QueryRow] = QueryRow.flatten(rows)
 
-  /** DuckDB twin of TextOps.tokens. */
-  private val Toks =
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')"
+  /** Every row and face by name. Building the map builds no oracle SQL. */
+  lazy val queries: Map[String, QueryRow.Build] =
+    declared.map(r => r.name -> r.build).toMap
 
-  /** [[Toks]] over an arbitrary column/expression (twin of
-    * `TextOps.tokens(col)` for columns not named `text`).
-    */
-  private def toksOf(c: String): String =
-    s"list_filter(string_split_regex(lower($c), '[^a-z0-9]+'), x -> x <> '')"
+  /** The DuckDB oracle of every query; a face shares its base row's. */
+  def oracleSql: Map[String, String] =
+    declared.map(r => r.name -> r.oracle).toMap
 
-  /** DuckDB twin of PolyHash(s, seed) — byte==codepoint holds because every
-    * input is ASCII (verified for the testdata corpus).
-    */
-  private def phSql(s: String, seed: String): String =
-    s"list_reduce(list_prepend(CAST($seed AS BIGINT), " +
-      s"list_transform(string_split($s, ''), c -> CAST(ord(c) AS BIGINT))), " +
-      "(a, c) -> (a * 31 + c) % 1000000007)"
-
-  /** DuckDB twin of Similarity.randomProject(16, 64)'s projection list for
-    * a double-list variable `v` — sign literals from the SAME rpSign
-    * function the projection kernel reads, same left-to-right signed
-    * chain. Shared by vec_rp and sim_rp_topk so they cannot drift.
-    */
-  private def rpListSql(v: String): String = {
-    val scale = math.sqrt(16.0)
-    (0 until 16).map { o =>
-      val chain = (0 until 64).map { i =>
-        val t = s"$v[${i + 1}]"
-        if (i == 0) { if (RpProject.rpSign(o, i) > 0) t else s"(- $t)" }
-        else if (RpProject.rpSign(o, i) > 0) s"+ $t" else s"- $t"
-      }.mkString(" ")
-      s"($chain) / $scale"
-    }.mkString(", ")
-  }
-
-  /** DuckDB twins of the sign-critical SRP hyperplane math — single source
-    * for all SRP oracles, mirroring SignatureKernel.srpDots (1-based `i`
-    * here aligns with the kernel's 0-based `i + 1`). `k` is bound by the
-    * surrounding `range(0, 6)` lambda.
-    */
-  private val SrpSignSql =
-    "(CASE WHEN ((1103515245 * (k * 131 + i) + 12345) % 2147483648) % 2 = 0 THEN 1.0 ELSE -1.0 END)"
-  private def srpDotSql(v: String): String =
-    s"list_sum(list_transform(range(1, len($v) + 1), i -> $v[i] * $SrpSignSql))"
-  private def srpDotsSql(v: String): String =
-    s"list_transform(range(0, 6), k -> ${srpDotSql(v)})"
-  // CAST the outer sum: DuckDB promotes list_sum(BIGINT) to HUGEINT, which
-  // pandas can only represent as float64 — an output column of that type
-  // then hash-compares 63.0 vs Spark's 63 (the round-4 sim_srp_near_dups
-  // driver mismatch; invisible to 9-sig-digit local normalization).
-  private def srpBucketSql(v: String): String =
-    s"CAST(list_sum(list_transform(range(0, 6), k -> " +
-      s"CASE WHEN ${srpDotSql(v)} >= 0 THEN CAST(1 AS BIGINT) << k ELSE 0 END)) AS BIGINT)"
-
-  /** Shared synthesizer for the line-dedup gates: the flat fixture has no
-    * newlines, so line structure is created INSIDE each doc — a newline
-    * every 12 space-split words. Near-dup docs share long unedited token
-    * runs, so their aligned chunks become IDENTICAL lines across docs,
-    * exercising first-occurrence-wins dedup and the boilerplate screen
-    * on real corpus duplication. Mirrored exactly by [[LineDedupCtes]].
-    */
-  private def lineSynthDocs(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), split(col("text"), " ").as("__w"))
-      .select(col("doc_id"),
-        concat_ws("\n", transform(
-          sequence(lit(0), ceil(size(col("__w")) / lit(12.0)).cast("int") - 1),
-          i => array_join(slice(col("__w"), i * 12 + 1, lit(12)), " ")))
-          .as("text"))
-
-  /** Deterministic URL synthesis for the web-curation gates (the
-    * [[lineSynthDocs]] pattern: the flat fixture has no URL column, so one
-    * is derived from doc_id/source inside the query AND identically in the
-    * twin's [[WebSynthCte]]): scheme/host case noise, default AND
-    * non-default ports, trailing slashes, tracking params mixed with a
-    * real param, fragments — every fetch variant the canonicalizer must
-    * fold away, over ~#sources·17 distinct registered domains.
-    */
-  private def webSynthDocs(docs: DataFrame): DataFrame = {
-    val d = col("doc_id")
-    val scheme = when(d % 2 === 0, lit("HTTPS")).otherwise(lit("http"))
-    val www = when(d % 3 === 0, lit("WWW.")).otherwise(lit(""))
-    val srcCased = when(d % 4 === 0, upper(col("source")))
-      .otherwise(col("source"))
-    // multi-label public suffixes exercise the PSL registered-domain
-    // path: a.b.co.uk-shaped hosts (www/subdomain labels above a
-    // two-label suffix), a github.io private-domain host, and plain .com
-    val tld = when(d % 6 === 1, lit(".co.uk"))
-      .when(d % 6 === 3, lit(".com.au"))
-      .when(d % 6 === 5, lit(".github.io"))
-      .otherwise(lit(".com"))
-    val host = concat(www, srcCased, lit("-"), (d % 17).cast("string"), tld)
-    val port = when(d % 5 === 0,
-        when(d % 2 === 0, lit(":443")).otherwise(lit(":80")))
-      .when(d % 5 === 1, lit(":8080"))
-      .otherwise(lit(""))
-    val path = concat(lit("/a/"), d.cast("string"),
-      when(d % 4 === 0, lit("/")).otherwise(lit("")))
-    val query = when(d % 3 === 0,
-        concat(lit("?utm_source=rss&x="), (d % 7).cast("string")))
-      .when(d % 3 === 1, concat(lit("?x="), (d % 7).cast("string"),
-        lit("&utm_campaign=promo&fbclid=fb"), d.cast("string")))
-      .otherwise(lit(""))
-    val frag = when(d % 7 === 3, concat(lit("#sec"), (d % 5).cast("string")))
-      .otherwise(lit(""))
-    docs.withColumn("url",
-      concat(scheme, lit("://"), host, port, path, query, frag))
-  }
-
-  /** DuckDB twin of [[webSynthDocs]] — `wdoc` = documents + the same
-    * synthesized `url` (term-for-term the Scala concat).
-    */
-  private lazy val WebSynthCte: String =
-    """wdoc AS (SELECT *,
-      |  (CASE WHEN doc_id % 2 = 0 THEN 'HTTPS' ELSE 'http' END) || '://' ||
-      |  (CASE WHEN doc_id % 3 = 0 THEN 'WWW.' ELSE '' END) ||
-      |  (CASE WHEN doc_id % 4 = 0 THEN upper(source) ELSE source END) ||
-      |  '-' || CAST(doc_id % 17 AS VARCHAR) ||
-      |  (CASE WHEN doc_id % 6 = 1 THEN '.co.uk'
-      |    WHEN doc_id % 6 = 3 THEN '.com.au'
-      |    WHEN doc_id % 6 = 5 THEN '.github.io' ELSE '.com' END) ||
-      |  (CASE WHEN doc_id % 5 = 0 THEN
-      |      (CASE WHEN doc_id % 2 = 0 THEN ':443' ELSE ':80' END)
-      |    WHEN doc_id % 5 = 1 THEN ':8080' ELSE '' END) ||
-      |  '/a/' || CAST(doc_id AS VARCHAR) ||
-      |  (CASE WHEN doc_id % 4 = 0 THEN '/' ELSE '' END) ||
-      |  (CASE WHEN doc_id % 3 = 0 THEN
-      |      '?utm_source=rss&x=' || CAST(doc_id % 7 AS VARCHAR)
-      |    WHEN doc_id % 3 = 1 THEN
-      |      '?x=' || CAST(doc_id % 7 AS VARCHAR) ||
-      |        '&utm_campaign=promo&fbclid=fb' || CAST(doc_id AS VARCHAR)
-      |    ELSE '' END) ||
-      |  (CASE WHEN doc_id % 7 = 3 THEN
-      |      '#sec' || CAST(doc_id % 5 AS VARCHAR) ELSE '' END) AS url
-      |  FROM documents)""".stripMargin
-
-  /** Deterministic URL-VARIANT synthesis for the web_url_dedup gate:
-    * docs sharing `doc_id % 100` are refetches of ONE page through
-    * canonicalization-removable variance only — scheme/host case, the
-    * https default port, trailing slashes, tracking params (in varying
-    * positions), fragments — so each page group collapses to one
-    * canonical identity. Mirrored term-for-term by [[WebVariantCte]].
-    */
-  private def webVariantDocs(docs: DataFrame): DataFrame = {
-    val d = col("doc_id")
-    val pg = (d % 100).cast("string")
-    val scheme = when(d % 2 === 0, lit("https")).otherwise(lit("HTTPS"))
-    val www = when((d % 100) % 2 === 0,
-        when(d % 3 === 0, lit("WWW.")).otherwise(lit("www.")))
-      .otherwise(lit(""))
-    val body = concat(lit("p"), pg, lit(".example.com"))
-    val host = when(d % 4 === 0, upper(body)).otherwise(body)
-    val port = when(d % 5 === 0, lit(":443")).otherwise(lit(""))
-    val path = concat(lit("/page/"), pg,
-      when(d % 4 === 1, lit("/")).otherwise(lit("")))
-    val query = when(d % 3 === 0,
-        concat(lit("?id="), pg, lit("&utm_source=s"), d.cast("string")))
-      .when(d % 3 === 1,
-        concat(lit("?id="), pg, lit("&fbclid=f"), d.cast("string")))
-      .otherwise(
-        concat(lit("?utm_campaign=c"), d.cast("string"), lit("&id="), pg))
-    val frag = when(d % 7 === 3, concat(lit("#f"), (d % 5).cast("string")))
-      .otherwise(lit(""))
-    docs.select(col("doc_id"),
-      concat(scheme, lit("://"), www, host, port, path, query, frag)
-        .as("url"))
-  }
-
-  /** Deterministic blocklist for the web_blocklist gate — mirrored
-    * term-for-term by [[WebBlocklistCte]]: every `src3` registered
-    * domain across the synth's four public suffixes is domain-blocked,
-    * and two canonical-prefix rules block the `http://src7-*` and
-    * `https://www.src1-*` sections (the robots-Disallow shape).
-    */
-  private def webBlocklist(s: SparkSession): DataFrame = {
-    import s.implicits._
-    val doms = for {
-      k <- 0 until 17
-      t <- Seq(".com", ".co.uk", ".com.au", ".github.io")
-    } yield ("domain", s"src3-$k$t")
-    (doms ++ Seq(("prefix", "http://src7-"), ("prefix", "https://www.src1-")))
-      .toDF("kind", "pattern")
-  }
-
-  /** Deterministic crawl-fetch synthesis: events as fetch records with a
-    * URL derived from (event_type, user_id) over a `.co.uk` suffix (the
-    * PSL registered-domain path exercised end-to-end) — mirrored
-    * term-for-term by the web_crawl_rate twin's `f` CTE.
-    */
-  private def crawlFetches(t: Tables): DataFrame =
-    t.events.select(col("event_id"), col("ts"),
-      concat(lit("https://WWW."), col("event_type"), lit("-"),
-        (col("user_id") % 13).cast("string"), lit(".co.uk/e/"),
-        col("event_id")).as("url"))
-
-  /** Deterministic outlink synthesis for the web_outlinks/web_link_graph
-    * gates ([[webSynthDocs]] + link mentions appended to the page text):
-    * every doc cites one clean `https://…com` page, and every third doc
-    * also cites an `HTTP://WWW.…co.uk:80/?utm_…` page — scheme/host case,
-    * a default port, and a tracking param the extractor's canonicalization
-    * must fold. Target hosts are derived from doc_id so the domain graph
-    * has deterministic fan-out across the synth's domain universe; every
-    * fifth doc additionally cites a KNOWN page (its own canonical URL) so
-    * the frontier's known-page anti-join has real rows to drop.
-    * Mirrored term-for-term by [[WebLinkedCte]].
-    */
-  private def webLinkedDocs(docs: DataFrame): DataFrame = {
-    val d = col("doc_id")
-    val l1 = concat(lit("https://src"), ((d * 7 + 1) % 20).cast("string"),
-      lit("-"), ((d * 3) % 17).cast("string"),
-      lit(".com/p/"), d.cast("string"))
-    val l2 = concat(lit("HTTP://WWW.src"), ((d * 11 + 2) % 20).cast("string"),
-      lit("-"), ((d * 5) % 17).cast("string"),
-      lit(".co.uk:80/q/"), d.cast("string"),
-      lit("?utm_source=x&z="), (d % 9).cast("string"))
-    webSynthDocs(docs).withColumn("text",
-      concat(col("text"), lit(" see "), l1,
-        when(d % 3 === 0, concat(lit(" and "), l2)).otherwise(lit("")),
-        when(d % 5 === 2,
-          concat(lit(" and "), WebOps.canonicalizeUrl(col("url"))))
-          .otherwise(lit(""))))
-  }
-
-  /** DuckDB twin of [[webLinkedDocs]] — `ldoc` = wdoc with the same link
-    * mentions appended to `text` (term-for-term the Scala concat). Depends
-    * on [[WebSynthCte]] AND on the corpus canon chain
-    * `${webCanonSql("wdoc", "doc_id, text", "s")}` (the self-link cites
-    * `scanon.canonical_url`).
-    */
-  private lazy val WebLinkedCte: String =
-    """ldoc AS (SELECT doc_id, url,
-      |  text || ' see ' ||
-      |  'https://src' || CAST((doc_id * 7 + 1) % 20 AS VARCHAR) || '-' ||
-      |    CAST((doc_id * 3) % 17 AS VARCHAR) ||
-      |    '.com/p/' || CAST(doc_id AS VARCHAR) ||
-      |  (CASE WHEN doc_id % 3 = 0 THEN
-      |      ' and HTTP://WWW.src' || CAST((doc_id * 11 + 2) % 20 AS VARCHAR) ||
-      |        '-' || CAST((doc_id * 5) % 17 AS VARCHAR) ||
-      |        '.co.uk:80/q/' || CAST(doc_id AS VARCHAR) ||
-      |        '?utm_source=x&z=' || CAST(doc_id % 9 AS VARCHAR)
-      |    ELSE '' END) ||
-      |  (CASE WHEN doc_id % 5 = 2 THEN ' and ' || canonical_url
-      |    ELSE '' END) AS text
-      |  FROM scanon)""".stripMargin
-
-  /** Deterministic PAGE synthesis for the domain-boilerplate gate:
-    * [[webSynthDocs]] URLs + the doc text chunked into 12-word lines (the
-    * [[lineSynthDocs]] rule) wrapped in per-domain site chrome — a nav
-    * line prepended and a copyright line appended, both derived from the
-    * registered domain, so every page of a domain shares them (ratio 1 →
-    * flagged) while content lines repeat only incidentally. Mirrored
-    * term-for-term by the web_boilerplate twin's `pg` CTE.
-    */
-  private def webPageDocs(docs: DataFrame): DataFrame = {
-    val w = split(col("text"), " ")
-    val chunked = concat_ws("\n", transform(
-      sequence(lit(0), ceil(size(w) / lit(12.0)).cast("int") - 1),
-      i => array_join(slice(w, i * 12 + 1, lit(12)), " ")))
-    webSynthDocs(docs).select(col("doc_id"), col("url"),
-      concat(lit("home | about | "), WebOps.urlDomain(col("url")),
-        lit("\n"), chunked,
-        lit("\ncopyright "), WebOps.urlDomain(col("url"))).as("text"))
-  }
-
-  /** Deterministic robots rules for the web_robots gate — mirrored
-    * term-for-term by [[RobotsRulesCte]]: five sources' domains (across
-    * all four public suffixes) carry a `disallow /a/1` + `allow /a/13`
-    * pair (longest-match + allow-tie exercised on doc_ids 1*, 13*), and
-    * src5's domains add a site-wide `disallow /` (overridden only by the
-    * longer allow) — the full REP precedence chain on real rows.
-    */
-  private def robotsRules(s: SparkSession): DataFrame = {
-    import s.implicits._
-    val tlds = Seq(".com", ".co.uk", ".com.au", ".github.io")
-    val srcs = Seq("src2", "src5", "src8", "src11", "src14")
-    val pairs = for {
-      src <- srcs; k <- 0 until 17; t <- tlds
-      r <- Seq(("disallow", "/a/1"), ("allow", "/a/13"))
-    } yield (s"$src-$k$t", r._1, r._2)
-    val site = for { k <- 0 until 17; t <- tlds }
-      yield (s"src5-$k$t", "disallow", "/")
-    (pairs ++ site).toDF("domain", "directive", "path_prefix")
-  }
-
-  /** DuckDB twin of [[robotsRules]] — `rr` = (domain, directive,
-    * path_prefix).
-    */
-  private lazy val RobotsRulesCte: String =
-    """rr AS (
-      |  SELECT s.s || '-' || CAST(r.range AS VARCHAR) || t.t AS domain,
-      |    d.d AS directive, d.p AS path_prefix
-      |  FROM (VALUES ('src2'), ('src5'), ('src8'), ('src11'), ('src14')) s(s),
-      |    range(0, 17) r,
-      |    (VALUES ('.com'), ('.co.uk'), ('.com.au'), ('.github.io')) t(t),
-      |    (VALUES ('disallow', '/a/1'), ('allow', '/a/13')) d(d, p)
-      |  UNION ALL
-      |  SELECT 'src5-' || CAST(r.range AS VARCHAR) || t.t, 'disallow', '/'
-      |  FROM range(0, 17) r,
-      |    (VALUES ('.com'), ('.co.uk'), ('.com.au'), ('.github.io')) t(t))""".stripMargin
-
-  /** DuckDB twin of [[webBlocklist]] — `bl` = (kind, pattern). */
-  private lazy val WebBlocklistCte: String =
-    """bl AS (
-      |  SELECT 'domain' AS kind,
-      |    'src3-' || CAST(r.range AS VARCHAR) || t.t AS pattern
-      |  FROM range(0, 17) r,
-      |    (VALUES ('.com'), ('.co.uk'), ('.com.au'), ('.github.io')) t(t)
-      |  UNION ALL SELECT 'prefix', 'http://src7-'
-      |  UNION ALL SELECT 'prefix', 'https://www.src1-')""".stripMargin
-
-  /** Deterministic CONVERSATION synthesis for the SFT gates (the flat
-    * fixture has no turns table, so one is derived inside the query AND
-    * identically in [[ChatTurnsCte]]): each doc becomes a conversation of
-    * 2–5 non-system turns alternating user/assistant (content = successive
-    * 7-word slices of the doc text), a system turn prepended every fifth
-    * conversation, and two structural DEFECTS injected so the validation
-    * gate has real rows to flag — `doc_id % 11 == 7` repeats the user role
-    * on turn 1 (alternation violation) and `doc_id % 13 == 9` empties turn
-    * 1's content (short docs also produce natural empty slices).
-    * Output: (conv_id, source, turn_no, role, content).
-    */
-  private def chatSynthTurns(docs: DataFrame): DataFrame = {
-    val d = col("doc_id")
-    val w = split(col("text"), " ")
-    val base = transform(sequence(lit(0), (d % 4 + 1).cast("int")), i => {
-      val role = when(d % 11 === 7 && i === 1, lit("user"))
-        .otherwise(when(i % 2 === 0, lit("user")).otherwise(lit("assistant")))
-      val content = when(d % 13 === 9 && i === 1, lit(""))
-        .otherwise(array_join(slice(w, i * 7 + 1, lit(7)), " "))
-      struct(role.as("role"), content.as("content"))
-    })
-    val sys = when(d % 5 === 0,
-        array(struct(lit("system").as("role"),
-          lit("You are a concise assistant.").as("content"))))
-      .otherwise(array().cast("array<struct<role:string,content:string>>"))
-    docs.select(d.as("conv_id"), col("source"),
-        posexplode(concat(sys, base)).as(Seq("turn_no", "__t")))
-      .select(col("conv_id"), col("source"), col("turn_no"),
-        col("__t.role").as("role"), col("__t.content").as("content"))
-  }
-
-  /** DuckDB twin of [[chatSynthTurns]] — `turns` = (conv_id, source,
-    * turn_no, role, content), term-for-term the Scala derivation (the
-    * constant `range(0, 6)` covers the max 5 non-system turns; the WHERE
-    * bound is the per-conversation turn count).
-    */
-  private lazy val ChatTurnsCte: String =
-    """tw AS (SELECT doc_id AS conv_id, source, string_split(text, ' ') AS w
-      |  FROM documents),
-      |nt AS (SELECT conv_id, source,
-      |  CAST(i.range + (CASE WHEN conv_id % 5 = 0 THEN 1 ELSE 0 END)
-      |    AS INTEGER) AS turn_no,
-      |  (CASE WHEN conv_id % 11 = 7 AND i.range = 1 THEN 'user'
-      |     WHEN i.range % 2 = 0 THEN 'user' ELSE 'assistant' END) AS role,
-      |  (CASE WHEN conv_id % 13 = 9 AND i.range = 1 THEN ''
-      |     ELSE coalesce(
-      |       array_to_string(w[i.range * 7 + 1 : i.range * 7 + 7], ' '), '')
-      |   END) AS content
-      |  FROM tw, range(0, 6) i WHERE i.range < conv_id % 4 + 2),
-      |turns AS (
-      |  SELECT conv_id, source, 0 AS turn_no, 'system' AS role,
-      |    'You are a concise assistant.' AS content
-      |  FROM tw WHERE conv_id % 5 = 0
-      |  UNION ALL SELECT * FROM nt)""".stripMargin
-
-  /** Deterministic DUPLICATE-conversation synthesis for the sft_dedup
-    * gate: conversations sharing `doc_id % 50` are identical (2–4 turns of
-    * group-derived content), so each group collapses to one rendered
-    * identity with the lowest conv_id as keeper. Mirrored term-for-term by
-    * [[ChatVariantCte]].
-    */
-  private def chatVariantTurns(docs: DataFrame): DataFrame = {
-    val d = col("doc_id")
-    val g = d % 50
-    docs.select(d.as("conv_id"),
-        posexplode(transform(sequence(lit(0), (g % 3 + 1).cast("int")), i =>
-          struct(when(i % 2 === 0, lit("user")).otherwise(lit("assistant"))
-            .as("role"),
-          concat(lit("reply "), g.cast("string"), lit(" turn "),
-            i.cast("string")).as("content"))))
-          .as(Seq("turn_no", "__t")))
-      .select(col("conv_id"), col("turn_no"), col("__t.role").as("role"),
-        col("__t.content").as("content"))
-  }
-
-  /** DuckDB twin of [[chatVariantTurns]] — `vturns` = (conv_id, turn_no,
-    * role, content).
-    */
-  private lazy val ChatVariantCte: String =
-    """vturns AS (SELECT doc_id AS conv_id,
-      |  CAST(i.range AS INTEGER) AS turn_no,
-      |  (CASE WHEN i.range % 2 = 0 THEN 'user' ELSE 'assistant' END) AS role,
-      |  'reply ' || CAST(doc_id % 50 AS VARCHAR) || ' turn ' ||
-      |    CAST(i.range AS VARCHAR) AS content
-      |  FROM documents, range(0, 5) i
-      |  WHERE i.range < doc_id % 50 % 3 + 2)""".stripMargin
-
-  /** Deterministic PREFERENCE-pair synthesis for the pref_length_bias
-    * gate: (chosen, rejected) built from leading word slices of the doc
-    * text with lengths `6 + doc_id % 9` vs `4 + doc_id % 13` — a net
-    * longer-chosen bias with real exceptions in both directions. Mirrored
-    * term-for-term by [[PrefPairsCte]].
-    */
-  private def prefSynthPairs(docs: DataFrame): DataFrame = {
-    val d = col("doc_id")
-    val w = split(col("text"), " ")
-    docs.select(d.as("pair_id"), col("source"),
-      array_join(slice(w, lit(1), (lit(6) + d % 9).cast("int")), " ")
-        .as("chosen"),
-      array_join(slice(w, lit(1), (lit(4) + d % 13).cast("int")), " ")
-        .as("rejected"))
-  }
-
-  /** Deterministic SCORED-sample synthesis for the pref_best_of_n gate:
-    * ~5 samples per prompt (`doc_id % 97` buckets), responses from leading
-    * word slices, scores on a coarse `d%7 + d%3/2` grid so equal-score
-    * ties are frequent and the sample-id tie-break is exercised. Mirrored
-    * term-for-term by [[BonSamplesCte]].
-    */
-  private def bonSynthSamples(docs: DataFrame): DataFrame = {
-    val d = col("doc_id")
-    val w = split(col("text"), " ")
-    docs.select((d % 97).as("prompt_id"), d.as("sample_id"),
-      array_join(slice(w, lit(1), (lit(3) + d % 11).cast("int")), " ")
-        .as("response"),
-      ((d % 7).cast("double") + (d % 3).cast("double") / 2).as("score"))
-  }
-
-  /** DuckDB twin of [[bonSynthSamples]] — `bon` = (prompt_id, sample_id,
-    * response, score).
-    */
-  private lazy val BonSamplesCte: String =
-    """bon AS (SELECT doc_id % 97 AS prompt_id, doc_id AS sample_id,
-      |  coalesce(array_to_string(w[1 : CAST(3 + doc_id % 11 AS INTEGER)],
-      |    ' '), '') AS response,
-      |  CAST(doc_id % 7 AS DOUBLE) + CAST(doc_id % 3 AS DOUBLE) / 2
-      |    AS score
-      |  FROM (SELECT doc_id, string_split(text, ' ') AS w
-      |    FROM documents))""".stripMargin
-
-  /** DuckDB twin of [[prefSynthPairs]] — `pp` = (pair_id, source, chosen,
-    * rejected).
-    */
-  private lazy val PrefPairsCte: String =
-    """pp AS (SELECT doc_id AS pair_id, source,
-      |  coalesce(array_to_string(w[1 : CAST(6 + doc_id % 9 AS INTEGER)],
-      |    ' '), '') AS chosen,
-      |  coalesce(array_to_string(w[1 : CAST(4 + doc_id % 13 AS INTEGER)],
-      |    ' '), '') AS rejected
-      |  FROM (SELECT doc_id, source, string_split(text, ' ') AS w
-      |    FROM documents))""".stripMargin
-
-  /** The canonicalization SQL chain over `src`(<extra cols>, url) — twin
-    * of
-    * [[graft.pipeline.WebOps.canonicalizeUrl]]/[[graft.pipeline.WebOps.urlDomain]],
-    * ONE definition shared by the web_canonical_url / web_url_dedup /
-    * web_outlinks twins: CTEs `p` (raw components), `c` (normalized
-    * host/port + sorted kept params), `canon` (`extra`, url,
-    * canonical_url, domain). `extra` columns pass through untouched —
-    * the outlink twin canonicalizes the LINK column (`link AS url`) while
-    * carrying (doc_id, src_domain, link). `pfx` prefixes the CTE names
-    * so ONE query can run the chain twice (corpus `scanon` + link
-    * `canon` in the outlink twins).
-    */
-  private def webCanonSql(src: String, extra: String = "doc_id",
-      pfx: String = ""): String =
-    s"""${pfx}p AS (SELECT $extra, url,
-       |  lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-       |  regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1) AS auth,
-       |  regexp_replace(regexp_extract(url,
-       |    '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1), '/+$$', '') AS path,
-       |  regexp_extract(url, '\\?([^#]*)', 1) AS q
-       |  FROM $src),
-       |${pfx}c AS (SELECT $extra, url, scheme, path,
-       |  lower(regexp_extract(auth, '^([^:]*)', 1)) AS host,
-       |  regexp_extract(auth, ':([0-9]+)$$', 1) AS port,
-       |  array_to_string(list_sort(list_filter(string_split(q, '&'),
-       |    x -> x <> '' AND NOT regexp_matches(x,
-       |      '^(utm_[^=]*|fbclid|gclid|msclkid|ref)='))), '&') AS cq
-       |  FROM ${pfx}p),
-       |${pfx}canon AS (SELECT $extra, url,
-       |  scheme || '://' || host ||
-       |    (CASE WHEN port <> '' AND NOT (scheme = 'http' AND port = '80')
-       |       AND NOT (scheme = 'https' AND port = '443')
-       |     THEN ':' || port ELSE '' END) || path ||
-       |    (CASE WHEN cq <> '' THEN '?' || cq ELSE '' END) AS canonical_url,
-       |  ${pslDomainSql("host")} AS domain
-       |  FROM ${pfx}c)""".stripMargin
-
-  /** DuckDB twin of [[webVariantDocs]] — `vdoc` = (doc_id, url). */
-  private lazy val WebVariantCte: String =
-    """vdoc AS (SELECT doc_id,
-      |  (CASE WHEN doc_id % 2 = 0 THEN 'https' ELSE 'HTTPS' END) || '://' ||
-      |  (CASE WHEN (doc_id % 100) % 2 = 0 THEN
-      |      (CASE WHEN doc_id % 3 = 0 THEN 'WWW.' ELSE 'www.' END)
-      |    ELSE '' END) ||
-      |  (CASE WHEN doc_id % 4 = 0 THEN
-      |      upper('p' || CAST(doc_id % 100 AS VARCHAR) || '.example.com')
-      |    ELSE 'p' || CAST(doc_id % 100 AS VARCHAR) || '.example.com' END) ||
-      |  (CASE WHEN doc_id % 5 = 0 THEN ':443' ELSE '' END) ||
-      |  '/page/' || CAST(doc_id % 100 AS VARCHAR) ||
-      |  (CASE WHEN doc_id % 4 = 1 THEN '/' ELSE '' END) ||
-      |  (CASE WHEN doc_id % 3 = 0 THEN
-      |      '?id=' || CAST(doc_id % 100 AS VARCHAR) ||
-      |        '&utm_source=s' || CAST(doc_id AS VARCHAR)
-      |    WHEN doc_id % 3 = 1 THEN
-      |      '?id=' || CAST(doc_id % 100 AS VARCHAR) ||
-      |        '&fbclid=f' || CAST(doc_id AS VARCHAR)
-      |    ELSE '?utm_campaign=c' || CAST(doc_id AS VARCHAR) ||
-      |      '&id=' || CAST(doc_id % 100 AS VARCHAR) END) ||
-      |  (CASE WHEN doc_id % 7 = 3 THEN
-      |      '#f' || CAST(doc_id % 5 AS VARCHAR) ELSE '' END) AS url
-      |  FROM documents)""".stripMargin
-
-  /** Lowercased, port-stripped host over `url` — the twin of
-    * [[graft.pipeline.WebOps.urlHost]]. Emitted single-line (the nested
-    * stripMargin trap).
-    */
-  private lazy val WebHostSql: String =
-    "lower(regexp_extract(regexp_extract(url, " +
-      "'^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1), '^([^:]*)', 1))"
-
-  /** DuckDB twin of [[graft.pipeline.WebOps.registeredDomain]] over a
-    * BOUND host column expression — generated from the same PSL rule
-    * lists as the Spark side, so the curated public-suffix subset has
-    * one source of truth (a rule added in WebOps flows into every twin).
-    * Same algorithm: longest match, exception ≻ wildcard, implicit `*`
-    * default; hosts at or below the registrable point return themselves.
-    */
-  private def pslDomainSql(host: String): String = {
-    import graft.pipeline.WebOps._
-    def inList(xs: Seq[String]) = xs.map(s => s"'$s'").mkString(", ")
-    def sfx(k: Int) =
-      s"array_to_string(list_slice(string_split($host, '.'), -$k, -1), '.')"
-    val n = s"len(string_split($host, '.'))"
-    def reg(m: Int) =
-      s"(CASE WHEN $n > $m THEN ${sfx(m + 1)} ELSE $host END)"
-    s"(CASE WHEN $n >= 3 AND ${sfx(3)} IN (${inList(PslThreeLabelSuffixes)}) " +
-      s"THEN ${reg(3)} " +
-      s"WHEN $n >= 2 AND ${sfx(2)} IN (${inList(PslExceptions)}) " +
-      s"THEN ${reg(1)} " +
-      s"WHEN $n >= 3 AND ${sfx(1)} IN (${inList(PslWildcardParents)}) " +
-      s"THEN ${reg(2)} " +
-      s"WHEN $n >= 3 AND ${sfx(2)} IN (${inList(PslTwoLabelSuffixes)}) " +
-      s"THEN ${reg(2)} " +
-      s"ELSE ${reg(1)} END)"
-  }
-
-  /** Shared line-dedup CTE chain (twin of [[lineSynthDocs]] + the
-    * TextOps.lineDedup keying): `sdoc` (synthesized multi-line docs),
-    * `ln` (non-empty line slots with normalized key `k` and the
-    * first-occurrence rank `rn` under (doc, line_no)), and `st` (per-key
-    * distinct-doc / occurrence counts) — one definition shared by the
-    * text_line_dedup and text_line_clean twins so the keep rule cannot
-    * drift between them.
-    */
-  private lazy val LineDedupCtes: String =
-    """sdoc AS (SELECT doc_id,
-      |  array_to_string(list_transform(
-      |    range(0, CAST(ceil(len(w) / 12.0) AS INTEGER)),
-      |    i -> array_to_string(w[i * 12 + 1 : i * 12 + 12], ' ')), chr(10))
-      |    AS text
-      |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-      |ln0 AS (SELECT doc_id, u.no AS line_no, u.line FROM (
-      |  SELECT doc_id, unnest(list_transform(range(1, len(ls) + 1),
-      |    i -> struct_pack(no := CAST(i - 1 AS INTEGER), line := ls[i]))) AS u
-      |  FROM (SELECT doc_id, string_split(text, chr(10)) AS ls FROM sdoc))),
-      |ln AS (SELECT doc_id, line_no, line, lower(trim(line)) AS k,
-      |  row_number() OVER (PARTITION BY lower(trim(line))
-      |    ORDER BY doc_id ASC, line_no ASC) AS rn
-      |  FROM ln0 WHERE lower(trim(line)) <> ''),
-      |st AS (SELECT k, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-      |  CAST(count(*) AS BIGINT) AS n_occurrences FROM ln GROUP BY 1)""".stripMargin
-
-  /** Where sim_pq_prod freezes its trained PQ model (codebooks + codes)
-    * to parquet, partitioned by an explicit model id (`pqprod-<n>` —
-    * derived from the corpus row count so per-SF runs coexist AND the
-    * twin can reconstruct it): the Verify pass writes it, then BOTH the
-    * Spark query and the DuckDB twin score from the same frozen files
-    * (the twin selects the partition by deriving the same id from
-    * `count(*) FROM embeddings`). Lives under target/ — build-transient,
-    * never committed.
-    */
-  private val PqFrozenDir = "/root/repo/target/graft_frozen/pq_prod"
-
-  /** Train-once/serve-many amortization for the frozen-model rows: a
-    * COMPLETED freeze drops a marker file under its face dir, and later
-    * runs of the same (face, model id) — bench warm-up vs timed pass,
-    * gate re-runs, repeated Verify — serve from the read-back frozen
-    * relations instead of retraining. Correct by the registry identity:
-    * the model id keys the corpus (per-SF row counts), the marker is
-    * written only after the freeze returns, and each face keeps its OWN
-    * dir (two trainings can differ in the last ulp, so faces sharing a
-    * model would be order-coupled — the clf-dir policy). The oracles are
-    * unaffected either way: query and twin always read the SAME files.
-    * `sim_ivfpq_prod` deliberately does NOT amortize — it stays the one
-    * row exercising the full train+freeze+serve path every run.
-    */
-  private def amortizedFreeze[T](base: String, modelId: String)(
-      readBack: => T)(trainFreeze: => T): T = {
-    val marker = new java.io.File(s"$base/_frozen_ok_$modelId")
-    if (marker.exists()) readBack
-    else {
-      val r = trainFreeze
-      marker.getParentFile.mkdirs()
-      marker.createNewFile()
-      r
-    }
-  }
-
-  /** The amortized frozen-model rows ([[amortizedFreeze]]): Bench runs
-    * these once untimed against the TIMED SF right after warm-up, so
+  /** The amortized frozen-model rows ([[Fixtures.amortizedFreeze]]): Bench
+    * runs these once untimed against the TIMED SF right after warm-up, so
     * their timed numbers measure SERVING (the production steady state),
     * with the train+freeze cost paid once per session — while
     * sim_ivfpq_prod keeps timing the full path.
@@ -656,8014 +47,47 @@ object SparkEntry {
     // jobs) and identical across the three faces; text_quality_clf keeps
     // timing the full training path every run as the control.
     "clf_quality_frozen", "sql_clf_score", "stream_clf_score")
+}
 
-  /** Where sim_ivfpq_prod freezes its trained IVF-PQ index (cell
-    * centroids + codebooks + cell-carrying codes partitioned by
-    * (model_id, cell) for probe-time partition pruning) — same
-    * model-id-keyed lifecycle as [[PqFrozenDir]].
-    */
-  private val IvfPqFrozenDir = "/root/repo/target/graft_frozen/ivfpq_prod"
+/** One query row: its name, its Spark builder over `(session, sfDir)`, its
+  * DuckDB oracle SQL, and its faces. The oracle is by-name and built at most
+  * once, on first use.
+  */
+final class QueryRow(val name: String, val build: QueryRow.Build,
+    oracleSql: => String, val faces: Seq[QueryRow.Face]) {
+  lazy val oracle: String = oracleSql
+}
 
-  /** Where stream_ann_topk / sql_ann_serve freeze THEIR IVF-PQ indexes
-    * (each frozen-model query trains and freezes to its own dir — queries
-    * stay self-contained and order-independent; see the clf dirs' comment
-    * for why faces must not share a freeze).
-    */
-  private val StreamAnnFrozenDir = "/root/repo/target/graft_frozen/stream_ann"
-  private val SqlAnnFrozenDir = "/root/repo/target/graft_frozen/sql_ann"
+object QueryRow {
+  type Build = (SparkSession, String) => DataFrame
 
-  /** Where sim_pq_addbatch freezes the BOOTSTRAP-trained PQ model whose
-    * codebooks the held-out batch is encoded against (model id derived
-    * from the bootstrap row count — the twin reconstructs it via the same
-    * filtered count).
+  /** A query that reaches its base row's operator another way — the
+    * `graft_*` table functions, whose builders splice the Scala calls'
+    * plans; a stream's batch face; incremental maintenance — and must hash
+    * equal to it, so it shares the base's oracle. A frozen-model face
+    * serves from its own frozen dir, so it names the same serving oracle
+    * pointed at that dir.
     */
-  private val PqAddFrozenDir = "/root/repo/target/graft_frozen/pq_addbatch"
+  final class Face(val name: String, val build: Build,
+      val oracle: Option[() => String])
 
-  /** Where stream_pq_addbatch freezes ITS bootstrap PQ model (own dir —
-    * the per-face freeze policy; see the clf dirs' comment).
-    */
-  private val StreamPqAddFrozenDir =
-    "/root/repo/target/graft_frozen/stream_pq_addbatch"
+  def row(name: String, build: Build, oracle: => String,
+      faces: Face*): QueryRow = new QueryRow(name, build, oracle, faces)
 
-  /** DuckDB twin of frozen-codebook batch encoding over the model under
-    * `base` — shared by sim_pq_addbatch and stream_pq_addbatch so the
-    * maintenance arithmetic has ONE SQL definition: encode the held-out
-    * batch (vec_id % 3 = 0) against the bootstrap-frozen codebooks — per
-    * (vector, subspace) the argmin cluster by squared L2 with the
-    * training assignment's exact (dist, cluster) tie-break, recomputed
-    * from the same frozen parquet.
-    */
-  private def pqAddTwinSql(base: String): String =
-    s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-       |b AS (SELECT vec_id, v FROM e WHERE vec_id % 3 = 0),
-       |mid AS (SELECT 'pqadd-' || CAST(count(*) AS VARCHAR) AS k
-       |  FROM embeddings WHERE vec_id % 3 <> 0),
-       |cb AS (SELECT subspace, cluster, centroid
-       |  FROM read_parquet('$base/codebooks/*/*.parquet', hive_partitioning = 1)
-       |  WHERE CAST(model_id AS VARCHAR) = (SELECT k FROM mid)),
-       |d AS (SELECT b.vec_id, cb.subspace, cb.cluster,
-       |  list_sum(list_transform(range(1, len(cb.centroid) + 1),
-       |    i -> (b.v[cb.subspace * len(cb.centroid) + i] - cb.centroid[i])
-       |       * (b.v[cb.subspace * len(cb.centroid) + i] - cb.centroid[i]))) AS dist
-       |  FROM b CROSS JOIN cb)
-       |SELECT vec_id, subspace, cluster, dist FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id, subspace
-       |    ORDER BY dist ASC, cluster ASC) AS rn FROM d)
-       |WHERE rn = 1""".stripMargin
+  def face(name: String)(build: Build): Face = new Face(name, build, None)
 
-  /** DuckDB twin of frozen IVF-PQ ADC serving (no rerank tail) over the
-    * index under `base` — shared by the stream_ann_topk and sql_ann_serve
-    * oracles so the serving arithmetic has ONE SQL definition: coarse
-    * probe (cosine to every frozen cell centroid, top nprobe by csim
-    * desc / cell asc), per-query ADC distance tables from the frozen
-    * codebooks, cell-restricted code scoring summed in subspace order,
-    * (adc asc, id asc) rank <= topK.
-    */
-  private def annFrozenTwinSql(base: String): String =
-    s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-       |q AS (SELECT vec_id AS query_id, v FROM e WHERE vec_id < 5),
-       |mid AS (SELECT 'ivfpq-' || CAST(count(*) AS VARCHAR) AS k FROM embeddings),
-       |ce AS (SELECT cell, centroid
-       |  FROM read_parquet('$base/cells/*/*.parquet', hive_partitioning = 1)
-       |  WHERE CAST(model_id AS VARCHAR) = (SELECT k FROM mid)),
-       |cb AS (SELECT subspace, cluster, centroid
-       |  FROM read_parquet('$base/codebooks/*/*.parquet', hive_partitioning = 1)
-       |  WHERE CAST(model_id AS VARCHAR) = (SELECT k FROM mid)),
-       |cd AS (SELECT vec_id AS neighbor_id, CAST(cell AS INTEGER) AS cell,
-       |    subspace, cluster
-       |  FROM read_parquet('$base/codes/*/*/*.parquet', hive_partitioning = 1)
-       |  WHERE CAST(model_id AS VARCHAR) = (SELECT k FROM mid)),
-       |probe AS (SELECT query_id, cell FROM (
-       |  SELECT q.query_id, ce.cell,
-       |    row_number() OVER (PARTITION BY q.query_id ORDER BY
-       |      ${vecCosSql("q.v", "ce.centroid")} DESC, ce.cell ASC) AS prank
-       |  FROM q CROSS JOIN ce) WHERE prank <= 3),
-       |dt AS (SELECT q.query_id, cb.subspace, cb.cluster,
-       |  list_sum(list_transform(range(1, len(cb.centroid) + 1),
-       |    i -> (q.v[cb.subspace * len(cb.centroid) + i] - cb.centroid[i])
-       |       * (q.v[cb.subspace * len(cb.centroid) + i] - cb.centroid[i]))) AS d
-       |  FROM q CROSS JOIN cb),
-       |ad AS (SELECT dt.query_id, cd.neighbor_id,
-       |  list_sum(list(dt.d ORDER BY dt.subspace)) AS adc_dist
-       |  FROM cd JOIN probe p ON p.cell = cd.cell
-       |  JOIN dt ON dt.subspace = cd.subspace AND dt.cluster = cd.cluster
-       |    AND dt.query_id = p.query_id
-       |  WHERE cd.neighbor_id <> dt.query_id GROUP BY 1, 2)
-       |SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, adc_dist FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |    ORDER BY adc_dist ASC, neighbor_id ASC) AS rank FROM ad)
-       |WHERE rank <= 3""".stripMargin
+  def face(name: String, oracle: => String)(build: Build): Face =
+    new Face(name, build, Some(() => oracle))
 
-  /** Where the frozen quality classifier's faces freeze their trained
-    * logreg model (weights + standardization moments, dims+1 rows) — same
-    * per-SF model-id partition-keying contract as [[PqFrozenDir]]:
-    * Verify writes it, then both the Spark query and the DuckDB twin
-    * SCORE from the same frozen file. EACH face trains and freezes to its
-    * OWN base dir: two trainings can differ in the last ulp (float
-    * partial-agg merge order), so a shared model would make the faces
-    * order-dependent — per-face freezes keep every (query, twin) pair
-    * self-consistent even under a filtered single-query run.
-    * Build-transient under target/, never committed.
+  /** Every row and every face as a row of its own. Throws on a name
+    * declared more than once, naming it.
     */
-  private val ClfFrozenDir = "/root/repo/target/graft_frozen/clf_quality"
-  private val ClfSqlFrozenDir = "/root/repo/target/graft_frozen/clf_quality_sql"
-  private val ClfStreamFrozenDir = "/root/repo/target/graft_frozen/clf_quality_stream"
-
-  /** Shared train-once/serve-many harness for the frozen quality
-    * classifier's three faces (batch / SQL TVF / streaming): train on the
-    * quality-rule label, freeze the model under an explicit model id
-    * (the pqFreeze registry contract — here `clf-<n>` so per-SF runs
-    * coexist and the twin can derive the id), read it BACK, and hand
-    * (docs, frozenModel) to the face's scorer.
-    */
-  private def frozenClfScore(s: SparkSession, dir: String, base: String)(
-      via: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val docs = Tables(s, dir).documents
-    val n = docs.count()
-    def readBack: DataFrame = s.read.parquet(s"$base/model")
-      .where(col("model_id") === s"clf-$n").drop("model_id")
-    // train-once/serve-many ([[amortizedFreeze]]): the GD training is a
-    // driver-sequential chain of ~30 tiny jobs (measured par ≈ 0.8 — the
-    // cluster sits idle while iterations round-trip the driver), while
-    // serving is one narrow corpus scan. The three clf faces are listed in
-    // [[frozenAmortized]], so Bench pays training once untimed and the
-    // timed rows measure the production steady state — the same split the
-    // PQ family shipped in r14 §4. Training stays timed end-to-end in
-    // text_quality_clf (same GD path, inline scoring).
-    val mF = amortizedFreeze(base, s"clf-$n")(readBack) {
-      val model = TextOps.logregTrain(docs,
-        TextOps.qualityScoreCol(col("text")) >= 0.6)
-      // dims+1 = 65 rows: model-scale, single-file is the right layout
-      Similarity.freezeModelScale(model, s"clf-$n", s"$base/model")
-      readBack
-    }
-    via(docs, mF)
+  def flatten(rows: Seq[QueryRow]): Seq[QueryRow] = {
+    val all = rows.flatMap(r => r +: r.faces.map(f =>
+      new QueryRow(f.name, f.build, f.oracle.fold(r.oracle)(_()), Nil)))
+    val dups = all.groupBy(_.name).collect { case (n, rs) if rs.size > 1 => n }
+    require(dups.isEmpty,
+      s"query names declared more than once: ${dups.toSeq.sorted.mkString(", ")}")
+    all
   }
-
-  /** DuckDB twin of [[graft.pipeline.TextOps.logregScoreFrozen]] over the
-    * frozen model under `base` — shared by the classifier's three faces
-    * so the serving arithmetic has one SQL definition (see the oracle
-    * map's clf_quality_frozen comment for the contract).
-    */
-  private def clfFrozenTwinSql(base: String): String = {
-    val dims = 64
-    s"""WITH mdl AS MATERIALIZED (SELECT CAST(b AS INTEGER) AS b, w, mu, sd
-       |  FROM read_parquet('$base/model/*/*.parquet', hive_partitioning = 1)
-       |  WHERE CAST(model_id AS VARCHAR) =
-       |    'clf-' || CAST((SELECT count(*) FROM documents) AS VARCHAR)),
-       |toksq AS (SELECT doc_id, $Toks AS tk FROM documents),
-       |occ AS (SELECT doc_id, ${phSql("t", "0")} % $dims AS b
-       |  FROM (SELECT doc_id, unnest(tk) AS t FROM toksq WHERE len(tk) > 0)),
-       |cc AS MATERIALIZED (SELECT doc_id, b, CAST(count(*) AS DOUBLE) AS c
-       |  FROM occ GROUP BY 1, 2),
-       |dl AS (SELECT DISTINCT doc_id FROM cc),
-       |fx AS MATERIALIZED (SELECT d.doc_id,
-       |  list((coalesce(cc.c, CAST(0 AS DOUBLE)) - m.mu) / m.sd ORDER BY r.b) AS x
-       |  FROM dl d CROSS JOIN range(0, $dims) r(b)
-       |  JOIN mdl m ON m.b = r.b
-       |  LEFT JOIN cc ON cc.doc_id = d.doc_id AND cc.b = r.b
-       |  GROUP BY d.doc_id),
-       |wt AS (SELECT (SELECT list(w ORDER BY b) FROM mdl WHERE b >= 0) AS w,
-       |  (SELECT w FROM mdl WHERE b = -1) AS wb)
-       |SELECT doc_id, p, p >= CAST(0.5 AS DOUBLE) AS pred FROM (
-       |  SELECT f.doc_id, CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE)
-       |    + exp(-(wt.wb + list_sum(list_transform(range(1, ${dims + 1}),
-       |      i -> f.x[i] * wt.w[i]))))) AS p
-       |  FROM fx f CROSS JOIN wt)""".stripMargin
-  }
-
-  /** DuckDB twin of VecCosine over pre-cast DOUBLE lists (same per-sum
-    * left-to-right accumulation, same final expression — the sim_topk gate
-    * pins the equivalence).
-    */
-  private def vecCosSql(a: String, b: String): String =
-    s"(list_sum(list_transform(range(1, len($a) + 1), i -> $a[i] * $b[i])) / " +
-      s"(sqrt(list_sum(list_transform(range(1, len($a) + 1), i -> $a[i] * $a[i]))) * " +
-      s"sqrt(list_sum(list_transform(range(1, len($b) + 1), i -> $b[i] * $b[i])))))"
-
-  /** Twin of Similarity.kCenters(k=8): greedy farthest-point rounds
-    * unrolled as MATERIALIZED CTEs (self-referencing chain — plain CTEs
-    * re-expand exponentially). Each round r picks argmax of
-    * `1 − max(cos to the selected set)` with the (d desc, id asc)
-    * tie-break, the union chain `cts_r` carries the selected set forward.
-    */
-  private val KCenterOracle: String = {
-    val k = 8
-    val rounds = (2 to k).map { r =>
-      s"""s$r AS MATERIALIZED (SELECT e.id AS id, first(e.v) AS v,
-         |  1 - max(${vecCosSql("e.v", "c.v")}) AS d
-         |  FROM e, cts${r - 1} c WHERE e.id NOT IN (SELECT id FROM cts${r - 1})
-         |  GROUP BY e.id ORDER BY d DESC, e.id LIMIT 1),
-         |cts$r AS (SELECT id, v FROM cts${r - 1} UNION ALL SELECT id, v FROM s$r)""".stripMargin
-    }.mkString(",\n")
-    val sel = (2 to k)
-      .map(r => s"SELECT $r AS round, id AS vec_id, d AS sep_dist FROM s$r")
-      .mkString("\nUNION ALL ")
-    s"""WITH e AS (SELECT vec_id AS id,
-       |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-       |c1 AS MATERIALIZED (SELECT id, v FROM e ORDER BY id LIMIT 1),
-       |cts1 AS (SELECT id, v FROM c1),
-       |$rounds
-       |SELECT 1 AS round, id AS vec_id, CAST(NULL AS DOUBLE) AS sep_dist FROM c1
-       |UNION ALL $sel""".stripMargin
-  }
-
-  /** Twin of Similarity.mmrSelect(query=vec 0, k=5, shortlist=20, λ=0.7):
-    * greedy rounds unrolled as MATERIALIZED CTEs (the round chain is
-    * self-referencing — plain CTEs re-expand exponentially). The λ
-    * complement is written `(1 - 0.7)`, NOT the literal 0.3: the driver
-    * computes `1.0 - lambda` and the two doubles differ in the last ulp.
-    */
-  private lazy val MmrOracle: String = {
-    val rounds = (2 to 5).map { r =>
-      s"""c$r AS MATERIALIZED (SELECT c.id, c.rel,
-         |  0.7 * c.rel - (CAST(1 AS DOUBLE) - 0.7) * max(p.sim) AS mmr
-         |  FROM sl c JOIN ps p ON p.ia = c.id JOIN s${r - 1} s ON p.ib = s.id
-         |  WHERE c.id NOT IN (SELECT id FROM s${r - 1}) GROUP BY c.id, c.rel),
-         |p$r AS MATERIALIZED (SELECT id, rel, $r AS rk, mmr FROM c$r
-         |  ORDER BY mmr DESC, id ASC LIMIT 1),
-         |s$r AS MATERIALIZED (SELECT id, rel, rk, mmr FROM s${r - 1}
-         |  UNION ALL SELECT id, rel, rk, mmr FROM p$r)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-       |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-       |sc AS (SELECT c.vec_id AS id, ${vecCosSql("q.qv", "c.v")} AS rel, c.v AS v
-       |  FROM e c CROSS JOIN q WHERE c.vec_id <> 0),
-       |sl AS MATERIALIZED (SELECT id, rel, v FROM sc ORDER BY rel DESC, id ASC LIMIT 20),
-       |ps AS MATERIALIZED (SELECT a.id AS ia, b.id AS ib,
-       |  ${vecCosSql("a.v", "b.v")} AS sim FROM sl a JOIN sl b ON a.id <> b.id),
-       |s1 AS MATERIALIZED (SELECT id, rel, 1 AS rk,
-       |  0.7 * rel - (CAST(1 AS DOUBLE) - 0.7) * CAST(0 AS DOUBLE) AS mmr
-       |  FROM sl ORDER BY rel DESC, id ASC LIMIT 1),
-       |$rounds
-       |SELECT CAST(0 AS BIGINT) AS query_id, id AS vec_id,
-       |  CAST(rk AS INTEGER) AS mmr_rank, rel, mmr AS mmr_score FROM s5""".stripMargin
-  }
-
-  /** Shared CTE chain for the exact-duplicated-8-gram twins
-    * (text_dup_spans / text_dup_coverage): token 8-grams per document with
-    * their 0-based start position and PolyHash identity, reduced to the
-    * starts whose gram occurs in >= 2 distinct documents —
-    * `dst(doc_id, pos)`. Mirrors TextOps.dupGramStarts(n=8, minDocs=2);
-    * `dtk` (doc_id, tk) is also reused by the coverage twin's token counts.
-    */
-  private val DupGramCtes: String =
-    s"""dtk AS (SELECT doc_id, $Toks AS tk FROM documents),
-       |dsh AS (SELECT doc_id, CASE WHEN len(tk) >= 8
-       |  THEN list_transform(range(1, len(tk) - 6), i -> array_to_string(tk[i:i+7], ' '))
-       |  ELSE [] END AS sh FROM dtk),
-       |dgx AS (SELECT doc_id, CAST(unnest(range(1, len(sh) + 1)) AS BIGINT) AS i, sh
-       |  FROM dsh),
-       |dg AS (SELECT doc_id, i - 1 AS pos,
-       |  ${phSql("sh[CAST(i AS INTEGER)]", "0")} AS gh FROM dgx),
-       |ddup AS (SELECT gh FROM dg GROUP BY gh HAVING count(DISTINCT doc_id) >= 2),
-       |dst AS (SELECT doc_id, pos FROM dg JOIN ddup USING (gh))""".stripMargin
-
-  /** DuckDB twin of [[changeLog]] — ends in `clog(doc_id, text, seq, op)`,
-    * shared by the cdc_apply / cdc_scd2 twins so the fixture cannot drift.
-    */
-  private val CdcLogCte: String =
-    """clog AS (
-      |  SELECT doc_id, CAST(NULL AS VARCHAR) AS text,
-      |    CAST(1 AS BIGINT) AS seq, 'D' AS op FROM documents WHERE doc_id % 11 = 4
-      |  UNION ALL SELECT doc_id, text || ' v2', 1, 'U'
-      |    FROM documents WHERE doc_id % 11 = 6
-      |  UNION ALL SELECT doc_id, text || ' v3', 2, 'U'
-      |    FROM documents WHERE doc_id % 22 = 6
-      |  UNION ALL SELECT doc_id + (CAST(1 AS BIGINT) << 42), text, 1, 'I'
-      |    FROM documents WHERE doc_id % 11 = 8)""".stripMargin
-
-  /** Shared CTE chain for the winnowing twins (text_winnow, dedup_winnow):
-    * 5-gram PolyHash stream per document, the (hash, rightmost-pos) pair
-    * packed into one orderable long (hash*2^21 + (2^21-1-pos)) so the
-    * window MIN implements robust winnowing's rightmost-min tie rule, full
-    * windows of 4 (short docs keep their final partial window). Ends in
-    * `wfp(doc_id, fp_pos, fp)` — mirrors TextOps.winnowFingerprints.
-    */
-  private val WinnowCtes: String =
-    s"""wtk AS (SELECT doc_id, $Toks AS tk FROM documents),
-       |wsh AS (SELECT doc_id, CASE WHEN len(tk) >= 5
-       |  THEN list_transform(range(1, len(tk) - 3), i -> array_to_string(tk[i:i+4], ' '))
-       |  ELSE [] END AS sh FROM wtk),
-       |wgx AS (SELECT doc_id, CAST(unnest(range(1, len(sh) + 1)) AS BIGINT) AS i, sh
-       |  FROM wsh),
-       |wg AS (SELECT doc_id, i - 1 AS pos,
-       |  ${phSql("sh[CAST(i AS INTEGER)]", "0")} AS gh FROM wgx),
-       |wenc AS (SELECT doc_id, pos, gh * 2097152 + (2097151 - pos) AS e,
-       |  max(pos) OVER (PARTITION BY doc_id) AS maxpos FROM wg),
-       |wwin AS (SELECT doc_id, pos, maxpos,
-       |  min(e) OVER (PARTITION BY doc_id ORDER BY pos
-       |    ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS we FROM wenc),
-       |wfp AS (SELECT DISTINCT doc_id, 2097151 - (we % 2097152) AS fp_pos,
-       |  we // 2097152 AS fp
-       |  FROM wwin WHERE pos >= least(3, maxpos))""".stripMargin
-
-  /** Shared CTE chain for the Okapi BM25 twins (text_bm25, retrieve_rrf):
-    * the fixed query {table, scan, sort, key} scored with k1=1.2, b=0.75 —
-    * ends in `bm25(doc_id, n_matched_terms, score)`, UNRANKED and UNCUT so
-    * each consumer applies its own (score desc, doc_id asc) order/limit.
-    * Mirrors TextOps.bm25 term for term.
-    */
-  private val Bm25Ctes: String =
-    s"""d AS (SELECT doc_id, $Toks AS toks FROM documents),
-       |dl AS (SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS len FROM d),
-       |st AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-       |  CAST(sum(len) AS DOUBLE) / count(*) AS avg_len FROM dl),
-       |occ AS (SELECT doc_id, len, unnest(toks) AS t FROM dl),
-       |tf AS (SELECT doc_id, len, t, CAST(count(*) AS BIGINT) AS tf FROM occ
-       |  WHERE t IN ('table', 'scan', 'sort', 'key') GROUP BY 1, 2, 3),
-       |dfq AS (SELECT t, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-       |c AS (SELECT tf.doc_id,
-       |  ln((CAST(st.n_docs - dfq.df AS DOUBLE) + CAST(0.5 AS DOUBLE))
-       |      / (CAST(dfq.df AS DOUBLE) + CAST(0.5 AS DOUBLE)) + CAST(1 AS DOUBLE))
-       |    * (CAST(tf.tf AS DOUBLE) * (CAST(1.2 AS DOUBLE) + CAST(1 AS DOUBLE)))
-       |    / (CAST(tf.tf AS DOUBLE) + CAST(1.2 AS DOUBLE)
-       |      * (CAST(1 AS DOUBLE) - CAST(0.75 AS DOUBLE)
-       |        + CAST(0.75 AS DOUBLE) * (CAST(tf.len AS DOUBLE) / st.avg_len))) AS c
-       |  FROM tf JOIN dfq USING (t) CROSS JOIN st),
-       |bm25 AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matched_terms,
-       |  sum(c) AS score FROM c GROUP BY 1)""".stripMargin
-
-  /** Shared CTE chain producing the verified MinHash near-dup pairs as
-    * `mh_pairs(id_a, id_b, jaccard)` — the dedup_minhash oracle's body,
-    * reused by dedup_clusters' transitive closure so the two oracles cannot
-    * drift apart.
-    */
-  /** [[MinhashPairsCtes]] with the source relation as a parameter, so the
-    * dedup_eval slice reuses the exact same pipeline body.
-    */
-  private def minhashPairsCtesFrom(src: String): String =
-    s"""toks AS (SELECT doc_id, $Toks AS tk FROM $src),
-       |sh AS (SELECT doc_id, CASE WHEN len(tk) >= 3
-       |  THEN list_transform(range(1, len(tk) - 1), i -> array_to_string(tk[i:i+2], ' '))
-       |  ELSE [] END AS sh FROM toks),
-       |sig AS (SELECT doc_id,
-       |  list_transform(range(0, 32), j -> list_min(list_transform(sh, s -> ${phSql("s", "j")}))) AS sig
-       |FROM sh WHERE len(sh) > 0),
-       |bnd AS (SELECT doc_id, b,
-       |  ${phSql("array_to_string(list_transform(sig[b*4+1:b*4+4], x -> CAST(x AS VARCHAR)), ',')", "b")} AS band_hash
-       |FROM sig CROSS JOIN range(0, 8) rb(b)),
-       |cand AS (SELECT DISTINCT l.doc_id AS id_a, r2.doc_id AS id_b FROM bnd l
-       |  JOIN bnd r2 ON l.b = r2.b AND l.band_hash = r2.band_hash AND l.doc_id < r2.doc_id),
-       |sets AS (SELECT doc_id, list_distinct(sh) AS sh FROM sh),
-       |mh_pairs AS (SELECT id_a, id_b, jaccard FROM (
-       |  SELECT c.id_a, c.id_b,
-       |    CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-       |      len(list_distinct(list_concat(a.sh, b.sh))) AS jaccard
-       |  FROM cand c JOIN sets a ON a.doc_id = c.id_a JOIN sets b ON b.doc_id = c.id_b)
-       |WHERE jaccard >= 0.5)""".stripMargin
-
-  private lazy val MinhashPairsCtes: String = minhashPairsCtesFrom("documents")
-
-  /** The er_* oracles' shared body: the [[erDirtyCustomers]] fixture, the
-    * radius-1 deletion neighborhoods on both sides, and the verified
-    * `er_pairs(id_a, id_b, name_a, name_b, dist)` match relation.
-    */
-  private def erPairsCtesFrom(src: String): String =
-    s"""dirty AS (SELECT c_custkey + (CAST(1 AS BIGINT) << 40) AS d_id,
-      |  concat(substr(c_name, 1, CAST(9 + c_custkey % 9 AS INTEGER)),
-      |    substr(c_name, CAST(11 + c_custkey % 9 AS INTEGER), length(c_name))) AS d_name
-      |  FROM $src WHERE c_custkey % 3 = 0),
-      |va AS (SELECT d_id AS id_a, d_name AS name_a,
-      |  unnest(list_transform(range(0, length(d_name) + 1), i ->
-      |    CASE WHEN i = 0 THEN d_name
-      |      ELSE concat(substr(d_name, 1, CAST(i - 1 AS INTEGER)),
-      |        substr(d_name, CAST(i + 1 AS INTEGER), CAST(length(d_name) AS INTEGER)))
-      |    END)) AS v FROM dirty),
-      |vb AS (SELECT c_custkey AS id_b, c_name AS name_b,
-      |  unnest(list_transform(range(0, length(c_name) + 1), i ->
-      |    CASE WHEN i = 0 THEN c_name
-      |      ELSE concat(substr(c_name, 1, CAST(i - 1 AS INTEGER)),
-      |        substr(c_name, CAST(i + 1 AS INTEGER), CAST(length(c_name) AS INTEGER)))
-      |    END)) AS v FROM $src),
-      |cand AS (SELECT DISTINCT id_a, id_b, name_a, name_b
-      |  FROM va JOIN vb ON va.v = vb.v),
-      |er_pairs AS (SELECT id_a, id_b, name_a, name_b,
-      |  CAST(levenshtein(name_a, name_b) AS INTEGER) AS dist
-      |  FROM cand WHERE levenshtein(name_a, name_b) <= 1)""".stripMargin
-
-  private lazy val ErPairsCtes: String = erPairsCtesFrom("customer")
-
-  /** Transitive-closure CTEs over `mh_pairs` (requires `WITH RECURSIVE`
-    * and [[MinhashPairsCtes]] in scope): one definition of the cluster
-    * resolution shared by the dedup_clusters and dedup_keepers twins.
-    */
-  private lazy val ClosureCtes: String =
-    s"""edges AS (SELECT id_a AS src, id_b AS dst FROM mh_pairs
-       |  UNION SELECT id_b, id_a FROM mh_pairs),
-       |reach(id, comp) AS (SELECT DISTINCT src, src FROM edges
-       |  UNION SELECT e.dst, r.comp FROM reach r JOIN edges e ON e.src = r.id),
-       |comps AS (SELECT id AS doc_id, min(comp) AS cluster_id FROM reach GROUP BY id),
-       |sizes AS (SELECT cluster_id, count(*) AS cluster_size FROM comps GROUP BY 1)""".stripMargin
-
-  /** Shared CTE chain for the CELL-BLOCKED mutual k-NN graph twin
-    * (Similarity.knnGraph, k=3, nprobe=3, kCells=8, iters=2): the SAME
-    * unrolled kmeans chain as vec_kmeans/dedup_semantic ([[KmeansCtes]]
-    * — e the double-cast corpus, af the final assignment, c2 the trained
-    * centroids), every vector probing its 3 nearest cells by squared-L2
-    * to the centroids ((dist asc, cell asc) tie-break — the metric the
-    * cells were trained under), exact cosine over probed-cell members
-    * only, top-3 by (cos desc, id asc), then the mutual self-join. Ends
-    * in `knn_edges(id_a, id_b, cos_sim)` so the vec_knn_graph and
-    * vec_clusters twins share one definition.
-    */
-  private lazy val KnnCellCtes: String =
-    s"""$KmeansCtes,
-       |probe AS (SELECT query_id, cell FROM (
-       |  SELECT q.vec_id AS query_id, c2.cluster AS cell,
-       |    row_number() OVER (PARTITION BY q.vec_id ORDER BY
-       |      list_sum(list_transform(range(1, len(q.v) + 1),
-       |        i -> (q.v[i] - c2.centroid[i]) * (q.v[i] - c2.centroid[i]))) ASC,
-       |      c2.cluster ASC) AS prank
-       |  FROM e q CROSS JOIN c2) WHERE prank <= 3),
-       |sknn AS (SELECT p.query_id, c.vec_id AS neighbor_id,
-       |  ${vecCosSql("q.v", "c.v")} AS c
-       |  FROM probe p JOIN e q ON q.vec_id = p.query_id
-       |  JOIN af c ON c.cluster = p.cell AND c.vec_id <> p.query_id),
-       |tknn AS (SELECT query_id, neighbor_id, c FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |    ORDER BY c DESC, neighbor_id ASC) AS rk FROM sknn) WHERE rk <= 3),
-       |knn_edges AS (SELECT t.query_id AS id_a, t.neighbor_id AS id_b, t.c AS cos_sim
-       |  FROM tknn t JOIN tknn t2 ON t.query_id = t2.neighbor_id AND t.neighbor_id = t2.query_id
-       |  WHERE t.query_id < t.neighbor_id)""".stripMargin
-
-  /** Shared CTE chain unrolling Similarity.kmeans(embeddings, k=8, iters=2):
-    * `e(vec_id, v)` the double-cast corpus and `af(vec_id, v, cluster,
-    * dist)` the FINAL assignment — one definition used by the vec_kmeans
-    * and dedup_semantic twins so the init/assign/update arithmetic cannot
-    * drift between them. Same deterministic k-means|| seeding (32
-    * smallest-CW-hash candidates, 7 greedy farthest-point steps), same
-    * squared-L2 argmin with (dist, cluster) tie-break, same per-dimension
-    * mean update. Each seed CTE is MATERIALIZED: s_i is referenced three
-    * times (UNION source, NOT IN subquery, p_{i+1} join) and DuckDB's
-    * default inlining re-evaluates the whole chain per reference — 3^7
-    * evaluations by s7; materialization keeps the unrolled greedy linear.
-    */
-  private lazy val KmeansCtes: String =
-    s"""e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-       |${kmeansChain("", "e", k = 8, oversample = 4, iters = 2)}""".stripMargin
-
-  /** One unrolled Similarity.kmeans chain reading `$src(vec_id, v)` and
-    * ending in `${p}af(vec_id, v, cluster, dist)` — every CTE name
-    * prefixed with `p` so several chains (one per PQ subspace) can
-    * coexist in one oracle.
-    */
-  private def kmeansChain(p: String, src: String, k: Int, oversample: Int,
-      iters: Int): String = {
-    def dist(cents: String) =
-      s"list_sum(list_transform(range(1, len(e.v) + 1), i -> (e.v[i] - $cents.centroid[i]) * (e.v[i] - $cents.centroid[i])))"
-    def assign(name: String, cents: String) =
-      s"""$p$name AS (SELECT vec_id, v, cluster, dist FROM (
-         |  SELECT e.vec_id, e.v, $p$cents.cluster, ${dist(p + cents)} AS dist,
-         |    row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY ${dist(p + cents)} ASC, $p$cents.cluster ASC) AS rn
-         |  FROM $src e CROSS JOIN $p$cents) WHERE rn = 1)""".stripMargin
-    def update(name: String, from: String) =
-      s"""$p${name}m AS (SELECT cluster, u.pos AS pos, avg(u.x) AS m FROM (
-         |  SELECT cluster, unnest(list_transform(range(1, len(v) + 1),
-         |    i -> struct_pack(pos := i, x := v[i]))) AS u FROM $p$from) GROUP BY 1, 2),
-         |$p$name AS (SELECT cluster, list(m ORDER BY pos) AS centroid FROM $p${name}m GROUP BY 1)""".stripMargin
-    def seedStep(i: Int) =
-      s"""${p}p$i AS MATERIALIZED (SELECT c.vec_id, c.v, c.key,
-         |  min(list_sum(list_transform(range(1, len(c.v) + 1),
-         |    j -> (c.v[j] - s.v[j]) * (c.v[j] - s.v[j])))) AS md
-         |  FROM ${p}cand c CROSS JOIN ${p}s${i - 1} s GROUP BY c.vec_id, c.v, c.key),
-         |${p}s$i AS MATERIALIZED (SELECT cluster, vec_id, v, key FROM ${p}s${i - 1} UNION ALL
-         |  SELECT CAST($i AS BIGINT) AS cluster, vec_id, v, key FROM (
-         |    SELECT vec_id, v, key FROM ${p}p$i
-         |    WHERE vec_id NOT IN (SELECT vec_id FROM ${p}s${i - 1})
-         |    ORDER BY md DESC, key ASC, vec_id ASC LIMIT 1))""".stripMargin
-    val rounds = (1 to iters).map(r =>
-      s"""${assign(s"a$r", s"c${r - 1}")},
-         |${update(s"c$r", s"a$r")}""".stripMargin).mkString(",\n")
-    s"""${p}cand AS MATERIALIZED (SELECT vec_id, v,
-       |  ((${phSql("CAST(vec_id AS VARCHAR)", "0")}) * ${Sampling.saltMult("kmeans_init")}
-       |    + ${Sampling.saltAdd("kmeans_init")}) % 1000000007 AS key
-       |  FROM $src ORDER BY key, vec_id LIMIT ${k * oversample}),
-       |${p}s0 AS MATERIALIZED (SELECT CAST(0 AS BIGINT) AS cluster, vec_id, v, key
-       |  FROM ${p}cand ORDER BY key, vec_id LIMIT 1),
-       |${(1 until k).map(seedStep).mkString(",\n")},
-       |${p}c0 AS (SELECT cluster, v AS centroid FROM ${p}s${k - 1}),
-       |$rounds,
-       |${assign("af", s"c$iters")}""".stripMargin
-  }
-
-  /** Shared ADC chain for the PQ twins, ending in `ad(query_id,
-    * neighbor_id, adc_dist)` (self excluded) plus the corpus CTE `e` —
-    * one definition used by sim_pq_topk and sim_pq_rerank so the
-    * shortlist arithmetic cannot drift between them.
-    */
-  private lazy val PqAdcCtes: String =
-    s"""e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-       |e0 AS (SELECT vec_id, v[1:32] AS v FROM e),
-       |e1 AS (SELECT vec_id, v[33:64] AS v FROM e),
-       |${kmeansChain("q0_", "e0", k = 4, oversample = 4, iters = 1)},
-       |${kmeansChain("q1_", "e1", k = 4, oversample = 4, iters = 1)},
-       |dt0 AS (SELECT q.vec_id AS query_id, c.cluster,
-       |  list_sum(list_transform(range(1, len(q.v) + 1),
-       |    i -> (q.v[i] - c.centroid[i]) * (q.v[i] - c.centroid[i]))) AS d
-       |  FROM (SELECT vec_id, v FROM e0 WHERE vec_id < 5) q CROSS JOIN q0_c1 c),
-       |dt1 AS (SELECT q.vec_id AS query_id, c.cluster,
-       |  list_sum(list_transform(range(1, len(q.v) + 1),
-       |    i -> (q.v[i] - c.centroid[i]) * (q.v[i] - c.centroid[i]))) AS d
-       |  FROM (SELECT vec_id, v FROM e1 WHERE vec_id < 5) q CROSS JOIN q1_c1 c),
-       |sc AS (SELECT a.vec_id AS neighbor_id, a.cluster AS c0, b.cluster AS c1
-       |  FROM q0_af a JOIN q1_af b USING (vec_id)),
-       |ad AS (SELECT dt0.query_id, sc.neighbor_id, dt0.d + dt1.d AS adc_dist
-       |  FROM sc JOIN dt0 ON dt0.cluster = sc.c0
-       |  JOIN dt1 ON dt1.cluster = sc.c1 AND dt1.query_id = dt0.query_id
-       |  WHERE sc.neighbor_id <> dt0.query_id)""".stripMargin
-
-  /** DuckDB twin of the EN stopword list TextOps.qualityScore screens by. */
-  private val EnStopSql =
-    "['the','a','of','and','to','in','is','that','it','for']"
-
-  /** CTE chain computing the Gopher-rule features and verdict per
-    * document, ending in `gr(doc_id, n_words, mean_word_len,
-    * symbol_ratio, alpha_word_ratio, n_stopword_hits, pass_gopher)` plus
-    * the tokenized base `b(doc_id, text, words, tk)` — one definition
-    * shared by the text_gopher_rules and clf_calibration twins.
-    */
-  private lazy val GopherCtes: String = {
-    val stoplist = graft.pipeline.Stopwords.all
-      .map(s => s"'$s'").mkString("[", ", ", "]")
-    s"""b AS (SELECT doc_id, text,
-       |  list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS words,
-       |  $Toks AS tk FROM documents),
-       |f AS (SELECT doc_id,
-       |  CAST(len(words) AS BIGINT) AS n_words,
-       |  CASE WHEN len(words) > 0 THEN
-       |    CAST(list_sum(list_transform(words, w -> len(w))) AS DOUBLE) / len(words)
-       |  END AS mean_word_len,
-       |  CASE WHEN len(words) > 0 THEN
-       |    CAST((len(text) - len(replace(text, '#', '')))
-       |      + (len(text) - len(replace(text, '...', ''))) / 3 AS DOUBLE) / len(words)
-       |  END AS symbol_ratio,
-       |  CASE WHEN len(words) > 0 THEN
-       |    CAST(len(list_filter(words, w -> regexp_matches(w, '[a-zA-Z]'))) AS DOUBLE)
-       |      / len(words)
-       |  END AS alpha_word_ratio,
-       |  CAST(len(list_intersect(list_distinct(tk), $stoplist)) AS BIGINT) AS n_stopword_hits
-       |FROM b),
-       |gr AS (SELECT doc_id, n_words, mean_word_len, symbol_ratio, alpha_word_ratio,
-       |  n_stopword_hits,
-       |  (n_words >= 25 AND n_words <= 100000
-       |   AND coalesce(mean_word_len >= CAST(3 AS DOUBLE)
-       |     AND mean_word_len <= CAST(10 AS DOUBLE), false)
-       |   AND coalesce(symbol_ratio <= CAST(0.1 AS DOUBLE), false)
-       |   AND coalesce(alpha_word_ratio >= CAST(0.8 AS DOUBLE), false)
-       |   AND n_stopword_hits >= 2) AS pass_gopher
-       |FROM f)""".stripMargin
-  }
-
-  /** DuckDB twin of TextOps.qualityScore's composite score over a token
-    * list expression and a text expression — ONE definition shared by the
-    * text_quality and dedup_keepers twins, so a weight or stopword change
-    * cannot leave a stale copy behind (the score drives dedup_keepers'
-    * discrete per-cluster argmax).
-    */
-  private def qualityScoreSql(tk: String, text: String): String =
-    s"least(CAST(len($tk) AS DOUBLE) / 64.0, 1.0) * 0.4 + " +
-      s"(CASE WHEN len($tk) > 0 THEN CAST(len(list_filter($tk, x -> " +
-      s"list_contains($EnStopSql, x))) AS DOUBLE) / len($tk) ELSE 0.0 END) * 0.3 + " +
-      s"(CASE WHEN length($text) > 0 THEN CAST(length(regexp_replace(lower($text), " +
-      s"'[^a-z0-9]', '', 'g')) AS DOUBLE) / length($text) ELSE 0.0 END) * 0.3"
-
-  /** CTE chain computing the perceptual difference hash per document from
-    * the text payload (the synthetic media fixture's pixel bytes), ending
-    * in `ph(doc_id, w, h, phash)` — one definition shared by the mm_phash
-    * and mm_phash_dups twins. ASCII-ONLY FIXTURE ASSUMPTION: the pixel
-    * list comes from codepoints (`string_split → ord`) while the length
-    * comes from UTF-8 bytes (`octet_length(encode(text))`) — these agree
-    * only while every document is pure ASCII (true of the synthetic
-    * corpus, same latent assumption as the other mm twins). A non-ASCII
-    * corpus would misalign the indices and the oracle would diverge from
-    * Spark's byte-level hash; derive `cps` from encoded bytes if the
-    * fixture ever grows non-ASCII text. Mirrors Multimodal.perceptualHash exactly:
-    * same near-square frame, 9×8 nearest-neighbor gray grid (channel sum,
-    * zero-padded past `len`), bit y·8+x set iff gray(y,x) > gray(y,x+1).
-    * Bits accumulate as a HUGEINT sum (distinct powers of two, so sum ==
-    * OR; DuckDB overflow-checks `1::BIGINT << 63`), then fold back to the
-    * two's-complement BIGINT Spark's Long carries.
-    */
-  /** Shared decode prefix of every single-image twin: text → padded
-    * near-square P6 geometry, ending in `w2(doc_id, len, cps, npix, w, h)`.
-    */
-  private val MmDecodeCtes: String =
-    s"""b AS (SELECT doc_id, text, CAST(octet_length(encode(text)) AS BIGINT) AS len,
-       |  list_transform(string_split(text, ''), c -> ord(c)) AS cps FROM documents),
-       |d AS (SELECT *, CASE WHEN len = 0 THEN 0 ELSE (len + 2) // 3 END AS npix FROM b),
-       |w1 AS (SELECT *, CASE WHEN npix = 0 THEN 0
-       |       ELSE CAST(ceil(sqrt(CAST(npix AS DOUBLE))) AS BIGINT) END AS w FROM d),
-       |w2 AS (SELECT *, CASE WHEN w = 0 THEN 0
-       |       ELSE CAST(ceil(CAST(npix AS DOUBLE) / w) AS BIGINT) END AS h FROM w1)""".stripMargin
-
-  private lazy val MmPhashCtes: String = {
-    def graySql(x: String): String = {
-      val p = s"(((b2 // 8) * h) // 8) * w + (($x) * w) // 9"
-      s"list_sum(list_transform(range(1, 4), c -> CASE WHEN 3 * ($p) + c <= len " +
-        s"THEN cps[CAST(3 * ($p) + c AS INTEGER)] ELSE 0 END))"
-    }
-    s"""$MmDecodeCtes,
-       |hsum AS (SELECT doc_id, w, h,
-       |  list_sum(list_transform(range(0, 64), b2 ->
-       |    CASE WHEN ${graySql("b2 % 8")} > ${graySql("b2 % 8 + 1")}
-       |      THEN CAST(1 AS HUGEINT) << b2 ELSE CAST(0 AS HUGEINT) END)) AS s
-       |FROM w2),
-       |ph AS (SELECT doc_id, w, h,
-       |  CAST(CASE WHEN s >= 9223372036854775808
-       |    THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS phash
-       |FROM hsum)""".stripMargin
-  }
-
-  /** Twin of Multimodal.perceptualHashWide's 13×5 gray grid: 65 cells in
-    * raster order, nearest-neighbor sampling with the same ⌊·⌋ arithmetic,
-    * ending in `ge(doc_id, npix, e)` for [[wideWordCtes]].
-    */
-  private val MmPhashWideCtes: String = {
-    val p = "(((i // 13) * h) // 5) * w + ((i % 13) * w) // 13"
-    val gray = s"list_sum(list_transform(range(1, 4), c -> CASE WHEN 3 * ($p) + c <= len " +
-      s"THEN cps[CAST(3 * ($p) + c AS INTEGER)] ELSE 0 END))"
-    s"""$MmDecodeCtes,
-       |ge AS (SELECT doc_id, npix, list_transform(range(0, 65), i -> $gray) AS e
-       |  FROM w2)""".stripMargin
-  }
-
-  /** CTE rebuilding each document's PCM16 fixture samples from the text —
-    * the twin of Audio.payloadSamples' `(byte − 128) · 256` mapping, ending
-    * in `aw(doc_id, n, smp)` (1-indexed sample list). Shared by all three
-    * audio twins. Same ASCII-ONLY FIXTURE ASSUMPTION as the mm twins:
-    * samples come from codepoints while `n` comes from UTF-8 bytes, which
-    * agree only while the corpus is pure ASCII. All sample access below is
-    * range-bounded by `n`, so the list is never indexed past the text.
-    */
-  private val AudioSmpCte =
-    """aw AS (SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n,
-      |  list_transform(string_split(text, ''),
-      |    c -> CAST((ord(c) - 128) * 256 AS BIGINT)) AS smp FROM documents)""".stripMargin
-
-  /** DuckDB twin of Audio.cdcChunks(window=4, maskBits=6): the rolling
-    * hash walks the recovered sample high bytes (s // 256 + 128 — floor
-    * division matches the codec's arithmetic shift on every input), ends
-    * are content-defined boundaries plus n, chunks fold the same
-    * non-negative (a·31 + c) mod p. Ends in
-    * `cseg(doc_id, chunk_idx, start, n_chunk_samples, chunk_hash)`.
-    */
-  private val AudioCdcCtes: String =
-    s"""$AudioSmpCte,
-       |cvb AS (SELECT doc_id, n, list_transform(smp, s -> s // 256 + 128) AS vb
-       |  FROM aw WHERE n > 0),
-       |cbe AS (SELECT doc_id, n, vb,
-       |  list_sort(list_distinct(list_concat(
-       |    list_filter(list_transform(range(CAST(4 AS BIGINT), n + 1), k ->
-       |      CASE WHEN (list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |          vb[CAST(k - 3 AS INTEGER):CAST(k AS INTEGER)]),
-       |        (a, c) -> ((a * 31 + c) % 1000000007 + 1000000007) % 1000000007)
-       |        % 64) = 0
-       |      THEN k END), x -> x IS NOT NULL), [n]))) AS ends FROM cvb),
-       |cch AS (SELECT doc_id, vb, ends,
-       |  CAST(unnest(range(1, len(ends) + 1)) AS INTEGER) AS ci FROM cbe),
-       |cseg AS (SELECT doc_id, ci - 1 AS chunk_idx,
-       |  CAST(CASE WHEN ci = 1 THEN 0 ELSE ends[ci - 1] END AS BIGINT) AS start,
-       |  CAST(ends[ci] - (CASE WHEN ci = 1 THEN 0 ELSE ends[ci - 1] END) AS BIGINT)
-       |    AS n_chunk_samples,
-       |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |    vb[CAST((CASE WHEN ci = 1 THEN 0 ELSE ends[ci - 1] END) + 1 AS INTEGER):CAST(ends[ci] AS INTEGER)]),
-       |    (a, c) -> ((a * 31 + c) % 1000000007 + 1000000007) % 1000000007)
-       |    AS chunk_hash
-       |  FROM cch)""".stripMargin
-
-  /** DuckDB twin of TextCdc.cdcChunks(window=4, maskBits=5): the rolling
-    * hash walks the codepoint stream directly (`ord` per char — no codec),
-    * ends are content-defined boundaries plus n, chunks fold the same
-    * non-negative (a·31 + c) mod p. Ends in
-    * `tseg(doc_id, chunk_idx, start, n_chunk_chars, chunk_hash)`.
-    */
-  private val TextCdcCtes: String =
-    """tcs AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS n,
-      |  list_transform(string_split(text, ''), c -> CAST(ord(c) AS BIGINT)) AS cs
-      |  FROM documents WHERE text IS NOT NULL AND length(text) > 0),
-      |tbe AS (SELECT doc_id, n, cs,
-      |  list_sort(list_distinct(list_concat(
-      |    list_filter(list_transform(range(CAST(4 AS BIGINT), n + 1), k ->
-      |      CASE WHEN (list_reduce(list_prepend(CAST(0 AS BIGINT),
-      |          cs[CAST(k - 3 AS INTEGER):CAST(k AS INTEGER)]),
-      |        (a, c) -> ((a * 31 + c) % 1000000007 + 1000000007) % 1000000007)
-      |        % 32) = 0
-      |      THEN k END), x -> x IS NOT NULL), [n]))) AS ends FROM tcs),
-      |tch AS (SELECT doc_id, cs, ends,
-      |  CAST(unnest(range(1, len(ends) + 1)) AS INTEGER) AS ci FROM tbe),
-      |tseg AS (SELECT doc_id, ci - 1 AS chunk_idx,
-      |  CAST(CASE WHEN ci = 1 THEN 0 ELSE ends[ci - 1] END AS BIGINT) AS start,
-      |  CAST(ends[ci] - (CASE WHEN ci = 1 THEN 0 ELSE ends[ci - 1] END) AS BIGINT)
-      |    AS n_chunk_chars,
-      |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-      |    cs[CAST((CASE WHEN ci = 1 THEN 0 ELSE ends[ci - 1] END) + 1 AS INTEGER):CAST(ends[ci] AS INTEGER)]),
-      |    (a, c) -> ((a * 31 + c) % 1000000007 + 1000000007) % 1000000007)
-      |    AS chunk_hash
-      |  FROM tch)""".stripMargin
-
-  /** CTE chain computing the energy-contour audio fingerprint, ending in
-    * `afpt(doc_id, n_samples, afp)` — one definition shared by the
-    * audio_fingerprint and audio_fp_dups twins. Mirrors
-    * Audio.audioFingerprint exactly: 65 equal windows `[⌊w·n/65⌋,
-    * ⌊(w+1)·n/65⌋)`, window energy Σ s², bit `b` set iff e(b) > e(b+1).
-    * Bits accumulate as a HUGEINT sum then fold back to two's-complement
-    * BIGINT, same pattern as MmPhashCtes (`e` is 1-indexed: `e[b+1]` is
-    * window b).
-    */
-  private val AudioFpCtes: String =
-    s"""$AudioSmpCte,
-       |we AS (SELECT doc_id, n, list_transform(range(0, 65), w ->
-       |  coalesce(list_sum(list_transform(
-       |    range((w * n) // 65 + 1, ((w + 1) * n) // 65 + 1),
-       |    i -> smp[CAST(i AS INTEGER)] * smp[CAST(i AS INTEGER)])), 0)) AS e
-       |  FROM aw),
-       |fsum AS (SELECT doc_id, n, list_sum(list_transform(range(0, 64), b ->
-       |  CASE WHEN e[CAST(b + 1 AS INTEGER)] > e[CAST(b + 2 AS INTEGER)]
-       |    THEN CAST(1 AS HUGEINT) << b ELSE CAST(0 AS HUGEINT) END)) AS s
-       |  FROM we),
-       |afpt AS (SELECT doc_id, n AS n_samples,
-       |  CAST(CASE WHEN s >= 9223372036854775808
-       |    THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS afp
-       |  FROM fsum)""".stripMargin
-
-  /** DuckDB twin of Video.videoFingerprint over `documents`: rebuild the
-    * DECODED byte stream of the concatenated-P6 fixture (per frame: the
-    * 192-byte text slice followed by its raster zero-padding to 3·w·h),
-    * then the same 65-window energy contour / 64-bit comparator hash as
-    * the audio twin ([[AudioFpCtes]] pattern, HUGEINT fold to two's-
-    * complement BIGINT). Exposes `vfpt(doc_id, n_px, vfp)`.
-    */
-  private val VideoFpCtes: String =
-    """vb AS (SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n,
-      |  list_transform(string_split(text, ''), c -> CAST(ord(c) AS BIGINT)) AS cps
-      |  FROM documents),
-      |vfx AS (SELECT doc_id, n, cps,
-      |  CAST(unnest(range(0, (n + 191) // 192)) AS BIGINT) AS f FROM vb),
-      |vg1 AS (SELECT *, least((f + 1) * 192, n) - f * 192 AS L FROM vfx),
-      |vg2 AS (SELECT *, (L + 2) // 3 AS npix FROM vg1),
-      |vg3 AS (SELECT *, CAST(ceil(sqrt(CAST(npix AS DOUBLE))) AS BIGINT) AS w FROM vg2),
-      |vg4 AS (SELECT *, CAST(ceil(CAST(npix AS DOUBLE) / w) AS BIGINT) AS h FROM vg3),
-      |vseg AS (SELECT doc_id, f, list_concat(
-      |    list_transform(range(f * 192 + 1, f * 192 + L + 1), i -> cps[CAST(i AS INTEGER)]),
-      |    list_transform(range(0, 3 * w * h - L), z -> CAST(0 AS BIGINT))) AS sg
-      |  FROM vg4),
-      |vst AS (SELECT doc_id, flatten(list(sg ORDER BY f)) AS stream FROM vseg GROUP BY doc_id),
-      |vsv AS (SELECT vb.doc_id, coalesce(vst.stream, CAST([] AS BIGINT[])) AS stream
-      |  FROM vb LEFT JOIN vst USING (doc_id)),
-      |vln AS (SELECT doc_id, CAST(len(stream) AS BIGINT) AS npx, stream FROM vsv),
-      |vwe AS (SELECT doc_id, npx, list_transform(range(0, 65), w ->
-      |  coalesce(list_sum(list_transform(
-      |    range((w * npx) // 65 + 1, ((w + 1) * npx) // 65 + 1),
-      |    i -> stream[CAST(i AS INTEGER)] * stream[CAST(i AS INTEGER)])), 0)) AS e
-      |  FROM vln),
-      |vfsum AS (SELECT doc_id, npx, list_sum(list_transform(range(0, 64), b ->
-      |  CASE WHEN e[CAST(b + 1 AS INTEGER)] > e[CAST(b + 2 AS INTEGER)]
-      |    THEN CAST(1 AS HUGEINT) << b ELSE CAST(0 AS HUGEINT) END)) AS s
-      |  FROM vwe),
-      |vfpt AS (SELECT doc_id, npx AS n_px,
-      |  CAST(CASE WHEN s >= 9223372036854775808
-      |    THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS vfp
-      |  FROM vfsum)""".stripMargin
-
-  /** Edited-copy id tag: bit 40 set. A plain small additive offset would
-    * collide with real ids if a scale factor ever produced doc_id ≥ the
-    * offset; the high-bit tag keeps copies out of any realistic id range
-    * (the fixture would need 2^40 ≈ 10^12 documents) while staying well
-    * inside BIGINT in both engines.
-    */
-  private val CopyIdTag: Long = 1L << 40
-
-  /** Source token quotas shared by the sample_token_budget query and its
-    * oracle: two partial cuts, one tight cut, and one budget above the
-    * small-SF source total (the "source runs dry" edge).
-    */
-  private val TokenBudgets: Seq[(String, Long)] =
-    Seq("src0" -> 600L, "src1" -> 2000L, "src3" -> 900L, "src7" -> 250L)
-
-  /** BPE training rounds shared by the two text_bpe_* queries and their
-    * oracles (each round is one unrolled CTE block in the twin SQL).
-    */
-  private val BpeMerges = 8
-
-  /** Unrolled DuckDB twin of [[Bpe.train]]: v0 is the word-frequency table
-    * with char+`</w>` symbol strings in the same `|s1||s2||…|` delimited
-    * form; each round r counts adjacent pairs (every position, frequency-
-    * weighted), picks the (cnt DESC, lft, rgt) argmax into b{r}, and
-    * applies it with the same literal replace (literal replace's
-    * left-to-right non-overlapping scan is greedy BPE application in both
-    * engines). Ends with v{nMerges} = the trained word table.
-    */
-  private def bpeCtes(nMerges: Int): String = {
-    val sb = new StringBuilder
-    // every per-round CTE is MATERIALIZED: DuckDB inlines plain CTEs, and
-    // v{i+1} referencing both v{i} and three b{i} scalar subqueries would
-    // otherwise re-expand the whole chain ~4^rounds times (measured: blows
-    // the open-file limit before it blows the clock)
-    sb.append(
-      s"""tk AS MATERIALIZED (SELECT unnest($Toks) AS word FROM documents),
-         |v0 AS MATERIALIZED (SELECT word, CAST(count(*) AS BIGINT) AS freq,
-         |  '|' || array_to_string(string_split(word, ''), '||') || '||</w>|' AS sym
-         |  FROM tk GROUP BY word)""".stripMargin)
-    for (i <- 0 until nMerges) {
-      sb.append(
-        s""",
-           |s$i AS MATERIALIZED (SELECT freq, string_split(substr(sym, 2, length(sym) - 2), '||') AS syms FROM v$i),
-           |e$i AS MATERIALIZED (SELECT freq, syms, unnest(range(1, len(syms))) AS k FROM s$i),
-           |p$i AS MATERIALIZED (SELECT syms[CAST(k AS INTEGER)] AS lft, syms[CAST(k + 1 AS INTEGER)] AS rgt,
-           |  CAST(sum(freq) AS BIGINT) AS cnt FROM e$i GROUP BY 1, 2),
-           |b$i AS MATERIALIZED (SELECT CAST($i AS INTEGER) AS rank, lft, rgt, lft || rgt AS merged, cnt
-           |  FROM p$i ORDER BY cnt DESC, lft ASC, rgt ASC LIMIT 1),
-           |v${i + 1} AS MATERIALIZED (SELECT word, freq, replace(sym,
-           |  '|' || (SELECT lft FROM b$i) || '||' || (SELECT rgt FROM b$i) || '|',
-           |  '|' || (SELECT merged FROM b$i) || '|') AS sym FROM v$i)""".stripMargin)
-    }
-    sb.toString
-  }
-
-  /** Fixture near-dup corpus shared by the wide-fingerprint dup twins: the
-    * documents plus one deterministic in-place edited copy of each doc with
-    * ≥ 61 chars (`doc_id + CopyIdTag`, chars 51–60 replaced by 'x'). The
-    * edit is length-preserving, so the contour windows stay aligned and
-    * each copy lands within the wide fingerprint's near-dup radius
-    * (measured ≤ 32 of 256 bits) while unrelated pairs stay ≥ ~71 — giving
-    * the near-dup oracle a real, separated signal to verify.
-    */
-  private val NearDupCorpusCte: String =
-    s"""corpus AS (SELECT doc_id, text FROM documents
-       |  UNION ALL
-       |  SELECT doc_id + $CopyIdTag AS doc_id,
-       |    substr(text, 1, 50) || 'xxxxxxxxxx' || substr(text, 61) AS text
-       |  FROM documents WHERE length(text) >= 61)""".stripMargin
-
-  /** Spark twin of [[NearDupCorpusCte]]. */
-  /** Deterministic CDC changelog over documents (the cdc_* fixtures):
-    * deletes for doc_id%11==4, an update for %11==6 plus a SECOND
-    * version (seq 2) for %22==6 — so last-writer-wins is actually
-    * exercised — and inserts for %11==8 under a bit-42 id tag (outside
-    * any realistic id range, same convention as [[nearDupCorpus]]'s
-    * bit 40). Oracle twin: [[CdcLogCte]].
-    */
-  private def changeLog(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables(s, dir).documents.select("doc_id", "text")
-    d.where(col("doc_id") % 11 === 4)
-      .select(col("doc_id"), lit(null).cast("string").as("text"),
-        lit(1L).as("seq"), lit("D").as("op"))
-      .unionByName(d.where(col("doc_id") % 11 === 6)
-        .select(col("doc_id"), concat(col("text"), lit(" v2")).as("text"),
-          lit(1L).as("seq"), lit("U").as("op")))
-      .unionByName(d.where(col("doc_id") % 22 === 6)
-        .select(col("doc_id"), concat(col("text"), lit(" v3")).as("text"),
-          lit(2L).as("seq"), lit("U").as("op")))
-      .unionByName(d.where(col("doc_id") % 11 === 8)
-        .select((col("doc_id") + (1L << 42)).as("doc_id"), col("text"),
-          lit(1L).as("seq"), lit("I").as("op")))
-  }
-
-  /** The er_* gates' dirty feed: customer names with one digit deleted
-    * (key-dependent position) for custkey % 3 = 0, ids tagged with bit 40.
-    * One definition shared by er_fuzzy_join and er_entities.
-    */
-  private def erDirtyCustomers(c: DataFrame): DataFrame =
-    c.where(col("c_custkey") % 3 === 0)
-      .select((col("c_custkey") + lit(1L << 40)).as("d_id"),
-        expr("concat(substring(c_name, 1, CAST(9 + c_custkey % 9 AS INT)), " +
-          "substring(c_name, CAST(11 + c_custkey % 9 AS INT), length(c_name)))")
-          .as("d_name"))
-
-  private def nearDupCorpus(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables(s, dir).documents.select(col("doc_id"), col("text"))
-    d.unionByName(
-      d.where(length(col("text")) >= 61)
-        .select((col("doc_id") + lit(CopyIdTag)).as("doc_id"),
-          concat(substring(col("text"), 1, 50), lit("x" * 10),
-            expr("substring(text, 61)")).as("text")))
-  }
-
-  /** CTE chain ending in `we(doc_id, n, e)` — the 65-window PCM16 energy
-    * contour of `src`(doc_id, text); the parameterized core of
-    * [[AudioFpCtes]], reused by the wide twins over the augmented corpus.
-    */
-  private def audioContourCtes(src: String): String =
-    s"""aw AS (SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n,
-       |  list_transform(string_split(text, ''),
-       |    c -> CAST((ord(c) - 128) * 256 AS BIGINT)) AS smp FROM $src),
-       |we AS (SELECT doc_id, n, list_transform(range(0, 65), w ->
-       |  coalesce(list_sum(list_transform(
-       |    range((w * n) // 65 + 1, ((w + 1) * n) // 65 + 1),
-       |    i -> smp[CAST(i AS INTEGER)] * smp[CAST(i AS INTEGER)])), 0)) AS e
-       |  FROM aw)""".stripMargin
-
-  /** CTE chain ending in `vseg(doc_id, f, sg)` — the per-frame DECODED
-    * segment lists (192-byte text slice + raster zero-padding) of
-    * `src`(doc_id, text); the shared frame-decode prefix of
-    * [[videoContourCtes]], also the base of the frame-hash twins.
-    */
-  private def videoFrameCtes(src: String): String =
-    s"""vb AS (SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n,
-       |  list_transform(string_split(text, ''), c -> CAST(ord(c) AS BIGINT)) AS cps
-       |  FROM $src),
-       |vfx AS (SELECT doc_id, n, cps,
-       |  CAST(unnest(range(0, (n + 191) // 192)) AS BIGINT) AS f FROM vb),
-       |vg1 AS (SELECT *, least((f + 1) * 192, n) - f * 192 AS L FROM vfx),
-       |vg2 AS (SELECT *, (L + 2) // 3 AS npix FROM vg1),
-       |vg3 AS (SELECT *, CAST(ceil(sqrt(CAST(npix AS DOUBLE))) AS BIGINT) AS w FROM vg2),
-       |vg4 AS (SELECT *, CAST(ceil(CAST(npix AS DOUBLE) / w) AS BIGINT) AS h FROM vg3),
-       |vseg AS (SELECT doc_id, f, list_concat(
-       |    list_transform(range(f * 192 + 1, f * 192 + L + 1), i -> cps[CAST(i AS INTEGER)]),
-       |    list_transform(range(0, 3 * w * h - L), z -> CAST(0 AS BIGINT))) AS sg
-       |  FROM vg4)""".stripMargin
-
-  /** CTE chain ending in `vwe(doc_id, npx, e)` — the 65-window decoded-byte
-    * luma contour of `src`(doc_id, text); the parameterized core of
-    * [[VideoFpCtes]], reused by the wide twins over the augmented corpus.
-    */
-  private def videoContourCtes(src: String): String =
-    s"""${videoFrameCtes(src)},
-       |vst AS (SELECT doc_id, flatten(list(sg ORDER BY f)) AS stream FROM vseg GROUP BY doc_id),
-       |vsv AS (SELECT vb.doc_id, coalesce(vst.stream, CAST([] AS BIGINT[])) AS stream
-       |  FROM vb LEFT JOIN vst USING (doc_id)),
-       |vln AS (SELECT doc_id, CAST(len(stream) AS BIGINT) AS npx, stream FROM vsv),
-       |vwe AS (SELECT doc_id, npx, list_transform(range(0, 65), w ->
-       |  coalesce(list_sum(list_transform(
-       |    range((w * npx) // 65 + 1, ((w + 1) * npx) // 65 + 1),
-       |    i -> stream[CAST(i AS INTEGER)] * stream[CAST(i AS INTEGER)])), 0)) AS e
-       |  FROM vln)""".stripMargin
-
-  /** The four wide-contour comparator words (lags 1/2/4/8, twin of
-    * Audio.wideContourWords): appended to a contour CTE ending in
-    * `$eSrc(doc_id, $nCol, e)`, yields `wfpt(doc_id, $nOut, w0..w3)` with
-    * the same HUGEINT-sum → two's-complement-BIGINT fold as the 64-bit
-    * twins.
-    */
-  private def wideWordCtes(eSrc: String, nCol: String, nOut: String): String = {
-    val lags = Seq(1, 2, 4, 8)
-    val sums = lags.map { lag =>
-      s"""list_sum(list_transform(range(0, 64), b ->
-         |    CASE WHEN e[CAST(b + 1 AS INTEGER)] > e[CAST((b + $lag) % 65 + 1 AS INTEGER)]
-         |      THEN CAST(1 AS HUGEINT) << b ELSE CAST(0 AS HUGEINT) END)) AS s$lag""".stripMargin
-    }.mkString(",\n  ")
-    val folds = lags.zipWithIndex.map { case (lag, i) =>
-      s"CAST(CASE WHEN s$lag >= 9223372036854775808 " +
-        s"THEN s$lag - 18446744073709551616 ELSE s$lag END AS BIGINT) AS w$i"
-    }.mkString(",\n  ")
-    s"""wsum AS (SELECT doc_id, $nCol,
-       |  $sums
-       |  FROM $eSrc),
-       |wfpt AS (SELECT doc_id, $nCol AS $nOut,
-       |  $folds
-       |  FROM wsum)""".stripMargin
-  }
-
-  /** All-pairs wide-Hamming select over `wfpt` — the brute-force dups twin
-    * (fine at oracle scale; the Spark side proves the pigeonhole finds the
-    * identical set).
-    */
-  private def wideDupsSelect(maxDist: Int): String =
-    s"""SELECT id_a, id_b, hamming FROM (
-       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       |    CAST(bit_count(xor(a.w0, b.w0)) AS INTEGER)
-       |      + CAST(bit_count(xor(a.w1, b.w1)) AS INTEGER)
-       |      + CAST(bit_count(xor(a.w2, b.w2)) AS INTEGER)
-       |      + CAST(bit_count(xor(a.w3, b.w3)) AS INTEGER) AS hamming
-       |  FROM wfpt a JOIN wfpt b ON a.doc_id < b.doc_id)
-       |WHERE hamming <= $maxDist""".stripMargin
-
-  /** DuckDB twin of the per-series dt-mode (SeriesOps.dtMode) over a CTE
-    * named `points`.
-    */
-  private val DtModeCte =
-    """deltas AS (SELECT series_id, ts - lag(ts) OVER (PARTITION BY series_id ORDER BY ts, value) AS delta_ns FROM points),
-      |dcnt AS (SELECT series_id, delta_ns, count(*) AS cnt FROM deltas WHERE delta_ns IS NOT NULL GROUP BY 1, 2),
-      |dmode AS (SELECT series_id, delta_ns AS dt_mode_ns FROM (SELECT *, row_number() OVER (PARTITION BY series_id ORDER BY cnt DESC, delta_ns ASC) AS rn FROM dcnt) WHERE rn = 1)""".stripMargin
-
-  /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
-  def entry(spark: SparkSession): DataFrame =
-    queries("q1_agg")(spark, "/root/testdata/sf0.001")
-
-  // --------------------------------------------------------------------
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    baseQueries ++ twins.map(t => t.name -> t.run)
-
-  /** The rows with their own oracle; [[twins]] adds the rest. */
-  private[graft] def baseQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- relational anchors (scan/filter/agg/join; Catalyst baseline) ----
-    "q1_agg" -> ((s, dir) => {
-      Tables(s, dir).lineitem
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          sum("l_quantity").as("sum_qty"),
-          sum("l_extendedprice").as("sum_base"),
-          sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("sum_disc"),
-          avg("l_discount").as("avg_disc"),
-          count(lit(1)).as("n"))
-    }),
-    "q2_join_agg" -> ((s, dir) => {
-      val t = Tables(s, dir)
-      t.orders.join(t.lineitem, col("o_orderkey") === col("l_orderkey"))
-        .groupBy("o_orderpriority")
-        .agg(
-          sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("revenue"),
-          count(lit(1)).as("n"))
-    }),
-    "q3_broadcast_dims" -> ((s, dir) => {
-      val t = Tables(s, dir)
-      t.customer
-        .join(broadcast(t.nation), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(t.region), col("n_regionkey") === col("r_regionkey"))
-        .groupBy("r_name", "n_name")
-        .agg(count(lit(1)).as("n_cust"), sum("c_acctbal").as("acctbal"))
-    }),
-    "q4_filter" -> ((s, dir) => {
-      Tables(s, dir).lineitem
-        .where(col("l_quantity") > 45.0 && col("l_discount") > 0.05)
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_discount")
-    }),
-    // ROLLUP goes through the SQL surface: Dataset.rollup on a join output
-    // false-positives Spark 4's ambiguous-self-join detector (the Expand
-    // re-resolves grouping attrs against the join), and GROUP BY ROLLUP over
-    // a view of the same plan optimizes to the identical Expand+Aggregate.
-    "q5_rollup" -> ((s, dir) => {
-      val t = Tables(s, dir)
-      t.customer
-        .join(broadcast(t.nation), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(t.region), col("n_regionkey") === col("r_regionkey"))
-        .select("r_name", "n_name", "c_acctbal")
-        .createOrReplaceTempView("graft_q5_joined")
-      // spark.sql analyzes eagerly, so the view can be dropped immediately
-      // instead of leaking session-global state past this builder
-      val out = s.sql(
-        """SELECT r_name, n_name, count(1) AS n_cust, sum(c_acctbal) AS acctbal
-          |FROM graft_q5_joined GROUP BY ROLLUP (r_name, n_name)""".stripMargin)
-      s.catalog.dropTempView("graft_q5_joined")
-      out
-    }),
-    // windowed relational anchor: per-customer order rank + running revenue
-    "q6_window" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val byDate = Window.partitionBy("o_custkey")
-        .orderBy(col("order_us"), col("o_orderkey"))
-      Tables(s, dir).orders
-        // o_orderdate is TIMESTAMP_NTZ; the session tz is pinned UTC, so
-        // the cast to (local) timestamp is a no-op reinterpretation
-        .select(col("o_custkey"), col("o_orderkey"),
-          unix_micros(col("o_orderdate").cast("timestamp")).as("order_us"),
-          col("o_totalprice"))
-        .withColumn("order_rank", row_number().over(byDate))
-        .withColumn("running_revenue", sum("o_totalprice").over(
-          byDate.rowsBetween(Window.unboundedPreceding, 0)))
-    }),
-    // correlated-aggregate anchor (TPC-H Q17 shape): per-part average
-    // quantity re-joined to lineitem on the SAME key — the groupBy output
-    // is co-partitioned with the probe side, so AQE plans one shuffle for
-    // both; the part dimension broadcasts. The quantity limit is exact
-    // across engines: quantities are integer-valued doubles, so the
-    // per-part sum is exact in any order and avg*0.2 is one deterministic
-    // IEEE rounding in both.
-    "q7_small_qty" -> ((s, dir) => {
-      val t = Tables(s, dir)
-      val lim = t.lineitem.groupBy("l_partkey")
-        .agg((avg("l_quantity") * 0.2).as("qty_lim"))
-      t.lineitem.join(lim, "l_partkey")
-        .where(col("l_quantity") < col("qty_lim"))
-        .join(broadcast(t.part), col("p_partkey") === col("l_partkey"))
-        .groupBy("p_brand")
-        .agg(sum("l_extendedprice").as("total_price"), count(lit(1)).as("n"))
-    }),
-    // bloom-prefiltered semi-join: the 32 KiB key bloom rides the
-    // lineitem scan as a literal-array codegen predicate, so the shuffle
-    // carries only possible matches; the exact semi-join removes the
-    // bloom's false positives — result identical to a plain semi-join
-    "join_bloom_semi" -> ((s, dir) => {
-      val t = Tables(s, dir)
-      graft.ops.BloomJoin.semiJoin(
-        t.lineitem.select("l_orderkey", "l_linenumber", "l_partkey"),
-        t.part.where(col("p_size") === 1).select(col("p_partkey").as("l_partkey")),
-        "l_partkey")
-    }),
-    // record-linkage fuzzy join: a dirty feed (customer names with one
-    // digit deleted, injected for custkey % 3 = 0 — the corpus has no
-    // organic typos; oracle mirrors) matched back to the master table via
-    // SymSpell deletion-neighborhood blocking + exact levenshtein verify.
-    // Ambiguity is real and kept: deleting a zero from the id-digit run
-    // often lands within ED 1 of several master names
-    "er_fuzzy_join" -> ((s, dir) => {
-      val c = Tables(s, dir).customer
-      graft.ops.FuzzyJoin.editJoin(erDirtyCustomers(c), c,
-        "d_id", "d_name", "c_custkey", "c_name")
-    }),
-    // entity canonicalization over the same fuzzy-match graph: connected
-    // components assign every dirty and master record its canonical
-    // entity (min reachable id); an ambiguous dirty record merges its
-    // candidate masters — entity_size flags those for review. The gate
-    // bounds the id range (a no-op at sf0.01): the ORACLE's recursive
-    // reachability is quadratic in component size, and the zero-heavy
-    // digit-run region chains into one giant component at larger SFs —
-    // the Spark side (log-round star CC) handles the full graph fine
-    "er_entities" -> ((s, dir) => {
-      val c = Tables(s, dir).customer.where(col("c_custkey") <= 1500)
-      graft.ops.FuzzyJoin.entities(erDirtyCustomers(c), c,
-        "d_id", "d_name", "c_custkey", "c_name")
-    }),
-    // the ED <= 2 face of the fuzzy join: supplier names with TWO digits
-    // deleted (positions keyed off s_suppkey so the damage varies) matched
-    // back to the master via the radius-2 deletion neighborhood — exact
-    // for ED <= 2 by the SymSpell property, so heavier typos than the
-    // ED-1 gate covers still link; candidates only ever meet levenshtein
-    "er_ed2_join" -> ((s, dir) => {
-      val sup = Tables(s, dir).supplier
-      val dirty = sup
-        .select(col("s_suppkey"),
-          expr("concat(substring(s_name, 1, CAST(9 + s_suppkey % 5 AS INT)), " +
-            "substring(s_name, CAST(11 + s_suppkey % 5 AS INT), length(s_name)))")
-            .as("__d1"))
-        .select((col("s_suppkey") + lit(1L << 40)).as("d_id"),
-          expr("concat(substring(__d1, 1, CAST(9 + s_suppkey % 3 AS INT)), " +
-            "substring(__d1, CAST(11 + s_suppkey % 3 AS INT), length(__d1)))")
-            .as("d_name"))
-      graft.ops.FuzzyJoin.editJoin(dirty, sup,
-        "d_id", "d_name", "s_suppkey", "s_name", maxDist = 2)
-    }),
-    // anti-join anchor: customers with NO order above the price threshold
-    // — NOT EXISTS as a left_anti hash join (the orders side is filtered
-    // before the join, so the build input is the small filtered set)
-    "q8_no_big_order" -> ((s, dir) => {
-      val t = Tables(s, dir)
-      t.customer
-        .join(t.orders.where(col("o_totalprice") > 400000.0),
-          col("c_custkey") === col("o_custkey"), "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_customers"), sum("c_acctbal").as("acctbal"))
-    }),
-    // TPC-H Q10 shape: returned-item revenue per customer, nation
-    // broadcast, top 20 — the shuffle joins ride the orderkey/custkey
-    // keys, the final top-k is TakeOrdered (never a global sort)
-    "q9_returns_top" -> ((s, dir) => {
-      val t = Tables(s, dir)
-      t.lineitem.where(col("l_returnflag") === "R")
-        .join(t.orders, col("l_orderkey") === col("o_orderkey"))
-        .join(t.customer, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t.nation), col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("c_custkey"), col("c_name"), col("n_name"))
-        .agg(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .as("revenue"), count(lit(1)).as("n_items"))
-        .orderBy(col("revenue").desc, col("c_custkey").asc)
-        .limit(20)
-    }),
-
-    // ---- export sink: sharded JSONL round trip — the re-read export must
-    // hash-equal the source table (lossless write→read, incl. escaping) ----
-    "sink_jsonl_roundtrip" -> ((s, dir) => {
-      // unique dir per invocation: a FIXED path would race when two
-      // Verify/Bench processes (e.g. different SFs) run concurrently
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_jsonl_export").toString
-      Export.writeJsonl(
-        Tables(s, dir).documents.select("doc_id", "text", "lang"), out, shards = 8)
-      Export.readJsonl(s, out, "doc_id BIGINT, text STRING, lang STRING")
-        .select("doc_id", "text", "lang")
-    }),
-
-    // per-epoch deterministic global shuffle: a different but reproducible
-    // training order every epoch, sharded for the export writer
-    "export_epoch_shuffle" -> ((s, dir) =>
-      Export.epochShuffle(Tables(s, dir).documents.select("doc_id"),
-        epoch = 1, nShards = 8)),
-
-    // ---- dataset profiling (one-scan column audit) ----
-    "profile_stats" -> ((s, dir) =>
-      Profile.numeric(Tables(s, dir).lineitem,
-        Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))),
-    // dow x hour activity matrix per event type: integer-epoch calendar
-    // arithmetic (no locale functions), <= types*168 cells
-    "events_calendar_profile" -> ((s, dir) =>
-      Profile.calendarProfile(Tables(s, dir).events)),
-    // document-length histogram: the first corpus plot anyone draws —
-    // same fixed-width binning operator pointed at n_chars
-    "profile_doclen" -> ((s, dir) =>
-      Profile.histogram(Tables(s, dir).documents, "n_chars", 0.0, 1000.0, 50)),
-    "profile_histogram" -> ((s, dir) =>
-      Profile.histogram(Tables(s, dir).events, "value", 0.0, 500.0, 50)),
-    // key-skew audit on the join key: heavy-hitter shares that decide
-    // between a plain shuffle join and SkewJoin.saltedJoin / AQE skew
-    "profile_key_skew" -> ((s, dir) =>
-      Profile.keySkew(Tables(s, dir).events, "user_id", topN = 10)),
-    // per-column completeness audit of the events table: null/NaN/empty
-    // counts and the usable fraction in ONE scan — the first report run
-    // on any new corpus drop
-    // corpus-composition contingency matrix: source rows × language
-    // columns, exact counts with zero-filled cells
-    "profile_crosstab" -> ((s, dir) =>
-      Profile.crosstab(Tables(s, dir).documents, "source", "lang",
-        Seq("de", "en", "es", "fr", "zh"))),
-    "profile_completeness" -> ((s, dir) =>
-      Profile.completeness(Tables(s, dir).events)),
-    // per-column exact-vs-HLL distinct audit: join-key/dictionary sizing
-    // plus the measured sketch error before trusting the scale path;
-    // the float value column enters via an integer milli-canonicalization
-    // (engine-portable float rendering is not a thing)
-    "profile_distinct" -> ((s, dir) => {
-      val e = Tables(s, dir).events.withColumn("value_m",
-        when(!isnan(col("value")), floor(col("value") * 1000).cast("long")))
-      Profile.distinctProfile(e,
-        Seq("event_id", "user_id", "event_type", "value_m", "props"))
-    }),
-    // Benford first-digit audit of order totals per priority class: the
-    // "does this numeric column look organic" screen (dense 9-digit grid,
-    // group-level chi-square verdict at 5%)
-    "profile_benford" -> ((s, dir) =>
-      Profile.benford(Tables(s, dir).orders, "o_orderpriority", "o_totalprice")
-        .withColumnRenamed("grp", "o_orderpriority")),
-    // CDC apply: fold the synthetic changelog (deletes %11==4, updates
-    // %11==6 with a second version on %22==6, inserts %11==8 bit-42
-    // tagged) into the next snapshot — last-writer-wins on seq
-    "cdc_apply" -> ((s, dir) =>
-      graft.ops.Cdc.latestState(
-        Tables(s, dir).documents.select("doc_id", "text"), changeLog(s, dir))),
-    // SCD2 historization of the same changelog: every version with its
-    // [valid_from, valid_to) interval; a delete closes its predecessor
-    "cdc_scd2" -> ((s, dir) => graft.ops.Cdc.scd2(changeLog(s, dir))),
-    // streaming CDC fold, batch face: per-id last-writer-wins record under
-    // the batch window's exact (seq desc, op desc) order
-    "stream_cdc" -> ((s, dir) =>
-      graft.streaming.StreamOps.cdcStream(changeLog(s, dir)).toDF()),
-    // exact equi-depth histogram: per-type decile boundaries by discrete
-    // rank selection — the selectivity-estimation statistic (the quantile
-    // sketch is the corpus-scale path)
-    "profile_equidepth" -> ((s, dir) =>
-      Profile.equiDepth(Tables(s, dir).events, "event_type", "value", "event_id")
-        .withColumnRenamed("grp", "event_type")),
-    // ingest-volume anomaly: per-type daily event counts z-scored against
-    // the type's across-day distribution (exact integer moments)
-    "events_volume_anomaly" -> ((s, dir) =>
-      Profile.volumeAnomaly(Tables(s, dir).events)
-        .withColumnRenamed("grp", "event_type")),
-    // snapshot diff: documents vs a deterministically edited next version
-    // (doc_id%17==3 removed, %17==5 text-edited, %17==7 re-added under a
-    // bit-41 tag) — added/removed/changed via ONE full-outer id join
-    "corpus_diff" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents.select("doc_id", "text", "lang")
-      val next = docs.where(col("doc_id") % 17 =!= 3)
-        .withColumn("text",
-          when(col("doc_id") % 17 === 5, concat(col("text"), lit(" [rev2]")))
-            .otherwise(col("text")))
-        .unionByName(docs.where(col("doc_id") % 17 === 7)
-          .withColumn("doc_id", col("doc_id") + (1L << 41)))
-      Profile.snapshotDiff(docs, next, "doc_id", Seq("text", "lang"))
-    }),
-    // binned PSI drift per event type over the same before/after-T2 split
-    // — weights WHERE the mass moved, the scorecard companion to KS
-    "profile_psi_drift" -> ((s, dir) =>
-      Profile.psiDrift(Tables(s, dir).events, "event_type", "value",
-        col("ts") < T2, lo = 0.0, hi = 500.0, nBins = 10)
-        .withColumnRenamed("grp", "event_type")),
-    // exact two-sample KS drift per event type: value distribution before
-    // vs after T2 — the snapshot-shift check run before mixing data drops
-    "profile_ks_drift" -> ((s, dir) =>
-      Profile.ksDrift(Tables(s, dir).events, "event_type", "value",
-        col("ts") < T2, shardWidth = 50.0)
-        .withColumnRenamed("grp", "event_type")),
-
-    // ---- time-series operators over the events-derived point table ----
-    "ts_last_value" -> ((s, dir) => SeriesOps.lastValue(pts(s, dir))),
-    "ts_minmax" -> ((s, dir) => SeriesOps.minMaxCount(pts(s, dir))),
-    "ts_range_pad" -> ((s, dir) => SeriesOps.rangePad(pts(s, dir))),
-    "ts_deltas" -> ((s, dir) => SeriesOps.deltas(pts(s, dir))),
-    "ts_dt_mode" -> ((s, dir) => SeriesOps.dtMode(pts(s, dir))),
-    "ts_extend_axis" -> ((s, dir) => SeriesOps.extendAxis(pts(s, dir))),
-    "ts_concat_chunks" -> ((s, dir) => {
-      val p = pts(s, dir)
-      val first = SeriesOps.periodFilter(p, Period(T0, T2))
-      val second = SeriesOps.periodFilter(p, Period(T1, T3))
-        .withColumn("value", col("value") + 100.0)
-      SeriesOps.concatChunks(first, second)
-    }),
-    "ts_step_expand" -> ((s, dir) => SeriesOps.stepExpand(pts(s, dir), AverageValue)),
-    "ts_display_ms" -> ((s, dir) => SeriesOps.displayMs(pts(s, dir), 3600)),
-    "ts_period_filter" -> ((s, dir) => SeriesOps.periodFilter(pts(s, dir), Period(T1, T2))),
-    "ts_tail_limit" -> ((s, dir) => SeriesOps.tailLimit(pts(s, dir), 5)),
-    "ts_current_bands" -> ((s, dir) => {
-      SeriesOps.thresholdBands(SeriesOps.lastValue(pts(s, dir)),
-        "last_value", Seq(100.0 -> "red", 50.0 -> "yellow"), "green")
-        .select("series_id", "last_value", "last_ts", "band")
-    }),
-    "ts_rdp" -> ((s, dir) => Rdp.downsample(pts(s, dir))),
-    "ts_resample" -> ((s, dir) => SeriesOps.resample(pts(s, dir), 86400L * NsPerS)),
-    "ts_rolling" -> ((s, dir) => SeriesOps.rolling(pts(s, dir), 3 * 86400L * NsPerS)),
-    "ts_interpolate" -> ((s, dir) => SeriesOps.interpolate(pts(s, dir), 86400L * NsPerS)),
-    "ts_anomaly" -> ((s, dir) => SeriesOps.anomaly(pts(s, dir), 3.0)),
-    "ts_seasonal_profile" -> ((s, dir) =>
-      SeriesOps.seasonalProfile(pts(s, dir), 86400L * NsPerS, 3600L * NsPerS)),
-    // additive trend/seasonal/residual decomposition (±12-row trend MA,
-    // hour-of-day seasonal slots)
-    // Hyndman seasonal/trend strength over the STL components: the [0,1]
-    // triage scores for routing series to the right forecaster
-    "ts_stl_strength" -> ((s, dir) =>
-      SeriesOps.stlStrength(pts(s, dir), 86400L * NsPerS, 3600L * NsPerS)),
-    "ts_stl" -> ((s, dir) =>
-      SeriesOps.stl(pts(s, dir), 86400L * NsPerS, 3600L * NsPerS,
-        halfWindow = 12)),
-    // seasonality-adjusted anomaly detection: MAD scoring on the STL
-    // residual — extreme-for-3am readings the raw score cannot see
-    "ts_stl_anomaly" -> ((s, dir) =>
-      SeriesOps.stlAnomaly(pts(s, dir), 86400L * NsPerS, 3600L * NsPerS)),
-    // seasonal-naive forecast: the reference's read_forecast raises
-    // NotImplementedError — this is the working baseline in its place
-    "ts_forecast_naive" -> ((s, dir) =>
-      SeriesOps.forecastNaive(pts(s, dir), 86400L * NsPerS, 3600L * NsPerS,
-        horizon = 24)),
-    "ts_gaps" -> ((s, dir) => SeriesOps.gaps(pts(s, dir), 2.0)),
-    "ts_percentiles" -> ((s, dir) => SeriesOps.percentiles(pts(s, dir))),
-    "ts_trend" -> ((s, dir) => SeriesOps.trend(pts(s, dir))),
-    // sliding-window SAX motif census on the hourly observation sequence:
-    // which normalized 8-observation shapes recur, across how many series
-    "ts_motifs" -> ((s, dir) =>
-      SeriesOps.saxMotifs(pts(s, dir), 3600L * NsPerS)),
-    // robust median-of-slopes trend (exact selection medians, pair guard)
-    "ts_theilsen" -> ((s, dir) => SeriesOps.theilSen(pts(s, dir))),
-    // nonparametric trend significance (the companion to the Theil-Sen
-    // slope): S-statistic, tie-corrected variance, continuity-corrected z
-    "ts_mannkendall" -> ((s, dir) => SeriesOps.mannKendall(pts(s, dir))),
-    // frequency-domain diagnostic: exact DFT power at the first 5
-    // harmonics of the daily-resampled, mean-centered series
-    "ts_spectral" -> ((s, dir) =>
-      SeriesOps.periodogram(pts(s, dir), 86400L * NsPerS)),
-    // SAX words over the daily-resampled series: z-normalize, 8-segment
-    // PAA, 4-symbol Gaussian breakpoints — shape-similarity strings
-    "ts_sax" -> ((s, dir) =>
-      SeriesOps.sax(pts(s, dir), 86400L * NsPerS)),
-    "ts_outlier_mad" -> ((s, dir) => SeriesOps.outliersMad(pts(s, dir), 3.5)),
-    "ts_ewma" -> ((s, dir) => SeriesOps.ewma(pts(s, dir), alpha = 0.5, window = 16)),
-    // Holt double exponential smoothing: end-of-series level/trend state +
-    // h-step linear forecasts (α = β = 0.5: every step an exact binary
-    // scale, bit-identical cross-engine over the pinned fold order)
-    "ts_holt" -> ((s, dir) => SeriesOps.holt(pts(s, dir))),
-    "ts_changepoint" -> ((s, dir) => SeriesOps.changepoint(pts(s, dir))),
-    // additive Holt-Winters (period 4, positional): level + trend +
-    // rotated seasonal state folded over the pinned series sort
-    "ts_holtwinters" -> ((s, dir) => SeriesOps.holtWinters(pts(s, dir))),
-    "ts_autocorr" -> ((s, dir) => SeriesOps.autocorr(pts(s, dir), maxLag = 3)),
-    // partial autocorrelation via Durbin-Levinson over the textbook ACF:
-    // the Box-Jenkins order-selection diagnostic (AR(p) cuts off at p)
-    "ts_pacf" -> ((s, dir) => SeriesOps.pacf(pts(s, dir), maxLag = 6)),
-    // Ljung-Box whiteness test at h = min(6, n-1): the "is this residual
-    // still structured" gate over the textbook autocovariance ACF
-    "ts_ljungbox" -> ((s, dir) => SeriesOps.ljungBox(pts(s, dir), maxLag = 6)),
-    // 7-day-holdout backtest of the seasonal-naive forecaster: slot-mean
-    // profile from the train slice, MAE + signed bias per series
-    "ts_backtest" -> ((s, dir) => SeriesOps.backtestNaive(pts(s, dir),
-      86400L * NsPerS, 3600L * NsPerS, 7L * 86400L * NsPerS)),
-    "ts_monthly" -> ((s, dir) => SeriesOps.monthly(pts(s, dir))),
-    // heating/cooling degree days per UTC month (base 17): the classic
-    // weather-energy rollup over the daily-mean resample
-    "ts_degree_days" -> ((s, dir) => SeriesOps.degreeDays(pts(s, dir))),
-    // DST-aware calendar months: real IANA zone, not a fixed offset
-    "ts_monthly_tz" -> ((s, dir) => SeriesOps.monthlyTz(pts(s, dir))),
-    "ts_peaks" -> ((s, dir) => SeriesOps.peaks(pts(s, dir), delta = 5.0)),
-    "ts_ohlc" -> ((s, dir) => SeriesOps.ohlc(pts(s, dir), 86400L * NsPerS)),
-    "ts_winsorize" -> ((s, dir) => SeriesOps.winsorize(pts(s, dir), 0.05, 0.95)),
-    // pairwise correlation is inherently quadratic in the series set, so
-    // the query selects a bounded station group (user_id < 25) up front
-    "ts_corr" -> ((s, dir) => {
-      val p = Tables(s, dir).eventsUs.where(col("user_id") < 25)
-        .select(concat(lit("shyft://events/u"), col("user_id"), lit("/"),
-          col("event_type")).as("series_id"), col("ts"), col("value"))
-      SeriesOps.pairCorrelation(p, 86400L * NsPerS)
-    }),
-    // Spearman over the same bounded station group: Pearson on per-pair
-    // average ranks — monotone relations read +-1, spikes can't dominate
-    "ts_spearman" -> ((s, dir) => {
-      val p = Tables(s, dir).eventsUs.where(col("user_id") < 25)
-        .select(concat(lit("shyft://events/u"), col("user_id"), lit("/"),
-          col("event_type")).as("series_id"), col("ts"), col("value"))
-      SeriesOps.spearmanCorrelation(p, 86400L * NsPerS)
-    }),
-    // DTW elastic shape distance per pair on a TIGHTER station group (the
-    // DP is quadratic per pair): time-shifted lookalikes read near 0
-    // where lag-0 alignment punishes the shift
-    "ts_dtw" -> ((s, dir) => {
-      val p = Tables(s, dir).eventsUs.where(col("user_id") < 10)
-        .select(concat(lit("shyft://events/u"), col("user_id"), lit("/"),
-          col("event_type")).as("series_id"), col("ts"), col("value"))
-      SeriesOps.dtw(p, 86400L * NsPerS)
-    }),
-    // lead/lag diagnostic: Pearson corr of (x_t, y_{t+lag·day}) per pair
-    // at lags -3..3 on the shared daily axis
-    "ts_crosscorr" -> ((s, dir) => {
-      val p = Tables(s, dir).eventsUs.where(col("user_id") < 25)
-        .select(concat(lit("shyft://events/u"), col("user_id"), lit("/"),
-          col("event_type")).as("series_id"), col("ts"), col("value"))
-      SeriesOps.crossCorrelation(p, 86400L * NsPerS)
-    }),
-    "ts_asof_join" -> ((s, dir) => {
-      val e = Tables(s, dir).eventsUs
-      val left = e.where(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), col("value"))
-      val right = e.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("value").as("r_value"))
-      AsofJoin.backward(left, right, Seq("user_id"))
-    }),
-    "ts_asof_tolerance" -> ((s, dir) => {
-      val e = Tables(s, dir).eventsUs
-      val left = e.where(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), col("value"))
-      val right = e.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("value").as("r_value"))
-      AsofJoin.backward(left, right, Seq("user_id"), toleranceNs = 2L * 86400 * NsPerS)
-    }),
-
-    // ---- evaluate/routing + store merge + find ----
-    "eval_routing" -> ((s, dir) => {
-      val warehouse = java.nio.file.Files.createTempDirectory("graft-eval").toString
-      val ev = Evaluate.default(new SeriesStore(s, warehouse))
-      val ids = Seq("mock1://a/1", "mock2://b/2", "mock1://c/3", "heartbeat://cb/ping")
-      ev.evaluate(s, ids, Period(1704067200L * NsPerS, 1704067260L * NsPerS))
-    }),
-    "synthetic_v2" -> ((s, dir) => {
-      s.read.format("graft-synthetic")
-        .option("ids", "heartbeat://cb/ping,mock1://a/2.5")
-        .option("startNs", 1704067200L * NsPerS)
-        .option("endNs", 1704067260L * NsPerS)
-        .load()
-    }),
-    "store_merge" -> ((s, dir) => {
-      val warehouse = java.nio.file.Files.createTempDirectory("graft-merge").toString
-      val store = new SeriesStore(s, warehouse, numBuckets = 8)
-      val p = pts(s, dir)
-      store.merge("events", SeriesOps.periodFilter(p, Period(T0, T2)))
-      val second = SeriesOps.periodFilter(p, Period(T1, T3))
-        .withColumn("value", col("value") + 100.0)
-      store.merge("events", second)
-      store.merge("events", second) // idempotence: re-merge is a no-op
-      store.read("events")
-    }),
-    "store_find" -> ((s, dir) => {
-      val warehouse = java.nio.file.Files.createTempDirectory("graft-find").toString
-      val store = new SeriesStore(s, warehouse, numBuckets = 8)
-      store.merge("events", pts(s, dir))
-      val infos = new StoreSource(store).find(s, "shyft://events/u1/")
-      s.createDataFrame(infos.map(i =>
-        (i.name, i.pointFx, i.deltaTNs, i.dataPeriodStartNs, i.dataPeriodEndNs)))
-        .toDF("name", "point_fx", "delta_t_ns", "data_start_ns", "data_end_ns")
-    }),
-
-    // ---- netatmo catalog + fixture-backed paginated API source ----
-    "netatmo_catalog" -> ((s, dir) => {
-      Netatmo.catalog(Netatmo.rawConfig(Tables(s, dir).events))
-        .select("user_id", "station_id", "station_name", "module_id",
-          "module_name", "data_type", "source_id", "store_id", "tz")
-    }),
-    "netatmo_lookup" -> ((s, dir) => {
-      val cat = Netatmo.catalog(Netatmo.rawConfig(Tables(s, dir).events))
-      Seq(("Station 7", "Main", "click"), ("Station 7", "Outdoor", "error"),
-        ("Station 12", "Main", "view"))
-        .map { case (st, m, dt) => Netatmo.lookup(cat, st, m, dt) }
-        .reduce(_ unionByName _)
-        .select("station_name", "module_name", "data_type", "source_id")
-    }),
-    "netatmo_read" -> ((s, dir) => {
-      val t = Tables(s, dir)
-      val cat = Netatmo.catalog(Netatmo.rawConfig(t.events))
-      val eventsPoints = t.eventsUs.select("user_id", "event_type", "ts", "value")
-      val src = new NetatmoSource(cat, eventsPoints, s"$dir/events.parquet")
-      val ev = new Evaluate(Map("netatmo" -> src))
-      val types = Seq("click", "error", "purchase", "signup", "view")
-      val modOf = Map("click" -> "Main", "error" -> "Outdoor", "purchase" -> "Main",
-        "signup" -> "Outdoor", "view" -> "Main")
-      val ids = for (uid <- 0 to 2; dt <- types)
-        yield graft.ts.Identifiers.netatmoIdStr(s"Station $uid", modOf(dt), dt)
-      ev.evaluate(s, ids, Period(Long.MinValue / 2, Long.MaxValue / 2))
-    }),
-    "netatmo_find" -> ((s, dir) => {
-      val t = Tables(s, dir)
-      // µs-grid events so the catalog's module lifetimes line up with the
-      // oracle's epoch_ns values (same grid the read path uses)
-      val cat = Netatmo.catalog(Netatmo.rawConfig(t.eventsUs))
-      val eventsPoints = t.eventsUs.select("user_id", "event_type", "ts", "value")
-      val src = new NetatmoSource(cat, eventsPoints, s"$dir/events.parquet")
-      val infos = Seq(("Station 7", "Main", "click"), ("Station 7", "Outdoor", "error"),
-        ("Station 12", "Main", "view"))
-        .flatMap { case (st, m, dt) =>
-          src.find(s, graft.ts.Identifiers.netatmoIdStr(st, m, dt))
-        }
-      s.createDataFrame(infos.map(i => (i.name, i.pointFx, i.deltaTNs, i.olsonTzId,
-        i.dataPeriodStartNs, i.dataPeriodEndNs, i.createdNs, i.modifiedNs)))
-        .toDF("name", "point_fx", "delta_t_ns", "tz",
-          "data_start_ns", "data_end_ns", "created_ns", "modified_ns")
-    }),
-
-    // ---- text analysis ----
-    "text_token_count" -> ((s, dir) => {
-      Tables(s, dir).documents
-        // cast: size() is int32 but the DuckDB twin's len() is BIGINT —
-        // keep the dtypes identical so value hashing can't see a width gap
-        .select(col("doc_id"), TextOps.tokenCount(col("text")).cast("long").as("n_tokens"))
-    }),
-    "text_bpe_tokens" -> ((s, dir) => {
-      Tables(s, dir).documents
-        .select(col("doc_id"), TextOps.bpeTokenCount(col("text")).as("n_bpe_tokens"))
-    }),
-    "text_quality" -> ((s, dir) => {
-      TextOps.qualityScore(Tables(s, dir).documents)
-        .select("doc_id", "n_chars_m", "n_tokens", "mean_token_len",
-          "alnum_ratio", "space_ratio", "stopword_ratio", "quality_score")
-    }),
-    "text_gopher_rules" -> ((s, dir) =>
-      TextOps.gopherRules(Tables(s, dir).documents, minWords = 25)
-        .select("doc_id", "n_words", "mean_word_len", "symbol_ratio",
-          "alpha_word_ratio", "n_stopword_hits", "pass_gopher")),
-    // Flesch reading ease + Flesch-Kincaid grade: vowel-group syllables
-    // (floor 1/word), [.!?]+ sentences (floor 1) — the surface-form
-    // difficulty feature for curation and curriculum ordering
-    "text_readability" -> ((s, dir) =>
-      TextOps.readability(Tables(s, dir).documents)),
-    // RAKE keyphrases: stopword-delimited candidate runs, deg/freq word
-    // scores, corpus top-50 — the unsupervised "what is this corpus about"
-    "text_rake" -> ((s, dir) =>
-      TextOps.rakePhrases(Tables(s, dir).documents)),
-    // n-gram novelty vs everything earlier in id order: the redundancy
-    // curve behind "is the crawl tail still adding anything"
-    "text_novelty" -> ((s, dir) =>
-      TextOps.ngramNovelty(Tables(s, dir).documents)),
-    "text_fertility" -> ((s, dir) => TextOps.fertility(Tables(s, dir).documents)),
-    // model-free perplexity proxy: corpus-unigram cross-entropy per doc
-    "text_unigram_logprob" -> ((s, dir) =>
-      TextOps.unigramLogprob(Tables(s, dir).documents)),
-    // one Markov order up: add-1 bigram LM cross-entropy
-    "text_bigram_logprob" -> ((s, dir) =>
-      TextOps.bigramLogprob(Tables(s, dir).documents)),
-    // held-out scoring: LM counts from the 80% train split only, every
-    // doc scored against it — the memorization-free perplexity filter
-    "text_bigram_holdout" -> ((s, dir) =>
-      TextOps.bigramLogprobHoldout(Tables(s, dir).documents,
-        Sampling.bucketOf(col("doc_id"), "split") < 8000)),
-    "text_top_terms" -> ((s, dir) =>
-      TextOps.topTerms(Tables(s, dir).documents, k = 10)),
-    // hashing-trick featurization: fixed-width sparse count vectors
-    // model-in-the-loop filtering: full-batch logistic regression over
-    // standardized hashed features, distilling the quality-rule label
-    // (the CCNet/fastText filter-training shape)
-    "text_quality_clf" -> ((s, dir) =>
-      TextOps.logregClassifier(Tables(s, dir).documents,
-        TextOps.qualityScoreCol(col("text")) >= 0.6)),
-    // the same classifier in the PRODUCTION serving shape (the sim_pq_prod
-    // pattern): logregTrain persists weights + standardization moments to
-    // parquet keyed by corpus size, and scoring runs from the FROZEN file
-    // read back — one corpus scan against driver-literal weights, no
-    // training, no label, no moment pass. The DuckDB twin reads the same
-    // frozen parquet and independently recomputes the serving arithmetic
-    // (hashed counts -> frozen-mu/sd standardization -> dot -> sigmoid);
-    // training stays oracle-covered by text_quality_clf (same GD path).
-    "clf_quality_frozen" -> ((s, dir) =>
-      frozenClfScore(s, dir, ClfFrozenDir)(
-        TextOps.logregScoreFrozen(_, _))),
-    // model-in-the-loop curation AT INGEST: the scoring kernel is a
-    // narrow stateless map, so the stream face is the batch operator
-    // verbatim (StreamOpsSpec drives it as a real MemoryStream)
-    "stream_clf_score" -> ((s, dir) =>
-      frozenClfScore(s, dir, ClfStreamFrozenDir)(
-        graft.streaming.StreamOps.scoreStream(_, _))),
-    "text_hashed_features" -> ((s, dir) =>
-      TextOps.hashedFeatures(Tables(s, dir).documents, dims = 64)),
-    // lexical retrieval: Okapi BM25 top-20 for a fixed query
-    "text_bm25" -> ((s, dir) =>
-      TextOps.bm25(Tables(s, dir).documents, "table scan sort key", k = 20)),
-    // ---- deterministic sampling / dataset splitting ----
-    "sample_split" -> ((s, dir) => {
-      Sampling.assignSplit(Tables(s, dir).documents, "doc_id",
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .select("doc_id", "split")
-    }),
-    "sample_fraction" -> ((s, dir) => {
-      Sampling.deterministicSample(Tables(s, dir).documents, "doc_id", 0.1)
-        .select("doc_id", "lang")
-    }),
-    // leakage-safe split: near-dup clusters move between splits as one unit
-    "split_leakage_safe" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      Sampling.leakageSafeSplit(docs,
-        Components.dedupClusters(docs).select("doc_id", "cluster_id"),
-        "doc_id", Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .select("doc_id", "split_key", "split")
-    }),
-    "sample_stratified" -> ((s, dir) => {
-      Sampling.stratifiedSample(Tables(s, dir).documents, "doc_id", "lang", 20)
-        .select("doc_id", "lang")
-    }),
-    // temperature-2 language rebalance: exact √n-proportional quotas
-    "sample_mixture" -> ((s, dir) =>
-      Sampling.temperatureSample(Tables(s, dir).documents, "doc_id", "lang", 250)
-        .select("doc_id", "lang")),
-    // token-budgeted mixture: fill each source's TOKEN quota in id order
-    "sample_token_budget" -> ((s, dir) =>
-      Sampling.tokenBudgetSample(Tables(s, dir).documents,
-        TokenBudgets.toMap)),
-
-    // ---- web curation over a synthesized URL column (CCNet/RefinedWeb
-    // keying: canonical page identity, per-domain quality, per-domain
-    // budget caps) ----
-    // URL canonicalization: every fetch variant (case, default port,
-    // trailing slash, tracking params, fragment) folds to ONE identity —
-    // a narrow map riding the corpus scan
-    "web_canonical_url" -> ((s, dir) => {
-      val docs = webSynthDocs(Tables(s, dir).documents)
-      docs.select(col("doc_id"), col("url"),
-        WebOps.canonicalizeUrl(col("url")).as("canonical_url"),
-        WebOps.urlDomain(col("url")).as("domain"))
-    }),
-    // domain-level curation profile: doc/token/lang counts + mean quality
-    // per registered domain (the drop-spam-domains table)
-    "web_domain_stats" -> ((s, dir) =>
-      WebOps.domainStats(webSynthDocs(Tables(s, dir).documents))),
-    // URL-identity dedup: refetch variants (tracking params, case,
-    // default ports, slashes, fragments — the webVariantDocs synth)
-    // collapse on the canonical key; keeper = earliest fetch
-    "web_url_dedup" -> ((s, dir) =>
-      WebOps.urlDedup(webVariantDocs(Tables(s, dir).documents))),
-    // per-domain token-budget cap in id order: no single domain dominates
-    // the training mix
-    "sample_domain_budget" -> ((s, dir) =>
-      WebOps.domainBudgetCap(webSynthDocs(Tables(s, dir).documents),
-        budgetTokens = 60)),
-    // robots/blocklist gate: docs from blocked registered domains or
-    // blocked canonical-URL prefixes dropped by broadcast anti-joins —
-    // the crawl-curation filter in front of everything else
-    "web_blocklist" -> ((s, dir) =>
-      WebOps.blocklistFilter(webSynthDocs(Tables(s, dir).documents),
-          webBlocklist(s))
-        .select("doc_id", "url", "canonical_url", "domain")),
-    // streaming URL-identity dedup in batch mode: the crawl-ingest face —
-    // canonical-key state (keeper id + variant count) via
-    // flatMapGroupsWithState; batch parity == WebOps.urlDedup exactly
-    "stream_url_dedup" -> ((s, dir) =>
-      graft.streaming.StreamOps.urlDedupStream(
-        webVariantDocs(Tables(s, dir).documents)).toDF()),
-    // per-domain crawl-rate windows: fetch counts per (registered
-    // domain, tumbling hour) + over-limit verdict — the politeness
-    // monitor, on batch / streaming / SQL faces over one arithmetic
-    "web_crawl_rate" -> ((s, dir) =>
-      WebOps.crawlRate(crawlFetches(Tables(s, dir)),
-        windowMs = 3600000L, maxFetches = 2)),
-    // outlink extraction: every http(s) mention in page text, exploded
-    // with its canonical identity + target registered domain — the
-    // crawl-frontier feed; extraction is a narrow map riding the scan
-    "web_outlinks" -> ((s, dir) =>
-      WebOps.outlinks(webLinkedDocs(Tables(s, dir).documents))),
-    // domain-level link graph: (src domain → dst domain) edges with link
-    // and distinct-page counts — one partial-combined agg on the pair key
-    "web_link_graph" -> ((s, dir) =>
-      WebOps.linkGraph(webLinkedDocs(Tables(s, dir).documents))),
-    // robots-rules verdicts (RFC 9309: longest match wins, allow on tie,
-    // default allow): every URL annotated with (allowed, matched_prefix)
-    // — rules broadcast as per-domain arrays, zero corpus shuffle
-    "web_robots" -> ((s, dir) =>
-      WebOps.robotsEval(webSynthDocs(Tables(s, dir).documents),
-          robotsRules(s))
-        .select("doc_id", "url", "domain", "path", "allowed",
-          "matched_prefix")),
-    // crawl frontier: outlink mentions whose canonical identity is not a
-    // corpus page — one agg on the canonical key + a shuffled anti-join
-    // reusing the same partitioning (both sides corpus-scale)
-    "web_frontier" -> ((s, dir) =>
-      WebOps.frontier(webLinkedDocs(Tables(s, dir).documents))),
-    // domain-scoped boilerplate: lines repeating across most pages of
-    // their own registered domain (nav/footer chrome) — one agg on the
-    // (domain, line-key) pair, domain doc counts joined at metadata level
-    "web_boilerplate" -> ((s, dir) =>
-      WebOps.domainBoilerplate(webPageDocs(Tables(s, dir).documents))),
-    // politeness scheduler: earliest feasible fetch time per domain under
-    // a minimum gap — the sequential-looking recurrence unrolled to two
-    // sharded prefix scans (rank + running max), Zipfian-skew-safe
-    "web_fetch_schedule" -> ((s, dir) =>
-      WebOps.fetchSchedule(crawlFetches(Tables(s, dir)),
-        delayMs = 60000L)),
-
-    // ---- post-training (SFT / preference) data prep: turn-structure
-    // validation, chat-template rendering with loss-span offsets,
-    // rendered-identity dedup, and the preference length-bias audit ----
-    "sft_turn_stats" -> ((s, dir) =>
-      ChatOps.turnStats(chatSynthTurns(Tables(s, dir).documents))),
-    "sft_render" -> ((s, dir) =>
-      ChatOps.renderChat(chatSynthTurns(Tables(s, dir).documents))),
-    "sft_spans" -> ((s, dir) =>
-      ChatOps.lossSpans(chatSynthTurns(Tables(s, dir).documents))),
-    "sft_dedup" -> ((s, dir) =>
-      ChatOps.conversationDedup(chatVariantTurns(Tables(s, dir).documents))),
-    "pref_length_bias" -> ((s, dir) =>
-      ChatOps.prefLengthBias(prefSynthPairs(Tables(s, dir).documents))),
-    // best-of-n: argmax/argmin responses per prompt with deterministic
-    // tie-breaks -> the (chosen, rejected) pair + margin DPO trains on
-    "pref_best_of_n" -> ((s, dir) =>
-      ChatOps.bestOfN(bonSynthSamples(Tables(s, dir).documents))),
-    // packed loss mask: per (turn, overlapped chunk), the within-chunk
-    // token range + loss verdict — the trainer-facing artifact after
-    // sft_pack (segment token counts are additive under rendering)
-    "sft_pack_spans" -> ((s, dir) =>
-      ChatOps.packedLossSpans(chatSynthTurns(Tables(s, dir).documents),
-        capacity = 256, shardWidth = 100)),
-    // context-window truncation: system turn + the longest recent-turn
-    // suffix fitting a 20-token budget (reverse running sum per conv)
-    "sft_truncate" -> ((s, dir) =>
-      ChatOps.fitContext(chatSynthTurns(Tables(s, dir).documents),
-        budgetTokens = 20)),
-    // SFT decontamination: 5-gram overlap of the concatenated USER
-    // prompts against the held-out test split (leaked benchmark
-    // questions are the contamination vector)
-    "sft_decontam" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      val bench = Sampling.assignSplit(docs, "doc_id",
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .where(col("split") === "test")
-      TextOps.decontaminate(ChatOps.userPrompts(chatSynthTurns(docs)),
-        bench, n = 5, idCol = "conv_id")
-    }),
-    // chat-template packing: rendered conversations laid end-to-end into
-    // fixed 256-token training windows (render is one bounded-group agg;
-    // the global offset is the sharded prefix scan — shardWidth 100
-    // forces the multi-shard path at sf0.01)
-    "sft_pack" -> ((s, dir) =>
-      Packing.packSequences(
-        ChatOps.renderChat(chatSynthTurns(Tables(s, dir).documents)),
-        capacity = 256, shardWidth = 100, idCol = "conv_id")),
-
-    // ---- learned-subword tokenizer: exact BPE merge training (8 rounds)
-    // over the word-frequency table, plus per-doc segmentation under the
-    // learned vocabulary ----
-    "text_bpe_merges" -> ((s, dir) =>
-      Bpe.train(Tables(s, dir).documents, nMerges = BpeMerges).merges),
-    "text_bpe_segment" -> ((s, dir) =>
-      Bpe.segmentStats(Tables(s, dir).documents,
-        Bpe.train(Tables(s, dir).documents, nMerges = BpeMerges).vocab)),
-    // exact cross-source trigram overlap matrix (ground truth for the
-    // sketch_hll_overlap estimates)
-    "source_overlap" -> ((s, dir) =>
-      TextOps.sliceOverlap(Tables(s, dir).documents, "source")),
-    // matrix-free top-PC power iteration over the embedding corpus
-    "vec_pca" -> ((s, dir) =>
-      Similarity.pcaTop(Tables(s, dir).embeddings, iters = 8)),
-    // Matryoshka truncation-recall curve: top-3 from the first d dims
-    // scored against the full-dim top-3
-    "vec_truncation_recall" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      Similarity.truncationRecall(e.where(col("vec_id") < 5), e, k = 3,
-        dims = Seq(8, 16, 32, 64))
-    }),
-    // product quantization: 2 subspaces x 4-centroid codebooks — codes +
-    // exact reconstruction error per vector. Codes comma-joined (small
-    // ints render identically in both engines): the driver's pandas
-    // compare cannot sort/hash raw array cells.
-    "vec_pq" -> ((s, dir) =>
-      Similarity.pqEncode(Tables(s, dir).embeddings, m = 2, k = 4, iters = 1)
-        .select(col("vec_id"),
-          array_join(col("codes").cast("array<string>"), ",").as("codes"),
-          col("sq_err"))),
-    // ADC search over the PQ codes: query-side distance tables, corpus
-    // side touched only through its m codes
-    "sim_pq_topk" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      Similarity.pqTopK(e.where(col("vec_id") < 5), e, topK = 3)
-    }),
-    // IVF-PQ: coarse cell probe prunes the search, ADC scores the probed
-    // cells through codes alone — the production ANN serving shape
-    "sim_ivfpq_topk" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      Similarity.ivfPqTopK(e.where(col("vec_id") < 5), e, k = 3, nprobe = 3)
-    }),
-    // ADC shortlist + exact cosine re-rank of the top-20 candidates: the
-    // refinement step that restores recall at small code sizes
-    "sim_pq_rerank" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      Similarity.pqTopKRerank(e.where(col("vec_id") < 5), e, topK = 3,
-        candidates = 20)
-    }),
-    // PQ at PRODUCTION code size (m=8 subspaces x 256-centroid codebooks,
-    // 8 bytes/vector at dim 64) with the rerank path — the configuration
-    // a real serving tier runs, in the production train-once/serve-many
-    // shape: pqTrain persists the model (codebooks + codes) to parquet
-    // and the query scores through the FROZEN files read back, never the
-    // in-memory training lineage. That split is also what makes the
-    // oracle tractable: 8 unrolled 256-centroid kmeans chains are not
-    // SQL-expressible, but the serving arithmetic is — the DuckDB twin
-    // reads the same frozen parquet and independently recomputes the
-    // ADC distance tables, code-table scoring, shortlist, and exact
-    // rerank (training itself stays oracle-covered at m=2 via the
-    // vec_pq/sim_pq_topk family — same code path, smaller constants).
-    // The freeze is keyed by corpus size so sf0.01/sf0.1 runs coexist
-    // and the twin picks its own SF's partition.
-    "sim_pq_prod" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      val n = e.count()
-      val (cbF, cdF) = amortizedFreeze(PqFrozenDir, s"pqprod-$n") {
-        Similarity.pqReadFrozen(s, PqFrozenDir, s"pqprod-$n")
-      } {
-        val (cb, cd) = Similarity.pqTrain(e, m = 8, kc = 256, iters = 1)
-        Similarity.pqFreeze(cb, cd, s"pqprod-$n", PqFrozenDir)
-      }
-      Similarity.pqRerankFrozen(e.where(col("vec_id") < 5), e, cbF, cdF,
-        topK = 3, candidates = 100)
-    }),
-    // The COMPLETE production ANN read path, frozen end to end: IVF cell
-    // pruning in front of PQ code scoring in front of exact rerank —
-    // probe the frozen cell centroids (nprobe=3 of the corpus' label
-    // cells), scan ONLY probed cells' codes through the frozen codebooks'
-    // ADC tables, exact-cosine-rerank the 50-candidate shortlist. Same
-    // train-once/serve-many shape as sim_pq_prod (model persisted keyed
-    // by corpus size, query serves from the READ-BACK files) with the
-    // coarse level persisted too; the DuckDB twin recomputes probe + ADC
-    // + rerank from the same frozen parquet. m=8 keeps the production
-    // 8-codes-per-vector layout; kc=64 books train 4x faster than
-    // sim_pq_prod's 256 — the 256-codebook trajectory is already
-    // oracle-covered there, while THIS row's new surface is the frozen
-    // cell-pruned serving.
-    // frozen-index MAINTENANCE: train+freeze PQ codebooks on the
-    // bootstrap corpus (vec_id % 3 <> 0), then encode the HELD-OUT batch
-    // against the frozen books — the ingest half of train-once/serve-many
-    // (the dedup_sem_inc shape for the PQ family). The twin recomputes
-    // the argmin assignment (same (dist, cluster) tie-break) from the
-    // same frozen parquet.
-    "sim_pq_addbatch" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      val boot = e.where(col("vec_id") % 3 =!= 0)
-      val batch = e.where(col("vec_id") % 3 === 0)
-      val nBoot = boot.count()
-      val cbF = amortizedFreeze(PqAddFrozenDir, s"pqadd-$nBoot") {
-        Similarity.pqReadFrozen(s, PqAddFrozenDir, s"pqadd-$nBoot")._1
-      } {
-        val (cb, cd) = Similarity.pqTrain(boot, m = 4, kc = 16, iters = 1)
-        Similarity.pqFreeze(cb, cd, s"pqadd-$nBoot", PqAddFrozenDir)._1
-      }
-      Similarity.pqEncodeFrozen(batch, cbF)
-    }),
-    // the same frozen-index maintenance AT INGEST: arriving vectors are
-    // encoded against driver-literal frozen codebooks by a stateless
-    // narrow map (the annServeStream frozen-model policy) — the batch
-    // face runs the streaming kernel verbatim, and StreamOpsSpec drives
-    // it as a real two-batch MemoryStream plus the foreachBatch append
-    // sink into the frozen codes relation
-    "stream_pq_addbatch" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      val boot = e.where(col("vec_id") % 3 =!= 0)
-      val batch = e.where(col("vec_id") % 3 === 0)
-      val nBoot = boot.count()
-      val cbF = amortizedFreeze(StreamPqAddFrozenDir, s"pqadd-$nBoot") {
-        Similarity.pqReadFrozen(s, StreamPqAddFrozenDir, s"pqadd-$nBoot")._1
-      } {
-        val (cb, cd) = Similarity.pqTrain(boot, m = 4, kc = 16, iters = 1)
-        Similarity.pqFreeze(cb, cd, s"pqadd-$nBoot", StreamPqAddFrozenDir)._1
-      }
-      val cbSeq = cbF.select("subspace", "cluster", "centroid").collect()
-        .map(r => (r.get(0).asInstanceOf[Number].intValue,
-          r.get(1).asInstanceOf[Number].longValue,
-          r.getSeq[Double](2).toSeq)).toSeq
-      graft.streaming.StreamOps.pqEncodeStream(batch, cbSeq).toDF()
-    }),
-    "sim_ivfpq_prod" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      val n = e.count()
-      val (cells, cb, cd) = Similarity.ivfPqTrain(e, m = 8, kc = 64,
-        iters = 1)
-      val (ceF, cbF, cdF) = Similarity.ivfPqFreeze(cells, cb, cd,
-        s"ivfpq-$n", IvfPqFrozenDir)
-      Similarity.ivfPqRerankFrozen(e.where(col("vec_id") < 5), e, ceF, cbF,
-        cdF, topK = 3, candidates = 50, nprobe = 3)
-    }),
-
-    // ---- per-doc top TF-IDF terms ----
-    "text_tfidf" -> ((s, dir) =>
-      TextOps.tfIdfTopK(Tables(s, dir).documents, k = 5)),
-
-    // ---- chunking / index / repetition / scrubbing ----
-    "text_chunks" -> ((s, dir) =>
-      TextOps.chunk(Tables(s, dir).documents, size = 200, overlap = 50)),
-    // postings emitted comma-joined: the driver's pandas compare cannot
-    // sort/hash raw array cells
-    "text_inverted_index" -> ((s, dir) =>
-      TextOps.invertedIndex(Tables(s, dir).documents, maxPostings = 20)
-        .select(col("term"), col("df"),
-          array_join(col("postings").cast("array<string>"), ",").as("postings"))),
-    "text_repetition" -> ((s, dir) =>
-      TextOps.repetitionStats(Tables(s, dir).documents)),
-    "text_scrub" -> ((s, dir) =>
-      TextOps.scrubPii(Tables(s, dir).documents)),
-
-    // ---- CCNet line-level dedup + boilerplate screen ----
-    // the flat fixture has no newlines, so line structure is synthesized
-    // INSIDE each doc: a newline every 12 space-split words. Near-dup
-    // docs share long unedited token runs, so their aligned chunks become
-    // IDENTICAL lines across docs — exercising the first-occurrence-wins
-    // dedup and (for clusters of 3+) the line-frequency boilerplate
-    // screen on real corpus duplication, not planted rows
-    "text_line_dedup" -> ((s, dir) =>
-      TextOps.lineDedup(lineSynthDocs(Tables(s, dir).documents))),
-    // the document face: the cleaned corpus rebuilt from kept lines plus
-    // per-doc removal accounting — CCNet's actual output
-    "text_line_clean" -> ((s, dir) =>
-      TextOps.lineClean(lineSynthDocs(Tables(s, dir).documents))),
-
-    // ---- exact duplicated-substring signal (8-gram granularity):
-    // maximal duplicated-run spans + per-doc duplicated-token coverage ----
-    "text_dup_spans" -> ((s, dir) =>
-      TextOps.dupNgramSpans(Tables(s, dir).documents, n = 8, minDocs = 2)),
-    "text_dup_coverage" -> ((s, dir) =>
-      TextOps.dupNgramCoverage(Tables(s, dir).documents, n = 8, minDocs = 2)),
-
-    // ---- KMV distinct-count sketch: deterministic approximate distinct
-    // users per event type (bounded-shuffle alternative to exact distinct) ----
-    "sketch_kmv" -> ((s, dir) =>
-      Sketches.kmvDistinct(Tables(s, dir).events, k = 64,
-        Seq("event_type"), "user_id")),
-    // pairwise corpus-overlap estimates between language slices over their
-    // distinct 3-gram shingle sets, from the mergeable KMV sketches alone
-    "sketch_kmv_jaccard" -> ((s, dir) =>
-      Sketches.kmvPairJaccard(
-        Tables(s, dir).documents.select(col("lang"),
-          explode(TextOps.textShingles(col("text"), 3)).as("sh")),
-        k = 128, "lang", "sh")),
-    // HyperLogLog distinct users per event type: constant 2^10 registers
-    // per group, duplicate-insensitive, register-max mergeable
-    "sketch_hll" -> ((s, dir) =>
-      Sketches.hllDistinct(Tables(s, dir).events, p = 10,
-        Seq("event_type"), "user_id")),
-    // count-min heavy hitters over the token stream: 3x1024 counters
-    // regardless of vocabulary; est >= true visible in the output
-    "sketch_cms" -> ((s, dir) =>
-      Sketches.cmsTopK(Tables(s, dir).documents
-        .select(explode(TextOps.tokens(col("text"))).as("term")),
-        "term", k = 20)),
-    // mergeable bottom-64 row-sample quantiles of event value per type:
-    // the rank-query face of the sketch family (k rows per group bound
-    // the synopsis regardless of group size)
-    "sketch_quantile" -> ((s, dir) =>
-      Sketches.quantileSketch(Tables(s, dir).events, k = 64,
-        Seq("event_type"), "event_id", "value")),
-    // pairwise distinct-user overlap between event types from HLL
-    // registers alone: union by register max, intersection by
-    // inclusion-exclusion
-    "sketch_hll_overlap" -> ((s, dir) =>
-      Sketches.hllPairOverlap(Tables(s, dir).events, p = 10,
-        "event_type", "user_id")),
-
-    // Z-order layout key over (user, day): one curve position per event,
-    // the multi-dimensional clustering key for scan pruning on either dim
-    "layout_zorder" -> ((s, dir) =>
-      Tables(s, dir).events
-        .select(col("event_id"), col("user_id"),
-          expr("ts DIV 86400000000000").as("day"))
-        .withColumn("z",
-          graft.ops.Layout.zValue(col("user_id"), col("day"), 16))),
-    // per-file min/max pruning manifest over the deterministic z-ordered
-    // layout (300 rows/file): both an x-range and a y-range predicate
-    // skip files from ONE physical order — the z-order claim, quantified
-    "layout_skipping" -> ((s, dir) =>
-      graft.ops.Layout.skippingStats(
-        Tables(s, dir).events
-          .select(col("user_id"), expr("ts div 86400000000000").as("day")),
-        "user_id", "day", bits = 16, rowsPerFile = 300,
-        xRange = (10L, 20L), yRange = (19723L, 19725L))),
-    // small-file compaction manifest: roll files at 4 KiB of document text
-    "layout_compaction" -> ((s, dir) =>
-      graft.ops.Layout.compactionPlan(Tables(s, dir).documents,
-        targetBytes = 4096)),
-    // Hilbert curve key over the same (user_id, day) plane as layout_zorder
-    "layout_hilbert" -> ((s, dir) =>
-      Tables(s, dir).events
-        .select(col("event_id"), col("user_id"),
-          expr("ts DIV 86400000000000").as("day"))
-        .withColumn("h",
-          graft.ops.Layout.hilbertValue(col("user_id"), col("day"), 16))),
-
-    // ---- gap sessionization over the event stream (30-minute gap);
-    // eventsUs: DuckDB truncates TIMESTAMP_NS to whole microseconds ----
-    "events_sessionize" -> ((s, dir) =>
-      Sessionize.sessions(Tables(s, dir).eventsUs, gapNs = 1800000000000L)),
-    // native session_window implementation of the SAME contract (boundary
-    // verified identical: exact-gap successors merge in both)
-    "events_session_window" -> ((s, dir) =>
-      Sessionize.sessionWindows(Tables(s, dir).eventsUs, "30 minutes")),
-    // ordered funnel: earliest signup, first click strictly after it,
-    // first purchase strictly after that
-    // experiment measurement: hash-assigned 50/50 arms, per-user
-    // big-purchase conversion (every fixture user makes SOME purchase, so
-    // the raw flag is degenerate — pooled p = 1, se = 0), pooled
-    // two-proportion z
-    "events_ab_test" -> ((s, dir) =>
-      graft.ops.Experiment.abTest(Tables(s, dir).events, "user_id",
-        col("event_type") === "purchase" && col("value") > 150)),
-    // CUPED variance-reduced readout of the same experiment (same salt ->
-    // same arms): purchase revenue adjusted by its pre-period covariate,
-    // every moment an exact integer until the final pinned doubles
-    "events_cuped" -> ((s, dir) =>
-      graft.ops.Experiment.cuped(Tables(s, dir).events, "user_id",
-        when(col("event_type") === "purchase" && col("value").isNotNull
-          && !isnan(col("value")), floor(col("value")).cast("long"))
-          .otherwise(0L))),
-    // the design-time face of the A/B test: per detectable effect size,
-    // the two-proportion sample-size requirement at 5%/80% against the
-    // MEASURED baseline conversion, and whether this corpus can power it
-    "events_power" -> ((s, dir) =>
-      graft.ops.Experiment.powerPlan(Tables(s, dir).events, "user_id",
-        col("event_type") === "purchase" && col("value") > 150)),
-    // engagement dashboard triple: DAU, trailing-7-day WAU, stickiness —
-    // the rolling distinct via bounded fan-out, never a stateful window
-    "events_active_users" -> ((s, dir) =>
-      graft.ops.Retention.activeUsers(Tables(s, dir).events)),
-    // RFM segmentation over purchases: recency/frequency/monetary with
-    // discrete rank quintiles (5 best) — engine-exact boundaries
-    "events_rfm" -> ((s, dir) =>
-      graft.ops.Retention.rfm(Tables(s, dir).events,
-        col("event_type") === "purchase")),
-    // user-base growth curve: first-seen day per user → daily new users +
-    // running cumulative total (exact distinct-over-growing-window with no
-    // stateful window — the running sum is over the per-day rollup)
-    "events_cumulative_users" -> ((s, dir) =>
-      graft.ops.Retention.cumulativeUsers(Tables(s, dir).events)),
-    // multi-dimensional rollup cube over (event_type, day): every
-    // aggregation granularity in ONE pass (Catalyst's Expand), null
-    // grouping cells re-labeled so the dtype survives the parquet→pandas
-    // round trip
-    "events_cube" -> ((s, dir) => {
-      Tables(s, dir).events
-        .select(col("event_type"), expr("ts div 86400000000000").as("day"),
-          col("value"))
-        .cube(col("event_type"), col("day"))
-        .agg(count(lit(1)).as("n"), sum("value").as("total_value"))
-        .select(coalesce(col("event_type"), lit("(all)")).as("event_type"),
-          coalesce(col("day"), lit(-1L)).as("day"),
-          col("n"), col("total_value"))
-    }),
-    // reliability diagram + ECE of the quality score against the Gopher
-    // verdict: does "0.8" actually mean 80%? (the threshold-shift audit)
-    "clf_calibration" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      val scored = TextOps.qualityScore(docs)
-        .select(col("doc_id"), col("quality_score"))
-        .join(TextOps.gopherRules(docs, minWords = 25)
-          .select("doc_id", "pass_gopher"), "doc_id")
-      graft.ops.Experiment.calibrationBins(scored, "quality_score",
-        "pass_gopher", nBins = 10)
-    }),
-    "events_funnel" -> ((s, dir) =>
-      graft.ops.Funnel.funnel(Tables(s, dir).eventsUs,
-        Seq("signup", "click", "purchase"))),
-    // window-over-window churn (weekly): active users absent from the
-    // NEXT window; the final window has no successor and is excluded
-    "events_churn" -> ((s, dir) =>
-      graft.ops.Retention.churn(Tables(s, dir).events, 7L * 86400L * NsPerS)),
-    // Kaplan-Meier survival over user lifetimes: observed churns vs
-    // right-censored still-active users, S(t) folded in one pinned order.
-    // Hour-granularity lifetimes (the corpus spans 30 days — calendar days
-    // would collapse the curve to 3 rows), 48h censoring horizon.
-    "events_survival" -> ((s, dir) =>
-      graft.ops.Retention.survival(Tables(s, dir).events,
-        censorDays = 48, dayNs = 3600L * NsPerS)),
-    // telemetry repeat suppression: first event per (user, type, hour)
-    // cell + how many repeats were collapsed — retry storms become one
-    // logical event per window
-    "events_dedup_window" -> ((s, dir) =>
-      graft.ops.Sessionize.firstPerWindow(Tables(s, dir).eventsUs,
-        3600L * NsPerS)),
-    // step-pair conversion rates + median/p90 time-to-convert
-    "events_funnel_timing" -> ((s, dir) =>
-      graft.ops.Funnel.stepTiming(Tables(s, dir).eventsUs,
-        Seq("signup", "click", "purchase"))),
-    "events_retention" -> ((s, dir) => Retention.retention(Tables(s, dir).eventsUs)),
-    // cohort lifetime value: purchase revenue accumulated along the
-    // day-offset axis per first-seen cohort, normalized per member
-    "events_ltv" -> ((s, dir) =>
-      graft.ops.Retention.ltv(Tables(s, dir).events,
-        col("event_type") === "purchase")),
-    "events_top_paths" -> ((s, dir) =>
-      graft.ops.Paths.topPaths(Tables(s, dir).eventsUs,
-        gapNs = 3600L * NsPerS, k = 20, maxSteps = 5)),
-    "events_markov" -> ((s, dir) =>
-      graft.ops.Paths.transitions(Tables(s, dir).eventsUs, gapNs = 3600L * NsPerS)),
-    // purchases paired with same-user clicks of the preceding hour — the
-    // batch face of the stream-stream interval join (streaming parity in
-    // StreamOpsSpec)
-    "events_interval_join" -> ((s, dir) => {
-      val e = Tables(s, dir).eventsUs
-      graft.ops.IntervalJoin.intervalJoin(
-        e.where(col("event_type") === "click")
-          .select(col("user_id"), col("event_id").as("click_id"),
-            col("ts").as("click_ts")),
-        e.where(col("event_type") === "purchase")
-          .select(col("user_id"), col("event_id").as("purchase_id"),
-            col("ts").as("purchase_ts")),
-        "user_id", "click_ts", "purchase_ts", 3600L * NsPerS)
-    }),
-    // market-basket lift over per-user event-type sets
-    "events_cooccurrence" -> ((s, dir) =>
-      graft.ops.Cooccurrence.typeLift(Tables(s, dir).eventsUs)),
-    // directional association rules a -> b over the same baskets:
-    // support, confidence P(b|a), lift — both orientations
-    "events_assoc_rules" -> ((s, dir) =>
-      graft.ops.Cooccurrence.assocRules(Tables(s, dir).eventsUs)),
-    // linear multi-touch attribution: purchase value split evenly across
-    // the preceding hour's clicks, credited revenue per touch day
-    // (day = -1 is the organic/no-touch bucket)
-    "events_attribution" -> ((s, dir) =>
-      graft.ops.Funnel.linearAttribution(Tables(s, dir).events,
-        windowNs = 3600L * NsPerS)),
-    // degree distribution of the MinHash near-dup graph — the fat-tail
-    // boilerplate-hub diagnostic
-    // modularity of the source partition against the near-dup graph: does
-    // near-duplication concentrate within sources, or syndicate across?
-    "graph_modularity" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      Components.modularity(Dedup.minhashNearDups(docs),
-        docs.select("doc_id", "source"))
-    }),
-    "graph_degrees" -> ((s, dir) =>
-      graft.pipeline.Components.degreeDistribution(
-        Dedup.minhashNearDups(Tables(s, dir).documents))),
-    // typed JSON projection out of the props payload, then a per-type audit
-    "events_json" -> ((s, dir) =>
-      SemiStructured.extractJson(
-        Tables(s, dir).events.select("event_type", "props"), "props", "k INT")
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), count("k").as("n_k"), avg("k").as("avg_k"),
-          min("k").as("min_k"), max("k").as("max_k"),
-          count_distinct(col("k")).as("n_distinct_k"))),
-
-    // ---- salted join (heavy-hitter resilience; == plain join) ----
-    "skew_join" -> ((s, dir) => {
-      val e = Tables(s, dir).events.select("event_id", "user_id", "value")
-      val dim = e.groupBy("user_id")
-        .agg(min("value").as("user_min"), count(lit(1)).as("n_user_events"))
-      graft.ops.SkewJoin.saltedJoin(e, dim, "user_id", salts = 8, tieBreak = "event_id")
-        .select(col("event_id"), col("user_id"), col("value"),
-          col("user_min"), col("n_user_events"),
-          (col("value") - col("user_min")).as("dev"))
-    }),
-
-    // ---- int8 embedding quantization ----
-    "vec_quantize" -> ((s, dir) =>
-      Similarity.quantizeInt8(Tables(s, dir).embeddings)
-        .select(col("vec_id"), col("scale"),
-          array_join(col("qvec").cast("array<string>"), ",").as("qvec"))),
-    // per-dimension drift/collapse profile
-    "vec_dim_stats" -> ((s, dir) => Similarity.dimStats(Tables(s, dir).embeddings)),
-    // per-dimension whitening against the corpus moments: the
-    // preprocessing before clustering/ANN when dimension scales differ.
-    // Emitted long-form (vec_id, dim, z): the driver's pandas compare
-    // cannot sort/hash raw array cells (same reason text_inverted_index
-    // joins its postings), and a double→string render would have to match
-    // bit-for-bit across engines — exploding keeps z a plain double.
-    // (outer explode: InferFiltersFromGenerate would otherwise push the
-    // whole projection expression into a `size(...) > 0` scan filter and
-    // evaluate the kernel twice per row — the r9 signature-kernel trap)
-    "vec_standardize" -> ((s, dir) =>
-      Similarity.standardize(Tables(s, dir).embeddings)
-        .select(col("vec_id"),
-          posexplode_outer(col("zvec")).as(Seq("dim", "z")))),
-    // JL sign random projection 64 -> 16: data-independent dimensionality
-    // reduction (Achlioptas signs), unrolled pinned-order expression.
-    // Long-form (vec_id, dim, rp_v) for the same array-cell reason as
-    // vec_standardize.
-    "vec_rp" -> ((s, dir) =>
-      Similarity.randomProject(Tables(s, dir).embeddings)
-        .select(col("vec_id"),
-          posexplode_outer(col("rp")).as(Seq("dim", "rp_v")))),
-    // one-row isotropy audit: hash-paired sample cosine moments + the
-    // centroid-offset ratio — decides whether cosine geometry is healthy
-    // (and whether vec_standardize is needed) before any ANN serving
-    "vec_isotropy" -> ((s, dir) =>
-      Similarity.isotropy(Tables(s, dir).embeddings)),
-    // centroid-distance outliers within each label: embedding-space
-    // mislabel/noise screening
-    "vec_outliers" -> ((s, dir) =>
-      Similarity.labelOutliers(Tables(s, dir).embeddings)),
-
-    // ---- benchmark decontamination: the held-out test split is the
-    // benchmark; any 5-token-gram overlap flags a training doc ----
-    "decontaminate" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      val bench = Sampling.assignSplit(docs, "doc_id",
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .where(col("split") === "test")
-      TextOps.decontaminate(docs, bench, n = 5)
-    }),
-    // Bloom-filter face of decontamination: same bench slice reduced to a
-    // 2^18-bit filter; deterministic including false positives
-    "bloom_decontaminate" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      val bench = Sampling.assignSplit(docs, "doc_id",
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .where(col("split") === "test")
-      TextOps.bloomDecontaminate(docs, bench, n = 5)
-    }),
-    // shardWidth 100 forces multiple shards at sf0.01 so the distributed
-    // prefix sum is exercised, not just the single-shard degenerate case
-    "pack_sequences" -> ((s, dir) =>
-      Packing.packSequences(Tables(s, dir).documents, 512, shardWidth = 100)),
-    // quality-weighted Bernoulli thinning: acceptance probability = the
-    // quality score, decided by a deterministic per-row draw (soft filter)
-    "sample_importance" -> ((s, dir) =>
-      Sampling.bernoulliByProb(Tables(s, dir).documents, "doc_id",
-          TextOps.qualityScoreCol(col("text")))
-        .select("doc_id", "u", "accept_prob", "is_kept")),
-    "sample_weighted" -> ((s, dir) =>
-      Sampling.weightedSample(Tables(s, dir).documents.select("doc_id", "n_chars"),
-        "doc_id", "n_chars", n = 50)),
-    // DSIR importance resampling: the 100 raw docs whose hashed-gram
-    // distribution looks most like the English slice (Gumbel top-k over
-    // deterministic importance weights)
-    "sample_dsir" -> ((s, dir) =>
-      Sampling.dsirResample(Tables(s, dir).documents, col("lang") === "en",
-        k = 100)),
-    // the end-to-end curation pipeline composed from the verified stage
-    // operators: gopher quality gate + exact-dedup keeper + near-dup
-    // quality-argmax keeper + 5-gram decontamination against the held-out
-    // test split (the same bench slice as the decontaminate gate)
-    "pipeline_curate" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      val bench = Sampling.assignSplit(docs, "doc_id",
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .where(col("split") === "test")
-      Curation.curate(docs, bench)
-    }),
-    // soft dedup: keep each doc with probability 1/cluster_size over the
-    // minhash near-dup clusters — in expectation each duplicate FAMILY
-    // contributes one copy, without the hard drop (SoftDeDup-style
-    // reweighting); singletons keep probability 1
-    "sample_soft_dedup" -> ((s, dir) => {
-      val d = Tables(s, dir).documents
-      val cl = Components.dedupClusters(d).select("doc_id", "cluster_size")
-      val sized = d.select("doc_id").join(cl, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("cluster_size"), lit(1L)).as("cluster_size"))
-      Sampling.bernoulliByProb(sized, "doc_id",
-          lit(1.0) / col("cluster_size").cast("double"), salt = "softdedup")
-        .select("doc_id", "cluster_size", "u", "accept_prob", "is_kept")
-    }),
-    "corpus_divergence" -> ((s, dir) =>
-      TextOps.unigramDivergence(Tables(s, dir).documents, col("lang") === "en")),
-    "text_collocations" -> ((s, dir) =>
-      TextOps.collocations(Tables(s, dir).documents, k = 100, minCount = 5)),
-
-    "text_lang_id" -> ((s, dir) => {
-      TextOps.languageId(Tables(s, dir).documents).select("doc_id", "lang_pred")
-    }),
-    // classifier evaluation: truth lang × predicted lang confusion matrix.
-    // On this synthetic fixture the matrix exposes a DATA fact, not a
-    // classifier bug: every language's text is built from the same
-    // English-ish vocabulary, so predictions lean 'en' across all truth
-    // rows — exactly the label/content disconnect this audit exists to
-    // catch before anyone trains on the lang column.
-    "text_langid_confusion" -> ((s, dir) =>
-      Profile.crosstab(
-        TextOps.languageId(Tables(s, dir).documents)
-          .select(col("lang"), col("lang_pred")),
-        "lang", "lang_pred", Seq("de", "en", "es", "fr", "it"))),
-    "text_fingerprint" -> ((s, dir) => {
-      Tables(s, dir).documents
-        .select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp"))
-    }),
-    // skip-gram (center, context) pair counts at window 2 — the
-    // word2vec/GloVe training-data extraction
-    "text_skipgrams" -> ((s, dir) =>
-      TextOps.skipgrams(Tables(s, dir).documents, window = 2)),
-    // Zipf exponent per source: ln(count) ~ ln(rank) least squares over
-    // the top-100 terms — templated/generated slices fall off the ≈ −1
-    // natural-language line
-    "text_zipf" -> ((s, dir) =>
-      TextOps.zipfFit(Tables(s, dir).documents)
-        .withColumnRenamed("grp", "source")),
-    // MOSS winnowing: window-min k-gram fingerprints (rightmost on ties)
-    // — guaranteed to catch any shared run of >= k+window-1 tokens at
-    // ~2/(window+1) the gram-stream density
-    "text_winnow" -> ((s, dir) =>
-      TextOps.winnowFingerprints(Tables(s, dir).documents)),
-    // near-dup pairs from shared winnow fingerprints: the position-robust
-    // LOCAL-overlap detector (shared passages light up where whole-doc
-    // MinHash dilutes); posting lists capped, inverted-index join
-    "dedup_winnow" -> ((s, dir) =>
-      TextOps.winnowNearDups(Tables(s, dir).documents)),
-    // SymSpell deletion-blocked fuzzy join over the token vocabulary. The
-    // synthetic vocabulary contains no organic typos, so the gate injects
-    // one deterministic char-3 deletion per word of >= 6 chars (the
-    // oracle mirrors the injection) — the operator still verifies every
-    // candidate with exact levenshtein, so organic pairs would surface too
-    "text_typo_pairs" -> ((s, dir) => {
-      val vocab = Tables(s, dir).documents
-        .select(explode(TextOps.tokens(col("text"))).as("word"))
-        .groupBy("word").agg(count(lit(1)).as("cnt"))
-        .where(length(col("word")) >= 5)
-      val typos = vocab.where(length(col("word")) >= 6)
-        .select(concat(substring(col("word"), 1, 2),
-          expr("substring(word, 4, length(word))")).as("word"),
-          lit(1L).as("cnt"))
-      TextOps.typoPairs(
-        vocab.unionByName(typos).groupBy("word").agg(sum("cnt").as("cnt")))
-    }),
-    // content-defined chunking over TEXT (LBFS/FastCDC boundaries on a
-    // rolling codepoint hash): chunks tile each doc, boundaries follow
-    // local content so inserts re-synchronize after one chunk
-    "text_cdc_chunks" -> ((s, dir) =>
-      TextCdc.cdcChunks(Tables(s, dir).documents)),
-    // sub-document dedup: pairs sharing >= 3 content-defined chunks via
-    // the df-capped chunk-hash inverted index — catches shared passages
-    // at chunk resolution regardless of position (123 organic pairs at
-    // sf0.01; whole-doc MinHash dilutes these)
-    "text_cdc_dups" -> ((s, dir) =>
-      TextCdc.cdcDups(Tables(s, dir).documents)),
-
-    // ---- deduplication ----
-    "dedup_exact" -> ((s, dir) => Dedup.exact(Tables(s, dir).documents)),
-    // one-row honesty report for the flagship dedup: brute-force exact
-    // shingle-Jaccard ground truth on a bounded slice of the edit-augmented
-    // corpus (base-id % 10, so planted twins stay together) vs the LSH path
-    // at identical parameters — realized recall of the banding S-curve;
-    // fp is 0 by construction (candidates verify with the same Jaccard)
-    "dedup_eval" -> ((s, dir) =>
-      Dedup.minhashEval(nearDupCorpus(s, dir)
-        .where(col("doc_id") % CopyIdTag % 10 === 0))),
-    // LSH banding planner over the repo's own 32-hash signature: the
-    // 1-(1-s^r)^b S-curve at target 0.8 / noise 0.3 per factorization,
-    // chain-multiplied powers (no libm pow), sharpest qualifying config
-    // flagged — how the banding for a 100 TB dedup run gets picked
-    "dedup_lsh_plan" -> ((s, dir) =>
-      Dedup.lshPlan(s, nHashes = 32, targetJaccard = 0.8)),
-    "dedup_minhash" -> ((s, dir) => Dedup.minhashNearDups(Tables(s, dir).documents)),
-    // cross-corpus doc-level fuzzy contamination: the raw corpus probed
-    // against the edit-augmented copies (the "benchmark" side) — the
-    // whole-document complement of the n-gram decontaminators; every
-    // planted copy must come back as a cross-pair of its original
-    "dedup_cross" -> ((s, dir) => {
-      val corpus = nearDupCorpus(s, dir)
-      Dedup.minhashJoin(corpus.where(col("doc_id") < CopyIdTag),
-        corpus.where(col("doc_id") >= CopyIdTag))
-    }),
-    "dedup_containment" -> ((s, dir) =>
-      Dedup.containmentDups(Tables(s, dir).documents, threshold = 0.8)),
-    // exact asymmetric containment of a small "benchmark": token-aligned
-    // fragments (tokens 5..44 of every 17th doc) probed against the corpus
-    // — each fragment must read containment 1.0 in its source document,
-    // the quoted-benchmark case Jaccard banding structurally misses
-    "dedup_containment_cross" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents.select("doc_id", "text")
-      val frags = docs
-        .where(col("doc_id") % 17 === 0
-          && size(TextOps.tokens(col("text"))) >= 46)
-        .select((col("doc_id") + lit(1L << 41)).as("doc_id"),
-          array_join(slice(TextOps.tokens(col("text")), 5, 40), " ").as("text"))
-      Dedup.containmentJoin(docs, frags)
-    }),
-    // cluster resolution + quality argmax: the "drop THESE rows" policy
-    "dedup_keepers" -> ((s, dir) => Components.dedupKeepers(Tables(s, dir).documents)),
-    "dedup_simhash" -> ((s, dir) => Dedup.simhashNearDups(Tables(s, dir).documents)),
-    "dedup_ngram" -> ((s, dir) => Dedup.ngramJaccard(Tables(s, dir).documents)),
-    // near-dup PAIRS -> transitive clusters + canonical keeper (alternating
-    // star connected components over the minhash pair graph)
-    "dedup_clusters" -> ((s, dir) => Components.dedupClusters(Tables(s, dir).documents)),
-    // PageRank over the same minhash near-dup graph the clusters use:
-    // centrality as a keeper-selection signal
-    "graph_pagerank" -> ((s, dir) =>
-      Components.pageRank(Dedup.minhashNearDups(Tables(s, dir).documents), iters = 3)),
-    // per-node triangles + local clustering coefficient over the same graph:
-    // separates genuine duplicate families (dense, high lcc) from
-    // boilerplate hubs (high degree, low lcc) for keeper policies
-    "graph_triangles" -> ((s, dir) =>
-      Components.triangleCounts(Dedup.minhashNearDups(Tables(s, dir).documents))),
-    // 2-core of the near-dup graph: dense duplicate families survive the
-    // peel, leaf attachments and chains fall away (8 idempotent rounds)
-    "graph_kcore" -> ((s, dir) =>
-      Components.kCore(Dedup.minhashNearDups(Tables(s, dir).documents), k = 2)),
-    // Adamic-Adar 2-hop link prediction over the same graph: the pairs
-    // LSH almost connected, weighted against promiscuous shared neighbors
-    "graph_adamic_adar" -> ((s, dir) =>
-      Components.adamicAdar(Dedup.minhashNearDups(Tables(s, dir).documents))),
-    // semi-supervised label propagation over the near-dup graph: the
-    // doc_id % 5 = 0 minority carries its lang label, 3 synchronous
-    // re-voting rounds spread it across duplicate families (seeds
-    // clamped, ties to the smallest label)
-    "graph_labelprop" -> ((s, dir) => {
-      val d = Tables(s, dir).documents
-      Components.labelPropagation(
-        Dedup.minhashNearDups(d),
-        d.where(col("doc_id") % 5 === 0).select("doc_id", "lang"),
-        rounds = 3, labelCol = "lang")
-    }),
-
-    // ---- similarity search ----
-    "sim_topk" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      Similarity.bruteForceTopK(e.where(col("vec_id") < 5), e, k = 3)
-    }),
-    // RP-shortlisted exact top-k: JL-projected 16-dim cosine shortlist of
-    // 50, exact cosine re-rank on those rows only — the zero-training
-    // shortlist-then-refine serving shape beside the PQ family
-    "sim_rp_topk" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      Similarity.rpTopK(e.where(col("vec_id") < 5), e, k = 3, shortlist = 50)
-    }),
-    // int8 scalar-quantized shortlist (integer-exact quantized cosine —
-    // the per-vector scales cancel) + exact re-rank: the zero-training
-    // serving sibling of the PQ family
-    "sim_sq_topk" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      Similarity.sqTopK(e.where(col("vec_id") < 5), e, k = 3, shortlist = 50)
-    }),
-    // hybrid retrieval: BM25 top-20 fused with cosine top-20 for vector 0
-    // by reciprocal-rank fusion (k_rrf = 60)
-    "retrieve_rrf" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val t = Tables(s, dir)
-      val lex = TextOps.bm25(t.documents, "table scan sort key", k = 20)
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id").asc)))
-      val vec = Similarity.bruteForceTopK(
-        t.embeddings.where(col("vec_id") === 0), t.embeddings, k = 20)
-        .select(col("neighbor_id").as("doc_id"), col("rank"))
-      Similarity.rrfFuse(lex, vec, "doc_id", "rank", k = 10)
-    }),
-    // embedding-space drift between the even/odd id slices: per-dimension
-    // centroid gap — the representation-space drift check
-    "vec_drift" -> ((s, dir) =>
-      Similarity.embeddingDrift(Tables(s, dir).embeddings,
-        col("vec_id") % 2 === 0)),
-    // mutual k-NN graph over the embedding corpus (k = 3): edges only
-    // where BOTH endpoints rank each other — the clustering/manifold
-    // graph construction, hub vertices pruned by mutuality. Cell-blocked
-    // candidates (nprobe=3 over trained kmeans cells) — the 100 TB shape;
-    // vec_knn_brute is the corpus x corpus exact twin kept as the audit.
-    // kCells pinned to 8 = the oracle twin's unrolled chain (the library
-    // DEFAULT is the corpus-scaled cellsFor(n) policy)
-    "vec_knn_graph" -> ((s, dir) =>
-      Similarity.knnGraph(Tables(s, dir).embeddings, k = 3, nprobe = 3,
-        kCells = 8)),
-    // the exact quadratic baseline the cell-blocked default is audited
-    // against (SimilaritySpec pins the recall floor and the equality when
-    // every cell is probed)
-    "vec_knn_brute" -> ((s, dir) =>
-      Similarity.knnGraphBrute(Tables(s, dir).embeddings, k = 3)),
-    // greedy k-center coreset (farthest-point traversal, k = 8): the
-    // diversity selection over the embedding space — prototypes spanning
-    // the corpus where random sampling oversamples dense regions
-    "vec_kcenter" -> ((s, dir) =>
-      Similarity.kCenters(Tables(s, dir).embeddings, k = 8)),
-    // graph-based embedding clustering: connected components of the
-    // mutual k-NN graph — density-adaptive communities with no k to
-    // choose and hubs already pruned by mutuality (pure composition of
-    // two verified operators, on the cell-blocked graph like production)
-    "vec_clusters" -> ((s, dir) =>
-      Components.clustersFromPairs(
-        Similarity.knnGraph(Tables(s, dir).embeddings, k = 3, nprobe = 3,
-          kCells = 8),
-        "id_a", "id_b")
-        .withColumnRenamed("doc_id", "vec_id")),
-    // MMR diversified retrieval for vector 0: greedy λ·rel − (1−λ)·maxsim
-    // over the cosine top-20 shortlist (λ = 0.7, k = 5)
-    "retrieve_mmr" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      Similarity.mmrSelect(e.where(col("vec_id") === 0), e, k = 5, shortlist = 20)
-    }),
-    "sim_ivf_topk" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      Similarity.ivfTopK(e.where(col("vec_id") < 5), e, k = 3, nprobe = 3)
-    }),
-    "sim_srp_topk" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      Similarity.srpTopK(e.where(col("vec_id") < 5), e, k = 3, planes = 6)
-    }),
-    "sim_srp_multiprobe" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      Similarity.srpTopKMultiprobe(e.where(col("vec_id") < 5), e, k = 3,
-        planes = 6, nprobe = 3)
-    }),
-    "sim_near_dups" -> ((s, dir) =>
-      Similarity.embeddingNearDups(Tables(s, dir).embeddings, threshold = 0.4)),
-    // contrastive-training mining: per anchor, the top-5 most-similar
-    // WRONG-label vectors — the negatives that define the decision boundary
-    "vec_hard_negatives" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      Similarity.hardNegatives(e.where(col("vec_id") < 5), e, k = 5)
-    }),
-    // triplet assembly: hardest positive + hardest negative per anchor,
-    // margin = pos_sim - neg_sim (what a triplet loss keeps positive)
-    "vec_triplets" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      Similarity.miningTriplets(e.where(col("vec_id") < 20), e)
-    }),
-    "vec_kmeans" -> ((s, dir) =>
-      Similarity.kmeans(Tables(s, dir).embeddings, k = 8, iters = 2)),
-    // simplified (centroid) silhouette over the SAME Lloyd trajectory:
-    // the "did k make sense" clustering-quality readout at O(n·k)
-    "vec_silhouette" -> ((s, dir) =>
-      Similarity.silhouette(Tables(s, dir).embeddings, k = 8, iters = 2)),
-    // cross-corpus SEMANTIC contamination (the embedding twin of
-    // dedup_cross): the 10% vec_id-slice "benchmark" probed against the
-    // rest, cells trained on the left corpus and frozen
-    "dedup_sem_cross" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      Similarity.semanticJoin(e.where(col("vec_id") % 10 =!= 0),
-        e.where(col("vec_id") % 10 === 0), threshold = 0.4, k = 8, iters = 2)
-    }),
-    // SemDeDup: the kmeans cells bound the pair space, within-cell cosine
-    // >= 0.4 prunes to the lowest id — semantic (paraphrase-level) dedup
-    "dedup_semantic" -> ((s, dir) =>
-      Similarity.semanticDedup(Tables(s, dir).embeddings, threshold = 0.4,
-        k = 8, iters = 2)),
-    // same near-dup contract with DATA-DERIVED blocking: SRP-LSH buckets
-    // instead of the pre-assigned label cells
-    "sim_srp_near_dups" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-        .withColumn("srp_cell",
-          graft.functions.Signatures.srpBucket(col("embedding"), 6))
-      Similarity.embeddingNearDups(e, threshold = 0.4, cellCol = "srp_cell")
-        .withColumnRenamed("cell", "srp_cell")
-    }),
-
-    // ---- multimodal: real P6 codec — decode, resize, frame-sample ----
-    "mm_features" -> ((s, dir) =>
-      Multimodal.extractFeatures(Multimodal.synthMediaTable(Tables(s, dir).documents))),
-    "mm_resize" -> ((s, dir) =>
-      Multimodal.extractFeatures(Multimodal.resizeMedia(
-        Multimodal.synthMediaTable(Tables(s, dir).documents), factor = 2))),
-    "mm_frames" -> ((s, dir) =>
-      Multimodal.sampleFrames(Multimodal.synthMediaTable(Tables(s, dir).documents), stride = 4)),
-    "mm_phash" -> ((s, dir) =>
-      Multimodal.perceptualHash(Multimodal.synthMediaTable(Tables(s, dir).documents))),
-    // joint-modality dedup: a pair counts only when BOTH the text and the
-    // image modality agree it's a near-dup — the multimodal-pipeline rule
-    // that suppresses single-modality false positives (same text, new
-    // image = a re-render, not a duplicate)
-    "mm_joint_dups" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      Dedup.minhashNearDups(docs)
-        .join(Multimodal.phashNearDups(Multimodal.synthMediaTable(docs)),
-          Seq("id_a", "id_b"))
-        .select("id_a", "id_b", "jaccard", "hamming")
-    }),
-    // 256-bit wide grid hash, words as scalar columns for the hash compare
-    "mm_phash_wide" -> ((s, dir) =>
-      Multimodal.perceptualHashWide(Multimodal.synthMediaTable(Tables(s, dir).documents))
-        .select(col("doc_id"), col("width"), col("height"),
-          element_at(col("phw"), 1).as("w0"), element_at(col("phw"), 2).as("w1"),
-          element_at(col("phw"), 3).as("w2"), element_at(col("phw"), 4).as("w3"))),
-    // image-level near-dups: Hamming ≤ 24 over the 256-bit wide grid hash
-    // (pigeonhole, 25 chunks × ≥10 bits)
-    "mm_phash_dups" -> ((s, dir) =>
-      Multimodal.phashNearDups(Multimodal.synthMediaTable(Tables(s, dir).documents))),
-
-    // ---- audio modality: real RIFF/WAVE PCM16 codec — decode, resample,
-    // chunked energy; audio_resample re-parses the rebuilt blobs, gating
-    // the encode→decode round trip on every row ----
-    "audio_features" -> ((s, dir) =>
-      Audio.extractFeatures(Audio.synthAudioTable(Tables(s, dir).documents))),
-    "audio_resample" -> ((s, dir) =>
-      Audio.extractFeatures(Audio.resampleAudio(
-        Audio.synthAudioTable(Tables(s, dir).documents), factor = 4))),
-    "audio_chunks" -> ((s, dir) =>
-      Audio.chunkEnergy(Audio.synthAudioTable(Tables(s, dir).documents),
-        chunkSamples = 1024)),
-    "audio_fingerprint" -> ((s, dir) =>
-      Audio.audioFingerprint(Audio.synthAudioTable(Tables(s, dir).documents))),
-    // content-defined chunking (FastCDC shape): boundaries where the
-    // rolling high-byte hash ≡ 0 mod 64 — chunk manifest per clip
-    "audio_cdc_chunks" -> ((s, dir) =>
-      Audio.cdcChunks(Audio.synthAudioTable(Tables(s, dir).documents))),
-    // sub-file dedup: pairs sharing >= 4 content-defined chunks via the
-    // df-capped chunk-hash inverted index — position-independent, unlike
-    // the whole-clip contour fingerprint
-    "audio_cdc_dups" -> ((s, dir) =>
-      Audio.audioCdcDups(Audio.synthAudioTable(Tables(s, dir).documents))),
-    // 256-bit wide contour fingerprint, words as scalar columns for the hash
-    // compare (w0 is the 64-bit afp — pinned against it transitively)
-    "audio_fp_wide" -> ((s, dir) =>
-      Audio.audioFingerprintWide(Audio.synthAudioTable(Tables(s, dir).documents))
-        .select(col("doc_id"), col("n_samples"),
-          element_at(col("afp"), 1).as("w0"), element_at(col("afp"), 2).as("w1"),
-          element_at(col("afp"), 3).as("w2"), element_at(col("afp"), 4).as("w3"))),
-    // audio-level near-dups: Hamming ≤ 24 over the 256-bit wide contour
-    // (pigeonhole, 25 chunks × ~10 bits) on the edit-augmented corpus —
-    // each in-place edited copy must pair with its source
-    "audio_fp_dups" -> ((s, dir) =>
-      Audio.audioNearDups(Audio.synthAudioTable(nearDupCorpus(s, dir)))),
-
-    // ---- video modality: real concatenated-P6 container (the ffmpeg
-    // image2pipe ppm stream format) — frame walk + scene-change keyframes
-    "video_frames" -> ((s, dir) =>
-      Video.frameStats(Video.synthVideoTable(Tables(s, dir).documents))),
-    "video_keyframes" -> ((s, dir) =>
-      Video.keyframes(Video.synthVideoTable(Tables(s, dir).documents),
-        threshold = 6000L)),
-    "video_sample" -> ((s, dir) =>
-      Video.sampleFrames(Video.synthVideoTable(Tables(s, dir).documents), k = 4)),
-    "video_fingerprint" -> ((s, dir) =>
-      Video.videoFingerprint(Video.synthVideoTable(Tables(s, dir).documents))),
-    // 256-bit wide luma-contour fingerprint, words as scalar columns
-    "video_fp_wide" -> ((s, dir) =>
-      Video.videoFingerprintWide(Video.synthVideoTable(Tables(s, dir).documents))
-        .select(col("doc_id"), col("n_px"),
-          element_at(col("vfp"), 1).as("w0"), element_at(col("vfp"), 2).as("w1"),
-          element_at(col("vfp"), 3).as("w2"), element_at(col("vfp"), 4).as("w3"))),
-    // video-level near-dups: Hamming ≤ 24 over the 256-bit wide contour on
-    // the edit-augmented corpus — fourth face of the per-modality dedup
-    // family (text/image/audio/video)
-    "video_fp_dups" -> ((s, dir) =>
-      Video.videoNearDups(Video.synthVideoTable(nearDupCorpus(s, dir)))),
-    // per-frame content hashes from the real container walk — the frame
-    // is the container's natural chunk unit (no rolling boundary needed)
-    "video_frame_hashes" -> ((s, dir) =>
-      Video.frameHashes(Video.synthVideoTable(Tables(s, dir).documents))),
-    // clip-reuse detection: pairs sharing identical decoded frames via
-    // the df-capped frame-hash inverted index, position-independent —
-    // the in-place edit leaves every later frame shared with the source
-    "video_frame_dups" -> ((s, dir) =>
-      Video.frameDups(Video.synthVideoTable(nearDupCorpus(s, dir)),
-        minShared = 1)),
-
-    // ---- streaming dedup (T4) in batch mode: duplicated feed collapses ----
-    "stream_dedup" -> ((s, dir) => {
-      val p = pts(s, dir)
-      graft.streaming.StreamOps.dedupStream(p.unionByName(p), "1 hour")
-    }),
-    // streaming CCNet line dedup, batch face: first-occurrence-per-line-key
-    // over the synthesized multi-line corpus — the kept slots must equal
-    // the batch rule's rn=1 pick exactly (the twin recomputes it)
-    "stream_line_dedup" -> ((s, dir) =>
-      graft.streaming.StreamOps.lineDedupStream(
-        lineSynthDocs(Tables(s, dir).documents)).toDF()),
-    // streaming SEMANTIC near-dup detection, batch face: within-cell
-    // cosine pairs against the frozen full-corpus codebook — the same
-    // cells dedup_semantic prunes over (shared kmeans chain in the twin)
-    "stream_sem_dups" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      val cents = Similarity.kmeansCentroids(e, k = 8, iters = 2).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).toSeq
-      graft.streaming.StreamOps.semanticDupStream(e, cents, threshold = 0.4)
-        .toDF()
-    }),
-    // streaming ANN serving over a FROZEN IVF-PQ index in batch mode:
-    // the retrieval-at-ingest face — index trained+frozen once (its own
-    // dir, self-contained), queries answered from the persisted cells/
-    // codebooks/codes with the exact ivfPqAdcTopKFrozen arithmetic. The
-    // twin recomputes probe + cell-pruned ADC + rank from the same
-    // frozen parquet.
-    "stream_ann_topk" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      val n = e.count()
-      val (ceF, cbF, cdF) = amortizedFreeze(StreamAnnFrozenDir, s"ivfpq-$n") {
-        Similarity.ivfPqReadFrozen(s, StreamAnnFrozenDir, s"ivfpq-$n")
-      } {
-        val (cells, cb, cd) = Similarity.ivfPqTrain(e, m = 8, kc = 64,
-          iters = 1)
-        Similarity.ivfPqFreeze(cells, cb, cd, s"ivfpq-$n", StreamAnnFrozenDir)
-      }
-      val cellsSeq = ceF.select("cell", "centroid").collect().map(r =>
-        (r.get(0).asInstanceOf[Number].longValue,
-          r.getSeq[Double](1).toSeq)).toSeq
-      val cbSeq = cbF.select("subspace", "cluster", "centroid").collect()
-        .map(r => (r.get(0).asInstanceOf[Number].intValue,
-          r.get(1).asInstanceOf[Number].intValue,
-          r.getSeq[Double](2).toSeq)).toSeq
-      graft.streaming.StreamOps.annServeStream(
-        e.where(col("vec_id") < 5), cellsSeq, cbSeq, cdF,
-        topK = 3, nprobe = 3).toDF()
-    }),
-    // streaming CMS cells in batch mode: equals cmsSketch exactly
-    "stream_cms" -> ((s, dir) =>
-      graft.streaming.StreamOps.cmsStream(
-        Tables(s, dir).documents
-          .select(explode(TextOps.tokens(col("text"))).as("term")), "term")
-        .toDF()),
-
-    // ---- streaming twin in batch mode (tumbling day windows) ----
-    "stream_window_stats" -> ((s, dir) => {
-      graft.streaming.StreamOps.windowedStats(pts(s, dir), "1 day", "1 hour")
-        .select(col("series_id"),
-          unix_micros(col("window.start")).as("win_start_us"),
-          col("min_value"), col("max_value"), col("n_points"))
-    }),
-
-    // incremental SEMANTIC dedup: codebook trained on the bootstrap 2/3
-    // and frozen; the batch ids interleave below existing ids, so both
-    // the batch-verdict and tighten-existing paths execute. EXACTNESS
-    // contract: equals semanticDedupFrozen on the union vs the bootstrap
-    // centroids — the oracle retrains the kmeans chain on the SAME
-    // bootstrap subset and assigns the full corpus against it.
-    "dedup_sem_inc" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings.select("vec_id", "embedding")
-      var st = IncrementalSemDedup.bootstrap(
-        e.where(col("vec_id") % 3 =!= 0), threshold = 0.4, k = 8, iters = 2)
-      st = IncrementalSemDedup.addBatch(st, e.where(col("vec_id") % 3 === 0))
-      IncrementalSemDedup.result(st)
-    })
-  )
-
-  // --------------------------------------------------------------------
-  /** A row whose oracle is another row's: `run` reaches the operator of
-    * row `of` through another face — the SQL table functions, a stream's
-    * batch face, incremental maintenance — and must hash equal to it. A
-    * frozen-model twin serves from its own frozen dir, so it names the
-    * same serving oracle pointed at that dir.
-    */
-  private[graft] final case class Twin(name: String, of: String,
-      oracle: Option[String], run: (SparkSession, String) => DataFrame)
-
-  private def twin(name: String, of: String, oracle: Option[String] = None)(
-      run: (SparkSession, String) => DataFrame): Twin = Twin(name, of, oracle, run)
-
-  /** The one path of the sql_* twins into the SQL surface: register the
-    * table functions, expose each `(name, frame)` as a temp view, run `sql`.
-    */
-  private def viaSql(s: SparkSession, views: (String, DataFrame)*)(
-      sql: String): DataFrame = {
-    graft.core.GraftTableFunctions.registerAll(s)
-    views.foreach { case (name, df) => df.createOrReplaceTempView(name) }
-    s.sql(sql)
-  }
-
-  private[graft] def twins: Seq[Twin] = Seq(
-    // ---- stream batch faces and incremental maintenance ----
-    twin("stream_crawl_rate", of = "web_crawl_rate") { (s, dir) =>
-      graft.streaming.StreamOps.crawlRateStream(crawlFetches(Tables(s, dir)),
-        windowMs = 3600000L, maxFetches = 2, watermark = "1 minute") },
-    // the robots verdict is a stateless narrow map over a stream-static
-    // broadcast, so the stream face is the batch operator verbatim
-    // (StreamOpsSpec drives it as a real MemoryStream)
-    twin("stream_robots", of = "web_robots") { (s, dir) =>
-      graft.streaming.StreamOps.robotsStream(
-          webSynthDocs(Tables(s, dir).documents), robotsRules(s))
-        .select("doc_id", "url", "domain", "path", "allowed",
-          "matched_prefix") },
-    // blocklist gate at ingest: narrow map + stream-static broadcast
-    // anti-joins — batch parity by construction
-    twin("stream_blocklist", of = "web_blocklist") { (s, dir) =>
-      graft.streaming.StreamOps.blocklistStream(
-          webSynthDocs(Tables(s, dir).documents), webBlocklist(s))
-        .select("doc_id", "url", "canonical_url", "domain") },
-    // the politeness recurrence continued across micro-batches: two longs
-    // of state per domain (count + running max), slots emitted final
-    twin("stream_fetch_schedule", of = "web_fetch_schedule") { (s, dir) =>
-      graft.streaming.StreamOps.fetchScheduleStream(
-        crawlFetches(Tables(s, dir)), delayMs = 60000L).toDF() },
-    // SFT-ingest dedup: rendered-identity state (keeper + copy count, two
-    // longs per distinct conversation) continued across micro-batches
-    twin("stream_sft_dedup", of = "sft_dedup") { (s, dir) =>
-      graft.streaming.StreamOps.convDedupStream(
-        ChatOps.renderChat(chatVariantTurns(Tables(s, dir).documents))
-          .select("conv_id", "text")).toDF() },
-    // streaming near-dup detection, batch face: must equal dedup_minhash
-    // exactly (same banding expression, same Jaccard arithmetic)
-    twin("stream_near_dups", of = "dedup_minhash") { (s, dir) =>
-      graft.streaming.StreamOps.nearDupStream(
-        Tables(s, dir).documents.select("doc_id", "text")).toDF() },
-    // the streaming sketches in batch mode equal the batch sketches exactly
-    twin("stream_kmv", of = "sketch_kmv") { (s, dir) =>
-      graft.streaming.StreamOps.kmvStream(
-        Tables(s, dir).events, k = 64, "event_type", "user_id")
-        .toDF().withColumnRenamed("grp", "event_type") },
-    twin("stream_hll", of = "sketch_hll") { (s, dir) =>
-      graft.streaming.StreamOps.hllStream(
-        Tables(s, dir).events, p = 10, "event_type", "user_id")
-        .toDF().withColumnRenamed("grp", "event_type") },
-    twin("stream_quantile", of = "sketch_quantile") { (s, dir) =>
-      graft.streaming.StreamOps.quantileStream(
-        Tables(s, dir).events, k = 64, "event_type", "event_id", "value")
-        .toDF().withColumnRenamed("grp", "event_type") },
-    // streaming repeat suppression in batch mode: batch face of
-    // Sessionize.firstPerWindow (associative struct-min + count)
-    twin("stream_dedup_window", of = "events_dedup_window") { (s, dir) =>
-      graft.streaming.StreamOps.dedupWindowStream(
-        Tables(s, dir).eventsUs, 3600L * NsPerS).toDF() },
-    // streaming sessionization's batch face: one micro-batch holding the
-    // whole frame must equal Sessionize.sessions row for row
-    twin("stream_sessions", of = "events_sessionize") { (s, dir) =>
-      graft.streaming.StreamOps.sessionStream(
-        Tables(s, dir).eventsUs, gapNs = 1800000000000L).toDF() },
-    // incremental cluster maintenance: bootstrap on a third of the corpus,
-    // ingest the rest in two batches — the EXACTNESS contract says the
-    // result equals a full dedup_clusters recompute
-    twin("dedup_incremental", of = "dedup_clusters") { (s, dir) =>
-      val docs = Tables(s, dir).documents.select("doc_id", "text")
-      var st = IncrementalDedup.bootstrap(docs.where(col("doc_id") % 3 === 0))
-      st = IncrementalDedup.addBatch(st, docs.where(col("doc_id") % 3 === 1))
-      st = IncrementalDedup.addBatch(st, docs.where(col("doc_id") % 3 === 2))
-      IncrementalDedup.clusters(st) },
-
-    // ---- pure-SQL drivability: the same operators reached through the
-    // GraftTableFunctions table-valued surface, whose builders splice the
-    // Scala calls' plans — the gate proves the SQL path hashes identically
-    // to the Scala path ----
-    // frozen serving: the spliced plan IS logregScoreFrozen's (kernel map)
-    twin("sql_clf_score", of = "clf_quality_frozen",
-        oracle = Some(clfFrozenTwinSql(ClfSqlFrozenDir))) { (s, dir) =>
-      frozenClfScore(s, dir, ClfSqlFrozenDir) { (docs, mF) =>
-        viaSql(s, "graft_sql_docs_clf" -> docs, "graft_sql_clf_model" -> mF)(
-          "SELECT * FROM graft_clf_score('graft_sql_docs_clf', 'graft_sql_clf_model')")
-      } },
-    // frozen ANN serving: the spliced plan IS ivfPqAdcTopKFrozen's, built
-    // over temp views of the read-back frozen relations
-    twin("sql_ann_serve", of = "stream_ann_topk",
-        oracle = Some(annFrozenTwinSql(SqlAnnFrozenDir))) { (s, dir) =>
-      val e = Tables(s, dir).embeddings
-      val n = e.count()
-      val (ceF, cbF, cdF) = amortizedFreeze(SqlAnnFrozenDir, s"ivfpq-$n") {
-        Similarity.ivfPqReadFrozen(s, SqlAnnFrozenDir, s"ivfpq-$n")
-      } {
-        val (cells, cb, cd) = Similarity.ivfPqTrain(e, m = 8, kc = 64,
-          iters = 1)
-        Similarity.ivfPqFreeze(cells, cb, cd, s"ivfpq-$n", SqlAnnFrozenDir)
-      }
-      viaSql(s, "graft_sql_ann_queries" -> e.where(col("vec_id") < 5),
-        "graft_sql_ann_cells" -> ceF, "graft_sql_ann_codebooks" -> cbF,
-        "graft_sql_ann_codes" -> cdF)(
-        "SELECT * FROM graft_ann_serve('graft_sql_ann_queries', " +
-        "'graft_sql_ann_cells', 'graft_sql_ann_codebooks', " +
-        "'graft_sql_ann_codes', 3, 3)") },
-    twin("sql_web_canonical", of = "web_canonical_url") { (s, dir) =>
-      viaSql(s, "graft_sql_webdocs" -> webSynthDocs(Tables(s, dir).documents))(
-        "SELECT * FROM graft_web_canonical('graft_sql_webdocs')") },
-    twin("sql_domain_stats", of = "web_domain_stats") { (s, dir) =>
-      viaSql(s, "graft_sql_webdocs_st" -> webSynthDocs(Tables(s, dir).documents))(
-        "SELECT * FROM graft_domain_stats('graft_sql_webdocs_st')") },
-    twin("sql_domain_budget", of = "sample_domain_budget") { (s, dir) =>
-      viaSql(s, "graft_sql_webdocs_bd" -> webSynthDocs(Tables(s, dir).documents))(
-        "SELECT * FROM graft_domain_budget('graft_sql_webdocs_bd', 60)") },
-    twin("sql_web_blocklist", of = "web_blocklist") { (s, dir) =>
-      viaSql(s, "graft_sql_webdocs_bl" -> webSynthDocs(Tables(s, dir).documents),
-        "graft_sql_blocklist" -> webBlocklist(s))(
-        "SELECT doc_id, url, canonical_url, domain FROM " +
-        "graft_web_blocklist('graft_sql_webdocs_bl', 'graft_sql_blocklist')") },
-    twin("sql_crawl_rate", of = "web_crawl_rate") { (s, dir) =>
-      viaSql(s, "graft_sql_fetches" -> crawlFetches(Tables(s, dir)))(
-        "SELECT * FROM graft_crawl_rate('graft_sql_fetches', 3600000, 2)") },
-    twin("sql_link_graph", of = "web_link_graph") { (s, dir) =>
-      viaSql(s, "graft_sql_webdocs_lk" -> webLinkedDocs(Tables(s, dir).documents))(
-        "SELECT * FROM graft_link_graph('graft_sql_webdocs_lk')") },
-    twin("sql_web_robots", of = "web_robots") { (s, dir) =>
-      viaSql(s, "graft_sql_webdocs_rb" -> webSynthDocs(Tables(s, dir).documents),
-        "graft_sql_robots" -> robotsRules(s))(
-        "SELECT doc_id, url, domain, path, allowed, matched_prefix " +
-        "FROM graft_web_robots('graft_sql_webdocs_rb', 'graft_sql_robots')") },
-    twin("sql_frontier", of = "web_frontier") { (s, dir) =>
-      viaSql(s, "graft_sql_webdocs_fr" -> webLinkedDocs(Tables(s, dir).documents))(
-        "SELECT * FROM graft_web_frontier('graft_sql_webdocs_fr')") },
-    twin("sql_boilerplate", of = "web_boilerplate") { (s, dir) =>
-      viaSql(s, "graft_sql_webdocs_bp" -> webPageDocs(Tables(s, dir).documents))(
-        "SELECT * FROM graft_domain_boilerplate('graft_sql_webdocs_bp', 0.6, 2)") },
-    twin("sql_fetch_schedule", of = "web_fetch_schedule") { (s, dir) =>
-      viaSql(s, "graft_sql_fetches_sc" -> crawlFetches(Tables(s, dir)))(
-        "SELECT * FROM graft_fetch_schedule('graft_sql_fetches_sc', 60000)") },
-    twin("sql_sft_stats", of = "sft_turn_stats") { (s, dir) =>
-      viaSql(s, "graft_sql_turns_st" -> chatSynthTurns(Tables(s, dir).documents))(
-        "SELECT * FROM graft_sft_stats('graft_sql_turns_st')") },
-    twin("sql_pref_bias", of = "pref_length_bias") { (s, dir) =>
-      viaSql(s, "graft_sql_pairs_pb" -> prefSynthPairs(Tables(s, dir).documents))(
-        "SELECT * FROM graft_pref_bias('graft_sql_pairs_pb')") },
-    twin("sql_sessionize", of = "events_sessionize") { (s, dir) =>
-      viaSql(s, "graft_sql_events" -> Tables(s, dir).eventsUs)(
-        "SELECT * FROM graft_sessionize('graft_sql_events', 1800000000000)") },
-    twin("sql_bm25", of = "text_bm25") { (s, dir) =>
-      viaSql(s, "graft_sql_documents" -> Tables(s, dir).documents)(
-        "SELECT * FROM graft_bm25('graft_sql_documents', 'table scan sort key', 20)") },
-    twin("sql_resample", of = "ts_resample") { (s, dir) =>
-      viaSql(s, "graft_sql_points" -> pts(s, dir))(
-        "SELECT * FROM graft_resample('graft_sql_points', 86400000000000)") },
-    twin("sql_quantile_sketch", of = "sketch_quantile") { (s, dir) =>
-      viaSql(s, "graft_sql_events" -> Tables(s, dir).events)(
-        "SELECT * FROM graft_quantile_sketch('graft_sql_events', 64, " +
-        "'event_type', 'event_id', 'value')") },
-    twin("sql_semantic_dedup", of = "dedup_semantic") { (s, dir) =>
-      viaSql(s, "graft_sql_embeddings" -> Tables(s, dir).embeddings)(
-        "SELECT * FROM graft_semantic_dedup('graft_sql_embeddings', 0.4, 8, 2)") },
-    twin("sql_dedup_clusters", of = "dedup_clusters") { (s, dir) =>
-      viaSql(s, "graft_sql_documents" -> Tables(s, dir).documents)(
-        "SELECT * FROM graft_dedup_clusters('graft_sql_documents')") },
-    twin("sql_hll", of = "sketch_hll") { (s, dir) =>
-      viaSql(s, "graft_sql_events" -> Tables(s, dir).events)(
-        "SELECT * FROM graft_hll_distinct('graft_sql_events', 10, " +
-        "'event_type', 'user_id')") },
-    twin("sql_cms", of = "sketch_cms") { (s, dir) =>
-      viaSql(s, "graft_sql_terms" -> Tables(s, dir).documents
-        .select(explode(TextOps.tokens(col("text"))).as("term")))(
-        "SELECT * FROM graft_cms_topk('graft_sql_terms', 'term', 20)") },
-    twin("sql_sample", of = "sample_fraction") { (s, dir) =>
-      viaSql(s, "graft_sql_documents" -> Tables(s, dir).documents)(
-        "SELECT doc_id, lang FROM graft_sample('graft_sql_documents', " +
-        "'doc_id', 0.1)") },
-    twin("sql_compaction", of = "layout_compaction") { (s, dir) =>
-      viaSql(s, "graft_sql_documents" -> Tables(s, dir).documents)(
-        "SELECT * FROM graft_compaction_plan('graft_sql_documents', 4096)") },
-    twin("sql_dedup_exact", of = "dedup_exact") { (s, dir) =>
-      viaSql(s, "graft_sql_documents" -> Tables(s, dir).documents)(
-        "SELECT * FROM graft_exact_dedup('graft_sql_documents')") },
-    // the line-dedup family: same synthesized multi-line corpus, same
-    // default boilerplate threshold as text_line_dedup / text_line_clean
-    twin("sql_line_dedup", of = "text_line_dedup") { (s, dir) =>
-      viaSql(s, "graft_sql_docs_ld" -> lineSynthDocs(Tables(s, dir).documents))(
-        "SELECT * FROM graft_line_dedup('graft_sql_docs_ld', 3)") },
-    twin("sql_line_clean", of = "text_line_clean") { (s, dir) =>
-      viaSql(s, "graft_sql_docs_lc" -> lineSynthDocs(Tables(s, dir).documents))(
-        "SELECT * FROM graft_line_clean('graft_sql_docs_lc', 3)") },
-    twin("sql_outliers", of = "vec_outliers") { (s, dir) =>
-      viaSql(s, "graft_sql_embeddings" -> Tables(s, dir).embeddings)(
-        "SELECT * FROM graft_label_outliers('graft_sql_embeddings')") },
-    twin("sql_quality", of = "text_quality") { (s, dir) =>
-      viaSql(s, "graft_sql_documents" -> Tables(s, dir).documents)(
-        "SELECT doc_id, n_chars_m, n_tokens, mean_token_len, " +
-        "alnum_ratio, space_ratio, stopword_ratio, quality_score " +
-        "FROM graft_quality('graft_sql_documents')") },
-    twin("sql_ks_drift", of = "profile_ks_drift") { (s, dir) =>
-      viaSql(s, "graft_sql_events_sliced" ->
-          Tables(s, dir).events.withColumn("in_a", col("ts") < T2))(
-        "SELECT grp AS event_type, n_a, n_b, ks_d, ks_crit, drifted " +
-        "FROM graft_ks_drift('graft_sql_events_sliced', 'event_type', " +
-        "'value', 'in_a', 50.0)") },
-    twin("sql_psi_drift", of = "profile_psi_drift") { (s, dir) =>
-      viaSql(s, "graft_sql_events_sliced" ->
-          Tables(s, dir).events.withColumn("in_a", col("ts") < T2))(
-        "SELECT grp AS event_type, n_a, n_b, n_bins_hit, psi, psi_flag " +
-        "FROM graft_psi_drift('graft_sql_events_sliced', 'event_type', " +
-        "'value', 'in_a', 0.0, 500.0, 10)") },
-    twin("sql_survival", of = "events_survival") { (s, dir) =>
-      viaSql(s, "graft_sql_ev_sv" -> Tables(s, dir).events)(
-        s"SELECT * FROM graft_survival('graft_sql_ev_sv', 48, ${3600L * NsPerS})") },
-    twin("sql_kcore", of = "graph_kcore") { (s, dir) =>
-      viaSql(s, "graft_sql_pairs_kc" -> Dedup.minhashNearDups(Tables(s, dir).documents))(
-        "SELECT * FROM graft_kcore('graft_sql_pairs_kc', 2)") },
-    twin("sql_adamic_adar", of = "graph_adamic_adar") { (s, dir) =>
-      viaSql(s, "graft_sql_pairs_aa" -> Dedup.minhashNearDups(Tables(s, dir).documents))(
-        "SELECT * FROM graft_adamic_adar('graft_sql_pairs_aa', 64)") },
-    twin("sql_rake", of = "text_rake") { (s, dir) =>
-      viaSql(s, "graft_sql_docs_rk" -> Tables(s, dir).documents)(
-        "SELECT * FROM graft_rake('graft_sql_docs_rk', 50, 4)") },
-    twin("sql_containment_join", of = "dedup_containment_cross") { (s, dir) =>
-      val docs = Tables(s, dir).documents.select("doc_id", "text")
-      viaSql(s, "graft_sql_cj_left" -> docs,
-        "graft_sql_cj_right" -> docs.where(col("doc_id") % 17 === 0
-            && size(TextOps.tokens(col("text"))) >= 46)
-          .select((col("doc_id") + lit(1L << 41)).as("doc_id"),
-            array_join(slice(TextOps.tokens(col("text")), 5, 40), " ").as("text")))(
-        "SELECT * FROM graft_containment_join('graft_sql_cj_left', 'graft_sql_cj_right', 0.8)") },
-    twin("sql_semantic_join", of = "dedup_sem_cross") { (s, dir) =>
-      val e = Tables(s, dir).embeddings
-      viaSql(s, "graft_sql_sj_left" -> e.where(col("vec_id") % 10 =!= 0),
-        "graft_sql_sj_right" -> e.where(col("vec_id") % 10 === 0))(
-        "SELECT * FROM graft_semantic_join('graft_sql_sj_left', 'graft_sql_sj_right', 0.4, 8, 2)") },
-    twin("sql_silhouette", of = "vec_silhouette") { (s, dir) =>
-      viaSql(s, "graft_sql_embeddings" -> Tables(s, dir).embeddings)(
-        "SELECT * FROM graft_silhouette('graft_sql_embeddings', 8, 2)") },
-    twin("sql_modularity", of = "graph_modularity") { (s, dir) =>
-      val docs = Tables(s, dir).documents
-      viaSql(s, "graft_sql_mh_pairs" -> Dedup.minhashNearDups(docs),
-        "graft_sql_doc_labels" -> docs.select("doc_id", "source"))(
-        "SELECT * FROM graft_modularity('graft_sql_mh_pairs', 'graft_sql_doc_labels')") },
-    twin("sql_crosstab", of = "profile_crosstab") { (s, dir) =>
-      viaSql(s, "graft_sql_documents" -> Tables(s, dir).documents)(
-        "SELECT * FROM graft_crosstab('graft_sql_documents', 'source', 'lang', 'de,en,es,fr,zh')") },
-    twin("sql_minhash_join", of = "dedup_cross") { (s, dir) =>
-      val corpus = nearDupCorpus(s, dir)
-      viaSql(s, "graft_sql_mj_left" -> corpus.where(col("doc_id") < CopyIdTag),
-        "graft_sql_mj_right" -> corpus.where(col("doc_id") >= CopyIdTag))(
-        "SELECT * FROM graft_minhash_join('graft_sql_mj_left', 'graft_sql_mj_right')") },
-    twin("sql_dsir", of = "sample_dsir") { (s, dir) =>
-      viaSql(s, "graft_sql_docs_dsir" ->
-          Tables(s, dir).documents.withColumn("is_en", col("lang") === "en"))(
-        "SELECT * FROM graft_dsir('graft_sql_docs_dsir', 'is_en', 100)") },
-    twin("sql_curate", of = "pipeline_curate") { (s, dir) =>
-      val docs = Tables(s, dir).documents
-      viaSql(s, "graft_sql_documents" -> docs,
-        "graft_sql_bench_curate" -> Sampling.assignSplit(docs, "doc_id",
-            Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-          .where(col("split") === "test"))(
-        "SELECT * FROM graft_curate('graft_sql_documents', 'graft_sql_bench_curate')") },
-    twin("sql_dtw", of = "ts_dtw") { (s, dir) =>
-      viaSql(s, "graft_sql_pts_dtw" -> Tables(s, dir).eventsUs.where(col("user_id") < 10)
-        .select(concat(lit("shyft://events/u"), col("user_id"), lit("/"),
-          col("event_type")).as("series_id"), col("ts"), col("value")))(
-        s"SELECT * FROM graft_dtw('graft_sql_pts_dtw', ${86400L * NsPerS})") },
-    twin("sql_winnow_dups", of = "dedup_winnow") { (s, dir) =>
-      viaSql(s, "graft_sql_docs_w" -> Tables(s, dir).documents)(
-        "SELECT * FROM graft_winnow_dups('graft_sql_docs_w', 5, 4, 5, 50)") },
-    twin("sql_skipgrams", of = "text_skipgrams") { (s, dir) =>
-      viaSql(s, "graft_sql_docs_sg" -> Tables(s, dir).documents)(
-        "SELECT * FROM graft_skipgrams('graft_sql_docs_sg', 2)") },
-    twin("sql_holt", of = "ts_holt") { (s, dir) =>
-      viaSql(s, "graft_sql_points_h" -> pts(s, dir))(
-        "SELECT * FROM graft_holt('graft_sql_points_h', 3)") },
-    twin("sql_cdc_scd2", of = "cdc_scd2") { (s, dir) =>
-      viaSql(s, "graft_sql_clog" -> changeLog(s, dir))(
-        "SELECT * FROM graft_cdc_scd2('graft_sql_clog')") },
-    twin("sql_text_cdc_dups", of = "text_cdc_dups") { (s, dir) =>
-      viaSql(s, "graft_sql_docs_cdc" -> Tables(s, dir).documents)(
-        "SELECT * FROM graft_text_cdc_dups('graft_sql_docs_cdc', 4, 5, 3, 50)") },
-    twin("sql_kcenter", of = "vec_kcenter") { (s, dir) =>
-      viaSql(s, "graft_sql_emb_kc" -> Tables(s, dir).embeddings)(
-        "SELECT * FROM graft_kcenter('graft_sql_emb_kc', 8)") },
-    twin("sql_readability", of = "text_readability") { (s, dir) =>
-      viaSql(s, "graft_sql_docs_rd" -> Tables(s, dir).documents)(
-        "SELECT * FROM graft_readability('graft_sql_docs_rd')") },
-    twin("sql_assoc_rules", of = "events_assoc_rules") { (s, dir) =>
-      viaSql(s, "graft_sql_ev_ar" -> Tables(s, dir).eventsUs)(
-        "SELECT * FROM graft_assoc_rules('graft_sql_ev_ar')") },
-    twin("sql_calendar_profile", of = "events_calendar_profile") { (s, dir) =>
-      viaSql(s, "graft_sql_ev_cal" -> Tables(s, dir).events)(
-        "SELECT * FROM graft_calendar_profile('graft_sql_ev_cal')") },
-    twin("sql_novelty", of = "text_novelty") { (s, dir) =>
-      viaSql(s, "graft_sql_docs_nv" -> Tables(s, dir).documents)(
-        "SELECT * FROM graft_novelty('graft_sql_docs_nv', 3)") },
-    twin("sql_benford", of = "profile_benford") { (s, dir) =>
-      viaSql(s, "graft_sql_ord_bf" -> Tables(s, dir).orders)(
-          "SELECT * FROM graft_benford('graft_sql_ord_bf', " +
-          "'o_orderpriority', 'o_totalprice')")
-        .withColumnRenamed("grp", "o_orderpriority") },
-    twin("sql_ljungbox", of = "ts_ljungbox") { (s, dir) =>
-      viaSql(s, "graft_sql_pts_lb" -> pts(s, dir))(
-        "SELECT * FROM graft_ljungbox('graft_sql_pts_lb', 6)") },
-    twin("sql_isotropy", of = "vec_isotropy") { (s, dir) =>
-      viaSql(s, "graft_sql_emb_iso" -> Tables(s, dir).embeddings)(
-        "SELECT * FROM graft_isotropy('graft_sql_emb_iso')") },
-    twin("sql_spearman", of = "ts_spearman") { (s, dir) =>
-      viaSql(s, "graft_sql_pts_sp" -> Tables(s, dir).eventsUs.where(col("user_id") < 25)
-        .select(concat(lit("shyft://events/u"), col("user_id"), lit("/"),
-          col("event_type")).as("series_id"), col("ts"), col("value")))(
-        s"SELECT * FROM graft_spearman('graft_sql_pts_sp', ${86400L * NsPerS})") },
-    twin("sql_motifs", of = "ts_motifs") { (s, dir) =>
-      viaSql(s, "graft_sql_pts_mo" -> pts(s, dir))(
-        s"SELECT * FROM graft_motifs('graft_sql_pts_mo', ${3600L * NsPerS})") },
-    twin("sql_pacf", of = "ts_pacf") { (s, dir) =>
-      viaSql(s, "graft_sql_pts_pc" -> pts(s, dir))(
-        "SELECT * FROM graft_pacf('graft_sql_pts_pc', 6)") },
-    twin("sql_completeness", of = "profile_completeness") { (s, dir) =>
-      viaSql(s, "graft_sql_ev_cp" -> Tables(s, dir).events)(
-        "SELECT * FROM graft_completeness('graft_sql_ev_cp')") },
-    // long-form like vec_rp: the oracle compare (tools/compare.py) cannot
-    // sort/hash raw array cells
-    twin("sql_rp", of = "vec_rp") { (s, dir) =>
-      viaSql(s, "graft_sql_emb_rp" -> Tables(s, dir).embeddings)(
-        "SELECT vec_id, dim, rp_v FROM " +
-        "graft_random_project('graft_sql_emb_rp', 16, 64) " +
-        "LATERAL VIEW OUTER posexplode(rp) pe AS dim, rp_v") },
-    twin("sql_lsh_plan", of = "dedup_lsh_plan") { (s, _) =>
-      viaSql(s)("SELECT * FROM graft_lsh_plan(32, 0.8)") },
-    twin("sql_minhash_eval", of = "dedup_eval") { (s, dir) =>
-      viaSql(s, "graft_sql_docs_me" ->
-          nearDupCorpus(s, dir).where(col("doc_id") % CopyIdTag % 10 === 0))(
-        "SELECT * FROM graft_minhash_eval('graft_sql_docs_me')") }
-  )
-
-  // --------------------------------------------------------------------
-  def oracleSql: Map[String, String] = {
-    val base = oracleSqlBase
-    base ++ twins.map(t => t.name -> t.oracle.getOrElse(base(t.of)))
-  }
-
-  private def oracleSqlBase: Map[String, String] = Map(
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty,
-        |sum(l_extendedprice) AS sum_base,
-        |sum(l_extendedprice * (1.0 - l_discount)) AS sum_disc,
-        |avg(l_discount) AS avg_disc, count(*) AS n
-        |FROM lineitem GROUP BY 1, 2""".stripMargin,
-    "q2_join_agg" ->
-      """SELECT o_orderpriority,
-        |sum(l_extendedprice * (1.0 - l_discount)) AS revenue, count(*) AS n
-        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey GROUP BY 1""".stripMargin,
-    "q3_broadcast_dims" ->
-      """SELECT r_name, n_name, count(*) AS n_cust, sum(c_acctbal) AS acctbal
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey GROUP BY 1, 2""".stripMargin,
-    "q4_filter" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, l_discount
-        |FROM lineitem WHERE l_quantity > 45.0 AND l_discount > 0.05""".stripMargin,
-    "q5_rollup" ->
-      """SELECT r_name, n_name, count(*) AS n_cust, sum(c_acctbal) AS acctbal
-        |FROM customer
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY ROLLUP (r_name, n_name)""".stripMargin,
-    // Twin of the JSONL round trip: the sink must be invisible, so the
-    // oracle is the SOURCE projection.
-    "sink_jsonl_roundtrip" ->
-      "SELECT doc_id, text, lang FROM documents",
-    // Twin of Export.epochShuffle(epoch=1, nShards=8): the same
-    // Carter-Wegman key (epoch_1 salt), shard = key mod 8, in-shard rank
-    // by (key, id).
-    "export_epoch_shuffle" ->
-      s"""WITH k AS (SELECT doc_id,
-         |  ((${phSql("CAST(doc_id AS VARCHAR)", "0")}) * ${Sampling.saltMult("epoch_1")}
-         |    + ${Sampling.saltAdd("epoch_1")}) % 1000000007 AS key
-         |  FROM documents)
-         |SELECT doc_id, CAST(key % 8 AS INTEGER) AS shard_id,
-         |  CAST(row_number() OVER (PARTITION BY key % 8 ORDER BY key, doc_id)
-         |    AS INTEGER) AS shard_pos
-         |FROM k""".stripMargin,
-    // Twin of the windowed relational anchor.
-    "q6_window" ->
-      """SELECT o_custkey, o_orderkey, epoch_us(o_orderdate) AS order_us,
-        |  o_totalprice,
-        |  CAST(row_number() OVER win AS INTEGER) AS order_rank,
-        |  sum(o_totalprice) OVER (PARTITION BY o_custkey
-        |    ORDER BY epoch_us(o_orderdate), o_orderkey
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS running_revenue
-        |FROM orders
-        |WINDOW win AS (PARTITION BY o_custkey ORDER BY epoch_us(o_orderdate), o_orderkey)""".stripMargin,
-    // Twin of the correlated-aggregate anchor: per-part avg is exact in
-    // both engines (integer-valued quantities sum exactly in any order),
-    // so the strict < against avg*0.2 cannot flip between them.
-    // Twin of q9_returns_top: same join chain and the same revenue
-    // expression tree; ties at the cutoff break on c_custkey.
-    "q9_returns_top" ->
-      """SELECT c_custkey, c_name, n_name,
-        |  sum(l_extendedprice * (CAST(1 AS DOUBLE) - l_discount)) AS revenue,
-        |  CAST(count(*) AS BIGINT) AS n_items
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE l_returnflag = 'R'
-        |GROUP BY 1, 2, 3
-        |ORDER BY revenue DESC, c_custkey ASC LIMIT 20""".stripMargin,
-    "q7_small_qty" ->
-      """WITH pa AS (SELECT l_partkey, avg(l_quantity) * 0.2 AS qty_lim
-        |  FROM lineitem GROUP BY 1)
-        |SELECT p_brand, sum(l_extendedprice) AS total_price, count(*) AS n
-        |FROM lineitem JOIN pa USING (l_partkey)
-        |JOIN part ON p_partkey = l_partkey
-        |WHERE l_quantity < qty_lim GROUP BY 1""".stripMargin,
-    // Twin of the bloom-prefiltered semi-join: the bloom must be
-    // invisible, so the oracle is the PLAIN semi-join.
-    "join_bloom_semi" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey FROM lineitem
-        |WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_size = 1)""".stripMargin,
-    // Twin of FuzzyJoin.editJoin over the injected dirty feed: same digit
-    // deletion, same deletion-neighborhood expansion (i = 0 keeps the
-    // key), same exact levenshtein verify.
-    "er_fuzzy_join" ->
-      s"""WITH $ErPairsCtes
-         |SELECT id_a, id_b, name_a, name_b, dist FROM er_pairs""".stripMargin,
-    // Twin of FuzzyJoin.entities over the same match graph: recursive
-    // min-label closure seeded with EVERY record id (singletons label
-    // themselves), the shared er_pairs CTE as the edge relation.
-    "er_entities" ->
-      s"""WITH RECURSIVE customer_b AS (
-         |  SELECT * FROM customer WHERE c_custkey <= 1500),
-         |${erPairsCtesFrom("customer_b")},
-         |nodes AS (SELECT d_id AS id FROM dirty
-         |  UNION SELECT c_custkey FROM customer_b),
-         |edges AS (SELECT id_a AS src, id_b AS dst FROM er_pairs
-         |  UNION SELECT id_b, id_a FROM er_pairs),
-         |reach(id, comp) AS (SELECT id, id FROM nodes
-         |  UNION SELECT e.dst, r.comp FROM reach r JOIN edges e ON e.src = r.id),
-         |comps AS (SELECT id AS record_id, min(comp) AS entity_id FROM reach GROUP BY 1),
-         |sizes AS (SELECT entity_id, CAST(count(*) AS BIGINT) AS entity_size
-         |  FROM comps GROUP BY 1)
-         |SELECT record_id, entity_id, entity_size
-         |FROM comps JOIN sizes USING (entity_id)""".stripMargin,
-    // Twin of the ED <= 2 fuzzy join: the same two-digit deletion fixture
-    // and the same radius-2 deletion neighborhood on both sides (one
-    // deletion level per CTE, DISTINCT per side), levenshtein-verified.
-    "er_ed2_join" -> {
-      // single-line on purpose: the enclosing stripMargin would otherwise
-      // eat the leading pipe of a line-initial || concat
-      def dels(x: String) =
-        s"list_transform(range(0, length($x) + 1), i -> " +
-          s"CASE WHEN i = 0 THEN $x ELSE substr($x, 1, CAST(i - 1 AS INTEGER)) " +
-          s"|| substr($x, CAST(i + 1 AS INTEGER), CAST(length($x) AS INTEGER)) END)"
-      s"""WITH d1 AS (SELECT s_suppkey,
-         |  substr(s_name, 1, CAST(9 + s_suppkey % 5 AS INTEGER))
-         |    || substr(s_name, CAST(11 + s_suppkey % 5 AS INTEGER), length(s_name)) AS n1
-         |  FROM supplier),
-         |dirty AS (SELECT s_suppkey + (CAST(1 AS BIGINT) << 40) AS d_id,
-         |  substr(n1, 1, CAST(9 + s_suppkey % 3 AS INTEGER))
-         |    || substr(n1, CAST(11 + s_suppkey % 3 AS INTEGER), length(n1)) AS d_name
-         |  FROM d1),
-         |va1 AS (SELECT d_id AS id_a, d_name AS name_a,
-         |  unnest(${dels("d_name")}) AS v1 FROM dirty),
-         |va2 AS (SELECT id_a, name_a, unnest(${dels("v1")}) AS v FROM va1),
-         |va AS (SELECT DISTINCT id_a, name_a, v FROM va2),
-         |vb1 AS (SELECT s_suppkey AS id_b, s_name AS name_b,
-         |  unnest(${dels("s_name")}) AS v1 FROM supplier),
-         |vb2 AS (SELECT id_b, name_b, unnest(${dels("v1")}) AS v FROM vb1),
-         |vb AS (SELECT DISTINCT id_b, name_b, v FROM vb2),
-         |cand AS (SELECT DISTINCT id_a, id_b, name_a, name_b
-         |  FROM va JOIN vb ON va.v = vb.v)
-         |SELECT id_a, id_b, name_a, name_b,
-         |  CAST(levenshtein(name_a, name_b) AS INTEGER) AS dist
-         |FROM cand WHERE levenshtein(name_a, name_b) <= 2""".stripMargin
-    },
-    // Twin of the anti-join anchor.
-    "q8_no_big_order" ->
-      """SELECT c_mktsegment, count(*) AS n_customers, sum(c_acctbal) AS acctbal
-        |FROM customer c
-        |WHERE NOT EXISTS (SELECT 1 FROM orders o
-        |  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000.0)
-        |GROUP BY 1""".stripMargin,
-    // Twin of the events_json extraction: one typed JSON projection, same
-    // per-type audit aggregates (k is INT32 on both sides). TRY_CAST +
-    // json_valid mirror from_json's PERMISSIVE nulls instead of erroring
-    // on malformed payloads (remaining tolerance gap, documented: a QUOTED
-    // integer "7" is null under Spark's typed parse but 7 under TRY_CAST —
-    // absent from this corpus, where props is machine-written {"k": int}).
-    "events_json" ->
-      """WITH e AS (SELECT event_type,
-        |  CASE WHEN json_valid(props)
-        |    THEN TRY_CAST(json_extract_string(props, '$.k') AS INTEGER) END AS k
-        |  FROM events)
-        |SELECT event_type, count(*) AS n, count(k) AS n_k, avg(k) AS avg_k,
-        |  min(k) AS min_k, max(k) AS max_k, count(DISTINCT k) AS n_distinct_k
-        |FROM e GROUP BY 1""".stripMargin,
-
-    // Twin of Profile.numeric: one SELECT per profiled column; DuckDB's
-    // quantile_cont matches Spark's exact percentile interpolation
-    // (index p·(n-1), linear between neighbors).
-    "profile_stats" -> {
-      def one(c: String) =
-        s"""SELECT '$c' AS col_name, count($c) AS n,
-           |  count(CASE WHEN $c IS NULL THEN 1 END) AS n_null,
-           |  count(DISTINCT $c) AS n_distinct,
-           |  CAST(min($c) AS DOUBLE) AS min_value,
-           |  CAST(max($c) AS DOUBLE) AS max_value,
-           |  avg($c) AS mean_value, quantile_cont($c, 0.5) AS median
-           |FROM lineitem""".stripMargin
-      Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-        .map(one).mkString("\nUNION ALL\n")
-    },
-    // Twin of Profile.histogram: identical IEEE bin arithmetic (the width
-    // expression is written out, not precomputed, so both engines fold the
-    // same constants).
-    // Twin of Profile.calendarProfile: identical integer-epoch dow/hour
-    // derivation (1970-01-01 = Thursday, 0 = Sunday).
-    "events_calendar_profile" ->
-      s"""WITH e AS (SELECT event_type, epoch_ns(ts) AS ts, value FROM events
-         |  WHERE value IS NOT NULL AND NOT isnan(value))
-         |SELECT event_type,
-         |  ((ts // ${86400L * NsPerS} + 4) % 7 + 7) % 7 AS dow,
-         |  ((ts % ${86400L * NsPerS} + ${86400L * NsPerS}) % ${86400L * NsPerS})
-         |    // ${3600L * NsPerS} AS hour,
-         |  count(*) AS n_events, avg(value) AS mean_value,
-         |  min(value) AS min_value, max(value) AS max_value
-         |FROM e GROUP BY 1, 2, 3""".stripMargin,
-    // Twin of the document-length histogram (Profile.histogram on
-    // n_chars, [0, 1000] x 50 bins).
-    "profile_doclen" ->
-      """WITH x AS (SELECT CAST(n_chars AS DOUBLE) AS v FROM documents
-        |  WHERE n_chars IS NOT NULL AND CAST(n_chars AS DOUBLE) >= 0.0
-        |    AND CAST(n_chars AS DOUBLE) <= 1000.0),
-        |b AS (SELECT least(CAST(floor((v - 0.0) / ((1000.0 - 0.0) / 50)) AS BIGINT), 49) AS bin_id, v FROM x)
-        |SELECT bin_id, count(*) AS n, min(v) AS min_value, max(v) AS max_value,
-        |  avg(v) AS mean_value,
-        |  0.0 + bin_id * ((1000.0 - 0.0) / 50) AS lo_edge,
-        |  0.0 + (bin_id + 1) * ((1000.0 - 0.0) / 50) AS hi_edge
-        |FROM b GROUP BY bin_id""".stripMargin,
-    "profile_histogram" ->
-      """WITH x AS (SELECT value AS v FROM events
-        |  WHERE value IS NOT NULL AND NOT isnan(value) AND value >= 0.0 AND value <= 500.0),
-        |b AS (SELECT least(CAST(floor((v - 0.0) / ((500.0 - 0.0) / 50)) AS BIGINT), 49) AS bin_id, v FROM x)
-        |SELECT bin_id, count(*) AS n, min(v) AS min_value, max(v) AS max_value,
-        |  avg(v) AS mean_value,
-        |  0.0 + bin_id * ((500.0 - 0.0) / 50) AS lo_edge,
-        |  0.0 + (bin_id + 1) * ((500.0 - 0.0) / 50) AS hi_edge
-        |FROM b GROUP BY bin_id""".stripMargin,
-
-    // Twin of Profile.completeness(events): one SELECT per column with the
-    // same disjoint null/NaN/empty counters and Spark's simpleString dtype
-    // literals; ts is the normalized epoch-ns bigint in both engines.
-    // Twin of Profile.distinctProfile(p=10) over the five canonicalized
-    // event columns: same string-stacked values, exact distinct, and the
-    // sketch_hll register derivation (PolyHash -> idx/rho -> register max
-    // -> dyadic-exact power sum -> linear-counting small range).
-    "profile_distinct" -> {
-      val p = 10
-      val m = 1 << p
-      val bigW = 30 - p
-      val alpha = 0.7213 / (1.0 + 1.079 / m)
-      val bitLenSql = (bigW to 1 by -1)
-        .map(b => s"WHEN w >= ${1L << (b - 1)} THEN $b").mkString(" ")
-      val est = s"CAST($alpha AS DOUBLE) * $m * $m / (zs + ($m - n_registers_hit))"
-      s"""WITH base AS (SELECT CAST(event_id AS VARCHAR) AS c_event_id,
-         |  CAST(user_id AS VARCHAR) AS c_user_id,
-         |  event_type AS c_event_type,
-         |  CASE WHEN value IS NOT NULL AND NOT isnan(value)
-         |    THEN CAST(CAST(floor(value * 1000) AS BIGINT) AS VARCHAR)
-         |    END AS c_value_m,
-         |  props AS c_props FROM events),
-         |st AS (SELECT 'event_id' AS column_name, c_event_id AS v FROM base
-         |  UNION ALL SELECT 'user_id', c_user_id FROM base
-         |  UNION ALL SELECT 'event_type', c_event_type FROM base
-         |  UNION ALL SELECT 'value_m', c_value_m FROM base
-         |  UNION ALL SELECT 'props', c_props FROM base),
-         |nn AS (SELECT column_name, v FROM st WHERE v IS NOT NULL),
-         |ex AS (SELECT column_name, CAST(count(*) AS BIGINT) AS n_nonnull,
-         |  CAST(count(DISTINCT v) AS BIGINT) AS exact_distinct
-         |  FROM nn GROUP BY 1),
-         |ax AS (SELECT column_name, (${phSql("v", "0")}
-         |  * ${graft.pipeline.Sampling.saltMult("kmv")}
-         |  + ${graft.pipeline.Sampling.saltAdd("kmv")}) % 1000000007 AS mh
-         |  FROM (SELECT DISTINCT column_name, v FROM nn)),
-         |hx AS (SELECT column_name,
-         |  ${phSql("lpad(CAST(mh AS VARCHAR), 10, '0')", "0")} AS h FROM ax),
-         |rr AS (SELECT column_name, h & ${m - 1} AS idx, w,
-         |  ${bigW + 1} - (CASE $bitLenSql ELSE 0 END) AS rho
-         |  FROM (SELECT column_name, h, h >> $p AS w FROM hx)),
-         |rg AS (SELECT column_name, idx, max(rho) AS r FROM rr GROUP BY 1, 2),
-         |sk AS (SELECT column_name, CAST(count(*) AS BIGINT) AS n_registers_hit,
-         |  sum(power(2.0, -r)) AS zs FROM rg GROUP BY 1),
-         |he AS (SELECT column_name, n_registers_hit,
-         |  CASE WHEN $est <= ${2.5 * m} AND ($m - n_registers_hit) > 0
-         |    THEN $m * ln(CAST($m AS DOUBLE) / ($m - n_registers_hit))
-         |    ELSE $est END AS est_distinct
-         |  FROM sk)
-         |SELECT ex.column_name, ex.n_nonnull, ex.exact_distinct,
-         |  he.n_registers_hit, he.est_distinct,
-         |  (he.est_distinct - CAST(ex.exact_distinct AS DOUBLE))
-         |    / CAST(ex.exact_distinct AS DOUBLE) AS rel_error
-         |FROM ex JOIN he ON he.column_name = ex.column_name""".stripMargin
-    },
-    // Twin of Profile.crosstab(source × lang): one conditional count per
-    // pivot value — sum(CASE) comes back HUGEINT in DuckDB, cast to BIGINT
-    // to match Spark's pivot-count longs
-    "profile_crosstab" ->
-      ("SELECT source, " +
-        Seq("de", "en", "es", "fr", "zh").map(l =>
-          s"CAST(sum(CASE WHEN lang = '$l' THEN 1 ELSE 0 END) AS BIGINT) AS $l")
-          .mkString(", ") +
-        " FROM documents GROUP BY source"),
-    "profile_completeness" -> {
-      def row(name: String, dtype: String, nan: String, empty: String) =
-        s"""SELECT '$name' AS col_name, '$dtype' AS dtype,
-           |  CAST(count(*) AS BIGINT) AS n_total,
-           |  CAST(count(CASE WHEN $name IS NULL THEN 1 END) AS BIGINT) AS n_null,
-           |  CAST($nan AS BIGINT) AS n_nan, CAST($empty AS BIGINT) AS n_empty
-           |  FROM events""".stripMargin
-      def nanOf(c: String) = s"count(CASE WHEN $c IS NOT NULL AND isnan($c) THEN 1 END)"
-      def emptyOf(c: String) = s"count(CASE WHEN $c IS NOT NULL AND length($c) = 0 THEN 1 END)"
-      val rows = Seq(
-        row("event_id", "bigint", "0", "0"),
-        row("ts", "bigint", "0", "0"),
-        row("user_id", "bigint", "0", "0"),
-        row("event_type", "string", "0", emptyOf("event_type")),
-        row("value", "double", nanOf("value"), "0"),
-        row("props", "string", "0", emptyOf("props")))
-        .mkString("\nUNION ALL\n")
-      s"""WITH u AS (
-         |$rows)
-         |SELECT col_name, dtype, n_total, n_null, n_nan, n_empty,
-         |  CAST(n_total - n_null - n_nan - n_empty AS DOUBLE)
-         |    / CAST(n_total AS DOUBLE) AS complete_rate
-         |FROM u""".stripMargin
-    },
-    // Twin of Profile.benford(o_orderpriority, o_totalprice): the same
-    // integer-cents leading digit (round(v*100) → string head — integer
-    // rendering is engine-stable where float formatting is not), dense
-    // 9-digit grid, ln-ratio expected shares, literal chi-square boundary.
-    "profile_benford" ->
-      s"""WITH o AS (SELECT o_orderpriority AS grp,
-         |  CAST(round(o_totalprice * 100) AS BIGINT) AS cents FROM orders
-         |  WHERE o_totalprice IS NOT NULL),
-         |obs AS (SELECT grp,
-         |  CAST(substr(CAST(abs(cents) AS VARCHAR), 1, 1) AS INTEGER) AS digit,
-         |  CAST(count(*) AS BIGINT) AS n_obs FROM o WHERE cents <> 0
-         |  GROUP BY 1, 2),
-         |tot AS (SELECT grp, CAST(sum(n_obs) AS BIGINT) AS n_total
-         |  FROM obs GROUP BY 1),
-         |grid AS (SELECT g.grp, CAST(r.digit AS INTEGER) AS digit
-         |  FROM (SELECT DISTINCT grp FROM obs) g CROSS JOIN range(1, 10) r(digit)),
-         |dense AS (SELECT g.grp, g.digit, t.n_total,
-         |  CAST(coalesce(ob.n_obs, 0) AS BIGINT) AS n_obs,
-         |  ln(1.0 + 1.0 / CAST(g.digit AS DOUBLE)) / ln(10.0) AS exp_share
-         |  FROM grid g JOIN tot t ON t.grp = g.grp
-         |  LEFT JOIN obs ob ON ob.grp = g.grp AND ob.digit = g.digit),
-         |chi AS (SELECT grp, sum(
-         |  (CAST(n_obs AS DOUBLE) - CAST(n_total AS DOUBLE) * exp_share)
-         |  * (CAST(n_obs AS DOUBLE) - CAST(n_total AS DOUBLE) * exp_share)
-         |  / (CAST(n_total AS DOUBLE) * exp_share)) AS chi2 FROM dense GROUP BY 1)
-         |SELECT d.grp AS o_orderpriority, d.digit, d.n_total, d.n_obs,
-         |  CAST(d.n_obs AS DOUBLE) / CAST(d.n_total AS DOUBLE) AS obs_share,
-         |  d.exp_share, c.chi2,
-         |  c.chi2 > ${Profile.BenfordChiSq95Df8} AS reject_benford
-         |FROM dense d JOIN chi c ON c.grp = d.grp""".stripMargin,
-
-    // Twin of Profile.keySkew(user_id, topN=10): per-key counts, bounded
-    // top-10, integer-quotient shares.
-    "profile_key_skew" ->
-      """WITH c AS (SELECT CAST(user_id AS VARCHAR) AS key_value,
-        |  count(*) AS n_rows FROM events GROUP BY 1),
-        |tot AS (SELECT CAST(sum(n_rows) AS BIGINT) AS n_total,
-        |  count(*) AS n_distinct, max(n_rows) AS mx FROM c),
-        |top AS (SELECT key_value, n_rows,
-        |  CAST(row_number() OVER (ORDER BY n_rows DESC, key_value ASC) AS INTEGER) AS key_rank
-        |  FROM c ORDER BY n_rows DESC, key_value ASC LIMIT 10),
-        |ts AS (SELECT CAST(sum(n_rows) AS BIGINT) AS topn FROM top)
-        |SELECT key_rank, key_value, n_rows, n_rows / n_total AS share,
-        |  n_total, n_distinct, mx / n_total AS top1_share,
-        |  topn / n_total AS topn_share
-        |FROM top, tot, ts""".stripMargin,
-
-    // Twin of Profile.psiDrift(event_type, value, ts < T2, [0,500], 10):
-    // dense bin grid, add-one smoothed proportions, per-group PSI fold.
-    "profile_psi_drift" ->
-      s"""WITH v AS (SELECT event_type AS grp, CAST(value AS DOUBLE) AS v,
-         |  epoch_ns(ts) < $T2 AS in_a FROM events
-         |  WHERE value IS NOT NULL AND NOT isnan(value) AND ts IS NOT NULL),
-         |bb AS (SELECT grp, least(greatest(CAST(floor((v - 0.0) / 50.0) AS BIGINT), 0), 9) AS bin_id, in_a FROM v),
-         |c AS (SELECT grp, bin_id,
-         |  CAST(count(*) FILTER (WHERE in_a) AS BIGINT) AS ca,
-         |  CAST(count(*) FILTER (WHERE NOT in_a) AS BIGINT) AS cb
-         |  FROM bb GROUP BY 1, 2),
-         |tot AS (SELECT grp, CAST(sum(ca) AS BIGINT) AS na,
-         |  CAST(sum(cb) AS BIGINT) AS nb FROM c GROUP BY 1
-         |  HAVING na > 0 AND nb > 0),
-         |grid AS (SELECT grp, na, nb, CAST(unnest(range(0, 10)) AS BIGINT) AS bin_id FROM tot),
-         |fl AS (SELECT g.grp, g.na, g.nb,
-         |  coalesce(c.ca, 0) AS ca, coalesce(c.cb, 0) AS cb
-         |  FROM grid g LEFT JOIN c ON c.grp = g.grp AND c.bin_id = g.bin_id),
-         |t AS (SELECT grp, na, nb,
-         |  ((ca + 1) / (na + 10) - (cb + 1) / (nb + 10)) *
-         |    ln(((ca + 1) / (na + 10)) / ((cb + 1) / (nb + 10))) AS term,
-         |  CASE WHEN ca + cb > 0 THEN 1 ELSE 0 END AS present FROM fl)
-         |SELECT grp AS event_type, na AS n_a, nb AS n_b,
-         |  CAST(sum(present) AS BIGINT) AS n_bins_hit, sum(term) AS psi,
-         |  CASE WHEN sum(term) > 0.25 THEN 'major'
-         |    WHEN sum(term) > 0.1 THEN 'moderate' ELSE 'stable' END AS psi_flag
-         |FROM t GROUP BY 1, 2, 3""".stripMargin,
-
-    // Twin of Profile.ksDrift(event_type, value, ts < T2): per-value slice
-    // counts, cumulative CDF walk, exact sup-distance; every CDF step is
-    // one integer-quotient subtraction so the max is bit-stable.
-    "profile_ks_drift" ->
-      s"""WITH v AS (SELECT event_type AS grp, CAST(value AS DOUBLE) AS v,
-         |  epoch_ns(ts) < $T2 AS in_a FROM events
-         |  WHERE value IS NOT NULL AND ts IS NOT NULL),
-         |c AS (SELECT grp, v,
-         |  CAST(count(*) FILTER (WHERE in_a) AS BIGINT) AS ca,
-         |  CAST(count(*) FILTER (WHERE NOT in_a) AS BIGINT) AS cb
-         |  FROM v GROUP BY 1, 2),
-         |cum AS (SELECT grp, v,
-         |  CAST(sum(ca) OVER w AS BIGINT) AS cuma,
-         |  CAST(sum(cb) OVER w AS BIGINT) AS cumb
-         |  FROM c WINDOW w AS (PARTITION BY grp ORDER BY v)),
-         |tot AS (SELECT grp, CAST(sum(ca) AS BIGINT) AS na,
-         |  CAST(sum(cb) AS BIGINT) AS nb FROM c GROUP BY 1
-         |  HAVING na > 0 AND nb > 0)
-         |SELECT grp AS event_type, na AS n_a, nb AS n_b,
-         |  max(abs(cuma / na - cumb / nb)) AS ks_d,
-         |  1.358 * sqrt((CAST(na AS DOUBLE) + CAST(nb AS DOUBLE)) /
-         |    (CAST(na AS DOUBLE) * CAST(nb AS DOUBLE))) AS ks_crit,
-         |  max(abs(cuma / na - cumb / nb)) >
-         |    1.358 * sqrt((CAST(na AS DOUBLE) + CAST(nb AS DOUBLE)) /
-         |      (CAST(na AS DOUBLE) * CAST(nb AS DOUBLE))) AS drifted
-         |FROM cum JOIN tot USING (grp) GROUP BY 1, 2, 3""".stripMargin,
-
-    "ts_last_value" ->
-      s"""WITH points AS ($PointsCte)
-         |SELECT series_id, value AS last_value, ts AS last_ts FROM (
-         |  SELECT series_id, value, ts,
-         |         row_number() OVER (PARTITION BY series_id ORDER BY ts DESC, value DESC) AS rn
-         |  FROM points WHERE NOT isnan(value)) WHERE rn = 1""".stripMargin,
-    "ts_minmax" ->
-      s"""WITH points AS ($PointsCte)
-         |SELECT series_id,
-         |  min(value) FILTER (WHERE NOT isnan(value)) AS min_value,
-         |  max(value) FILTER (WHERE NOT isnan(value)) AS max_value,
-         |  count(*) FILTER (WHERE NOT isnan(value)) AS n_points
-         |FROM points GROUP BY 1""".stripMargin,
-    "ts_range_pad" ->
-      s"""WITH points AS ($PointsCte),
-         |mm AS (SELECT series_id,
-         |  min(value) FILTER (WHERE NOT isnan(value)) AS min_value,
-         |  max(value) FILTER (WHERE NOT isnan(value)) AS max_value
-         |FROM points GROUP BY 1)
-         |SELECT series_id, min_value, max_value,
-         |  CAST(floor(min_value - abs(max_value - min_value) * 0.2) AS DOUBLE) AS range_lower,
-         |  CAST(ceil(max_value + abs(max_value - min_value) * 0.2) AS DOUBLE) AS range_upper
-         |FROM mm""".stripMargin,
-    "ts_deltas" ->
-      s"""WITH points AS ($PointsCte)
-         |SELECT series_id, ts,
-         |  ts - lag(ts) OVER (PARTITION BY series_id ORDER BY ts, value) AS delta_ns
-         |FROM points""".stripMargin,
-    "ts_dt_mode" ->
-      s"""WITH points AS ($PointsCte),
-         |$DtModeCte
-         |SELECT series_id, dt_mode_ns FROM dmode""".stripMargin,
-    "ts_extend_axis" ->
-      s"""WITH points AS ($PointsCte),
-         |$DtModeCte,
-         |led AS (SELECT series_id, ts, value,
-         |  lead(ts) OVER (PARTITION BY series_id ORDER BY ts, value) AS next_ts FROM points)
-         |SELECT l.series_id, l.ts, l.value,
-         |  coalesce(l.next_ts, l.ts + coalesce(m.dt_mode_ns, 0)) AS valid_to
-         |FROM led l LEFT JOIN dmode m ON l.series_id = m.series_id""".stripMargin,
-    "ts_concat_chunks" ->
-      s"""WITH points AS ($PointsCte),
-         |f AS (SELECT series_id, ts, value, 0 AS gen FROM points WHERE ts >= $T0 AND ts < $T2),
-         |sd AS (SELECT series_id, ts, value + 100.0 AS value, 1 AS gen FROM points WHERE ts >= $T1 AND ts < $T3),
-         |u AS (SELECT * FROM f UNION ALL SELECT * FROM sd)
-         |SELECT series_id, ts, value FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY series_id, ts ORDER BY gen DESC, value DESC) AS rn
-         |  FROM u) WHERE rn = 1""".stripMargin,
-    "ts_step_expand" ->
-      s"""WITH points AS ($PointsCte),
-         |led AS (SELECT series_id, ts, value,
-         |  lead(ts) OVER (PARTITION BY series_id ORDER BY ts, value) AS next_ts FROM points)
-         |SELECT series_id, ts, value FROM led
-         |UNION ALL
-         |SELECT series_id, next_ts AS ts, value FROM led WHERE next_ts IS NOT NULL""".stripMargin,
-    "ts_display_ms" ->
-      s"""WITH points AS ($PointsCte)
-         |SELECT series_id, ts, value,
-         |  (ts + ${3600L * NsPerS}) / 1000000 AS display_ms FROM points""".stripMargin,
-    "ts_period_filter" ->
-      s"""WITH points AS ($PointsCte)
-         |SELECT series_id, ts, value FROM points WHERE ts >= $T1 AND ts < $T2""".stripMargin,
-    "ts_tail_limit" ->
-      s"""WITH points AS ($PointsCte)
-         |SELECT series_id, ts, value FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY series_id ORDER BY ts DESC, value DESC) AS rn
-         |  FROM points) WHERE rn <= 5""".stripMargin,
-    // Recursive Ramer-Douglas-Peucker as a recursive CTE: the working set is
-    // (series, lo, hi) chord segments; each step finds the segment's
-    // max-perpendicular-distance point via a correlated LATERAL (first-max
-    // tie-break on ts, point-distance fallback for degenerate chords) and
-    // splits when it exceeds the auto epsilon (n/30)*2. Kept points are the
-    // distinct segment endpoints. Exact twin of Rdp.simplify.
-    "ts_rdp" ->
-      s"""WITH RECURSIVE pts AS (
-         |  SELECT series_id, ts, value FROM ($PointsCte)
-         |  WHERE value IS NOT NULL AND NOT isnan(value)
-         |),
-         |eps AS (SELECT series_id, (count(*) / 30.0) * 2.0 AS e FROM pts GROUP BY 1),
-         |seg(series_id, lo, hi) AS (
-         |  SELECT series_id, min(ts), max(ts) FROM pts GROUP BY 1
-         |  UNION ALL
-         |  SELECT b.series_id, b.lo, b.hi
-         |  FROM seg s JOIN LATERAL (
-         |    WITH chord AS (
-         |      SELECT p1.value AS y1, p2.value AS y2,
-         |             CAST(s.lo AS DOUBLE) AS x1, CAST(s.hi AS DOUBLE) AS x2
-         |      FROM pts p1, pts p2
-         |      WHERE p1.series_id = s.series_id AND p1.ts = s.lo
-         |        AND p2.series_id = s.series_id AND p2.ts = s.hi
-         |    ),
-         |    best AS (
-         |      SELECT p.ts,
-         |        CASE WHEN sqrt((c.x2-c.x1)*(c.x2-c.x1) + (c.y2-c.y1)*(c.y2-c.y1)) = 0
-         |             THEN sqrt((p.ts-c.x1)*(p.ts-c.x1) + (p.value-c.y1)*(p.value-c.y1))
-         |             ELSE abs((c.y2-c.y1)*p.ts - (c.x2-c.x1)*p.value + c.x2*c.y1 - c.y2*c.x1)
-         |                  / sqrt((c.x2-c.x1)*(c.x2-c.x1) + (c.y2-c.y1)*(c.y2-c.y1))
-         |        END AS dist
-         |      FROM pts p, chord c
-         |      WHERE p.series_id = s.series_id AND p.ts > s.lo AND p.ts < s.hi
-         |      ORDER BY dist DESC, p.ts ASC LIMIT 1
-         |    )
-         |    SELECT s.series_id AS series_id, u.lo AS lo, u.hi AS hi
-         |    FROM best b2
-         |    CROSS JOIN (SELECT e FROM eps WHERE series_id = s.series_id) ee
-         |    CROSS JOIN (VALUES (1), (2)) v(side)
-         |    CROSS JOIN LATERAL (SELECT CASE WHEN v.side = 1 THEN s.lo ELSE b2.ts END AS lo,
-         |                               CASE WHEN v.side = 1 THEN b2.ts ELSE s.hi END AS hi) u
-         |    WHERE b2.dist > ee.e
-         |  ) b ON true
-         |),
-         |kept AS (
-         |  SELECT DISTINCT s.series_id, x.ts
-         |  FROM seg s CROSS JOIN (VALUES (1), (2)) w(k)
-         |  CROSS JOIN LATERAL (SELECT CASE WHEN w.k = 1 THEN s.lo ELSE s.hi END AS ts) x
-         |)
-         |SELECT k.series_id, k.ts, p.value
-         |FROM kept k JOIN pts p ON p.series_id = k.series_id AND p.ts = k.ts""".stripMargin,
-    "ts_resample" ->
-      s"""WITH points AS ($PointsCte)
-         |SELECT series_id, ts - ts % ${86400L * NsPerS} AS bucket_ts,
-         |  avg(value) FILTER (WHERE NOT isnan(value)) AS mean_value,
-         |  min(value) FILTER (WHERE NOT isnan(value)) AS min_value,
-         |  max(value) FILTER (WHERE NOT isnan(value)) AS max_value,
-         |  count(value) FILTER (WHERE NOT isnan(value)) AS n_points
-         |FROM points GROUP BY 1, 2""".stripMargin,
-    // Twin of SeriesOps.ohlc: DuckDB's ordered-aggregate first/last mirror
-    // min_by/max_by over the (ts, value) tuple exactly. `ts - ts % dt`
-    // matches Spark's pmod bucketing only because epoch-ns timestamps are
-    // non-negative here (same assumption as ts_resample/events_retention;
-    // a pre-1970 ts would bucket differently under truncated %).
-    "ts_ohlc" ->
-      s"""WITH points AS ($PointsCte),
-         |p AS (SELECT series_id, ts, value FROM points WHERE NOT isnan(value))
-         |SELECT series_id, ts - ts % ${86400L * NsPerS} AS bucket_ts,
-         |  first(value ORDER BY ts, value) AS open,
-         |  max(value) AS high, min(value) AS low,
-         |  last(value ORDER BY ts, value) AS close,
-         |  CAST(count(*) AS BIGINT) AS n_points
-         |FROM p GROUP BY 1, 2""".stripMargin,
-    // Twin of SeriesOps.winsorize: same exact quantiles, same clamp order.
-    "ts_winsorize" ->
-      s"""WITH points AS ($PointsCte),
-         |p AS (SELECT series_id, ts, value FROM points WHERE NOT isnan(value)),
-         |q AS (SELECT series_id, quantile_cont(value, 0.05) AS qlo,
-         |  quantile_cont(value, 0.95) AS qhi FROM p GROUP BY 1)
-         |SELECT p.series_id, p.ts, p.value,
-         |  least(greatest(p.value, q.qlo), q.qhi) AS value_winsorized,
-         |  (p.value < q.qlo OR p.value > q.qhi) AS is_clipped
-         |FROM p JOIN q USING (series_id)""".stripMargin,
-    "ts_rolling" ->
-      s"""WITH points AS ($PointsCte)
-         |SELECT series_id, ts, value,
-         |  avg(CASE WHEN NOT isnan(value) THEN value END) OVER w AS roll_mean,
-         |  min(CASE WHEN NOT isnan(value) THEN value END) OVER w AS roll_min,
-         |  max(CASE WHEN NOT isnan(value) THEN value END) OVER w AS roll_max,
-         |  count(CASE WHEN NOT isnan(value) THEN value END) OVER w AS roll_n
-         |FROM points WINDOW w AS (PARTITION BY series_id ORDER BY ts
-         |  RANGE BETWEEN ${3 * 86400L * NsPerS} PRECEDING AND CURRENT ROW)""".stripMargin,
-    // Twin of SeriesOps.interpolate — the SAME sorted-union-window shape
-    // (linear, no per-grid-point probes) so it also finishes at sf0.1; the
-    // CASE/lerp arithmetic mirrors the Spark expression order exactly.
-    "ts_interpolate" -> {
-      val dt = 86400L * NsPerS
-      s"""WITH points AS ($PointsCte),
-         |pts AS (SELECT series_id, ts, value FROM points WHERE NOT isnan(value)),
-         |b AS (SELECT series_id, min(ts) AS t0, max(ts) AS t1 FROM pts GROUP BY 1),
-         |grid AS (SELECT series_id,
-         |  unnest(range(t0 + (($dt - t0 % $dt) % $dt), t1 - t1 % $dt + 1, $dt)) AS ts FROM b),
-         |u AS (SELECT series_id, ts, value, 0 AS grid FROM pts
-         |      UNION ALL SELECT series_id, ts, NULL AS value, 1 AS grid FROM grid),
-         |w AS (SELECT *,
-         |  last_value(CASE WHEN grid = 0 THEN ts END IGNORE NULLS) OVER wb AS pt,
-         |  last_value(CASE WHEN grid = 0 THEN value END IGNORE NULLS) OVER wb AS pv,
-         |  first_value(CASE WHEN grid = 0 THEN ts END IGNORE NULLS) OVER wf AS nt,
-         |  first_value(CASE WHEN grid = 0 THEN value END IGNORE NULLS) OVER wf AS nv
-         |  FROM u WINDOW
-         |    wb AS (PARTITION BY series_id ORDER BY ts, grid, value ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-         |    wf AS (PARTITION BY series_id ORDER BY ts, grid, value ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-         |SELECT series_id, ts, CASE WHEN pt = ts THEN pv
-         |  ELSE pv + (nv - pv) * (ts - pt) / (nt - pt) END AS value
-         |FROM w WHERE grid = 1""".stripMargin
-    },
-    "ts_anomaly" ->
-      s"""WITH points AS ($PointsCte),
-         |p AS (SELECT series_id, ts, value FROM points WHERE NOT isnan(value)),
-         |st AS (SELECT *, avg(value) OVER w AS m, stddev_samp(value) OVER w AS s
-         |  FROM p WINDOW w AS (PARTITION BY series_id))
-         |SELECT series_id, ts, value,
-         |  CASE WHEN s > 0 THEN (value - m) / s END AS z_score,
-         |  coalesce(CASE WHEN s > 0 THEN abs((value - m) / s) > 3.0 END, false) AS is_anomaly
-         |FROM st""".stripMargin,
-    "ts_percentiles" ->
-      s"""WITH points AS ($PointsCte)
-         |SELECT series_id, CAST(count(*) AS BIGINT) AS n_points,
-         |  quantile_cont(value, 0.5) AS p50,
-         |  quantile_cont(value, 0.9) AS p90,
-         |  quantile_cont(value, 0.99) AS p99
-         |FROM points WHERE NOT isnan(value) GROUP BY 1""".stripMargin,
-    // Twin of SeriesOps.outliersMad: same two grouped medians, same
-    // Iglewicz–Hoaglin 0.6745 score with the 1.253314·meanAD fallback,
-    // same operation order; is_outlier mirrors coalesce(|score| > k,
-    // false). Constants CAST to DOUBLE so DuckDB does not fold them in
-    // DECIMAL arithmetic.
-    "ts_outlier_mad" ->
-      s"""WITH points AS ($PointsCte),
-         |p AS (SELECT series_id, ts, value FROM points WHERE NOT isnan(value)),
-         |med AS (SELECT series_id, quantile_cont(value, 0.5) AS med FROM p GROUP BY 1),
-         |mad AS (SELECT p.series_id, quantile_cont(abs(p.value - med.med), 0.5) AS mad,
-         |  avg(abs(p.value - med.med)) AS meanad
-         |  FROM p JOIN med USING (series_id) GROUP BY 1)
-         |SELECT p.series_id, p.ts, p.value,
-         |  CASE WHEN mad.mad > 0
-         |    THEN CAST(0.6745 AS DOUBLE) * (p.value - med.med) / mad.mad
-         |  WHEN mad.meanad > 0
-         |    THEN (p.value - med.med) / (CAST(1.253314 AS DOUBLE) * mad.meanad)
-         |  END AS mad_score,
-         |  coalesce(abs(CASE WHEN mad.mad > 0
-         |    THEN CAST(0.6745 AS DOUBLE) * (p.value - med.med) / mad.mad
-         |  WHEN mad.meanad > 0
-         |    THEN (p.value - med.med) / (CAST(1.253314 AS DOUBLE) * mad.meanad)
-         |  END) > 3.5, false) AS is_outlier
-         |FROM p JOIN med USING (series_id) JOIN mad USING (series_id)""".stripMargin,
-    // Twin of SeriesOps.ewma: identical trailing-window list, weight
-    // exponents (DuckDB's lambda index is 1-based: len−i == Spark's
-    // size−1−i over a 0-based i), seeded left fold, and closed-form
-    // denominator — with α = 0.5 every step is exact binary scaling, so
-    // the two engines agree bit for bit.
-    "ts_ewma" ->
-      s"""WITH points AS ($PointsCte),
-         |p AS (SELECT series_id, ts, value FROM points WHERE NOT isnan(value)),
-         |w AS (SELECT series_id, ts, value,
-         |  list(value) OVER (PARTITION BY series_id ORDER BY ts, value
-         |    ROWS BETWEEN 15 PRECEDING AND CURRENT ROW) AS lst FROM p)
-         |SELECT series_id, ts, value,
-         |  list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |      list_transform(lst, (x, i) -> x * pow(CAST(0.5 AS DOUBLE), len(lst) - i))),
-         |    (a, b) -> a + b)
-         |  / ((CAST(1 AS DOUBLE) - pow(CAST(0.5 AS DOUBLE), len(lst)))
-         |     / (CAST(1 AS DOUBLE) - CAST(0.5 AS DOUBLE))) AS ewma
-         |FROM w""".stripMargin,
-    // Twin of SeriesOps.holt(α=β=0.5, horizon=3): the [level, trend] pair
-    // rides a 2-element DOUBLE list through list_reduce (first element =
-    // the [x_1, 0] init), same expression shape per step as the Spark
-    // fold; DuckDB's list is built with the same (ts, value) order.
-    "ts_holt" ->
-      s"""WITH points AS ($PointsCte),
-         |p AS (SELECT series_id, ts, value FROM points WHERE NOT isnan(value)),
-         |g AS (SELECT series_id, list(value ORDER BY ts, value) AS vs FROM p GROUP BY 1),
-         |st AS (SELECT series_id, CAST(len(vs) AS BIGINT) AS n_points,
-         |  list_reduce(list_transform(vs, x -> [x, CAST(0 AS DOUBLE)]),
-         |    (a, e) -> [CAST(0.5 AS DOUBLE) * e[1]
-         |        + CAST(0.5 AS DOUBLE) * (a[1] + a[2]),
-         |      CAST(0.5 AS DOUBLE) * ((CAST(0.5 AS DOUBLE) * e[1]
-         |          + CAST(0.5 AS DOUBLE) * (a[1] + a[2])) - a[1])
-         |        + CAST(0.5 AS DOUBLE) * a[2]]) AS acc
-         |  FROM g)
-         |SELECT series_id, n_points, acc[1] AS level, acc[2] AS trend,
-         |  CAST(h AS BIGINT) AS h, acc[1] + h * acc[2] AS forecast
-         |FROM st CROSS JOIN range(1, 4) r(h)""".stripMargin,
-    // Twin of SeriesOps.holtWinters(m=4, α=β=γ=0.5): same rotated-seasonal
-    // fold over the same pinned (ts, value) sort — the state list is
-    // [l, b, s1..s4], each step consumes a[3] and appends the refreshed
-    // slot; l1 is re-derived inline where referenced (no lateral state).
-    "ts_holtwinters" ->
-      s"""WITH points AS ($PointsCte),
-         |p AS (SELECT series_id, ts, value FROM points WHERE NOT isnan(value)),
-         |g AS (SELECT series_id, list(value ORDER BY ts, value) AS vs FROM p GROUP BY 1),
-         |st AS (SELECT series_id, CAST(len(vs) AS BIGINT) AS n_points,
-         |  list_reduce(list_transform(vs, x -> [x, CAST(0 AS DOUBLE),
-         |      CAST(0 AS DOUBLE), CAST(0 AS DOUBLE), CAST(0 AS DOUBLE),
-         |      CAST(0 AS DOUBLE)]),
-         |    (a, e) -> [
-         |      CAST(0.5 AS DOUBLE) * (e[1] - a[3])
-         |        + CAST(0.5 AS DOUBLE) * (a[1] + a[2]),
-         |      CAST(0.5 AS DOUBLE) * ((CAST(0.5 AS DOUBLE) * (e[1] - a[3])
-         |          + CAST(0.5 AS DOUBLE) * (a[1] + a[2])) - a[1])
-         |        + CAST(0.5 AS DOUBLE) * a[2],
-         |      a[4], a[5], a[6],
-         |      CAST(0.5 AS DOUBLE) * (e[1] - (CAST(0.5 AS DOUBLE) * (e[1] - a[3])
-         |          + CAST(0.5 AS DOUBLE) * (a[1] + a[2])))
-         |        + CAST(0.5 AS DOUBLE) * a[3]]) AS acc
-         |  FROM g)
-         |SELECT series_id, n_points, acc[1] AS level, acc[2] AS trend,
-         |  CAST(h AS BIGINT) AS h,
-         |  acc[1] + h * acc[2] + acc[CAST(2 + h AS INTEGER)] AS forecast
-         |FROM st CROSS JOIN range(1, 5) r(h)""".stripMargin,
-    // Twin of SeriesOps.changepoint: same three window passes (unordered
-    // moments, ordered running CUSUM, peak rank with the same tie-breaks).
-    "ts_changepoint" ->
-      s"""WITH points AS ($PointsCte),
-         |p AS (SELECT series_id, ts, value FROM points WHERE NOT isnan(value)),
-         |m AS (SELECT series_id, ts, value,
-         |  avg(value) OVER (PARTITION BY series_id) AS mean_value,
-         |  CAST(count(*) OVER (PARTITION BY series_id) AS BIGINT) AS n_points FROM p),
-         |c AS (SELECT *, sum(value - mean_value) OVER (PARTITION BY series_id
-         |  ORDER BY ts, value ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cusum
-         |  FROM m),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY series_id
-         |  ORDER BY abs(cusum) DESC, ts ASC, cusum ASC) AS rk FROM c)
-         |SELECT series_id, ts AS cp_ts, cusum AS cp_cusum, mean_value, n_points
-         |FROM r WHERE rk = 1""".stripMargin,
-    // Twin of SeriesOps.peaks: raw-double neighbor comparisons, no
-    // accumulation — the discrete peak set cannot drift between engines.
-    "ts_peaks" ->
-      s"""WITH points AS ($PointsCte),
-         |p AS (SELECT series_id, ts, value FROM points WHERE NOT isnan(value)),
-         |n AS (SELECT series_id, ts, value,
-         |  lag(value) OVER win AS prev_value, lead(value) OVER win AS next_value
-         |  FROM p WINDOW win AS (PARTITION BY series_id ORDER BY ts, value))
-         |SELECT series_id, ts, value, prev_value, next_value FROM n
-         |WHERE prev_value IS NOT NULL AND next_value IS NOT NULL
-         |  AND value > prev_value AND value > next_value
-         |  AND value - prev_value >= CAST(5 AS DOUBLE)
-         |  AND value - next_value >= CAST(5 AS DOUBLE)""".stripMargin,
-    // Twin of SeriesOps.monthly: same +1h display shift, same calendar
-    // month truncation (Spark's session tz is pinned UTC, so date_trunc
-    // agrees with DuckDB's naive timestamps).
-    // Twin of SeriesOps.degreeDays(base 17): same NaN-ignoring daily mean,
-    // same UTC month truncation, same max(0, ·) integrands.
-    "ts_degree_days" ->
-      s"""WITH points AS ($PointsCte),
-         |d AS (SELECT series_id, ts - ts % 86400000000000 AS bucket_ts,
-         |  avg(CASE WHEN NOT isnan(value) THEN value END) AS mean_value
-         |  FROM points GROUP BY 1, 2),
-         |m AS (SELECT series_id,
-         |  epoch_us(date_trunc('month', make_timestamp(bucket_ts // 1000))) AS month_start_us,
-         |  mean_value FROM d WHERE mean_value IS NOT NULL)
-         |SELECT series_id, month_start_us, CAST(count(*) AS BIGINT) AS n_days,
-         |  sum(greatest(CAST(0 AS DOUBLE), 17.0 - mean_value)) AS hdd,
-         |  sum(greatest(CAST(0 AS DOUBLE), mean_value - 17.0)) AS cdd
-         |FROM m GROUP BY 1, 2""".stripMargin,
-    "ts_monthly" ->
-      s"""WITH points AS ($PointsCte)
-         |SELECT series_id,
-         |  epoch_us(date_trunc('month', make_timestamp((ts + ${3600L * NsPerS}) // 1000))) AS month_start_us,
-         |  CAST(count(*) AS BIGINT) AS n_points,
-         |  avg(value) AS mean_value, min(value) AS min_value, max(value) AS max_value
-         |FROM points WHERE NOT isnan(value) GROUP BY 1, 2""".stripMargin,
-    // Twin of SeriesOps.monthlyTz: ICU AT TIME ZONE both ways — naive-UTC →
-    // zone wall clock, truncate to the local month, re-anchor the local
-    // month start to its UTC instant. Spark's JVM tzdb and DuckDB's ICU
-    // agree on the IANA rules.
-    "ts_monthly_tz" ->
-      s"""WITH points AS ($PointsCte)
-         |SELECT series_id,
-         |  epoch_us((date_trunc('month',
-         |    (make_timestamp(ts // 1000) AT TIME ZONE 'UTC') AT TIME ZONE 'Europe/Oslo'))
-         |    AT TIME ZONE 'Europe/Oslo') AS month_start_us,
-         |  CAST(count(*) AS BIGINT) AS n_points,
-         |  avg(value) AS mean_value, min(value) AS min_value, max(value) AS max_value
-         |FROM points WHERE NOT isnan(value) GROUP BY 1, 2""".stripMargin,
-    // Twin of SeriesOps.autocorr: same per-lag lagged pairs (one window
-    // per lag constant — DuckDB's lag() offset must be a literal), same
-    // co-moment closed form as ts_corr.
-    "ts_autocorr" -> {
-      // one named window per branch: DuckDB scopes WINDOW names across
-      // the whole set operation, so re-using `win` is a parse error
-      def lagSel(l: Int) =
-        s"""SELECT series_id, $l AS lag, lag(value, $l) OVER win$l AS x, value AS y
-           |  FROM p WINDOW win$l AS (PARTITION BY series_id ORDER BY ts, value)""".stripMargin
-      s"""WITH points AS ($PointsCte),
-         |p AS (SELECT series_id, ts, value FROM points WHERE NOT isnan(value)),
-         |lagged AS (
-         |${lagSel(1)}
-         |UNION ALL
-         |${lagSel(2)}
-         |UNION ALL
-         |${lagSel(3)}),
-         |s AS (SELECT series_id, lag, CAST(count(*) AS BIGINT) AS n_pairs,
-         |  sum(x) AS sx, sum(y) AS sy, sum(x * x) AS sxx,
-         |  sum(y * y) AS syy, sum(x * y) AS sxy
-         |  FROM lagged WHERE x IS NOT NULL GROUP BY 1, 2)
-         |SELECT series_id, lag, n_pairs,
-         |  CASE WHEN CAST(n_pairs AS DOUBLE) * sxx - sx * sx > 0
-         |        AND CAST(n_pairs AS DOUBLE) * syy - sy * sy > 0
-         |    THEN (CAST(n_pairs AS DOUBLE) * sxy - sx * sy)
-         |      / sqrt((CAST(n_pairs AS DOUBLE) * sxx - sx * sx)
-         |           * (CAST(n_pairs AS DOUBLE) * syy - sy * sy)) END AS acf
-         |FROM s""".stripMargin
-    },
-    // Twin of SeriesOps.pacf(maxLag = 6): the same textbook ACF body, then
-    // the Durbin-Levinson recursion unrolled as one LINEAR CTE chain (each
-    // step referenced once — no MATERIALIZED needed): per step, the same
-    // seeded-0.0 inner folds, the same reflection, 1-based list indices
-    // mapping Spark's 0-based lambda index via i_duck = i_spark + 1.
-    "ts_pacf" -> {
-      def lagSel(l: Int) =
-        s"""SELECT series_id, mean, denom, $l AS lag,
-           |  lag(value, $l) OVER lwin$l AS x, value AS y FROM ct
-           |  WINDOW lwin$l AS (PARTITION BY series_id ORDER BY ts, value)""".stripMargin
-      def sumFold(terms: String) =
-        s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), $terms), (a, c) -> a + c)"
-      def step(k: Int) = {
-        val sumA = sumFold(s"list_transform(phi, (x, i) -> x * rhos[$k - i])")
-        val sumB = sumFold("list_transform(phi, (x, i) -> x * rhos[i])")
-        val pkk = "(num / den)"
-        s"""q$k AS (SELECT series_id, rhos, phi, pk,
-           |  CASE WHEN $k <= len(rhos) THEN rhos[$k] - $sumA END AS num,
-           |  CASE WHEN $k <= len(rhos) THEN 1.0 - $sumB END AS den
-           |  FROM p${k - 1}),
-           |p$k AS (SELECT series_id, rhos,
-           |  CASE WHEN $k <= len(rhos)
-           |    THEN list_append(list_transform(phi, (x, i) -> x - $pkk * phi[$k - i]), $pkk)
-           |    ELSE phi END AS phi,
-           |  CASE WHEN $k <= len(rhos) THEN list_append(pk, $pkk) ELSE pk END AS pk
-           |  FROM q$k)""".stripMargin
-      }
-      s"""WITH points AS ($PointsCte),
-         |p AS (SELECT series_id, ts, value FROM points WHERE NOT isnan(value)),
-         |st AS (SELECT series_id, ts, value,
-         |  avg(value) OVER (PARTITION BY series_id) AS mean FROM p),
-         |ct AS (SELECT *, sum((value - mean) * (value - mean))
-         |    OVER (PARTITION BY series_id) AS denom FROM st),
-         |lagged AS (
-         |${(1 to 6).map(lagSel).mkString("\nUNION ALL\n")}),
-         |s AS (SELECT series_id, lag, max(denom) AS denom,
-         |  sum((y - mean) * (x - mean)) AS num
-         |  FROM lagged WHERE x IS NOT NULL AND denom > 0 GROUP BY 1, 2),
-         |r AS (SELECT series_id, list(num / denom ORDER BY lag) AS rhos
-         |  FROM s GROUP BY 1),
-         |p0 AS (SELECT series_id, rhos, CAST([] AS DOUBLE[]) AS phi,
-         |  CAST([] AS DOUBLE[]) AS pk FROM r),
-         |${(1 to 6).map(step).mkString(",\n")}
-         |SELECT series_id, CAST(u.i AS INTEGER) AS lag,
-         |  rhos[CAST(u.i AS INTEGER)] AS rho, pk[CAST(u.i AS INTEGER)] AS pacf
-         |FROM p6 CROSS JOIN range(1, 7) u(i) WHERE u.i <= len(pk)""".stripMargin
-    },
-    // Twin of SeriesOps.ljungBox(maxLag = 6): same full-series-mean ACF
-    // (autocovariance numerator over the Σ(x−x̄)² denominator), same
-    // adaptive df = count of lags with ≥ 1 pair, same literal χ² table.
-    "ts_ljungbox" -> {
-      def lagSel(l: Int) =
-        s"""SELECT series_id, n, mean, denom, $l AS lag,
-           |  lag(value, $l) OVER lwin$l AS x, value AS y FROM ct
-           |  WINDOW lwin$l AS (PARTITION BY series_id ORDER BY ts, value)""".stripMargin
-      val crit = SeriesOps.ChiSq95.zipWithIndex
-        .map { case (c, i) => s"WHEN ${i + 1} THEN $c" }.mkString(" ")
-      s"""WITH points AS ($PointsCte),
-         |p AS (SELECT series_id, ts, value FROM points WHERE NOT isnan(value)),
-         |st AS (SELECT series_id, ts, value,
-         |  CAST(count(*) OVER (PARTITION BY series_id) AS BIGINT) AS n,
-         |  avg(value) OVER (PARTITION BY series_id) AS mean FROM p),
-         |ct AS (SELECT *, sum((value - mean) * (value - mean))
-         |    OVER (PARTITION BY series_id) AS denom FROM st),
-         |lagged AS (
-         |${(1 to 6).map(lagSel).mkString("\nUNION ALL\n")}),
-         |s AS (SELECT series_id, lag, max(n) AS n, max(denom) AS denom,
-         |  sum((y - mean) * (x - mean)) AS num
-         |  FROM lagged WHERE x IS NOT NULL GROUP BY 1, 2),
-         |a AS (SELECT series_id, max(n) AS n_points,
-         |  CAST(count(*) AS BIGINT) AS df,
-         |  max(CASE WHEN denom > 0 THEN 0.0 ELSE 1.0 END) AS degen,
-         |  sum(CASE WHEN denom > 0 THEN (num / denom) * (num / denom)
-         |    / (CAST(n AS DOUBLE) - CAST(lag AS DOUBLE)) END) AS sm
-         |  FROM s GROUP BY 1)
-         |SELECT series_id, n_points, df,
-         |  CASE WHEN degen = 0.0 THEN CAST(n_points AS DOUBLE)
-         |    * (CAST(n_points AS DOUBLE) + 2.0) * sm END AS q_stat,
-         |  CASE WHEN degen = 0.0 THEN (CAST(n_points AS DOUBLE)
-         |    * (CAST(n_points AS DOUBLE) + 2.0) * sm)
-         |    > (CASE df $crit END) END AS reject_white_noise
-         |FROM a""".stripMargin
-    },
-    // Twin of SeriesOps.trend: identical co-moment algebra, identical
-    // ts/1e9 seconds conversion and operation order.
-    "ts_trend" ->
-      s"""WITH points AS ($PointsCte),
-         |p AS (SELECT series_id, ts / 1e9 AS t, value AS y FROM points
-         |  WHERE NOT isnan(value)),
-         |s AS (SELECT series_id, CAST(count(*) AS BIGINT) AS n_points,
-         |  sum(t) AS st, sum(y) AS sy, sum(t * t) AS stt,
-         |  sum(y * y) AS syy, sum(t * y) AS sty
-         |  FROM p GROUP BY 1)
-         |SELECT series_id, n_points,
-         |  CASE WHEN CAST(n_points AS DOUBLE) * stt - st * st > 0
-         |    THEN (CAST(n_points AS DOUBLE) * sty - st * sy)
-         |       / (CAST(n_points AS DOUBLE) * stt - st * st) END AS slope,
-         |  CASE WHEN CAST(n_points AS DOUBLE) * stt - st * st > 0
-         |    THEN (sy - ((CAST(n_points AS DOUBLE) * sty - st * sy)
-         |               / (CAST(n_points AS DOUBLE) * stt - st * st)) * st)
-         |       / CAST(n_points AS DOUBLE) END AS intercept,
-         |  CASE WHEN CAST(n_points AS DOUBLE) * stt - st * st > 0
-         |        AND CAST(n_points AS DOUBLE) * syy - sy * sy > 0
-         |    THEN ((CAST(n_points AS DOUBLE) * sty - st * sy)
-         |        * (CAST(n_points AS DOUBLE) * sty - st * sy))
-         |       / ((CAST(n_points AS DOUBLE) * stt - st * st)
-         |        * (CAST(n_points AS DOUBLE) * syy - sy * sy)) END AS r2
-         |FROM s""".stripMargin,
-
-    // Twin of SeriesOps.theilSen: the same t1 < t2 pair slopes, the same
-    // explicit selection median (rows (n+1)//2 and n//2+1 of the sorted
-    // multiset, averaged), residual median for the intercept.
-    // Twin of SeriesOps.periodogram(day, maxFreq=5): the per-series
-    // TIME-SORTED value list, the same fold order for mean and trig sums
-    // (a plain SUM's accumulation order wobbles at the 9th digit between
-    // runs), DuckDB's 1-based lambda index mapped to the 0-based DFT
-    // position, the same ((2·pi)·j·t)/n angle tree.
-    "ts_spectral" ->
-      s"""WITH points AS ($PointsCte),
-         |b AS (SELECT series_id, ts - ts % ${86400L * NsPerS} AS bucket_ts,
-         |  avg(value) FILTER (WHERE NOT isnan(value)) AS mv FROM points GROUP BY 1, 2),
-         |nb AS (SELECT * FROM b WHERE mv IS NOT NULL),
-         |g AS (SELECT series_id, list(mv ORDER BY bucket_ts) AS vs FROM nb GROUP BY 1),
-         |gm AS (SELECT series_id, vs, CAST(j AS INTEGER) AS freq,
-         |  list_reduce(list_prepend(CAST(0 AS DOUBLE), vs), (a, x) -> a + x)
-         |    / len(vs) AS mu
-         |  FROM g CROSS JOIN range(1, 6) r(j)),
-         |f AS (SELECT series_id, freq, CAST(len(vs) AS BIGINT) AS n_points,
-         |  list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(vs, (x, i) ->
-         |    (x - mu) * cos(2 * pi() * freq * (i - 1) / len(vs)))), (a, y) -> a + y) AS sc,
-         |  list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(vs, (x, i) ->
-         |    (x - mu) * sin(2 * pi() * freq * (i - 1) / len(vs)))), (a, y) -> a + y) AS ss
-         |  FROM gm)
-         |SELECT series_id, freq, n_points, sc * sc + ss * ss AS power FROM f""".stripMargin,
-
-    // Twin of SeriesOps.sax(day, w=8): same time-sorted bucket-mean list,
-    // same pinned mean/variance/segment folds, same floor segment bounds
-    // and Gaussian breakpoints; list slices are 1-based inclusive where
-    // Spark's slice takes (start, len).
-    "ts_sax" -> {
-      val n = "len(vs)"
-      val seg = s"vs[CAST((j * $n) // 8 AS INTEGER) + 1 : CAST(((j + 1) * $n) // 8 AS INTEGER)]"
-      val segLen = s"(((j + 1) * $n) // 8 - (j * $n) // 8)"
-      val segSum = s"list_reduce(list_prepend(CAST(0 AS DOUBLE), $seg), (a, x) -> a + x)"
-      val z = s"((($segSum) / $segLen) - mu) / sdv"
-      val sym = s"CASE WHEN sdv = CAST(0 AS DOUBLE) THEN 'c' " +
-        s"WHEN $z < CAST(-0.6745 AS DOUBLE) THEN 'a' WHEN $z < CAST(0 AS DOUBLE) THEN 'b' " +
-        s"WHEN $z < CAST(0.6745 AS DOUBLE) THEN 'c' ELSE 'd' END"
-      s"""WITH points AS ($PointsCte),
-         |b AS (SELECT series_id, ts - ts % ${86400L * NsPerS} AS bucket_ts,
-         |  avg(value) FILTER (WHERE NOT isnan(value)) AS mv FROM points GROUP BY 1, 2),
-         |nb AS (SELECT * FROM b WHERE mv IS NOT NULL),
-         |g AS (SELECT series_id, list(mv ORDER BY bucket_ts) AS vs FROM nb GROUP BY 1),
-         |gw AS (SELECT * FROM g WHERE len(vs) >= 8),
-         |sx AS (SELECT series_id, vs,
-         |  list_reduce(list_prepend(CAST(0 AS DOUBLE), vs), (a, x) -> a + x)
-         |    / len(vs) AS mu FROM gw),
-         |sdt AS (SELECT series_id, vs, mu,
-         |  sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |    list_transform(vs, x -> (x - mu) * (x - mu))), (a, x) -> a + x)
-         |    / len(vs)) AS sdv FROM sx)
-         |SELECT series_id, CAST(len(vs) AS BIGINT) AS n_points,
-         |  list_reduce(list_transform(range(0, 8), j -> $sym), (a, b) -> a || b)
-         |    AS sax_word
-         |FROM sdt""".stripMargin
-    },
-    // Twin of SeriesOps.mannKendall: integer S over time-ordered pairs,
-    // tie-corrected variance, continuity-corrected z, 5% two-sided trend.
-    "ts_mannkendall" ->
-      s"""WITH points AS ($PointsCte),
-         |p AS (SELECT series_id, ts, value FROM points WHERE NOT isnan(value)),
-         |s AS (SELECT a.series_id,
-         |  CAST(sum(CAST(sign(b.value - a.value) AS BIGINT)) AS BIGINT) AS s_stat
-         |  FROM p a JOIN p b ON a.series_id = b.series_id AND a.ts < b.ts
-         |  GROUP BY 1),
-         |nt AS (SELECT series_id, CAST(count(*) AS BIGINT) AS n_points FROM p GROUP BY 1),
-         |tt AS (SELECT series_id, sum(tk * (tk - 1) * (tk * 2 + 5)) AS tie_term FROM (
-         |  SELECT series_id, CAST(count(*) AS BIGINT) AS tk FROM p GROUP BY series_id, value)
-         |  WHERE tk > 1 GROUP BY 1),
-         |v AS (SELECT nt.series_id, nt.n_points,
-         |  coalesce(s.s_stat, CAST(0 AS BIGINT)) AS s_stat,
-         |  CAST(nt.n_points * (nt.n_points - 1) * (nt.n_points * 2 + 5)
-         |    - coalesce(tt.tie_term, CAST(0 AS BIGINT)) AS DOUBLE)
-         |    / CAST(18 AS DOUBLE) AS var_s
-         |  FROM nt LEFT JOIN s ON s.series_id = nt.series_id
-         |  LEFT JOIN tt ON tt.series_id = nt.series_id),
-         |zt AS (SELECT series_id, n_points, s_stat, var_s,
-         |  CASE WHEN s_stat > 0 THEN CAST(s_stat - 1 AS DOUBLE) / sqrt(var_s)
-         |       WHEN s_stat < 0 THEN CAST(s_stat + 1 AS DOUBLE) / sqrt(var_s)
-         |       ELSE CAST(0 AS DOUBLE) END AS z FROM v)
-         |SELECT series_id, n_points, s_stat, var_s, z,
-         |  CASE WHEN z > CAST(1.96 AS DOUBLE) THEN 'increasing'
-         |       WHEN z < CAST(-1.96 AS DOUBLE) THEN 'decreasing'
-         |       ELSE 'none' END AS trend
-         |FROM zt""".stripMargin,
-
-    "ts_theilsen" ->
-      s"""WITH points AS ($PointsCte),
-         |p AS (SELECT series_id, ts / 1e9 AS t, value AS y FROM points
-         |  WHERE NOT isnan(value)),
-         |pr AS (SELECT a.series_id, (b.y - a.y) / (b.t - a.t) AS m
-         |  FROM p a JOIN p b ON a.series_id = b.series_id AND a.t < b.t),
-         |rk AS (SELECT series_id, m,
-         |  row_number() OVER (PARTITION BY series_id ORDER BY m) AS rn,
-         |  count(*) OVER (PARTITION BY series_id) AS n FROM pr),
-         |sl AS (SELECT series_id, sum(m) / count(*) AS slope,
-         |  CAST(max(n) AS BIGINT) AS n_pairs
-         |  FROM rk WHERE rn = (n + 1) // 2 OR rn = n // 2 + 1 GROUP BY 1),
-         |r AS (SELECT p.series_id, p.y - sl.slope * p.t AS res
-         |  FROM p JOIN sl USING (series_id)),
-         |rr AS (SELECT series_id, res,
-         |  row_number() OVER (PARTITION BY series_id ORDER BY res) AS rn,
-         |  count(*) OVER (PARTITION BY series_id) AS n FROM r),
-         |ic AS (SELECT series_id, sum(res) / count(*) AS intercept,
-         |  CAST(max(n) AS BIGINT) AS n_points FROM rr
-         |  WHERE rn = (n + 1) // 2 OR rn = n // 2 + 1 GROUP BY 1)
-         |SELECT sl.series_id, ic.n_points, sl.n_pairs, sl.slope, ic.intercept
-         |FROM sl JOIN ic USING (series_id)""".stripMargin,
-    "ts_seasonal_profile" ->
-      s"""WITH points AS ($PointsCte)
-         |SELECT series_id,
-         |  ((ts % ${86400L * NsPerS} + ${86400L * NsPerS}) % ${86400L * NsPerS}) // ${3600L * NsPerS} AS slot,
-         |  avg(value) FILTER (WHERE NOT isnan(value)) AS mean_value,
-         |  min(value) FILTER (WHERE NOT isnan(value)) AS min_value,
-         |  max(value) FILTER (WHERE NOT isnan(value)) AS max_value,
-         |  count(value) FILTER (WHERE NOT isnan(value)) AS n_points
-         |FROM points GROUP BY 1, 2""".stripMargin,
-    // Twin of SeriesOps.stl: same ±12-row NaN-safe trend MA over the
-    // (ts, value) order, hour-of-day seasonal slot means of the detrended
-    // values, residual = value − trend − seasonal; raw doubles — any
-    // fixed-decimal snap lands boundaries exactly on this data's
-    // 1e-6-grid means (measured failing both round and floor ways).
-    "ts_stl" ->
-      s"""WITH points AS ($PointsCte),
-         |t AS (SELECT series_id, ts, value,
-         |  ((ts % ${86400L * NsPerS} + ${86400L * NsPerS}) % ${86400L * NsPerS}) // ${3600L * NsPerS} AS slot,
-         |  avg(CASE WHEN NOT isnan(value) THEN value END) OVER (
-         |    PARTITION BY series_id ORDER BY ts, value
-         |    ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING) AS tr
-         |  FROM points),
-         |d AS (SELECT *, CASE WHEN NOT isnan(value) THEN value END - tr AS detr FROM t),
-         |se AS (SELECT series_id, slot, avg(detr) AS seas FROM d GROUP BY 1, 2)
-         |SELECT d.series_id, ts, value, tr AS trend, seas AS seasonal,
-         |  CASE WHEN NOT isnan(value) THEN value END - tr - seas AS residual
-         |FROM d JOIN se USING (series_id, slot)""".stripMargin,
-    // Twin of SeriesOps.stlStrength: the ts_stl body, then ONE pinned
-    // per-series fold (ORDER BY matching Spark's struct sort) into the
-    // [n, Σr, Σr², Σ(s+r), Σ(s+r)², Σ(t+r), Σ(t+r)²] sums; variance and
-    // strength expressions written with the identical operation order.
-    "ts_stl_strength" -> {
-      def variance(sq: Int, s: Int): String =
-        s"(a[$sq] - a[$s] * a[$s] / a[1]) / a[1]"
-      val vR = variance(3, 2)
-      val vSR = variance(5, 4)
-      val vTR = variance(7, 6)
-      s"""WITH points AS ($PointsCte),
-         |t AS (SELECT series_id, ts, value,
-         |  ((ts % ${86400L * NsPerS} + ${86400L * NsPerS}) % ${86400L * NsPerS}) // ${3600L * NsPerS} AS slot,
-         |  avg(CASE WHEN NOT isnan(value) THEN value END) OVER (
-         |    PARTITION BY series_id ORDER BY ts, value
-         |    ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING) AS tr
-         |  FROM points),
-         |d AS (SELECT *, CASE WHEN NOT isnan(value) THEN value END - tr AS detr FROM t),
-         |se AS (SELECT series_id, slot, avg(detr) AS seas FROM d GROUP BY 1, 2),
-         |r2 AS (SELECT d.series_id, ts, value, tr, seas,
-         |  CASE WHEN NOT isnan(value) THEN value END - tr - seas AS resid
-         |  FROM d JOIN se USING (series_id, slot)),
-         |f AS (SELECT series_id, list([resid, seas + resid, tr + resid]
-         |    ORDER BY ts, value, seas, resid, tr) AS xs
-         |  FROM r2 WHERE resid IS NOT NULL GROUP BY 1),
-         |ag AS (SELECT series_id, list_reduce(list_prepend(
-         |  [CAST(0 AS DOUBLE), CAST(0 AS DOUBLE), CAST(0 AS DOUBLE),
-         |   CAST(0 AS DOUBLE), CAST(0 AS DOUBLE), CAST(0 AS DOUBLE),
-         |   CAST(0 AS DOUBLE)],
-         |  list_transform(xs, x -> [CAST(1 AS DOUBLE), x[1], x[1] * x[1],
-         |    x[2], x[2] * x[2], x[3], x[3] * x[3]])),
-         |  (acc, e) -> [acc[1] + e[1], acc[2] + e[2], acc[3] + e[3],
-         |    acc[4] + e[4], acc[5] + e[5], acc[6] + e[6], acc[7] + e[7]]) AS a
-         |  FROM f)
-         |SELECT series_id, CAST(a[1] AS BIGINT) AS n_points,
-         |  CASE WHEN $vSR > CAST(0 AS DOUBLE)
-         |    THEN CASE WHEN CAST(1 AS DOUBLE) - ($vR) / ($vSR) < 1e-9
-         |      THEN CAST(0 AS DOUBLE)
-         |      ELSE CAST(1 AS DOUBLE) - ($vR) / ($vSR) END END
-         |    AS seasonal_strength,
-         |  CASE WHEN $vTR > CAST(0 AS DOUBLE)
-         |    THEN CASE WHEN CAST(1 AS DOUBLE) - ($vR) / ($vTR) < 1e-9
-         |      THEN CAST(0 AS DOUBLE)
-         |      ELSE CAST(1 AS DOUBLE) - ($vR) / ($vTR) END END
-         |    AS trend_strength
-         |FROM ag""".stripMargin
-    },
-    // Twin of SeriesOps.stlAnomaly: the ts_stl residual fed through the
-    // ts_outlier_mad scoring body (same medians, constants, fallback).
-    "ts_stl_anomaly" ->
-      s"""WITH points AS ($PointsCte),
-         |t AS (SELECT series_id, ts, value,
-         |  ((ts % ${86400L * NsPerS} + ${86400L * NsPerS}) % ${86400L * NsPerS}) // ${3600L * NsPerS} AS slot,
-         |  avg(CASE WHEN NOT isnan(value) THEN value END) OVER (
-         |    PARTITION BY series_id ORDER BY ts, value
-         |    ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING) AS tr
-         |  FROM points),
-         |d AS (SELECT *, CASE WHEN NOT isnan(value) THEN value END - tr AS detr FROM t),
-         |se AS (SELECT series_id, slot, avg(detr) AS seas FROM d GROUP BY 1, 2),
-         |r AS (SELECT d.series_id, ts,
-         |  CASE WHEN NOT isnan(value) THEN value END - tr - seas AS value
-         |  FROM d JOIN se USING (series_id, slot)),
-         |p AS (SELECT series_id, ts, value FROM r WHERE NOT isnan(value)),
-         |med AS (SELECT series_id, quantile_cont(value, 0.5) AS med FROM p GROUP BY 1),
-         |mad AS (SELECT p.series_id, quantile_cont(abs(p.value - med.med), 0.5) AS mad,
-         |  avg(abs(p.value - med.med)) AS meanad
-         |  FROM p JOIN med USING (series_id) GROUP BY 1)
-         |SELECT p.series_id, p.ts, p.value AS residual,
-         |  CASE WHEN mad.mad > 0
-         |    THEN CAST(0.6745 AS DOUBLE) * (p.value - med.med) / mad.mad
-         |  WHEN mad.meanad > 0
-         |    THEN (p.value - med.med) / (CAST(1.253314 AS DOUBLE) * mad.meanad)
-         |  END AS mad_score,
-         |  coalesce(abs(CASE WHEN mad.mad > 0
-         |    THEN CAST(0.6745 AS DOUBLE) * (p.value - med.med) / mad.mad
-         |  WHEN mad.meanad > 0
-         |    THEN (p.value - med.med) / (CAST(1.253314 AS DOUBLE) * mad.meanad)
-         |  END) > 3.5, false) AS is_outlier
-         |FROM p JOIN med USING (series_id) JOIN mad USING (series_id)""".stripMargin,
-
-    // Twin of SeriesOps.forecastNaive: the seasonalProfile slot means
-    // joined onto a 24-step hourly horizon after each series' last point
-    "ts_forecast_naive" ->
-      s"""WITH points AS ($PointsCte),
-         |prof AS (SELECT series_id,
-         |  ((ts % ${86400L * NsPerS} + ${86400L * NsPerS}) % ${86400L * NsPerS}) // ${3600L * NsPerS} AS slot,
-         |  avg(value) FILTER (WHERE NOT isnan(value)) AS mean_value
-         |  FROM points GROUP BY 1, 2),
-         |lastp AS (SELECT series_id, max(ts) AS last_ts FROM points GROUP BY 1),
-         |fut AS (SELECT series_id,
-         |  last_ts + unnest(range(1, 25)) * ${3600L * NsPerS} AS ts FROM lastp),
-         |slotted AS (SELECT series_id, ts,
-         |  ((ts % ${86400L * NsPerS} + ${86400L * NsPerS}) % ${86400L * NsPerS}) // ${3600L * NsPerS} AS slot
-         |  FROM fut)
-         |SELECT s.series_id, ts, mean_value AS yhat
-         |FROM slotted s LEFT JOIN prof USING (series_id, slot)""".stripMargin,
-    // Twin of SeriesOps.backtestNaive(day, hour, 7d): same global cutoff,
-    // same non-negative slot arithmetic, avg FILTERs mirror Spark's
-    // null-skipping aggregates over unscored slots.
-    "ts_backtest" ->
-      s"""WITH points AS ($PointsCte),
-         |p AS (SELECT series_id, ts, value FROM points WHERE NOT isnan(value)),
-         |cut AS (SELECT max(ts) - ${7L * 86400L * NsPerS} AS c FROM p),
-         |tr AS (SELECT series_id,
-         |  ((ts % ${86400L * NsPerS} + ${86400L * NsPerS}) % ${86400L * NsPerS}) // ${3600L * NsPerS} AS slot,
-         |  avg(value) AS yhat
-         |  FROM p CROSS JOIN cut WHERE ts <= c GROUP BY 1, 2),
-         |te AS (SELECT series_id,
-         |  ((ts % ${86400L * NsPerS} + ${86400L * NsPerS}) % ${86400L * NsPerS}) // ${3600L * NsPerS} AS slot,
-         |  value
-         |  FROM p CROSS JOIN cut WHERE ts > c)
-         |SELECT te.series_id, CAST(count(*) AS BIGINT) AS n_test,
-         |  CAST(count(tr.yhat) AS BIGINT) AS n_scored,
-         |  avg(abs(te.value - tr.yhat)) AS mae,
-         |  avg(te.value - tr.yhat) AS bias
-         |FROM te LEFT JOIN tr USING (series_id, slot)
-         |GROUP BY 1""".stripMargin,
-    "ts_gaps" ->
-      s"""WITH points AS ($PointsCte),
-         |$DtModeCte,
-         |d AS (SELECT series_id, ts,
-         |  ts - lag(ts) OVER (PARTITION BY series_id ORDER BY ts, value) AS delta_ns
-         |  FROM points)
-         |SELECT d.series_id, d.ts - d.delta_ns AS gap_start, d.ts AS gap_end,
-         |  d.delta_ns AS gap_ns,
-         |  CAST(d.delta_ns AS DOUBLE) / dm.dt_mode_ns AS gap_ratio
-         |FROM d JOIN dmode dm USING (series_id)
-         |WHERE d.delta_ns IS NOT NULL AND d.delta_ns > dm.dt_mode_ns * 2.0""".stripMargin,
-    // Twin of SeriesOps.pairCorrelation: same resample reduction, same
-    // canonical pair join, and the co-moment corr formula written with the
-    // identical operation order.
-    "ts_corr" -> {
-      val day = 86400L * NsPerS
-      s"""WITH points AS (SELECT 'shyft://events/u' || user_id || '/' || event_type AS series_id,
-         |  epoch_ns(ts) AS ts, value FROM events WHERE user_id < 25),
-         |b AS (SELECT series_id, ts - ts % $day AS bucket_ts,
-         |  avg(value) FILTER (WHERE NOT isnan(value)) AS mv FROM points GROUP BY 1, 2),
-         |nb AS (SELECT * FROM b WHERE mv IS NOT NULL),
-         |s AS (SELECT a.series_id AS series_a, c.series_id AS series_b,
-         |  count(*) AS n_buckets, sum(a.mv) AS sx, sum(c.mv) AS sy,
-         |  sum(a.mv * a.mv) AS sxx, sum(c.mv * c.mv) AS syy, sum(a.mv * c.mv) AS sxy
-         |  FROM nb a JOIN nb c USING (bucket_ts)
-         |  WHERE a.series_id < c.series_id GROUP BY 1, 2)
-         |SELECT series_a, series_b, n_buckets,
-         |  CASE WHEN CAST(n_buckets AS DOUBLE) * sxx - sx * sx > 0
-         |        AND CAST(n_buckets AS DOUBLE) * syy - sy * sy > 0
-         |    THEN (CAST(n_buckets AS DOUBLE) * sxy - sx * sy)
-         |      / sqrt((CAST(n_buckets AS DOUBLE) * sxx - sx * sx)
-         |           * (CAST(n_buckets AS DOUBLE) * syy - sy * sy)) END AS corr
-         |FROM s""".stripMargin
-    },
-    // Twin of SeriesOps.saxMotifs(hour): same lead chain over the hourly
-    // observation sequence, same pinned left-assoc window mean/sd/segment
-    // arithmetic, same 4-symbol breakpoints, integer census.
-    "ts_motifs" -> {
-      val hour = 3600L * NsPerS
-      val leads = (1 to 7).map(i =>
-        s"lead(mv, $i) OVER win AS x$i").mkString(", ")
-      val muChain = (0 to 7).map(i => s"x$i").mkString(" + ")
-      val sdChain = (0 to 7).map(i => s"(x$i - mu) * (x$i - mu)").mkString(" + ")
-      def seg(j: Int) = {
-        val z = s"((x${2 * j} + x${2 * j + 1}) / 2.0 - mu) / sd"
-        s"CASE WHEN sd = 0.0 THEN 'c' WHEN $z < -0.6745 THEN 'a' " +
-          s"WHEN $z < 0.0 THEN 'b' WHEN $z < 0.6745 THEN 'c' ELSE 'd' END"
-      }
-      val word = (0 until 4).map(seg).mkString(" || ")
-      s"""WITH points AS ($PointsCte),
-         |b AS (SELECT series_id, ts - ts % $hour AS bucket_ts,
-         |  avg(value) FILTER (WHERE NOT isnan(value)) AS mv FROM points GROUP BY 1, 2),
-         |nb AS (SELECT series_id, bucket_ts, mv FROM b WHERE mv IS NOT NULL),
-         |w AS (SELECT series_id, mv AS x0, $leads FROM nb
-         |  WINDOW win AS (PARTITION BY series_id ORDER BY bucket_ts)),
-         |v AS (SELECT * FROM w WHERE x7 IS NOT NULL),
-         |m AS (SELECT *, ($muChain) / 8.0 AS mu FROM v),
-         |s AS (SELECT *, sqrt(($sdChain) / 8.0) AS sd FROM m),
-         |sym AS (SELECT series_id, $word AS motif FROM s)
-         |SELECT motif, CAST(count(*) AS BIGINT) AS n_windows,
-         |  CAST(count(DISTINCT series_id) AS BIGINT) AS n_series
-         |FROM sym GROUP BY 1 HAVING count(*) >= 2""".stripMargin
-    },
-    // Twin of SeriesOps.spearmanCorrelation(day): same per-pair average
-    // ranks (rank() + (ties-1)/2 — both engines' rank() is min-rank) and
-    // the same exact-in-doubles co-moment formula over them.
-    "ts_spearman" -> {
-      val day = 86400L * NsPerS
-      s"""WITH points AS (SELECT 'shyft://events/u' || user_id || '/' || event_type AS series_id,
-         |  epoch_ns(ts) AS ts, value FROM events WHERE user_id < 25),
-         |b AS (SELECT series_id, ts - ts % $day AS bucket_ts,
-         |  avg(value) FILTER (WHERE NOT isnan(value)) AS mv FROM points GROUP BY 1, 2),
-         |nb AS (SELECT * FROM b WHERE mv IS NOT NULL),
-         |pr AS (SELECT a.series_id AS series_a, c.series_id AS series_b,
-         |  a.mv AS x, c.mv AS y
-         |  FROM nb a JOIN nb c USING (bucket_ts)
-         |  WHERE a.series_id < c.series_id),
-         |rk AS (SELECT series_a, series_b,
-         |  CAST(rank() OVER (PARTITION BY series_a, series_b ORDER BY x) AS DOUBLE)
-         |    + (CAST(count(*) OVER (PARTITION BY series_a, series_b, x) AS DOUBLE) - 1.0) / 2.0 AS rx,
-         |  CAST(rank() OVER (PARTITION BY series_a, series_b ORDER BY y) AS DOUBLE)
-         |    + (CAST(count(*) OVER (PARTITION BY series_a, series_b, y) AS DOUBLE) - 1.0) / 2.0 AS ry
-         |  FROM pr),
-         |s AS (SELECT series_a, series_b, count(*) AS n_buckets,
-         |  sum(rx) AS sx, sum(ry) AS sy, sum(rx * rx) AS sxx,
-         |  sum(ry * ry) AS syy, sum(rx * ry) AS sxy
-         |  FROM rk GROUP BY 1, 2)
-         |SELECT series_a, series_b, n_buckets,
-         |  CASE WHEN CAST(n_buckets AS DOUBLE) * sxx - sx * sx > 0
-         |        AND CAST(n_buckets AS DOUBLE) * syy - sy * sy > 0
-         |    THEN (CAST(n_buckets AS DOUBLE) * sxy - sx * sy)
-         |      / sqrt((CAST(n_buckets AS DOUBLE) * sxx - sx * sx)
-         |           * (CAST(n_buckets AS DOUBLE) * syy - sy * sy)) END AS rho
-         |FROM s""".stripMargin
-    },
-    // Twin of SeriesOps.crossCorrelation(day, maxLag=3): the ts_corr body
-    // with the lag fan-out on the left side of the bucket equi-join.
-    // Twin of SeriesOps.dtw(day buckets, user_id < 10): the identical
-    // nested seeded fold — outer over a's values carrying the previous DP
-    // row, inner building the next row left to right (DuckDB's 1-based
-    // lambda index vs Spark's 0-based shifts every position by one), the
-    // same 1e150 boundary sentinel and min/add order.
-    "ts_dtw" -> {
-      val day = 86400L * NsPerS
-      s"""WITH points AS (SELECT 'shyft://events/u' || user_id || '/' || event_type AS series_id,
-         |  epoch_ns(ts) AS ts, value FROM events WHERE user_id < 10),
-         |b AS (SELECT series_id, ts - ts % $day AS bucket_ts,
-         |  avg(value) FILTER (WHERE NOT isnan(value)) AS mv FROM points GROUP BY 1, 2),
-         |nb AS (SELECT * FROM b WHERE mv IS NOT NULL),
-         |g AS (SELECT series_id, list(mv ORDER BY bucket_ts) AS vs FROM nb GROUP BY 1),
-         |p AS (SELECT ga.series_id AS series_a, gb.series_id AS series_b,
-         |  ga.vs AS av, gb.vs AS bv FROM g ga CROSS JOIN g gb
-         |  WHERE ga.series_id < gb.series_id),
-         |d AS (SELECT series_a, series_b, CAST(len(av) AS BIGINT) AS n_a,
-         |  CAST(len(bv) AS BIGINT) AS n_b,
-         |  list_reduce(
-         |    list_prepend(
-         |      list_prepend(CAST(0 AS DOUBLE),
-         |        list_transform(bv, x -> CAST(1e150 AS DOUBLE))),
-         |      list_transform(av, x -> [x])),
-         |    (prev, e) -> list_reduce(
-         |      list_prepend([CAST(1e150 AS DOUBLE)],
-         |        list_transform(bv, (y, j) -> [y, CAST(j AS DOUBLE)])),
-         |      (nr, e2) -> list_append(nr,
-         |        abs(e[1] - e2[1]) + least(
-         |          prev[CAST(e2[2] AS INTEGER) + 1],
-         |          nr[CAST(e2[2] AS INTEGER)],
-         |          prev[CAST(e2[2] AS INTEGER)])))) AS dp
-         |  FROM p)
-         |SELECT series_a, series_b, n_a, n_b,
-         |  dp[CAST(n_b AS INTEGER) + 1] AS dtw_dist,
-         |  dp[CAST(n_b AS INTEGER) + 1] / CAST(n_a + n_b AS DOUBLE)
-         |    AS dtw_per_step
-         |FROM d""".stripMargin
-    },
-    "ts_crosscorr" -> {
-      val day = 86400L * NsPerS
-      s"""WITH points AS (SELECT 'shyft://events/u' || user_id || '/' || event_type AS series_id,
-         |  epoch_ns(ts) AS ts, value FROM events WHERE user_id < 25),
-         |b AS (SELECT series_id, ts - ts % $day AS bucket_ts,
-         |  avg(value) FILTER (WHERE NOT isnan(value)) AS mv FROM points GROUP BY 1, 2),
-         |nb AS (SELECT * FROM b WHERE mv IS NOT NULL),
-         |s AS (SELECT a.series_id AS series_a, c.series_id AS series_b,
-         |  CAST(l.lag AS INTEGER) AS lag,
-         |  count(*) AS n_buckets, sum(a.mv) AS sx, sum(c.mv) AS sy,
-         |  sum(a.mv * a.mv) AS sxx, sum(c.mv * c.mv) AS syy, sum(a.mv * c.mv) AS sxy
-         |  FROM nb a CROSS JOIN range(-3, 4) l(lag)
-         |  JOIN nb c ON c.bucket_ts = a.bucket_ts + l.lag * $day
-         |  WHERE a.series_id < c.series_id GROUP BY 1, 2, 3)
-         |SELECT series_a, series_b, lag, n_buckets,
-         |  CASE WHEN CAST(n_buckets AS DOUBLE) * sxx - sx * sx > 0
-         |        AND CAST(n_buckets AS DOUBLE) * syy - sy * sy > 0
-         |    THEN (CAST(n_buckets AS DOUBLE) * sxy - sx * sy)
-         |      / sqrt((CAST(n_buckets AS DOUBLE) * sxx - sx * sx)
-         |           * (CAST(n_buckets AS DOUBLE) * syy - sy * sy)) END AS corr
-         |FROM s""".stripMargin
-    },
-    "ts_current_bands" ->
-      s"""WITH points AS ($PointsCte),
-         |lv AS (SELECT series_id, value AS last_value, ts AS last_ts FROM (
-         |  SELECT series_id, value, ts,
-         |         row_number() OVER (PARTITION BY series_id ORDER BY ts DESC, value DESC) AS rn
-         |  FROM points WHERE NOT isnan(value)) WHERE rn = 1)
-         |SELECT series_id, last_value, last_ts,
-         |  CASE WHEN last_value > 100.0 THEN 'red'
-         |       WHEN last_value > 50.0 THEN 'yellow'
-         |       ELSE 'green' END AS band
-         |FROM lv""".stripMargin,
-    "ts_asof_join" ->
-      """SELECT l.user_id, l.ts, l.value, r.ts AS right_ts, r.r_value AS right_r_value
-        |FROM (SELECT user_id, epoch_ns(ts) AS ts, value FROM events WHERE event_type = 'click') l
-        |ASOF LEFT JOIN (SELECT user_id, epoch_ns(ts) AS ts, value AS r_value FROM events WHERE event_type = 'purchase') r
-        |ON l.user_id = r.user_id AND l.ts >= r.ts""".stripMargin,
-    "ts_asof_tolerance" ->
-      s"""SELECT l.user_id, l.ts, l.value,
-         |  CASE WHEN l.ts - r.ts <= ${2L * 86400 * NsPerS} THEN r.ts END AS right_ts,
-         |  CASE WHEN l.ts - r.ts <= ${2L * 86400 * NsPerS} THEN r.r_value END AS right_r_value
-         |FROM (SELECT user_id, epoch_ns(ts) AS ts, value FROM events WHERE event_type = 'click') l
-         |ASOF LEFT JOIN (SELECT user_id, epoch_ns(ts) AS ts, value AS r_value FROM events WHERE event_type = 'purchase') r
-         |ON l.user_id = r.user_id AND l.ts >= r.ts""".stripMargin,
-
-    "eval_routing" ->
-      s"""WITH t AS (SELECT ts FROM range(${1704067200L * NsPerS}, ${1704067260L * NsPerS}, $NsPerS) r(ts))
-         |SELECT 0 AS ordinal, 'mock1://a/1' AS series_id, ts, 1.0 AS value FROM t
-         |UNION ALL SELECT 1, 'mock2://b/2', ts, 2.0 FROM t
-         |UNION ALL SELECT 2, 'mock1://c/3', ts, 3.0 FROM t
-         |UNION ALL SELECT 3, 'heartbeat://cb/ping', ts, 1.0 FROM t""".stripMargin,
-    "synthetic_v2" ->
-      s"""WITH t AS (SELECT ts FROM range(${1704067200L * NsPerS}, ${1704067260L * NsPerS}, $NsPerS) r(ts))
-         |SELECT 'heartbeat://cb/ping' AS series_id, ts, 1.0 AS value FROM t
-         |UNION ALL SELECT 'mock1://a/2.5', ts, 2.5 FROM t""".stripMargin,
-    "store_merge" ->
-      s"""WITH points AS ($PointsCte),
-         |f AS (SELECT series_id, ts, value, 0 AS gen FROM points WHERE ts >= $T0 AND ts < $T2),
-         |sd AS (SELECT series_id, ts, value + 100.0 AS value, 1 AS gen FROM points WHERE ts >= $T1 AND ts < $T3),
-         |u AS (SELECT * FROM f UNION ALL SELECT * FROM sd)
-         |SELECT series_id, ts, value FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY series_id, ts ORDER BY gen DESC, value DESC) AS rn
-         |  FROM u) WHERE rn = 1""".stripMargin,
-    "store_find" ->
-      """WITH p AS (SELECT 'shyft://events/u1/' || event_type AS name, epoch_ns(ts) AS ts, value FROM events WHERE user_id = 1),
-        |deltas AS (SELECT name, ts - lag(ts) OVER (PARTITION BY name ORDER BY ts, value) AS delta_ns FROM p),
-        |dcnt AS (SELECT name, delta_ns, count(*) AS cnt FROM deltas WHERE delta_ns IS NOT NULL GROUP BY 1, 2),
-        |dmode AS (SELECT name, delta_ns AS dt FROM (SELECT *, row_number() OVER (PARTITION BY name ORDER BY cnt DESC, delta_ns ASC) AS rn FROM dcnt) WHERE rn = 1),
-        |stats AS (SELECT name, min(ts) AS t0, max(ts) AS t1 FROM p GROUP BY 1)
-        |SELECT s.name, 'instant' AS point_fx, coalesce(m.dt, 0) AS delta_t_ns,
-        |       s.t0 AS data_start_ns, s.t1 AS data_end_ns
-        |FROM stats s LEFT JOIN dmode m ON s.name = m.name""".stripMargin,
-
-    "netatmo_catalog" ->
-      """WITH et AS (SELECT DISTINCT user_id, event_type FROM events),
-        |r AS (SELECT user_id, event_type, row_number() OVER (PARTITION BY user_id ORDER BY event_type) AS rnk FROM et)
-        |SELECT user_id, 'station:' || user_id AS station_id,
-        |  'Station ' || user_id AS station_name,
-        |  CASE WHEN rnk % 2 = 1 THEN 'station:' || user_id ELSE 'module:' || user_id END AS module_id,
-        |  CASE WHEN rnk % 2 = 1 THEN 'Main' ELSE 'Outdoor' END AS module_name,
-        |  event_type AS data_type,
-        |  'netatmo://?station_name=Station ' || user_id || '&module_name=' ||
-        |    (CASE WHEN rnk % 2 = 1 THEN 'Main' ELSE 'Outdoor' END) || '&data_type=' || event_type AS source_id,
-        |  'shyft://netatmo/station-' || user_id || '/' ||
-        |    (CASE WHEN rnk % 2 = 1 THEN 'main' ELSE 'outdoor' END) || '/' || event_type AS store_id,
-        |  'Europe/Oslo' AS tz
-        |FROM r""".stripMargin,
-    "netatmo_lookup" ->
-      """SELECT * FROM (VALUES
-        |  ('Station 7', 'Main', 'click', 'netatmo://?station_name=Station 7&module_name=Main&data_type=click'),
-        |  ('Station 7', 'Outdoor', 'error', 'netatmo://?station_name=Station 7&module_name=Outdoor&data_type=error'),
-        |  ('Station 12', 'Main', 'view', 'netatmo://?station_name=Station 12&module_name=Main&data_type=view')
-        |) t(station_name, module_name, data_type, source_id)""".stripMargin,
-    "netatmo_read" ->
-      """WITH et AS (SELECT DISTINCT user_id, event_type FROM events WHERE user_id <= 2),
-        |r AS (SELECT user_id, event_type, row_number() OVER (PARTITION BY user_id ORDER BY event_type) AS rnk FROM et),
-        |m AS (SELECT user_id, event_type, CASE WHEN rnk % 2 = 1 THEN 'Main' ELSE 'Outdoor' END AS module_name,
-        |      CAST(user_id * 5 + rnk - 1 AS INTEGER) AS ordinal FROM r),
-        |axis AS (SELECT DISTINCT m2.user_id, m2.module_name, (epoch_ns(e.ts) // 1000) * 1000 AS ts
-        |         FROM events e JOIN m m2 ON e.user_id = m2.user_id AND e.event_type = m2.event_type),
-        |grid AS (SELECT i.user_id, i.event_type, i.module_name, i.ordinal, a.ts
-        |         FROM m i JOIN axis a ON a.user_id = i.user_id AND a.module_name = i.module_name),
-        |vals AS (SELECT user_id, event_type, (epoch_ns(ts) // 1000) * 1000 AS ts, max(value) AS value
-        |         FROM events GROUP BY 1, 2, 3)
-        |SELECT g.ordinal,
-        |  'netatmo://?station_name=Station ' || g.user_id || '&module_name=' || g.module_name ||
-        |    '&data_type=' || g.event_type AS series_id,
-        |  g.ts, coalesce(v.value, CAST('NaN' AS DOUBLE)) AS value
-        |FROM grid g LEFT JOIN vals v
-        |  ON v.user_id = g.user_id AND v.event_type = g.event_type AND v.ts = g.ts""".stripMargin,
-    "netatmo_find" ->
-      """WITH et AS (SELECT DISTINCT user_id, event_type FROM events),
-        |r AS (SELECT user_id, event_type, row_number() OVER (PARTITION BY user_id ORDER BY event_type) AS rnk FROM et),
-        |m AS (SELECT user_id, event_type, CASE WHEN rnk % 2 = 1 THEN 'Main' ELSE 'Outdoor' END AS module_name FROM r),
-        |q(station_name, module_name, data_type) AS (VALUES
-        |  ('Station 7', 'Main', 'click'), ('Station 7', 'Outdoor', 'error'), ('Station 12', 'Main', 'view')),
-        |sel AS (SELECT q.*, m.user_id FROM q JOIN m
-        |        ON m.user_id = CAST(replace(q.station_name, 'Station ', '') AS BIGINT)
-        |       AND m.module_name = q.module_name AND m.event_type = q.data_type),
-        |mod_life AS (SELECT m.user_id, m.module_name,
-        |             min(epoch_ns(e.ts)) AS t0, max(epoch_ns(e.ts)) AS t1
-        |             FROM events e JOIN m ON e.user_id = m.user_id AND e.event_type = m.event_type
-        |             GROUP BY 1, 2),
-        |p AS (SELECT user_id, event_type, epoch_ns(ts) AS ts FROM events),
-        |deltas AS (SELECT user_id, event_type,
-        |           ts - lag(ts) OVER (PARTITION BY user_id, event_type ORDER BY ts) AS d FROM p),
-        |dcnt AS (SELECT user_id, event_type, d, count(*) AS c FROM deltas WHERE d IS NOT NULL GROUP BY 1, 2, 3),
-        |dmode AS (SELECT user_id, event_type, d AS dt FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY user_id, event_type ORDER BY c DESC, d ASC) AS rn
-        |  FROM dcnt) WHERE rn = 1)
-        |SELECT 'netatmo://?station_name=' || s.station_name || '&module_name=' || s.module_name ||
-        |    '&data_type=' || s.data_type AS name,
-        |  'instant' AS point_fx, coalesce(dm.dt, 0) AS delta_t_ns, 'Europe/Oslo' AS tz,
-        |  l.t0 AS data_start_ns, l.t1 AS data_end_ns, l.t0 AS created_ns, l.t1 AS modified_ns
-        |FROM sel s
-        |JOIN mod_life l ON l.user_id = s.user_id AND l.module_name = s.module_name
-        |LEFT JOIN dmode dm ON dm.user_id = s.user_id AND dm.event_type = s.data_type""".stripMargin,
-
-    "text_token_count" ->
-      s"SELECT doc_id, len($Toks) AS n_tokens FROM documents",
-    "text_bpe_tokens" ->
-      """SELECT doc_id, CAST(len(regexp_extract_all(lower(text),
-        |  ' ?[a-z]+| ?[0-9]+| ?[^a-z0-9 ]+')) AS INTEGER) AS n_bpe_tokens
-        |FROM documents""".stripMargin,
-    "text_quality" ->
-      s"""WITH f AS (SELECT doc_id, text, $Toks AS toks,
-         |  length(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS alnum FROM documents),
-         |g AS (SELECT doc_id, text, toks, alnum,
-         |  len(list_filter(toks, t -> list_contains($EnStopSql, t))) AS stop
-         |FROM f)
-         |SELECT doc_id,
-         |  CAST(length(text) AS BIGINT) AS n_chars_m,
-         |  CAST(len(toks) AS BIGINT) AS n_tokens,
-         |  CASE WHEN len(toks) > 0 THEN CAST(alnum AS DOUBLE) / len(toks) ELSE 0.0 END AS mean_token_len,
-         |  CASE WHEN length(text) > 0 THEN CAST(alnum AS DOUBLE) / length(text) ELSE 0.0 END AS alnum_ratio,
-         |  CASE WHEN length(text) > 0 THEN CAST(length(text) - length(replace(text, ' ', '')) AS DOUBLE) / length(text) ELSE 0.0 END AS space_ratio,
-         |  CASE WHEN len(toks) > 0 THEN CAST(stop AS DOUBLE) / len(toks) ELSE 0.0 END AS stopword_ratio,
-         |  ${qualityScoreSql("toks", "text")} AS quality_score
-         |FROM g""".stripMargin,
-    // Twin of TextOps.readability: same vowel-group syllable heuristic
-    // (regex runs + vowel-less token floor), same [.!?]+ sentence count,
-    // literals cast to DOUBLE so the scoring arithmetic lands on the same
-    // doubles.
-    "text_readability" ->
-      s"""WITH b AS (SELECT doc_id,
-         |  CAST(len($Toks) AS BIGINT) AS n_words,
-         |  greatest(CAST(1 AS BIGINT),
-         |    CAST(len(regexp_extract_all(text, '[.!?]+')) AS BIGINT)) AS n_sentences,
-         |  CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS BIGINT)
-         |    + CAST(len(list_filter($Toks,
-         |        w -> NOT regexp_matches(w, '[aeiouy]'))) AS BIGINT) AS n_syllables
-         |  FROM documents WHERE text IS NOT NULL),
-         |r AS (SELECT doc_id, n_words, n_sentences, n_syllables,
-         |  CAST(n_words AS DOUBLE) / CAST(n_sentences AS DOUBLE) AS wps,
-         |  CAST(n_syllables AS DOUBLE) / CAST(n_words AS DOUBLE) AS spw
-         |  FROM b WHERE n_words >= 1)
-         |SELECT doc_id, n_words, n_sentences, n_syllables,
-         |  CAST(206.835 AS DOUBLE) - CAST(1.015 AS DOUBLE) * wps
-         |    - CAST(84.6 AS DOUBLE) * spw AS flesch_ease,
-         |  CAST(0.39 AS DOUBLE) * wps + CAST(11.8 AS DOUBLE) * spw
-         |    - CAST(15.59 AS DOUBLE) AS fk_grade
-         |FROM r""".stripMargin,
-    // Twin of TextOps.rakePhrases(topN=50, maxLen=4): same gaps-and-islands
-    // phrase runs, integer-quotient word scores, position-ordered seeded
-    // fold per phrase, (score desc, phrase asc) top-50.
-    "text_rake" -> {
-      val stop = graft.pipeline.Stopwords.all.map(w => s"'$w'").mkString(", ")
-      s"""WITH d AS (SELECT doc_id, $Toks AS toks FROM documents),
-         |t2 AS (SELECT doc_id,
-         |  unnest(list_transform(toks, (x, k) -> {'pos': k - 1, 'w': x})) AS t
-         |  FROM d),
-         |tok AS (SELECT doc_id, t.pos AS pos, t.w AS w FROM t2),
-         |ns AS (SELECT doc_id, pos, w,
-         |  pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS seg
-         |  FROM tok WHERE w NOT IN ($stop)),
-         |occ AS (SELECT list(w ORDER BY pos) AS words FROM ns
-         |  GROUP BY doc_id, seg),
-         |oc2 AS (SELECT words FROM occ WHERE len(words) <= 4),
-         |ws AS (SELECT w, CAST(count(*) AS BIGINT) AS freq,
-         |  CAST(sum(l) AS BIGINT) AS deg FROM
-         |  (SELECT unnest(words) AS w, len(words) AS l FROM oc2) GROUP BY 1),
-         |ws2 AS (SELECT w, CAST(deg AS DOUBLE) / CAST(freq AS DOUBLE)
-         |  AS wscore FROM ws),
-         |phr AS (SELECT array_to_string(words, ' ') AS phrase,
-         |  CAST(count(*) AS BIGINT) AS n_occurrences, first(words) AS words
-         |  FROM oc2 GROUP BY 1),
-         |pw AS (SELECT phrase, n_occurrences,
-         |  unnest(list_transform(words, (x, k) -> {'p': k, 'w': x})) AS t
-         |  FROM phr),
-         |pj AS (SELECT phrase, n_occurrences, t.p AS p, ws2.wscore
-         |  FROM pw JOIN ws2 ON ws2.w = t.w),
-         |sc AS (SELECT phrase, n_occurrences,
-         |  list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |    list(wscore ORDER BY p)), (a, x) -> a + x) AS score
-         |  FROM pj GROUP BY 1, 2)
-         |SELECT phrase, n_occurrences, score FROM sc
-         |ORDER BY score DESC, phrase ASC LIMIT 50""".stripMargin
-    },
-    // Twin of TextOps.ngramNovelty(k=3): same word 3-shingles, same
-    // distinct-per-doc postings, gram-min first owner, per-doc fraction.
-    "text_novelty" ->
-      s"""WITH tk AS (SELECT doc_id AS id, $Toks AS t FROM documents),
-         |g0 AS (SELECT id, unnest(list_distinct(list_transform(range(1, len(t) - 1),
-         |  i -> t[i] || ' ' || t[CAST(i + 1 AS INTEGER)] || ' ' || t[CAST(i + 2 AS INTEGER)])))
-         |    AS g
-         |  FROM tk WHERE len(t) >= 3),
-         |fo AS (SELECT g, min(id) AS first_id FROM g0 GROUP BY 1)
-         |SELECT g0.id AS doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-         |  CAST(sum(CASE WHEN fo.first_id = g0.id THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_novel,
-         |  CAST(sum(CASE WHEN fo.first_id = g0.id THEN 1 ELSE 0 END) AS DOUBLE)
-         |    / CAST(count(*) AS DOUBLE) AS novelty_frac
-         |FROM g0 JOIN fo USING (g) GROUP BY 1""".stripMargin,
-    // Twin of TextOps.gopherRules: same whitespace word split, '#'/'...'
-    // symbol counts, alpha-word and stopword-union rules; ratio CASEs
-    // mirror the when(nWords > 0, …) null semantics and the pass flag's
-    // false && null = false short-circuit.
-    "text_gopher_rules" ->
-      s"""WITH $GopherCtes
-         |SELECT doc_id, n_words, mean_word_len, symbol_ratio, alpha_word_ratio,
-         |  n_stopword_hits, pass_gopher FROM gr""".stripMargin,
-    // Twin of TextOps.fertility: exact integer sums, one double division.
-    "text_fertility" ->
-      s"""WITH s AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(len($Toks)) AS BIGINT) AS n_words,
-         |  CAST(sum(len(regexp_extract_all(lower(text),
-         |    ' ?[a-z]+| ?[0-9]+| ?[^a-z0-9 ]+'))) AS BIGINT) AS n_bpe_tokens
-         |FROM documents GROUP BY 1)
-         |SELECT lang, n_docs, n_words, n_bpe_tokens,
-         |  CASE WHEN n_words > 0
-         |    THEN CAST(n_bpe_tokens AS DOUBLE) / n_words END AS fertility
-         |FROM s""".stripMargin,
-    // Twin of TextOps.unigramLogprob: same add-1-smoothed corpus unigram
-    // LM, same (c+1)/(N+V) → ln → sum → negate → per-token mean order.
-    "text_unigram_logprob" ->
-      s"""WITH occ AS (SELECT doc_id, unnest($Toks) AS t FROM documents),
-         |c AS (SELECT t, CAST(count(*) AS BIGINT) AS c FROM occ GROUP BY 1),
-         |tot AS (SELECT CAST(sum(c) AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS v FROM c)
-         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |  -sum(ln(CAST(c.c + 1 AS DOUBLE) / CAST(tot.n + tot.v AS DOUBLE)))
-         |    / count(*) AS cross_entropy
-         |FROM occ JOIN c USING (t) CROSS JOIN tot GROUP BY 1""".stripMargin,
-    // Twin of TextOps.bigramLogprob: add-1 bigram LM, context count =
-    // bigrams opening with w1, V = corpus unigram vocabulary
-    "text_bigram_logprob" ->
-      s"""WITH tk AS (SELECT doc_id, $Toks AS t FROM documents),
-         |occ AS (SELECT doc_id, t[CAST(k AS INTEGER)] AS w1,
-         |  t[CAST(k + 1 AS INTEGER)] AS w2
-         |  FROM (SELECT doc_id, t, unnest(range(1, len(t))) AS k
-         |    FROM tk WHERE len(t) >= 2)),
-         |big AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS cb FROM occ GROUP BY 1, 2),
-         |ctx AS (SELECT w1, CAST(count(*) AS BIGINT) AS cu FROM occ GROUP BY 1),
-         |voc AS (SELECT CAST(count(DISTINCT tok) AS BIGINT) AS v
-         |  FROM (SELECT unnest(t) AS tok FROM tk))
-         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-         |  -sum(ln(CAST(cb + 1 AS DOUBLE) / CAST(cu + v AS DOUBLE)))
-         |    / count(*) AS cross_entropy
-         |FROM occ JOIN big USING (w1, w2) JOIN ctx USING (w1) CROSS JOIN voc
-         |GROUP BY 1""".stripMargin,
-    // Twin of TextOps.bigramLogprobHoldout over the sample_split train
-    // bucket: counts from the train slice only, left-join scoring with
-    // the add-1 unseen floor, is_train carried through.
-    "text_bigram_holdout" ->
-      s"""WITH tk AS (SELECT doc_id, $Toks AS t,
-         |  ((${phSql("CAST(doc_id AS VARCHAR)", "0")}) * ${Sampling.saltMult("split")}
-         |    + ${Sampling.saltAdd("split")}) % 1000000007 % 10000 < 8000 AS is_train
-         |  FROM documents),
-         |occ AS (SELECT doc_id, is_train, t[CAST(k AS INTEGER)] AS w1,
-         |  t[CAST(k + 1 AS INTEGER)] AS w2
-         |  FROM (SELECT doc_id, is_train, t, unnest(range(1, len(t))) AS k
-         |    FROM tk WHERE len(t) >= 2)),
-         |big AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS cb
-         |  FROM occ WHERE is_train GROUP BY 1, 2),
-         |ctx AS (SELECT w1, CAST(count(*) AS BIGINT) AS cu
-         |  FROM occ WHERE is_train GROUP BY 1),
-         |voc AS (SELECT CAST(count(DISTINCT tok) AS BIGINT) AS v
-         |  FROM (SELECT unnest(t) AS tok FROM tk WHERE is_train))
-         |SELECT doc_id, is_train, CAST(count(*) AS BIGINT) AS n_bigrams,
-         |  -sum(ln(CAST(coalesce(cb, 0) + 1 AS DOUBLE)
-         |    / CAST(coalesce(cu, 0) + v AS DOUBLE))) / count(*) AS cross_entropy
-         |FROM occ LEFT JOIN big USING (w1, w2) LEFT JOIN ctx USING (w1) CROSS JOIN voc
-         |GROUP BY 1, 2""".stripMargin,
-
-    // Twin of Similarity.pcaTop(embeddings, 8): the same matrix-free power
-    // iteration — per-dim means, centered rows, v0 = 1/sqrt(d), each round
-    // w_j = sum(((x-mu)*v)*(x-mu)_j)/n then normalize — unrolled with
-    // MATERIALIZED per-round CTEs (self-referencing chain)
-    "vec_pca" -> {
-      val iters = 8
-      val rounds = (0 until iters).map { k =>
-        s"""s$k AS MATERIALIZED (SELECT c, list_sum(list_transform(range(1, len(c) + 1),
-           |  i -> c[CAST(i AS INTEGER)] * vv[CAST(i AS INTEGER)])) AS s
-           |  FROM c CROSS JOIN v$k),
-           |w$k AS MATERIALIZED (SELECT j, sum(s * c[j]) / (SELECT n FROM nn) AS w
-           |  FROM s$k CROSS JOIN dims GROUP BY j),
-           |l$k AS MATERIALIZED (SELECT sqrt(sum(w * w)) AS lam FROM w$k),
-           |v${k + 1} AS MATERIALIZED (SELECT list(w / lam ORDER BY j) AS vv
-           |  FROM w$k CROSS JOIN l$k GROUP BY lam)""".stripMargin
-      }
-      s"""WITH e AS MATERIALIZED (SELECT list_transform(embedding,
-         |  x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |nn AS MATERIALIZED (SELECT CAST(count(*) AS DOUBLE) AS n FROM e),
-         |dims AS MATERIALIZED (SELECT CAST(unnest(range(1,
-         |  (SELECT len(v) FROM e LIMIT 1) + 1)) AS INTEGER) AS j),
-         |mu AS MATERIALIZED (SELECT list(m ORDER BY j) AS mu FROM (
-         |  SELECT j, avg(v[j]) AS m FROM e CROSS JOIN dims GROUP BY j)),
-         |c AS MATERIALIZED (SELECT list_transform(range(1, len(v) + 1),
-         |  i -> v[CAST(i AS INTEGER)] - mu[CAST(i AS INTEGER)]) AS c
-         |  FROM e CROSS JOIN mu),
-         |dd AS MATERIALIZED (SELECT CAST(len(c) AS DOUBLE) AS d,
-         |  len(c) AS di FROM c LIMIT 1),
-         |tv AS MATERIALIZED (SELECT sum(list_sum(list_transform(c, x -> x * x)))
-         |  / (SELECT n FROM nn) AS totvar FROM c),
-         |v0 AS MATERIALIZED (SELECT list_transform(range(1, di + 1),
-         |  i -> 1.0 / sqrt(d)) AS vv FROM dd),
-         |${rounds.mkString(",\n")}
-         |SELECT CAST(j - 1 AS INTEGER) AS dim, w / lam AS loading,
-         |  lam AS eigenvalue, lam / totvar AS var_explained
-         |FROM w${iters - 1} CROSS JOIN l${iters - 1} CROSS JOIN tv""".stripMargin
-    },
-    // Twin of TextOps.hashedFeatures: same PolyHash % dims buckets, same
-    // ascending-index sparse assembly (DuckDB's ordered list aggregate).
-    // Twin of TextOps.logregClassifier(quality >= 0.6, dims=64, iters=8,
-    // lr=0.5): the hashed-feature buckets DENSIFIED and standardized per
-    // bucket (absent counts 0, zero-variance sd 1 — the label itself is
-    // per-row deterministic arithmetic via the shared qualityScoreSql, so
-    // no cross-engine boundary risk at the threshold), then the
-    // full-batch GD rounds unrolled as MATERIALIZED CTEs (each weight CTE
-    // is referenced by the next round's logit AND gradient — plain
-    // inlining would re-expand the chain exponentially, the BPE/PCA
-    // lesson). The bias gradient rides the prepended constant-1 feature
-    // at pos 0, exactly like the Spark side's single aggregation.
-    "text_quality_clf" -> {
-      val dims = 64; val iters = 8; val lr = "CAST(0.5 AS DOUBLE)"
-      def logit(w: String) =
-        s"($w.wb + list_sum(list_transform(range(1, ${dims + 1}), i -> f.x[i] * $w.w[i])))"
-      def sigma(z: String) =
-        s"CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE) + exp(-$z))"
-      def round(t: Int) =
-        s"""er$t AS MATERIALIZED (SELECT f.doc_id, f.y, f.x,
-           |  list_prepend(CAST(1 AS DOUBLE), f.x) AS lx,
-           |  ${sigma(logit(s"w${t - 1}"))} - f.y AS e
-           |  FROM fx f CROSS JOIN w${t - 1}),
-           |gr$t AS MATERIALIZED (SELECT u.pos AS pos, sum(e * u.xv) / nn.n AS g FROM (
-           |  SELECT e, unnest(list_transform(range(0, ${dims + 1}), i ->
-           |    struct_pack(pos := i, xv := lx[i + 1]))) AS u FROM er$t) CROSS JOIN nn
-           |  GROUP BY u.pos, nn.n),
-           |w$t AS MATERIALIZED (SELECT
-           |  (SELECT list(wn ORDER BY b) FROM (
-           |    SELECT r.b, w.w[r.b + 1] - $lr * coalesce(gr.g, CAST(0 AS DOUBLE)) AS wn
-           |    FROM range(0, $dims) r(b) LEFT JOIN gr$t gr ON gr.pos = r.b + 1
-           |    CROSS JOIN w${t - 1} w)) AS w,
-           |  (SELECT w.wb - $lr * coalesce(
-           |    (SELECT g FROM gr$t WHERE pos = 0), CAST(0 AS DOUBLE))
-           |   FROM w${t - 1} w) AS wb)""".stripMargin
-      s"""WITH toksq AS (SELECT doc_id, $Toks AS tk, text FROM documents),
-         |lab AS (SELECT doc_id, CASE WHEN (${qualityScoreSql("tk", "text")})
-         |    >= CAST(0.6 AS DOUBLE) THEN 1 ELSE 0 END AS y, tk
-         |  FROM toksq WHERE len(tk) > 0),
-         |occ AS (SELECT doc_id, y, ${phSql("t", "0")} % $dims AS b
-         |  FROM (SELECT doc_id, y, unnest(tk) AS t FROM lab)),
-         |cc AS MATERIALIZED (SELECT doc_id, y, b, CAST(count(*) AS DOUBLE) AS c
-         |  FROM occ GROUP BY 1, 2, 3),
-         |nn AS (SELECT CAST(count(DISTINCT doc_id) AS DOUBLE) AS n FROM cc),
-         |msd AS MATERIALIZED (SELECT b, s / nn.n AS mu,
-         |  CASE WHEN ss / nn.n - (s / nn.n) * (s / nn.n) > 0
-         |       THEN sqrt(ss / nn.n - (s / nn.n) * (s / nn.n))
-         |       ELSE CAST(1 AS DOUBLE) END AS sd
-         |  FROM (SELECT b, sum(c) AS s, sum(c * c) AS ss FROM cc GROUP BY 1)
-         |  CROSS JOIN nn),
-         |dl AS (SELECT DISTINCT doc_id, y FROM cc),
-         |fx AS MATERIALIZED (SELECT d.doc_id, d.y,
-         |  list((coalesce(cc.c, CAST(0 AS DOUBLE)) - coalesce(msd.mu, CAST(0 AS DOUBLE)))
-         |       / coalesce(msd.sd, CAST(1 AS DOUBLE)) ORDER BY r.b) AS x
-         |  FROM dl d CROSS JOIN range(0, $dims) r(b)
-         |  LEFT JOIN cc ON cc.doc_id = d.doc_id AND cc.b = r.b
-         |  LEFT JOIN msd ON msd.b = r.b
-         |  GROUP BY d.doc_id, d.y),
-         |w0 AS (SELECT list_transform(range(0, $dims), x -> CAST(0 AS DOUBLE)) AS w,
-         |  CAST(0 AS DOUBLE) AS wb),
-         |${(1 to iters).map(round).mkString(",\n")}
-         |SELECT doc_id, y, p, p >= CAST(0.5 AS DOUBLE) AS pred FROM (
-         |  SELECT f.doc_id, f.y, ${sigma(logit(s"w$iters"))} AS p
-         |  FROM fx f CROSS JOIN w$iters)""".stripMargin
-    },
-    // Twin of TextOps.logregScoreFrozen against the FROZEN model parquet
-    // each face wrote (weights + standardization moments, bias at the
-    // b = -1 sentinel): the serving arithmetic — hashed counts, frozen-
-    // mu/sd standardization over ALL dims buckets (the model covers every
-    // bucket, unlike the training twin's data-present msd), index-ordered
-    // dot, sigmoid — recomputed independently from the same file.
-    // Training is deliberately out of this twin (it is text_quality_clf's
-    // oracle, same GD path); the model partition is picked by deriving the
-    // same `clf-<n>` model id from this SF's document count, like the
-    // sim_pq_prod twin.
-    // One twin per face, pointed at THAT face's freeze dir (trainings can
-    // differ in the last ulp, so faces never share a model).
-    "clf_quality_frozen" -> clfFrozenTwinSql(ClfFrozenDir),
-    "stream_clf_score" -> clfFrozenTwinSql(ClfStreamFrozenDir),
-
-    "text_hashed_features" ->
-      s"""WITH occ AS (SELECT doc_id, ${phSql("t", "0")} % 64 AS b
-         |  FROM (SELECT doc_id, unnest($Toks) AS t FROM documents)),
-         |c AS (SELECT doc_id, b, CAST(count(*) AS BIGINT) AS c FROM occ GROUP BY 1, 2)
-         |SELECT doc_id,
-         |  array_to_string(list(b ORDER BY b), ',') AS indices,
-         |  array_to_string(list(c ORDER BY b), ',') AS counts
-         |FROM c GROUP BY 1""".stripMargin,
-    // Twin of TextOps.bm25: the float expression is mirrored term for
-    // term, constants entering through the same ops (k1+1 as 1.2 + 1 —
-    // never a pre-folded 2.2, which DuckDB would take through DECIMAL).
-    "text_bm25" ->
-      s"""WITH $Bm25Ctes
-         |SELECT doc_id, n_matched_terms, score FROM bm25
-         |ORDER BY score DESC, doc_id ASC LIMIT 20""".stripMargin,
-    // Twin of TextOps.topTerms: same (count desc, term asc) rank.
-    "text_top_terms" ->
-      s"""WITH occ AS (SELECT lang, unnest($Toks) AS term FROM documents),
-         |c AS (SELECT lang, term, CAST(count(*) AS BIGINT) AS n FROM occ GROUP BY 1, 2),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY lang
-         |  ORDER BY n DESC, term ASC) AS rank FROM c)
-         |SELECT lang, term, n, CAST(rank AS INTEGER) AS rank FROM r WHERE rank <= 10""".stripMargin,
-    "text_lang_id" ->
-      s"""WITH toks AS (SELECT doc_id, list_distinct($Toks) AS tk FROM documents),
-         |langs(lang, words) AS (VALUES
-         |  ('de', ['der','die','das','und','ist','ein','zu','mit','von','nicht']),
-         |  ('en', ['the','a','of','and','to','in','is','that','it','for']),
-         |  ('es', ['el','la','de','que','y','en','un','es','por','con']),
-         |  ('fr', ['le','la','de','et','un','est','que','pour','dans','sur']),
-         |  ('it', ['il','la','di','che','e','un','per','con','del','non'])),
-         |s AS (SELECT doc_id, lang, len(list_filter(tk, t -> list_contains(words, t))) AS hits
-         |      FROM toks CROSS JOIN langs)
-         |SELECT doc_id, lang AS lang_pred FROM (
-         |  SELECT doc_id, lang, row_number() OVER (PARTITION BY doc_id ORDER BY hits DESC, lang ASC) AS rn
-         |  FROM s) WHERE rn = 1""".stripMargin,
-    // Twin of the langid confusion matrix: the text_lang_id prediction
-    // chain re-joined to truth labels, one conditional count per predicted
-    // language (sum(CASE) cast to BIGINT to match pivot-count longs)
-    "text_langid_confusion" ->
-      s"""WITH toks AS (SELECT doc_id, list_distinct($Toks) AS tk FROM documents),
-         |langs(lang, words) AS (VALUES
-         |  ('de', ['der','die','das','und','ist','ein','zu','mit','von','nicht']),
-         |  ('en', ['the','a','of','and','to','in','is','that','it','for']),
-         |  ('es', ['el','la','de','que','y','en','un','es','por','con']),
-         |  ('fr', ['le','la','de','et','un','est','que','pour','dans','sur']),
-         |  ('it', ['il','la','di','che','e','un','per','con','del','non'])),
-         |s AS (SELECT doc_id, lang, len(list_filter(tk, t -> list_contains(words, t))) AS hits
-         |      FROM toks CROSS JOIN langs),
-         |p AS (SELECT doc_id, lang AS lang_pred FROM (
-         |  SELECT doc_id, lang, row_number() OVER (PARTITION BY doc_id ORDER BY hits DESC, lang ASC) AS rn
-         |  FROM s) WHERE rn = 1)
-         |SELECT d.lang AS lang, ${Seq("de", "en", "es", "fr", "it").map(l =>
-              s"CAST(sum(CASE WHEN p.lang_pred = '$l' THEN 1 ELSE 0 END) AS BIGINT) AS $l")
-              .mkString(", ")}
-         |FROM documents d JOIN p USING (doc_id) GROUP BY d.lang""".stripMargin,
-    "text_fingerprint" ->
-      s"""WITH t AS (SELECT doc_id, array_to_string($Toks, ' ') AS s FROM documents)
-         |SELECT doc_id, CASE WHEN s = '' THEN 0 ELSE ${phSql("s", "0")} END AS fp FROM t""".stripMargin,
-    // Twin of TextOps.zipfFit(topN=100): same rank order, the regression
-    // sums folded over the rank-sorted list (first element = init, then
-    // element-wise +) — one pinned accumulation order in both engines.
-    "text_zipf" ->
-      s"""WITH oc AS (SELECT source AS grp, unnest($Toks) AS term FROM documents),
-         |ct AS (SELECT grp, term, CAST(count(*) AS BIGINT) AS cnt FROM oc GROUP BY 1, 2),
-         |rk AS (SELECT grp, term, cnt, CAST(row_number() OVER (
-         |  PARTITION BY grp ORDER BY cnt DESC, term ASC) AS INTEGER) AS rank FROM ct),
-         |top AS (SELECT grp, rank, cnt FROM rk WHERE rank <= 100),
-         |g AS (SELECT grp, CAST(count(*) AS BIGINT) AS n_terms,
-         |  list_reduce(list([ln(CAST(rank AS DOUBLE)), ln(CAST(cnt AS DOUBLE)),
-         |      ln(CAST(rank AS DOUBLE)) * ln(CAST(cnt AS DOUBLE)),
-         |      ln(CAST(rank AS DOUBLE)) * ln(CAST(rank AS DOUBLE))] ORDER BY rank),
-         |    (a, e) -> [a[1] + e[1], a[2] + e[2], a[3] + e[3], a[4] + e[4]]) AS s
-         |  FROM top GROUP BY grp)
-         |SELECT grp AS source, n_terms,
-         |  (n_terms * s[3] - s[1] * s[2]) / (n_terms * s[4] - s[1] * s[1]) AS zipf_slope
-         |FROM g WHERE n_terms >= 3""".stripMargin,
-    // Twin of TextOps.skipgrams(window=2): same directed offset fan-out
-    // (d = 1, 2), same 1-based index walk.
-    "text_skipgrams" ->
-      s"""WITH tk AS (SELECT $Toks AS tk FROM documents),
-         |dd AS (SELECT tk, unnest([1, 2]) AS d FROM tk),
-         |pr AS (SELECT tk, d, CAST(unnest(range(1, len(tk) - d + 1)) AS INTEGER) AS i
-         |  FROM dd WHERE len(tk) > d)
-         |SELECT tk[i] AS word, tk[CAST(i + d AS INTEGER)] AS context,
-         |  count(*) AS n
-         |FROM pr GROUP BY 1, 2""".stripMargin,
-    // Twin of TextOps.winnowFingerprints(k=5, window=4).
-    "text_winnow" ->
-      s"""WITH $WinnowCtes
-         |SELECT doc_id, fp_pos, fp FROM wfp""".stripMargin,
-    // Twin of TextOps.winnowNearDups(minShared=5, maxDf=50): distinct
-    // (doc, fp) postings, lists over 50 docs cut, fp-keyed self-join.
-    "dedup_winnow" ->
-      s"""WITH $WinnowCtes,
-         |dfp AS (SELECT DISTINCT doc_id, fp FROM wfp),
-         |wkeep AS (SELECT fp FROM dfp GROUP BY fp HAVING count(*) <= 50),
-         |wind AS (SELECT doc_id, fp FROM dfp JOIN wkeep USING (fp))
-         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  CAST(count(*) AS BIGINT) AS n_shared
-         |FROM wind a JOIN wind b ON a.fp = b.fp AND a.doc_id < b.doc_id
-         |GROUP BY 1, 2 HAVING count(*) >= 5""".stripMargin,
-    // Twin of TextOps.typoPairs over the typo-injected vocabulary: same
-    // injection (char-3 deletion of words >= 6 chars), same deletion
-    // neighborhood (i=0 keeps the word), same levenshtein verify.
-    "text_typo_pairs" ->
-      s"""WITH tk AS (SELECT unnest($Toks) AS word FROM documents),
-         |v0 AS (SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM tk GROUP BY 1),
-         |v1 AS (SELECT word, cnt FROM v0 WHERE length(word) >= 5),
-         |ty AS (SELECT substr(word, 1, 2) || substr(word, 4, length(word)) AS word,
-         |  CAST(1 AS BIGINT) AS cnt FROM v1 WHERE length(word) >= 6),
-         |v AS (SELECT word, CAST(sum(cnt) AS BIGINT) AS cnt
-         |  FROM (SELECT * FROM v1 UNION ALL SELECT * FROM ty) GROUP BY 1),
-         |vf AS (SELECT word, cnt FROM v WHERE length(word) >= 5),
-         |vr AS (SELECT word, cnt, unnest(list_transform(range(0, length(word) + 1),
-         |  i -> CASE WHEN i = 0 THEN word
-         |    ELSE substr(word, 1, CAST(i - 1 AS INTEGER))
-         |      || substr(word, CAST(i + 1 AS INTEGER), CAST(length(word) AS INTEGER))
-         |  END)) AS var FROM vf)
-         |SELECT word_a, word_b, cnt_a, cnt_b FROM (
-         |  SELECT DISTINCT a.word AS word_a, b.word AS word_b,
-         |    a.cnt AS cnt_a, b.cnt AS cnt_b
-         |  FROM vr a JOIN vr b ON a.var = b.var AND a.word < b.word)
-         |WHERE levenshtein(word_a, word_b) <= 1""".stripMargin,
-    // Twin of TextCdc.cdcChunks(window=4, maskBits=5) over documents.
-    "text_cdc_chunks" ->
-      s"""WITH $TextCdcCtes
-         |SELECT doc_id, chunk_idx, start, n_chunk_chars, chunk_hash
-         |FROM tseg""".stripMargin,
-    // Twin of TextCdc.cdcDups(minShared=3, maxDf=50): distinct postings,
-    // df-capped inverted index, chunk-keyed pair count.
-    "text_cdc_dups" ->
-      s"""WITH $TextCdcCtes,
-         |cdd AS (SELECT DISTINCT doc_id, chunk_hash FROM tseg),
-         |ckeep AS (SELECT chunk_hash FROM cdd GROUP BY 1 HAVING count(*) <= 50),
-         |cind AS (SELECT doc_id, chunk_hash FROM cdd JOIN ckeep USING (chunk_hash))
-         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  CAST(count(*) AS BIGINT) AS n_shared
-         |FROM cind a JOIN cind b
-         |  ON a.chunk_hash = b.chunk_hash AND a.doc_id < b.doc_id
-         |GROUP BY 1, 2 HAVING count(*) >= 3""".stripMargin,
-
-    // Twins of Sampling.bucketOf: the salt-keyed Carter–Wegman map
-    // (a·PolyHash(id) + b) mod p over the id hash, % 10000; boundaries from
-    // cumulative split weights (0.8/0.1/0.1 -> 8000/9000). a/b are the same
-    // driver-computed literals the Spark plan embeds.
-    "sample_split" ->
-      s"""WITH b AS (SELECT doc_id,
-         |  ((${phSql("CAST(doc_id AS VARCHAR)", "0")}) * ${Sampling.saltMult("split")}
-         |    + ${Sampling.saltAdd("split")}) % 1000000007 % 10000 AS bkt FROM documents)
-         |SELECT doc_id, CASE WHEN bkt < 8000 THEN 'train'
-         |  WHEN bkt < 9000 THEN 'val' ELSE 'test' END AS split FROM b""".stripMargin,
-    "sample_fraction" ->
-      s"""SELECT doc_id, lang FROM documents
-         |WHERE ((${phSql("CAST(doc_id AS VARCHAR)", "0")}) * ${Sampling.saltMult("sample")}
-         |  + ${Sampling.saltAdd("sample")}) % 1000000007 % 10000 < 1000""".stripMargin,
-
-    // Twin of Sampling.leakageSafeSplit: the dedup_clusters closure CTEs
-    // resolve each doc's cluster id; the split key is
-    // coalesce(cluster_id, doc_id) pushed through the SAME bucket formula
-    // as sample_split — so cluster members provably share a split.
-    "split_leakage_safe" ->
-      s"""WITH RECURSIVE $MinhashPairsCtes,
-         |$ClosureCtes,
-         |keyed AS (SELECT d.doc_id, coalesce(c.cluster_id, d.doc_id) AS split_key
-         |  FROM documents d LEFT JOIN comps c USING (doc_id)),
-         |b AS (SELECT doc_id, split_key,
-         |  ((${phSql("CAST(split_key AS VARCHAR)", "0")}) * ${Sampling.saltMult("split")}
-         |    + ${Sampling.saltAdd("split")}) % 1000000007 % 10000 AS bkt FROM keyed)
-         |SELECT doc_id, split_key, CASE WHEN bkt < 8000 THEN 'train'
-         |  WHEN bkt < 9000 THEN 'val' ELSE 'test' END AS split FROM b""".stripMargin,
-
-    // Twin of Sampling.stratifiedSample: rank by the same Carter–Wegman
-    // hash within each lang stratum, keep the 20 smallest.
-    "sample_stratified" ->
-      s"""SELECT doc_id, lang FROM (
-         |  SELECT doc_id, lang, row_number() OVER (PARTITION BY lang
-         |    ORDER BY ((${phSql("CAST(doc_id AS VARCHAR)", "0")}) * ${Sampling.saltMult("strat")}
-         |      + ${Sampling.saltAdd("strat")}) % 1000000007 ASC, doc_id ASC) AS rn
-         |  FROM documents) WHERE rn <= 20""".stripMargin,
-
-    // Twin of Sampling.temperatureSample: same √n weights (sqrt is
-    // correctly rounded in both engines, unlike pow), the weight total
-    // folded in lang order via the seeded list_reduce (matching Spark's
-    // sorted-array fold — float addition is order-sensitive), same
-    // half-up round, cap, and Carter–Wegman rank fill.
-    "sample_mixture" ->
-      s"""WITH c AS (SELECT lang, CAST(count(*) AS BIGINT) AS n FROM documents GROUP BY 1),
-         |t AS (SELECT list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |    list(sqrt(CAST(n AS DOUBLE)) ORDER BY lang)), (a, b) -> a + b) AS tot FROM c),
-         |q AS (SELECT lang, least(n,
-         |    CAST(round(CAST(250 AS DOUBLE) * sqrt(CAST(n AS DOUBLE)) / tot) AS BIGINT)) AS quota
-         |  FROM c, t),
-         |r AS (SELECT doc_id, lang, row_number() OVER (PARTITION BY lang
-         |    ORDER BY ((${phSql("CAST(doc_id AS VARCHAR)", "0")}) * ${Sampling.saltMult("mix")}
-         |      + ${Sampling.saltAdd("mix")}) % 1000000007 ASC, doc_id ASC) AS rn
-         |  FROM documents)
-         |SELECT doc_id, lang FROM r JOIN q USING (lang) WHERE rn <= quota""".stripMargin,
-
-    "text_chunks" ->
-      """SELECT doc_id, CAST(start // 150 AS INTEGER) AS chunk_idx,
-        |  CAST(start AS INTEGER) AS chunk_start,
-        |  substr(text, CAST(start + 1 AS INTEGER), 200) AS chunk_text
-        |FROM (SELECT doc_id, text, unnest(range(0, length(text), 150)) AS start
-        |      FROM documents)""".stripMargin,
-    "text_inverted_index" ->
-      s"""WITH t AS (SELECT doc_id, unnest(list_distinct($Toks)) AS term FROM documents),
-         |r AS (SELECT term, doc_id, count(*) OVER (PARTITION BY term) AS df,
-         |  row_number() OVER (PARTITION BY term ORDER BY doc_id) AS rn FROM t)
-         |SELECT term, max(df) AS df,
-         |  array_to_string(list_sort(list(doc_id)), ',') AS postings
-         |FROM r WHERE rn <= 20 GROUP BY term""".stripMargin,
-    "text_repetition" ->
-      s"""WITH b AS (SELECT doc_id, $Toks AS tk FROM documents),
-         |n AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_tokens,
-         |  CASE WHEN len(tk) > 0
-         |    THEN CAST(len(tk) - len(list_distinct(tk)) AS DOUBLE) / len(tk)
-         |    ELSE 0.0 END AS dup_token_ratio FROM b),
-         |sh AS (SELECT doc_id, unnest(CASE WHEN len(tk) >= 3
-         |  THEN list_transform(range(1, len(tk) - 1), i -> array_to_string(tk[i:i+2], ' '))
-         |  ELSE [] END) AS g FROM b),
-         |gc AS (SELECT doc_id, g, count(*) AS c FROM sh GROUP BY 1, 2),
-         |tg AS (SELECT doc_id, CAST(max(c) AS DOUBLE) / sum(c) AS top_trigram_share
-         |  FROM gc GROUP BY 1)
-         |SELECT n.doc_id, n.n_tokens, n.dup_token_ratio,
-         |  coalesce(tg.top_trigram_share, 0.0) AS top_trigram_share
-         |FROM n LEFT JOIN tg USING (doc_id)""".stripMargin,
-    // digit runs counted on the EMAIL-SCRUBBED text (mirrors scrubPii: a
-    // digit run inside an email is redacted by the email pass, not twice)
-    "text_scrub" ->
-      """WITH e AS (SELECT doc_id, text, regexp_replace(text,
-        |  '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g') AS after_email
-        |FROM documents)
-        |SELECT doc_id,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-        |     + len(regexp_extract_all(after_email, '[0-9]{7,}')) AS BIGINT) AS n_redactions,
-        |  regexp_replace(after_email, '[0-9]{7,}', '<NUM>', 'g') AS scrubbed
-        |FROM e""".stripMargin,
-
-    // Twin of TextOps.lineDedup over the same synthesized line structure
-    // (lineSynthDocs — a newline every 12 space-split words of each doc):
-    // lines keyed by lower(trim(line)), empty keys dropped,
-    // distinct-doc/occurrence counts per key, first occurrence under
-    // (doc, line_no) wins, and keys in >= 3 docs are boilerplate —
-    // is_kept mirrors the Spark min-struct + df conjunction exactly.
-    "text_line_dedup" ->
-      s"""WITH $LineDedupCtes
-         |SELECT ln.doc_id, ln.line_no, ln.line, st.n_docs, st.n_occurrences,
-         |  (ln.rn = 1 AND st.n_docs < 3) AS is_kept
-         |FROM ln JOIN st USING (k)""".stripMargin,
-
-    // Twin of TextOps.lineClean over the shared line CTEs: kept lines
-    // newline-joined in line order (string_agg skips the NULLed dropped
-    // slots), per-doc removal accounting, all-removed and no-line docs
-    // emitted with empty clean_text via the left join against sdoc.
-    "text_line_clean" ->
-      s"""WITH $LineDedupCtes,
-         |v AS (SELECT ln.doc_id, ln.line_no, ln.line,
-         |  (ln.rn = 1 AND st.n_docs < 3) AS is_kept
-         |  FROM ln JOIN st USING (k)),
-         |ag AS (SELECT doc_id,
-         |  string_agg(CASE WHEN is_kept THEN line END, chr(10)
-         |    ORDER BY line_no ASC) AS clean_text,
-         |  CAST(count(*) AS BIGINT) AS n_lines,
-         |  CAST(sum(CASE WHEN is_kept THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
-         |  FROM v GROUP BY 1)
-         |SELECT d.doc_id, coalesce(ag.clean_text, '') AS clean_text,
-         |  coalesce(ag.n_lines, 0) AS n_lines,
-         |  coalesce(ag.n_kept, 0) AS n_kept,
-         |  CASE WHEN coalesce(ag.n_lines, 0) > 0
-         |    THEN CAST(ag.n_lines - ag.n_kept AS DOUBLE) / ag.n_lines
-         |    ELSE CAST(0.0 AS DOUBLE) END AS removed_ratio
-         |FROM (SELECT DISTINCT doc_id FROM sdoc) d
-         |LEFT JOIN ag USING (doc_id)""".stripMargin,
-
-    // Twin of StreamOps.lineDedupStream's batch face: the pure
-    // first-occurrence pick over the shared line CTEs — kept slot per key
-    // is the (doc_id, line_no)-minimal one (rn = 1); no boilerplate
-    // screen (corpus-global frequencies are deliberately out of the
-    // bounded-state streaming operator).
-    "stream_line_dedup" ->
-      s"""WITH $LineDedupCtes
-         |SELECT doc_id, line_no, line FROM ln WHERE rn = 1""".stripMargin,
-
-    // Twins of TextOps.dupNgramSpans / dupNgramCoverage over the shared
-    // duplicated-8-gram start positions (DupGramCtes): spans are
-    // gaps-and-islands over consecutive duplicated starts; coverage counts
-    // DISTINCT covered positions so overlapping spans are not double-counted.
-    "text_dup_spans" ->
-      s"""WITH $DupGramCtes,
-         |isl AS (SELECT doc_id, pos,
-         |  pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS isl
-         |  FROM dst)
-         |SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
-         |  CAST(max(pos) + 7 AS BIGINT) AS span_end,
-         |  CAST(count(*) AS BIGINT) AS n_grams
-         |FROM isl GROUP BY doc_id, isl""".stripMargin,
-    "text_dup_coverage" ->
-      s"""WITH $DupGramCtes,
-         |cv AS (SELECT doc_id, unnest(range(pos, pos + 8)) AS tp FROM dst),
-         |cva AS (SELECT doc_id, CAST(count(DISTINCT tp) AS BIGINT) AS dup_tokens
-         |  FROM cv GROUP BY doc_id)
-         |SELECT t.doc_id, CAST(len(tk) AS BIGINT) AS n_tokens,
-         |  CAST(coalesce(c.dup_tokens, 0) AS BIGINT) AS dup_tokens,
-         |  CAST(coalesce(c.dup_tokens, 0) AS DOUBLE) / greatest(len(tk), 1) AS dup_frac
-         |FROM dtk t LEFT JOIN cva c USING (doc_id)""".stripMargin,
-
-    // Twin of Sketches.kmvDistinct(events, k=64, event_type, user_id):
-    // same two-stage mixer (PolyHash -> Carter-Wegman affine with the
-    // "kmv" salt constants baked in at build time -> PolyHash of the
-    // zero-padded 10-digit decimal) over the value's string form, k
-    // smallest distinct hashes per group, (k-1)·M/h_k estimator, exact
-    // below k.
-    "sketch_kmv" ->
-      s"""WITH ax AS (SELECT DISTINCT event_type,
-         |  (${phSql("CAST(user_id AS VARCHAR)", "0")}
-         |   * ${graft.pipeline.Sampling.saltMult("kmv")}
-         |   + ${graft.pipeline.Sampling.saltAdd("kmv")}) % 1000000007 AS m FROM events),
-         |hx AS (SELECT DISTINCT event_type,
-         |  ${phSql("lpad(CAST(m AS VARCHAR), 10, '0')", "0")} AS h FROM ax),
-         |rk AS (SELECT event_type, h,
-         |  row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn FROM hx),
-         |kp AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_kept,
-         |  CAST(max(h) AS BIGINT) AS kth_min FROM rk WHERE rn <= 64 GROUP BY event_type)
-         |SELECT event_type, n_kept, kth_min,
-         |  CASE WHEN n_kept < 64 THEN CAST(n_kept AS DOUBLE)
-         |       ELSE 63.0 * 1000000007 / greatest(kth_min, 1) END AS est_distinct
-         |FROM kp""".stripMargin,
-
-    // Twin of Sketches.hllDistinct(events, p=10, event_type, user_id): the
-    // same kmvHash mixer, register index = low p bits, the exact integer
-    // bitlen CASE chain (no float log2), register-wise max, and the
-    // identical alpha/linear-counting estimate formula term-for-term (the
-    // 2^-rho register sum is exact in doubles, so the aggregation order
-    // cannot matter).
-    "sketch_hll" -> {
-      val p = 10
-      val m = 1 << p
-      val bigW = 30 - p
-      val alpha = 0.7213 / (1.0 + 1.079 / m)
-      val bitLenSql = (bigW to 1 by -1)
-        .map(b => s"WHEN w >= ${1L << (b - 1)} THEN $b").mkString(" ")
-      // CAST: DuckDB types a bare decimal literal as DECIMAL, whose
-      // fixed-point multiplication overflows (and would round differently
-      // from Spark's double math anyway)
-      val est = s"CAST($alpha AS DOUBLE) * $m * $m / (zs + ($m - n_registers_hit))"
-      s"""WITH ax AS (SELECT DISTINCT event_type,
-         |  (${phSql("CAST(user_id AS VARCHAR)", "0")}
-         |   * ${graft.pipeline.Sampling.saltMult("kmv")}
-         |   + ${graft.pipeline.Sampling.saltAdd("kmv")}) % 1000000007 AS m FROM events),
-         |hx AS (SELECT DISTINCT event_type,
-         |  ${phSql("lpad(CAST(m AS VARCHAR), 10, '0')", "0")} AS h FROM ax),
-         |rr AS (SELECT event_type, h & ${m - 1} AS idx, w,
-         |  ${bigW + 1} - (CASE $bitLenSql ELSE 0 END) AS rho
-         |  FROM (SELECT event_type, h, h >> $p AS w FROM hx)),
-         |rg AS (SELECT event_type, idx, max(rho) AS r FROM rr GROUP BY 1, 2),
-         |sk AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_registers_hit,
-         |  sum(power(2.0, -r)) AS zs FROM rg GROUP BY 1)
-         |SELECT event_type, n_registers_hit,
-         |  CASE WHEN $est <= ${2.5 * m} AND ($m - n_registers_hit) > 0
-         |    THEN $m * ln(CAST($m AS DOUBLE) / ($m - n_registers_hit))
-         |    ELSE $est END AS est_distinct
-         |FROM sk""".stripMargin
-    },
-
-    // Twin of Layout.zValue(user_id, day, 16): the same bit interleave as
-    // an arithmetic sum of disjoint-bit terms (sum == OR when no bits
-    // collide); day via integer division of epoch-ns, no float rounding.
-    "layout_zorder" -> {
-      val zTerms = (0 until 16).map(b =>
-        s"(((user_id >> $b) & 1) << ${2 * b}) + (((day >> $b) & 1) << ${2 * b + 1})")
-        .mkString(" + ")
-      s"""WITH e AS (SELECT event_id, user_id,
-         |  epoch_ns(ts) // 86400000000000 AS day FROM events)
-         |SELECT event_id, user_id, day, CAST($zTerms AS BIGINT) AS z FROM e""".stripMargin
-    },
-    // Twin of Layout.skippingStats over (user_id, day) at 300 rows/file:
-    // same z terms, per-z rollup, running-count file assignment, min/max
-    // manifest, same range skip verdicts.
-    "layout_skipping" -> {
-      val zTerms = (0 until 16).map(b =>
-        s"(((x >> $b) & 1) << ${2 * b}) + (((y >> $b) & 1) << ${2 * b + 1})")
-        .mkString(" + ")
-      s"""WITH e AS (SELECT user_id AS x,
-         |  epoch_ns(ts) // 86400000000000 AS y FROM events),
-         |zt AS (SELECT x, y, CAST($zTerms AS BIGINT) AS z FROM e),
-         |zs AS (SELECT z, CAST(count(*) AS BIGINT) AS cnt,
-         |  min(x) AS zx0, max(x) AS zx1, min(y) AS zy0, max(y) AS zy1
-         |  FROM zt GROUP BY 1),
-         |rs AS (SELECT *, CAST(sum(cnt) OVER (ORDER BY z
-         |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS e2
-         |  FROM zs),
-         |f AS (SELECT (e2 - cnt) // 300 AS file_id, cnt, zx0, zx1, zy0, zy1 FROM rs)
-         |SELECT file_id, CAST(sum(cnt) AS BIGINT) AS n_rows,
-         |  min(zx0) AS min_x, max(zx1) AS max_x,
-         |  min(zy0) AS min_y, max(zy1) AS max_y,
-         |  (max(zx1) < 10 OR min(zx0) > 20) AS skip_x_range,
-         |  (max(zy1) < 19723 OR min(zy0) > 19725) AS skip_y_range
-         |FROM f GROUP BY 1""".stripMargin
-    },
-    // Twin of Layout.hilbertValue(user_id, day, 16): one CTE per bit level
-    // (linear chain — each referenced once, so plain inlining stays
-    // linear), same reflect+swap walk with d accumulated before rotation
-    "layout_hilbert" -> {
-      val bits = 16
-      // rx/ry MUST be two's-complement bit tests (x & S), not (x // S) % 2:
-      // the reflect step makes coordinates transiently negative (the walk
-      // only ever reads their low bits), and floor-div/mod diverge from
-      // bit extraction below zero
-      val levels = (bits - 1 to 0 by -1).map { l =>
-        val S = 1L << l
-        s"""h$l AS (SELECT event_id, user_id, day,
-           |  CASE WHEN (y & $S) = 0
-           |    THEN (CASE WHEN (x & $S) <> 0 THEN $S - 1 - y ELSE y END)
-           |    ELSE x END AS x,
-           |  CASE WHEN (y & $S) = 0
-           |    THEN (CASE WHEN (x & $S) <> 0 THEN $S - 1 - x ELSE x END)
-           |    ELSE y END AS y,
-           |  d + $S * $S * xor(3 * (CASE WHEN (x & $S) <> 0 THEN 1 ELSE 0 END),
-           |    CASE WHEN (y & $S) <> 0 THEN 1 ELSE 0 END) AS d
-           |  FROM h${l + 1})""".stripMargin
-      }
-      s"""WITH e AS (SELECT event_id, user_id,
-         |  epoch_ns(ts) // 86400000000000 AS day FROM events),
-         |h$bits AS (SELECT event_id, user_id, day,
-         |  CAST(user_id AS BIGINT) AS x, day AS y, CAST(0 AS BIGINT) AS d FROM e),
-         |${levels.mkString(",\n")}
-         |SELECT event_id, user_id, day, CAST(d AS BIGINT) AS h FROM h0""".stripMargin
-    },
-    // Twin of Layout.compactionPlan(documents, 4096): file_id is the
-    // exclusive byte prefix div target in doc_id order, manifest per file
-    "layout_compaction" ->
-      """WITH sized AS (SELECT doc_id, CAST(n_chars AS BIGINT) AS b
-        |  FROM documents WHERE n_chars > 0),
-        |pre AS (SELECT doc_id, b,
-        |  CAST(sum(b) OVER (ORDER BY doc_id) - b AS BIGINT) AS pref FROM sized)
-        |SELECT pref // 4096 AS file_id, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(b) AS BIGINT) AS total_bytes,
-        |  min(doc_id) AS min_doc, max(doc_id) AS max_doc
-        |FROM pre GROUP BY 1""".stripMargin,
-    // Twin of Sampling.tokenBudgetSample: per-source running token total in
-    // doc_id order, keep while the exclusive prefix is under the budget
-    "sample_token_budget" -> {
-      val budgetRows = TokenBudgets
-        .map { case (s, b) => s"('$s', CAST($b AS BIGINT))" }.mkString(", ")
-      s"""WITH lens AS (SELECT doc_id, source,
-         |  CAST(len($Toks) AS BIGINT) AS n_toks FROM documents),
-         |cum AS (SELECT doc_id, source, n_toks,
-         |  CAST(sum(n_toks) OVER (PARTITION BY source ORDER BY doc_id) AS BIGINT) AS cum_toks
-         |  FROM lens),
-         |bud AS (SELECT * FROM (VALUES $budgetRows) t(source, budget))
-         |SELECT doc_id, source, n_toks, cum_toks
-         |FROM cum JOIN bud USING (source)
-         |WHERE cum_toks - n_toks < budget""".stripMargin
-    },
-
-    // Twin of WebOps.canonicalizeUrl + urlDomain over the synthesized
-    // URLs: same component regexes, same default-port/trailing-slash/
-    // tracking-param/fragment rules, params sorted lexicographically
-    // (the canonicalization chain is the shared webCanonSql — one SQL
-    // definition for this twin and web_url_dedup's).
-    "web_canonical_url" ->
-      s"""WITH $WebSynthCte,
-         |${webCanonSql("wdoc")}
-         |SELECT doc_id, url, canonical_url, domain FROM canon""".stripMargin,
-    // Twin of WebOps.urlDedup over the VARIANT synth: refetch variants of
-    // one page collapse to one canonical identity; keeper = min doc_id,
-    // n_variants = the refetch count.
-    "web_url_dedup" ->
-      s"""WITH $WebVariantCte,
-         |${webCanonSql("vdoc")}
-         |SELECT canonical_url, CAST(min(doc_id) AS BIGINT) AS keeper_doc_id,
-         |  CAST(count(*) AS BIGINT) AS n_variants
-         |FROM canon GROUP BY 1""".stripMargin,
-    // Twin of WebOps.domainStats: per registered domain, doc/token/lang
-    // counts and the mean quality score summed as FIXED-POINT longs
-    // (floor(q*1e9)) — exact and order-independent in both engines, no
-    // accumulation-order pinning (and no per-group list) needed.
-    "web_domain_stats" ->
-      s"""WITH $WebSynthCte,
-         |wh AS (SELECT *, $WebHostSql AS __host FROM wdoc),
-         |f AS (SELECT ${pslDomainSql("__host")} AS domain, doc_id, lang, text,
-         |  $Toks AS toks,
-         |  CAST(len($Toks) AS BIGINT) AS tok FROM wh),
-         |g AS (SELECT domain, doc_id, lang, tok,
-         |  CAST(floor((${qualityScoreSql("toks", "text")}) * 1e9) AS BIGINT)
-         |    AS qf FROM f)
-         |SELECT domain, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(tok) AS BIGINT) AS n_tokens,
-         |  CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-         |  CAST(sum(qf) AS DOUBLE) / CAST(count(*) AS DOUBLE) / 1e9
-         |    AS avg_quality
-         |FROM g GROUP BY 1""".stripMargin,
-    // Twin of WebOps.domainBudgetCap(60): per-domain running token total
-    // in doc_id order, keep while the exclusive prefix is under budget —
-    // the tokenBudgetSample rule on the derived domain key.
-    "sample_domain_budget" ->
-      s"""WITH $WebSynthCte,
-         |wh AS (SELECT *, $WebHostSql AS __host FROM wdoc),
-         |t AS (SELECT doc_id, ${pslDomainSql("__host")} AS domain,
-         |  CAST(len($Toks) AS BIGINT) AS n_tokens FROM wh),
-         |c AS (SELECT doc_id, domain, n_tokens,
-         |  CAST(sum(n_tokens) OVER (PARTITION BY domain ORDER BY doc_id ASC
-         |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens FROM t)
-         |SELECT doc_id, domain, n_tokens, cum_tokens FROM c
-         |WHERE cum_tokens - n_tokens < 60""".stripMargin,
-    // Twin of WebOps.blocklistFilter over the synth + the deterministic
-    // blocklist: survivors = docs whose registered domain matches no
-    // domain rule and whose canonical URL starts with no prefix rule.
-    "web_blocklist" ->
-      s"""WITH $WebSynthCte,
-         |$WebBlocklistCte,
-         |${webCanonSql("wdoc")}
-         |SELECT c.doc_id, c.url, c.canonical_url, c.domain
-         |FROM canon c
-         |WHERE c.domain NOT IN (SELECT pattern FROM bl WHERE kind = 'domain')
-         |  AND NOT EXISTS (SELECT 1 FROM bl b WHERE b.kind = 'prefix'
-         |    AND starts_with(c.canonical_url, b.pattern))""".stripMargin,
-    // Twin of WebOps.crawlRate over the events-derived fetch synth:
-    // per (PSL registered domain, epoch-aligned tumbling hour) fetch
-    // counts + the over-limit verdict. Shared by all three faces.
-    "web_crawl_rate" ->
-      s"""WITH f AS (SELECT event_id, epoch_ns(ts) AS tsn,
-         |  'https://WWW.' || event_type || '-' ||
-         |  CAST(user_id % 13 AS VARCHAR) || '.co.uk/e/' ||
-         |  CAST(event_id AS VARCHAR) AS url FROM events),
-         |h AS (SELECT *, $WebHostSql AS __host FROM f),
-         |d AS (SELECT ${pslDomainSql("__host")} AS domain,
-         |  ((tsn // 1000000) // 3600000) * 3600000 AS window_start FROM h)
-         |SELECT domain, CAST(window_start AS BIGINT) AS window_start,
-         |  CAST(count(*) AS BIGINT) AS n_fetches,
-         |  count(*) > 2 AS over_limit
-         |FROM d GROUP BY 1, 2""".stripMargin,
-    // Twin of WebOps.outlinks over the link synth: regexp-extracted link
-    // mentions, one row per link, with the link's canonical identity
-    // (the shared webCanonSql chain over `link AS url`) and both
-    // registered domains through the shared PSL SQL.
-    "web_outlinks" ->
-      s"""WITH $WebSynthCte,
-         |${webCanonSql("wdoc", "doc_id, text", "s")},
-         |$WebLinkedCte,
-         |wh AS (SELECT *, $WebHostSql AS __host FROM ldoc),
-         |lk AS (SELECT doc_id, ${pslDomainSql("__host")} AS src_domain,
-         |  unnest(regexp_extract_all(text, '(?i)https?://\\S+')) AS link
-         |  FROM wh),
-         |lsrc AS (SELECT doc_id, src_domain, link, link AS url FROM lk),
-         |${webCanonSql("lsrc", "doc_id, src_domain, link")}
-         |SELECT doc_id, src_domain, link,
-         |  canonical_url AS canonical_link, domain AS dst_domain
-         |FROM canon""".stripMargin,
-    // Twin of WebOps.linkGraph: the outlink rows aggregated to
-    // (src_domain, dst_domain) edges with link + distinct-page counts.
-    "web_link_graph" ->
-      s"""WITH $WebSynthCte,
-         |${webCanonSql("wdoc", "doc_id, text", "s")},
-         |$WebLinkedCte,
-         |wh AS (SELECT *, $WebHostSql AS __host FROM ldoc),
-         |lk AS (SELECT doc_id, ${pslDomainSql("__host")} AS src_domain,
-         |  unnest(regexp_extract_all(text, '(?i)https?://\\S+')) AS link
-         |  FROM wh),
-         |lsrc AS (SELECT doc_id, src_domain, link, link AS url FROM lk),
-         |${webCanonSql("lsrc", "doc_id, src_domain, link")}
-         |SELECT src_domain, domain AS dst_domain,
-         |  CAST(count(*) AS BIGINT) AS n_links,
-         |  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-         |FROM canon GROUP BY 1, 2""".stripMargin,
-    // Twin of WebOps.frontier: outlink mentions rolled up on the
-    // canonical-link key, minus the links whose canonical identity is
-    // already a corpus page (the scanon chain) — the
-    // discovered-but-unfetched URL set.
-    "web_frontier" ->
-      s"""WITH $WebSynthCte,
-         |${webCanonSql("wdoc", "doc_id, text", "s")},
-         |$WebLinkedCte,
-         |wh AS (SELECT *, $WebHostSql AS __host FROM ldoc),
-         |lk AS (SELECT doc_id, ${pslDomainSql("__host")} AS src_domain,
-         |  unnest(regexp_extract_all(text, '(?i)https?://\\S+')) AS link
-         |  FROM wh),
-         |lsrc AS (SELECT doc_id, src_domain, link, link AS url FROM lk),
-         |${webCanonSql("lsrc", "doc_id, src_domain, link")},
-         |ag AS (SELECT canonical_url AS canonical_link,
-         |  domain AS dst_domain,
-         |  CAST(count(*) AS BIGINT) AS n_mentions,
-         |  CAST(count(DISTINCT src_domain) AS BIGINT) AS n_src_domains,
-         |  CAST(min(doc_id) AS BIGINT) AS first_seen_doc
-         |  FROM canon GROUP BY 1, 2)
-         |SELECT * FROM ag
-         |WHERE canonical_link NOT IN (SELECT canonical_url FROM scanon)""".stripMargin,
-    // Twin of WebOps.fetchSchedule over the crawl-fetch synth: the
-    // politeness recurrence in its closed form — per-domain rank plus a
-    // per-domain running max of (arrival − delay·rank) in event_id order.
-    "web_fetch_schedule" ->
-      s"""WITH f AS (SELECT event_id, epoch_ns(ts) AS tsn,
-         |  'https://WWW.' || event_type || '-' ||
-         |  CAST(user_id % 13 AS VARCHAR) || '.co.uk/e/' ||
-         |  CAST(event_id AS VARCHAR) AS url FROM events),
-         |h AS (SELECT *, $WebHostSql AS __host FROM f),
-         |d AS (SELECT event_id, ${pslDomainSql("__host")} AS domain,
-         |  CAST(tsn // 1000000 AS BIGINT) AS arrival_ms FROM h),
-         |r AS (SELECT *, CAST(row_number() OVER (PARTITION BY domain
-         |    ORDER BY event_id) - 1 AS BIGINT) AS fetch_rank FROM d),
-         |m AS (SELECT *, max(arrival_ms - 60000 * fetch_rank)
-         |    OVER (PARTITION BY domain ORDER BY event_id
-         |      ROWS UNBOUNDED PRECEDING) AS mx FROM r)
-         |SELECT event_id, domain, arrival_ms, fetch_rank,
-         |  CAST(60000 * fetch_rank + mx AS BIGINT) AS scheduled_ms,
-         |  CAST(60000 * fetch_rank + mx - arrival_ms AS BIGINT) AS wait_ms
-         |FROM m""".stripMargin,
-    // Twin of WebOps.domainBoilerplate over the page synth: 12-word line
-    // chunks wrapped in per-domain nav/footer chrome, then the
-    // (domain, normalized line) distinct-doc counts against the
-    // per-domain doc counts under the 0.6-ratio / 2-doc rule.
-    "web_boilerplate" ->
-      s"""WITH $WebSynthCte,
-         |wh AS (SELECT *, $WebHostSql AS __host FROM wdoc),
-         |pg AS (SELECT doc_id, domain,
-         |  'home | about | ' || domain || chr(10) ||
-         |  array_to_string(list_transform(
-         |    range(0, CAST(ceil(len(w) / 12.0) AS INTEGER)),
-         |    i -> array_to_string(w[i * 12 + 1 : i * 12 + 12], ' ')), chr(10))
-         |    || chr(10) || 'copyright ' || domain AS text
-         |  FROM (SELECT doc_id, ${pslDomainSql("__host")} AS domain,
-         |    string_split(text, ' ') AS w FROM wh)),
-         |ln0 AS (SELECT doc_id, domain, u.no AS line_no, u.line FROM (
-         |  SELECT doc_id, domain, unnest(list_transform(range(1, len(ls) + 1),
-         |    i -> struct_pack(no := CAST(i - 1 AS INTEGER), line := ls[i]))) AS u
-         |  FROM (SELECT doc_id, domain, string_split(text, chr(10)) AS ls
-         |    FROM pg))),
-         |ln AS (SELECT doc_id, domain, line_no, line, lower(trim(line)) AS k
-         |  FROM ln0 WHERE lower(trim(line)) <> ''),
-         |st AS (SELECT domain, k,
-         |  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-         |  FROM ln GROUP BY 1, 2),
-         |dd AS (SELECT domain,
-         |  CAST(count(DISTINCT doc_id) AS BIGINT) AS domain_docs
-         |  FROM pg GROUP BY 1)
-         |SELECT ln.doc_id, ln.domain, ln.line_no, ln.line,
-         |  st.n_docs, dd.domain_docs,
-         |  (st.n_docs >= 2 AND CAST(st.n_docs AS DOUBLE) >=
-         |    0.6 * CAST(dd.domain_docs AS DOUBLE)) AS is_boilerplate
-         |FROM ln JOIN st ON ln.domain = st.domain AND ln.k = st.k
-         |  JOIN dd ON ln.domain = dd.domain""".stripMargin,
-    // Twin of WebOps.robotsEval over the synth + the deterministic rules:
-    // per doc, the matching rules of its registered domain ranked by
-    // (prefix length DESC, allow DESC) — rank 1 is the REP winner;
-    // unmatched docs default to allowed with an empty matched prefix.
-    "web_robots" ->
-      s"""WITH $WebSynthCte,
-         |$RobotsRulesCte,
-         |wh AS (SELECT *, $WebHostSql AS __host FROM wdoc),
-         |d AS (SELECT doc_id, url, ${pslDomainSql("__host")} AS domain,
-         |  (CASE WHEN path0 = '' THEN '/' ELSE path0 END) AS path
-         |  FROM (SELECT *, regexp_extract(url,
-         |    '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1) AS path0
-         |    FROM wh)),
-         |m AS (SELECT d.doc_id, r.directive, r.path_prefix,
-         |  row_number() OVER (PARTITION BY d.doc_id
-         |    ORDER BY len(r.path_prefix) DESC,
-         |      (r.directive = 'allow') DESC) AS rn
-         |  FROM d JOIN rr r ON d.domain = r.domain
-         |    AND starts_with(d.path, r.path_prefix)),
-         |w AS (SELECT doc_id, directive, path_prefix FROM m WHERE rn = 1)
-         |SELECT d.doc_id, d.url, d.domain, d.path,
-         |  coalesce(w.directive = 'allow', TRUE) AS allowed,
-         |  coalesce(w.path_prefix, '') AS matched_prefix
-         |FROM d LEFT JOIN w ON d.doc_id = w.doc_id""".stripMargin,
-    // batch face of the streaming URL-identity dedup — parity with
-    // web_url_dedup by construction (same canonical key, one batch from
-    // empty state), so the twin is the batch face's SQL
-    "stream_url_dedup" ->
-      s"""WITH $WebVariantCte,
-         |${webCanonSql("vdoc")}
-         |SELECT canonical_url, CAST(min(doc_id) AS BIGINT) AS keeper_doc_id,
-         |  CAST(count(*) AS BIGINT) AS n_variants
-         |FROM canon GROUP BY 1""".stripMargin,
-    // Twin of ChatOps.turnStats over the conversation synth: the same
-    // lag-based adjacency check (system rows contribute a null comparison
-    // value) and the same per-role token sums.
-    "sft_turn_stats" ->
-      s"""WITH $ChatTurnsCte,
-         |lg AS (SELECT *, lag(CASE WHEN role <> 'system' THEN role END)
-         |    OVER (PARTITION BY conv_id ORDER BY turn_no) AS prev
-         |  FROM turns),
-         |ag AS (SELECT conv_id,
-         |  CAST(count(*) AS BIGINT) AS n_turns,
-         |  CAST(sum(CASE WHEN role = 'user' THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_user,
-         |  CAST(sum(CASE WHEN role = 'assistant' THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_assistant,
-         |  max(role = 'system') AS has_system,
-         |  CAST(sum(CASE WHEN trim(content) = '' THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_empty,
-         |  CAST(sum(CASE WHEN role = 'user'
-         |    THEN len(${toksOf("content")}) ELSE 0 END) AS BIGINT)
-         |    AS user_tokens,
-         |  CAST(sum(CASE WHEN role = 'assistant'
-         |    THEN len(${toksOf("content")}) ELSE 0 END) AS BIGINT)
-         |    AS assistant_tokens,
-         |  NOT max(role <> 'system' AND prev IS NOT NULL AND role = prev)
-         |    AS alternation_ok,
-         |  (arg_min(role, CASE WHEN role <> 'system' THEN turn_no END)
-         |    = 'user') AS starts_with_user
-         |  FROM lg GROUP BY 1)
-         |SELECT *, (alternation_ok AND starts_with_user
-         |  AND n_assistant >= 1 AND n_empty = 0) AS valid FROM ag""".stripMargin,
-    // Twin of ChatOps.renderChat: segments string_agg'd in turn order —
-    // the ORDER BY pins the same sequence array_sort pins on the Spark
-    // side (turn_no is unique per conversation).
-    "sft_render" ->
-      s"""WITH $ChatTurnsCte,
-         |r AS (SELECT conv_id,
-         |  string_agg('<|' || role || '|>' || content, chr(10)
-         |    ORDER BY turn_no) AS text
-         |  FROM turns GROUP BY 1)
-         |SELECT conv_id, text, CAST(length(text) AS BIGINT) AS n_chars,
-         |  CAST(len($Toks) AS BIGINT) AS n_tokens FROM r""".stripMargin,
-    // Twin of ChatOps.lossSpans: rank + running segment-length sum per
-    // conversation, one separator char per preceding segment.
-    "sft_spans" ->
-      s"""WITH $ChatTurnsCte,
-         |sg AS (SELECT conv_id, turn_no, role,
-         |  CAST(length('<|' || role || '|>' || content) AS BIGINT)
-         |    AS seg_len
-         |  FROM turns),
-         |o AS (SELECT conv_id, turn_no, role, seg_len,
-         |  row_number() OVER (PARTITION BY conv_id ORDER BY turn_no) - 1
-         |    AS rnk,
-         |  coalesce(sum(seg_len) OVER (PARTITION BY conv_id ORDER BY turn_no
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prior
-         |  FROM sg)
-         |SELECT conv_id, turn_no, role,
-         |  CAST(prior + rnk AS BIGINT) AS start_char,
-         |  CAST(prior + rnk + seg_len AS BIGINT) AS end_char,
-         |  (role <> 'assistant') AS loss_masked FROM o""".stripMargin,
-    // Twin of ChatOps.conversationDedup over the duplicate synth: md5 of
-    // the rendered identity, lowest conv_id keeper.
-    "sft_dedup" ->
-      s"""WITH $ChatVariantCte,
-         |r AS (SELECT conv_id,
-         |  string_agg('<|' || role || '|>' || content, chr(10)
-         |    ORDER BY turn_no) AS text
-         |  FROM vturns GROUP BY 1)
-         |SELECT md5(text) AS conv_hash,
-         |  CAST(min(conv_id) AS BIGINT) AS keeper_conv_id,
-         |  CAST(count(*) AS BIGINT) AS n_copies FROM r GROUP BY 1""".stripMargin,
-    // Twin of Packing.packSequences(renderChat(turns), capacity=256) —
-    // the pack_sequences twin over the rendered-conversation lengths.
-    "sft_pack" ->
-      s"""WITH $ChatTurnsCte,
-         |r AS (SELECT conv_id,
-         |  string_agg('<|' || role || '|>' || content, chr(10)
-         |    ORDER BY turn_no) AS text
-         |  FROM turns GROUP BY 1),
-         |lens AS (SELECT conv_id, CAST(len($Toks) AS BIGINT) AS n_toks
-         |  FROM r),
-         |nz AS (SELECT * FROM lens WHERE n_toks > 0),
-         |c AS (SELECT conv_id, n_toks,
-         |  CAST(sum(n_toks) OVER (ORDER BY conv_id) AS BIGINT) AS e FROM nz),
-         |s AS (SELECT conv_id, n_toks, e - n_toks AS st, e FROM c),
-         |x AS (SELECT conv_id, n_toks, st, e,
-         |  unnest(range(st // 256, ((e - 1) // 256) + 1)) AS chunk_id FROM s)
-         |SELECT conv_id, n_toks, chunk_id,
-         |  greatest(chunk_id * 256, st) - st AS tok_start,
-         |  least((chunk_id + 1) * 256, e) - st AS tok_end
-         |FROM x""".stripMargin,
-    // Twin of ChatOps.packedLossSpans(capacity=256): per-turn segment
-    // token counts run forward within the conversation, conversations
-    // placed by the global running sum of their totals (== the sft_pack
-    // placement — segment counts are additive under rendering), turns
-    // exploded over their overlapped chunks with within-chunk ranges.
-    "sft_pack_spans" ->
-      s"""WITH $ChatTurnsCte,
-         |sg AS (SELECT conv_id, turn_no, role,
-         |  CAST(len(${toksOf("'<|' || role || '|>' || content")})
-         |    AS BIGINT) AS t
-         |  FROM turns),
-         |twn AS (SELECT *, sum(t) OVER (PARTITION BY conv_id
-         |  ORDER BY turn_no ROWS UNBOUNDED PRECEDING) AS te FROM sg),
-         |ct AS (SELECT conv_id, CAST(sum(t) AS BIGINT) AS n_toks
-         |  FROM sg GROUP BY 1),
-         |nz AS (SELECT * FROM ct WHERE n_toks > 0),
-         |c AS (SELECT conv_id, n_toks,
-         |  CAST(sum(n_toks) OVER (ORDER BY conv_id) AS BIGINT) AS e
-         |  FROM nz),
-         |s AS (SELECT conv_id, e - n_toks AS cst FROM c),
-         |g AS (SELECT twn.conv_id, turn_no, role,
-         |  CAST(cst + te - t AS BIGINT) AS gs, CAST(cst + te AS BIGINT) AS ge
-         |  FROM twn JOIN s USING (conv_id) WHERE t > 0),
-         |x AS (SELECT *, unnest(range(gs // 256, ((ge - 1) // 256) + 1))
-         |  AS chunk_id FROM g)
-         |SELECT conv_id, turn_no, role, chunk_id,
-         |  greatest(chunk_id * 256, gs) - chunk_id * 256 AS tok_start,
-         |  least((chunk_id + 1) * 256, ge) - chunk_id * 256 AS tok_end,
-         |  (role <> 'assistant') AS loss_masked
-         |FROM x""".stripMargin,
-    // Twin of ChatOps.fitContext(budget=20): per-conv system-token sum +
-    // reverse running sum of non-system tokens, suffix-fit verdict.
-    "sft_truncate" ->
-      s"""WITH $ChatTurnsCte,
-         |tk AS (SELECT conv_id, turn_no, role,
-         |  CAST(len(${toksOf("content")}) AS BIGINT) AS n_tokens
-         |  FROM turns),
-         |w AS (SELECT conv_id, turn_no, role, n_tokens,
-         |  sum(CASE WHEN role = 'system' THEN n_tokens ELSE 0 END)
-         |    OVER (PARTITION BY conv_id) AS systok,
-         |  sum(CASE WHEN role <> 'system' THEN n_tokens ELSE 0 END)
-         |    OVER (PARTITION BY conv_id ORDER BY turn_no DESC
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sfx
-         |  FROM tk)
-         |SELECT conv_id, turn_no, role, n_tokens,
-         |  (CASE WHEN role = 'system' THEN systok <= 20
-         |     ELSE sfx + systok <= 20 END) AS kept
-         |FROM w""".stripMargin,
-    // Twin of decontaminate(userPrompts(turns), test split, n=5): the
-    // decontaminate twin's gram/bench algebra over the per-conversation
-    // concatenated user turns.
-    "sft_decontam" ->
-      s"""WITH $ChatTurnsCte,
-         |up AS (SELECT conv_id,
-         |  string_agg(content, ' ' ORDER BY turn_no) AS text
-         |  FROM turns WHERE role = 'user' GROUP BY 1),
-         |ptoks AS (SELECT conv_id, $Toks AS tk FROM up),
-         |pg AS (SELECT conv_id, list_distinct(CASE WHEN len(tk) >= 5
-         |  THEN list_transform(range(1, len(tk) - 3),
-         |    i -> array_to_string(tk[i:i+4], ' '))
-         |  ELSE [] END) AS g FROM ptoks),
-         |btoks AS (SELECT doc_id, $Toks AS tk FROM documents),
-         |bgl AS (SELECT doc_id, list_distinct(CASE WHEN len(tk) >= 5
-         |  THEN list_transform(range(1, len(tk) - 3),
-         |    i -> array_to_string(tk[i:i+4], ' '))
-         |  ELSE [] END) AS g FROM btoks),
-         |bench AS (SELECT doc_id FROM documents
-         |  WHERE ((${phSql("CAST(doc_id AS VARCHAR)", "0")}) * ${Sampling.saltMult("split")}
-         |    + ${Sampling.saltAdd("split")}) % 1000000007 % 10000 >= 9000),
-         |bg AS (SELECT DISTINCT unnest(bgl.g) AS gram
-         |  FROM bgl JOIN bench USING (doc_id)),
-         |dg AS (SELECT conv_id, unnest(g) AS gram FROM pg),
-         |sh AS (SELECT dg.conv_id, count(*) AS n_shared_ngrams
-         |  FROM dg JOIN bg USING (gram) GROUP BY 1)
-         |SELECT up.conv_id,
-         |  coalesce(sh.n_shared_ngrams, 0) AS n_shared_ngrams,
-         |  coalesce(sh.n_shared_ngrams, 0) > 0 AS contaminated
-         |FROM up LEFT JOIN sh USING (conv_id)""".stripMargin,
-    // Twin of ChatOps.bestOfN over the scored-sample synth: the same two
-    // rank windows (score desc/asc, sample_id tie-break) pivoted by
-    // conditional aggregation.
-    "pref_best_of_n" ->
-      s"""WITH $BonSamplesCte,
-         |rk AS (SELECT *,
-         |  row_number() OVER (PARTITION BY prompt_id
-         |    ORDER BY score DESC, sample_id ASC) AS rb,
-         |  row_number() OVER (PARTITION BY prompt_id
-         |    ORDER BY score ASC, sample_id ASC) AS rw
-         |  FROM bon),
-         |ag AS (SELECT prompt_id,
-         |  CAST(count(*) AS BIGINT) AS n_samples,
-         |  CAST(max(CASE WHEN rb = 1 THEN sample_id END) AS BIGINT)
-         |    AS chosen_sample_id,
-         |  max(CASE WHEN rb = 1 THEN response END) AS chosen,
-         |  max(CASE WHEN rb = 1 THEN score END) AS chosen_score,
-         |  CAST(max(CASE WHEN rw = 1 THEN sample_id END) AS BIGINT)
-         |    AS rejected_sample_id,
-         |  max(CASE WHEN rw = 1 THEN response END) AS rejected,
-         |  max(CASE WHEN rw = 1 THEN score END) AS rejected_score
-         |  FROM rk GROUP BY 1)
-         |SELECT *, chosen_score - rejected_score AS score_margin,
-         |  (chosen_sample_id = rejected_sample_id) AS degenerate
-         |FROM ag""".stripMargin,
-    // Twin of ChatOps.prefLengthBias over the pair synth: integer token
-    // sums divided once per aggregate (exact operands, IEEE division).
-    "pref_length_bias" ->
-      s"""WITH $PrefPairsCte,
-         |t AS (SELECT source,
-         |  len(${toksOf("chosen")}) AS c, len(${toksOf("rejected")}) AS r
-         |  FROM pp)
-         |SELECT source, CAST(count(*) AS BIGINT) AS n_pairs,
-         |  CAST(sum(c) AS DOUBLE) / count(*) AS chosen_tokens_mean,
-         |  CAST(sum(r) AS DOUBLE) / count(*) AS rejected_tokens_mean,
-         |  CAST(sum(CASE WHEN c > r THEN 1 ELSE 0 END) AS DOUBLE) / count(*)
-         |    AS longer_chosen_ratio,
-         |  CAST(sum(c) - sum(r) AS DOUBLE) / count(*) AS mean_token_delta
-         |FROM t GROUP BY 1""".stripMargin,
-    // Twins of Bpe.train / Bpe.segmentStats over the shared unrolled rounds
-    "text_bpe_merges" -> {
-      val union = (0 until BpeMerges).map(i => s"SELECT * FROM b$i")
-        .mkString(" UNION ALL ")
-      s"""WITH ${bpeCtes(BpeMerges)}
-         |SELECT rank, lft, rgt, merged, cnt AS pair_count FROM ($union)""".stripMargin
-    },
-    "text_bpe_segment" ->
-      s"""WITH ${bpeCtes(BpeMerges)},
-         |wd AS (SELECT doc_id, unnest($Toks) AS word FROM documents),
-         |ns AS (SELECT word,
-         |  CAST(len(string_split(substr(sym, 2, length(sym) - 2), '||')) AS BIGINT) AS n_syms
-         |  FROM v$BpeMerges)
-         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-         |  CAST(sum(n_syms) AS BIGINT) AS n_bpe
-         |FROM wd JOIN ns USING (word) GROUP BY doc_id""".stripMargin,
-    // Twin of TextOps.sliceOverlap(documents, source): distinct char
-    // trigrams of the normalized token stream per source, pairwise
-    // intersection via the gram join, union by inclusion–exclusion
-    "source_overlap" ->
-      s"""WITH nm AS (SELECT source AS slice, array_to_string($Toks, ' ') AS norm
-         |  FROM documents),
-         |g AS (SELECT DISTINCT slice, gram FROM (
-         |  SELECT slice, unnest(list_transform(range(1, length(norm) - 1),
-         |    i -> norm[i:i+2])) AS gram
-         |  FROM nm WHERE length(norm) >= 3)),
-         |sz AS (SELECT slice, CAST(count(*) AS BIGINT) AS n_grams FROM g GROUP BY 1),
-         |i AS (SELECT a.slice AS slice_a, b.slice AS slice_b,
-         |  CAST(count(*) AS BIGINT) AS inter_grams
-         |  FROM g a JOIN g b ON a.gram = b.gram AND a.slice < b.slice
-         |  GROUP BY 1, 2)
-         |SELECT slice_a, slice_b, na.n_grams AS n_a, nb.n_grams AS n_b,
-         |  inter_grams,
-         |  CAST(na.n_grams + nb.n_grams - inter_grams AS BIGINT) AS union_grams,
-         |  round(CAST(inter_grams AS DOUBLE)
-         |    / (na.n_grams + nb.n_grams - inter_grams), 6) AS jaccard
-         |FROM i JOIN sz na ON i.slice_a = na.slice
-         |  JOIN sz nb ON i.slice_b = nb.slice""".stripMargin,
-
-    // Twin of Sketches.cmsTopK(document tokens, k=20, d=3, w=1024): same
-    // seeded PolyHash buckets (201+j), same (count desc, term asc) top-20
-    // cut, est = min over the 3 rows' bucket counts.
-    "sketch_cms" ->
-      s"""WITH tk AS (SELECT unnest($Toks) AS term FROM documents),
-         |cms AS (SELECT j, (${phSql("term", "201 + j")}) % 1024 AS bucket,
-         |  CAST(count(*) AS BIGINT) AS cnt
-         |  FROM tk CROSS JOIN range(0, 3) t(j) GROUP BY 1, 2),
-         |top AS (SELECT term AS value, CAST(count(*) AS BIGINT) AS true_count
-         |  FROM tk GROUP BY 1 ORDER BY true_count DESC, value ASC LIMIT 20),
-         |pr AS (SELECT value, true_count, j,
-         |  (${phSql("value", "201 + j")}) % 1024 AS bucket
-         |  FROM top CROSS JOIN range(0, 3) t(j))
-         |SELECT value, true_count, min(cnt) AS est_count
-         |FROM pr JOIN cms USING (j, bucket) GROUP BY 1, 2""".stripMargin,
-
-    // Twin of Sketches.quantileSketch(events, k=64, event_type, event_id,
-    // value): the kmvHash mixer over the ROW KEY re-salted with the
-    // "quantile" face salt, bottom-64 rows per group by (h, event_id),
-    // sample sorted by value, type-7 linear interpolation with the exact
-    // double-arithmetic term order (pos = q·(n−1), frac = pos − floor(pos),
-    // v_lo + frac·(v_hi − v_lo)), rounded to 6 decimals.
-    "sketch_quantile" -> {
-      val kmvH = phSql(
-        s"lpad(CAST((${phSql("CAST(event_id AS VARCHAR)", "0")}" +
-          s" * ${Sampling.saltMult("kmv")} + ${Sampling.saltAdd("kmv")})" +
-          " % 1000000007 AS VARCHAR), 10, '0')", "0")
-      s"""WITH hx AS (SELECT event_type, event_id, CAST(value AS DOUBLE) AS x,
-         |  ($kmvH * ${Sampling.saltMult("quantile")}
-         |    + ${Sampling.saltAdd("quantile")}) % 1000000007 AS h
-         |  FROM events WHERE value IS NOT NULL),
-         |rk AS (SELECT event_type, x, row_number() OVER (
-         |  PARTITION BY event_type ORDER BY h ASC, event_id ASC) AS rn FROM hx),
-         |smp AS (SELECT event_type, list(x ORDER BY x) AS vs
-         |  FROM rk WHERE rn <= 64 GROUP BY 1),
-         |qx AS (SELECT event_type, vs, unnest(list_transform(
-         |  [0.1, 0.25, 0.5, 0.75, 0.9, 0.99], x -> CAST(x AS DOUBLE))) AS q FROM smp),
-         |px AS (SELECT event_type, q, vs, len(vs) AS n,
-         |  q * CAST(len(vs) - 1 AS DOUBLE) AS pos FROM qx),
-         |f AS (SELECT event_type, q, vs, n, CAST(floor(pos) AS INTEGER) AS lo,
-         |  pos - floor(pos) AS frac FROM px)
-         |SELECT event_type, q, CAST(n AS BIGINT) AS n_sample,
-         |  round(vs[lo + 1] + frac * (vs[least(lo + 2, CAST(n AS INTEGER))] - vs[lo + 1]), 6) AS est_q
-         |FROM f""".stripMargin
-    },
-
-    // Twin of StreamOps.cmsStream's batch face == Sketches.cmsSketch: the
-    // raw (j, bucket, cnt) cell table under the same seeded buckets.
-    "stream_cms" ->
-      s"""WITH tk AS (SELECT unnest($Toks) AS term FROM documents)
-         |SELECT CAST(j AS INTEGER) AS j,
-         |  (${phSql("term", "201 + j")}) % 1024 AS bucket,
-         |  CAST(count(*) AS BIGINT) AS cnt
-         |FROM tk CROSS JOIN range(0, 3) t(j) GROUP BY 1, 2""".stripMargin,
-
-    // Twin of Sketches.hllPairOverlap(events, p=10, event_type, user_id):
-    // the sketch_hll register derivation, pair expansion over the distinct
-    // group list, register-wise max per pair, the identical estimate
-    // formula on merged and per-group registers, inclusion-exclusion
-    // intersection clamped at 0.
-    "sketch_hll_overlap" -> {
-      val p = 10
-      val m = 1 << p
-      val bigW = 30 - p
-      val alpha = 0.7213 / (1.0 + 1.079 / m)
-      val bitLenSql = (bigW to 1 by -1)
-        .map(b => s"WHEN w >= ${1L << (b - 1)} THEN $b").mkString(" ")
-      def est(hit: String, zs: String) = {
-        val raw = s"(CAST($alpha AS DOUBLE) * $m * $m / ($zs + ($m - $hit)))"
-        s"CASE WHEN $raw <= ${2.5 * m} AND ($m - $hit) > 0 " +
-          s"THEN $m * ln(CAST($m AS DOUBLE) / ($m - $hit)) ELSE $raw END"
-      }
-      s"""WITH ax AS (SELECT DISTINCT event_type,
-         |  (${phSql("CAST(user_id AS VARCHAR)", "0")}
-         |   * ${graft.pipeline.Sampling.saltMult("kmv")}
-         |   + ${graft.pipeline.Sampling.saltAdd("kmv")}) % 1000000007 AS m FROM events),
-         |hx AS (SELECT DISTINCT event_type,
-         |  ${phSql("lpad(CAST(m AS VARCHAR), 10, '0')", "0")} AS h FROM ax),
-         |rr AS (SELECT event_type, h & ${m - 1} AS idx, w,
-         |  ${bigW + 1} - (CASE $bitLenSql ELSE 0 END) AS rho
-         |  FROM (SELECT event_type, h, h >> $p AS w FROM hx)),
-         |rg AS (SELECT event_type AS grp, idx, max(rho) AS r FROM rr GROUP BY 1, 2),
-         |gl AS (SELECT DISTINCT grp FROM rg),
-         |pairs AS (SELECT a.grp AS grp_a, b.grp AS grp_b
-         |  FROM gl a JOIN gl b ON a.grp < b.grp),
-         |pru AS (SELECT grp_a, grp_b, idx, max(r) AS r FROM (
-         |    SELECT p.grp_a, p.grp_b, r.idx, r.r FROM pairs p JOIN rg r ON r.grp = p.grp_a
-         |    UNION ALL
-         |    SELECT p.grp_a, p.grp_b, r.idx, r.r FROM pairs p JOIN rg r ON r.grp = p.grp_b)
-         |  GROUP BY 1, 2, 3),
-         |ue AS (SELECT grp_a, grp_b, count(*) AS hit,
-         |  sum(power(2.0, -r)) AS zs FROM pru GROUP BY 1, 2),
-         |pe AS (SELECT grp, count(*) AS hit, sum(power(2.0, -r)) AS zs
-         |  FROM rg GROUP BY 1),
-         |uest AS (SELECT grp_a, grp_b, ${est("hit", "zs")} AS union_est FROM ue),
-         |pest AS (SELECT grp, ${est("hit", "zs")} AS e FROM pe),
-         |fin AS (SELECT u.grp_a, u.grp_b, a.e AS est_a, b.e AS est_b,
-         |  u.union_est,
-         |  greatest(a.e + b.e - u.union_est, CAST(0 AS DOUBLE)) AS inter_est
-         |  FROM uest u JOIN pest a ON a.grp = u.grp_a
-         |  JOIN pest b ON b.grp = u.grp_b)
-         |SELECT grp_a, grp_b, est_a, est_b, union_est, inter_est,
-         |  inter_est / union_est AS jaccard_est FROM fin""".stripMargin
-    },
-
-    // Twin of Sketches.kmvPairJaccard(documents 3-gram shingles by lang,
-    // k=128): same mixer, per-lang k-min sketch lists, union-of-sketches
-    // k-set, common-membership Jaccard, intersection = jaccard * union.
-    "sketch_kmv_jaccard" ->
-      s"""WITH tws AS (SELECT lang, unnest(CASE WHEN len(tk) >= 3
-         |    THEN list_transform(range(1, len(tk) - 1), i -> array_to_string(tk[i:i+2], ' '))
-         |    ELSE [] END) AS sh
-         |  FROM (SELECT lang, $Toks AS tk FROM documents)),
-         |ax AS (SELECT DISTINCT lang,
-         |  (${phSql("sh", "0")}
-         |   * ${graft.pipeline.Sampling.saltMult("kmv")}
-         |   + ${graft.pipeline.Sampling.saltAdd("kmv")}) % 1000000007 AS m FROM tws),
-         |hx AS (SELECT DISTINCT lang,
-         |  ${phSql("lpad(CAST(m AS VARCHAR), 10, '0')", "0")} AS h FROM ax),
-         |rk AS (SELECT lang, h,
-         |  row_number() OVER (PARTITION BY lang ORDER BY h) AS rn FROM hx),
-         |kp AS (SELECT lang, list(h ORDER BY h) AS hs FROM rk WHERE rn <= 128
-         |  GROUP BY lang),
-         |pr AS (SELECT a.lang AS grp_a, b.lang AS grp_b, a.hs AS ha, b.hs AS hb
-         |  FROM kp a JOIN kp b ON a.lang < b.lang),
-         |uu AS (SELECT grp_a, grp_b, ha, hb,
-         |  list_sort(list_distinct(ha || hb))[1:128] AS u FROM pr),
-         |st AS (SELECT grp_a, grp_b,
-         |  CAST(len(u) AS BIGINT) AS n_union_kept,
-         |  CAST(len(list_filter(u, x -> list_contains(ha, x) AND list_contains(hb, x))) AS BIGINT) AS n_common,
-         |  u[len(u)] AS hk FROM uu),
-         |es AS (SELECT grp_a, grp_b, n_union_kept, n_common,
-         |  CASE WHEN n_union_kept < 128 THEN CAST(n_union_kept AS DOUBLE)
-         |       ELSE 127.0 * 1000000007 / greatest(hk, 1) END AS union_est,
-         |  CAST(n_common AS DOUBLE) / n_union_kept AS jaccard_est FROM st)
-         |SELECT grp_a, grp_b, n_union_kept, n_common, union_est, jaccard_est,
-         |  jaccard_est * union_est AS inter_est
-         |FROM es""".stripMargin,
-
-    // Twin of Retention.churn(week): same tumbling key, left-anti via
-    // NOT EXISTS against the next window, max window excluded.
-    "events_churn" ->
-      s"""WITH e AS (SELECT user_id, epoch_ns(ts) AS ts FROM events
-         |  WHERE user_id IS NOT NULL),
-         |a AS (SELECT DISTINCT user_id,
-         |  ts - ((ts % ${7L * 86400L * NsPerS} + ${7L * 86400L * NsPerS}) % ${7L * 86400L * NsPerS}) AS window_start
-         |  FROM e),
-         |mw AS (SELECT max(window_start) AS mx FROM a),
-         |c AS (SELECT window_start, CAST(count(*) AS BIGINT) AS n_churned
-         |  FROM a WHERE NOT EXISTS (SELECT 1 FROM a n
-         |    WHERE n.user_id = a.user_id
-         |      AND n.window_start = a.window_start + ${7L * 86400L * NsPerS})
-         |  GROUP BY 1),
-         |t AS (SELECT window_start, CAST(count(*) AS BIGINT) AS n_active
-         |  FROM a GROUP BY 1)
-         |SELECT t.window_start, t.n_active,
-         |  coalesce(c.n_churned, 0) AS n_churned,
-         |  CAST(coalesce(c.n_churned, 0) AS DOUBLE) / CAST(t.n_active AS DOUBLE)
-         |    AS churn_rate
-         |FROM t LEFT JOIN c USING (window_start) CROSS JOIN mw
-         |WHERE t.window_start < mw.mx""".stripMargin,
-    // Twin of Sessionize.firstPerWindow(hour): same tumbling-window key,
-    // the (ts, id) struct-min split into min-ts then min-id-at-min-ts.
-    "events_dedup_window" ->
-      s"""WITH e AS (SELECT user_id, event_type, event_id, epoch_ns(ts) AS ts FROM events),
-         |w AS (SELECT user_id, event_type, event_id, ts,
-         |  ts - ((ts % ${3600L * NsPerS} + ${3600L * NsPerS}) % ${3600L * NsPerS}) AS window_start
-         |  FROM e),
-         |b AS (SELECT user_id, event_type, window_start, min(ts) AS first_ts,
-         |  CAST(count(*) - 1 AS BIGINT) AS n_suppressed
-         |  FROM w GROUP BY 1, 2, 3)
-         |SELECT b.user_id, b.event_type, b.window_start, b.first_ts,
-         |  min(w.event_id) AS first_event_id, b.n_suppressed
-         |FROM w JOIN b ON w.user_id IS NOT DISTINCT FROM b.user_id
-         |  AND w.event_type IS NOT DISTINCT FROM b.event_type
-         |  AND w.window_start = b.window_start AND w.ts = b.first_ts
-         |GROUP BY 1, 2, 3, 4, 6""".stripMargin,
-    // Twin of Sessionize.sessions: lag marks session starts, running sum
-    // numbers them (CAST: DuckDB promotes the window sum to HUGEINT).
-    "events_sessionize" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_ns(ts) AS ts FROM events),
-        |m AS (SELECT user_id, event_id, ts,
-        |  CASE WHEN lag(ts) OVER w IS NULL
-        |         OR ts - lag(ts) OVER w > 1800000000000 THEN 1 ELSE 0 END AS st
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |x AS (SELECT user_id, ts, CAST(sum(st) OVER (PARTITION BY user_id
-        |  ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |  AS BIGINT) AS session_idx FROM m)
-        |SELECT user_id, session_idx, min(ts) AS start_ns, max(ts) AS end_ns,
-        |  max(ts) - min(ts) AS duration_ns, count(*) AS n_events
-        |FROM x GROUP BY 1, 2""".stripMargin,
-    // Twin of Sessionize.sessionWindows — the SAME logical contract as
-    // events_sessionize (exact-gap successors merge in both; verified by
-    // PipelineOpsSpec), so the twin SQL is identical: one oracle
-    // formulation checks two physical implementations.
-    "events_session_window" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_ns(ts) AS ts FROM events),
-        |m AS (SELECT user_id, event_id, ts,
-        |  CASE WHEN lag(ts) OVER w IS NULL
-        |         OR ts - lag(ts) OVER w > 1800000000000 THEN 1 ELSE 0 END AS st
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |x AS (SELECT user_id, ts, CAST(sum(st) OVER (PARTITION BY user_id
-        |  ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |  AS BIGINT) AS session_idx FROM m)
-        |SELECT user_id, session_idx, min(ts) AS start_ns, max(ts) AS end_ns,
-        |  max(ts) - min(ts) AS duration_ns, count(*) AS n_events
-        |FROM x GROUP BY 1, 2""".stripMargin,
-    // Twin of Funnel.funnel: each stage is the min event time of its type
-    // strictly after the previous stage, per user.
-    // Twin of Experiment.calibrationBins over (qualityScoreSql score,
-    // GopherCtes verdict): equal-width bins with edge clamping, exact
-    // integer-quotient positive rate, count-weighted ECE.
-    "clf_calibration" ->
-      s"""WITH $GopherCtes,
-         |q AS (SELECT doc_id, (${qualityScoreSql("tk", "text")}) AS p FROM b),
-         |j AS (SELECT q.p, gr.pass_gopher AS y FROM q JOIN gr USING (doc_id)),
-         |binned AS (SELECT least(greatest(CAST(floor(p * 10) AS BIGINT), 0), 9) AS bin_id, p, y
-         |  FROM j WHERE p IS NOT NULL AND NOT isnan(p) AND y IS NOT NULL),
-         |bins AS (SELECT bin_id, count(*) AS n, avg(p) AS mean_conf,
-         |  CAST(count(*) FILTER (WHERE y) AS BIGINT) / count(*) AS pos_rate
-         |  FROM binned GROUP BY 1),
-         |tot AS (SELECT CAST(sum(n) AS BIGINT) AS t FROM bins),
-         |e AS (SELECT sum((n / t) * abs(pos_rate - mean_conf)) AS ece FROM bins, tot)
-         |SELECT bin_id, n, mean_conf, pos_rate, pos_rate - mean_conf AS gap, ece
-         |FROM bins, e""".stripMargin,
-
-    // Twin of Experiment.abTest(user_id, purchase, salt="abtest"): the
-    // bucketOf CW draw, 50/50 arm split, integer conditional sums, the
-    // pooled two-proportion z with the identical expression tree.
-    // Twin of Experiment.powerPlan: same user rollup and integer-quotient
-    // baseline, the SAME Scala-computed kappa literal, same pinned formula
-    // order, effects grid interpolated from the same Seq.
-    "events_power" -> {
-      val effs = (1 to 10).map(i => s"(${i / 100.0})").mkString(", ")
-      s"""WITH u AS (SELECT user_id,
-         |  max(CASE WHEN event_type = 'purchase' AND value > 150 THEN 1 ELSE 0 END) AS conv
-         |  FROM events GROUP BY 1),
-         |b AS (SELECT CAST(count(*) AS BIGINT) AS n_users,
-         |  CAST(sum(conv) AS BIGINT) AS n_conv FROM u),
-         |g AS (SELECT e.effect, b.n_users, b.n_conv,
-         |  CAST(b.n_conv AS DOUBLE) / CAST(b.n_users AS DOUBLE) AS p_base,
-         |  CAST(b.n_conv AS DOUBLE) / CAST(b.n_users AS DOUBLE) + e.effect AS p_target
-         |  FROM b CROSS JOIN (VALUES $effs) e(effect))
-         |SELECT effect, n_users, p_base, p_target,
-         |  CASE WHEN p_target < 1.0 THEN CAST(ceil(${graft.ops.Experiment.PowerKappa}
-         |    * (p_base * (1.0 - p_base) + p_target * (1.0 - p_target))
-         |    / (effect * effect)) AS BIGINT) END AS n_required,
-         |  n_users // 2 AS n_available,
-         |  CASE WHEN p_target < 1.0 THEN n_users // 2 >= CAST(ceil(${graft.ops.Experiment.PowerKappa}
-         |    * (p_base * (1.0 - p_base) + p_target * (1.0 - p_target))
-         |    / (effect * effect)) AS BIGINT) END AS powered
-         |FROM g""".stripMargin
-    },
-    // Twin of Retention.survival(censorDays=14): same lifetime rollup, the
-    // risk set by integer prefix sums, and S(t) as the identical seeded
-    // (risk, product) fold over the t-sorted prefix — one pinned
-    // multiplication order in both engines.
-    "events_survival" ->
-      s"""WITH u AS (SELECT user_id,
-         |  min(epoch_ns(ts) // ${3600L * NsPerS}) AS fd,
-         |  max(epoch_ns(ts) // ${3600L * NsPerS}) AS ld
-         |  FROM events WHERE user_id IS NOT NULL GROUP BY 1),
-         |m AS (SELECT max(ld) AS maxd FROM u),
-         |l AS (SELECT ld - fd AS t,
-         |  CASE WHEN ld <= maxd - 48 THEN 1 ELSE 0 END AS obs
-         |  FROM u CROSS JOIN m),
-         |r AS (SELECT t, CAST(sum(obs) AS BIGINT) AS d,
-         |  CAST(count(*) - sum(obs) AS BIGINT) AS c FROM l GROUP BY 1),
-         |g AS (SELECT list(t ORDER BY t) AS tl,
-         |  list(CAST(d AS DOUBLE) ORDER BY t) AS dl,
-         |  list(CAST(c AS DOUBLE) ORDER BY t) AS cl,
-         |  CAST(sum(d + c) AS BIGINT) AS n FROM r),
-         |ix AS (SELECT n, dl, cl, tl,
-         |  unnest(list_transform(tl, (x, k) -> k)) AS i0 FROM g),
-         |rows_ AS (SELECT n, dl, cl, CAST(i0 AS INTEGER) AS i,
-         |  tl[CAST(i0 AS INTEGER)] AS t FROM ix)
-         |SELECT t,
-         |  n - CAST(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |      list_transform(dl[1:i-1], (x, k) -> x + cl[k])),
-         |    (a, x) -> a + x) AS BIGINT) AS n_risk,
-         |  CAST(dl[i] AS BIGINT) AS n_events,
-         |  CAST(cl[i] AS BIGINT) AS n_censored,
-         |  list_reduce(list_prepend([CAST(n AS DOUBLE), CAST(1 AS DOUBLE)],
-         |      list_transform(dl[1:i], (x, k) -> [x, cl[k]])),
-         |    (a, e) -> [a[1] - e[1] - e[2],
-         |      a[2] * (CAST(1 AS DOUBLE) - e[1] / a[1])])[2] AS survival
-         |FROM rows_""".stripMargin,
-
-    // Twin of Experiment.cuped: same midpoint split, the identical CW arm
-    // hash, HUGEINT moments (exact like Spark's decimal(38,0) sums), and
-    // the same pinned double expression trees for theta / adjusted means /
-    // variance ratio / z.
-    "events_cuped" ->
-      s"""WITH b AS (SELECT min(epoch_ns(ts)) AS lo, max(epoch_ns(ts)) AS hi
-         |  FROM events),
-         |e0 AS (SELECT user_id, epoch_ns(ts) AS tns,
-         |  CASE WHEN event_type = 'purchase' AND value IS NOT NULL
-         |    AND NOT isnan(value) THEN CAST(floor(value) AS BIGINT)
-         |    ELSE 0 END AS m
-         |  FROM events WHERE user_id IS NOT NULL),
-         |e AS (SELECT user_id,
-         |  CASE WHEN tns < (lo + hi) // 2 THEN m ELSE 0 END AS mx,
-         |  CASE WHEN tns >= (lo + hi) // 2 THEN m ELSE 0 END AS my
-         |  FROM e0 CROSS JOIN b),
-         |u AS (SELECT user_id, CAST(sum(mx) AS BIGINT) AS x,
-         |  CAST(sum(my) AS BIGINT) AS y FROM e GROUP BY 1),
-         |a AS (SELECT x, y,
-         |  CASE WHEN ((${phSql("CAST(user_id AS VARCHAR)", "0")}
-         |    * ${Sampling.saltMult("abtest")} + ${Sampling.saltAdd("abtest")})
-         |    % 1000000007) % 10000 < 5000 THEN 'A' ELSE 'B' END AS arm FROM u),
-         |g AS (SELECT CAST(count(*) AS BIGINT) AS n,
-         |  sum(x) AS sx, sum(y) AS sy, sum(x*x) AS sxx, sum(x*y) AS sxy,
-         |  sum(y*y) AS syy,
-         |  CAST(sum(CASE WHEN arm = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-         |  sum(CASE WHEN arm = 'A' THEN x ELSE 0 END) AS sx_a,
-         |  sum(CASE WHEN arm = 'A' THEN y ELSE 0 END) AS sy_a,
-         |  CAST(sum(CASE WHEN arm = 'B' THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-         |  sum(CASE WHEN arm = 'B' THEN x ELSE 0 END) AS sx_b,
-         |  sum(CASE WHEN arm = 'B' THEN y ELSE 0 END) AS sy_b
-         |  FROM a),
-         |v AS (SELECT *, n * sxx - sx * sx AS vxx, n * sxy - sx * sy AS vxy,
-         |  n * syy - sy * sy AS vyy FROM g),
-         |t AS (SELECT *,
-         |  CASE WHEN vxx > 0 THEN CAST(vxy AS DOUBLE) / CAST(vxx AS DOUBLE)
-         |    END AS theta,
-         |  CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) AS mean_x,
-         |  CASE WHEN n_a > 0 THEN CAST(sy_a AS DOUBLE) / CAST(n_a AS DOUBLE)
-         |    END AS mean_a,
-         |  CASE WHEN n_b > 0 THEN CAST(sy_b AS DOUBLE) / CAST(n_b AS DOUBLE)
-         |    END AS mean_b,
-         |  CASE WHEN n_a > 0 THEN CAST(sx_a AS DOUBLE) / CAST(n_a AS DOUBLE)
-         |    END AS mean_x_a,
-         |  CASE WHEN n_b > 0 THEN CAST(sx_b AS DOUBLE) / CAST(n_b AS DOUBLE)
-         |    END AS mean_x_b
-         |  FROM v),
-         |w AS (SELECT *,
-         |  mean_a - theta * (mean_x_a - mean_x) AS adj_mean_a,
-         |  mean_b - theta * (mean_x_b - mean_x) AS adj_mean_b,
-         |  CAST(vyy AS DOUBLE) - CAST(2 AS DOUBLE) * theta * CAST(vxy AS DOUBLE)
-         |    + theta * theta * CAST(vxx AS DOUBLE) AS vnum
-         |  FROM t),
-         |z AS (SELECT *, sqrt(vnum / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))
-         |    * (CAST(1 AS DOUBLE) / CAST(n_a AS DOUBLE)
-         |      + CAST(1 AS DOUBLE) / CAST(n_b AS DOUBLE))) AS se FROM w),
-         |f AS (SELECT *, CASE WHEN n_a > 0 AND n_b > 0
-         |    AND se > CAST(0 AS DOUBLE)
-         |    THEN (adj_mean_b - adj_mean_a) / se END AS z_adj FROM z)
-         |SELECT n, n_a, n_b, theta, mean_a, mean_b,
-         |  mean_b - mean_a AS diff_raw, adj_mean_a, adj_mean_b,
-         |  adj_mean_b - adj_mean_a AS diff_adj,
-         |  CASE WHEN vyy > 0 THEN vnum / CAST(vyy AS DOUBLE)
-         |    END AS var_reduction,
-         |  z_adj, coalesce(abs(z_adj) > CAST(1.96 AS DOUBLE), false)
-         |    AS significant
-         |FROM f""".stripMargin,
-
-    "events_ab_test" ->
-      s"""WITH u AS (SELECT user_id,
-         |  max(CASE WHEN event_type = 'purchase' AND value > 150 THEN 1 ELSE 0 END) AS conv
-         |  FROM events GROUP BY 1),
-         |a AS (SELECT conv, CASE WHEN ((${phSql("CAST(user_id AS VARCHAR)", "0")}
-         |    * ${Sampling.saltMult("abtest")} + ${Sampling.saltAdd("abtest")})
-         |    % 1000000007) % 10000 < 5000 THEN 'A' ELSE 'B' END AS arm FROM u),
-         |g AS (SELECT
-         |  CAST(sum(CASE WHEN arm = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-         |  CAST(sum(CASE WHEN arm = 'A' THEN conv ELSE 0 END) AS BIGINT) AS conv_a,
-         |  CAST(sum(CASE WHEN arm = 'B' THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-         |  CAST(sum(CASE WHEN arm = 'B' THEN conv ELSE 0 END) AS BIGINT) AS conv_b
-         |  FROM a),
-         |se AS (SELECT n_a, conv_a, n_b, conv_b,
-         |  sqrt((CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b))
-         |    * (CAST(1 AS DOUBLE) - CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b))
-         |    * (CAST(1 AS DOUBLE) / n_a + CAST(1 AS DOUBLE) / n_b)) AS s
-         |  FROM g),
-         |z AS (SELECT n_a, conv_a, n_b, conv_b,
-         |  CAST(conv_a AS DOUBLE) / n_a AS p_a,
-         |  CAST(conv_b AS DOUBLE) / n_b AS p_b,
-         |  CASE WHEN n_a > 0 AND n_b > 0 AND s > CAST(0 AS DOUBLE)
-         |    THEN (CAST(conv_a AS DOUBLE) / n_a - CAST(conv_b AS DOUBLE) / n_b) / s
-         |  END AS z
-         |  FROM se)
-         |SELECT n_a, conv_a, n_b, conv_b, p_a, p_b, z,
-         |  coalesce(abs(z) > CAST(1.96 AS DOUBLE), false) AS significant FROM z""".stripMargin,
-
-    // Twin of Retention.activeUsers(window=7): floor-division day, the
-    // distinct (user, day) fan-out to 7 target days, re-dedup, join.
-    "events_active_users" ->
-      s"""WITH ud AS (SELECT DISTINCT user_id,
-         |  epoch_ns(ts) // ${86400L * NsPerS} AS day FROM events),
-         |dau AS (SELECT day, CAST(count(*) AS BIGINT) AS dau FROM ud GROUP BY 1),
-         |c AS (SELECT DISTINCT ud.day + r.o AS day, user_id
-         |  FROM ud CROSS JOIN range(0, 7) r(o)),
-         |wau AS (SELECT day, CAST(count(*) AS BIGINT) AS wau FROM c GROUP BY 1)
-         |SELECT dau.day, dau.dau, wau.wau,
-         |  CAST(dau.dau AS DOUBLE) / wau.wau AS stickiness
-         |FROM dau JOIN wau USING (day)""".stripMargin,
-
-    "events_funnel" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_ns(ts) AS ts FROM events),
-        |s1 AS (SELECT user_id, min(ts) AS t_1 FROM e WHERE event_type = 'signup' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(e.ts) AS t_2 FROM e JOIN s1 USING (user_id)
-        |       WHERE e.event_type = 'click' AND e.ts > s1.t_1 GROUP BY 1),
-        |s3 AS (SELECT e.user_id, min(e.ts) AS t_3 FROM e JOIN s2 USING (user_id)
-        |       WHERE e.event_type = 'purchase' AND e.ts > s2.t_2 GROUP BY 1)
-        |SELECT s1.user_id, s1.t_1, s2.t_2, s3.t_3,
-        |  1 + (CASE WHEN s2.t_2 IS NOT NULL THEN 1 ELSE 0 END)
-        |    + (CASE WHEN s3.t_3 IS NOT NULL THEN 1 ELSE 0 END) AS stage_reached
-        |FROM s1 LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id)""".stripMargin,
-    // Twin of Funnel.stepTiming: the events_funnel chain materialized,
-    // one aggregate per step pair, exact interpolated percentiles.
-    "events_funnel_timing" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_ns(ts) AS ts FROM events),
-        |s1 AS (SELECT user_id, min(ts) AS t_1 FROM e WHERE event_type = 'signup' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(e.ts) AS t_2 FROM e JOIN s1 USING (user_id)
-        |       WHERE e.event_type = 'click' AND e.ts > s1.t_1 GROUP BY 1),
-        |s3 AS (SELECT e.user_id, min(e.ts) AS t_3 FROM e JOIN s2 USING (user_id)
-        |       WHERE e.event_type = 'purchase' AND e.ts > s2.t_2 GROUP BY 1),
-        |f AS (SELECT s1.user_id, s1.t_1, s2.t_2, s3.t_3
-        |  FROM s1 LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id))
-        |SELECT CAST(1 AS INTEGER) AS step_from, CAST(2 AS INTEGER) AS step_to,
-        |  count(*) AS n_from, count(t_2) AS n_to,
-        |  CASE WHEN count(*) > 0 THEN count(t_2) / count(*) END AS conv_rate,
-        |  quantile_cont(t_2 - t_1, 0.5) AS median_dt_ns,
-        |  quantile_cont(t_2 - t_1, 0.9) AS p90_dt_ns
-        |FROM f WHERE t_1 IS NOT NULL
-        |UNION ALL
-        |SELECT CAST(2 AS INTEGER), CAST(3 AS INTEGER),
-        |  count(*), count(t_3),
-        |  CASE WHEN count(*) > 0 THEN count(t_3) / count(*) END,
-        |  quantile_cont(t_3 - t_2, 0.5), quantile_cont(t_3 - t_2, 0.9)
-        |FROM f WHERE t_2 IS NOT NULL""".stripMargin,
-
-    // Twin of Paths.topPaths: same session labeling, same first-maxSteps
-    // cap via rn - start_rn, path built by ordered string_agg.
-    "events_top_paths" -> {
-      val gap = 3600L * NsPerS
-      s"""WITH e AS (SELECT user_id, event_id, event_type, epoch_ns(ts) AS ts FROM events),
-         |w AS (SELECT *,
-         |  CASE WHEN lag(ts) OVER win IS NULL OR ts - lag(ts) OVER win > $gap
-         |    THEN 1 ELSE 0 END AS is_start,
-         |  row_number() OVER win AS rn
-         |  FROM e WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         |s AS (SELECT *,
-         |  sum(is_start) OVER run AS sess,
-         |  max(CASE WHEN is_start = 1 THEN rn END) OVER run AS start_rn
-         |  FROM w WINDOW run AS (PARTITION BY user_id ORDER BY ts, event_id
-         |    ROWS UNBOUNDED PRECEDING)),
-         |p AS (SELECT user_id, sess,
-         |  string_agg(event_type, ' > ' ORDER BY ts, event_id) AS path
-         |  FROM s WHERE rn - start_rn < 5 GROUP BY 1, 2)
-         |SELECT path, CAST(count(*) AS BIGINT) AS n_sessions FROM p
-         |GROUP BY 1 ORDER BY n_sessions DESC, path ASC LIMIT 20""".stripMargin
-    },
-    // Twin of Paths.transitions, formulation-identical: label sessions
-    // (lag marks starts, running sum numbers them), take the successor via
-    // lead in the SAME ordering, keep pairs whose lead(session) equals the
-    // row's session; denominator = per-from outgoing count.
-    "events_markov" -> {
-      val gap = 3600L * NsPerS
-      s"""WITH e AS (SELECT user_id, event_id, event_type, epoch_ns(ts) AS ts FROM events),
-         |w AS (SELECT *,
-         |  CASE WHEN lag(ts) OVER win IS NULL OR ts - lag(ts) OVER win > $gap
-         |    THEN 1 ELSE 0 END AS is_start,
-         |  lead(event_type) OVER win AS next_type
-         |  FROM e WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         |s AS (SELECT *,
-         |  sum(is_start) OVER (PARTITION BY user_id ORDER BY ts, event_id
-         |    ROWS UNBOUNDED PRECEDING) AS sess
-         |  FROM w),
-         |s2 AS (SELECT *,
-         |  lead(sess) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_sess
-         |  FROM s),
-         |pairs AS (SELECT event_type AS from_type, next_type AS to_type,
-         |  CAST(count(*) AS BIGINT) AS n_transitions
-         |  FROM s2 WHERE next_type IS NOT NULL AND next_sess = sess
-         |  GROUP BY 1, 2),
-         |deg AS (SELECT from_type, CAST(sum(n_transitions) AS BIGINT) AS total
-         |  FROM pairs GROUP BY 1)
-         |SELECT from_type, to_type, n_transitions,
-         |  CAST(n_transitions AS DOUBLE) / total AS p_transition
-         |FROM pairs JOIN deg USING (from_type)""".stripMargin
-    },
-    // Twin of Cooccurrence.typeLift: integer-exact counts, one double
-    // division in the same operand order.
-    "events_cooccurrence" ->
-      """WITH e AS (SELECT DISTINCT user_id, event_type FROM events
-        |  WHERE user_id IS NOT NULL AND event_type IS NOT NULL),
-        |nu AS (SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS n_users FROM e),
-        |s AS (SELECT event_type AS t, CAST(count(*) AS BIGINT) AS n FROM e GROUP BY 1),
-        |p AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
-        |  CAST(count(*) AS BIGINT) AS n_users_both
-        |  FROM e a JOIN e b ON a.user_id = b.user_id AND a.event_type < b.event_type
-        |  GROUP BY 1, 2)
-        |SELECT type_a, type_b, n_users_both,
-        |  CAST(n_users_both AS DOUBLE) * nu.n_users
-        |    / (CAST(sa.n AS DOUBLE) * CAST(sb.n AS DOUBLE)) AS lift
-        |FROM p JOIN s sa ON sa.t = p.type_a JOIN s sb ON sb.t = p.type_b
-        |CROSS JOIN nu""".stripMargin,
-    // Twin of Cooccurrence.assocRules: same distinct baskets, directional
-    // pair join (a <> b keeps both orientations), same pinned divisions.
-    "events_assoc_rules" ->
-      """WITH e AS (SELECT DISTINCT user_id, event_type FROM events
-        |  WHERE user_id IS NOT NULL AND event_type IS NOT NULL),
-        |nu AS (SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS n_users FROM e),
-        |s AS (SELECT event_type AS t, CAST(count(*) AS BIGINT) AS n FROM e GROUP BY 1),
-        |p AS (SELECT a.event_type AS antecedent, b.event_type AS consequent,
-        |  CAST(count(*) AS BIGINT) AS n_users_both
-        |  FROM e a JOIN e b ON a.user_id = b.user_id AND a.event_type <> b.event_type
-        |  GROUP BY 1, 2)
-        |SELECT antecedent, consequent, n_users_both,
-        |  CAST(n_users_both AS DOUBLE) / CAST(nu.n_users AS DOUBLE) AS support,
-        |  CAST(n_users_both AS DOUBLE) / CAST(sa.n AS DOUBLE) AS confidence,
-        |  CAST(n_users_both AS DOUBLE) * nu.n_users
-        |    / (CAST(sa.n AS DOUBLE) * CAST(sb.n AS DOUBLE)) AS lift
-        |FROM p JOIN s sa ON sa.t = p.antecedent JOIN s sb ON sb.t = p.consequent
-        |CROSS JOIN nu""".stripMargin,
-    // Twin of IntervalJoin: plain key + time-range join — the range
-    // bounds are exact integer ns, so no float hazard exists.
-    "events_interval_join" -> {
-      val win = 3600L * NsPerS
-      s"""WITH e AS (SELECT user_id, event_id, event_type, epoch_ns(ts) AS ts FROM events),
-         |c AS (SELECT user_id, event_id AS click_id, ts AS click_ts FROM e
-         |  WHERE event_type = 'click'),
-         |p AS (SELECT user_id, event_id AS purchase_id, ts AS purchase_ts FROM e
-         |  WHERE event_type = 'purchase')
-         |SELECT c.user_id, click_id, click_ts, purchase_id, purchase_ts
-         |FROM c JOIN p ON c.user_id = p.user_id
-         |  AND purchase_ts >= click_ts AND purchase_ts <= click_ts + $win""".stripMargin
-    },
-    // Twin of Retention.retention; `//` floors like Spark's `div` because
-    // epoch days are non-negative here.
-    "events_retention" ->
-      """WITH e AS (SELECT user_id, epoch_ns(ts) // 86400000000000 AS day FROM events),
-        |f AS (SELECT user_id, day, min(day) OVER (PARTITION BY user_id) AS cohort_day FROM e)
-        |SELECT cohort_day, day - cohort_day AS day_offset,
-        |  count(DISTINCT user_id) AS n_users
-        |FROM f GROUP BY 1, 2""".stripMargin,
-    // Twin of Funnel.linearAttribution(1h): the same bounded-range pair
-    // join, even credit split, day rollup, and organic bucket.
-    "events_attribution" ->
-      """WITH t AS (SELECT user_id, event_id AS touch_id, epoch_ns(ts) AS touch_ts
-        |  FROM events WHERE event_type = 'click'),
-        |c AS (SELECT user_id, event_id AS conv_id, epoch_ns(ts) AS conv_ts,
-        |  CASE WHEN NOT isnan(value) THEN value END AS value
-        |  FROM events WHERE event_type = 'purchase'),
-        |p AS (SELECT t.touch_ts, c.conv_id, c.value FROM t JOIN c
-        |  ON t.user_id = c.user_id AND c.conv_ts >= t.touch_ts
-        |  AND c.conv_ts <= t.touch_ts + 3600000000000),
-        |k AS (SELECT conv_id, CAST(count(*) AS BIGINT) AS kk FROM p GROUP BY 1),
-        |cr AS (SELECT touch_ts // 86400000000000 AS day, p.value / k.kk AS credit
-        |  FROM p JOIN k USING (conv_id)),
-        |byday AS (SELECT day, CAST(count(*) AS BIGINT) AS n_touches,
-        |  sum(credit) AS credited_revenue FROM cr GROUP BY 1),
-        |org AS (SELECT CAST(-1 AS BIGINT) AS day,
-        |  CAST(count(*) AS BIGINT) AS n_touches, sum(value) AS credited_revenue
-        |  FROM c WHERE conv_id NOT IN (SELECT conv_id FROM p)
-        |  HAVING count(*) > 0)
-        |SELECT * FROM byday UNION ALL SELECT * FROM org""".stripMargin,
-    // Twin of Components.degreeDistribution over the MinHash pair list.
-    "graph_degrees" ->
-      s"""WITH $MinhashPairsCtes,
-         |ids AS (SELECT id_a AS id FROM mh_pairs
-         |  UNION ALL SELECT id_b FROM mh_pairs),
-         |dg AS (SELECT id, CAST(count(*) AS BIGINT) AS degree FROM ids GROUP BY 1)
-         |SELECT degree, CAST(count(*) AS BIGINT) AS n_nodes
-         |FROM dg GROUP BY 1""".stripMargin,
-    // Twin of Retention.rfm over purchases: same max-ts anchor, same
-    // NaN-excluded monetary sum (null when every value is NaN — ranked
-    // WORST, mirroring the Spark sentinel pin), same discrete
-    // 5 − ⌊(rank−1)·5/n⌋ quintiles under (metric, user) order.
-    "events_rfm" ->
-      """WITH c AS (SELECT user_id, epoch_ns(ts) AS t, value FROM events
-        |  WHERE event_type = 'purchase'),
-        |nowt AS (SELECT max(t) AS now FROM c),
-        |u AS (SELECT user_id, max(t) AS last_t,
-        |  CAST(count(*) AS BIGINT) AS frequency,
-        |  sum(CASE WHEN NOT isnan(value) THEN value END) AS monetary
-        |  FROM c GROUP BY 1),
-        |r AS (SELECT user_id, (nowt.now - last_t) // 86400000000000 AS recency_days,
-        |  frequency, monetary, CAST(count(*) OVER () AS BIGINT) AS n FROM u, nowt),
-        |s AS (SELECT *,
-        |  CAST(row_number() OVER (ORDER BY recency_days ASC, user_id ASC) AS BIGINT) AS rr,
-        |  CAST(row_number() OVER (ORDER BY frequency DESC, user_id ASC) AS BIGINT) AS rf,
-        |  CAST(row_number() OVER (ORDER BY monetary DESC NULLS LAST, user_id ASC) AS BIGINT) AS rm
-        |  FROM r)
-        |SELECT user_id, recency_days, frequency, monetary,
-        |  CAST(5 - ((rr - 1) * 5) // n AS INTEGER) AS r_score,
-        |  CAST(5 - ((rf - 1) * 5) // n AS INTEGER) AS f_score,
-        |  CAST(5 - ((rm - 1) * 5) // n AS INTEGER) AS m_score,
-        |  CAST(5 - ((rr - 1) * 5) // n AS INTEGER) * 100
-        |    + CAST(5 - ((rf - 1) * 5) // n AS INTEGER) * 10
-        |    + CAST(5 - ((rm - 1) * 5) // n AS INTEGER) AS rfm
-        |FROM s""".stripMargin,
-    // Twin of Retention.ltv over purchases: same cohorting, same cell
-    // rollup, offset-ordered running total, per-member normalization.
-    "events_ltv" ->
-      """WITH e AS (SELECT user_id, epoch_ns(ts) // 86400000000000 AS day,
-        |  event_type = 'purchase' AS conv, value FROM events),
-        |fs AS (SELECT user_id, min(day) AS cohort_day FROM e GROUP BY 1),
-        |sz AS (SELECT cohort_day, CAST(count(*) AS BIGINT) AS cohort_size
-        |  FROM fs GROUP BY 1),
-        |cells AS (SELECT fs.cohort_day, e.day - fs.cohort_day AS day_offset,
-        |  sum(CASE WHEN e.conv AND NOT isnan(e.value) THEN e.value
-        |    ELSE CAST(0 AS DOUBLE) END) AS revenue
-        |  FROM e JOIN fs USING (user_id) GROUP BY 1, 2),
-        |c2 AS (SELECT cohort_day, day_offset, revenue,
-        |  sum(revenue) OVER (PARTITION BY cohort_day ORDER BY day_offset
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_revenue
-        |  FROM cells)
-        |SELECT c2.cohort_day, day_offset, revenue, cum_revenue, cohort_size,
-        |  cum_revenue / cohort_size AS ltv
-        |FROM c2 JOIN sz USING (cohort_day)""".stripMargin,
-    // Twin of Retention.cumulativeUsers: first-seen day per user, per-day
-    // new-user counts, running total (CAST: DuckDB promotes the window sum
-    // to HUGEINT).
-    "events_cumulative_users" ->
-      """WITH fs AS (SELECT user_id,
-        |  min(epoch_ns(ts) // 86400000000000) AS day FROM events GROUP BY 1),
-        |d AS (SELECT day, CAST(count(*) AS BIGINT) AS new_users FROM fs GROUP BY 1)
-        |SELECT day, new_users,
-        |  CAST(sum(new_users) OVER (ORDER BY day
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |    AS cumulative_users
-        |FROM d""".stripMargin,
-    // Twin of Cdc.latestState over the shared changelog CTE: per-id
-    // (seq desc, op desc) top-1, full outer against the base, deletes out.
-    "cdc_apply" ->
-      s"""WITH $CdcLogCte,
-         |lt AS (SELECT doc_id, op, text, row_number() OVER (
-         |  PARTITION BY doc_id ORDER BY seq DESC, op DESC) AS rn FROM clog),
-         |l1 AS (SELECT doc_id, op AS lop, text AS ltext FROM lt WHERE rn = 1),
-         |b AS (SELECT doc_id, text FROM documents)
-         |SELECT coalesce(b.doc_id, l1.doc_id) AS doc_id,
-         |  CASE WHEN l1.lop IS NOT NULL THEN l1.ltext ELSE b.text END AS text
-         |FROM b FULL OUTER JOIN l1 ON b.doc_id = l1.doc_id
-         |WHERE l1.lop IS NULL OR l1.lop <> 'D'""".stripMargin,
-    // Twin of StreamOps.cdcStream's batch face: per-id (seq desc, op desc)
-    // top-1 of the shared changelog.
-    "stream_cdc" ->
-      s"""WITH $CdcLogCte,
-         |lt AS (SELECT doc_id, text, seq, op, row_number() OVER (
-         |  PARTITION BY doc_id ORDER BY seq DESC, op DESC) AS rn FROM clog)
-         |SELECT doc_id, seq, op, text FROM lt WHERE rn = 1""".stripMargin,
-    // Twin of Cdc.scd2: one lead() window, deletes close intervals
-    // without emitting a row; 2^63-1 is the open-interval sentinel.
-    "cdc_scd2" ->
-      s"""WITH $CdcLogCte,
-         |v AS (SELECT doc_id, text, op, seq AS valid_from,
-         |  coalesce(lead(seq) OVER (PARTITION BY doc_id ORDER BY seq, op),
-         |    9223372036854775807) AS valid_to FROM clog)
-         |SELECT doc_id, text, valid_from, valid_to,
-         |  valid_to = 9223372036854775807 AS is_current
-         |FROM v WHERE op <> 'D'""".stripMargin,
-    // Twin of Profile.equiDepth(10): same (value, event_id) rank order,
-    // same discrete ⌊n·k/10⌋ target ranks clamped at 1.
-    "profile_equidepth" ->
-      """WITH r AS (SELECT event_type AS grp, value AS v, event_id AS tie
-        |  FROM events WHERE value IS NOT NULL AND NOT isnan(value)),
-        |rk AS (SELECT grp, v, row_number() OVER (PARTITION BY grp ORDER BY v, tie) AS rn,
-        |  count(*) OVER (PARTITION BY grp) AS n FROM r),
-        |tg AS (SELECT grp, n, unnest(range(1, 11)) AS bucket
-        |  FROM (SELECT DISTINCT grp, n FROM rk)),
-        |tt AS (SELECT grp, CAST(bucket AS BIGINT) AS bucket,
-        |  greatest((n * bucket) // 10, 1) AS rn FROM tg)
-        |SELECT tt.grp AS event_type, tt.bucket, min(rk.v) AS upper_value,
-        |  CAST(min(rk.n) AS BIGINT) AS n_rows
-        |FROM tt JOIN rk ON tt.grp = rk.grp AND tt.rn = rk.rn
-        |GROUP BY 1, 2""".stripMargin,
-    // Twin of Profile.volumeAnomaly: same integer moments, same co-moment
-    // variance, same null-z conventions, same zero-filled day grid
-    // between each group's min and max day.
-    "events_volume_anomaly" ->
-      """WITH sp AS (SELECT event_type AS grp,
-        |  epoch_ns(ts) // 86400000000000 AS day, count(*) AS n_events
-        |  FROM events GROUP BY 1, 2),
-        |b AS (SELECT grp, min(day) AS lo, max(day) AS hi FROM sp GROUP BY 1),
-        |g AS (SELECT grp, unnest(range(lo, hi + 1)) AS day FROM b),
-        |d AS (SELECT g.grp, g.day,
-        |  coalesce(sp.n_events, CAST(0 AS BIGINT)) AS n_events
-        |  FROM g LEFT JOIN sp USING (grp, day)),
-        |m AS (SELECT grp, count(*) AS n, CAST(sum(n_events) AS BIGINT) AS s,
-        |  CAST(sum(n_events * n_events) AS BIGINT) AS ss FROM d GROUP BY 1),
-        |j AS (SELECT d.grp, d.day, d.n_events,
-        |  CAST(m.s AS DOUBLE) / m.n AS mean_events,
-        |  CASE WHEN m.n >= 2 THEN
-        |    CAST(m.n * m.ss - m.s * m.s AS DOUBLE) / CAST(m.n * (m.n - 1) AS DOUBLE)
-        |  END AS var FROM d JOIN m USING (grp))
-        |SELECT grp AS event_type, day, n_events, mean_events,
-        |  CASE WHEN var > 0.0
-        |    THEN (CAST(n_events AS DOUBLE) - mean_events) / sqrt(var) END AS z,
-        |  coalesce(abs(CASE WHEN var > 0.0
-        |    THEN (CAST(n_events AS DOUBLE) - mean_events) / sqrt(var) END) > 2.0,
-        |    false) AS is_anomaly
-        |FROM j""".stripMargin,
-    // Twin of the events cube: same day bucketing, same null re-labels.
-    "events_cube" ->
-      """WITH e AS (SELECT event_type,
-        |  epoch_ns(ts) // 86400000000000 AS day, value FROM events)
-        |SELECT coalesce(event_type, '(all)') AS event_type,
-        |  coalesce(day, -1) AS day, count(*) AS n, sum(value) AS total_value
-        |FROM e GROUP BY CUBE (event_type, day)""".stripMargin,
-    // Twin of Profile.snapshotDiff over the deterministically edited next
-    // snapshot: same edit rules (%17: 3 removed, 5 text-edited, 7 re-added
-    // bit-41-tagged), same concatenated null-safe payload digest, one full
-    // outer join.
-    "corpus_diff" ->
-      """WITH docs AS (SELECT doc_id, text, lang FROM documents),
-        |nxt AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 17 = 5 THEN text || ' [rev2]' ELSE text END AS text,
-        |    lang
-        |  FROM docs WHERE doc_id % 17 <> 3
-        |  UNION ALL
-        |  SELECT doc_id + (CAST(1 AS BIGINT) << 41), text, lang
-        |  FROM docs WHERE doc_id % 17 = 7),
-        |od AS (SELECT doc_id, coalesce(text, '') || coalesce(lang, '') AS dg FROM docs),
-        |nd AS (SELECT doc_id, coalesce(text, '') || coalesce(lang, '') AS dg FROM nxt)
-        |SELECT coalesce(od.doc_id, nd.doc_id) AS doc_id,
-        |  CASE WHEN od.doc_id IS NULL THEN 'added'
-        |       WHEN nd.doc_id IS NULL THEN 'removed'
-        |       ELSE 'changed' END AS status
-        |FROM od FULL OUTER JOIN nd ON od.doc_id = nd.doc_id
-        |WHERE od.doc_id IS NULL OR nd.doc_id IS NULL OR od.dg <> nd.dg""".stripMargin,
-
-    // Twin of the salted join: salting must be invisible in the result, so
-    // the oracle is the PLAIN join (min/count are order-independent, no
-    // float-summation hazard).
-    "skew_join" ->
-      """WITH d AS (SELECT user_id, min(value) AS user_min,
-        |  count(*) AS n_user_events FROM events GROUP BY 1)
-        |SELECT e.event_id, e.user_id, e.value, d.user_min, d.n_user_events,
-        |  e.value - d.user_min AS dev
-        |FROM events e JOIN d USING (user_id)""".stripMargin,
-    // Twin of Similarity.quantizeInt8 — same op order (scale first, then
-    // one division per element) so the doubles agree bit-for-bit.
-    "vec_quantize" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-        |s AS (SELECT vec_id, list_max(list_transform(v, x -> abs(x))) / 127.0 AS scale, v FROM e)
-        |SELECT vec_id, scale, array_to_string(
-        |  CASE WHEN scale > 0 THEN list_transform(v, x -> CAST(round(x / scale) AS INTEGER))
-        |       ELSE list_transform(v, x -> 0) END, ',') AS qvec
-        |FROM s""".stripMargin,
-    // Twin of Similarity.dimStats: parallel unnest zips (index, element);
-    // the 0-based range matches posexplode's pos.
-    "vec_dim_stats" ->
-      """WITH u AS (SELECT CAST(unnest(range(0, len(embedding))) AS INTEGER) AS dim,
-        |  CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings)
-        |SELECT dim, CAST(count(*) AS BIGINT) AS n, avg(v) AS mean,
-        |  stddev_samp(v) AS std, min(v) AS min_v, max(v) AS max_v
-        |FROM u GROUP BY 1""".stripMargin,
-
-    // Twin of Similarity.standardize: the vec_dim_stats moments joined
-    // back per (vector, dim), dead dims to 0, long-form (the driver's
-    // pandas compare cannot sort/hash raw array cells). Null/empty
-    // embeddings produce zero rows on BOTH sides: standardize's inner
-    // posexplode drops them before zvec is assembled (the entry's outer
-    // explode is a perf guard, never reached by a null), and here
-    // unnest(range(0, len(NULL/[]))) emits nothing.
-    "vec_standardize" ->
-      """WITH u AS (SELECT vec_id,
-        |  CAST(unnest(range(0, len(embedding))) AS INTEGER) AS dim,
-        |  CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-        |st AS (SELECT dim, avg(x) AS mean, stddev_samp(x) AS std FROM u GROUP BY 1)
-        |SELECT u.vec_id, u.dim, CASE WHEN st.std > 0
-        |    THEN (u.x - st.mean) / st.std ELSE 0.0 END AS z
-        |FROM u JOIN st USING (dim)""".stripMargin,
-
-    // Twin of Similarity.randomProject(16, 64): the sign literals come
-    // from the SAME rpSign function the projection kernel reads, and each
-    // output dim is the same left-to-right signed chain over v[1..64] —
-    // bit-identical accumulation in both engines.
-    // Null vectors are dropped on BOTH sides (randomProject filters
-    // them; without the WHERE this twin would emit 16 null rows per
-    // null vector). A wrong-dim vector raises on the Spark side — the
-    // contract, not expressible here.
-    "vec_rp" ->
-      s"""WITH e AS (SELECT vec_id,
-         |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |  FROM embeddings WHERE embedding IS NOT NULL),
-         |r AS (SELECT vec_id, [${rpListSql("v")}] AS rp FROM e)
-         |SELECT vec_id, CAST(unnest(range(0, len(rp))) AS INTEGER) AS dim,
-         |  unnest(rp) AS rp_v FROM r""".stripMargin,
-    // Twin of Similarity.rpTopK(k=3, shortlist=50): shared rpListSql
-    // projection, rp-space cosine shortlist with the (sim desc, id asc)
-    // cut, exact cosine re-rank on the shortlist rows only.
-    "sim_rp_topk" -> {
-      def cosSql(a: String, b: String) =
-        s"list_sum(list_transform(range(1, len($a) + 1), i -> $a[i] * $b[i])) / " +
-          s"(sqrt(list_sum(list_transform(range(1, len($a) + 1), i -> $a[i] * $a[i]))) * " +
-          s"sqrt(list_sum(list_transform(range(1, len($b) + 1), i -> $b[i] * $b[i]))))"
-      s"""WITH e AS (SELECT vec_id,
-         |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |r AS (SELECT vec_id, [${rpListSql("v")}] AS rp FROM e),
-         |q AS (SELECT vec_id AS query_id, rp AS qrp FROM r WHERE vec_id < 5),
-         |s AS (SELECT q.query_id, c.vec_id AS neighbor_id,
-         |  ${cosSql("c.rp", "q.qrp")} AS rp_sim
-         |  FROM r c CROSS JOIN q WHERE c.vec_id <> q.query_id),
-         |sl AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY rp_sim DESC, neighbor_id ASC) AS rr FROM s) WHERE rr <= 50),
-         |x AS (SELECT sl.query_id, sl.neighbor_id,
-         |  ${cosSql("ea.v", "eb.v")} AS cos_sim
-         |  FROM sl JOIN e ea ON ea.vec_id = sl.query_id
-         |  JOIN e eb ON eb.vec_id = sl.neighbor_id)
-         |SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cos_sim FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos_sim DESC, neighbor_id ASC) AS rank FROM x) WHERE rank <= 3""".stripMargin
-    },
-    // Twin of Similarity.sqTopK(k=3, shortlist=50): same per-vector
-    // symmetric int8 quantization as vec_quantize, quantized cosine over
-    // the integer components (exact in doubles), exact-cosine re-rank.
-    "sim_sq_topk" -> {
-      def cosSql(a: String, b: String) =
-        s"list_sum(list_transform(range(1, len($a) + 1), i -> $a[i] * $b[i])) / " +
-          s"(sqrt(list_sum(list_transform(range(1, len($a) + 1), i -> $a[i] * $a[i]))) * " +
-          s"sqrt(list_sum(list_transform(range(1, len($b) + 1), i -> $b[i] * $b[i]))))"
-      s"""WITH e AS (SELECT vec_id,
-         |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |s0 AS (SELECT vec_id, list_max(list_transform(v, x -> abs(x))) / 127.0
-         |  AS scale, v FROM e),
-         |qz AS (SELECT vec_id, CASE WHEN scale > 0
-         |    THEN list_transform(v, x ->
-         |      CAST(CAST(round(x / scale) AS INTEGER) AS DOUBLE))
-         |    ELSE list_transform(v, x -> CAST(0 AS DOUBLE)) END AS q FROM s0),
-         |qq AS (SELECT vec_id AS query_id, q AS qv FROM qz WHERE vec_id < 5),
-         |sc AS (SELECT qq.query_id, c.vec_id AS neighbor_id,
-         |  ${cosSql("c.q", "qq.qv")} AS sq_sim
-         |  FROM qz c CROSS JOIN qq WHERE c.vec_id <> qq.query_id),
-         |sl AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY sq_sim DESC, neighbor_id ASC) AS rr FROM sc) WHERE rr <= 50),
-         |x AS (SELECT sl.query_id, sl.neighbor_id,
-         |  ${cosSql("ea.v", "eb.v")} AS cos_sim
-         |  FROM sl JOIN e ea ON ea.vec_id = sl.query_id
-         |  JOIN e eb ON eb.vec_id = sl.neighbor_id)
-         |SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cos_sim FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos_sim DESC, neighbor_id ASC) AS rank FROM x) WHERE rank <= 3""".stripMargin
-    },
-    // Twin of Similarity.isotropy(nBuckets=256, salt="isotropy"): same
-    // CW-hash bucket pairing ((hv, id) lexicographic min/max per bucket,
-    // singleton buckets skipped), same VecCosine arithmetic, same
-    // co-moment sample-sd and centroid-norm formulas.
-    "vec_isotropy" -> {
-      val a = Sampling.saltMult("isotropy")
-      val b = Sampling.saltAdd("isotropy")
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |h AS (SELECT vec_id, v,
-         |  ((${phSql("CAST(vec_id AS VARCHAR)", "0")}) * $a + $b) % 1000000007 AS hv FROM e),
-         |bk AS (SELECT vec_id, hv, hv % 256 AS bucket FROM h),
-         |rk AS (SELECT bucket, vec_id,
-         |  row_number() OVER (PARTITION BY bucket ORDER BY hv, vec_id) AS rn,
-         |  row_number() OVER (PARTITION BY bucket ORDER BY hv DESC, vec_id DESC) AS rd
-         |  FROM bk),
-         |sel AS (SELECT lo.vec_id AS id_a, hi.vec_id AS id_b FROM rk lo JOIN rk hi
-         |  ON lo.bucket = hi.bucket AND lo.rn = 1 AND hi.rd = 1
-         |  AND lo.vec_id <> hi.vec_id),
-         |pc AS (SELECT
-         |  list_sum(list_transform(range(1, len(ea.v) + 1), i -> ea.v[i] * eb.v[i])) /
-         |    (sqrt(list_sum(list_transform(range(1, len(ea.v) + 1), i -> ea.v[i] * ea.v[i]))) *
-         |     sqrt(list_sum(list_transform(range(1, len(eb.v) + 1), i -> eb.v[i] * eb.v[i])))) AS c
-         |  FROM sel JOIN e ea ON ea.vec_id = sel.id_a JOIN e eb ON eb.vec_id = sel.id_b),
-         |pa AS (SELECT CAST(count(*) AS BIGINT) AS n_pairs, sum(c) AS sc,
-         |  sum(c * c) AS scc FROM pc),
-         |no AS (SELECT CAST(count(*) AS BIGINT) AS n_vectors,
-         |  avg(sqrt(list_sum(list_transform(v, x -> x * x)))) AS mean_norm FROM e),
-         |dm AS (SELECT CAST(unnest(range(0, len(embedding))) AS INTEGER) AS dim,
-         |  CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-         |ce AS (SELECT sqrt(sum(m * m)) AS center_norm FROM
-         |  (SELECT avg(x) AS m FROM dm GROUP BY dim))
-         |SELECT no.n_vectors, pa.n_pairs,
-         |  pa.sc / CAST(pa.n_pairs AS DOUBLE) AS mean_pair_cos,
-         |  CASE WHEN pa.n_pairs > 1 THEN
-         |    sqrt((CAST(pa.n_pairs AS DOUBLE) * pa.scc - pa.sc * pa.sc)
-         |      / (CAST(pa.n_pairs AS DOUBLE) * (CAST(pa.n_pairs AS DOUBLE) - 1.0)))
-         |  END AS sd_pair_cos,
-         |  no.mean_norm, ce.center_norm,
-         |  ce.center_norm / no.mean_norm AS anisotropy
-         |FROM pa CROSS JOIN no CROSS JOIN ce""".stripMargin
-    },
-
-    // Twin of Similarity.labelOutliers: per-(label, dim) centroid means,
-    // L2 distance per vector, z from the explicit (n, Σd, Σd²) sample
-    // variance — the same guarded formula term-for-term.
-    "vec_outliers" ->
-      """WITH e AS (SELECT vec_id, label,
-        |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-        |dx AS (SELECT vec_id, label,
-        |  CAST(unnest(range(1, len(v) + 1)) AS INTEGER) AS i, v FROM e),
-        |d AS (SELECT vec_id, label, i - 1 AS dim, v[i] AS x FROM dx),
-        |c AS (SELECT label, dim, avg(x) AS mu FROM d GROUP BY 1, 2),
-        |dd AS (SELECT d.vec_id, d.label,
-        |  sqrt(sum((d.x - c.mu) * (d.x - c.mu))) AS dist
-        |  FROM d JOIN c ON c.label = d.label AND c.dim = d.dim GROUP BY 1, 2),
-        |m AS (SELECT label, CAST(count(*) AS BIGINT) AS n, sum(dist) AS s,
-        |  sum(dist * dist) AS ss FROM dd GROUP BY 1),
-        |f AS (SELECT dd.vec_id, dd.label, dd.dist,
-        |  CASE WHEN m.n >= 2 AND
-        |    (CAST(m.n AS DOUBLE) * m.ss - m.s * m.s)
-        |      / (CAST(m.n AS DOUBLE) * (CAST(m.n AS DOUBLE) - 1)) > 0
-        |  THEN (dd.dist - m.s / CAST(m.n AS DOUBLE))
-        |    / sqrt(greatest((CAST(m.n AS DOUBLE) * m.ss - m.s * m.s)
-        |      / (CAST(m.n AS DOUBLE) * (CAST(m.n AS DOUBLE) - 1)), CAST(0 AS DOUBLE)))
-        |  END AS z_score
-        |  FROM dd JOIN m USING (label))
-        |SELECT vec_id, label, round(dist, 6) AS dist,
-        |  round(z_score, 6) AS z_score,
-        |  coalesce(z_score > 2.5, false) AS is_outlier FROM f""".stripMargin,
-
-    // Twin of TextOps.decontaminate over the test-split benchmark: same
-    // 5-token grams (the MinhashPairsCtes slice algebra at k=5), same
-    // split boundary literal (bucket >= 9000) as the sample_split twin.
-    "decontaminate" ->
-      s"""WITH toks AS (SELECT doc_id, $Toks AS tk FROM documents),
-         |g AS (SELECT doc_id, list_distinct(CASE WHEN len(tk) >= 5
-         |  THEN list_transform(range(1, len(tk) - 3), i -> array_to_string(tk[i:i+4], ' '))
-         |  ELSE [] END) AS g FROM toks),
-         |bench AS (SELECT doc_id FROM documents
-         |  WHERE ((${phSql("CAST(doc_id AS VARCHAR)", "0")}) * ${Sampling.saltMult("split")}
-         |    + ${Sampling.saltAdd("split")}) % 1000000007 % 10000 >= 9000),
-         |bg AS (SELECT DISTINCT unnest(g.g) AS gram FROM g JOIN bench USING (doc_id)),
-         |dg AS (SELECT doc_id, unnest(g) AS gram FROM g),
-         |sh AS (SELECT dg.doc_id, count(*) AS n_shared_ngrams FROM dg JOIN bg USING (gram) GROUP BY 1)
-         |SELECT d.doc_id, coalesce(sh.n_shared_ngrams, 0) AS n_shared_ngrams,
-         |  coalesce(sh.n_shared_ngrams, 0) > 0 AS contaminated
-         |FROM documents d LEFT JOIN sh USING (doc_id)""".stripMargin,
-    // Twin of TextOps.bloomDecontaminate: identical bench slice and grams
-    // as the decontaminate twin, bit positions PolyHash(gram, 101+j) mod
-    // 2^18 for j in 0..2, sparse 32-bit word map via bit_or, membership
-    // via mask & (1 << bit) with bit < 32 — no shift ever reaches the
-    // BIGINT sign bit (DuckDB raises on the checked 1::BIGINT << 63).
-    "bloom_decontaminate" ->
-      s"""WITH toks AS (SELECT doc_id, $Toks AS tk FROM documents),
-         |g AS (SELECT doc_id, list_distinct(CASE WHEN len(tk) >= 5
-         |  THEN list_transform(range(1, len(tk) - 3), i -> array_to_string(tk[i:i+4], ' '))
-         |  ELSE [] END) AS g FROM toks),
-         |bench AS (SELECT doc_id FROM documents
-         |  WHERE ((${phSql("CAST(doc_id AS VARCHAR)", "0")}) * ${Sampling.saltMult("split")}
-         |    + ${Sampling.saltAdd("split")}) % 1000000007 % 10000 >= 9000),
-         |bg AS (SELECT DISTINCT unnest(g.g) AS gram FROM g JOIN bench USING (doc_id)),
-         |bpos AS (SELECT DISTINCT (${phSql("gram", "101 + j")}) % 262144 AS p
-         |  FROM bg CROSS JOIN range(0, 3) t(j)),
-         |words AS (SELECT p // 32 AS word_idx,
-         |  bit_or(CAST(1 AS BIGINT) << CAST(p % 32 AS INTEGER)) AS mask
-         |  FROM bpos GROUP BY 1),
-         |dg AS (SELECT doc_id, unnest(g) AS gram FROM g),
-         |dp AS (SELECT doc_id, gram, (${phSql("gram", "101 + j")}) % 262144 AS p
-         |  FROM dg CROSS JOIN range(0, 3) t(j)),
-         |hit AS (SELECT dp.doc_id, dp.gram,
-         |  min(CASE WHEN w.mask IS NOT NULL AND
-         |    (w.mask & (CAST(1 AS BIGINT) << CAST(dp.p % 32 AS INTEGER))) <> 0
-         |    THEN 1 ELSE 0 END) AS all_set
-         |  FROM dp LEFT JOIN words w ON w.word_idx = dp.p // 32 GROUP BY 1, 2),
-         |per AS (SELECT doc_id, CAST(sum(all_set) AS BIGINT) AS n_bloom_hits
-         |  FROM hit GROUP BY 1)
-         |SELECT d.doc_id, coalesce(per.n_bloom_hits, 0) AS n_bloom_hits,
-         |  coalesce(per.n_bloom_hits, 0) > 0 AS contaminated
-         |FROM documents d LEFT JOIN per USING (doc_id)""".stripMargin,
-
-    // Twin of Packing.packSequences: a plain global running sum here — the
-    // Spark side's sharded prefix sum must land on byte-identical offsets.
-    // sum() OVER is HUGEINT in DuckDB, hence the CAST (see sim_srp note).
-    "pack_sequences" ->
-      s"""WITH lens AS (SELECT doc_id, CAST(len($Toks) AS BIGINT) AS n_toks FROM documents),
-         |nz AS (SELECT * FROM lens WHERE n_toks > 0),
-         |c AS (SELECT doc_id, n_toks,
-         |  CAST(sum(n_toks) OVER (ORDER BY doc_id) AS BIGINT) AS e FROM nz),
-         |s AS (SELECT doc_id, n_toks, e - n_toks AS st, e FROM c),
-         |x AS (SELECT doc_id, n_toks, st, e,
-         |  unnest(range(st // 512, ((e - 1) // 512) + 1)) AS chunk_id FROM s)
-         |SELECT doc_id, n_toks, chunk_id,
-         |  greatest(chunk_id * 512, st) - st AS tok_start,
-         |  least((chunk_id + 1) * 512, e) - st AS tok_end
-         |FROM x""".stripMargin,
-    // Twin of Sampling.weightedSample: identical Efraimidis–Spirakis key
-    // (same Carter–Wegman u, same -ln(u)/w), same (key, id) order + limit.
-    // Twin of Sampling.bernoulliByProb(quality score): same CW draw as the
-    // other sampling twins, same NaN-null clamp, decision u < p.
-    // Twin of Sampling.dsirResample(lang='en', k=100, dims=2048): same
-    // PolyHash gram buckets (unigrams + adjacent bigrams), same add-1
-    // smoothed four-ln-term bucket ratio over exact integer counts, the
-    // per-doc sum folded over the bucket-SORTED term list (pinned
-    // accumulation order), and the same CW Gumbel draw per id. sum(c) is
-    // CAST back to BIGINT (DuckDB sums BIGINT into HUGEINT, whose +dims
-    // arithmetic would be exact but whose ln() cast path must match
-    // Spark's long->double).
-    "sample_dsir" -> {
-      val mult = Sampling.saltMult("dsir")
-      val add = Sampling.saltAdd("dsir")
-      val u = s"((((${phSql("CAST(doc_id AS VARCHAR)", "0")}) * $mult" +
-        s" + $add) % 1000000007 + 0.5) / 1000000007)"
-      s"""WITH tkd AS (SELECT doc_id, lang = 'en' AS tgt, $Toks AS tk FROM documents),
-         |grd AS (
-         |  SELECT doc_id, tgt, unnest(tk) AS g FROM tkd
-         |  UNION ALL
-         |  SELECT doc_id, tgt,
-         |    unnest(list_transform(range(1, len(tk)), i -> concat(tk[i], ' ', tk[i + 1]))) AS g
-         |  FROM tkd WHERE len(tk) >= 2),
-         |occd AS (SELECT doc_id, tgt, ${phSql("g", "0")} % 2048 AS b FROM grd),
-         |dcd AS (SELECT doc_id, b, max(tgt) AS tgt, CAST(count(*) AS BIGINT) AS c
-         |  FROM occd GROUP BY 1, 2),
-         |qbd AS (SELECT b, CAST(sum(c) AS BIGINT) AS qc FROM dcd GROUP BY 1),
-         |tbd AS (SELECT b, CAST(sum(c) AS BIGINT) AS tc FROM dcd WHERE tgt GROUP BY 1),
-         |totd AS (SELECT CAST(sum(c) AS BIGINT) AS qn,
-         |  CAST(sum(CASE WHEN tgt THEN c ELSE 0 END) AS BIGINT) AS tn FROM dcd),
-         |lrd AS (SELECT b,
-         |  ln(CAST(COALESCE(tc, 0) + 1 AS DOUBLE)) - ln(CAST(tn + 2048 AS DOUBLE))
-         |    - ln(CAST(qc + 1 AS DOUBLE)) + ln(CAST(qn + 2048 AS DOUBLE)) AS lnr
-         |  FROM qbd LEFT JOIN tbd USING (b) CROSS JOIN totd),
-         |dwd AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_grams,
-         |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |    list(CAST(c AS DOUBLE) * lnr ORDER BY b)), (a, x) -> a + x) AS logw
-         |  FROM dcd JOIN lrd USING (b) GROUP BY 1)
-         |SELECT doc_id, n_grams, logw, logw + (- ln(- ln($u))) AS score
-         |FROM dwd ORDER BY score DESC, doc_id ASC LIMIT 100""".stripMargin
-    },
-    "sample_importance" -> {
-      val u = s"((((${phSql("CAST(doc_id AS VARCHAR)", "0")}) * ${Sampling.saltMult("importance")}" +
-        s" + ${Sampling.saltAdd("importance")}) % 1000000007 + 0.5) / 1000000007)"
-      s"""WITH q AS (SELECT doc_id, $Toks AS tk, text FROM documents),
-         |s AS (SELECT doc_id, $u AS u, (${qualityScoreSql("tk", "text")}) AS score FROM q),
-         |c AS (SELECT doc_id, u,
-         |  CASE WHEN score IS NULL OR isnan(score) THEN NULL
-         |       ELSE least(greatest(score, CAST(0 AS DOUBLE)), CAST(1 AS DOUBLE)) END AS accept_prob
-         |  FROM s)
-         |SELECT doc_id, u, accept_prob,
-         |  coalesce(u < accept_prob, false) AS is_kept FROM c""".stripMargin
-    },
-    // Twin of the soft-dedup gate: the shared cluster-closure CTEs give
-    // cluster sizes, p = 1/size needs no clamp branch (it is always in
-    // (0, 1], and least/greatest are float no-ops there), same CW draw
-    // under the 'softdedup' salt.
-    "sample_soft_dedup" -> {
-      val u = s"((((${phSql("CAST(doc_id AS VARCHAR)", "0")}) * ${Sampling.saltMult("softdedup")}" +
-        s" + ${Sampling.saltAdd("softdedup")}) % 1000000007 + 0.5) / 1000000007)"
-      s"""WITH RECURSIVE $MinhashPairsCtes,
-         |$ClosureCtes,
-         |cs AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS csize
-         |  FROM comps GROUP BY 1),
-         |sized AS (SELECT d.doc_id, coalesce(cs.csize, 1) AS cluster_size
-         |  FROM documents d LEFT JOIN comps c USING (doc_id)
-         |  LEFT JOIN cs ON cs.cluster_id = c.cluster_id)
-         |SELECT doc_id, cluster_size, $u AS u,
-         |  CAST(1 AS DOUBLE) / CAST(cluster_size AS DOUBLE) AS accept_prob,
-         |  $u < (CAST(1 AS DOUBLE) / CAST(cluster_size AS DOUBLE)) AS is_kept
-         |FROM sized""".stripMargin
-    },
-    "sample_weighted" ->
-      s"""SELECT doc_id, n_chars FROM (
-         |  SELECT doc_id, n_chars,
-         |    -ln((((${phSql("CAST(doc_id AS VARCHAR)", "0")}) * ${Sampling.saltMult("wsample")}
-         |      + ${Sampling.saltAdd("wsample")}) % 1000000007 + 0.5) / 1000000007)
-         |      / n_chars AS key
-         |  FROM documents WHERE n_chars IS NOT NULL AND n_chars > 0)
-         |ORDER BY key, doc_id LIMIT 50""".stripMargin,
-    // Twin of TextOps.collocations: same bigram/unigram counts, same PMI
-    // expression tree, same (pmi desc, bigram asc) order + limit.
-    "text_collocations" ->
-      s"""WITH tk AS (SELECT $Toks AS tk FROM documents),
-         |uni AS (SELECT unnest(tk) AS term FROM tk),
-         |uc AS (SELECT term, CAST(count(*) AS BIGINT) AS c FROM uni GROUP BY 1),
-         |bg AS (SELECT unnest(list_transform(range(1, len(tk)),
-         |  i -> array_to_string(tk[i:i+1], ' '))) AS bigram FROM tk),
-         |bc AS (SELECT bigram, CAST(count(*) AS BIGINT) AS c_xy FROM bg
-         |  GROUP BY 1 HAVING count(*) >= 5),
-         |tot AS (SELECT CAST((SELECT count(*) FROM uni) AS BIGINT) AS n_tok,
-         |  CAST((SELECT count(*) FROM bg) AS BIGINT) AS n_big)
-         |SELECT bigram, c_xy, cx.c AS c_x, cy.c AS c_y,
-         |  ln((CAST(c_xy AS DOUBLE) / n_big)
-         |    / ((CAST(cx.c AS DOUBLE) / n_tok) * (CAST(cy.c AS DOUBLE) / n_tok))) AS pmi
-         |FROM bc
-         |JOIN uc cx ON cx.term = split_part(bigram, ' ', 1)
-         |JOIN uc cy ON cy.term = split_part(bigram, ' ', 2), tot
-         |ORDER BY pmi DESC, bigram ASC LIMIT 100""".stripMargin,
-    // Twin of TextOps.unigramDivergence: identical smoothing and p/q/m
-    // algebra; counts CAST out of HUGEINT before pandas sees them.
-    "corpus_divergence" ->
-      s"""WITH toks AS (SELECT lang = 'en' AS a, unnest($Toks) AS term FROM documents),
-         |counts AS (SELECT term,
-         |  CAST(sum(CASE WHEN a THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-         |  CAST(sum(CASE WHEN a THEN 0 ELSE 1 END) AS BIGINT) AS cb
-         |  FROM toks GROUP BY 1),
-         |tot AS (SELECT CAST(sum(ca) AS BIGINT) AS ta, CAST(sum(cb) AS BIGINT) AS tb,
-         |  count(*) AS v FROM counts),
-         |pq AS (SELECT (ca + 1.0) / (ta + v) AS p, (cb + 1.0) / (tb + v) AS q,
-         |  ((ca + 1.0) / (ta + v) + (cb + 1.0) / (tb + v)) / 2 AS m, ta, tb, v
-         |  FROM counts, tot)
-         |SELECT sum(0.5 * p * ln(p / m) + 0.5 * q * ln(q / m)) AS js_divergence,
-         |  max(v) AS n_vocab, max(ta) AS n_tokens_a, max(tb) AS n_tokens_b
-         |FROM pq""".stripMargin,
-
-    "text_tfidf" ->
-      s"""WITH t AS (SELECT doc_id, unnest($Toks) AS term FROM documents),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM t GROUP BY 1, 2),
-         |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |n AS (SELECT count(*) AS n_docs FROM documents),
-         |s AS (SELECT tf.doc_id, tf.term, tf.tf,
-         |  tf.tf * (ln(CAST(n.n_docs + 1 AS DOUBLE) / (dfreq.df + 1)) + 1) AS tfidf
-         |  FROM tf JOIN dfreq USING (term) CROSS JOIN n)
-         |SELECT doc_id, term, tf, CAST(rank AS INTEGER) AS rank, tfidf FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term ASC) AS rank FROM s)
-         |WHERE rank <= 5""".stripMargin,
-
-    // Twin of Dedup.minhashJoin over the edit-augmented corpus: the shared
-    // minhash band CTEs (bnd/sets) rebased onto `corpus`, then bucketed
-    // per side by the copy-id tag — equivalent to banding each slice
-    // separately because the signature is per-document. No a<b dedup: the
-    // sides are distinct relations.
-    "dedup_cross" ->
-      s"""WITH $NearDupCorpusCte,
-         |${minhashPairsCtesFrom("corpus")},
-         |bl AS (SELECT bnd.doc_id AS id_a, b, band_hash FROM bnd
-         |  WHERE bnd.doc_id < $CopyIdTag),
-         |br AS (SELECT bnd.doc_id AS id_b, b, band_hash FROM bnd
-         |  WHERE bnd.doc_id >= $CopyIdTag),
-         |cx AS (SELECT DISTINCT id_a, id_b FROM bl JOIN br USING (b, band_hash))
-         |SELECT id_a, id_b, jaccard FROM (
-         |  SELECT c.id_a, c.id_b,
-         |    CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-         |      len(list_distinct(list_concat(a.sh, b.sh))) AS jaccard
-         |  FROM cx c JOIN sets a ON a.doc_id = c.id_a JOIN sets b ON b.doc_id = c.id_b)
-         |WHERE jaccard >= 0.5""".stripMargin,
-    // Twin of Dedup.containmentJoin over the token-aligned fragment bench:
-    // same 3-token shingles, right-side distinct-gram index, exact
-    // |inter|/|sh_b| — fragments rebuilt from the SAME token slice, so a
-    // fragment's shingles are a subset of its source's (containment 1.0)
-    "dedup_containment_cross" -> {
-      val sh3 = (tk: String) => s"CASE WHEN len($tk) >= 3 THEN " +
-        s"list_transform(range(1, len($tk) - 1), i -> array_to_string($tk[i:i+2], ' ')) " +
-        s"ELSE [] END"
-      s"""WITH fr AS (SELECT doc_id + ${1L << 41} AS doc_id,
-         |  array_to_string(($Toks)[5:44], ' ') AS text
-         |  FROM documents WHERE doc_id % 17 = 0 AND len($Toks) >= 46),
-         |lg AS (SELECT doc_id AS id_a, unnest(list_distinct(${sh3("tk")})) AS sh
-         |  FROM (SELECT doc_id, $Toks AS tk FROM documents)),
-         |rgx AS (SELECT doc_id AS id_b, unnest(list_distinct(${sh3("tk")})) AS sh
-         |  FROM (SELECT doc_id, $Toks AS tk FROM fr)),
-         |rsx AS (SELECT id_b, CAST(count(*) AS BIGINT) AS nb FROM rgx GROUP BY 1),
-         |shx AS (SELECT id_a, id_b, CAST(count(*) AS BIGINT) AS inter
-         |  FROM lg JOIN rgx USING (sh) GROUP BY 1, 2)
-         |SELECT id_a, id_b, CAST(inter AS DOUBLE) / nb AS containment_b
-         |FROM shx JOIN rsx USING (id_b)
-         |WHERE CAST(inter AS DOUBLE) / nb >= 0.8""".stripMargin
-    },
-    "dedup_exact" ->
-      """WITH k AS (SELECT doc_id, md5(text) AS text_md5 FROM documents),
-        |g AS (SELECT text_md5, min(doc_id) AS keeper_id, count(*) AS group_size FROM k GROUP BY 1)
-        |SELECT k.doc_id, k.text_md5, g.keeper_id, k.doc_id <> g.keeper_id AS is_dup, g.group_size
-        |FROM k JOIN g USING (text_md5)""".stripMargin,
-    // Twin of Dedup.minhashEval on the sliced edit-augmented corpus: the
-    // shared pipeline CTEs rebased onto the slice (minhashPairsCtesFrom),
-    // the truth side as the all-pairs exact Jaccard, identical counts.
-    "dedup_eval" ->
-      s"""WITH $NearDupCorpusCte,
-         |eval_docs AS (SELECT doc_id, text FROM corpus
-         |  WHERE (doc_id % $CopyIdTag) % 10 = 0),
-         |${minhashPairsCtesFrom("eval_docs")},
-         |truth AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM sets a JOIN sets b ON a.doc_id < b.doc_id
-         |  WHERE len(a.sh) > 0 AND len(b.sh) > 0
-         |  AND CAST(least(len(a.sh), len(b.sh)) AS DOUBLE)
-         |    >= 0.5 * CAST(greatest(len(a.sh), len(b.sh)) AS DOUBLE)
-         |  AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-         |    len(list_distinct(list_concat(a.sh, b.sh))) >= 0.5),
-         |j AS (SELECT coalesce(t.id_a, p.id_a) AS id_a,
-         |  t.id_a IS NOT NULL AS in_t, p.id_a IS NOT NULL AS in_p
-         |  FROM truth t FULL OUTER JOIN (SELECT id_a, id_b FROM mh_pairs) p
-         |  ON t.id_a = p.id_a AND t.id_b = p.id_b)
-         |SELECT CAST(count(CASE WHEN in_t THEN 1 END) AS BIGINT) AS n_true,
-         |  CAST(count(CASE WHEN in_p THEN 1 END) AS BIGINT) AS n_pred,
-         |  CAST(count(CASE WHEN in_t AND in_p THEN 1 END) AS BIGINT) AS tp,
-         |  CAST(count(CASE WHEN NOT in_t THEN 1 END) AS BIGINT) AS fp,
-         |  CAST(count(CASE WHEN NOT in_p THEN 1 END) AS BIGINT) AS fn,
-         |  CASE WHEN count(CASE WHEN in_p THEN 1 END) > 0 THEN
-         |    CAST(count(CASE WHEN in_t AND in_p THEN 1 END) AS DOUBLE)
-         |      / count(CASE WHEN in_p THEN 1 END) END AS precision,
-         |  CASE WHEN count(CASE WHEN in_t THEN 1 END) > 0 THEN
-         |    CAST(count(CASE WHEN in_t AND in_p THEN 1 END) AS DOUBLE)
-         |      / count(CASE WHEN in_t THEN 1 END) END AS recall
-         |FROM j""".stripMargin,
-    // Twin of Dedup.lshPlan(32, 0.8): the same seeded-1.0 chain folds for
-    // every power (never libm pow) and the same max-r-qualifying choice.
-    "dedup_lsh_plan" -> {
-      def chain(base: String, exp: String) =
-        s"list_reduce(list_prepend(CAST(1.0 AS DOUBLE), " +
-          s"list_transform(range(0, $exp), x -> CAST($base AS DOUBLE))), (a, c) -> a * c)"
-      def pDetect(s: String) =
-        s"1.0 - ${chain(s"1.0 - ${chain(s, "rows_per_band")}", "bands")}"
-      s"""WITH g AS (SELECT CAST(b AS INTEGER) AS bands,
-         |  CAST(32 / b AS INTEGER) AS rows_per_band
-         |  FROM range(1, 33) t(b) WHERE 32 % b = 0),
-         |p AS (SELECT CAST(32 AS INTEGER) AS n_hashes, bands, rows_per_band,
-         |  ${pDetect("0.8")} AS p_target,
-         |  ${pDetect("0.3")} AS p_noise FROM g),
-         |q AS (SELECT *, p_target >= 0.9 AS qualifies FROM p),
-         |bst AS (SELECT max(CASE WHEN qualifies THEN rows_per_band END) AS best_r FROM q)
-         |SELECT n_hashes, bands, rows_per_band, p_target, p_noise, qualifies,
-         |  qualifies AND rows_per_band = bst.best_r AS chosen
-         |FROM q CROSS JOIN bst""".stripMargin
-    },
-    "dedup_minhash" ->
-      s"""WITH $MinhashPairsCtes
-         |SELECT id_a, id_b, jaccard FROM mh_pairs""".stripMargin,
-    // Twin of Dedup.containmentDups: the shared LSH candidate CTEs, scored
-    // by |∩| / min(|A|,|B|) with the same smaller-set/tie-to-smaller-id
-    // contained_id rule.
-    "dedup_containment" ->
-      s"""WITH $MinhashPairsCtes,
-         |cont AS (SELECT c.id_a, c.id_b,
-         |  CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-         |    / least(len(a.sh), len(b.sh)) AS containment,
-         |  CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-         |    / len(list_distinct(list_concat(a.sh, b.sh))) AS jaccard,
-         |  CASE WHEN len(a.sh) < len(b.sh) THEN c.id_a
-         |       WHEN len(b.sh) < len(a.sh) THEN c.id_b
-         |       ELSE least(c.id_a, c.id_b) END AS contained_id
-         |FROM cand c JOIN sets a ON a.doc_id = c.id_a JOIN sets b ON b.doc_id = c.id_b)
-         |SELECT id_a, id_b, containment, jaccard, contained_id FROM cont
-         |WHERE containment >= CAST(0.8 AS DOUBLE)""".stripMargin,
-    // Transitive closure of the minhash pair graph: min reachable id per
-    // node via recursive fan-out (fine at oracle scale; the Spark side uses
-    // the O(log n)-round star algorithm instead).
-    "dedup_clusters" ->
-      s"""WITH RECURSIVE $MinhashPairsCtes,
-         |$ClosureCtes
-         |SELECT c.doc_id, c.cluster_id, s.cluster_size,
-         |  c.doc_id = c.cluster_id AS is_canonical
-         |FROM comps c JOIN sizes s USING (cluster_id)""".stripMargin,
-    // Twin of Curation.curate: the composite reuses the SHARED oracle
-    // bodies of its stages verbatim — GopherCtes (quality gate),
-    // MinhashPairsCtes + ClosureCtes + the dedup_keepers ranking (near-dup
-    // keeper), the dedup_exact md5 groups, and the decontaminate 5-gram
-    // bench probe (CTEs renamed: the shared minhash chain owns `toks`/`sh`)
-    // — so the pipeline verdicts cannot drift from the per-stage gates.
-    "pipeline_curate" ->
-      s"""WITH RECURSIVE $MinhashPairsCtes,
-         |$ClosureCtes,
-         |$GopherCtes,
-         |q AS (SELECT d.doc_id,
-         |  ${qualityScoreSql("t.tk", "d.text")} AS quality_score
-         |  FROM documents d JOIN toks t USING (doc_id)),
-         |r AS (SELECT c.doc_id, c.cluster_id, q.quality_score,
-         |  row_number() OVER (PARTITION BY c.cluster_id
-         |    ORDER BY q.quality_score DESC, c.doc_id ASC) AS rk
-         |  FROM comps c JOIN q USING (doc_id)),
-         |nk AS (SELECT doc_id, rk = 1 AS is_keeper FROM r),
-         |exd AS (SELECT doc_id, md5(text) AS text_md5 FROM documents),
-         |exg AS (SELECT text_md5, min(doc_id) AS keeper_id FROM exd GROUP BY 1),
-         |exk AS (SELECT exd.doc_id, exd.doc_id = exg.keeper_id AS is_exact_keeper
-         |  FROM exd JOIN exg USING (text_md5)),
-         |dgr AS (SELECT doc_id, list_distinct(CASE WHEN len(tk) >= 5
-         |  THEN list_transform(range(1, len(tk) - 3), i -> array_to_string(tk[i:i+4], ' '))
-         |  ELSE [] END) AS g FROM toks),
-         |bsel AS (SELECT doc_id FROM documents
-         |  WHERE ((${phSql("CAST(doc_id AS VARCHAR)", "0")}) * ${Sampling.saltMult("split")}
-         |    + ${Sampling.saltAdd("split")}) % 1000000007 % 10000 >= 9000),
-         |bgr AS (SELECT DISTINCT unnest(dgr.g) AS gram FROM dgr JOIN bsel USING (doc_id)),
-         |dgo AS (SELECT doc_id, unnest(g) AS gram FROM dgr),
-         |shd AS (SELECT dgo.doc_id, count(*) AS n_shared FROM dgo JOIN bgr USING (gram) GROUP BY 1)
-         |SELECT d.doc_id, gr.pass_gopher, exk.is_exact_keeper,
-         |  coalesce(nk.is_keeper, true) AS is_near_keeper,
-         |  coalesce(shd.n_shared, 0) = 0 AS is_clean,
-         |  gr.pass_gopher AND exk.is_exact_keeper AND coalesce(nk.is_keeper, true)
-         |    AND (coalesce(shd.n_shared, 0) = 0) AS kept
-         |FROM documents d
-         |JOIN gr USING (doc_id)
-         |JOIN exk USING (doc_id)
-         |LEFT JOIN nk USING (doc_id)
-         |LEFT JOIN shd USING (doc_id)""".stripMargin,
-    // Twin of Components.dedupKeepers: the dedup_clusters closure CTEs
-    // plus the text_quality score expression, ranked per cluster with the
-    // same (quality desc, id asc) tie-break — the score is exact double
-    // arithmetic over integer counts, so the argmax cannot drift.
-    "dedup_keepers" ->
-      s"""WITH RECURSIVE $MinhashPairsCtes,
-         |$ClosureCtes,
-         |q AS (SELECT d.doc_id,
-         |  ${qualityScoreSql("t.tk", "d.text")} AS quality_score
-         |  FROM documents d JOIN toks t USING (doc_id)),
-         |r AS (SELECT c.doc_id, c.cluster_id, s.cluster_size, q.quality_score,
-         |  row_number() OVER (PARTITION BY c.cluster_id
-         |    ORDER BY q.quality_score DESC, c.doc_id ASC) AS rk
-         |  FROM comps c JOIN sizes s USING (cluster_id) JOIN q USING (doc_id))
-         |SELECT doc_id, cluster_id, cluster_size, quality_score, rk = 1 AS is_keeper
-         |FROM r""".stripMargin,
-    // Twin of Components.pageRank (3 rounds unrolled): same symmetrized
-    // edges, same (1-d)/N + d·Σ r/deg update. The damping terms are
-    // CAST to DOUBLE first — bare `1 - 0.85` would be DuckDB DECIMAL
-    // arithmetic (exactly 0.15), not the Scala double 0.15000000000000002
-    // the Spark side folds.
-    // Twin of Components.modularity over the minhash pair graph with
-    // source labels: intra/deg/m are exact integers off the shared
-    // mh_pairs; each q_part is the same three-op double expression.
-    "graph_modularity" ->
-      s"""WITH $MinhashPairsCtes,
-         |edn AS (SELECT least(id_a, id_b) AS u, greatest(id_a, id_b) AS w
-         |  FROM mh_pairs WHERE id_a <> id_b GROUP BY 1, 2),
-         |elm AS (SELECT d1.source AS lu, d2.source AS lw FROM edn
-         |  JOIN documents d1 ON d1.doc_id = edn.u
-         |  JOIN documents d2 ON d2.doc_id = edn.w),
-         |mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM elm),
-         |dgm AS (SELECT label, CAST(count(*) AS BIGINT) AS degree FROM
-         |  (SELECT unnest([lu, lw]) AS label FROM elm) GROUP BY 1),
-         |iam AS (SELECT lu AS label, CAST(count(*) AS BIGINT) AS intra
-         |  FROM elm WHERE lu = lw GROUP BY 1)
-         |SELECT dgm.label AS label, COALESCE(iam.intra, 0) AS intra_edges,
-         |  dgm.degree AS degree,
-         |  CAST(COALESCE(iam.intra, 0) AS DOUBLE) / m
-         |    - (CAST(dgm.degree AS DOUBLE) / (2 * m))
-         |    * (CAST(dgm.degree AS DOUBLE) / (2 * m)) AS q_part
-         |FROM dgm LEFT JOIN iam USING (label) CROSS JOIN mm""".stripMargin,
-    "graph_pagerank" -> {
-      def round(r: String, prev: String) =
-        s"""c$r AS (SELECT s.dst AS id, sum(p.rank / d.deg) AS c FROM sym s
-           |  JOIN $prev p ON p.id = s.src JOIN deg d ON d.src = s.src GROUP BY 1),
-           |r$r AS (SELECT deg.src AS id,
-           |  (1 - CAST(0.85 AS DOUBLE)) / nn.n
-           |    + CAST(0.85 AS DOUBLE) * coalesce(c$r.c, 0.0) AS rank
-           |  FROM deg CROSS JOIN nn LEFT JOIN c$r ON c$r.id = deg.src)""".stripMargin
-      s"""WITH $MinhashPairsCtes,
-         |sym AS (SELECT id_a AS src, id_b AS dst FROM mh_pairs
-         |  UNION SELECT id_b, id_a FROM mh_pairs),
-         |deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM sym GROUP BY 1),
-         |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM deg),
-         |r0 AS (SELECT src AS id, 1.0 / nn.n AS rank FROM deg CROSS JOIN nn),
-         |${round("1", "r0")},
-         |${round("2", "r1")},
-         |${round("3", "r2")}
-         |SELECT deg.src AS doc_id, deg.deg, r3.rank
-         |FROM deg JOIN r3 ON r3.id = deg.src""".stripMargin
-    },
-    // Twin of Components.kCore(k=2, rounds=8): same canonical edge set,
-    // round-1 peel on full degrees, then 7 synchronous subgraph peels —
-    // every round MATERIALIZED (each alive set is referenced twice by the
-    // next round's edge filter and would re-expand exponentially).
-    "graph_kcore" -> {
-      def round(r: Int, prev: String) =
-        s"""e$r AS MATERIALIZED (SELECT u.a, u.b FROM und u
-           |  JOIN $prev x ON x.node = u.a JOIN $prev y ON y.node = u.b),
-           |a$r AS MATERIALIZED (SELECT id AS node FROM
-           |  (SELECT a AS id FROM e$r UNION ALL SELECT b FROM e$r)
-           |  GROUP BY id HAVING count(*) >= 2)""".stripMargin
-      s"""WITH $MinhashPairsCtes,
-         |und AS MATERIALIZED (SELECT DISTINCT least(id_a, id_b) AS a,
-         |  greatest(id_a, id_b) AS b FROM mh_pairs WHERE id_a <> id_b),
-         |deg0 AS MATERIALIZED (SELECT id AS node,
-         |  CAST(count(*) AS BIGINT) AS deg FROM
-         |  (SELECT a AS id FROM und UNION ALL SELECT b FROM und) GROUP BY 1),
-         |a1 AS MATERIALIZED (SELECT node FROM deg0 WHERE deg >= 2),
-         |${(2 to 8).map(r => round(r, s"a${r - 1}")).mkString(",\n")},
-         |ef AS (SELECT u.a, u.b FROM und u
-         |  JOIN a8 x ON x.node = u.a JOIN a8 y ON y.node = u.b),
-         |cd AS (SELECT id AS node, CAST(count(*) AS BIGINT) AS core_deg FROM
-         |  (SELECT a AS id FROM ef UNION ALL SELECT b FROM ef) GROUP BY 1)
-         |SELECT deg0.node AS doc_id, deg0.deg, cd.core_deg,
-         |  a8.node IS NOT NULL AS in_core
-         |FROM deg0 LEFT JOIN a8 ON a8.node = deg0.node
-         |LEFT JOIN cd ON cd.node = deg0.node""".stripMargin
-    },
-    // Twin of Components.adamicAdar(maxDeg=64): wedge enumeration at the
-    // shared neighbor with the same degree cap, 1/ln(deg) scored.
-    "graph_adamic_adar" ->
-      s"""WITH $MinhashPairsCtes,
-         |und AS MATERIALIZED (SELECT DISTINCT least(id_a, id_b) AS a,
-         |  greatest(id_a, id_b) AS b FROM mh_pairs WHERE id_a <> id_b),
-         |sym AS (SELECT a AS src, b AS dst FROM und
-         |  UNION ALL SELECT b, a FROM und),
-         |deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM sym
-         |  GROUP BY 1),
-         |nb AS MATERIALIZED (SELECT s.src, s.dst, d.deg AS cdeg
-         |  FROM sym s JOIN deg d ON d.src = s.src
-         |  WHERE d.deg >= 2 AND d.deg <= 64),
-         |w AS (SELECT n1.dst AS id_a, n2.dst AS id_b, n1.cdeg
-         |  FROM nb n1 JOIN nb n2 ON n1.src = n2.src WHERE n1.dst < n2.dst),
-         |sc AS (SELECT id_a, id_b, CAST(count(*) AS BIGINT)
-         |    AS common_neighbors,
-         |  sum(CAST(1 AS DOUBLE) / ln(CAST(cdeg AS DOUBLE))) AS aa_score
-         |  FROM w GROUP BY 1, 2)
-         |SELECT sc.id_a, sc.id_b, sc.common_neighbors, sc.aa_score,
-         |  u.a IS NOT NULL AS is_edge
-         |FROM sc LEFT JOIN und u ON u.a = sc.id_a AND u.b = sc.id_b""".stripMargin,
-    // Twin of Components.labelPropagation(rounds=3) over the minhash
-    // near-dup graph with lang seeds on doc_id % 5 = 0: per round, a
-    // (node, label) vote count, the (n desc, label asc) argmax, and the
-    // clamp/adopt/keep coalesce; rounds MATERIALIZED (the chain is
-    // referenced twice per round and would re-expand exponentially).
-    "graph_labelprop" -> {
-      def round(r: Int, prev: String) =
-        s"""v$r AS MATERIALIZED (SELECT s.dst AS id, l.label, count(*) AS n
-           |  FROM sym s JOIN $prev l ON l.id = s.src
-           |  WHERE l.label IS NOT NULL GROUP BY 1, 2),
-           |b$r AS (SELECT id, label AS vote FROM (
-           |  SELECT id, label, row_number() OVER (
-           |    PARTITION BY id ORDER BY n DESC, label ASC) AS rk FROM v$r)
-           |  WHERE rk = 1),
-           |l$r AS MATERIALIZED (SELECT p.id,
-           |  coalesce(s.seed_label, b$r.vote, p.label) AS label
-           |  FROM $prev p LEFT JOIN b$r ON b$r.id = p.id
-           |  LEFT JOIN seed s ON s.id = p.id)""".stripMargin
-      s"""WITH $MinhashPairsCtes,
-         |sym AS (SELECT id_a AS src, id_b AS dst FROM mh_pairs
-         |  UNION SELECT id_b, id_a FROM mh_pairs),
-         |nodes AS (SELECT DISTINCT src AS id FROM sym),
-         |seed AS (SELECT doc_id AS id, lang AS seed_label
-         |  FROM documents WHERE doc_id % 5 = 0),
-         |l0 AS (SELECT n.id, s.seed_label AS label
-         |  FROM nodes n LEFT JOIN seed s ON s.id = n.id),
-         |${round(1, "l0")},
-         |${round(2, "l1")},
-         |${round(3, "l2")}
-         |SELECT l3.id AS doc_id, l3.label, s.id IS NOT NULL AS is_seed
-         |FROM l3 LEFT JOIN seed s ON s.id = l3.id""".stripMargin
-    },
-    // Twin of Components.triangleCounts over the minhash near-dup graph:
-    // same degree-ordered orientation (lower (deg, id) endpoint first),
-    // wedges at the lower-rank endpoint with v < w by id, closed against
-    // the canonical undirected edge set.
-    "graph_triangles" ->
-      s"""WITH $MinhashPairsCtes,
-         |und AS (SELECT DISTINCT id_a AS a, id_b AS b FROM mh_pairs),
-         |nd AS (SELECT node, CAST(count(*) AS BIGINT) AS deg FROM (
-         |  SELECT a AS node FROM und UNION ALL SELECT b FROM und) GROUP BY 1),
-         |dir AS (SELECT
-         |  CASE WHEN (da.deg < db.deg) OR (da.deg = db.deg AND u.a < u.b)
-         |       THEN u.a ELSE u.b END AS u,
-         |  CASE WHEN (da.deg < db.deg) OR (da.deg = db.deg AND u.a < u.b)
-         |       THEN u.b ELSE u.a END AS v
-         |  FROM und u JOIN nd da ON da.node = u.a JOIN nd db ON db.node = u.b),
-         |tri AS (SELECT d1.u, d1.v, d2.v AS w FROM dir d1
-         |  JOIN dir d2 ON d1.u = d2.u AND d1.v < d2.v
-         |  JOIN und ON und.a = d1.v AND und.b = d2.v),
-         |pn AS (SELECT node, CAST(count(*) AS BIGINT) AS triangles FROM (
-         |  SELECT u AS node FROM tri UNION ALL SELECT v FROM tri
-         |  UNION ALL SELECT w FROM tri) GROUP BY 1)
-         |SELECT nd.node AS doc_id, nd.deg,
-         |  coalesce(pn.triangles, CAST(0 AS BIGINT)) AS triangles,
-         |  CASE WHEN nd.deg >= 2 THEN round(
-         |    2.0 * coalesce(pn.triangles, CAST(0 AS BIGINT)) /
-         |      (CAST(nd.deg AS DOUBLE) * CAST(nd.deg - 1 AS DOUBLE)), 6)
-         |  ELSE 0.0 END AS lcc
-         |FROM nd LEFT JOIN pn ON pn.node = nd.node""".stripMargin,
-    // Twin of the WIDE multi-seed SimHash (Dedup.simhashWide): per seed j,
-    // h_j = (h_0 + j·31^len) mod p per shingle (the same algebraic seed
-    // derivation as minhash), a 30-bit bit-balance signature per seed, the
-    // eight signatures packed little-endian into 4 BIGINT words (HUGEINT
-    // accumulation + two's-complement fold, as in wideWordCtes), then the
-    // all-pairs wide-Hamming brute force the pigeonhole must equal.
-    "dedup_simhash" -> {
-      val seeds = graft.pipeline.Dedup.SimhashWideSeeds
-      val maxDist = graft.pipeline.Dedup.SimhashWideMaxDist
-      val powSql = // 31^bytelen(s) mod p: multiply once per char, seed 1
-        "list_reduce(list_prepend(CAST(1 AS BIGINT), " +
-          "list_transform(string_split(s, ''), c -> CAST(0 AS BIGINT))), " +
-          "(a, c) -> (a * 31) % 1000000007)"
-      val wordExprs = (0 until 4).map { w =>
-        val terms = (0 until seeds).flatMap { j =>
-          val lo = math.max(30 * j, 64 * w)
-          val hi = math.min(30 * j + 30, 64 * w + 64)
-          if (lo >= hi) None
-          else {
-            val mask = (1L << (hi - lo)) - 1
-            Some(s"WHEN j = $j THEN CAST(((sig >> ${lo - 30 * j}) & $mask) " +
-              s"AS HUGEINT) * ${BigInt(2).pow(lo - 64 * w)}")
-          }
-        }.mkString(" ")
-        s"""CAST(CASE WHEN hw$w >= 9223372036854775808
-           |    THEN hw$w - 18446744073709551616 ELSE hw$w END AS BIGINT) AS w$w""".stripMargin ->
-          s"sum(CASE $terms ELSE 0 END) AS hw$w"
-      }
-      s"""WITH toks AS (SELECT doc_id, $Toks AS tk FROM documents),
-         |shg AS (SELECT doc_id, CASE WHEN len(tk) >= 3
-         |  THEN list_transform(range(1, len(tk) - 1), i -> array_to_string(tk[i:i+2], ' '))
-         |  ELSE [] END AS sh FROM toks),
-         |hs AS (SELECT doc_id, list_transform(sh, s -> ${phSql("s", "0")}) AS h0s,
-         |  list_transform(sh, s -> $powSql) AS pws FROM shg WHERE len(sh) > 0),
-         |hseeds AS (SELECT doc_id, j,
-         |  list_transform(range(1, len(h0s) + 1), t -> (h0s[t] + j * pws[t]) % 1000000007) AS hj
-         |  FROM hs CROSS JOIN (SELECT unnest(range(0, $seeds)) AS j)),
-         |sigj AS (SELECT doc_id, j, CAST(list_sum(list_transform(range(0, 30), i ->
-         |  CASE WHEN list_sum(list_transform(hj, h -> CASE WHEN (h >> i) & 1 = 1 THEN 1 ELSE -1 END)) > 0
-         |  THEN (CAST(1 AS BIGINT) << i) ELSE 0 END)) AS BIGINT) AS sig FROM hseeds),
-         |hw AS (SELECT doc_id, ${wordExprs.map(_._2).mkString(",\n  ")}
-         |  FROM sigj GROUP BY doc_id),
-         |wfpt AS (SELECT doc_id, ${wordExprs.map(_._1).mkString(",\n  ")}
-         |  FROM hw)
-         |${wideDupsSelect(maxDist)}""".stripMargin
-    },
-    "dedup_ngram" ->
-      s"""WITH toks AS (SELECT lang, doc_id, array_to_string($Toks, ' ') AS norm FROM documents),
-         |g AS (SELECT * FROM (SELECT lang AS block, doc_id, list_distinct(CASE WHEN length(norm) >= 3
-         |  THEN list_transform(range(1, length(norm) - 1), i -> norm[i:i+2])
-         |  ELSE [] END) AS g FROM toks) WHERE len(g) > 0)
-         |SELECT block, id_a, id_b, jaccard FROM (
-         |  SELECT a.block, a.doc_id AS id_a, b.doc_id AS id_b,
-         |    CAST(len(list_intersect(a.g, b.g)) AS DOUBLE) /
-         |      len(list_distinct(list_concat(a.g, b.g))) AS jaccard
-         |  FROM g a JOIN g b ON a.block = b.block AND a.doc_id < b.doc_id)
-         |WHERE jaccard >= 0.3""".stripMargin,
-
-    "sim_topk" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-        |s AS (SELECT q.query_id, c.vec_id AS neighbor_id,
-        |  list_sum(list_transform(range(1, len(q.qv) + 1), i -> q.qv[i] * c.v[i])) /
-        |    (sqrt(list_sum(list_transform(range(1, len(q.qv) + 1), i -> q.qv[i] * q.qv[i]))) *
-        |     sqrt(list_sum(list_transform(range(1, len(c.v) + 1), i -> c.v[i] * c.v[i])))) AS cos_sim
-        |FROM e c CROSS JOIN q WHERE c.vec_id <> q.query_id)
-        |SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cos_sim FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rank
-        |  FROM s) WHERE rank <= 3""".stripMargin,
-    // Twin of Similarity.hardNegatives(k=5): the sim_topk body with the
-    // label carried through and a label-mismatch filter before ranking.
-    "vec_hard_negatives" ->
-      """WITH e AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, label AS query_label, v AS qv FROM e WHERE vec_id < 5),
-        |s AS (SELECT q.query_id, q.query_label, c.vec_id AS neighbor_id, c.label AS neighbor_label,
-        |  list_sum(list_transform(range(1, len(q.qv) + 1), i -> q.qv[i] * c.v[i])) /
-        |    (sqrt(list_sum(list_transform(range(1, len(q.qv) + 1), i -> q.qv[i] * q.qv[i]))) *
-        |     sqrt(list_sum(list_transform(range(1, len(c.v) + 1), i -> c.v[i] * c.v[i])))) AS cos_sim
-        |FROM e c CROSS JOIN q WHERE c.vec_id <> q.query_id AND c.label <> q.query_label)
-        |SELECT query_id, query_label, neighbor_id, neighbor_label, CAST(rank AS INTEGER) AS rank, cos_sim FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rank
-        |  FROM s) WHERE rank <= 5""".stripMargin,
-
-    // Twin of Similarity.miningTriplets: hardest same-label and hardest
-    // different-label neighbor per anchor, inner-joined (both legs
-    // required), margin as the same two-term difference.
-    "vec_triplets" ->
-      """WITH e AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, label AS query_label, v AS qv FROM e WHERE vec_id < 20),
-        |s AS (SELECT q.query_id, q.query_label, c.vec_id AS neighbor_id, c.label AS neighbor_label,
-        |  list_sum(list_transform(range(1, len(q.qv) + 1), i -> q.qv[i] * c.v[i])) /
-        |    (sqrt(list_sum(list_transform(range(1, len(q.qv) + 1), i -> q.qv[i] * q.qv[i]))) *
-        |     sqrt(list_sum(list_transform(range(1, len(c.v) + 1), i -> c.v[i] * c.v[i])))) AS cos_sim
-        |FROM e c CROSS JOIN q WHERE c.vec_id <> q.query_id),
-        |pos AS (SELECT query_id AS anchor_id, query_label AS label, neighbor_id AS pos_id, cos_sim AS pos_sim FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rn
-        |  FROM s WHERE neighbor_label = query_label) WHERE rn = 1),
-        |neg AS (SELECT query_id AS anchor_id, neighbor_id AS neg_id, cos_sim AS neg_sim FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rn
-        |  FROM s WHERE neighbor_label <> query_label) WHERE rn = 1)
-        |SELECT anchor_id, label, pos_id, pos_sim, neg_id, neg_sim,
-        |  pos_sim - neg_sim AS margin
-        |FROM pos JOIN neg USING (anchor_id)""".stripMargin,
-
-    "retrieve_mmr" -> MmrOracle,
-    // Twin of Similarity.embeddingDrift over the even/odd slices: same
-    // 0-based dims, same per-(dim, slice) mean.
-    "vec_drift" ->
-      """WITH e AS (SELECT vec_id % 2 = 0 AS in_a,
-        |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-        |x AS (SELECT in_a, CAST(unnest(range(1, len(v) + 1)) - 1 AS INTEGER) AS dim,
-        |  unnest(v) AS xv FROM e),
-        |m AS (SELECT dim, in_a, CAST(count(*) AS BIGINT) AS n, avg(xv) AS mean
-        |  FROM x GROUP BY 1, 2)
-        |SELECT coalesce(a.dim, b.dim) AS dim,
-        |  a.n AS n_a, b.n AS n_b, a.mean AS mean_a, b.mean AS mean_b,
-        |  abs(a.mean - b.mean) AS mean_gap
-        |FROM (SELECT * FROM m WHERE in_a) a
-        |FULL OUTER JOIN (SELECT * FROM m WHERE NOT in_a) b ON a.dim = b.dim""".stripMargin,
-    // Twin of Similarity.knnGraph(k=3): all-pairs cosine, per-query
-    // (cos desc, id asc) top-3, mutuality via self-join, a < b edges.
-    // Twin of the cell-blocked default (k=3, nprobe=3 over trained kmeans cells).
-    "vec_knn_graph" ->
-      s"""WITH $KnnCellCtes
-         |SELECT id_a, id_b, cos_sim FROM knn_edges""".stripMargin,
-    // Twin of Similarity.knnGraphBrute — the exact corpus x corpus
-    // baseline the cell-blocked default is audited against.
-    "vec_knn_brute" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |s AS (SELECT a.vec_id AS qa, b.vec_id AS qb,
-         |  ${vecCosSql("a.v", "b.v")} AS c
-         |  FROM e a JOIN e b ON a.vec_id <> b.vec_id),
-         |r AS (SELECT qa, qb, c, row_number() OVER (
-         |  PARTITION BY qa ORDER BY c DESC, qb ASC) AS rk FROM s),
-         |t AS (SELECT qa, qb, c FROM r WHERE rk <= 3)
-         |SELECT t.qa AS id_a, t.qb AS id_b, t.c AS cos_sim
-         |FROM t JOIN t t2 ON t.qa = t2.qb AND t.qb = t2.qa
-         |WHERE t.qa < t.qb""".stripMargin,
-    // Twin of Similarity.kCenters(k=8) — see KCenterOracle.
-    "vec_kcenter" -> KCenterOracle,
-    // Twin of the knn-graph clustering composition: the shared
-    // cell-blocked KnnCellCtes rebadged to `mh_pairs(id_a, id_b)` so the
-    // shared ClosureCtes (which closes over that name) resolves the
-    // components.
-    "vec_clusters" ->
-      s"""WITH RECURSIVE $KnnCellCtes,
-         |mh_pairs AS (SELECT id_a, id_b FROM knn_edges),
-         |$ClosureCtes
-         |SELECT c.doc_id AS vec_id, c.cluster_id, sz.cluster_size,
-         |  c.doc_id = c.cluster_id AS is_canonical
-         |FROM comps c JOIN sizes sz USING (cluster_id)""".stripMargin,
-    // Twin of Similarity.rrfFuse over bm25 top-20 + cosine top-20 for
-    // vector 0: the shared bm25 CTEs, the sim_topk cosine body at
-    // query_id = 0, both ranked (score desc, id asc), fused with the
-    // pinned coalesce(1/(60+ra),0) + coalesce(1/(60+rb),0) term order.
-    "retrieve_rrf" ->
-      s"""WITH $Bm25Ctes,
-         |lex0 AS (SELECT doc_id, score FROM bm25
-         |  ORDER BY score DESC, doc_id ASC LIMIT 20),
-         |lex AS (SELECT doc_id, CAST(row_number() OVER (
-         |  ORDER BY score DESC, doc_id ASC) AS BIGINT) AS rank_a FROM lex0),
-         |e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id = 0),
-         |s AS (SELECT c.vec_id AS doc_id,
-         |  list_sum(list_transform(range(1, len(q.qv) + 1), i -> q.qv[i] * c.v[i])) /
-         |    (sqrt(list_sum(list_transform(range(1, len(q.qv) + 1), i -> q.qv[i] * q.qv[i]))) *
-         |     sqrt(list_sum(list_transform(range(1, len(c.v) + 1), i -> c.v[i] * c.v[i])))) AS cos_sim
-         |FROM e c CROSS JOIN q WHERE c.vec_id <> q.query_id),
-         |vec AS (SELECT doc_id, CAST(rank AS BIGINT) AS rank_b FROM (
-         |  SELECT doc_id, row_number() OVER (ORDER BY cos_sim DESC, doc_id ASC) AS rank
-         |  FROM s) WHERE rank <= 20),
-         |f AS (SELECT doc_id, rank_a, rank_b,
-         |  coalesce(CAST(1 AS DOUBLE) / (CAST(60 AS DOUBLE) + rank_a), CAST(0 AS DOUBLE))
-         |    + coalesce(CAST(1 AS DOUBLE) / (CAST(60 AS DOUBLE) + rank_b), CAST(0 AS DOUBLE))
-         |    AS rrf_score
-         |  FROM lex FULL OUTER JOIN vec USING (doc_id))
-         |SELECT doc_id, rank_a, rank_b, rrf_score FROM f
-         |ORDER BY rrf_score DESC, doc_id ASC LIMIT 10""".stripMargin,
-
-    // Twin of Similarity.kmeans (k=8, iters=2), unrolled: same deterministic
-    // lowest-id init, same squared-L2 argmin with (dist, cluster) tie-break,
-    // same per-dimension mean update — assignment checked against the FINAL
-    // centroids, so any divergence at any round changes integral cluster
-    // ids and fails the hash, not just a float in the 9th digit.
-    "vec_kmeans" ->
-      s"""WITH $KmeansCtes
-         |SELECT vec_id, cluster, dist FROM af""".stripMargin,
-    // Twin of Similarity.semanticJoin: the kmeans chain REBASED onto the
-    // left slice (el) — af is then exactly the left side's frozen-cell
-    // assignment — plus the same argmin expression applied to the right
-    // slice (raf), cross pairs within shared cells at the shared cosine.
-    "dedup_sem_cross" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |el AS (SELECT vec_id, v FROM e WHERE vec_id % 10 <> 0),
-         |er AS (SELECT vec_id, v FROM e WHERE vec_id % 10 = 0),
-         |${kmeansChain("", "el", k = 8, oversample = 4, iters = 2)},
-         |raf AS (SELECT vec_id, v, cluster FROM (
-         |  SELECT e.vec_id, e.v, c2.cluster,
-         |    row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY list_sum(list_transform(range(1, len(e.v) + 1),
-         |        i -> (e.v[i] - c2.centroid[i]) * (e.v[i] - c2.centroid[i]))) ASC,
-         |      c2.cluster ASC) AS rn
-         |  FROM er e CROSS JOIN c2) WHERE rn = 1)
-         |SELECT cell, id_a, id_b, cos_sim FROM (
-         |  SELECT a.cluster AS cell, a.vec_id AS id_a, b.vec_id AS id_b,
-         |    list_sum(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i])) /
-         |      (sqrt(list_sum(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * a.v[i]))) *
-         |       sqrt(list_sum(list_transform(range(1, len(b.v) + 1), i -> b.v[i] * b.v[i])))) AS cos_sim
-         |  FROM af a JOIN raf b ON a.cluster = b.cluster)
-         |WHERE cos_sim >= 0.4""".stripMargin,
-    // Twin of Similarity.silhouette: the shared kmeans chain's corpus (e)
-    // and FINAL centroids (c2), every (vector, centroid) squared distance,
-    // slots picked by the same (dist, cluster) order; sqrt and the final
-    // division are identical IEEE ops.
-    "vec_silhouette" ->
-      s"""WITH $KmeansCtes,
-         |dall AS (SELECT e.vec_id, c2.cluster,
-         |  list_sum(list_transform(range(1, len(e.v) + 1),
-         |    i -> (e.v[i] - c2.centroid[i]) * (e.v[i] - c2.centroid[i]))) AS dist
-         |  FROM e CROSS JOIN c2),
-         |sl AS (SELECT vec_id, list(dist ORDER BY dist, cluster) AS ds,
-         |  list(cluster ORDER BY dist, cluster) AS cs FROM dall GROUP BY 1),
-         |x AS (SELECT vec_id, cs[1] AS cluster, sqrt(ds[1]) AS a, sqrt(ds[2]) AS b FROM sl)
-         |SELECT vec_id, cluster, a, b,
-         |  CASE WHEN greatest(a, b) > 0 THEN (b - a) / greatest(a, b)
-         |    ELSE CAST(0.0 AS DOUBLE) END AS sil
-         |FROM x""".stripMargin,
-
-    // Twin of Similarity.pqEncode(m=2, k=4, iters=1): one kmeansChain per
-    // 32-dim subspace slice (shared unrolled-kmeans builder — the PQ
-    // codebooks are literally per-subspace kmeans runs), codes in
-    // subspace order, sq_err the two squared distances summed.
-    "vec_pq" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |e0 AS (SELECT vec_id, v[1:32] AS v FROM e),
-         |e1 AS (SELECT vec_id, v[33:64] AS v FROM e),
-         |${kmeansChain("q0_", "e0", k = 4, oversample = 4, iters = 1)},
-         |${kmeansChain("q1_", "e1", k = 4, oversample = 4, iters = 1)}
-         |SELECT a.vec_id,
-         |  CAST(a.cluster AS VARCHAR) || ',' || CAST(b.cluster AS VARCHAR) AS codes,
-         |  a.dist + b.dist AS sq_err
-         |FROM q0_af a JOIN q1_af b USING (vec_id)""".stripMargin,
-
-    // Twin of Similarity.truncationRecall(k=3, dims=8/16/32/64): one
-    // brute top-3 CTE per prefix length (cosine over the first d entries,
-    // self excluded, (cos desc, id asc)), matched against the full-dim
-    // reference t64; recall = matched / reference as one exact division.
-    "vec_truncation_recall" -> {
-      def tk(d: Int) =
-        s"""t$d AS (SELECT query_id, neighbor_id FROM (
-           |  SELECT q.query_id, c.vec_id AS neighbor_id,
-           |    row_number() OVER (PARTITION BY q.query_id ORDER BY
-           |      list_sum(list_transform(range(1, ${d + 1}), i -> q.v[i] * c.v[i])) /
-           |      (sqrt(list_sum(list_transform(range(1, ${d + 1}), i -> q.v[i] * q.v[i]))) *
-           |       sqrt(list_sum(list_transform(range(1, ${d + 1}), i -> c.v[i] * c.v[i])))) DESC,
-           |      c.vec_id ASC) AS rank
-           |  FROM e c CROSS JOIN q WHERE c.vec_id <> q.query_id) WHERE rank <= 3)""".stripMargin
-      val dims = Seq(8, 16, 32, 64)
-      def matched(d: Int) =
-        s"""(SELECT count(*) FROM t$d tr JOIN t64 rf
-           |   ON tr.query_id = rf.query_id AND tr.neighbor_id = rf.neighbor_id)""".stripMargin
-      val rows = dims.map(d =>
-        s"""SELECT CAST($d AS INTEGER) AS dim_kept, nref.n AS n_ref,
-           |  CAST(${matched(d)} AS BIGINT) AS n_matched,
-           |  CAST(${matched(d)} AS DOUBLE) / nref.n AS recall
-           |FROM nref""".stripMargin).mkString("\nUNION ALL\n")
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |q AS (SELECT vec_id AS query_id, v FROM e WHERE vec_id < 5),
-         |${dims.map(tk).mkString(",\n")},
-         |nref AS (SELECT CAST(count(*) AS BIGINT) AS n FROM t64)
-         |$rows""".stripMargin
-    },
-
-    // Twin of Similarity.pqTopK(topK=3, m=2, kc=4, iters=1): the same two
-    // subspace chains; per-query ADC tables against the final centroids
-    // (q{j}_c1), scored through the codes alone (q{j}_af.cluster), ranked
-    // (adc asc, id asc) with self excluded.
-    "sim_pq_topk" ->
-      s"""WITH $PqAdcCtes
-         |SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, adc_dist FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY adc_dist ASC, neighbor_id ASC) AS rank FROM ad)
-         |WHERE rank <= 3""".stripMargin,
-
-    // Twin of Similarity.pqTopKRerank(topK=3, candidates=20): the shared
-    // ADC chain shortlists 20 per query, then ONLY those rows' raw
-    // vectors are exactly cosine-ranked.
-    "sim_pq_rerank" ->
-      s"""WITH $PqAdcCtes,
-         |sl AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY adc_dist ASC, neighbor_id ASC) AS arank FROM ad)
-         |  WHERE arank <= 20),
-         |rr AS (SELECT sl.query_id, sl.neighbor_id,
-         |  list_sum(list_transform(range(1, len(q.v) + 1), i -> q.v[i] * c.v[i])) /
-         |    (sqrt(list_sum(list_transform(range(1, len(q.v) + 1), i -> q.v[i] * q.v[i]))) *
-         |     sqrt(list_sum(list_transform(range(1, len(c.v) + 1), i -> c.v[i] * c.v[i])))) AS cos_sim
-         |  FROM sl JOIN e q ON q.vec_id = sl.query_id
-         |  JOIN e c ON c.vec_id = sl.neighbor_id)
-         |SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cos_sim FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos_sim DESC, neighbor_id ASC) AS rank FROM rr)
-         |WHERE rank <= 3""".stripMargin,
-
-    // Twin of sim_pq_prod (m=8, kc=256, candidates=100, topK=3) over the
-    // FROZEN model the Spark side persisted during Verify: reads the same
-    // codebooks/codes parquet (partition keyed by corpus size — matched
-    // to this SF via count(*) FROM embeddings) and independently
-    // recomputes the per-query ADC distance tables (squared L2 of each
-    // 8-dim query slice to every centroid), the code-table scoring
-    // (subspace-ordered sum of 8 lookups), the 100-deep shortlist
-    // (adc asc, id asc), and the exact cosine rerank of the shortlisted
-    // raw vectors. Training is deliberately out of the twin (not
-    // SQL-expressible at kc=256) — it is oracle-covered at m=2 by
-    // vec_pq/sim_pq_topk, which run the identical code path.
-    "sim_pq_prod" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |q AS (SELECT vec_id AS query_id, v FROM e WHERE vec_id < 5),
-         |mid AS (SELECT 'pqprod-' || CAST(count(*) AS VARCHAR) AS k FROM embeddings),
-         |cb AS (SELECT subspace, cluster, centroid
-         |  FROM read_parquet('$PqFrozenDir/codebooks/*/*.parquet', hive_partitioning = 1)
-         |  WHERE CAST(model_id AS VARCHAR) = (SELECT k FROM mid)),
-         |cd AS (SELECT vec_id AS neighbor_id, subspace, cluster
-         |  FROM read_parquet('$PqFrozenDir/codes/*/*.parquet', hive_partitioning = 1)
-         |  WHERE CAST(model_id AS VARCHAR) = (SELECT k FROM mid)),
-         |dt AS (SELECT q.query_id, cb.subspace, cb.cluster,
-         |  list_sum(list_transform(range(1, len(cb.centroid) + 1),
-         |    i -> (q.v[cb.subspace * len(cb.centroid) + i] - cb.centroid[i])
-         |       * (q.v[cb.subspace * len(cb.centroid) + i] - cb.centroid[i]))) AS d
-         |  FROM q CROSS JOIN cb),
-         |ad AS (SELECT dt.query_id, cd.neighbor_id,
-         |  list_sum(list(dt.d ORDER BY dt.subspace)) AS adc_dist
-         |  FROM cd JOIN dt USING (subspace, cluster)
-         |  WHERE cd.neighbor_id <> dt.query_id GROUP BY 1, 2),
-         |sl AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY adc_dist ASC, neighbor_id ASC) AS arank FROM ad)
-         |  WHERE arank <= 100),
-         |rr AS (SELECT sl.query_id, sl.neighbor_id,
-         |  ${vecCosSql("qe.v", "ce.v")} AS cos_sim
-         |  FROM sl JOIN e qe ON qe.vec_id = sl.query_id
-         |  JOIN e ce ON ce.vec_id = sl.neighbor_id)
-         |SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cos_sim FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos_sim DESC, neighbor_id ASC) AS rank FROM rr)
-         |WHERE rank <= 3""".stripMargin,
-
-    // Twin of sim_ivfpq_prod (m=8, kc=64, nprobe=3, candidates=50,
-    // topK=3) over the FROZEN index the Spark side persisted during
-    // Verify: reads the same cells/codebooks/codes parquet (partition
-    // keyed by corpus size) and independently recomputes the coarse
-    // probe (cosine of each query to every frozen cell centroid, top
-    // nprobe by csim desc / cell asc), the ADC distance tables, the
-    // cell-restricted code scoring, the 50-deep shortlist, and the exact
-    // cosine rerank. Training stays out of the twin like sim_pq_prod's.
-    "sim_ivfpq_prod" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |q AS (SELECT vec_id AS query_id, v FROM e WHERE vec_id < 5),
-         |mid AS (SELECT 'ivfpq-' || CAST(count(*) AS VARCHAR) AS k FROM embeddings),
-         |ce AS (SELECT cell, centroid
-         |  FROM read_parquet('$IvfPqFrozenDir/cells/*/*.parquet', hive_partitioning = 1)
-         |  WHERE CAST(model_id AS VARCHAR) = (SELECT k FROM mid)),
-         |cb AS (SELECT subspace, cluster, centroid
-         |  FROM read_parquet('$IvfPqFrozenDir/codebooks/*/*.parquet', hive_partitioning = 1)
-         |  WHERE CAST(model_id AS VARCHAR) = (SELECT k FROM mid)),
-         |cd AS (SELECT vec_id AS neighbor_id, CAST(cell AS INTEGER) AS cell,
-         |    subspace, cluster
-         |  FROM read_parquet('$IvfPqFrozenDir/codes/*/*/*.parquet', hive_partitioning = 1)
-         |  WHERE CAST(model_id AS VARCHAR) = (SELECT k FROM mid)),
-         |probe AS (SELECT query_id, cell FROM (
-         |  SELECT q.query_id, ce.cell,
-         |    row_number() OVER (PARTITION BY q.query_id ORDER BY
-         |      ${vecCosSql("q.v", "ce.centroid")} DESC, ce.cell ASC) AS prank
-         |  FROM q CROSS JOIN ce) WHERE prank <= 3),
-         |dt AS (SELECT q.query_id, cb.subspace, cb.cluster,
-         |  list_sum(list_transform(range(1, len(cb.centroid) + 1),
-         |    i -> (q.v[cb.subspace * len(cb.centroid) + i] - cb.centroid[i])
-         |       * (q.v[cb.subspace * len(cb.centroid) + i] - cb.centroid[i]))) AS d
-         |  FROM q CROSS JOIN cb),
-         |ad AS (SELECT dt.query_id, cd.neighbor_id,
-         |  list_sum(list(dt.d ORDER BY dt.subspace)) AS adc_dist
-         |  FROM cd JOIN probe p ON p.cell = cd.cell
-         |  JOIN dt ON dt.subspace = cd.subspace AND dt.cluster = cd.cluster
-         |    AND dt.query_id = p.query_id
-         |  WHERE cd.neighbor_id <> dt.query_id GROUP BY 1, 2),
-         |sl AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY adc_dist ASC, neighbor_id ASC) AS arank FROM ad)
-         |  WHERE arank <= 50),
-         |rr AS (SELECT sl.query_id, sl.neighbor_id,
-         |  ${vecCosSql("qe.v", "ce2.v")} AS cos_sim
-         |  FROM sl JOIN e qe ON qe.vec_id = sl.query_id
-         |  JOIN e ce2 ON ce2.vec_id = sl.neighbor_id)
-         |SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cos_sim FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos_sim DESC, neighbor_id ASC) AS rank FROM rr)
-         |WHERE rank <= 3""".stripMargin,
-
-    // Twin of stream_ann_topk (m=8, kc=64, nprobe=3, topK=3): the frozen
-    // ADC serving twin (no rerank tail — the streaming face serves raw
-    // ADC ranks) reading the face's OWN frozen dir. The streaming group
-    // function's arithmetic (probe fold, subspace-ordered ADC sum,
-    // (adc asc, id asc) rank) must land on exactly these rows.
-    "stream_ann_topk" -> annFrozenTwinSql(StreamAnnFrozenDir),
-
-
-    // Twin of sim_pq_addbatch: encode the held-out batch (vec_id % 3 = 0)
-    // against the bootstrap-frozen codebooks — per (vector, subspace) the
-    // argmin cluster by squared L2 with the training assignment's exact
-    // (dist, cluster) tie-break, recomputed from the same frozen parquet.
-    "sim_pq_addbatch" -> pqAddTwinSql(PqAddFrozenDir),
-
-    // Twin of stream_pq_addbatch: the SAME maintenance arithmetic (the
-    // streaming encode kernel replicates assignStep's fold and tie-break
-    // exactly), reading the stream face's own frozen dir.
-    "stream_pq_addbatch" -> pqAddTwinSql(StreamPqAddFrozenDir),
-
-    // Twin of Similarity.ivfPqTopK(k=3, nprobe=3, m=2, kc=4, iters=1):
-    // the sim_ivf_topk probe CTEs (label-cell centroids, cosine rank <=
-    // nprobe) restrict the pair space; the sim_pq_topk ADC CTEs score it.
-    "sim_ivfpq_topk" ->
-      s"""WITH e AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |pm AS (SELECT label, u.pos AS pos, u.x AS x FROM (
-         |  SELECT label, unnest(list_transform(range(1, len(v) + 1), i -> struct_pack(pos := i, x := v[i]))) AS u FROM e)),
-         |cc1 AS (SELECT label AS cell, pos, avg(x) AS m FROM pm GROUP BY 1, 2),
-         |cent AS (SELECT cell, list(m ORDER BY pos) AS centroid FROM cc1 GROUP BY 1),
-         |qf AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-         |probe AS (SELECT query_id, cell FROM (
-         |  SELECT qf.query_id, cent.cell,
-         |    row_number() OVER (PARTITION BY qf.query_id ORDER BY
-         |      list_sum(list_transform(range(1, len(qf.qv) + 1), i -> qf.qv[i] * cent.centroid[i])) /
-         |      (sqrt(list_sum(list_transform(range(1, len(qf.qv) + 1), i -> qf.qv[i] * qf.qv[i]))) *
-         |       sqrt(list_sum(list_transform(range(1, len(cent.centroid) + 1), i -> cent.centroid[i] * cent.centroid[i])))) DESC,
-         |      cent.cell ASC) AS prank
-         |  FROM qf CROSS JOIN cent) WHERE prank <= 3),
-         |e0 AS (SELECT vec_id, v[1:32] AS v FROM e),
-         |e1 AS (SELECT vec_id, v[33:64] AS v FROM e),
-         |${kmeansChain("q0_", "e0", k = 4, oversample = 4, iters = 1)},
-         |${kmeansChain("q1_", "e1", k = 4, oversample = 4, iters = 1)},
-         |dt0 AS (SELECT q.vec_id AS query_id, c.cluster,
-         |  list_sum(list_transform(range(1, len(q.v) + 1),
-         |    i -> (q.v[i] - c.centroid[i]) * (q.v[i] - c.centroid[i]))) AS d
-         |  FROM (SELECT vec_id, v FROM e0 WHERE vec_id < 5) q CROSS JOIN q0_c1 c),
-         |dt1 AS (SELECT q.vec_id AS query_id, c.cluster,
-         |  list_sum(list_transform(range(1, len(q.v) + 1),
-         |    i -> (q.v[i] - c.centroid[i]) * (q.v[i] - c.centroid[i]))) AS d
-         |  FROM (SELECT vec_id, v FROM e1 WHERE vec_id < 5) q CROSS JOIN q1_c1 c),
-         |sc AS (SELECT a.vec_id AS neighbor_id, e.label AS cell,
-         |  a.cluster AS c0, b.cluster AS c1
-         |  FROM q0_af a JOIN q1_af b USING (vec_id) JOIN e ON e.vec_id = a.vec_id),
-         |ad AS (SELECT dt0.query_id, sc.neighbor_id, dt0.d + dt1.d AS adc_dist
-         |  FROM sc JOIN probe p ON p.cell = sc.cell
-         |  JOIN dt0 ON dt0.cluster = sc.c0 AND dt0.query_id = p.query_id
-         |  JOIN dt1 ON dt1.cluster = sc.c1 AND dt1.query_id = p.query_id
-         |  WHERE sc.neighbor_id <> p.query_id)
-         |SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, adc_dist FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY adc_dist ASC, neighbor_id ASC) AS rank FROM ad)
-         |WHERE rank <= 3""".stripMargin,
-
-    // Twin of Similarity.semanticDedup(threshold=0.4, k=8, iters=2): the
-    // SAME unrolled kmeans chain (shared KmeansCtes — the clustering
-    // cannot drift from vec_kmeans), then within-cluster cosine pairs and
-    // the lowest-id pruning rule.
-    "dedup_semantic" ->
-      s"""WITH $KmeansCtes,
-         |cells AS (SELECT e.vec_id, e.v, af.cluster FROM e JOIN af USING (vec_id)),
-         |pr AS (SELECT vec_id, min(id_a) AS pruned_by FROM (
-         |  SELECT b.vec_id, a.vec_id AS id_a,
-         |    list_sum(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i])) /
-         |      (sqrt(list_sum(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * a.v[i]))) *
-         |       sqrt(list_sum(list_transform(range(1, len(b.v) + 1), i -> b.v[i] * b.v[i])))) AS cos_sim
-         |  FROM cells a JOIN cells b ON a.cluster = b.cluster AND a.vec_id < b.vec_id)
-         |WHERE cos_sim >= 0.4 GROUP BY 1)
-         |SELECT c.vec_id, c.cluster, pr.pruned_by IS NULL AS is_kept, pr.pruned_by
-         |FROM cells c LEFT JOIN pr ON pr.vec_id = c.vec_id""".stripMargin,
-
-    // Twin of StreamOps.semanticDupStream's batch face: the SAME kmeans
-    // cells as dedup_semantic (shared KmeansCtes), emitting every
-    // within-cell pair at cosine >= 0.4 — the pre-aggregation pair
-    // population dedup_semantic's prune folds over.
-    "stream_sem_dups" ->
-      s"""WITH $KmeansCtes,
-         |cells AS (SELECT e.vec_id, e.v, af.cluster FROM e JOIN af USING (vec_id))
-         |SELECT cell, id_a, id_b, cos_sim FROM (
-         |  SELECT a.cluster AS cell, a.vec_id AS id_a, b.vec_id AS id_b,
-         |    list_sum(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i])) /
-         |      (sqrt(list_sum(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * a.v[i]))) *
-         |       sqrt(list_sum(list_transform(range(1, len(b.v) + 1), i -> b.v[i] * b.v[i])))) AS cos_sim
-         |  FROM cells a JOIN cells b ON a.cluster = b.cluster AND a.vec_id < b.vec_id)
-         |WHERE cos_sim >= 0.4""".stripMargin,
-
-    // Twin of the incremental semantic-dedup chain: the kmeans chain
-    // trains on the BOOTSTRAP subset only (vec_id % 3 <> 0), the FULL
-    // corpus assigns against the frozen final centroids (same argmin +
-    // (dist, cluster) tie-break), then the identical within-cluster
-    // lowest-id prune as dedup_semantic — exactly the exactness contract
-    // IncrementalSemDedup maintains batch by batch.
-    "dedup_sem_inc" ->
-      s"""WITH ea AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |e AS (SELECT * FROM ea WHERE vec_id % 3 <> 0),
-         |${kmeansChain("", "e", k = 8, oversample = 4, iters = 2)},
-         |aall AS (SELECT vec_id, v, cluster FROM (
-         |  SELECT ea.vec_id, ea.v, c.cluster,
-         |    row_number() OVER (PARTITION BY ea.vec_id ORDER BY
-         |      list_sum(list_transform(range(1, len(ea.v) + 1), i -> (ea.v[i] - c.centroid[i]) * (ea.v[i] - c.centroid[i]))) ASC,
-         |      c.cluster ASC) AS rn
-         |  FROM ea CROSS JOIN c2 c) WHERE rn = 1),
-         |pr AS (SELECT vec_id, min(id_a) AS pruned_by FROM (
-         |  SELECT b.vec_id, a.vec_id AS id_a,
-         |    list_sum(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i])) /
-         |      (sqrt(list_sum(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * a.v[i]))) *
-         |       sqrt(list_sum(list_transform(range(1, len(b.v) + 1), i -> b.v[i] * b.v[i])))) AS cos_sim
-         |  FROM aall a JOIN aall b ON a.cluster = b.cluster AND a.vec_id < b.vec_id)
-         |WHERE cos_sim >= 0.4 GROUP BY 1)
-         |SELECT c.vec_id, c.cluster, pr.pruned_by IS NULL AS is_kept, pr.pruned_by
-         |FROM aall c LEFT JOIN pr ON pr.vec_id = c.vec_id""".stripMargin,
-    "sim_ivf_topk" ->
-      """WITH e AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-        |pm AS (SELECT label, u.pos AS pos, u.x AS x FROM (
-        |  SELECT label, unnest(list_transform(range(1, len(v) + 1), i -> struct_pack(pos := i, x := v[i]))) AS u FROM e)),
-        |c1 AS (SELECT label AS cell, pos, avg(x) AS m FROM pm GROUP BY 1, 2),
-        |cent AS (SELECT cell, list(m ORDER BY pos) AS centroid FROM c1 GROUP BY 1),
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-        |probe AS (SELECT query_id, qv, cell FROM (
-        |  SELECT q.query_id, q.qv, cent.cell,
-        |    row_number() OVER (PARTITION BY q.query_id ORDER BY
-        |      list_sum(list_transform(range(1, len(q.qv) + 1), i -> q.qv[i] * cent.centroid[i])) /
-        |      (sqrt(list_sum(list_transform(range(1, len(q.qv) + 1), i -> q.qv[i] * q.qv[i]))) *
-        |       sqrt(list_sum(list_transform(range(1, len(cent.centroid) + 1), i -> cent.centroid[i] * cent.centroid[i])))) DESC,
-        |      cent.cell ASC) AS prank
-        |  FROM q CROSS JOIN cent) WHERE prank <= 3),
-        |s AS (SELECT p.query_id, c.vec_id AS neighbor_id,
-        |  list_sum(list_transform(range(1, len(p.qv) + 1), i -> p.qv[i] * c.v[i])) /
-        |    (sqrt(list_sum(list_transform(range(1, len(p.qv) + 1), i -> p.qv[i] * p.qv[i]))) *
-        |     sqrt(list_sum(list_transform(range(1, len(c.v) + 1), i -> c.v[i] * c.v[i])))) AS cos_sim
-        |FROM e c JOIN probe p ON c.label = p.cell WHERE c.vec_id <> p.query_id)
-        |SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cos_sim FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rank
-        |  FROM s) WHERE rank <= 3""".stripMargin,
-    // SRP-LSH twin: the ±1 hyperplane component for (plane k, element i,
-    // 1-based here vs 0-based in Scala — the +1 aligns them) is the same
-    // LCG mix; bucket = OR of sign bits; exact cosine rerank within bucket.
-    "sim_srp_topk" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-        |b AS (SELECT vec_id, v, ${srpBucketSql("v")} AS bucket
-        |  FROM e),
-        |q AS (SELECT vec_id AS query_id, v AS qv, bucket FROM b WHERE vec_id < 5),
-        |s AS (SELECT q.query_id, c.vec_id AS neighbor_id,
-        |  list_sum(list_transform(range(1, len(q.qv) + 1), i -> q.qv[i] * c.v[i])) /
-        |    (sqrt(list_sum(list_transform(range(1, len(q.qv) + 1), i -> q.qv[i] * q.qv[i]))) *
-        |     sqrt(list_sum(list_transform(range(1, len(c.v) + 1), i -> c.v[i] * c.v[i])))) AS cos_sim
-        |FROM b c JOIN q ON c.bucket = q.bucket AND c.vec_id <> q.query_id)
-        |SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cos_sim FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rank
-        |  FROM s) WHERE rank <= 3""".stripMargin,
-    // Multiprobe twin: per-plane dot list once, bucket from its signs, the
-    // nprobe-1 lowest-|dot| planes (struct sort = (m asc, k asc)) flipped.
-    "sim_srp_multiprobe" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-        |b AS (SELECT vec_id, v, ${srpDotsSql("v")} AS dots
-        |  FROM e),
-        |bb AS (SELECT vec_id, v, dots,
-        |  list_sum(list_transform(range(0, 6), k ->
-        |    CASE WHEN dots[CAST(k + 1 AS INTEGER)] >= 0 THEN CAST(1 AS BIGINT) << k ELSE 0 END)) AS bucket
-        |  FROM b),
-        |q AS (SELECT vec_id AS query_id, v AS qv, bucket AS bucket0,
-        |  list_sort(list_transform(range(0, 6), k ->
-        |    struct_pack(m := abs(dots[CAST(k + 1 AS INTEGER)]), k := k))) AS flips
-        |  FROM bb WHERE vec_id < 5),
-        |probes AS (SELECT query_id, qv,
-        |  unnest(list_concat([bucket0], list_transform(flips[1:2], f ->
-        |    xor(bucket0, CAST(1 AS BIGINT) << CAST(f.k AS INTEGER))))) AS bucket FROM q),
-        |s AS (SELECT p.query_id, c.vec_id AS neighbor_id,
-        |  list_sum(list_transform(range(1, len(p.qv) + 1), i -> p.qv[i] * c.v[i])) /
-        |    (sqrt(list_sum(list_transform(range(1, len(p.qv) + 1), i -> p.qv[i] * p.qv[i]))) *
-        |     sqrt(list_sum(list_transform(range(1, len(c.v) + 1), i -> c.v[i] * c.v[i])))) AS cos_sim
-        |FROM bb c JOIN probes p ON c.bucket = p.bucket AND c.vec_id <> p.query_id)
-        |SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cos_sim FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rank
-        |  FROM s) WHERE rank <= 3""".stripMargin,
-    "sim_srp_near_dups" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-        |bb AS (SELECT vec_id, v, ${srpBucketSql("v")} AS srp_cell
-        |  FROM e)
-        |SELECT srp_cell, id_a, id_b, cos_sim FROM (
-        |  SELECT a.srp_cell AS srp_cell, a.vec_id AS id_a, b.vec_id AS id_b,
-        |    list_sum(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i])) /
-        |      (sqrt(list_sum(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * a.v[i]))) *
-        |       sqrt(list_sum(list_transform(range(1, len(b.v) + 1), i -> b.v[i] * b.v[i])))) AS cos_sim
-        |  FROM bb a JOIN bb b ON a.srp_cell = b.srp_cell AND a.vec_id < b.vec_id)
-        |WHERE cos_sim >= 0.4""".stripMargin,
-    "sim_near_dups" ->
-      """WITH e AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings)
-        |SELECT cell, id_a, id_b, cos_sim FROM (
-        |  SELECT a.label AS cell, a.vec_id AS id_a, b.vec_id AS id_b,
-        |    list_sum(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i])) /
-        |      (sqrt(list_sum(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * a.v[i]))) *
-        |       sqrt(list_sum(list_transform(range(1, len(b.v) + 1), i -> b.v[i] * b.v[i])))) AS cos_sim
-        |  FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id)
-        |WHERE cos_sim >= 0.4""".stripMargin,
-
-    // Twin of buildPpm/decodePpm: the near-square P6 frame of the text bytes
-    // (npix = ceil(len/3), w = ceil(sqrt(npix)), h = ceil(npix/w)) and the
-    // pixel stats — zero padding is invisible to sum and (for non-empty
-    // ASCII text) to max.
-    "mm_features" ->
-      """WITH b AS (SELECT doc_id, text, CAST(octet_length(encode(text)) AS BIGINT) AS len,
-        |  list_transform(string_split(text, ''), c -> ord(c)) AS cps FROM documents),
-        |d AS (SELECT *, CASE WHEN len = 0 THEN 0 ELSE (len + 2) // 3 END AS npix FROM b),
-        |w1 AS (SELECT *, CASE WHEN npix = 0 THEN 0
-        |       ELSE CAST(ceil(sqrt(CAST(npix AS DOUBLE))) AS BIGINT) END AS w FROM d),
-        |w2 AS (SELECT *, CASE WHEN w = 0 THEN 0
-        |       ELSE CAST(ceil(CAST(npix AS DOUBLE) / w) AS BIGINT) END AS h FROM w1)
-        |SELECT doc_id, CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-        |  CAST(w * h * 3 AS BIGINT) AS n_pixel_bytes,
-        |  CAST(CASE WHEN len > 0 THEN list_sum(cps) ELSE 0 END AS BIGINT) AS pixel_sum,
-        |  CAST(CASE WHEN len > 0 THEN list_max(cps) ELSE 0 END AS INTEGER) AS pixel_max
-        |FROM w2""".stripMargin,
-    // Twin of resizePpm(., 2) + decodePpm: nearest-neighbor sample of the
-    // padded raster — output pixel p=(y,x) reads input pixel (2y, 2x); a
-    // byte index past the text length is frame padding (0).
-    "mm_resize" ->
-      """WITH b AS (SELECT doc_id, text, CAST(octet_length(encode(text)) AS BIGINT) AS len,
-        |  list_transform(string_split(text, ''), c -> ord(c)) AS cps FROM documents),
-        |d AS (SELECT *, CASE WHEN len = 0 THEN 0 ELSE (len + 2) // 3 END AS npix FROM b),
-        |g1 AS (SELECT *, CASE WHEN npix = 0 THEN 0
-        |       ELSE CAST(ceil(sqrt(CAST(npix AS DOUBLE))) AS BIGINT) END AS w FROM d),
-        |g2 AS (SELECT *, CASE WHEN w = 0 THEN 0
-        |       ELSE CAST(ceil(CAST(npix AS DOUBLE) / w) AS BIGINT) END AS h FROM g1),
-        |g3 AS (SELECT *, CASE WHEN w = 0 THEN 0 ELSE (w + 1) // 2 END AS w2,
-        |       CASE WHEN h = 0 THEN 0 ELSE (h + 1) // 2 END AS h2 FROM g2)
-        |SELECT doc_id, CAST(w2 AS INTEGER) AS width, CAST(h2 AS INTEGER) AS height,
-        |  CAST(3 * w2 * h2 AS BIGINT) AS n_pixel_bytes,
-        |  CAST(coalesce(list_sum(list_transform(range(0, w2 * h2), p ->
-        |    list_sum(list_transform(range(1, 4), c ->
-        |      CASE WHEN 3 * (((p // w2) * 2) * w + (p % w2) * 2) + c <= len
-        |           THEN cps[CAST(3 * (((p // w2) * 2) * w + (p % w2) * 2) + c AS INTEGER)]
-        |           ELSE 0 END)))), 0) AS BIGINT) AS pixel_sum,
-        |  CAST(coalesce(list_max(list_transform(range(0, w2 * h2), p ->
-        |    list_max(list_transform(range(1, 4), c ->
-        |      CASE WHEN 3 * (((p // w2) * 2) * w + (p % w2) * 2) + c <= len
-        |           THEN cps[CAST(3 * (((p // w2) * 2) * w + (p % w2) * 2) + c AS INTEGER)]
-        |           ELSE 0 END)))), 0) AS INTEGER) AS pixel_max
-        |FROM g3""".stripMargin,
-    // Twin of sampleFrames(., 4): every 4th raster row, per-row byte stats
-    // over the zero-padded frame.
-    "mm_frames" ->
-      """WITH b AS (SELECT doc_id, text, CAST(octet_length(encode(text)) AS BIGINT) AS len,
-        |  list_transform(string_split(text, ''), c -> ord(c)) AS cps FROM documents),
-        |d AS (SELECT *, CASE WHEN len = 0 THEN 0 ELSE (len + 2) // 3 END AS npix FROM b),
-        |g1 AS (SELECT *, CASE WHEN npix = 0 THEN 0
-        |       ELSE CAST(ceil(sqrt(CAST(npix AS DOUBLE))) AS BIGINT) END AS w FROM d),
-        |g2 AS (SELECT *, CASE WHEN w = 0 THEN 0
-        |       ELSE CAST(ceil(CAST(npix AS DOUBLE) / w) AS BIGINT) END AS h FROM g1)
-        |SELECT doc_id, CAST(u.y AS INTEGER) AS frame_idx,
-        |  CAST(u.fs AS BIGINT) AS frame_sum, CAST(u.fm AS INTEGER) AS frame_max
-        |FROM (
-        |  SELECT doc_id, unnest(list_transform(range(0, h, 4), y -> struct_pack(
-        |    y := y,
-        |    fs := coalesce(list_sum(list_transform(range(1, 3 * w + 1), i ->
-        |          CASE WHEN 3 * y * w + i <= len THEN cps[CAST(3 * y * w + i AS INTEGER)] ELSE 0 END)), 0),
-        |    fm := coalesce(list_max(list_transform(range(1, 3 * w + 1), i ->
-        |          CASE WHEN 3 * y * w + i <= len THEN cps[CAST(3 * y * w + i AS INTEGER)] ELSE 0 END)), 0)))) AS u
-        |  FROM g2)""".stripMargin,
-    // Twins of Multimodal.perceptualHash / phashNearDups over the shared
-    // MmPhashCtes; the dups oracle is all-pairs (fine at oracle scale —
-    // the Spark side proves the pigeonhole finds the identical set).
-    "mm_phash" ->
-      s"""WITH $MmPhashCtes
-         |SELECT doc_id, CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-         |  phash
-         |FROM ph""".stripMargin,
-    // wide twins over the 13×5 gray grid: the lag-compared words are the
-    // exact wideWordCtes machinery the audio/video wide twins use
-    "mm_phash_wide" ->
-      s"""WITH $MmPhashWideCtes,
-         |${wideWordCtes("ge", "npix", "n_px")}
-         |SELECT f.doc_id, CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-         |  w0, w1, w2, w3
-         |FROM wfpt f JOIN w2 USING (doc_id)""".stripMargin,
-    "mm_phash_dups" ->
-      s"""WITH $MmPhashWideCtes,
-         |${wideWordCtes("ge", "npix", "n_px")}
-         |${wideDupsSelect(24)}""".stripMargin,
-
-    // Twin of the joint-modality dedup: pairs that are near-dup in BOTH
-    // the text (minhash) and image (wide pHash) modality — the two pair
-    // CTEs are the shared oracle bodies of dedup_minhash and
-    // mm_phash_dups, intersected on the pair key.
-    "mm_joint_dups" ->
-      s"""WITH $MinhashPairsCtes,
-         |$MmPhashWideCtes,
-         |${wideWordCtes("ge", "npix", "n_px")},
-         |jd AS (${wideDupsSelect(24)})
-         |SELECT m.id_a, m.id_b, m.jaccard, jd.hamming
-         |FROM mh_pairs m JOIN jd ON jd.id_a = m.id_a AND jd.id_b = m.id_b""".stripMargin,
-
-    // Twins of Audio.cdcChunks / audioCdcDups over the shared CDC chain.
-    "audio_cdc_chunks" ->
-      s"""WITH $AudioCdcCtes
-         |SELECT doc_id, chunk_idx, start, n_chunk_samples, chunk_hash
-         |FROM cseg""".stripMargin,
-    "audio_cdc_dups" ->
-      s"""WITH $AudioCdcCtes,
-         |cdd AS (SELECT DISTINCT doc_id, chunk_hash FROM cseg),
-         |ckeep AS (SELECT chunk_hash FROM cdd GROUP BY 1 HAVING count(*) <= 50),
-         |cind AS (SELECT doc_id, chunk_hash FROM cdd JOIN ckeep USING (chunk_hash))
-         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  CAST(count(*) AS BIGINT) AS n_shared
-         |FROM cind a JOIN cind b
-         |  ON a.chunk_hash = b.chunk_hash AND a.doc_id < b.doc_id
-         |GROUP BY 1, 2 HAVING count(*) >= 4""".stripMargin,
-    // Twins of the Audio family over the shared AudioSmpCte. Integer-only
-    // statistics (energy, peak, sign-flip zero crossings, floor-division
-    // durations) so DuckDB and Spark agree bit-for-bit.
-    "audio_features" ->
-      s"""WITH $AudioSmpCte
-         |SELECT doc_id, CAST(16000 AS INTEGER) AS sample_rate, n AS n_samples,
-         |  (n * 1000) // 16000 AS duration_ms,
-         |  CAST(coalesce(list_sum(list_transform(range(1, n + 1), i ->
-         |    smp[CAST(i AS INTEGER)] * smp[CAST(i AS INTEGER)])), 0) AS BIGINT) AS sum_sq,
-         |  CAST(coalesce(list_max(list_transform(range(1, n + 1), i ->
-         |    abs(smp[CAST(i AS INTEGER)]))), 0) AS INTEGER) AS peak,
-         |  CAST(coalesce(list_sum(list_transform(range(2, n + 1), i ->
-         |    CASE WHEN smp[CAST(i - 1 AS INTEGER)] * smp[CAST(i AS INTEGER)] < 0
-         |      THEN 1 ELSE 0 END)), 0) AS BIGINT) AS zero_crossings
-         |FROM aw""".stripMargin,
-    // Twin of resampleAudio(., 4) + extractFeatures: keep 1-based indices
-    // 1, 5, 9, … (Spark's 0-based 0, 4, 8, …); rate drops 16000 → 4000.
-    "audio_resample" ->
-      s"""WITH $AudioSmpCte,
-         |r AS (SELECT doc_id, (n + 3) // 4 AS n2,
-         |  list_transform(range(0, (n + 3) // 4),
-         |    j -> smp[CAST(4 * j + 1 AS INTEGER)]) AS rsmp FROM aw)
-         |SELECT doc_id, CAST(4000 AS INTEGER) AS sample_rate, n2 AS n_samples,
-         |  (n2 * 1000) // 4000 AS duration_ms,
-         |  CAST(coalesce(list_sum(list_transform(rsmp, s -> s * s)), 0) AS BIGINT) AS sum_sq,
-         |  CAST(coalesce(list_max(list_transform(rsmp, s -> abs(s))), 0) AS INTEGER) AS peak,
-         |  CAST(coalesce(list_sum(list_transform(range(2, n2 + 1), i ->
-         |    CASE WHEN rsmp[CAST(i - 1 AS INTEGER)] * rsmp[CAST(i AS INTEGER)] < 0
-         |      THEN 1 ELSE 0 END)), 0) AS BIGINT) AS zero_crossings
-         |FROM r""".stripMargin,
-    // Twin of chunkEnergy(., 1024): fixed 1024-sample windows, last window
-    // ragged; a zero-length clip emits no rows (range(0, 0) is empty).
-    "audio_chunks" ->
-      s"""WITH $AudioSmpCte
-         |SELECT doc_id, CAST(u.c AS INTEGER) AS chunk_idx,
-         |  CAST(u.ns AS BIGINT) AS n_samples, CAST(u.ss AS BIGINT) AS sum_sq,
-         |  CAST(u.pk AS INTEGER) AS peak
-         |FROM (
-         |  SELECT doc_id, unnest(list_transform(range(0, (n + 1023) // 1024),
-         |    c -> struct_pack(
-         |      c := c,
-         |      ns := least((c + 1) * 1024, n) - c * 1024,
-         |      ss := coalesce(list_sum(list_transform(
-         |            range(c * 1024 + 1, least((c + 1) * 1024, n) + 1),
-         |            i -> smp[CAST(i AS INTEGER)] * smp[CAST(i AS INTEGER)])), 0),
-         |      pk := coalesce(list_max(list_transform(
-         |            range(c * 1024 + 1, least((c + 1) * 1024, n) + 1),
-         |            i -> abs(smp[CAST(i AS INTEGER)]))), 0)))) AS u
-         |  FROM aw)""".stripMargin,
-
-    // Twins of audioFingerprint / audioNearDups over the shared AudioFpCtes;
-    // the dups oracle is all-pairs (fine at oracle scale — the Spark side
-    // proves the pigeonhole finds the identical set).
-    "audio_fingerprint" ->
-      s"""WITH $AudioFpCtes
-         |SELECT doc_id, n_samples, afp FROM afpt""".stripMargin,
-    // Wide-fingerprint twins: the same 65-window contour compared at lags
-    // 1/2/4/8 into four words; the dups twin is brute-force all-pairs over
-    // the edit-augmented corpus at radius 24.
-    "audio_fp_wide" ->
-      s"""WITH ${audioContourCtes("documents")},
-         |${wideWordCtes("we", "n", "n_samples")}
-         |SELECT doc_id, n_samples, w0, w1, w2, w3 FROM wfpt""".stripMargin,
-    "audio_fp_dups" ->
-      s"""WITH $NearDupCorpusCte,
-         |${audioContourCtes("corpus")},
-         |${wideWordCtes("we", "n", "n_samples")}
-         |${wideDupsSelect(24)}""".stripMargin,
-
-    // Twins of the Video container walk: frame f covers text bytes
-    // [f·192, min((f+1)·192, n)) — per-frame geometry recomputed with the
-    // same near-square ceil arithmetic as the single-image twins; padding
-    // zeros contribute nothing to sum/max (ASCII has no NUL).
-    "video_frames" ->
-      """WITH b AS (SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n,
-        |  list_transform(string_split(text, ''), c -> CAST(ord(c) AS BIGINT)) AS cps
-        |  FROM documents),
-        |fx AS (SELECT doc_id, n, cps,
-        |  CAST(unnest(range(0, (n + 191) // 192)) AS BIGINT) AS f FROM b),
-        |g1 AS (SELECT *, least((f + 1) * 192, n) - f * 192 AS L FROM fx),
-        |g2 AS (SELECT *, (L + 2) // 3 AS npix FROM g1),
-        |g3 AS (SELECT *, CAST(ceil(sqrt(CAST(npix AS DOUBLE))) AS BIGINT) AS w FROM g2),
-        |g4 AS (SELECT *, CAST(ceil(CAST(npix AS DOUBLE) / w) AS BIGINT) AS h FROM g3)
-        |SELECT doc_id, CAST(f AS INTEGER) AS frame_idx,
-        |  CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-        |  CAST(coalesce(list_sum(list_transform(
-        |    range(f * 192 + 1, least((f + 1) * 192, n) + 1),
-        |    i -> cps[CAST(i AS INTEGER)])), 0) AS BIGINT) AS pixel_sum,
-        |  CAST(coalesce(list_max(list_transform(
-        |    range(f * 192 + 1, least((f + 1) * 192, n) + 1),
-        |    i -> cps[CAST(i AS INTEGER)])), 0) AS INTEGER) AS pixel_max
-        |FROM g4""".stripMargin,
-    // Twin of keyframes(., 6000): frame 0 always emits (delta = own sum);
-    // inter-frame deltas are |s_f − s_{f−1}| over the per-frame sums.
-    "video_keyframes" ->
-      """WITH b AS (SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n,
-        |  list_transform(string_split(text, ''), c -> CAST(ord(c) AS BIGINT)) AS cps
-        |  FROM documents),
-        |fs AS (SELECT doc_id, list_transform(range(0, (n + 191) // 192), f ->
-        |    coalesce(list_sum(list_transform(
-        |      range(f * 192 + 1, least((f + 1) * 192, n) + 1),
-        |      i -> cps[CAST(i AS INTEGER)])), 0)) AS sums FROM b),
-        |kx AS (SELECT doc_id, sums,
-        |  CAST(unnest(range(0, len(sums))) AS BIGINT) AS f FROM fs),
-        |kd AS (SELECT doc_id, f, sums[CAST(f + 1 AS INTEGER)] AS pixel_sum,
-        |  abs(sums[CAST(f + 1 AS INTEGER)] -
-        |    CASE WHEN f = 0 THEN 0 ELSE sums[CAST(f AS INTEGER)] END) AS delta
-        |  FROM kx)
-        |SELECT doc_id, CAST(f AS INTEGER) AS frame_idx,
-        |  CAST(pixel_sum AS BIGINT) AS pixel_sum, CAST(delta AS BIGINT) AS delta
-        |FROM kd WHERE f = 0 OR delta > 6000""".stripMargin,
-
-    // Twin of sampleFrames(., k = 4): keep frame indices ⌊i·nf/4⌋ for
-    // i ∈ [0, 4), deduplicated, dropped when >= nf (empty clip → no rows);
-    // pixel_sum recomputed from the text slices as in the keyframes twin.
-    "video_sample" ->
-      """WITH b AS (SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n,
-        |  list_transform(string_split(text, ''), c -> CAST(ord(c) AS BIGINT)) AS cps
-        |  FROM documents),
-        |fs AS (SELECT doc_id, list_transform(range(0, (n + 191) // 192), f ->
-        |    coalesce(list_sum(list_transform(
-        |      range(f * 192 + 1, least((f + 1) * 192, n) + 1),
-        |      i -> cps[CAST(i AS INTEGER)])), 0)) AS sums FROM b),
-        |ks AS (SELECT doc_id, sums, unnest(list_distinct(list_transform(range(0, 4),
-        |    i -> (i * len(sums)) // 4))) AS f FROM fs)
-        |SELECT doc_id, CAST(f AS INTEGER) AS frame_idx,
-        |  CAST(sums[CAST(f + 1 AS INTEGER)] AS BIGINT) AS pixel_sum
-        |FROM ks WHERE f < len(sums)""".stripMargin,
-
-    // Twins of videoFingerprint / videoNearDups over the shared VideoFpCtes;
-    // the dups oracle is all-pairs (fine at oracle scale — the Spark side
-    // proves the pigeonhole finds the identical set).
-    "video_fingerprint" ->
-      s"""WITH $VideoFpCtes
-         |SELECT doc_id, n_px, vfp FROM vfpt""".stripMargin,
-    "video_fp_wide" ->
-      s"""WITH ${videoContourCtes("documents")},
-         |${wideWordCtes("vwe", "npx", "n_px")}
-         |SELECT doc_id, n_px, w0, w1, w2, w3 FROM wfpt""".stripMargin,
-    "video_fp_dups" ->
-      s"""WITH $NearDupCorpusCte,
-         |${videoContourCtes("corpus")},
-         |${wideWordCtes("vwe", "npx", "n_px")}
-         |${wideDupsSelect(24)}""".stripMargin,
-    // Twin of Video.frameHashes over documents: same per-frame decoded
-    // segment (slice + zero padding), same non-negative (a·31 + c) mod p
-    // fold the CDC twins use.
-    "video_frame_hashes" ->
-      s"""WITH ${videoFrameCtes("documents")}
-         |SELECT doc_id, CAST(f AS INTEGER) AS frame_idx,
-         |  list_reduce(list_prepend(CAST(0 AS BIGINT), sg),
-         |    (a, c) -> ((a * 31 + c) % 1000000007 + 1000000007) % 1000000007)
-         |    AS frame_hash
-         |FROM vseg""".stripMargin,
-    // Twin of Video.frameDups(minShared=1, maxDf=50) over the augmented
-    // corpus: distinct frame postings, df cap, hash-keyed pair count.
-    "video_frame_dups" ->
-      s"""WITH $NearDupCorpusCte,
-         |${videoFrameCtes("corpus")},
-         |vfh AS (SELECT DISTINCT doc_id,
-         |  list_reduce(list_prepend(CAST(0 AS BIGINT), sg),
-         |    (a, c) -> ((a * 31 + c) % 1000000007 + 1000000007) % 1000000007)
-         |    AS frame_hash
-         |  FROM vseg),
-         |vkeep AS (SELECT frame_hash FROM vfh GROUP BY 1 HAVING count(*) <= 50),
-         |vind AS (SELECT doc_id, frame_hash FROM vfh JOIN vkeep USING (frame_hash))
-         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  CAST(count(*) AS BIGINT) AS n_shared
-         |FROM vind a JOIN vind b
-         |  ON a.frame_hash = b.frame_hash AND a.doc_id < b.doc_id
-         |GROUP BY 1, 2 HAVING count(*) >= 1""".stripMargin,
-
-    "stream_dedup" ->
-      s"""WITH points AS ($PointsCte)
-         |SELECT DISTINCT series_id, ts, value
-         |FROM (SELECT * FROM points UNION ALL SELECT * FROM points)""".stripMargin,
-
-    "stream_window_stats" ->
-      s"""WITH points AS ($PointsCte)
-         |SELECT series_id,
-         |  ((ts // 1000) // 86400000000) * 86400000000 AS win_start_us,
-         |  min(value) AS min_value, max(value) AS max_value, count(*) AS n_points
-         |FROM points GROUP BY 1, 2""".stripMargin
-  )
 }

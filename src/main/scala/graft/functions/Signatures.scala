@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Single-pass signature kernels for the dedup pipeline.
   *
   * Semantics are EXACTLY the column-algebra definitions they replace (and
-  * the DuckDB oracle twins documented in SparkEntry): tokens are lowercase
+  * the DuckDB oracles of the query rows in graft.rows): tokens are lowercase
   * maximal `[a-z0-9]+` runs, shingles are `k` consecutive tokens
   * space-joined, and every hash is the seeded PolyHash fold over the
   * shingle's UTF-8 bytes. The win is execution shape: Catalyst evaluates

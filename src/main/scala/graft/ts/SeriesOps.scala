@@ -317,21 +317,32 @@ object SeriesOps {
       col("mean_value").as("__x"))
     val right = b.select(col("series_id").as("series_b"), col("bucket_ts"),
       col("mean_value").as("__y"))
-    val sums = left.join(right, Seq("bucket_ts"))
-      .where(col("series_a") < col("series_b"))
-      .groupBy("series_a", "series_b")
-      .agg(count(lit(1)).as("n_buckets"),
-        sum("__x").as("__sx"), sum("__y").as("__sy"),
-        sum(col("__x") * col("__x")).as("__sxx"),
-        sum(col("__y") * col("__y")).as("__syy"),
-        sum(col("__x") * col("__y")).as("__sxy"))
-    val n = col("n_buckets").cast("double")
+    pearson(left.join(right, Seq("bucket_ts"))
+      .where(col("series_a") < col("series_b")),
+      Seq("series_a", "series_b"), "__x", "__y", "n_buckets", "corr")
+  }
+
+  /** Pearson correlation of columns `x` and `y` per group of `keys`, from
+    * the six co-moment sums in one aggregation: `(n·Σxy − ΣxΣy) /
+    * √((n·Σx² − (Σx)²)·(n·Σy² − (Σy)²))`, written identically in the SQL
+    * twins; null unless both variances are positive. Emits `keys`, the
+    * group count as `nName` and the correlation as `out`.
+    */
+  private def pearson(df: DataFrame, keys: Seq[String], x: String, y: String,
+      nName: String, out: String): DataFrame = {
+    val sums = df.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as(nName),
+        sum(x).as("__sx"), sum(y).as("__sy"),
+        sum(col(x) * col(x)).as("__sxx"),
+        sum(col(y) * col(y)).as("__syy"),
+        sum(col(x) * col(y)).as("__sxy"))
+    val n = col(nName).cast("double")
     val vx = n * col("__sxx") - col("__sx") * col("__sx")
     val vy = n * col("__syy") - col("__sy") * col("__sy")
-    sums.select(col("series_a"), col("series_b"), col("n_buckets"),
+    sums.select(keys.map(col) :+ col(nName) :+
       when(vx > 0 && vy > 0,
         (n * col("__sxy") - col("__sx") * col("__sy")) / sqrt(vx * vy))
-        .as("corr"))
+        .as(out): _*)
   }
 
   /** Spearman rank correlation between series pairs on the shared `dtNs`
@@ -372,19 +383,8 @@ object SeriesOps {
       .where(col("series_a") < col("series_b"))
       .select(col("series_a"), col("series_b"),
         avgRank("__x").as("__rx"), avgRank("__y").as("__ry"))
-    val sums = ranked.groupBy("series_a", "series_b")
-      .agg(count(lit(1)).as("n_buckets"),
-        sum("__rx").as("__sx"), sum("__ry").as("__sy"),
-        sum(col("__rx") * col("__rx")).as("__sxx"),
-        sum(col("__ry") * col("__ry")).as("__syy"),
-        sum(col("__rx") * col("__ry")).as("__sxy"))
-    val n = col("n_buckets").cast("double")
-    val vx = n * col("__sxx") - col("__sx") * col("__sx")
-    val vy = n * col("__syy") - col("__sy") * col("__sy")
-    sums.select(col("series_a"), col("series_b"), col("n_buckets"),
-      when(vx > 0 && vy > 0,
-        (n * col("__sxy") - col("__sx") * col("__sy")) / sqrt(vx * vy))
-        .as("rho"))
+    pearson(ranked, Seq("series_a", "series_b"), "__rx", "__ry",
+      "n_buckets", "rho")
   }
 
   /** Lagged cross-correlation between series pairs on the shared resampled
@@ -413,21 +413,9 @@ object SeriesOps {
       .withColumn("__bt", col("bucket_ts") + col("lag").cast("long") * dtNs)
     val right = b.select(col("series_id").as("series_b"),
       col("bucket_ts").as("__bt"), col("mean_value").as("__y"))
-    val sums = left.join(right, Seq("__bt"))
-      .where(col("series_a") < col("series_b"))
-      .groupBy("series_a", "series_b", "lag")
-      .agg(count(lit(1)).as("n_buckets"),
-        sum("__x").as("__sx"), sum("__y").as("__sy"),
-        sum(col("__x") * col("__x")).as("__sxx"),
-        sum(col("__y") * col("__y")).as("__syy"),
-        sum(col("__x") * col("__y")).as("__sxy"))
-    val n = col("n_buckets").cast("double")
-    val vx = n * col("__sxx") - col("__sx") * col("__sx")
-    val vy = n * col("__syy") - col("__sy") * col("__sy")
-    sums.select(col("series_a"), col("series_b"), col("lag"), col("n_buckets"),
-      when(vx > 0 && vy > 0,
-        (n * col("__sxy") - col("__sx") * col("__sy")) / sqrt(vx * vy))
-        .as("corr"))
+    pearson(left.join(right, Seq("__bt"))
+      .where(col("series_a") < col("series_b")),
+      Seq("series_a", "series_b", "lag"), "__x", "__y", "n_buckets", "corr")
   }
 
   /** Exact per-series distribution summary: p50/p90/p99 (linear
@@ -778,19 +766,7 @@ object SeriesOps {
       .select(col("series_id"), col("lp.lag").as("lag"),
         col("__y"), col("lp.prev").as("__x"))
       .where(col("__x").isNotNull)
-    val sums = pairs.groupBy("series_id", "lag").agg(
-      count(lit(1)).as("n_pairs"),
-      sum("__x").as("__sx"), sum("__y").as("__sy"),
-      sum(col("__x") * col("__x")).as("__sxx"),
-      sum(col("__y") * col("__y")).as("__syy"),
-      sum(col("__x") * col("__y")).as("__sxy"))
-    val n = col("n_pairs").cast("double")
-    val vx = n * col("__sxx") - col("__sx") * col("__sx")
-    val vy = n * col("__syy") - col("__sy") * col("__sy")
-    sums.select(col("series_id"), col("lag"), col("n_pairs"),
-      when(vx > 0 && vy > 0,
-        (n * col("__sxy") - col("__sx") * col("__sy")) / sqrt(vx * vy))
-        .as("acf"))
+    pearson(pairs, Seq("series_id", "lag"), "__x", "__y", "n_pairs", "acf")
   }
 
   /** Per-series Ljung–Box whiteness test: Q = n(n+2) Σ_{k=1..h} ρ_k²/(n−k)

@@ -147,7 +147,7 @@ class AudioSpec extends SparkSpec {
   }
 
   test("audioNearDups equals brute-force Hamming over wide fingerprints (sf0.001)") {
-    // edit-augmented corpus (mirrors SparkEntry.nearDupCorpus): the raw
+    // edit-augmented corpus (mirrors Fixtures.nearDupCorpus): the raw
     // synth corpus has no true audio near-dups under the wide fingerprint
     // (min pairwise distance ~62), so inject length-preserving edited twins
     val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")

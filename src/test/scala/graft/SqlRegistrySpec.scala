@@ -11,24 +11,22 @@ import graft.core.{GraftFunctions, GraftTableFunctions}
   */
 class SqlRegistrySpec extends AnyFunSuite {
 
-  test("every query has exactly one oracle and no twin shadows a row") {
-    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
-    assert(SparkEntry.queries.size ==
-      SparkEntry.baseQueries.size + SparkEntry.twins.size)
-  }
-
-  test("every twin mirrors a row that has its own oracle") {
-    val twinNames = SparkEntry.twins.map(_.name).toSet
-    val bad = SparkEntry.twins.filter(t => twinNames(t.of) ||
-      !SparkEntry.baseQueries.contains(t.of) ||
-      !SparkEntry.oracleSql.contains(t.of))
-    assert(bad.isEmpty, bad.map(t => s"${t.name} -> ${t.of}"))
+  test("a duplicate row or face name fails construction, naming the duplicate") {
+    import QueryRow.{face, row}
+    val build: QueryRow.Build = (s, _) => s.emptyDataFrame
+    val e = intercept[IllegalArgumentException](QueryRow.flatten(Seq(
+      row("a", build, "SELECT 1", face("sql_a")(build)),
+      row("b", build, "SELECT 2", face("sql_a")(build)),
+      row("c", build, "SELECT 3"), row("c", build, "SELECT 4"))))
+    assert(e.getMessage.endsWith("declared more than once: c, sql_a"))
   }
 
   test("every table function is called by a sql_* twin or a SqlSurfaceSpec case") {
-    val callers = Seq("src/main/scala/graft/SparkEntry.scala",
-      "src/test/scala/graft/SqlSurfaceSpec.scala")
-      .map(p => Files.readString(Paths.get(p))).mkString("\n")
+    val rowFiles = new java.io.File("src/main/scala/graft/rows").listFiles
+      .filter(_.getName.endsWith("Rows.scala")).map(_.toPath).toSeq
+    assert(rowFiles.nonEmpty)
+    val callers = (rowFiles :+ Paths.get("src/test/scala/graft/SqlSurfaceSpec.scala"))
+      .map(Files.readString).mkString("\n")
     val uncalled = GraftTableFunctions.all.map(_._1.funcName)
       .filterNot(n => callers.contains(s"$n("))
     assert(uncalled.isEmpty, uncalled)

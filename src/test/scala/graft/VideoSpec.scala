@@ -105,7 +105,7 @@ class VideoSpec extends SparkSpec {
   }
 
   test("videoNearDups equals brute-force Hamming over wide fingerprints (sf0.001)") {
-    // edit-augmented corpus (mirrors SparkEntry.nearDupCorpus): the raw
+    // edit-augmented corpus (mirrors Fixtures.nearDupCorpus): the raw
     // synth corpus has no true video near-dups under the wide fingerprint,
     // so inject length-preserving edited twins to give the parity check a
     // real separated signal
