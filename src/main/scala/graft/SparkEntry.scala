@@ -13,7 +13,7 @@ import graft.rows._
   */
 object SparkEntry {
 
-  /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
+  /** Flagship query on sf=0.001; a smoke check expects rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q1_agg")(spark, "/root/testdata/sf0.001")
 
