@@ -22,6 +22,18 @@ object Bench {
       s""""stages":$stages,"tasks":$tasks,"task_ms":$taskMs}"""
   }
 
+  /** Whether a baseline that recorded `timed` as its sf dir timed `sfDir`:
+    * the same directory however it is spelled (relative, with a trailing
+    * slash or `..`, through a symlink).
+    */
+  private[graft] def sameSfDir(timed: String, sfDir: String): Boolean = {
+    def canon(d: String) = {
+      val p = java.nio.file.Paths.get(d).toAbsolutePath.normalize
+      try p.toRealPath() catch { case _: java.io.IOException => p }
+    }
+    canon(timed) == canon(sfDir)
+  }
+
   private val RowProp = "graft.bench.row"
   private val PhaseProp = "graft.bench.phase"
   private val Construction = "construction"
@@ -204,7 +216,7 @@ object Bench {
       }
     // Times of another scale factor say nothing about this run's: the gate
     // and its calibration apply only to a baseline of the same sf dir.
-    val sameSf = baseline.filter(_.sf.contains(sfDir))
+    val sameSf = baseline.filter(_.sf.exists(sameSfDir(_, sfDir)))
     if (baseline.isDefined && sameSf.isEmpty)
       System.err.println(s"[bench] no contention gate: $basePath timed " +
         s"sf ${baseline.flatMap(_.sf).getOrElse("(unrecorded)")}, this run is $sfDir")

@@ -34,27 +34,25 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     declared.map(r => r.name -> r.oracle).toMap
 
-  /** The amortized frozen-model rows ([[Fixtures.amortizedFreeze]]): Bench
-    * runs these once untimed against the TIMED SF right after warm-up, so
-    * their timed numbers measure SERVING (the production steady state),
-    * with the train+freeze cost paid once per session — while
-    * sim_ivfpq_prod keeps timing the full path.
+  /** The amortized frozen-model rows ([[Fixtures.amortizedFreeze]]),
+    * declared with `amortizedRow`: Bench runs these once untimed against
+    * the TIMED SF right after warm-up, so their timed numbers measure
+    * SERVING (the production steady state), with the train+freeze cost
+    * paid once per session — while sim_ivfpq_prod keeps timing the full
+    * path.
     */
-  val frozenAmortized: Seq[String] = Seq("sim_pq_prod", "sql_ann_serve",
-    "stream_ann_topk", "sim_pq_addbatch", "stream_pq_addbatch",
-    // r14-opt: the frozen-classifier faces join the amortized set — their
-    // GD training is driver-sequential (measured par ≈ 0.8 over ~30 tiny
-    // jobs) and identical across the three faces; text_quality_clf keeps
-    // timing the full training path every run as the control.
-    "clf_quality_frozen", "sql_clf_score", "stream_clf_score")
+  lazy val frozenAmortized: Seq[String] =
+    declared.filter(_.amortized).map(_.name)
 }
 
 /** One query row: its name, its Spark builder over `(session, sfDir)`, its
-  * DuckDB oracle SQL, and its faces. The oracle is by-name and built at most
+  * DuckDB oracle SQL, its faces, and whether it and its faces serve a model
+  * that Bench trains once untimed. The oracle is by-name and built at most
   * once, on first use.
   */
 final class QueryRow(val name: String, val build: QueryRow.Build,
-    oracleSql: => String, val faces: Seq[QueryRow.Face]) {
+    oracleSql: => String, val faces: Seq[QueryRow.Face],
+    val amortized: Boolean) {
   lazy val oracle: String = oracleSql
 }
 
@@ -72,7 +70,13 @@ object QueryRow {
       val oracle: Option[() => String])
 
   def row(name: String, build: Build, oracle: => String,
-      faces: Face*): QueryRow = new QueryRow(name, build, oracle, faces)
+      faces: Face*): QueryRow = new QueryRow(name, build, oracle, faces, false)
+
+  /** A row whose builder serves through [[Fixtures.amortizedFreeze]]: it
+    * and its faces are [[SparkEntry.frozenAmortized]].
+    */
+  def amortizedRow(name: String, build: Build, oracle: => String,
+      faces: Face*): QueryRow = new QueryRow(name, build, oracle, faces, true)
 
   def face(name: String)(build: Build): Face = new Face(name, build, None)
 
@@ -84,7 +88,8 @@ object QueryRow {
     */
   def flatten(rows: Seq[QueryRow]): Seq[QueryRow] = {
     val all = rows.flatMap(r => r +: r.faces.map(f =>
-      new QueryRow(f.name, f.build, f.oracle.fold(r.oracle)(_()), Nil)))
+      new QueryRow(f.name, f.build, f.oracle.fold(r.oracle)(_()), Nil,
+        r.amortized)))
     val dups = all.groupBy(_.name).collect { case (n, rs) if rs.size > 1 => n }
     require(dups.isEmpty,
       s"query names declared more than once: ${dups.toSeq.sorted.mkString(", ")}")

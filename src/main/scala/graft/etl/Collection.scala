@@ -74,11 +74,16 @@ final class CollectionTask(
     try {
       val t0 = System.nanoTime()
       val p = period.periodAt(nowNs)
-      // An empty window is a no-op merge.
+      // Persist the batch: the merge's bucket probe fills the cache and its
+      // write reads it, so an API-backed read hits the source once per
+      // collection. An empty window is a no-op merge.
       val data = evaluate.evaluate(spark, readIds, p)
-      val merged = store.merge(container,
-        data.select(storeIdOf.getItem(col("ordinal")).as("series_id"),
-          col("ts"), col("value")))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val rekeyed = data.select(storeIdOf.getItem(col("ordinal")).as("series_id"),
+        col("ts"), col("value"))
+      val merged =
+        try store.merge(container, rekeyed)
+        finally data.unpersist()
       batchesOk += 1
       lastBatchPoints = merged.points
       lastSuccessNs = nowNs

@@ -603,14 +603,6 @@ private[graft] object Fixtures {
       |st AS (SELECT k, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
       |  CAST(count(*) AS BIGINT) AS n_occurrences FROM ln GROUP BY 1)""".stripMargin
 
-  /** Root of every frozen-model dir: `SPARK_GRAFT_FROZEN_DIR` if set,
-    * else `target/graft_frozen` under the working directory (the project
-    * root for `sbt run` / `sbt test`), made absolute so Spark and the
-    * DuckDB twin resolve the same files.
-    */
-  val FrozenRoot: String = sys.env.getOrElse("SPARK_GRAFT_FROZEN_DIR",
-    new java.io.File("target/graft_frozen").getAbsolutePath)
-
   /** Where sim_pq_prod freezes its trained PQ model (codebooks + codes)
     * to parquet, partitioned by an explicit model id (`pqprod-<n>` —
     * derived from the corpus row count so per-SF runs coexist AND the
@@ -620,7 +612,7 @@ private[graft] object Fixtures {
     * `count(*) FROM embeddings`). Lives under target/ — build-transient,
     * never committed.
     */
-  val PqFrozenDir = s"$FrozenRoot/pq_prod"
+  val PqFrozenDir = "/root/repo/target/graft_frozen/pq_prod"
 
   /** Train-once/serve-many amortization for the frozen-model rows: a
     * COMPLETED freeze drops a marker file under its face dir, and later
@@ -652,28 +644,28 @@ private[graft] object Fixtures {
     * (model_id, cell) for probe-time partition pruning) — same
     * model-id-keyed lifecycle as [[PqFrozenDir]].
     */
-  val IvfPqFrozenDir = s"$FrozenRoot/ivfpq_prod"
+  val IvfPqFrozenDir = "/root/repo/target/graft_frozen/ivfpq_prod"
 
   /** Where stream_ann_topk / sql_ann_serve freeze THEIR IVF-PQ indexes
     * (each frozen-model query trains and freezes to its own dir — queries
     * stay self-contained and order-independent; see the clf dirs' comment
     * for why faces must not share a freeze).
     */
-  val StreamAnnFrozenDir = s"$FrozenRoot/stream_ann"
-  val SqlAnnFrozenDir = s"$FrozenRoot/sql_ann"
+  val StreamAnnFrozenDir = "/root/repo/target/graft_frozen/stream_ann"
+  val SqlAnnFrozenDir = "/root/repo/target/graft_frozen/sql_ann"
 
   /** Where sim_pq_addbatch freezes the BOOTSTRAP-trained PQ model whose
     * codebooks the held-out batch is encoded against (model id derived
     * from the bootstrap row count — the twin reconstructs it via the same
     * filtered count).
     */
-  val PqAddFrozenDir = s"$FrozenRoot/pq_addbatch"
+  val PqAddFrozenDir = "/root/repo/target/graft_frozen/pq_addbatch"
 
   /** Where stream_pq_addbatch freezes ITS bootstrap PQ model (own dir —
     * the per-face freeze policy; see the clf dirs' comment).
     */
   val StreamPqAddFrozenDir =
-    s"$FrozenRoot/stream_pq_addbatch"
+    "/root/repo/target/graft_frozen/stream_pq_addbatch"
 
   /** DuckDB twin of frozen-codebook batch encoding over the model under
     * `base` — shared by sim_pq_addbatch and stream_pq_addbatch so the
@@ -755,9 +747,9 @@ private[graft] object Fixtures {
     * self-consistent even under a filtered single-query run.
     * Build-transient under target/, never committed.
     */
-  val ClfFrozenDir = s"$FrozenRoot/clf_quality"
-  val ClfSqlFrozenDir = s"$FrozenRoot/clf_quality_sql"
-  val ClfStreamFrozenDir = s"$FrozenRoot/clf_quality_stream"
+  val ClfFrozenDir = "/root/repo/target/graft_frozen/clf_quality"
+  val ClfSqlFrozenDir = "/root/repo/target/graft_frozen/clf_quality_sql"
+  val ClfStreamFrozenDir = "/root/repo/target/graft_frozen/clf_quality_stream"
 
   /** Shared train-once/serve-many harness for the frozen quality
     * classifier's three faces (batch / SQL TVF / streaming): train on the

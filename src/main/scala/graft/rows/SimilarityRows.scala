@@ -7,7 +7,7 @@ import graft.core.Tables
 import graft.pipeline.{Components, Sampling, Similarity, TextOps}
 
 import Fixtures._
-import QueryRow.{face, row}
+import QueryRow.{amortizedRow, face, row}
 
 /** Embedding quantization and similarity search: exact and approximate top-k, product quantization, clustering. */
 private[graft] object SimilarityRows {
@@ -211,7 +211,7 @@ private[graft] object SimilarityRows {
     // vec_pq/sim_pq_topk family — same code path, smaller constants).
     // The freeze is keyed by corpus size so sf0.01/sf0.1 runs coexist
     // and the twin picks its own SF's partition.
-    row("sim_pq_prod", (s, dir) => {
+    amortizedRow("sim_pq_prod", (s, dir) => {
       val e = Tables(s, dir).embeddings
       val n = e.count()
       val (cbF, cdF) = amortizedFreeze(PqFrozenDir, s"pqprod-$n") {
@@ -283,7 +283,7 @@ private[graft] object SimilarityRows {
     // (the dedup_sem_inc shape for the PQ family). The twin recomputes
     // the argmin assignment (same (dist, cluster) tie-break) from the
     // same frozen parquet.
-    row("sim_pq_addbatch", (s, dir) => {
+    amortizedRow("sim_pq_addbatch", (s, dir) => {
       val e = Tables(s, dir).embeddings
       val boot = e.where(col("vec_id") % 3 =!= 0)
       val batch = e.where(col("vec_id") % 3 === 0)
@@ -307,7 +307,7 @@ private[graft] object SimilarityRows {
     // face runs the streaming kernel verbatim, and StreamOpsSpec drives
     // it as a real two-batch MemoryStream plus the foreachBatch append
     // sink into the frozen codes relation
-    row("stream_pq_addbatch", (s, dir) => {
+    amortizedRow("stream_pq_addbatch", (s, dir) => {
       val e = Tables(s, dir).embeddings
       val boot = e.where(col("vec_id") % 3 =!= 0)
       val batch = e.where(col("vec_id") % 3 === 0)

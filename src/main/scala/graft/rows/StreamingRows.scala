@@ -7,7 +7,7 @@ import graft.core.Tables
 import graft.pipeline.{Similarity, TextOps}
 
 import Fixtures._
-import QueryRow.{face, row}
+import QueryRow.{amortizedRow, face, row}
 
 /** Streaming operators in batch mode. */
 private[graft] object StreamingRows {
@@ -63,7 +63,7 @@ private[graft] object StreamingRows {
     // codebooks/codes with the exact ivfPqAdcTopKFrozen arithmetic. The
     // twin recomputes probe + cell-pruned ADC + rank from the same
     // frozen parquet.
-    row("stream_ann_topk", (s, dir) => {
+    amortizedRow("stream_ann_topk", (s, dir) => {
       val e = Tables(s, dir).embeddings
       val n = e.count()
       val (ceF, cbF, cdF) = amortizedFreeze(StreamAnnFrozenDir, s"ivfpq-$n") {

@@ -7,7 +7,7 @@ import graft.core.Tables
 import graft.pipeline.{Profile, Sampling, TextCdc, TextOps}
 
 import Fixtures._
-import QueryRow.{face, row}
+import QueryRow.{amortizedRow, face, row}
 
 /** Text analysis: token statistics, quality scores and classifiers, language models, chunking, line and substring dedup signals. */
 private[graft] object TextRows {
@@ -312,7 +312,11 @@ private[graft] object TextRows {
     // frozen parquet and independently recomputes the serving arithmetic
     // (hashed counts -> frozen-mu/sd standardization -> dot -> sigmoid);
     // training stays oracle-covered by text_quality_clf (same GD path).
-    row("clf_quality_frozen", (s, dir) =>
+    // Amortized, with stream_clf_score: the GD training is driver-sequential
+    // (measured par ≈ 0.8 over ~30 tiny jobs) and identical across the
+    // three faces; text_quality_clf keeps timing the full training path
+    // every run as the control.
+    amortizedRow("clf_quality_frozen", (s, dir) =>
       frozenClfScore(s, dir, ClfFrozenDir)(
         TextOps.logregScoreFrozen(_, _)),
       // Mirrors TextOps.logregScoreFrozen against the FROZEN model parquet
@@ -338,7 +342,7 @@ private[graft] object TextRows {
     // model-in-the-loop curation AT INGEST: the scoring kernel is a
     // narrow stateless map, so the stream face is the batch operator
     // verbatim (StreamOpsSpec drives it as a real MemoryStream)
-    row("stream_clf_score", (s, dir) =>
+    amortizedRow("stream_clf_score", (s, dir) =>
       frozenClfScore(s, dir, ClfStreamFrozenDir)(
         graft.streaming.StreamOps.scoreStream(_, _)),
       clfFrozenTwinSql(ClfStreamFrozenDir)),

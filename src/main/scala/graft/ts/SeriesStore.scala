@@ -4,7 +4,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.core.Sessions
 import graft.ts.model.Period
@@ -198,8 +197,8 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
 
   /** The batch's distinct buckets and its row count in one job and no
     * exchange: each partition emits its bucket set and row count, the
-    * driver unions them. The merge persists the batch first, so this pass
-    * fills the cache and the write reads the cache instead of the source.
+    * driver unions them. A persisted batch is filled by this pass, so the
+    * merge's write reads the cache instead of the source.
     */
   private def probe(newData: DataFrame): MergeResult = {
     val n = numBuckets
@@ -222,86 +221,82 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
   private def mergeLocked(container: String, incoming: DataFrame): MergeResult = {
     sweepStaging(container)
     val target = new Path(containerPath(container))
-    // Persisted: the probe fills the cache and the write reads it, so the
-    // batch is evaluated once whoever calls the merge.
     val newData = incoming.select(
       col("series_id").cast("string"),
       col("ts").cast("long"),
       col("value").cast("double"))
       .withColumn("bucket", bucketCol)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // Bounded rewrite: only buckets the batch touches, learnt by the probe,
-      // which also counts the batch; of those, only the live ones hold old rows.
-      val probed = probe(newData)
-      val affected = probed.buckets
-      if (affected.isEmpty) return probed
-      val live = liveBuckets(container)
-      val old = affected.filter(live)
 
-      val nw = newData.withColumn("__gen", lit(1))
-      val batch =
-        if (old.isEmpty) nw
-        else scan(container).where(col("bucket").isin(old: _*))
-          .withColumn("__gen", lit(0))
-          .unionByName(nw)
-      // One exchange: hash on bucket clusters every (bucket, series_id, ts)
-      // group of the window, and the window's sort is the write's
-      // (bucket, series_id, ts) file order. value.desc as secondary key: if
-      // one batch carries duplicate (series_id, ts) rows the survivor is
-      // still deterministic. The width is pinned — a bare REPARTITION_BY_COL
-      // is AQE-coalescable back to one partition on small inputs, serializing
-      // the sort and the parquet write.
-      val w = Window.partitionBy("bucket", "series_id", "ts")
-        .orderBy(col("__gen").desc, col("value").desc)
-      val merged = batch
-        .repartition(Sessions.partsOf(spark), col("bucket"))
-        .withColumn("__rn", row_number().over(w))
-        .where(col("__rn") === 1)
-        .drop("__rn", "__gen")
+    // Bounded rewrite: only buckets the batch touches, learnt by the probe,
+    // which also counts the batch; of those, only the live ones hold old rows.
+    val probed = probe(newData)
+    val affected = probed.buckets
+    if (affected.isEmpty) return probed
+    val live = liveBuckets(container)
+    val old = affected.filter(live)
 
-      // Parquet can't be rewritten in place while being read: stage the merged
-      // buckets to a tmp sibling ([[sweepStaging]] has cleared it).
-      val tmp = tmpDirOf(container)
-      merged.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(tmp.toString)
+    val nw = newData.withColumn("__gen", lit(1))
+    val batch =
+      if (old.isEmpty) nw
+      else scan(container).where(col("bucket").isin(old: _*))
+        .withColumn("__gen", lit(0))
+        .unionByName(nw)
+    // One exchange: hash on bucket clusters every (bucket, series_id, ts)
+    // group of the window, and the window's sort is the write's
+    // (bucket, series_id, ts) file order. value.desc as secondary key: if
+    // one batch carries duplicate (series_id, ts) rows the survivor is
+    // still deterministic. The width is pinned — a bare REPARTITION_BY_COL
+    // is AQE-coalescable back to one partition on small inputs, serializing
+    // the sort and the parquet write.
+    val w = Window.partitionBy("bucket", "series_id", "ts")
+      .orderBy(col("__gen").desc, col("value").desc)
+    val merged = batch
+      .repartition(Sessions.partsOf(spark), col("bucket"))
+      .withColumn("__rn", row_number().over(w))
+      .where(col("__rn") === 1)
+      .drop("__rn", "__gen")
 
-      // Swap each affected bucket directory. Every rename is checked; on
-      // failure the bucket's backup is restored. Backups live in the sibling
-      // `.__bak` dir, never inside the container: a hard crash mid-swap leaves
-      // recoverable state that [[sweepStaging]] repairs, and no reader ever
-      // discovers a backup as a partition.
-      val bakRoot = bakDirOf(container)
-      fs.mkdirs(target)
-      fs.mkdirs(bakRoot)
-      affected.foreach { b =>
-        val name = s"bucket=$b"
-        val src = new Path(tmp, name)
-        val dst = new Path(target, name)
-        val bak = new Path(bakRoot, name)
-        if (!fs.exists(src)) {
-          // merged output lost a bucket only if the bucket had no rows at all
-          // (cannot happen: affected came from newData) — fail loudly.
-          throw new java.io.IOException(s"merge: staged bucket missing: $src")
-        }
-        val hadOld = live(b)
-        if (hadOld) {
-          if (fs.exists(bak)) fs.delete(bak, true)
-          if (!fs.rename(dst, bak))
-            throw new java.io.IOException(s"merge: failed to move $dst aside to $bak")
-        }
-        if (!fs.rename(src, dst)) {
-          val restored = !hadOld || fs.rename(bak, dst)
-          throw new java.io.IOException(
-            s"merge: failed to move $src into place" +
-              (if (restored) s"; previous data restored at $dst"
-               else s"; RESTORE FAILED — previous data is at $bak"))
-        }
-        if (hadOld) fs.delete(bak, true)
+    // Parquet can't be rewritten in place while being read: stage the merged
+    // buckets to a tmp sibling ([[sweepStaging]] has cleared it).
+    val tmp = tmpDirOf(container)
+    merged.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(tmp.toString)
+
+    // Swap each affected bucket directory. Every rename is checked; on
+    // failure the bucket's backup is restored. Backups live in the sibling
+    // `.__bak` dir, never inside the container: a hard crash mid-swap leaves
+    // recoverable state that [[sweepStaging]] repairs, and no reader ever
+    // discovers a backup as a partition.
+    val bakRoot = bakDirOf(container)
+    fs.mkdirs(target)
+    fs.mkdirs(bakRoot)
+    affected.foreach { b =>
+      val name = s"bucket=$b"
+      val src = new Path(tmp, name)
+      val dst = new Path(target, name)
+      val bak = new Path(bakRoot, name)
+      if (!fs.exists(src)) {
+        // merged output lost a bucket only if the bucket had no rows at all
+        // (cannot happen: affected came from newData) — fail loudly.
+        throw new java.io.IOException(s"merge: staged bucket missing: $src")
       }
-      fs.delete(bakRoot, true)
-      fs.delete(tmp, true)
-      probed
-    } finally newData.unpersist()
+      val hadOld = live(b)
+      if (hadOld) {
+        if (fs.exists(bak)) fs.delete(bak, true)
+        if (!fs.rename(dst, bak))
+          throw new java.io.IOException(s"merge: failed to move $dst aside to $bak")
+      }
+      if (!fs.rename(src, dst)) {
+        val restored = !hadOld || fs.rename(bak, dst)
+        throw new java.io.IOException(
+          s"merge: failed to move $src into place" +
+            (if (restored) s"; previous data restored at $dst"
+             else s"; RESTORE FAILED — previous data is at $bak"))
+      }
+      if (hadOld) fs.delete(bak, true)
+    }
+    fs.delete(bakRoot, true)
+    fs.delete(tmp, true)
+    probed
   }
 
   /** Repair state left by a merge that died mid-swap (process crash, not

@@ -21,6 +21,19 @@ class SqlRegistrySpec extends AnyFunSuite {
     assert(e.getMessage.endsWith("declared more than once: c, sql_a"))
   }
 
+  test("an amortized row's faces are amortized with it, and no other row") {
+    import QueryRow.{amortizedRow, face, row}
+    val build: QueryRow.Build = (s, _) => s.emptyDataFrame
+    val all = QueryRow.flatten(Seq(
+      amortizedRow("a", build, "SELECT 1", face("sql_a")(build)),
+      row("b", build, "SELECT 2", face("sql_b")(build))))
+    assert(all.filter(_.amortized).map(_.name) == Seq("a", "sql_a"))
+    assert(SparkEntry.frozenAmortized.toSet == Set("sim_pq_prod",
+      "sql_ann_serve", "stream_ann_topk", "sim_pq_addbatch",
+      "stream_pq_addbatch", "clf_quality_frozen", "sql_clf_score",
+      "stream_clf_score"))
+  }
+
   test("every table function is called by a sql_* twin or a SqlSurfaceSpec case") {
     val rowFiles = new java.io.File("src/main/scala/graft/rows").listFiles
       .filter(_.getName.endsWith("Rows.scala")).map(_.toPath).toSeq
