@@ -1,8 +1,9 @@
 package graft.core
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loader for the driver-generated parquet tables under one sf directory.
   *
@@ -14,7 +15,14 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   */
 final case class Tables(spark: SparkSession, dir: String) {
 
-  def apply(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  /** A table by name. Its schema is inferred from a parquet footer — a
+    * Spark job — on the first open only; later opens of an unchanged table
+    * pass the memoized schema and run none (see [[Tables.schemaOf]]).
+    */
+  def apply(name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(Tables.schemaOf(spark, path)).parquet(path)
+  }
 
   def lineitem: DataFrame = apply("lineitem")
   def orders: DataFrame = apply("orders")
@@ -70,4 +78,39 @@ final case class Tables(spark: SparkSession, dir: String) {
       col("value"),
       col("event_id")
     )
+}
+
+object Tables {
+  /** What a table's inferred schema depends on: its files (path, length,
+    * mtime, so a table rewritten in place is inferred again) and the
+    * session's parquet confs (`nanosAsLong` and the like change the types).
+    */
+  private final case class Source(files: Seq[(String, Long, Long)], confs: Map[String, String])
+
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String, (Source, StructType)]()
+
+  /** The schema `spark.read.parquet(path)` infers, memoized per path and
+    * keyed by [[Source]]: a recursive listing on the driver replaces the
+    * footer-inference job on every open after the first.
+    */
+  private[graft] def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val files = Seq.newBuilder[(String, Long, Long)]
+    try {
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+    } catch { case _: java.io.FileNotFoundException => () } // the read names the missing path
+    val source = Source(files.result().sorted,
+      spark.conf.getAll.filter { case (k, _) => k.contains("parquet") })
+    val known = schemas.get(path)
+    if (known != null && known._1 == source) known._2
+    else {
+      val schema = spark.read.parquet(path).schema
+      schemas.put(path, (source, schema))
+      schema
+    }
+  }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StringType}
 
-import graft.ts.{Evaluate, SeriesStore}
+import graft.ts.{Evaluate, MergeResult, SeriesStore}
 import graft.ts.model.Period
 
 /** Collection windows (reference: weather/service/data_collection_task.py:29-70).
@@ -40,9 +40,9 @@ final case class AbsolutePeriod(startNs: Long, endNs: Long) extends CollectionPe
   * Structured Streaming foreachBatch) decides cadence. Non-fatal errors are
   * logged and swallowed — at-least-once, skip-on-failure (T5); fatal errors
   * and interrupts propagate. Health is read off the task: `lastError`,
-  * `batchesOk`, and for the last successful batch its point count, its
-  * collection time and its latency — all from values the cycle computes
-  * anyway, so they cost no Spark job.
+  * `batchesOk`, and for the last successful batch its merge (points, tail-
+  * only and whole-bucket rewrites), its collection time and its latency —
+  * all from values the cycle computes anyway, so they cost no Spark job.
   */
 final class CollectionTask(
     val name: String,
@@ -63,8 +63,12 @@ final class CollectionTask(
 
   @volatile var lastError: Option[Throwable] = None
   @volatile var batchesOk: Long = 0L
-  /** Points in the last merged batch (the merge's bucket probe counts them). */
-  @volatile var lastBatchPoints: Long = 0L
+  /** The last successful merge: its batch's points (the merge's bucket
+    * probe counts them) and the buckets it rewrote tail-only and whole.
+    */
+  @volatile var lastMerge: MergeResult = MergeResult.empty
+  /** Points in the last merged batch. */
+  def lastBatchPoints: Long = lastMerge.points
   /** The `nowNs` of the last successful collection; 0 before the first. */
   @volatile var lastSuccessNs: Long = 0L
   /** Wall time of the last successful `collectOnce`, in ms. */
@@ -85,7 +89,7 @@ final class CollectionTask(
         try store.merge(container, rekeyed)
         finally data.unpersist()
       batchesOk += 1
-      lastBatchPoints = merged.points
+      lastMerge = merged
       lastSuccessNs = nowNs
       lastLatencyMs = (System.nanoTime() - t0) / 1e6
       lastError = None
@@ -101,11 +105,13 @@ final class CollectionTask(
 }
 
 /** What [[ServiceManager.health]] reports for one task: its last
-  * successful batch (points, collection time `nowNs`, latency in ms), its
-  * last error, and how many times `healthCheck` has restarted it.
+  * successful batch (its merge, collection time `nowNs`, latency in ms),
+  * its last error, and how many times `healthCheck` has restarted it.
   */
-final case class TaskHealth(name: String, lastBatchPoints: Long, lastSuccessNs: Long,
-    lastLatencyMs: Double, lastError: Option[Throwable], restarts: Long)
+final case class TaskHealth(name: String, lastMerge: MergeResult, lastSuccessNs: Long,
+    lastLatencyMs: Double, lastError: Option[Throwable], restarts: Long) {
+  def lastBatchPoints: Long = lastMerge.points
+}
 
 /** Periodic task supervision (reference: weather/service/service_manager.py:21-98):
   * run each task every `waitTime`, health-check every `healthCheckInterval`,
@@ -148,7 +154,7 @@ final class ServiceManager(spark: SparkSession,
     */
   def health(): Seq[TaskHealth] =
     tasks.map { case (t, _) =>
-      TaskHealth(t.name, t.lastBatchPoints, t.lastSuccessNs, t.lastLatencyMs,
+      TaskHealth(t.name, t.lastMerge, t.lastSuccessNs, t.lastLatencyMs,
         t.lastError, restarts(t.name).get)
     }
 

@@ -75,6 +75,7 @@ object StreamOps {
 
     @volatile private var current: StreamingQuery = _
     @volatile private var lastError: Option[Throwable] = None
+    @volatile private var progress: Option[StreamProgress] = None
     // Registration and event handling share one lock: a query that crashes
     // instantly can emit its terminated event before the starter records
     // its id — the handler blocks on the lock until registration is done,
@@ -108,6 +109,12 @@ object StreamOps {
       */
     def restartFailure: Option[Throwable] = lastError
 
+    /** The last micro-batch any generation of the watched query reported
+      * (None before its first progress event); other queries' progress is
+      * ignored. Read off the listener's events: it costs no job.
+      */
+    def lastProgress: Option[StreamProgress] = progress
+
     /** Uninstall and fence: an in-flight restart that has not yet started
       * its query will refuse to (no orphan stream can appear after close
       * returns); the current query, if running, is left to the caller.
@@ -132,7 +139,11 @@ object StreamOps {
     }
 
     override def onQueryStarted(event: QueryStartedEvent): Unit = ()
-    override def onQueryProgress(event: QueryProgressEvent): Unit = ()
+    override def onQueryProgress(event: QueryProgressEvent): Unit = {
+      val p = event.progress
+      if (lock.synchronized(watchedIds.contains(p.id)))
+        progress = Some(StreamProgress(p.batchId, p.numInputRows, p.batchDuration))
+    }
     override def onQueryIdle(event: QueryIdleEvent): Unit = ()
 
     override def onQueryTerminated(event: QueryTerminatedEvent): Unit = {
@@ -150,6 +161,11 @@ object StreamOps {
       }
     }
   }
+
+  /** One micro-batch as [[StreamWatchdog.lastProgress]] keeps it: its id,
+    * its input rows and its wall time in ms.
+    */
+  final case class StreamProgress(batchId: Long, numInputRows: Long, batchDurationMs: Long)
 
   final case class SeriesState(lastTs: Long, lastValue: Double,
       minValue: Double, maxValue: Double, n: Long)

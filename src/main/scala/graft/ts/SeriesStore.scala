@@ -1,9 +1,11 @@
 package graft.ts
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftBridge, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 import graft.core.Sessions
 import graft.ts.model.Period
@@ -12,17 +14,24 @@ import graft.ts.model.Period
   * Spark-native analog of the reference's DtsServer file containers
   * (reference: weather/service/dtss_host.py:141-151).
   *
-  * Layout: `<warehouse>/<container>/bucket=NN/` — series are hash-
+  * Layout: `<warehouse>/<container>/bucket=N/seg=L/` — series are hash-
   * distributed into a bounded number of bucket partitions (never one
   * directory per series: at 100 TB with millions of series that would mean
   * millions of tiny files). The bucket of a series is `crc32(series_id) %
   * numBuckets`, computable identically as a Catalyst column and on the
-  * driver, so:
+  * driver. Each bucket splits its time axis at its cut into at most two
+  * segments, each named by the least ts it may hold: a sealed base
+  * (`seg=-9223372036854775808`, points before the cut) and a tail
+  * (`seg=<cut>`, points at or after it). No point sits in two segments, so
+  * a read is a plain scan with no read-side last-wins, and:
   *  (a) per-series reads prune to one bucket directory (partition pruning)
   *      and row-group stats on the (series_id, ts) sort order prune within;
-  *  (b) a merge only reads and rewrites the buckets its incoming batch
-  *      touches — an upsert of one series rewrites 1/numBuckets of the
-  *      container, not all of it;
+  *  (b) a merge only reads and rewrites the segments its incoming batch
+  *      overlaps — a batch at or after the cut and within two days of it
+  *      rewrites the bucket's tail alone; any other batch rewrites the
+  *      bucket and re-cuts it at the later of the batch's earliest point
+  *      and a day before its latest, so the write cost of a sliding-window
+  *      collection follows the batch, not the container's age;
   *  (c) the merge shuffle partitioning is aligned with the file layout.
   * At cluster scale a container maps to a table where this becomes
   * MERGE INTO over the same bucketing.
@@ -44,6 +53,14 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
       .collect { case n if n.startsWith("bucket=") => n.stripPrefix("bucket=").toInt }.toSet
     catch { case _: java.io.FileNotFoundException => Set.empty }
 
+  /** The cut of a live bucket, from one listing of it: the largest of its
+    * `seg=` names, which is its tail's; None for a bucket with no segment.
+    */
+  private def tailCut(container: String, bucket: Int): Option[Long] =
+    fs.listStatus(new Path(containerPath(container), s"bucket=$bucket")).iterator
+      .map(_.getPath.getName).collect { case n if n.startsWith("seg=") => n.stripPrefix("seg=").toLong }
+      .maxOption
+
   /** Staging siblings of the container directory. Both live OUTSIDE the
     * container so Spark partition discovery never sees them: a backup left
     * behind by a crash must not surface as extra rows (and a `bucket=N.__old`
@@ -53,6 +70,13 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
   private def tmpDirOf(container: String) = new Path(containerPath(container) + ".__tmp")
   private def bakDirOf(container: String) = new Path(containerPath(container) + ".__bak")
   private def lockPathOf(container: String) = new Path(containerPath(container) + ".__lock")
+
+  /** Where a swap moves the live directory `rel` (`bucket=N`, or a tail
+    * `bucket=N/seg=C`) aside: one flat entry of the backup dir, named by
+    * `rel` with `/` as `+`, so a sweep tells a whole bucket from a tail.
+    */
+  private def bakOf(container: String, rel: String) =
+    new Path(bakDirOf(container), rel.replace('/', '+'))
 
   /** Best-effort CROSS-PROCESS merge guard: an exclusive-create lock file
     * beside the container (`<container>.__lock`, holding `pid@host:epoch`).
@@ -122,8 +146,8 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
   /** Bucket assignment as a Catalyst column (codegen'd crc32 over the id's
     * UTF-8 bytes) — MUST stay in sync with [[bucketOf]].
     */
-  private def bucketCol: org.apache.spark.sql.Column =
-    pmod(crc32(col("series_id").cast("binary")), lit(numBuckets.toLong)).cast("int")
+  private def bucketCol(seriesId: Column): Column =
+    pmod(crc32(seriesId.cast("binary")), lit(numBuckets.toLong)).cast("int")
 
   /** Driver-side twin of [[bucketCol]] for partition pruning of id reads. */
   def bucketOf(seriesId: String): Int = {
@@ -132,11 +156,11 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
     java.lang.Math.floorMod(c.getValue, numBuckets.toLong).toInt
   }
 
-  /** The stored columns, bucket partition included: reads pass it to
-    * `spark.read` instead of inferring it from a parquet footer, which would
-    * cost a Spark job per read.
+  /** The stored columns, bucket and segment partitions included: reads pass
+    * it to `spark.read` instead of inferring it from a parquet footer, which
+    * would cost a Spark job per read.
     */
-  private val storedSchema = "series_id STRING, ts BIGINT, value DOUBLE, bucket INT"
+  private val storedSchema = "series_id STRING, ts BIGINT, value DOUBLE, bucket INT, seg BIGINT"
 
   private def scan(container: String): DataFrame =
     spark.read.schema(storedSchema).parquet(containerPath(container))
@@ -176,17 +200,22 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
     * of an empty batch leaves the store as it was and creates no container.
     *
     * One path, whether or not the container exists: one partition-local
-    * pass over the batch ([[probe]]) learns the buckets it touches and its
-    * point count; one listing of the container says which of them are live;
-    * only those are read, merged with the batch (one exchange, hash on
-    * bucket, shared by the last-wins window and the bucket-partitioned
-    * write) and swapped; the rest of the container is untouched. The
-    * per-bucket swap is rename-checked with a backup — a crash mid-swap
-    * never loses data — and the merge is idempotent (re-merging the same
-    * batch is a no-op, T4 late/duplicate handling), so a retry after a
-    * partial swap converges.
+    * pass over the batch ([[probe]]) learns the buckets it touches, the
+    * earliest and latest point in each, and its point count; one listing of
+    * the container says which of them are live, and one listing of each
+    * live one gives its cut. A live bucket whose part of the batch lies at or
+    * after its cut and within two tail spans of it rewrites its tail alone;
+    * every other touched bucket is rewritten whole and re-cut. Only the
+    * segments being rewritten are read, merged with the batch (one
+    * exchange, hash on bucket, shared by the last-wins window and the
+    * partitioned write), staged once and swapped; the rest of the container
+    * is untouched. Each swap, of a tail or of a whole bucket, is
+    * rename-checked with a backup — a crash mid-swap never loses data — and
+    * the merge is idempotent (re-merging the same batch is a no-op, T4
+    * late/duplicate handling), so a retry after a partial swap converges.
     *
-    * Returns the batch's point count and the buckets the merge rewrote.
+    * Returns the batch's point count and the buckets the merge rewrote,
+    * tail-only and whole.
     */
   def merge(container: String, incoming: DataFrame): MergeResult =
     SeriesStore.containerLock(containerPath(container)).synchronized {
@@ -195,22 +224,35 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
       finally releaseProcessLock(container)
     }
 
-  /** The batch's distinct buckets and its row count in one job and no
-    * exchange: each partition emits its bucket set and row count, the
-    * driver unions them. A persisted batch is filled by this pass, so the
-    * merge's write reads the cache instead of the source.
+  /** The batch's distinct buckets, the earliest and latest ts in each, and
+    * its row count in one job and no exchange: each partition emits its
+    * bucket set, per-bucket bounds and row count, the driver folds them. A
+    * persisted batch is filled by this pass, so the merge's write reads the
+    * cache instead of the source.
     */
-  private def probe(newData: DataFrame): MergeResult = {
+  private def probe(newData: DataFrame): SeriesStore.Probe = {
     val n = numBuckets
-    val parts = newData.select("bucket").as(Encoders.scalaInt).mapPartitions { it =>
+    val parts = newData.select("bucket", "ts").as(SeriesStore.BucketTs).mapPartitions { it =>
       val seen = new java.util.BitSet(n)
+      val lo = Array.fill(n)(Long.MaxValue)
+      val hi = Array.fill(n)(Long.MinValue)
       var points = 0L
-      it.foreach { b => seen.set(b); points += 1 }
-      Iterator.single((seen.toLongArray, points))
+      it.foreach { case (b, ts) =>
+        seen.set(b)
+        if (ts < lo(b)) lo(b) = ts
+        if (ts > hi(b)) hi(b) = ts
+        points += 1
+      }
+      Iterator.single((seen.toLongArray, points, lo, hi))
     }(SeriesStore.ProbeEncoder).collect()
     val buckets = new java.util.BitSet(n)
-    parts.foreach { case (bits, _) => buckets.or(java.util.BitSet.valueOf(bits)) }
-    MergeResult(parts.map(_._2).sum, buckets.stream().toArray.toSeq)
+    val lo = Array.fill(n)(Long.MaxValue)
+    val hi = Array.fill(n)(Long.MinValue)
+    parts.foreach { case (bits, _, l, h) =>
+      buckets.or(java.util.BitSet.valueOf(bits))
+      for (b <- 0 until n) { lo(b) = math.min(lo(b), l(b)); hi(b) = math.max(hi(b), h(b)) }
+    }
+    SeriesStore.Probe(parts.map(_._2).sum, buckets.stream().toArray.toSeq, lo, hi)
   }
 
   /** Merges are serialized per container within the JVM (the reference's
@@ -221,63 +263,85 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
   private def mergeLocked(container: String, incoming: DataFrame): MergeResult = {
     sweepStaging(container)
     val target = new Path(containerPath(container))
-    val newData = incoming.select(
-      col("series_id").cast("string"),
-      col("ts").cast("long"),
-      col("value").cast("double"))
-      .withColumn("bucket", bucketCol)
+    val seriesId = col("series_id").cast("string")
+    val newData = incoming.select(seriesId.as("series_id"), col("ts").cast("long").as("ts"),
+      col("value").cast("double").as("value"), bucketCol(seriesId).as("bucket"))
 
-    // Bounded rewrite: only buckets the batch touches, learnt by the probe,
-    // which also counts the batch; of those, only the live ones hold old rows.
+    // Bounded rewrite: only buckets the batch touches, learnt by the probe
+    // with each one's earliest and latest point; of those, only the live
+    // ones hold old rows, and a live one whose batch fits its tail rewrites
+    // the tail alone.
     val probed = probe(newData)
-    val affected = probed.buckets
-    if (affected.isEmpty) return probed
+    if (probed.buckets.isEmpty) return MergeResult.empty
     val live = liveBuckets(container)
-    val old = affected.filter(live)
+    val oldCut = probed.buckets.filter(live).flatMap(b => tailCut(container, b).map(b -> _)).toMap
+    val (tailOnly, recut) = probed.buckets.partition(b =>
+      oldCut.get(b).exists(SeriesStore.fitsTail(_, probed.lo(b), probed.hi(b))))
+    val cut = new Array[Long](numBuckets)
+    tailOnly.foreach(b => cut(b) = oldCut(b))
+    recut.foreach(b => cut(b) = SeriesStore.recut(probed.lo(b), probed.hi(b)))
 
-    val nw = newData.withColumn("__gen", lit(1))
+    // The old rows: only the directories being rewritten are listed and read.
+    val root = containerPath(container)
+    val old = recut.filter(live).map(b => s"$root/bucket=$b") ++
+      tailOnly.map(b => s"$root/bucket=$b/seg=${cut(b)}")
+    // Each row's generation (old 0, new 1) and segment: its bucket's tail
+    // at or after the bucket's cut, the base below it.
+    val cutOfRow = GraftBridge.column(Literal.create(cut, ArrayType(LongType, containsNull = false)))
+      .getItem(col("bucket"))
+    def tagged(rows: DataFrame, gen: Int) = rows.select(col("series_id"), col("ts"), col("value"),
+      col("bucket"), lit(gen).as("__gen"),
+      when(col("ts") >= cutOfRow, cutOfRow).otherwise(lit(SeriesStore.BaseSeg)).as("seg"))
+    val nw = tagged(newData, 1)
     val batch =
       if (old.isEmpty) nw
-      else scan(container).where(col("bucket").isin(old: _*))
-        .withColumn("__gen", lit(0))
+      else tagged(spark.read.schema(storedSchema).option("basePath", root).parquet(old: _*), 0)
         .unionByName(nw)
-    // One exchange: hash on bucket clusters every (bucket, series_id, ts)
-    // group of the window, and the window's sort is the write's
-    // (bucket, series_id, ts) file order. value.desc as secondary key: if
-    // one batch carries duplicate (series_id, ts) rows the survivor is
-    // still deterministic. The width is pinned — a bare REPARTITION_BY_COL
-    // is AQE-coalescable back to one partition on small inputs, serializing
-    // the sort and the parquet write.
-    val w = Window.partitionBy("bucket", "series_id", "ts")
+    // The merge's width follows the rows it merges — the batch's, and the
+    // old segments' estimated from their bytes. A short window into its
+    // tails is one task with no exchange: the coalesced rows satisfy the
+    // window's clustering, so the sort, the window and the write run in the
+    // job that reads them (every further job and write task pays a fixed
+    // cost, mostly deserializing the job's Hadoop conf). A backfill or a
+    // large re-cut takes one exchange, hash on bucket, which clusters every
+    // (bucket, seg, series_id, ts) group of the window (seg is a function of
+    // bucket and ts); its width is pinned, not left to AQE, whose coalescing
+    // judges by shuffle bytes alone. Either way the window's sort is the
+    // write's (bucket, seg, series_id, ts) file order. value.desc as
+    // secondary key: if one batch carries duplicate (series_id, ts) rows the
+    // survivor is still deterministic.
+    val oldBytes = old.iterator.map(d => fs.getContentSummary(new Path(d)).getLength).sum
+    val width = SeriesStore.widthOf(Sessions.partsOf(spark),
+      probed.points + oldBytes / SeriesStore.MinBytesPerRow)
+    val w = Window.partitionBy("bucket", "seg", "series_id", "ts")
       .orderBy(col("__gen").desc, col("value").desc)
-    val merged = batch
-      .repartition(Sessions.partsOf(spark), col("bucket"))
+    val merged = (if (width == 1) batch.coalesce(1) else batch.repartition(width, col("bucket")))
       .withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1)
       .drop("__rn", "__gen")
 
     // Parquet can't be rewritten in place while being read: stage the merged
-    // buckets to a tmp sibling ([[sweepStaging]] has cleared it).
+    // segments to a tmp sibling ([[sweepStaging]] has cleared it).
     val tmp = tmpDirOf(container)
-    merged.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(tmp.toString)
+    merged.write.mode(SaveMode.Overwrite).partitionBy("bucket", "seg").parquet(tmp.toString)
 
-    // Swap each affected bucket directory. Every rename is checked; on
-    // failure the bucket's backup is restored. Backups live in the sibling
+    // Swap each rewritten tail or bucket directory. Every rename is checked;
+    // on failure the backup is restored. Backups live in the sibling
     // `.__bak` dir, never inside the container: a hard crash mid-swap leaves
     // recoverable state that [[sweepStaging]] repairs, and no reader ever
     // discovers a backup as a partition.
-    val bakRoot = bakDirOf(container)
     fs.mkdirs(target)
-    fs.mkdirs(bakRoot)
-    affected.foreach { b =>
-      val name = s"bucket=$b"
-      val src = new Path(tmp, name)
-      val dst = new Path(target, name)
-      val bak = new Path(bakRoot, name)
+    fs.mkdirs(bakDirOf(container))
+    val tail = tailOnly.toSet
+    probed.buckets.foreach { b =>
+      val rel = if (tail(b)) s"bucket=$b/seg=${cut(b)}" else s"bucket=$b"
+      val src = new Path(tmp, rel)
+      val dst = new Path(target, rel)
+      val bak = bakOf(container, rel)
       if (!fs.exists(src)) {
-        // merged output lost a bucket only if the bucket had no rows at all
-        // (cannot happen: affected came from newData) — fail loudly.
-        throw new java.io.IOException(s"merge: staged bucket missing: $src")
+        // the batch has a row at or after the cut of every bucket it
+        // touches, so a staged tail or bucket is never empty — fail loudly.
+        throw new java.io.IOException(s"merge: staged segment missing: $src")
       }
       val hadOld = live(b)
       if (hadOld) {
@@ -294,26 +358,28 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
       }
       if (hadOld) fs.delete(bak, true)
     }
-    fs.delete(bakRoot, true)
+    fs.delete(bakDirOf(container), true)
     fs.delete(tmp, true)
-    probed
+    MergeResult(probed.points, tailOnly, recut)
   }
 
   /** Repair state left by a merge that died mid-swap (process crash, not
-    * just an in-process rename failure). For each backup bucket: if its
-    * live counterpart is MISSING the crash hit between the two renames and
-    * the backup is the only copy — restore it; if the counterpart exists
-    * the swap completed — the backup is a stale duplicate, drop it. Stale
-    * `.__tmp` staging is always safe to delete (its content is re-derivable
-    * from the container + the batch, which the failed caller must retry).
+    * just an in-process rename failure). For each backup — a whole bucket
+    * or a tail: if its live counterpart is MISSING the crash hit between the
+    * two renames and the backup is the only copy — restore it; if the
+    * counterpart exists the swap completed — the backup is a stale
+    * duplicate, drop it. Stale `.__tmp` staging is always safe to delete
+    * (its content is re-derivable from the container + the batch, which
+    * the failed caller must retry).
     */
   private def sweepStaging(container: String): Unit = {
     val target = new Path(containerPath(container))
     val bakRoot = bakDirOf(container)
     if (fs.exists(bakRoot)) {
       fs.listStatus(bakRoot).filter(_.getPath.getName.startsWith("bucket=")).foreach { st =>
-        val dst = new Path(target, st.getPath.getName)
+        val dst = new Path(target, st.getPath.getName.replace('+', '/'))
         if (!fs.exists(dst)) {
+          fs.mkdirs(dst.getParent)
           if (!fs.rename(st.getPath, dst))
             throw new java.io.IOException(
               s"recover: failed to restore backup ${st.getPath} to $dst")
@@ -345,16 +411,75 @@ final class SeriesStore(spark: SparkSession, warehouse: String, numBuckets: Int 
       }
 }
 
-/** What one [[SeriesStore.merge]] did: the incoming batch's point count
-  * and the buckets it rewrote, ascending.
+/** What one [[SeriesStore.merge]] did: the incoming batch's point count,
+  * the buckets whose tail alone it rewrote and the buckets it rewrote whole
+  * and re-cut, each ascending. The driver decides both from the probe and
+  * its listings, so they cost no job.
   */
-final case class MergeResult(points: Long, buckets: Seq[Int])
+final case class MergeResult(points: Long, tailOnly: Seq[Int], recut: Seq[Int]) {
+  /** Every bucket the merge rewrote, ascending. */
+  def buckets: Seq[Int] = (tailOnly ++ recut).sorted
+}
+
+object MergeResult {
+  /** The result of merging an empty batch. */
+  val empty: MergeResult = MergeResult(0L, Nil, Nil)
+}
 
 object SeriesStore {
-  /** The probe's per-partition (bucket bit set, row count) encoder,
-    * derived once per JVM instead of reflected on every merge.
+  /** About how much time a tail holds after a re-cut: a batch within two
+    * spans of its bucket's cut rewrites the tail alone, so a sliding-window
+    * collection rewrites a bucket whole about once a span.
     */
-  private val ProbeEncoder = Encoders.product[(Array[Long], Long)]
+  private val TailSpan: Long = Period.Day
+
+  /** The base segment's name: the least ts, as it holds every point below
+    * its bucket's cut.
+    */
+  private val BaseSeg: Long = Long.MinValue
+
+  /** Whether a bucket's part of a batch, spanning [lo, hi], fits the tail
+    * at `cut`: at or after the cut and within two tail spans of it (a span
+    * that overflows does not fit).
+    */
+  private def fitsTail(cut: Long, lo: Long, hi: Long): Boolean = {
+    val d = hi - cut
+    lo >= cut && d >= 0 && d <= 2 * TailSpan
+  }
+
+  /** The cut of a bucket rewritten whole for a batch spanning [lo, hi]: a
+    * tail span before the batch's latest point, or its earliest if later.
+    */
+  private def recut(lo: Long, hi: Long): Long = {
+    val d = hi - lo
+    if (d >= 0 && d <= TailSpan) lo else hi - TailSpan
+  }
+
+  /** Rows a merge task sorts and writes: on a local core about 40 ms of
+    * work, about a task's fixed cost. And a floor on the stored bytes
+    * of a row (a point takes about 15 in a sorted segment), so old
+    * segments' rows are over- rather than under-estimated from their bytes.
+    */
+  private val RowsPerTask = 20000L
+  private val MinBytesPerRow = 8L
+
+  /** A merge's width for about `rows` rows: one task per [[RowsPerTask]],
+    * within [1, `maxWidth`].
+    */
+  private def widthOf(maxWidth: Int, rows: Long): Int =
+    math.max(1L, math.min(maxWidth.toLong, (rows + RowsPerTask - 1) / RowsPerTask)).toInt
+
+  /** What [[SeriesStore.probe]] learns of a batch: its row count, its
+    * buckets ascending, and the earliest and latest ts in each bucket.
+    */
+  private final case class Probe(points: Long, buckets: Seq[Int], lo: Array[Long], hi: Array[Long])
+
+  /** The probe's input and per-partition (bucket bit set, row count,
+    * earliest and latest ts per bucket) encoders, derived once per JVM
+    * instead of reflected on every merge.
+    */
+  private val BucketTs = Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong)
+  private val ProbeEncoder = Encoders.product[(Array[Long], Long, Array[Long], Array[Long])]
 
   // JVM-wide per-container-path lock table, shared by every store instance
   private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.core.Tables
-import graft.etl.{AbsolutePeriod, CollectionTask}
+import graft.etl.{AbsolutePeriod, CollectionPeriod, CollectionTask, RelativePeriod, ServiceManager}
 import graft.pipeline.Dedup
 import graft.ts.{Evaluate, SeriesStore}
 import graft.ts.model.Period
@@ -197,12 +197,49 @@ class PlanSpec extends SparkSpec {
     // the first cycle binds the catalog and creates the container
     task.collectOnce(spark, nowNs = 1L)
     assert(task.healthy, s"first cycle failed: ${task.lastError}")
-    // the probe, the merge's shuffle stage and its write; the health fields
-    // come from these jobs and add none
+    // the probe, the merge's shuffle stage (when the batch is large enough
+    // to spread) and its write; the health fields come from these jobs and
+    // add none
     val (jobs, _) = observe(task.collectOnce(spark, nowNs = 2L))
     assert(task.healthy, s"second cycle failed: ${task.lastError}")
     assert(jobs <= 3, s"a collection cycle ran $jobs jobs")
     assert(task.lastBatchPoints > 0 && task.lastSuccessNs == 2L && task.lastLatencyMs > 0.0)
+  }
+
+  test("a steady-state cycle rewrites only tails and runs at most 2 jobs") {
+    val (src, uid, ids, all) = netatmoFixture()
+    val lastTs = Tables(spark, sfDir).eventsUs.where(col("user_id") === uid)
+      .agg(max("ts")).collect()(0).getLong(0)
+    val store = new SeriesStore(spark, tmpDir("graft-cycle-steady"), numBuckets = 4)
+    def task(name: String, period: CollectionPeriod) =
+      new CollectionTask(name, new Evaluate(Map("netatmo" -> src)), store, "c",
+        ids.map(_._1), ids.map { case (_, m, dt) => s"shyft://c/$m/$dt" }, period)
+    val backfill = task("backfill", AbsolutePeriod(all.startNs, all.endNs))
+    backfill.collectOnce(spark, nowNs = 1L)
+    assert(backfill.healthy && backfill.lastMerge.tailOnly.isEmpty && backfill.lastMerge.recut.nonEmpty)
+    // a window of the last 12 hours lies in every bucket's tail
+    val steady = task("steady", RelativePeriod(12 * Period.Hour))
+    val (jobs, _) = observe(steady.collectOnce(spark, nowNs = lastTs + 1))
+    assert(steady.healthy, s"steady cycle failed: ${steady.lastError}")
+    // the probe, then one job that reads, sorts and writes the tails
+    assert(jobs <= 2, s"a steady-state cycle ran $jobs jobs")
+    val merged = steady.lastMerge
+    assert(merged.points > 0 && merged.tailOnly.nonEmpty && merged.recut.isEmpty, merged)
+    val Seq(health) = new ServiceManager(spark, Seq(steady -> 1L)).health()
+    assert(health.lastMerge == merged)
+  }
+
+  test("a second open of a table runs no job; a table rewritten in place is inferred again") {
+    val dir = tmpDir("graft-tables")
+    Seq((1L, "a")).toDF("k", "v").write.parquet(s"$dir/t.parquet")
+    val (first, _) = observe(assert(Tables(spark, dir)("t").columns.toSeq == Seq("k", "v")))
+    assert(first > 0, "the first open infers the schema with a Spark job")
+    val (second, _) = observe(Tables(spark, dir)("t"))
+    assert(second == 0, s"a second open ran $second jobs")
+
+    Seq((2.5, 7, "b")).toDF("x", "y", "z").write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val t = Tables(spark, dir)("t")
+    assert(t.columns.toSeq == Seq("x", "y", "z") && t.collect().toSeq.map(_.toSeq) == Seq(Seq(2.5, 7, "b")))
   }
 
   test("a collection cycle plans each module's pages in one driver pass") {
@@ -221,30 +258,43 @@ class PlanSpec extends SparkSpec {
     assert(passes == modules, s"a collection cycle made $passes page-planning passes")
   }
 
-  test("a merge into an existing container is one exchange on bucket, no second sort") {
+  test("a merge sorts once; a small one has no exchange, a larger one hashes on bucket") {
     val store = new SeriesStore(spark, tmpDir("graft-merge-plan"), numBuckets = 4)
     def pts(t0: Long) = (t0 until t0 + 16).map(t => (s"shyft://c/s-${t % 5}", t, t.toDouble))
       .toDF("series_id", "ts", "value")
-    store.merge("c", pts(0L))
-    // a merge into a new container takes the same path and plan
-    for ((container, total) <- Seq("c" -> (16 + 8), "new" -> 16)) {
-      val (jobs, plans) = observe(store.merge(container, pts(8L)))
-      // the probe, the merge's shuffle stage and its write
-      assert(jobs == 3, s"a merge into container $container ran $jobs jobs")
+    /** The merge's write plan, after checking that the merge ran `jobs`
+      * jobs and one write, and that the write sorts once.
+      */
+    def mergePlan(container: String, batch: org.apache.spark.sql.DataFrame, jobs: Int): SparkPlan = {
+      val (ran, plans) = observe(store.merge(container, batch))
+      assert(ran == jobs, s"a merge into container $container ran $ran jobs")
       val writes = plans.map(_.executedPlan)
         .filter(p => Aqe.find(p)(_.isInstanceOf[DataWritingCommandExec]).nonEmpty)
       assert(writes.size == 1, s"expected one write, got ${writes.size}")
       val plan = writes.head
-      val ex = shuffles(plan)
-      assert(ex.size == 1, plan.toString.take(3000))
-      ex.head.outputPartitioning match {
-        case h: HashPartitioning =>
-          assert(h.expressions.map(_.sql).mkString.contains("bucket"), h.toString)
-        case other => fail(s"merge exchange is not hashed on bucket: $other")
-      }
       assert(Aqe.collect(plan) { case s: SortExec => s }.size == 1, plan.toString.take(3000))
+      plan
+    }
+    store.merge("c", pts(0L))
+    // into an existing or a new container alike: the probe, then one job
+    // that reads, sorts and writes
+    for ((container, total) <- Seq("c" -> (16 + 8), "new" -> 16)) {
+      val plan = mergePlan(container, pts(8L), jobs = 2)
+      assert(shuffles(plan).isEmpty, plan.toString.take(3000))
       assert(store.read(container).count() == total)
     }
+    // a larger merge spreads: the probe, the shuffle stage and the write
+    val big = spark.range(30000L).select(
+      concat(lit("shyft://c/s-"), (col("id") % 5).cast("string")).as("series_id"),
+      col("id").as("ts"), col("id").cast("double").as("value"))
+    val ex = shuffles(mergePlan("big", big, jobs = 3))
+    assert(ex.size == 1)
+    ex.head.outputPartitioning match {
+      case h: HashPartitioning =>
+        assert(h.numPartitions == 2 && h.expressions.map(_.sql).mkString.contains("bucket"), h.toString)
+      case other => fail(s"merge exchange is not hashed on bucket: $other")
+    }
+    assert(store.read("big").count() == 30000L)
   }
 
   test("a second netatmo find runs no job that derives the catalog") {

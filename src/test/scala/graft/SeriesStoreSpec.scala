@@ -101,7 +101,8 @@ class SeriesStoreSpec extends SparkSpec {
     def bucketFiles: Map[String, Set[String]] = {
       val root = new java.io.File(s"$warehouse/c")
       root.listFiles().filter(_.getName.startsWith("bucket="))
-        .map(d => d.getName -> d.listFiles().map(_.getName).toSet).toMap
+        .map(d => d.getName -> d.listFiles().flatMap(seg => seg.list().map(f => s"${seg.getName}/$f")).toSet)
+        .toMap
     }
     val before = bucketFiles
     assert(before.size > 1, "seed should span multiple buckets")
@@ -112,7 +113,8 @@ class SeriesStoreSpec extends SparkSpec {
 
     // upsert one series → exactly its bucket rewritten
     val one = Seq(("shyft://c/series-0", 1000L * S, 9.9)).toDF("series_id", "ts", "value")
-    assert(store.merge("c", one) == MergeResult(1L, Seq(store.bucketOf("shyft://c/series-0"))))
+    // its batch lies in the bucket's tail: the tail alone is rewritten
+    assert(store.merge("c", one) == MergeResult(1L, Seq(store.bucketOf("shyft://c/series-0")), Nil))
     val after = bucketFiles
     val touched = s"bucket=${store.bucketOf("shyft://c/series-0")}"
     assert(after(touched) != before(touched), "affected bucket must be rewritten")
@@ -232,6 +234,125 @@ class SeriesStoreSpec extends SparkSpec {
     assert(left == Seq("c"), s"staging siblings left behind: $left")
   }
 
+  // ---- the base/tail split of a bucket ----
+
+  private val H = Period.Hour
+
+  /** Hourly points of the spec's series over hours [from, until). */
+  private def hourly(from: Int, until: Int, v: Int => Double = _.toDouble) =
+    (from until until).map(h => (id, h * H, v(h))).toDF("series_id", "ts", "value")
+
+  /** Each segment of the series' bucket: its data files' (name, length, mtime). */
+  private def segmentsOf(warehouse: String, store: SeriesStore): Map[String, Set[(String, Long, Long)]] =
+    new java.io.File(s"$warehouse/c/bucket=${store.bucketOf(id)}").listFiles().toSeq
+      .map(seg => seg.getName -> seg.listFiles().filter(_.getName.endsWith(".parquet"))
+        .map(f => (f.getName, f.length, f.lastModified)).toSet).toMap
+
+  private val BaseSeg = s"seg=${Long.MinValue}"
+
+  private def hoursOf(store: SeriesStore): Seq[(Long, Double)] =
+    store.read("c").orderBy("ts").collect().map(r => (r.getLong(1) / H, r.getDouble(2))).toSeq
+
+  test("a backfill is one write: base below a cut a day before its latest point, tail above") {
+    val warehouse = tmpDir("graft-seg-backfill")
+    val store = new SeriesStore(spark, warehouse, numBuckets = 2)
+    val b = store.bucketOf(id)
+    assert(store.merge("c", hourly(0, 72)) == MergeResult(72L, Nil, Seq(b)))
+    assert(segmentsOf(warehouse, store).keySet == Set(BaseSeg, s"seg=${47 * H}"))
+    val byseg = spark.read.parquet(s"$warehouse/c").groupBy("seg").count().collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(byseg == Map(Long.MinValue -> 47L, 47 * H -> 25L), byseg)
+    assert(hoursOf(store) == (0 until 72).map(h => h.toLong -> h.toDouble))
+  }
+
+  test("a tail-only merge leaves the base files byte-identical") {
+    val warehouse = tmpDir("graft-seg-tail")
+    val store = new SeriesStore(spark, warehouse, numBuckets = 2)
+    store.merge("c", hourly(0, 72))
+    val before = segmentsOf(warehouse, store)
+    Thread.sleep(20) // a rewritten file would carry a later mtime
+    // the window overlaps the tail (last-wins at 70, 71) and extends it
+    val got = store.merge("c", hourly(70, 74, _ + 100.0))
+    assert(got == MergeResult(4L, Seq(store.bucketOf(id)), Nil))
+    val after = segmentsOf(warehouse, store)
+    assert(after(BaseSeg) == before(BaseSeg), "the base must not be rewritten")
+    assert(after.keySet == before.keySet && after(s"seg=${47 * H}") != before(s"seg=${47 * H}"))
+    assert(hoursOf(store) ==
+      (0 until 70).map(h => h.toLong -> h.toDouble) ++ (70 until 74).map(h => h.toLong -> (h + 100.0)))
+  }
+
+  test("a late point below the cut takes the full path and re-cuts; last-wins holds") {
+    val warehouse = tmpDir("graft-seg-late")
+    val store = new SeriesStore(spark, warehouse, numBuckets = 2)
+    store.merge("c", hourly(0, 72))
+    val late = hourly(10, 11, _ => 99.0)
+    assert(store.merge("c", late) == MergeResult(1L, Nil, Seq(store.bucketOf(id))))
+    assert(segmentsOf(warehouse, store).keySet == Set(BaseSeg, s"seg=${10 * H}"))
+    assert(hoursOf(store) == (0 until 72).map(h => h.toLong -> (if (h == 10) 99.0 else h.toDouble)))
+    // a batch more than two days past the cut re-cuts too
+    assert(store.merge("c", hourly(72, 73)).recut == Seq(store.bucketOf(id)))
+    assert(segmentsOf(warehouse, store).keySet == Set(BaseSeg, s"seg=${72 * H}"))
+    assert(hoursOf(store).size == 73)
+  }
+
+  test("a failed tail rename restores the previous tail") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.faulty.impl", classOf[FaultyFs].getName)
+    val store = new SeriesStore(spark, "faulty://" + tmpDir("graft-seg-fail"), numBuckets = 2)
+    store.merge("c", hourly(0, 72))
+    FaultyFs.failNextTmpRename.set(true)
+    val e = intercept[java.io.IOException](store.merge("c", hourly(72, 74)))
+    assert(e.getMessage.contains("/seg=") && e.getMessage.contains("previous data restored"),
+      e.getMessage)
+    assert(hoursOf(store) == (0 until 72).map(h => h.toLong -> h.toDouble))
+    assert(store.merge("c", hourly(72, 74)).tailOnly == Seq(store.bucketOf(id)))
+    assert(hoursOf(store).size == 74)
+  }
+
+  test("process death between moving the old tail aside and the new one in is repaired") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.faulty.impl", classOf[FaultyFs].getName)
+    val warehouse = tmpDir("graft-seg-death")
+    val store = new SeriesStore(spark, "faulty://" + warehouse, numBuckets = 2)
+    store.merge("c", hourly(0, 72))
+    val tail = s"seg=${47 * H}"
+    for (repair <- Seq("read", "merge")) {
+      FaultyFs.dieOnNextTmpRename.set(true)
+      intercept[FaultyFs.Death](store.merge("c", hourly(72, 74)))
+      // the live tail is gone; its only copy is the backup
+      assert(!segmentsOf(warehouse, store).contains(tail), repair)
+      assert(new java.io.File(s"$warehouse/c.__bak").list().toSeq ==
+        Seq(s"bucket=${store.bucketOf(id)}+$tail"))
+      if (repair == "read")
+        assert(hoursOf(store) == (0 until 72).map(h => h.toLong -> h.toDouble))
+      else {
+        store.merge("c", hourly(72, 74))
+        assert(hoursOf(store).size == 74)
+      }
+      assert(segmentsOf(warehouse, store).contains(tail), repair)
+      assert(new java.io.File(warehouse).list().toSeq == Seq("c"), repair)
+    }
+  }
+
+  test("a merge killed after staging, before the swap, leaves every point exactly once") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.faulty.impl", classOf[FaultyFs].getName)
+    val warehouse = tmpDir("graft-seg-staged")
+    val store = new SeriesStore(spark, "faulty://" + warehouse, numBuckets = 2)
+    store.merge("c", hourly(0, 72))
+    FaultyFs.dieOnNextBakRename.set(true)
+    intercept[FaultyFs.Death](store.merge("c", hourly(70, 74, _ + 100.0)))
+    assert(new java.io.File(s"$warehouse/c.__tmp").exists(), "the staged merge is left behind")
+    val pts = store.read("c")
+    assert(pts.count() == 72 && pts.select("series_id", "ts").distinct().count() == 72)
+    assert(hoursOf(store) == (0 until 72).map(h => h.toLong -> h.toDouble))
+    // the retried merge sweeps the staging and lands every point once
+    store.merge("c", hourly(70, 74, _ + 100.0))
+    assert(hoursOf(store) ==
+      (0 until 70).map(h => h.toLong -> h.toDouble) ++ (70 until 74).map(h => h.toLong -> (h + 100.0)))
+    assert(new java.io.File(warehouse).list().toSeq == Seq("c"))
+  }
+
   // ---- cross-process merge guard (the lock FILE, not the JVM monitor) ----
 
   test("second driver holding the lock: merge fails loudly, container intact") {
@@ -286,25 +407,38 @@ class SeriesStoreSpec extends SparkSpec {
 }
 
 /** Local filesystem that fails the next rename whose source is a `.__tmp`
-  * staging dir — injects the exact failure mode SeriesStore.merge must
-  * survive (the second rename of the container swap). `tmpRenamesToPass`
-  * lets that many such renames succeed first, so the failure can land
-  * mid-swap.
+  * staging dir (a staged bucket or tail) — injects the exact failure mode
+  * SeriesStore.merge must survive (the second rename of a swap).
+  * `tmpRenamesToPass` lets that many such renames succeed first, so the
+  * failure can land mid-swap. `dieOnNextTmpRename` and `dieOnNextBakRename`
+  * throw [[FaultyFs.Death]] instead, at the rename into place or at the
+  * move aside into `.__bak`: the merge gets no chance to restore, as when
+  * its process dies there.
   */
 class FaultyFs extends RawLocalFileSystem {
   override def getScheme: String = "faulty"
   override def getUri: java.net.URI = java.net.URI.create("faulty:///")
-  override def rename(src: Path, dst: Path): Boolean =
-    // match only the container swap (tmp-staged bucket dir → live container),
+  override def rename(src: Path, dst: Path): Boolean = {
+    // match only the swap (tmp-staged bucket or tail dir → live container),
     // not the parquet committer's own renames inside the staging dir
-    if (FaultyFs.failNextTmpRename.get() && src.toString.matches(".*\\.__tmp/bucket=\\d+$") &&
+    val intoPlace = src.toString.matches(".*\\.__tmp/bucket=\\d+(/seg=-?\\d+)?$")
+    if (intoPlace && FaultyFs.dieOnNextTmpRename.getAndSet(false) ||
+        dst.toString.contains(".__bak/") && FaultyFs.dieOnNextBakRename.getAndSet(false))
+      throw new FaultyFs.Death(s"$src -> $dst")
+    if (FaultyFs.failNextTmpRename.get() && intoPlace &&
         FaultyFs.tmpRenamesToPass.getAndUpdate(n => math.max(0, n - 1)) == 0) {
       FaultyFs.failNextTmpRename.set(false)
       false
     } else super.rename(src, dst)
+  }
 }
 
 object FaultyFs {
   val failNextTmpRename = new java.util.concurrent.atomic.AtomicBoolean(false)
   val tmpRenamesToPass = new java.util.concurrent.atomic.AtomicInteger(0)
+  val dieOnNextTmpRename = new java.util.concurrent.atomic.AtomicBoolean(false)
+  val dieOnNextBakRename = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** Stands for the merging process dying at a rename. */
+  final class Death(at: String) extends RuntimeException(s"simulated process death at rename $at")
 }

@@ -145,6 +145,43 @@ class StreamOpsSpec extends SparkSpec {
     }
   }
 
+  test("watchdog keeps the watched query's last progress and ignores other queries") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val watched = MemoryStream[PointIn]
+    val other = MemoryStream[PointIn]
+    val wd = new StreamOps.StreamWatchdog(spark, () =>
+      watched.toDF().writeStream.format("memory").queryName("wd_progress_watched")
+        .outputMode("append").start())
+    assert(wd.lastProgress.isEmpty, "no progress before the first batch")
+    val q = wd.startWatched()
+    val unwatched = other.toDF().writeStream.format("memory").queryName("wd_progress_other")
+      .outputMode("append").start()
+    def await(cond: => Boolean): Unit = {
+      val deadline = System.currentTimeMillis() + 30000
+      while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(20)
+    }
+    try {
+      watched.addData(PointIn("s", 0, 1.0), PointIn("s", S, 2.0))
+      q.processAllAvailable()
+      watched.addData(PointIn("s", 2 * S, 3.0))
+      q.processAllAvailable()
+      await(wd.lastProgress.exists(_.batchId == 1L))
+      val got = wd.lastProgress.get
+      val second = q.recentProgress.find(_.batchId == 1L).get
+      assert(got == StreamOps.StreamProgress(1L, 1L, second.batchDuration), got)
+
+      // a batch of another query reaches the listener but not the snapshot
+      other.addData(Seq.tabulate(5)(i => PointIn("o", i * S, i.toDouble)): _*)
+      unwatched.processAllAvailable()
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext, 30000)
+      assert(wd.lastProgress.contains(got), wd.lastProgress)
+    } finally {
+      wd.close()
+      q.stop()
+      unwatched.stop()
+    }
+  }
+
   test("runningStats: per-series state persists across micro-batches") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = MemoryStream[PointIn]
