@@ -37,12 +37,18 @@ final case class AbsolutePeriod(startNs: Long, endNs: Long) extends CollectionPe
   * product (SURVEY.md §2.3 J2).
   *
   * `collectOnce` is one micro-batch; the scheduler (ServiceManager or
-  * Structured Streaming foreachBatch) decides cadence. Non-fatal errors are
-  * logged and swallowed — at-least-once, skip-on-failure (T5); fatal errors
-  * and interrupts propagate. Health is read off the task: `lastError`,
-  * `batchesOk`, and for the last successful batch its merge (points, tail-
-  * only and whole-bucket rewrites), its collection time and its latency —
-  * all from values the cycle computes anyway, so they cost no Spark job.
+  * Structured Streaming foreachBatch) decides cadence. Its batch declares
+  * what it can hold — the store ids, within the window that bounded the
+  * read — so a cycle into tails that cover the window is one Spark job that
+  * fetches the pages, reads the tails, sorts and writes
+  * ([[SeriesStore.merge]] with a [[SeriesStore.Within]]); any other cycle
+  * is probed, with its batch persisted by the merge so the source is read
+  * once. Non-fatal errors are logged and swallowed — at-least-once,
+  * skip-on-failure (T5); fatal errors and interrupts propagate. Health is
+  * read off the task: `lastError`, `batchesOk`, and for the last successful
+  * batch its merge (points, tail-only and whole-bucket rewrites), its
+  * collection time and its latency — all from values the cycle computes
+  * anyway, so they cost no Spark job.
   */
 final class CollectionTask(
     val name: String,
@@ -63,8 +69,9 @@ final class CollectionTask(
 
   @volatile var lastError: Option[Throwable] = None
   @volatile var batchesOk: Long = 0L
-  /** The last successful merge: its batch's points (the merge's bucket
-    * probe counts them) and the buckets it rewrote tail-only and whole.
+  /** The last successful merge: its batch's points (counted by the merge's
+    * probe or observed on its write) and the buckets it rewrote tail-only and
+    * whole.
     */
   @volatile var lastMerge: MergeResult = MergeResult.empty
   /** Points in the last merged batch. */
@@ -78,16 +85,13 @@ final class CollectionTask(
     try {
       val t0 = System.nanoTime()
       val p = period.periodAt(nowNs)
-      // Persist the batch: the merge's bucket probe fills the cache and its
-      // write reads it, so an API-backed read hits the source once per
-      // collection. An empty window is a no-op merge.
-      val data = evaluate.evaluate(spark, readIds, p)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val rekeyed = data.select(storeIdOf.getItem(col("ordinal")).as("series_id"),
-        col("ts"), col("value"))
-      val merged =
-        try store.merge(container, rekeyed)
-        finally data.unpersist()
+      // The batch declares what it can hold, the store ids within the window
+      // that bounded the source read: in the steady state that settles the
+      // merge's plan, and the merge is one job that reads the source once.
+      // An empty window is a no-op merge.
+      val rekeyed = evaluate.evaluate(spark, readIds, p)
+        .select(storeIdOf.getItem(col("ordinal")).as("series_id"), col("ts"), col("value"))
+      val merged = store.merge(container, rekeyed, SeriesStore.Within(storeIds, p))
       batchesOk += 1
       lastMerge = merged
       lastSuccessNs = nowNs

@@ -6,8 +6,11 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -175,8 +178,7 @@ private[sources] object FixtureDeviceApi {
   private def tsUnitScaleNs(file: String, conf: Configuration): Long =
     tsUnitCache.computeIfAbsent(file, _ => {
       import org.apache.parquet.schema.LogicalTypeAnnotation
-      val in = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(file), conf))
+      val in = org.apache.parquet.hadoop.ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
       try {
         val schema = in.getFileMetaData.getSchema
         schema.getType(schema.getFieldIndex("ts"))
@@ -193,10 +195,14 @@ private[sources] object FixtureDeviceApi {
 
   /** One shared Configuration for every fixture read: `new Configuration()`
     * re-parses the Hadoop default XML resources on each construction
-    * (visible in driver stack samples as wstx/BasicStreamReader frames under
-    * planInputPartitions), and every call sets the SAME projection — the
-    * per-call state (the filter predicate) never lives in the conf. Readers
-    * only read from it, so sharing is safe.
+    * (visible in stack samples as wstx/BasicStreamReader frames under
+    * planInputPartitions and the page readers), and every call sets the SAME
+    * projection — the per-call state (the filter predicate) never lives in
+    * the conf. Readers only read from it, so sharing is safe. Sharing alone
+    * does not avoid the parse: a reader must also be built without making a
+    * conf of its own, which `ParquetReader.builder(readSupport, path)` does
+    * before `withConf` replaces it; [[moduleEvents]] builds from a
+    * `HadoopInputFile` that carries this conf instead.
     *
     * READ-ONLY INVARIANT: this conf is shared across driver planning and all
     * executor task threads. It is safe exactly as long as no reader builder
@@ -237,10 +243,11 @@ private[sources] object FixtureDeviceApi {
       if (endNs <= Long.MaxValue - 1000L)
         pred = FilterApi.and(pred, FilterApi.lt(tsCol,
           java.lang.Long.valueOf(Math.floorDiv(endNs + 1000L, scale) + 1L)))
-      val reader = ParquetReader.builder(new GroupReadSupport(), new Path(file))
-        .withConf(conf)
-        .withFilter(org.apache.parquet.filter2.compat.FilterCompat.get(pred))
-        .build()
+      // built from an input file that carries the shared conf: the
+      // (ReadSupport, Path) builder makes a `new Configuration()` first
+      val reader = new ParquetReader.Builder[Group](HadoopInputFile.fromPath(new Path(file), conf)) {
+        override protected def getReadSupport(): ReadSupport[Group] = new GroupReadSupport()
+      }.withFilter(org.apache.parquet.filter2.compat.FilterCompat.get(pred)).build()
       try {
         var g = reader.read()
         while (g != null) {

@@ -37,7 +37,7 @@ class CollectionSpec extends SparkSpec {
     assert(task.lastLatencyMs > 0.0)
 
     task.collectOnce(spark, nowNs = 7200 * S)
-    // into the existing container the bucket probe counts the batch
+    // into the existing container's tail the write observes the batch
     assert(task.lastBatchPoints == 3600)
     assert(task.lastSuccessNs == 7200 * S)
     val pts = store.read("cont")

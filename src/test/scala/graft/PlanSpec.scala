@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
@@ -206,27 +207,52 @@ class PlanSpec extends SparkSpec {
     assert(task.lastBatchPoints > 0 && task.lastSuccessNs == 2L && task.lastLatencyMs > 0.0)
   }
 
-  test("a steady-state cycle rewrites only tails and runs at most 2 jobs") {
+  /** A store backfilled with the fixture station's whole history, and a
+    * task collecting the last 12 hours before `nowNs`, which lie in every
+    * bucket's tail; and the station's last ts.
+    */
+  private def steadyFixture(dir: String): (CollectionTask, Long) = {
     val (src, uid, ids, all) = netatmoFixture()
     val lastTs = Tables(spark, sfDir).eventsUs.where(col("user_id") === uid)
       .agg(max("ts")).collect()(0).getLong(0)
-    val store = new SeriesStore(spark, tmpDir("graft-cycle-steady"), numBuckets = 4)
+    val store = new SeriesStore(spark, tmpDir(dir), numBuckets = 4)
     def task(name: String, period: CollectionPeriod) =
       new CollectionTask(name, new Evaluate(Map("netatmo" -> src)), store, "c",
         ids.map(_._1), ids.map { case (_, m, dt) => s"shyft://c/$m/$dt" }, period)
     val backfill = task("backfill", AbsolutePeriod(all.startNs, all.endNs))
     backfill.collectOnce(spark, nowNs = 1L)
     assert(backfill.healthy && backfill.lastMerge.tailOnly.isEmpty && backfill.lastMerge.recut.nonEmpty)
-    // a window of the last 12 hours lies in every bucket's tail
-    val steady = task("steady", RelativePeriod(12 * Period.Hour))
-    val (jobs, _) = observe(steady.collectOnce(spark, nowNs = lastTs + 1))
+    (task("steady", RelativePeriod(12 * Period.Hour)), lastTs)
+  }
+
+  test("a steady-state cycle rewrites only tails and runs 1 job") {
+    val (steady, lastTs) = steadyFixture("graft-cycle-steady")
+    val (jobs, plans) = observe(steady.collectOnce(spark, nowNs = lastTs + 1))
     assert(steady.healthy, s"steady cycle failed: ${steady.lastError}")
-    // the probe, then one job that reads, sorts and writes the tails
-    assert(jobs <= 2, s"a steady-state cycle ran $jobs jobs")
+    // its batch declares its window, which lies in every declared bucket's
+    // tail: no probe and no persist, one job that fetches the pages, reads
+    // the tails, sorts and writes, in one task with no exchange
+    assert(jobs == 1, s"a steady-state cycle ran $jobs jobs")
+    val writes = plans.map(_.executedPlan)
+      .filter(p => Aqe.find(p)(_.isInstanceOf[DataWritingCommandExec]).nonEmpty)
+    assert(writes.size == 1 && shuffles(writes.head).isEmpty, writes.map(_.toString.take(3000)))
     val merged = steady.lastMerge
     assert(merged.points > 0 && merged.tailOnly.nonEmpty && merged.recut.isEmpty, merged)
     val Seq(health) = new ServiceManager(spark, Seq(steady -> 1L)).health()
     assert(health.lastMerge == merged)
+  }
+
+  test("a second steady-state cycle compiles no generated class") {
+    val (steady, lastTs) = steadyFixture("graft-cycle-codegen")
+    steady.collectOnce(spark, nowNs = lastTs + 1)
+    assert(steady.healthy, s"first steady cycle failed: ${steady.lastError}")
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // a later window: new bounds, the same generated code
+    steady.collectOnce(spark, nowNs = lastTs + 1 + 5 * Period.Minute)
+    assert(steady.healthy, s"second steady cycle failed: ${steady.lastError}")
+    assert(steady.lastMerge.recut.isEmpty, steady.lastMerge)
+    val more = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
+    assert(more == 0, s"the second steady cycle compiled $more classes")
   }
 
   test("a second open of a table runs no job; a table rewritten in place is inferred again") {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.spark.sql.functions.col
 
 import graft.ts.{MergeResult, SeriesStore}
 import graft.ts.model.Period
@@ -240,7 +241,11 @@ class SeriesStoreSpec extends SparkSpec {
 
   /** Hourly points of the spec's series over hours [from, until). */
   private def hourly(from: Int, until: Int, v: Int => Double = _.toDouble) =
-    (from until until).map(h => (id, h * H, v(h))).toDF("series_id", "ts", "value")
+    hourlyOf(Seq(id), from, until, v)
+
+  /** Hourly points of `ids` over hours [from, until). */
+  private def hourlyOf(ids: Seq[String], from: Int, until: Int, v: Int => Double) =
+    ids.flatMap(i => (from until until).map(h => (i, h * H, v(h)))).toDF("series_id", "ts", "value")
 
   /** Each segment of the series' bucket: its data files' (name, length, mtime). */
   private def segmentsOf(warehouse: String, store: SeriesStore): Map[String, Set[(String, Long, Long)]] =
@@ -403,6 +408,114 @@ class SeriesStoreSpec extends SparkSpec {
     // and a second merge (re-acquiring a fresh lock) still works
     store.merge("c", series(Seq(2.0), t0 = 1))
     assert(store.read("c").count() == 2)
+  }
+
+  /** A second series of the spec, in the other of two buckets. */
+  private def otherId(store: SeriesStore): String =
+    Iterator.from(0).map(i => s"shyft://test/other-$i").find(store.bucketOf(_) != store.bucketOf(id)).get
+
+  /** Every file under the warehouse: (path, length, mtime). */
+  private def filesOf(warehouse: String): Set[(String, Long, Long)] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    walk(new java.io.File(warehouse)).map(f => (f.getPath, f.length, f.lastModified)).toSet
+  }
+
+  private def rowsIn(store: SeriesStore, c: String): Seq[(String, Long, Double)] =
+    store.read(c).collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+
+  test("a declared merge leaves the rows a probed merge leaves") {
+    val probed = new SeriesStore(spark, tmpDir("graft-probed"), numBuckets = 2)
+    val declaredWh = tmpDir("graft-declared")
+    val declared = new SeriesStore(spark, declaredWh, numBuckets = 2)
+    val ids = Seq(id, otherId(declared))
+    Seq(probed, declared).foreach(_.merge("c", hourlyOf(ids, 0, 72, _.toDouble)))
+    val within = (from: Int, until: Int) => SeriesStore.Within(ids, Period(from * H, until * H))
+    // a steady window over both series' tails, overlapping them (last wins)
+    // and extending them
+    val steady = hourlyOf(ids, 70, 74, _ + 100.0)
+    val p = probed.merge("c", steady)
+    assert(declared.merge("c", steady, within(70, 74)) == p)
+    assert(p.tailOnly.size == 2 && rowsIn(declared, "c") == rowsIn(probed, "c"))
+    // a window in which one declared series has no rows: both tails are
+    // rewritten, the rows are the probed merge's
+    val one = hourlyOf(ids.take(1), 74, 76, _ + 200.0)
+    probed.merge("c", one)
+    val d = declared.merge("c", one, within(74, 76))
+    assert(d.points == 2 && d.tailOnly.size == 2 && d.recut.isEmpty, d)
+    assert(rowsIn(declared, "c") == rowsIn(probed, "c"))
+    // an empty window: nothing is swapped, into an existing container or a
+    // missing one
+    val before = filesOf(declaredWh)
+    val empty = hourlyOf(ids, 76, 76, _.toDouble)
+    assert(declared.merge("c", empty, within(76, 78)) == MergeResult.empty)
+    assert(filesOf(declaredWh) == before && rowsIn(declared, "c") == rowsIn(probed, "c"))
+    assert(declared.merge("new", empty, within(76, 78)) == MergeResult.empty)
+    assert(!declared.exists("new"), "an empty batch must not create its container")
+  }
+
+  test("rows outside a declaration fail the merge by name and leave the container untouched") {
+    val warehouse = tmpDir("graft-undeclared")
+    val store = new SeriesStore(spark, warehouse, numBuckets = 2)
+    val other = otherId(store)
+    store.merge("c", hourlyOf(Seq(id, other), 0, 72, _.toDouble))
+    val before = filesOf(warehouse)
+    val within = SeriesStore.Within(Seq(id), Period(70 * H, 74 * H))
+    def fails(batch: org.apache.spark.sql.DataFrame, container: String) = {
+      val e = intercept[SeriesStore.UndeclaredRows](store.merge(container, batch, within))
+      assert(e.getMessage.contains(store.containerPath(container)) &&
+        e.getMessage.contains(s"[${70 * H}, ${74 * H})"), e.getMessage)
+    }
+    // a ts outside the window, into the declared (settled) tail
+    fails(hourlyOf(Seq(id), 73, 75, _.toDouble), "c")
+    // a series the batch did not declare, inside the window
+    fails(hourlyOf(Seq(id, other), 72, 74, _.toDouble), "c")
+    assert(filesOf(warehouse) == before)
+    assert(rowsIn(store, "c").size == 144)
+    // a declaration that cannot settle the plan checks its rows all the same
+    fails(hourlyOf(Seq(id), 73, 75, _.toDouble), "new")
+    assert(!store.exists("new"))
+  }
+
+  test("a declared merge the declaration cannot settle reads its source once") {
+    val store = new SeriesStore(spark, tmpDir("graft-unsettled"), numBuckets = 2)
+    store.merge("c", hourly(0, 72))
+    val reads = spark.sparkContext.longAccumulator("source rows")
+    def counted(from: Int, until: Int) = {
+      val a = reads // local so the udf closure captures only the accumulator
+      val f = org.apache.spark.sql.functions.udf { (v: Double) => a.add(1L); v }
+      hourly(from, until).withColumn("value", f(col("value")))
+    }
+    // a new container, and a window before the bucket's cut: both probed
+    val fresh = store.merge("new", counted(0, 72), SeriesStore.Within(Seq(id), Period(0L, 72 * H)))
+    assert(fresh.points == 72 && reads.value == 72L, s"read ${reads.value} rows for 72")
+    reads.reset()
+    val late = store.merge("c", counted(10, 12), SeriesStore.Within(Seq(id), Period(10 * H, 12 * H)))
+    assert(late == MergeResult(2L, Nil, Seq(store.bucketOf(id))))
+    assert(reads.value == 2L, s"read ${reads.value} rows for 2")
+    assert(hoursOf(store) == (0 until 72).map(h => h.toLong -> h.toDouble))
+  }
+
+  test("a container from before segments fails merge and read by name, every file in place") {
+    val warehouse = tmpDir("graft-presegment")
+    val store = new SeriesStore(spark, warehouse, numBuckets = 2)
+    val other = otherId(store)
+    // one bucket in today's layout, the other with its files directly under
+    // bucket=N, as a merge before segments wrote it
+    store.merge("c", hourlyOf(Seq(other), 0, 4, _.toDouble))
+    hourlyOf(Seq(id), 0, 4, _.toDouble).coalesce(1).write
+      .parquet(s"$warehouse/c/bucket=${store.bucketOf(id)}")
+    val before = filesOf(warehouse)
+    def named(body: => Any) = {
+      val e = intercept[SeriesStore.PreSegmentContainer](body)
+      assert(e.getMessage.contains(store.containerPath("c")) &&
+        e.getMessage.contains("delete it and merge again"), e.getMessage)
+    }
+    named(store.merge("c", hourly(4, 6)))
+    named(store.merge("c", hourly(4, 6), SeriesStore.Within(Seq(id), Period(4 * H, 6 * H))))
+    named(store.read("c"))
+    named(store.read("c", Seq(id), Period(0L, 6 * H)))
+    assert(filesOf(warehouse) == before)
   }
 }
 

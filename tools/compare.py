@@ -2,19 +2,85 @@
 """Local stand-in for the driver's DuckDB-oracle correctness gate.
 
 Usage: python3 tools/compare.py <verify_out_dir> <sf_dir>
+       python3 tools/compare.py --bitwise <dumpA> <dumpB> [row ...]
 
 Reads <verify_out_dir>/<name>/ parquet (written by graft.Verify) and
 <verify_out_dir>/oracle_sql.json, runs each oracle SQL in DuckDB with the
 sf tables registered as views, and compares: row count, column names,
 and a hash over values with columns sorted by name and rows sorted by all
 columns (the driver's documented compare sorts columns by name).
+
+--bitwise compares the named rows (default: every row of either dump) of
+two graft.Verify dumps with each other, not with an oracle: the same
+columns (names and types, in order), and the same multiset of rows, with
+floating-point values equal by their IEEE bits (so -0.0 != 0.0, and NaNs
+match only with the same payload). It prints one line per row and exits 1
+on any difference.
 """
-import sys, os, json, glob
+import sys, os, json, glob, struct
+from collections import Counter
 import duckdb
 import pandas as pd
 import numpy as np
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+
+def bits_key(v):
+    """A hashable form of one cell in which floats are their IEEE bits."""
+    if isinstance(v, float):
+        return ("f", struct.unpack("<q", struct.pack("<d", v))[0])
+    if isinstance(v, list):
+        return ("l", tuple(bits_key(x) for x in v))
+    if isinstance(v, dict):
+        return ("d", tuple((k, bits_key(x)) for k, x in v.items()))
+    if isinstance(v, tuple):
+        return ("t", tuple(bits_key(x) for x in v))
+    return ("v", v)
+
+def read_dump_row(dump, name):
+    """One row's parquet files of a graft.Verify dump as a pyarrow table,
+    or None when the dump has no such row."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    d = os.path.join(dump, name)
+    if not os.path.isdir(d):
+        return None
+    files = sorted(glob.glob(f"{d}/*.parquet"))
+    tables = [pq.read_table(f) for f in files]
+    if not tables:
+        return pa.table({})
+    return pa.concat_tables(tables, promote_options="none")
+
+def bitwise(dump_a, dump_b, rows):
+    if not rows:
+        rows = sorted({n for d in (dump_a, dump_b) for n in os.listdir(d)
+                       if os.path.isdir(os.path.join(d, n))})
+    bad = 0
+    for name in rows:
+        a, b = read_dump_row(dump_a, name), read_dump_row(dump_b, name)
+        if a is None or b is None:
+            status = f"missing from {dump_a if a is None else dump_b}"
+        else:
+            cols_a = [(f.name, str(f.type)) for f in a.schema]
+            cols_b = [(f.name, str(f.type)) for f in b.schema]
+            if cols_a != cols_b:
+                status = f"columns differ: {cols_a} vs {cols_b}"
+            else:
+                ka = Counter(tuple(bits_key(r[c]) for c, _ in cols_a) for r in a.to_pylist())
+                kb = Counter(tuple(bits_key(r[c]) for c, _ in cols_b) for r in b.to_pylist())
+                if ka == kb:
+                    status = None
+                else:
+                    only_a, only_b = ka - kb, kb - ka
+                    status = (f"rows differ: {sum(only_a.values())} only in A, "
+                              f"{sum(only_b.values())} only in B (of {a.num_rows} and {b.num_rows})")
+        if status is None:
+            print(f"SAME {name}: {a.num_rows} rows")
+        else:
+            bad += 1
+            print(f"DIFF {name}: {status}")
+    print(f"\n{len(rows) - bad}/{len(rows)} bit-identical")
+    return 1 if bad else 0
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df[sorted(df.columns)]
@@ -194,4 +260,6 @@ def main(out_dir, sf_dir):
     return 0 if ok == len(results) else 1
 
 if __name__ == "__main__":
+    if len(sys.argv) >= 4 and sys.argv[1] == "--bitwise":
+        sys.exit(bitwise(sys.argv[2], sys.argv[3], sys.argv[4:]))
     sys.exit(main(sys.argv[1], sys.argv[2]))
