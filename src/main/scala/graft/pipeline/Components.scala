@@ -313,20 +313,27 @@ object Components {
           .otherwise(lit(0.0)))
   }
 
-  /** Both orientations of every edge, deduplicated and materialized once:
-    * the incoming `edges` plan can be arbitrarily expensive (the near-dup
-    * graph is a whole LSH pipeline), and every round reads the result. One
-    * explode, not a self-union — a union references the upstream plan
-    * twice and executes it twice (cross-branch reuse never fires on
-    * differing projections), the same fix as [[degreeDistribution]].
+  /** Both orientations of every edge, deduplicated and materialized once,
+    * with their count: the incoming `edges` plan can be arbitrarily
+    * expensive (the near-dup graph is a whole LSH pipeline), and every
+    * round reads the result. One explode, not a self-union — a union
+    * references the upstream plan twice and executes it twice
+    * (cross-branch reuse never fires on differing projections), the same
+    * fix as [[degreeDistribution]]. The count is observed on the
+    * materializing job itself, so it costs no job of its own.
     */
-  private[graft] def symmetrize(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
-    graft.core.Lineage.truncate(
+  private[graft] def symmetrize(edges: DataFrame, srcCol: String,
+      dstCol: String): (DataFrame, Long) = {
+    val observed = org.apache.spark.sql.Observation()
+    val sym = graft.core.Lineage.truncate(
       edges.select(explode(array(
           struct(col(srcCol).as("src"), col(dstCol).as("dst")),
           struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("e"))
         .select(col("e.src"), col("e.dst"))
-        .distinct())
+        .distinct()
+        .observe(observed, count(lit(1)).as("edges")))
+    (sym, observed.get("edges").asInstanceOf[Long])
+  }
 
   /** PageRank over an undirected edge list (symmetrized, deduplicated):
     * `iters` rounds of `r = (1−d)/N + d·Σ r_nbr/deg_nbr` over the nodes
@@ -353,8 +360,8 @@ object Components {
       srcCol: String = "id_a", dstCol: String = "id_b"): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
-    val sym = symmetrize(edges, srcCol, dstCol)
-    if (sym.count() <= SmallEdgeBound) pageRankOneTask(sym, iters, damping)
+    val (sym, symEdges) = symmetrize(edges, srcCol, dstCol)
+    if (symEdges <= SmallEdgeBound) pageRankOneTask(sym, iters, damping)
     else pageRankRounds(sym, iters, damping)
   }
 
@@ -442,7 +449,7 @@ object Components {
       srcCol: String = "id_a", dstCol: String = "id_b",
       idCol: String = "doc_id", labelCol: String = "label"): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val sym = symmetrize(edges, srcCol, dstCol)
+    val (sym, _) = symmetrize(edges, srcCol, dstCol)
     val nodes = sym.select(col("src").as("id")).distinct()
     val seed = graft.core.Lineage.truncate(
       seeds.select(col(idCol).as("id"), col(labelCol).as("seed_label")))

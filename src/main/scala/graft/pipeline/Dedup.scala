@@ -97,9 +97,6 @@ object Dedup {
   def minhashSignature(text: Column, shingleK: Int, numHashes: Int): Column =
     graft.functions.Signatures.minhashSig(text, shingleK, numHashes)
 
-  /** LSH banding: split the signature into `bands` bands of `rowsPerBand`
-    * and hash each band; docs sharing any (band, band_hash) are candidates.
-    */
   /** Spread rows across the cluster before a heavy per-row kernel: a small
     * or single-row-group input file arrives as ONE non-empty scan partition,
     * which would serialize the signature computation no matter how many
@@ -127,9 +124,20 @@ object Dedup {
           PolyHash(array_join(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand))
             .cast("array<string>"), ","), b.cast("long")).as("band_hash"))))
 
+  /** LSH banding: split the signature into `bands` bands of `rowsPerBand`
+    * and hash each band; docs sharing any (band, band_hash) are candidates.
+    * One row per (doc, band) of every doc with at least `shingleK` tokens.
+    */
   def lshBuckets(df: DataFrame, idCol: String, textCol: String,
-      shingleK: Int = 3, bands: Int = 8, rowsPerBand: Int = 4): DataFrame = {
-    val numHashes = bands * rowsPerBand
+      shingleK: Int = 3, bands: Int = 8, rowsPerBand: Int = 4): DataFrame =
+    bucketsOf(spreadById(df.select(col(idCol), col(textCol)), idCol), idCol,
+      textCol, shingleK, bands, rowsPerBand)
+
+  /** [[lshBuckets]] over a table [[spreadById]] has already spread. Only the
+    * id leaves this projection: the text never rides the band explode.
+    */
+  private def bucketsOf(spread: DataFrame, idCol: String, textCol: String,
+      shingleK: Int, bands: Int, rowsPerBand: Int): DataFrame =
     // The null-signature drop (< k tokens) happens on band_hash AFTER the
     // explode, NOT as .where(sig.isNotNull) on the signature itself: that
     // filter was pushed through the project into the file scan, where it
@@ -140,22 +148,16 @@ object Dedup {
     // filter references the generator's output, so it cannot be pushed
     // below the explode, and CollapseProject leaves the kernel in its own
     // projection (verified: one minhashsig eval per row in the final plan).
-    spreadById(df.select(col(idCol), col(textCol)), idCol)
+    spread
       .select(col(idCol),
-        minhashSignature(col(textCol), shingleK, numHashes).as("sig"))
+        minhashSignature(col(textCol), shingleK, bands * rowsPerBand).as("sig"))
       .select(col(idCol), bandExplode(col("sig"), bands, rowsPerBand).as("bb"))
       .select(col(idCol), col("bb.band").as("band"), col("bb.band_hash").as("band_hash"))
       .where(col("band_hash").isNotNull)
-  }
 
-  /** Candidate pairs from LSH buckets (a < b), deduplicated across bands. */
-  def lshCandidates(df: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-      shingleK: Int = 3, bands: Int = 8, rowsPerBand: Int = 4): DataFrame =
-    candidatesFromBuckets(lshBuckets(df, idCol, textCol, shingleK, bands,
-      rowsPerBand), idCol)
-
-  /** The bucket self-join of [[lshCandidates]] over an ALREADY-built (e.g.
-    * materialized) bucket index — so a caller holding the index (the
+  /** Candidate pairs (a < b) from a bucket index: the ids sharing a
+    * (band, band_hash) bucket, deduplicated across bands. The index may be
+    * already built (e.g. materialized), so a caller holding it (the
     * incremental-dedup bootstrap) does not re-run the signature kernel
     * just to enumerate pairs.
     */
@@ -167,41 +169,68 @@ object Dedup {
       .select("id_a", "id_b").distinct()
   }
 
-  /** [[minhashNearDups]]' verified pairs over an already-built bucket
-    * index: identical output (the index IS [[lshBuckets]]' rows — same
-    * candidates, same exact-Jaccard gate), minus one full signature pass.
-    */
-  private[graft] def nearDupsFromBuckets(df: DataFrame, buckets: DataFrame,
-      idCol: String, textCol: String, shingleK: Int,
-      threshold: Double): DataFrame = {
-    val cands = candidatesFromBuckets(buckets, idCol)
-    candidateShingleSets(df, cands, idCol, textCol, shingleK)
-      .withColumn("jaccard",
-        graft.functions.Signatures.sortedJaccard(col("sh_a"), col("sh_b")))
-      .where(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-  }
-
   /** Verified near-dups: LSH candidates with exact shingle-set Jaccard ≥
     * threshold. The expensive exact check touches only colliding pairs.
+    *
+    * Plan shape: one [[spreadById]] table feeds both ends. Its ids go
+    * through the signature kernel and the band self-join to the distinct
+    * candidate pairs, and its texts come back to those pairs through two
+    * id joins ([[jaccardPairs]]). The candidate subplan appears once. The
+    * spread table is hash-partitioned by id, so a shuffled pair join reads
+    * it where it lies and shuffles only the pairs; a table small enough to
+    * broadcast is broadcast once for both sides.
     */
   def minhashNearDups(df: DataFrame, idCol: String = "doc_id", textCol: String = "text",
       shingleK: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
       threshold: Double = 0.5): DataFrame = {
-    // The plan references the candidate set twice (pair join + the semi-join
-    // below). Measured at sf0.1 (twice, rounds 3 and 4): the duplicated LSH
-    // subplan is NOT the bottleneck (executors sit idle; the cost is
-    // per-stage planning/codegen, which amortizes at scale), and
-    // persist(MEMORY_AND_DISK) on the candidates is ~10% SLOWER end-to-end
-    // (6.5 s -> 7.0-7.3 s isolated) — materialization cost exceeds the
-    // reuse win — so keep the plain declarative plan.
-    val cands = lshCandidates(df, idCol, textCol, shingleK, bands, rowsPerBand)
-    candidateShingleSets(df, cands, idCol, textCol, shingleK)
+    val texts = spreadById(df.select(col(idCol), col(textCol)), idCol)
+    val cands = candidatesFromBuckets(
+      bucketsOf(texts, idCol, textCol, shingleK, bands, rowsPerBand), idCol)
+    jaccardPairs(texts, texts, cands, idCol, textCol, shingleK, threshold)
+  }
+
+  /** The candidate pairs `cands` (id_a, id_b) whose exact shingle-set
+    * Jaccard reaches `threshold`, id_a's text read from `textsA` and id_b's
+    * from `textsB`: (id_a, id_b, jaccard). The exact-Jaccard gate of every
+    * minhash path ([[minhashNearDups]], [[minhashJoin]], the
+    * incremental-dedup bootstrap and its batches).
+    */
+  private[graft] def jaccardPairs(textsA: DataFrame, textsB: DataFrame,
+      cands: DataFrame, idCol: String, textCol: String, shingleK: Int,
+      threshold: Double): DataFrame =
+    pairShingleSets(textsA, textsB, cands, idCol, textCol, shingleK)
       .withColumn("jaccard",
         graft.functions.Signatures.sortedJaccard(col("sh_a"), col("sh_b")))
       .where(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
-  }
+
+  /** Candidate pairs with each side's SORTED distinct shingle set attached
+    * (`sh_a`/`sh_b`) — the shared tail of every LSH-candidate scorer
+    * ([[jaccardPairs]], [[containmentDups]]). Each pair joins id_a's text
+    * from `textsA` and id_b's from `textsB` by id, and the shingle kernel
+    * runs once per pair side: never over a document that is in no
+    * candidate pair. The arrays stay sorted so merge-walk kernels like
+    * [[graft.functions.SortedArrayJaccard]] score without per-pair hash
+    * sets.
+    */
+  private def pairShingleSets(textsA: DataFrame, textsB: DataFrame,
+      cands: DataFrame, idCol: String, textCol: String,
+      shingleK: Int): DataFrame =
+    cands
+      .join(textsA.select(col(idCol).as("id_a"), col(textCol).as("__text_a")), "id_a")
+      .join(textsB.select(col(idCol).as("id_b"), col(textCol).as("__text_b")), "id_b")
+      // The sets come out of a one-row generator, not a plain projection:
+      // a caller's score filter over a projection is pushed into the second
+      // join's condition, where it evaluates the shingle kernel once more
+      // per pair than the projection above it does. A filter that reads a
+      // generator's output stays above the generator.
+      .select(col("id_a"), col("id_b"), inline(array(struct(
+        TextOps.textShingleSortedSet(col("__text_a"), shingleK).as("sh_a"),
+        TextOps.textShingleSortedSet(col("__text_b"), shingleK).as("sh_b")))))
+      // a side with no shingles (null, blank or shorter than shingleK
+      // tokens: another row under a candidate's id) has no set to score;
+      // two empty sets would score 0/0 = NaN, which passes `>= threshold`
+      .where(size(col("sh_a")) > 0 && size(col("sh_b")) > 0)
 
   /** Cross-corpus near-duplicate join: fuzzy pairs BETWEEN two relations —
     * the doc-level contamination check (a training corpus probed against an
@@ -211,9 +240,8 @@ object Dedup {
     * itself leaked. Same banded LSH as [[minhashNearDups]], but each side
     * keeps its own id space: buckets from `left` join buckets from `right`
     * (no `a < b` dedup — the relations are distinct), and the exact
-    * shingle-Jaccard verify touches only colliding pairs, with each side's
-    * shingle set materialized from its OWN relation via a candidate
-    * semi-join.
+    * shingle-Jaccard verify touches only colliding pairs, each pair side
+    * reading its text from its OWN relation ([[jaccardPairs]]).
     *
     * Scale shape: identical to the self-join path — the band-keyed equi-join
     * is the only corpus-scale shuffle and its volume is Σ cnt_l(bucket) ·
@@ -224,48 +252,15 @@ object Dedup {
       idCol: String = "doc_id", textCol: String = "text",
       shingleK: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
       threshold: Double = 0.5): DataFrame = {
-    val bl = lshBuckets(left, idCol, textCol, shingleK, bands, rowsPerBand)
+    val textsL = spreadById(left.select(col(idCol), col(textCol)), idCol)
+    val textsR = spreadById(right.select(col(idCol), col(textCol)), idCol)
+    val bl = bucketsOf(textsL, idCol, textCol, shingleK, bands, rowsPerBand)
       .select(col("band"), col("band_hash"), col(idCol).as("id_a"))
-    val br = lshBuckets(right, idCol, textCol, shingleK, bands, rowsPerBand)
+    val br = bucketsOf(textsR, idCol, textCol, shingleK, bands, rowsPerBand)
       .select(col("band"), col("band_hash"), col(idCol).as("id_b"))
     val cands = bl.join(br, Seq("band", "band_hash"))
       .select("id_a", "id_b").distinct()
-    def sideSets(df: DataFrame, ids: DataFrame, idAs: String, shAs: String) =
-      df.select(col(idCol), col(textCol))
-        .join(ids, Seq(idCol), "left_semi")
-        .select(col(idCol).as(idAs),
-          TextOps.textShingleSortedSet(col(textCol), shingleK).as(shAs))
-    val setsL = sideSets(left, cands.select(col("id_a").as(idCol)).distinct(),
-      "id_a", "sh_a")
-    val setsR = sideSets(right, cands.select(col("id_b").as(idCol)).distinct(),
-      "id_b", "sh_b")
-    cands.join(setsL, "id_a").join(setsR, "id_b")
-      .withColumn("jaccard",
-        graft.functions.Signatures.sortedJaccard(col("sh_a"), col("sh_b")))
-      .where(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-  }
-
-  /** Candidate pairs with each side's SORTED distinct shingle set attached
-    * (`sh_a`/`sh_b`) — the shared tail of every LSH-candidate scorer
-    * ([[minhashNearDups]], [[containmentDups]]). Shingle sets materialize
-    * ONLY for docs appearing in a candidate pair (a vanishing fraction of
-    * the corpus): the semi-join runs FIRST (candIds is tiny → broadcast
-    * semi at the scan, no full-text shuffle), and the arrays stay sorted
-    * so merge-walk kernels like [[graft.functions.SortedArrayJaccard]] can
-    * score without per-pair hash sets.
-    */
-  private[pipeline] def candidateShingleSets(df: DataFrame, cands: DataFrame,
-      idCol: String, textCol: String, shingleK: Int): DataFrame = {
-    val candIds = cands.select(col("id_a").as(idCol))
-      .unionByName(cands.select(col("id_b").as(idCol))).distinct()
-    val sets = df.select(col(idCol), col(textCol))
-      .join(candIds, Seq(idCol), "left_semi")
-      .select(col(idCol),
-        TextOps.textShingleSortedSet(col(textCol), shingleK).as("sh"))
-    cands
-      .join(sets.select(col(idCol).as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sets.select(col(idCol).as("id_b"), col("sh").as("sh_b")), "id_b")
+    jaccardPairs(textsL, textsR, cands, idCol, textCol, shingleK, threshold)
   }
 
   /** Measured precision/recall of the MinHash-LSH dedup against brute-force
@@ -346,15 +341,17 @@ object Dedup {
     * Jaccard ⪆ t/(2−t) at banding threshold t); full asymmetric-containment
     * search is [[containmentJoin]]'s prefix-filtered exact index.
     *
-    * Scale shape: identical to [[minhashNearDups]] — band equi-join for
-    * candidates, semi-join before shingle materialization, per-pair work
-    * O(|A|+|B|).
+    * Scale shape: identical to [[minhashNearDups]] — one spread table,
+    * band equi-join for candidates, the pairs joined to their texts by id,
+    * per-pair work O(|A|+|B|).
     */
   def containmentDups(df: DataFrame, idCol: String = "doc_id", textCol: String = "text",
       shingleK: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
       threshold: Double = 0.8): DataFrame = {
-    val cands = lshCandidates(df, idCol, textCol, shingleK, bands, rowsPerBand)
-    candidateShingleSets(df, cands, idCol, textCol, shingleK)
+    val texts = spreadById(df.select(col(idCol), col(textCol)), idCol)
+    val cands = candidatesFromBuckets(
+      bucketsOf(texts, idCol, textCol, shingleK, bands, rowsPerBand), idCol)
+    pairShingleSets(texts, texts, cands, idCol, textCol, shingleK)
       .withColumn("__inter", size(array_intersect(col("sh_a"), col("sh_b"))))
       .withColumn("containment",
         col("__inter").cast("double") / least(size(col("sh_a")), size(col("sh_b"))))

@@ -60,15 +60,16 @@ object IncrementalDedup {
     // the bootstrap corpus instead of twice
     val labels = graft.core.Lineage.truncate(
       Components.clustersFromPairs(
-        Dedup.nearDupsFromBuckets(docs, buckets, "doc_id", "text", shingleK,
-          threshold), "id_a", "id_b").select("doc_id", "cluster_id"))
+        Dedup.jaccardPairs(docs, docs, Dedup.candidatesFromBuckets(buckets,
+          "doc_id"), "doc_id", "text", shingleK, threshold), "id_a", "id_b")
+        .select("doc_id", "cluster_id"))
     DedupState(docs, buckets, labels, shingleK, bands, rowsPerBand, threshold)
   }
 
   /** Ingest one batch of new documents (ids must be fresh). Returns the
     * updated state; cost is batch-scale — the only contact with the old
-    * corpus is the bucket equi-join and the by-id shingle fetch for
-    * verified candidates.
+    * corpus is the bucket equi-join and the by-id text fetch for
+    * candidate pairs.
     */
   def addBatch(state: DedupState, newDocs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): DedupState = {
@@ -88,20 +89,16 @@ object IncrementalDedup {
       .select("id_a", "id_b")
     val cands = newOld.unionByName(newNew).distinct()
 
-    // exact-Jaccard verification, same gate as the full pipeline; shingle
-    // sets materialize only for docs in a candidate pair (by-id semi-join
-    // against the union corpus)
+    // exact-Jaccard verification, same gate as the full pipeline; each
+    // candidate pair joins its two texts by id from the union corpus
     val union = state.docs.unionByName(nd)
     // lazy truncation: `edges` has exactly ONE consumer (the contracted
     // edge list e2, itself eagerly checkpointed just below), so an eager
     // checkpoint here only added a full scheduling barrier per batch —
     // the verify join still runs once, inside e2's materialization
     val edges = graft.core.Lineage.truncate(
-      Dedup.candidateShingleSets(union, cands, "doc_id", "text", state.shingleK)
-        .withColumn("jaccard",
-          graft.functions.Signatures.sortedJaccard(col("sh_a"), col("sh_b")))
-        .where(col("jaccard") >= state.threshold)
-        .select("id_a", "id_b"), eager = false)
+      Dedup.jaccardPairs(union, union, cands, "doc_id", "text", state.shingleK,
+        state.threshold).select("id_a", "id_b"), eager = false)
 
     // contract old endpoints to their cluster label (an unclustered old doc
     // is its own label node); new endpoints stay themselves. Old↔old edges

@@ -52,19 +52,6 @@ object Identifiers {
     concat(lit(s"shyft://$container/"), cleanName(station), lit("/"),
       cleanName(module), lit("/"), cleanName(dataType))
 
-  /** Parse a netatmo:// id back into its parameter struct (identifiers.py:46-56). */
-  def parseNetatmoId(url: Column): Column = struct(
-    queryParam(url, "station_name").as("station_name"),
-    queryParam(url, "module_name").as("module_name"),
-    queryParam(url, "data_type").as("data_type")
-  )
-
-  /** shyft://container/path → (container, path). */
-  def storeContainer(url: Column): Column =
-    regexp_extract(url, "^shyft://([^/]+)/", 1)
-  def storePath(url: Column): Column =
-    regexp_extract(url, "^shyft://[^/]+/(.*)$", 1)
-
   // Driver-side (plain String) variants for source routing of small id lists.
   private val SchemeRe = "^([A-Za-z][A-Za-z0-9+.-]*)://(.*)$".r
 

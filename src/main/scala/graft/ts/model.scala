@@ -35,7 +35,6 @@ object model {
     */
   final case class Period(startNs: Long, endNs: Long) {
     require(startNs <= endNs, s"bad period [$startNs, $endNs)")
-    def containsNs(t: Long): Boolean = t >= startNs && t < endNs
   }
 
   object Period {

@@ -253,7 +253,8 @@ class ComponentsSpec extends SparkSpec {
       val expect = brutePageRank(edges, 4)
       val expectDeg = (edges ++ edges.map(_.swap)).distinct.groupBy(_._1)
         .view.mapValues(_.size.toLong).toMap
-      val sym = Components.symmetrize(edges.toDF("id_a", "id_b"), "id_a", "id_b")
+      val (sym, symEdges) = Components.symmetrize(edges.toDF("id_a", "id_b"), "id_a", "id_b")
+      assert(symEdges == (edges ++ edges.map(_.swap)).distinct.size, s"trial $trial")
       val oneTask = Components.pageRankOneTask(sym, 4, 0.85)
       val rounds = Components.pageRankRounds(sym, 4, 0.85)
       assert(oneTask.schema == rounds.schema, s"trial $trial")

@@ -147,6 +147,70 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("minhash and containment pairs equal a brute-force verify of every LSH-colliding pair on messy input") {
+    val base = "the quick brown fox jumps over the lazy dog and then runs far away " +
+      "home to the quiet green valley where the old river meets the sea"
+    val other = "catalyst optimizes logical plans into physical plans with pushdown " +
+      "pruning and constant folding before whole stage code generation runs"
+    def edit(t: String, at: Int, word: String) = {
+      val w = t.split(" "); w(at) = word; w.mkString(" ")
+    }
+    val d = Seq[(Long, String)](
+      (1L, base), (1L, ""),                       // duplicate id: one empty row
+      (2L, edit(base, 5, "leaps")), (2L, null),   // duplicate id: one null row
+      (3L, base), (3L, "  "),                     // identical to 1's text; a blank row
+      (4L, base.split(" ").take(22).mkString(" ")), // a prefix of base
+      (5L, other), (5L, "too short"),             // duplicate id: fewer than k tokens
+      (6L, edit(edit(other, 3, "plans"), 9, "and")),
+      (7L, ""), (8L, null), (9L, "two words"),
+      (10L, "too short"), (11L, "too short")      // identical, fewer than k tokens
+    ).toDF("doc_id", "text")
+    val k = 3
+    def shingles(t: String): Set[String] =
+      if (t == null) Set.empty
+      else {
+        val toks = t.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty).toSeq
+        if (toks.size < k) Set.empty else toks.sliding(k).map(_.mkString(" ")).toSet
+      }
+    // every id pair sharing a (band, band_hash) bucket, brute force
+    val colliding = Dedup.lshBuckets(d, "doc_id", "text").collect()
+      .groupBy(r => (r.getAs[Int]("band"), r.getAs[Long]("band_hash")))
+      .values.flatMap { rs =>
+        val ids = rs.map(_.getAs[Long]("doc_id")).distinct.toSeq
+        for (a <- ids; b <- ids if a < b) yield (a, b)
+      }.toSet
+    val texts = d.collect().toSeq.map(r => (r.getLong(0), r.getString(1)))
+    // every row of id a against every row of id b; a side with no shingles
+    // (null, empty or shorter than k tokens) has no Jaccard to score
+    val sidePairs = for {
+      (a, b) <- colliding.toSeq
+      (ia, ta) <- texts if ia == a
+      (ib, tb) <- texts if ib == b
+      sa = shingles(ta); sb = shingles(tb) if sa.nonEmpty && sb.nonEmpty
+    } yield (a, b, sa, sb)
+    val inter = (sa: Set[String], sb: Set[String]) => (sa & sb).size.toDouble
+    val jaccardRef = sidePairs.collect {
+      case (a, b, sa, sb) if inter(sa, sb) / (sa | sb).size >= 0.5 =>
+        (a, b, inter(sa, sb) / (sa | sb).size)
+    }.sorted
+    val containmentRef = sidePairs.collect {
+      case (a, b, sa, sb) if inter(sa, sb) / math.min(sa.size, sb.size) >= 0.8 =>
+        val contained = if (sa.size < sb.size) a else if (sb.size < sa.size) b else math.min(a, b)
+        (a, b, inter(sa, sb) / math.min(sa.size, sb.size),
+          inter(sa, sb) / (sa | sb).size, contained)
+    }.sorted
+    assert(jaccardRef.exists(_._3 < 1.0) && jaccardRef.exists(_._3 == 1.0), jaccardRef)
+    assert(containmentRef.exists(c => c._3 == 1.0 && c._4 < 1.0), containmentRef)
+
+    val gotJaccard = Dedup.minhashNearDups(d).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+    assert(gotJaccard == jaccardRef)
+    val gotContainment = Dedup.containmentDups(d).collect()
+      .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"), r.getAs[Double]("containment"),
+        r.getAs[Double]("jaccard"), r.getAs[Long]("contained_id"))).toSeq.sorted
+    assert(gotContainment == containmentRef)
+  }
+
   test("minhash near-dups on the corpus all have true Jaccard >= threshold") {
     val pairs = Dedup.minhashNearDups(docs).collect()
     assert(pairs.nonEmpty, "corpus should contain at least one near-dup pair")
@@ -310,7 +374,8 @@ class DedupSpec extends SparkSpec {
     // identical text → identical minhash signature → collide in every band
     val d = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"),
       (2L, "alpha beta gamma delta epsilon zeta eta theta")).toDF("doc_id", "text")
-    assert(Dedup.lshCandidates(d).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(Dedup.candidatesFromBuckets(Dedup.lshBuckets(d, "doc_id", "text"), "doc_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       == Seq((1L, 2L)))
   }
 }

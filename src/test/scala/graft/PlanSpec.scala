@@ -44,6 +44,15 @@ class PlanSpec extends SparkSpec {
   private def joins(plan: SparkPlan): Int =
     Aqe.collect(plan) { case j: BaseJoinExec => j }.size
 
+  /** Evaluations of the expression printed as `name` across a physical
+    * plan's operators, inside adaptive query stages too. A reused exchange
+    * is a leaf, so the subtree it reuses counts once.
+    */
+  private def evaluations(plan: SparkPlan, name: String): Int =
+    Aqe.collect(plan) { case p =>
+      p.expressions.map(_.collect { case e if e.prettyName == name => e }.size).sum
+    }.sum
+
   /** The Spark jobs `body` runs and the SQL executions it completes.
     * Listener events arrive asynchronously but in order, so a marker query
     * run after `body` closes the window.
@@ -576,6 +585,41 @@ class PlanSpec extends SparkSpec {
     assert(kernelSeen, "lint never saw a kernel line — pattern names are stale")
   }
 
+  test("the near-dup verify shingles each candidate side once and signs each document at most twice") {
+    // the candidate subplan appears once, so the signature kernel runs on
+    // the band self-join's two sides only; the shingle kernel runs once per
+    // pair side, and never inside a join condition, where a score filter
+    // pushed into the pair join would evaluate it a second time
+    val sf001 = s"${new java.io.File(sfDir).getParent}/sf0.01"
+    var checked = 0
+    for (q <- Seq("dedup_minhash", "dedup_containment", "dedup_cross", "dedup_clusters",
+        "dedup_incremental", "graph_pagerank")) {
+      val (_, plans) = observe(SparkEntry.queries(q)(spark, sf001).collect())
+      for (plan <- plans.map(_.executedPlan)) {
+        val inJoins = Aqe.collect(plan) { case j: BaseJoinExec =>
+          j.condition.toSeq.flatMap(_.collect { case e if e.prettyName == "shinglestrings" => e })
+        }.flatten
+        assert(inJoins.isEmpty, s"$q: shingle kernel in a join condition:\n$plan")
+        checked += evaluations(plan, "shinglestrings")
+      }
+      if (q == "dedup_minhash" || q == "dedup_containment") {
+        val plan = plans.last.executedPlan
+        assert(evaluations(plan, "minhashsig") <= 2, s"$q:\n$plan")
+        assert(evaluations(plan, "shinglestrings") == 2, s"$q:\n$plan")
+      }
+    }
+    assert(checked > 0, "lint never saw the shingle kernel — its name is stale")
+  }
+
+  test("dedup_minhash at sf0.01 builds with no job and runs at most 4") {
+    val sf001 = s"${new java.io.File(sfDir).getParent}/sf0.01"
+    Tables(spark, sf001).documents // the first open infers the schema with a job
+    var df: DataFrame = null
+    val (built, _) = observe { df = SparkEntry.queries("dedup_minhash")(spark, sf001) }
+    val (ran, _) = observe(df.collect())
+    assert(built == 0 && ran <= 4, s"dedup_minhash: $built jobs to build, $ran to run")
+  }
+
   test("prefix-sum operators never run a corpus-scale single-partition window") {
     // the sharded scan's contract: the only unpartitioned window is the
     // metadata-scale shard-prefix pass (one row per shard), so every
@@ -785,10 +829,13 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("graph_pagerank at sf0.01 builds with at most 12 jobs: a small graph ranks in one task") {
+  test("graph_pagerank at sf0.01 builds with at most 6 jobs") {
+    // the pair pipeline materialized once by the symmetric checkpoint,
+    // whose edge count is observed on that job; a small graph then ranks
+    // in one task
     val sf001 = s"${new java.io.File(sfDir).getParent}/sf0.01"
     val (jobs, _) = observe(SparkEntry.queries("graph_pagerank")(spark, sf001))
-    assert(jobs <= 12, s"graph_pagerank construction ran $jobs jobs")
+    assert(jobs <= 6, s"graph_pagerank construction ran $jobs jobs")
   }
 
   test("rpTopK broadcasts the query side everywhere: no cartesian pair scan") {
@@ -828,12 +875,17 @@ class PlanSpec extends SparkSpec {
   }
 
   test("minhashJoin: band-keyed equi-join only — no cartesian pair scan anywhere") {
-    val plan = planOf(SparkEntry.queries("dedup_cross")(spark, sfDir))
+    val physical = SparkEntry.queries("dedup_cross")(spark, sfDir).queryExecution.executedPlan
+    val plan = physical.toString
     assert(!plan.contains("CartesianProduct"),
       "cross-corpus near-dup join degenerated into an all-pairs scan")
-    // the two shingle-set attachments probe with the tiny candidate-id
-    // relation first (left_semi), never shuffling full text for non-candidates
-    assert(plan.contains("LeftSemi"), plan.take(3000))
+    // each side's text is shuffled by one exchange, the spread that feeds
+    // both its signatures and its pair join (referenced twice, reused at
+    // execution); no other exchange carries text
+    val textShuffles = shuffles(physical)
+      .filter(_.output.exists(_.dataType == org.apache.spark.sql.types.StringType))
+    assert(textShuffles.map(_.canonicalized).distinct.size == 2 && textShuffles.size <= 4,
+      plan.take(3000))
   }
 
   test("silhouette: the k-row codebook broadcasts; vectors shuffle once for the collect") {

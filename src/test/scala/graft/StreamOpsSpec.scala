@@ -145,6 +145,40 @@ class StreamOpsSpec extends SparkSpec {
     }
   }
 
+  test("watchdog holds the restart factory's failure and leaves no query running") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val in = MemoryStream[PointIn]
+    val starts = new java.util.concurrent.atomic.AtomicInteger(0)
+    val wd = new StreamOps.StreamWatchdog(spark, () => {
+      if (starts.incrementAndGet() > 1)
+        throw new IllegalArgumentException("checkpoint in use")
+      in.toDF().writeStream.queryName("wd_restart_failure").outputMode("append")
+        .foreachBatch { (_: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+          throw new RuntimeException("boom")
+        }
+        .start()
+    }, maxRestarts = 3)
+    val q = wd.startWatched()
+    try {
+      in.addData(PointIn("s", 0, 1.0))
+      intercept[Exception] { q.processAllAvailable() } // the first run crashes
+      val deadline = System.currentTimeMillis() + 30000
+      while (wd.restartFailure.isEmpty && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(wd.restartFailure.map(_.getMessage).contains("checkpoint in use"),
+        wd.restartFailure)
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext, 30000)
+      // one restart was tried and failed; nothing is left to restart
+      assert(wd.restarts == 1 && starts.get() == 2, s"${wd.restarts} restarts, ${starts.get()} starts")
+      assert((wd.query eq q) && !q.isActive, "the crashed query stays the current one")
+      assert(!spark.streams.active.exists(_.name == "wd_restart_failure"),
+        "no query of the watched factory may be left running")
+    } finally {
+      wd.close()
+      if (q.isActive) q.stop()
+    }
+  }
+
   test("watchdog keeps the watched query's last progress and ignores other queries") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val watched = MemoryStream[PointIn]
