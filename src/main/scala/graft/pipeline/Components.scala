@@ -58,7 +58,6 @@ object Components {
     def shape(df: DataFrame, edgeCount: Long): DataFrame =
       if (edgeCount <= SmallEdgeBound) df.coalesce(1) else df
 
-    val tIn = System.nanoTime()
     // One eager checkpoint materializes the (possibly expensive) upstream
     // pair plan exactly once; every loop round and the final labeling read
     // the materialized edges. (A/B-measured against persist()+count()
@@ -69,8 +68,6 @@ object Components {
         greatest(col(srcCol), col(dstCol)).cast("long").as("hi"))
       .where(col("lo") =!= col("hi"))
       .distinct())
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] input materialized in ${(System.nanoTime() - tIn) / 1e6} ms")
 
     // Convergence probe: count + an order-independent checksum of the edge
     // multiset in ONE aggregation job (cheaper than two except() anti-joins;
@@ -125,10 +122,7 @@ object Components {
           out.result().iterator
         }.toDF("id", "component")
 
-    val t0 = System.nanoTime()
     var sig = probe(cur)
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] init edges=${sig._1} t=${(System.nanoTime() - t0) / 1e6} ms")
     if (sig._1 > 0L && sig._1 <= SmallEdgeBound) return unionFindTail(cur)
     cur = shape(cur, sig._1)
     var it = 0
@@ -165,9 +159,6 @@ object Components {
       // the contracted edge set labels identically to more star rounds
       if (!done && nsig._1 > 0L && nsig._1 <= SmallEdgeBound)
         return unionFindTail(cur)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $it edges=${nsig._1} done=$done " +
-          s"t=${(System.nanoTime() - t0) / 1e6} ms")
     }
     require(done, s"connectedComponents did not converge in $maxIter rounds")
 

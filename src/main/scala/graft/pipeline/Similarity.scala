@@ -75,15 +75,7 @@ object Similarity {
       .withColumn("__r", row_number().over(slw))
       .where(col("__r") <= shortlist)
       .select("query_id", "neighbor_id")
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    sl.join(broadcast(q), "query_id").join(c, "neighbor_id")
-      .withColumn("cos_sim", cosine(col("__qv"), col("__cv")))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos_sim")
+    rerank(sl, queries, corpus, k, idCol, vecCol)
   }
 
   /** Brute-force cosine top-k: for each query vector, the k nearest corpus
@@ -1037,132 +1029,53 @@ object Similarity {
     assignStep(kmeansPts(corpus, idCol, vecCol), centroids)
       .select(col("vec_id"), col("cluster"), col("dist"))
 
-  /** Run independent per-subspace training closures CONCURRENTLY: each
-    * closure triggers its own chain of eager Spark jobs (seeding
-    * TakeOrdered, Lloyd-round truncates, assignment), and Spark schedules
-    * jobs submitted from different threads side by side — on an idle
-    * cluster m sequential subspace trainings become ~one training's wall
-    * time. Results are deterministic regardless of completion order: the
-    * output sequence preserves index order and each subspace's trajectory
-    * is self-contained. Bounded pool (≤ 8 threads) so a large m cannot
-    * flood the scheduler.
-    */
-  private def inParallel[A](work: Seq[() => A]): Seq[A] =
-    if (work.size <= 1) work.map(_())
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(work.size, 8))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(
-          work.map(w => scala.concurrent.Future(w()))),
-        scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdown()
-    }
-
   /** Product quantization (Jégou, Douze, Schmid 2011, "Product
     * quantization for nearest neighbor search"): the vector is split into
     * `m` contiguous subvectors, each quantized independently against its
-    * own `k`-centroid codebook trained by [[kmeans]] on that subspace —
-    * compressing d floats to m small codes (m·log₂k bits) while keeping
-    * distances approximable from per-subspace lookup tables (the ADC step
-    * of IVF-PQ). At 100 TB the raw embeddings don't fit the ANN serving
-    * tier; the code table is ~d·32/(m·log₂k) times smaller and the
-    * codebooks are metadata (m·k·(d/m) doubles, broadcastable).
+    * own `k`-centroid codebook — compressing d floats to m small codes
+    * (m·log₂k bits) while keeping distances approximable from
+    * per-subspace lookup tables (the ADC step of IVF-PQ). At 100 TB the
+    * raw embeddings don't fit the ANN serving tier; the code table is
+    * ~d·32/(m·log₂k) times smaller and the codebooks are metadata
+    * (m·k·(d/m) doubles, broadcastable).
     *
-    * Each subspace runs the SAME deterministic kmeans trajectory as
-    * [[kmeans]] (hash-drawn candidates — the draw is over vec_id, so all
-    * subspaces sample the same rows, sliced — then greedy farthest-point
-    * seeding, Lloyd rounds, final assignment), so the whole encoding is
-    * reproducible cross-engine. Output per vector: `codes` (the m cluster
-    * ids, subspace order), `sq_err` (summed per-subspace squared
-    * distances — the exact reconstruction error of the quantized vector,
-    * accumulated in subspace order for cross-engine bit-equality).
-    *
-    * Scale shape: m independent kmeans runs (broadcast-assign + bounded
-    * aggregations each) over SLICED vectors — the corpus is scanned
-    * m·(iters+1) times but never shuffled on vector content; the final
-    * code assembly is one groupBy on the well-spread vec_id.
+    * The codebooks are [[pqTrain]]'s, and the codes are its argmin of its
+    * own truncated base table, so the encoding is the trained model's own
+    * and reproducible cross-engine (each subspace follows [[kmeans]]'s
+    * trajectory on its slice). Output per vector: `codes` (the m cluster
+    * ids, subspace order), `sq_err` (the argmin kernel's per-subspace
+    * squared distances summed in subspace order — the exact
+    * reconstruction error of the quantized vector).
     */
   def pqEncode(corpus: DataFrame, m: Int = 2, k: Int = 4, iters: Int = 1,
       idCol: String = "vec_id", vecCol: String = "embedding",
       oversample: Int = 4): DataFrame = {
-    require(m >= 1, s"m must be >= 1, got $m")
-    val dim = corpus.select(size(col(vecCol))).head().getInt(0)
-    require(dim % m == 0, s"dimension $dim must divide into $m subspaces")
-    val sub = dim / m
-    val parts = inParallel((0 until m).map(j => () =>
-      kmeans(corpus.select(col(idCol),
-          slice(col(vecCol), j * sub + 1, sub).as(vecCol)),
-        k, iters, idCol, vecCol, oversample)
-        .select(col("vec_id"), lit(j).as("subspace"), col("cluster"),
-          col("dist"))))
-    parts.reduce(_ unionByName _)
-      .groupBy("vec_id")
-      .agg(array_sort(collect_list(struct(col("subspace"), col("cluster"),
-        col("dist")))).as("__scd"))
+    val (base, sub, books) = pqFit(corpus, m, k, iters, idCol, vecCol,
+      oversample)
+    val a = books.indices.map(j => s"__a$j")
+    // two projections: each argmin struct is evaluated once and read twice
+    base.select(col("vec_id") +: pqAssign(books, sub).zip(a)
+        .map { case (x, n) => x.as(n) }: _*)
       .select(col("vec_id"),
-        transform(col("__scd"), s => s.getField("cluster")).as("codes"),
-        aggregate(transform(col("__scd"), s => s.getField("dist")),
-          lit(0.0), (acc, x) => acc + x).as("sq_err"))
+        array(a.map(n => col(s"$n.cluster")): _*).as("codes"),
+        a.foldLeft(lit(0.0))((acc, n) => acc + col(s"$n.dist")).as("sq_err"))
   }
 
   /** Asymmetric-distance (ADC) top-k over PQ codes (Jégou et al. 2011
     * §IV): the query stays in full precision; each corpus vector is
     * represented ONLY by its m codes, and its approximate squared L2 to
     * the query is the sum of per-subspace table lookups
-    * `Σ_j d(q_j, centroid_{j,code_j})`. The tables are m·k entries per
-    * query — the whole point at 100 TB: after one broadcast of the
-    * (metadata-scale) codebooks and query tables, scoring a vector costs
-    * m lookups + adds against a code table ~100× smaller than the raw
-    * embeddings, never touching the vectors themselves.
-    *
-    * Codebooks come from [[kmeansCentroids]] on each subspace slice and
-    * codes from the same centroids' argmin ([[kmeans]]'s assignment
-    * kernel), so encoding and scoring share one trajectory. The ADC sum
-    * folds in subspace order over a sorted struct array — deterministic
-    * double arithmetic cross-engine. Output: (query_id, neighbor_id,
-    * rank, adc_dist), top `topK` by (adc asc, id asc), self excluded.
+    * `Σ_j d(q_j, centroid_{j,code_j})`. [[pqTrain]] then
+    * [[pqAdcTopKFrozen]]: the model this trains is the one a frozen
+    * deployment would serve. Output: (query_id, neighbor_id, rank,
+    * adc_dist), top `topK` by (adc asc, id asc), self excluded.
     */
   def pqTopK(queries: DataFrame, corpus: DataFrame, topK: Int, m: Int = 2,
       kc: Int = 4, iters: Int = 1, idCol: String = "vec_id",
       vecCol: String = "embedding", oversample: Int = 4): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
-    require(m >= 1, s"m must be >= 1, got $m")
-    val dim = corpus.select(size(col(vecCol))).head().getInt(0)
-    require(dim % m == 0, s"dimension $dim must divide into $m subspaces")
-    val sub = dim / m
-    def sliced(df: DataFrame, j: Int): DataFrame =
-      df.select(col(idCol), slice(col(vecCol), j * sub + 1, sub).as(vecCol))
-    val parts = inParallel((0 until m).map(j => () => {
-      val pts = kmeansPts(sliced(corpus, j), idCol, vecCol)
-      val cents = lloydCentroids(pts, kc, iters, oversample)
-      // codes: the same argmin kernel kmeans assigns with, against the
-      // SAME trained centroids — no second trajectory
-      val codes = assignStep(pts, cents)
-        .select(col("vec_id").as("neighbor_id"), lit(j).as("subspace"),
-          col("cluster"))
-      // per-query distance table: |queries|·kc rows — metadata-scale
-      val qtab = kmeansPts(sliced(queries, j), idCol, vecCol)
-        .select(col("vec_id").as("query_id"), col("v"))
-        .crossJoin(broadcast(cents))
-        .select(col("query_id"), lit(j).as("subspace"), col("cluster"),
-          sqDist(col("v"), col("centroid")).as("d"))
-      codes.join(broadcast(qtab), Seq("subspace", "cluster"))
-    }))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
-    parts.reduce(_ unionByName _)
-      .where(col("neighbor_id") =!= col("query_id"))
-      .groupBy("query_id", "neighbor_id")
-      .agg(array_sort(collect_list(struct(col("subspace"), col("d")))).as("__sd"))
-      .select(col("query_id"), col("neighbor_id"),
-        aggregate(transform(col("__sd"), s => s.getField("d")),
-          lit(0.0), (acc, x) => acc + x).as("adc_dist"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= topK)
-      .select("query_id", "neighbor_id", "rank", "adc_dist")
+    val (cb, cd) = pqTrain(corpus, m, kc, iters, idCol, vecCol, oversample)
+    pqAdcTopKFrozen(queries, cb, cd, topK, idCol, vecCol)
   }
 
   /** ADC shortlist + exact re-rank — how PQ is actually served (Jégou et
@@ -1173,10 +1086,7 @@ object Similarity {
     * small code sizes: raw ADC at m=2/k=8 ties every same-code vector
     * and recall collapses to id order (measured 0.28 on the clustered
     * corpus), while the same codes + a 50-candidate exact re-rank
-    * restore the true neighbors. Scale shape: the expensive exact
-    * distance touches |queries|·candidates rows — the raw-vector fetch
-    * is an id equi-join against the (broadcastable) shortlist, never a
-    * corpus scan of vectors.
+    * restore the true neighbors. [[pqTrain]] then [[pqRerankFrozen]].
     */
   def pqTopKRerank(queries: DataFrame, corpus: DataFrame, topK: Int,
       candidates: Int = 50, m: Int = 2, kc: Int = 4, iters: Int = 1,
@@ -1184,103 +1094,114 @@ object Similarity {
       oversample: Int = 4): DataFrame = {
     require(candidates >= topK,
       s"candidates ($candidates) must be >= topK ($topK)")
-    val shortlist = pqTopK(queries, corpus, candidates, m, kc, iters,
-        idCol, vecCol, oversample)
-      .select(col("query_id"), col("neighbor_id"))
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-    val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    shortlist
-      .join(broadcast(qv), "query_id")
-      .join(cv, "neighbor_id")
-      .withColumn("cos_sim", cosine(col("__qv"), col("__cv")))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= topK)
-      .select("query_id", "neighbor_id", "rank", "cos_sim")
+    require(candidates >= 1, s"candidates must be >= 1, got $candidates")
+    val (cb, cd) = pqTrain(corpus, m, kc, iters, idCol, vecCol, oversample)
+    pqRerankFrozen(queries, corpus, cb, cd, topK, candidates, idCol, vecCol)
   }
 
-  /** The PQ model as DATA — the train-once face the serving path
-    * ([[pqAdcTopKFrozen]]) and the correctness gate both consume: the
-    * per-subspace codebooks `(subspace, cluster, centroid)` (m·k rows,
-    * metadata-scale) and the corpus codes `(vec_id, subspace, cluster)`
-    * (m small ints per vector — the compressed corpus representation).
-    * Same deterministic trajectory as [[pqEncode]]/[[pqTopK]] (one
-    * [[kmeans]] run per subspace slice, codes by the same argmin kernel),
-    * so a model frozen here scores identically to the train-inline paths.
-    * At 100 TB this split is the production shape: training is a bounded
-    * batch job whose outputs are persisted (codebooks broadcastable,
-    * codes ~100× smaller than vectors) and serving never retrains.
+  /** The PQ model as DATA — the one PQ trainer: the per-subspace codebooks
+    * `(subspace, cluster, centroid)` (m·k rows, metadata-scale) and the
+    * corpus codes `(vec_id, subspace, cluster)` (m small ints per vector —
+    * the compressed corpus representation). Every subspace follows
+    * [[kmeans]]'s deterministic trajectory on its slice (same candidate
+    * draw, greedy seeding, Lloyd rounds and argmin kernel), all of them
+    * trained together from one spread table; [[pqEncode]], [[pqTopK]],
+    * [[pqTopKRerank]] and [[ivfPqTrain]] train through it. At 100 TB this
+    * split is the production shape: training is a bounded batch job whose
+    * outputs are persisted (codebooks broadcastable, codes ~100× smaller
+    * than vectors) and serving never retrains.
     */
   def pqTrain(corpus: DataFrame, m: Int, kc: Int, iters: Int = 1,
       idCol: String = "vec_id", vecCol: String = "embedding",
       oversample: Int = 4): (DataFrame, DataFrame) = {
-    require(m >= 1, s"m must be >= 1, got $m")
     val spark = corpus.sparkSession
     import spark.implicits._
+    val (base, sub, books) = pqFit(corpus, m, kc, iters, idCol, vecCol,
+      oversample)
+    val cb = books.zipWithIndex.flatMap { case (b, j) =>
+      b.map { case (cl, c) => (j, cl, c) } }.toDF("subspace", "cluster", "centroid")
+    (cb, pqCodes(base, books, sub).drop("dist"))
+  }
+
+  /** [[pqTrain]]'s fit: the spread, truncated base table `(vec_id, v0)`,
+    * the subspace width and each subspace's trained codebook
+    * `(cluster, centroid)`, sorted by cluster.
+    *
+    * ONE spread + ONE materialization serves every subspace's candidate
+    * draw, every Lloyd round and the final encode — one pipeline per
+    * subspace would spread the corpus m times and re-scan it ~3·m times.
+    * Training is the train-once half of train-once/serve-many, so the
+    * corpus-sized checkpoint is a bounded training-job cost.
+    */
+  private def pqFit(corpus: DataFrame, m: Int, kc: Int, iters: Int,
+      idCol: String, vecCol: String, oversample: Int):
+      (DataFrame, Int, IndexedSeq[Seq[(Long, Seq[Double])]]) = {
+    require(m >= 1, s"m must be >= 1, got $m")
+    require(kc > 0, s"k must be positive, got $kc")
+    require(iters >= 1, s"iters must be >= 1, got $iters")
     val dim = corpus.select(size(col(vecCol))).head().getInt(0)
     require(dim % m == 0, s"dimension $dim must divide into $m subspaces")
     val sub = dim / m
-    // ONE spread + ONE materialization serves every subspace's candidate
-    // draw, every Lloyd round and the final encode. The previous shape ran
-    // one independent pipeline per subspace — m spreads of the corpus and
-    // ~3·m parquet re-scans (init TakeOrdered, round, encode, freeze count
-    // each re-executed their subspace's scan+shuffle; stack-sampled:
-    // shuffle-file creation dominated the executors). Training is the
-    // train-once half of train-once/serve-many, so the corpus-sized
-    // checkpoint is a bounded training-job cost, not a serving cost.
-    def sliceJ(j: Int) = slice(col("v0"), j * sub + 1, sub)
     val base = graft.core.Lineage.truncate(
       spread(corpus, idCol).select(col(idCol).as("vec_id"),
         col(vecCol).cast("array<double>").as("v0")))
     // shared candidate draw: the CW-hash sample keys on vec_id alone, so
-    // every subspace draws the SAME candidate rows (bit-identical to the
-    // per-subspace draw it replaces) and slices its own view on the driver
+    // every subspace draws the SAME candidate rows a per-subspace kmeans
+    // would, and slices its own view on the driver
     val cand = kmeansCandidates(
       base.select(col("vec_id"), col("v0").as("v")), kc * oversample)
-    var cents: IndexedSeq[Array[(Long, Array[Double])]] =
-      (0 until m).map { j =>
-        greedyFarthest(
-          cand.map(a => java.util.Arrays.copyOfRange(a, j * sub, j * sub + sub)),
-          kc)
-      }
+    var books: IndexedSeq[Seq[(Long, Seq[Double])]] = (0 until m).map { j =>
+      greedyFarthest(
+        cand.map(a => java.util.Arrays.copyOfRange(a, j * sub, j * sub + sub)),
+        kc).map { case (cl, c) => (cl, c.toSeq) }.toSeq
+    }
     // one aggregate per Lloyd round for ALL subspaces: per vector, m
     // (subspace, argmin cluster, slice) rows — the same element volume as
     // the corpus — mean-reduced per (subspace, cluster) by the VecMeanAgg
-    // kernel. Assignment arithmetic and tie-break are the per-subspace
-    // kernel's own (bit-identical); the mean is the same sum/count class.
+    // kernel, the per-subspace update's own arithmetic
     for (_ <- 1 to iters) {
-      val structs = (0 until m).map { j =>
-        val mj = graft.functions.Signatures.argminSqDist(sliceJ(j),
-          cents(j).map(_._1).toSeq, cents(j).map(_._2.toSeq).toSeq)
-        struct(lit(j).as("subspace"),
-          mj.getField("cluster").as("cluster"), sliceJ(j).as("v"))
+      val structs = pqAssign(books, sub).zipWithIndex.map { case (a, j) =>
+        struct(lit(j).as("subspace"), a.getField("cluster").as("cluster"),
+          slice(col("v0"), j * sub + 1, sub).as("v"))
       }
       val updated = base.select(explode(array(structs: _*)).as("e"))
         .groupBy(col("e.subspace").as("subspace"), col("e.cluster").as("cluster"))
         .agg(graft.functions.VecMeanAgg.vecMean(col("e.v")).as("centroid"))
         .collect()
-      cents = (0 until m).map { j =>
-        updated.filter(_.getInt(0) == j)
-          .map(r => (r.getLong(1), r.getSeq[Double](2).toArray))
+      books = (0 until m).map { j =>
+        updated.filter(_.getInt(0) == j).toSeq
+          .map(r => (r.getLong(1), r.getSeq[Double](2).toSeq))
           .sortBy(_._1)
       }
     }
-    val cb = (0 until m).flatMap(j => cents(j).map { case (cl, c) =>
-      (j, cl, c.toSeq) }).toDF("subspace", "cluster", "centroid")
-    // final encode: one narrow pass emitting all m codes per vector against
-    // the trained (driver-literal) codebooks — no per-subspace pipelines,
-    // no m-way union of spreads
-    val codeStructs = (0 until m).map { j =>
-      val mj = graft.functions.Signatures.argminSqDist(sliceJ(j),
-        cents(j).map(_._1).toSeq, cents(j).map(_._2.toSeq).toSeq)
-      struct(lit(j).as("subspace"), mj.getField("cluster").as("cluster"))
+    (base, sub, books)
+  }
+
+  /** Each subspace's argmin struct `(cluster, dist)` of a base table's
+    * `v0` against that subspace's codebook — [[assignStep]]'s kernel,
+    * fold and (dist, cluster) tie-break on the slice, the centroids
+    * entering as driver literals.
+    */
+  private def pqAssign(books: IndexedSeq[Seq[(Long, Seq[Double])]],
+      sub: Int): IndexedSeq[Column] =
+    books.indices.map(j => graft.functions.Signatures.argminSqDist(
+      slice(col("v0"), j * sub + 1, sub), books(j).map(_._1), books(j).map(_._2)))
+
+  /** One narrow pass over a base table emitting all m codes per vector:
+    * `(vec_id, subspace, cluster, dist)`, dist the chosen centroid's
+    * squared L2 (the per-subspace reconstruction error).
+    */
+  private def pqCodes(base: DataFrame,
+      books: IndexedSeq[Seq[(Long, Seq[Double])]], sub: Int): DataFrame = {
+    // the whole argmin struct rides the explode: a generator's input gets
+    // no common-subexpression elimination, so reading two fields inside
+    // it would run the kernel twice
+    val structs = pqAssign(books, sub).zipWithIndex.map { case (a, j) =>
+      struct(lit(j).as("subspace"), a.as("a"))
     }
-    val cd = base.select(col("vec_id"),
-        explode(array(codeStructs: _*)).as("e"))
+    base.select(col("vec_id"), explode(array(structs: _*)).as("e"))
       .select(col("vec_id"), col("e.subspace").as("subspace"),
-        col("e.cluster").as("cluster"))
-    (cb, cd)
+        col("e.a.cluster").as("cluster"), col("e.a.dist").as("dist"))
   }
 
   /** Write a MODEL-scale relation (codebooks, cell centroids, logreg
@@ -1297,25 +1218,6 @@ object Similarity {
       .partitionBy("model_id")
       .parquet(path)
 
-  /** Freeze a trained PQ model ([[pqTrain]]'s `(codebooks, codes)`) to
-    * parquet under `base`, keyed by an EXPLICIT `modelId` (caller-chosen —
-    * a registry name, content hash, or corpus snapshot id) so distinct
-    * models coexist under one base (`partitionBy(model_id)` + dynamic
-    * partition overwrite, scoped per-write), and return the read-back
-    * frames filtered to this model's partition — the train-once half of
-    * train-once/serve-many. An explicit identity is the registry contract
-    * row-count keying cannot give: two same-size corpora (or two
-    * snapshots of one corpus) freeze to DISTINCT partitions instead of
-    * silently dynamic-overwriting each other (SimilaritySpec-pinned).
-    *
-    * Write shapes are deliberately different per relation: codebooks are
-    * MODEL-scale (m·kc rows) — one file is the right layout; codes are
-    * CORPUS-scale (n·m rows) and must write sharded — `repartition(
-    * shuffle.partitions, vec_id)` pins an explicit width (AQE cannot
-    * coalesce REPARTITION_BY_NUM) so the freeze job never funnels the
-    * corpus through a single task (PlanSpec-pinned: no corpus-scale
-    * single-partition exchange).
-    */
   /** Shard count for a frozen CORPUS-scale write: ~2M code rows per file
     * (code rows are a few tens of bytes — this lands files in the tens-of-
     * MB-to-low-hundreds range the output-sizing guidance targets), clamped
@@ -1334,26 +1236,52 @@ object Similarity {
     math.max(1, math.min(shuffleN, math.ceil(rows / 2e6).toInt))
   }
 
-  def pqFreeze(cb: DataFrame, cd: DataFrame, modelId: String, base: String):
-      (DataFrame, DataFrame) = {
-    val s = cb.sparkSession
-    freezeModelScale(cb, modelId, s"$base/codebooks")
-    // materialize the codes ONCE before sizing the shards: the count and
-    // the write would otherwise each run the full encode pipeline (the
-    // whole per-subspace assignment) — the checkpoint is the codes
-    // themselves (n·m small ints, the ~100×-compressed corpus), so both
-    // passes read blocks instead of re-encoding
+  /** Write a CORPUS-scale code table under `path`, partitioned by
+    * `model_id` and then `keys`, sharded by an explicit-width
+    * `repartition(freezeShards, keys…, vec_id)` (REPARTITION_BY_NUM —
+    * AQE cannot coalesce it, so the write never funnels the corpus
+    * through one task). The codes are materialized ONCE before sizing:
+    * the count and the write would otherwise each run the whole encode —
+    * the checkpoint is the codes themselves (n·m small ints).
+    */
+  private def freezeCodes(cd: DataFrame, modelId: String, path: String,
+      keys: String*): Unit = {
     val cdM = graft.core.Lineage.truncate(cd)
     cdM.withColumn("model_id", lit(modelId))
-      .repartition(freezeShards(s, cdM.count()), col("vec_id"))
+      .repartition(freezeShards(cd.sparkSession, cdM.count()),
+        (keys :+ "vec_id").map(col): _*)
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("model_id")
-      .parquet(s"$base/codes")
-    (s.read.parquet(s"$base/codebooks")
-        .where(col("model_id") === modelId).drop("model_id"),
-      s.read.parquet(s"$base/codes")
-        .where(col("model_id") === modelId).drop("model_id"))
+      .partitionBy("model_id" +: keys: _*)
+      .parquet(path)
+  }
+
+  /** One frozen relation of model `modelId` under `path`. */
+  private def readFrozen(spark: org.apache.spark.sql.SparkSession,
+      path: String, modelId: String): DataFrame =
+    spark.read.parquet(path).where(col("model_id") === modelId).drop("model_id")
+
+  /** Freeze a trained PQ model ([[pqTrain]]'s `(codebooks, codes)`) to
+    * parquet under `base`, keyed by an EXPLICIT `modelId` (caller-chosen —
+    * a registry name, content hash, or corpus snapshot id) so distinct
+    * models coexist under one base (`partitionBy(model_id)` + dynamic
+    * partition overwrite, scoped per-write), and return the read-back
+    * frames ([[pqReadFrozen]]) — the train-once half of
+    * train-once/serve-many. An explicit identity is the registry contract
+    * row-count keying cannot give: two same-size corpora (or two
+    * snapshots of one corpus) freeze to DISTINCT partitions instead of
+    * silently dynamic-overwriting each other (SimilaritySpec-pinned).
+    *
+    * Write shapes are deliberately different per relation: codebooks are
+    * MODEL-scale (m·kc rows) — one file is the right layout; codes are
+    * CORPUS-scale (n·m rows) and write sharded ([[freezeCodes]];
+    * PlanSpec-pinned: no corpus-scale single-partition exchange).
+    */
+  def pqFreeze(cb: DataFrame, cd: DataFrame, modelId: String, base: String):
+      (DataFrame, DataFrame) = {
+    freezeModelScale(cb, modelId, s"$base/codebooks")
+    freezeCodes(cd, modelId, s"$base/codes")
+    pqReadFrozen(cb.sparkSession, base, modelId)
   }
 
   /** Read back a frozen PQ model previously written by [[pqFreeze]] —
@@ -1364,10 +1292,8 @@ object Similarity {
     */
   def pqReadFrozen(spark: org.apache.spark.sql.SparkSession, base: String,
       modelId: String): (DataFrame, DataFrame) =
-    (spark.read.parquet(s"$base/codebooks")
-        .where(col("model_id") === modelId).drop("model_id"),
-      spark.read.parquet(s"$base/codes")
-        .where(col("model_id") === modelId).drop("model_id"))
+    (readFrozen(spark, s"$base/codebooks", modelId),
+      readFrozen(spark, s"$base/codes", modelId))
 
   /** Read back a frozen IVF-PQ index previously written by
     * [[ivfPqFreeze]] — cells, codebooks, and the cell-partitioned codes,
@@ -1375,12 +1301,49 @@ object Similarity {
     */
   def ivfPqReadFrozen(spark: org.apache.spark.sql.SparkSession,
       base: String, modelId: String): (DataFrame, DataFrame, DataFrame) =
-    (spark.read.parquet(s"$base/cells")
-        .where(col("model_id") === modelId).drop("model_id"),
-      spark.read.parquet(s"$base/codebooks")
-        .where(col("model_id") === modelId).drop("model_id"),
-      spark.read.parquet(s"$base/codes")
-        .where(col("model_id") === modelId).drop("model_id"))
+    (readFrozen(spark, s"$base/cells", modelId),
+      readFrozen(spark, s"$base/codebooks", modelId),
+      readFrozen(spark, s"$base/codes", modelId))
+
+  /** A PQ model's codebooks read ONCE on the driver (model-scale, m·k
+    * rows): the geometry every frozen consumer checks — subspaces exactly
+    * 0..m-1, one centroid width `sub` (slice j covers [j·sub+1,
+    * j·sub+sub]) — each subspace's codebook sorted by cluster (the argmin
+    * kernel's literals), and the same rows as a local relation for the
+    * ADC lookup join.
+    */
+  private final case class PqBooks(m: Int, sub: Int,
+      books: IndexedSeq[Seq[(Long, Seq[Double])]], local: DataFrame) {
+    /** Serving-side dimension guard: a vector whose length != m·sub would
+      * slice short and null its distances — which the ascending rank
+      * window (NULLS FIRST) would silently rank to the top.
+      */
+    def requireDim(df: DataFrame, vecCol: String, what: String): Unit = {
+      val d = df.select(size(col(vecCol))).head().getInt(0)
+      require(d == m * sub,
+        s"$what dimension $d must equal the frozen model's m*sub = ${m * sub}")
+    }
+  }
+
+  private def readBooks(codebooks: DataFrame): PqBooks = {
+    val cb = codebooks.select(col("subspace").cast("int").as("subspace"),
+      col("cluster").cast("long").as("cluster"),
+      col("centroid").cast("array<double>").as("centroid"))
+    val rows = cb.collect()
+    val byJ = rows.groupBy(_.getInt(0))
+    val m = byJ.size
+    require(m >= 1, "codebooks must be non-empty")
+    require(byJ.keySet == (0 until m).toSet,
+      s"codebooks must cover subspaces 0..${m - 1}, got ${byJ.keySet}")
+    val widths = rows.map(_.getSeq[Double](2).size).toSet
+    require(widths.size == 1,
+      s"all subspaces must share one centroid width, got $widths")
+    PqBooks(m, widths.head,
+      (0 until m).map(j => byJ(j).toSeq
+        .map(r => (r.getLong(1), r.getSeq[Double](2).toSeq)).sortBy(_._1)),
+      cb.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+        cb.schema))
+  }
 
   /** Encode NEW vectors against a FROZEN PQ model — index maintenance
     * without retraining, the ingest half of train-once/serve-many: each
@@ -1392,111 +1355,67 @@ object Similarity {
     * pqTrain's own codes on the training corpus). Output: one row per
     * (vector, subspace) — `(vec_id, subspace, cluster, dist)` with dist
     * the chosen cell's squared L2 (the per-subspace reconstruction
-    * error). Scale shape: m broadcast-assign scans of the BATCH only —
-    * cost proportional to the batch, never the corpus, never the model
-    * beyond the broadcast codebooks. Serving-side geometry guard as
+    * error). Scale shape: one collect of the model-scale codebooks and
+    * ONE narrow pass over the BATCH — cost proportional to the batch,
+    * never the corpus. Serving-side geometry guard as
     * [[pqAdcTopKFrozen]].
     */
   def pqEncodeFrozen(vecs: DataFrame, codebooks: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val geo = codebooks.select(col("subspace"),
-        size(col("centroid")).as("__w"))
-      .groupBy("subspace").agg(first("__w").as("__w"))
-      .collect().map(r => r.get(0).asInstanceOf[Number].intValue ->
-        r.get(1).asInstanceOf[Number].intValue).toMap
-    val m = geo.size
-    require(m >= 1, "codebooks must be non-empty")
-    require(geo.keySet == (0 until m).toSet,
-      s"codebooks must cover subspaces 0..${m - 1}, got ${geo.keySet}")
-    require(geo.values.toSet.size == 1,
-      s"all subspaces must share one centroid width, got ${geo.values.toSet}")
-    val sub = geo(0)
-    val vdim = vecs.select(size(col(vecCol))).head().getInt(0)
-    require(vdim == m * sub,
-      s"vector dimension $vdim must equal the frozen model's " +
-        s"m*sub = ${m * sub}")
-    // one collect of the (model-scale) codebooks + ONE narrow pass over the
-    // batch emitting all m codes per vector — the previous per-subspace
-    // pipelines spread the batch m times and unioned m plans (m× scan +
-    // shuffle for the same rows). Kernel, tie-break and dist arithmetic
-    // are assignStep's own (bit-identical; SimilaritySpec pins
-    // encode-frozen == pqTrain's codes).
-    val byJ = codebooks
-      .select(col("subspace").cast("int"), col("cluster").cast("long"),
-        col("centroid").cast("array<double>"))
-      .collect()
-      .groupBy(_.getInt(0))
-      .map { case (j, rows) =>
-        j -> rows.map(r => (r.getLong(1), r.getSeq[Double](2))).sortBy(_._1)
-      }
-    val base = spread(vecs, idCol).select(col(idCol).as("vec_id"),
-      col(vecCol).cast("array<double>").as("v0"))
-    val structs = (0 until m).map { j =>
-      val cb = byJ(j)
-      val mj = graft.functions.Signatures.argminSqDist(
-        slice(col("v0"), j * sub + 1, sub),
-        cb.map(_._1).toSeq, cb.map(_._2).toSeq)
-      struct(lit(j).as("subspace"), mj.getField("cluster").as("cluster"),
-        mj.getField("dist").as("dist"))
-    }
-    base.select(col("vec_id"), explode(array(structs: _*)).as("e"))
-      .select(col("vec_id"), col("e.subspace").as("subspace"),
-        col("e.cluster").as("cluster"), col("e.dist").as("dist"))
+    val pq = readBooks(codebooks)
+    pq.requireDim(vecs, vecCol, "vector")
+    pqCodes(spread(vecs, idCol).select(col(idCol).as("vec_id"),
+      col(vecCol).cast("array<double>").as("v0")), pq.books, pq.sub)
   }
 
   /** ADC top-k over a FROZEN PQ model ([[pqTrain]]'s `(codebooks, codes)`
-    * shape, typically read back from storage): the query is sliced into
-    * the codebooks' subspaces, the per-query distance table is one
-    * broadcast join of slices × codebooks (|queries|·m·k rows —
-    * metadata-scale), and each corpus vector is scored through its m
-    * codes alone — `Σ_j d(q_j, centroid_{j, code_j})`, summed in subspace
-    * order for cross-engine bit-equality. This is the serving-tier half
-    * of PQ at 100 TB: no training, no raw corpus vectors, one equi-join
-    * of the (compact) code table against a broadcast lookup table.
-    * Output: (query_id, neighbor_id, rank, adc_dist), top `topK` by
-    * (adc asc, id asc), self excluded.
+    * shape, typically read back from storage): each corpus vector is
+    * scored through its m codes alone — `Σ_j d(q_j, centroid_{j, code_j})`,
+    * summed in subspace order for cross-engine bit-equality. This is the
+    * serving-tier half of PQ at 100 TB: no training, no raw corpus
+    * vectors, one equi-join of the (compact) code table against a
+    * broadcast lookup table ([[adcTopK]]). Output: (query_id,
+    * neighbor_id, rank, adc_dist), top `topK` by (adc asc, id asc), self
+    * excluded.
     */
   def pqAdcTopKFrozen(queries: DataFrame, codebooks: DataFrame,
       codes: DataFrame, topK: Int, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
+      vecCol: String = "embedding"): DataFrame =
+    adcTopK(queries, codebooks, topK, idCol, vecCol) { dtab =>
+      codes.select(col("vec_id").as("neighbor_id"), col("subspace"),
+          col("cluster"))
+        .join(dtab, Seq("subspace", "cluster"))
+    }
+
+  /** The frozen ADC scorer [[pqAdcTopKFrozen]] and [[ivfPqAdcTopKFrozen]]
+    * share. The codebooks are read once on the driver ([[readBooks]]:
+    * geometry guard + local lookup relation), the queries are scanned
+    * once and exploded into their m slices, and each slice's squared L2
+    * to every centroid of its subspace is the per-query distance table
+    * `(query_id, subspace, cluster, d)` (|queries|·m·k rows —
+    * metadata-scale, broadcast). `score` joins the code rows it keeps to
+    * that table; the lookups then sum per (query, neighbor) in subspace
+    * order over a sorted struct array and rank.
+    */
+  private def adcTopK(queries: DataFrame, codebooks: DataFrame, topK: Int,
+      idCol: String, vecCol: String)(
+      score: DataFrame => DataFrame): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
-    // subspace geometry from the model itself: m = #subspaces, sub = the
-    // codebook centroid width (slice j covers [j·sub+1, j·sub+sub])
-    val geo = codebooks.select(col("subspace"),
-        size(col("centroid")).as("__w"))
-      .groupBy("subspace").agg(first("__w").as("__w"))
-      .collect().map(r => r.get(0).asInstanceOf[Number].intValue ->
-        r.get(1).asInstanceOf[Number].intValue).toMap
-    val m = geo.size
-    require(m >= 1, "codebooks must be non-empty")
-    require(geo.keySet == (0 until m).toSet,
-      s"codebooks must cover subspaces 0..${m - 1}, got ${geo.keySet}")
-    require(geo.values.toSet.size == 1,
-      s"all subspaces must share one centroid width, got ${geo.values.toSet}")
-    val sub = geo(0)
-    // serving-side dimension guard: a query whose vector length != m·sub
-    // would slice short, null the distance sum, and — via NULLS FIRST in
-    // the ascending rank window — silently return arbitrary neighbors.
-    // pqTrain validates dim % m == 0 at train time; validate the serving
-    // input against the frozen geometry too (one-row metadata probe).
-    val qdim = queries.select(size(col(vecCol))).head().getInt(0)
-    require(qdim == m * sub,
-      s"query vector dimension $qdim must equal the frozen model's " +
-        s"m*sub = ${m * sub}")
-    val qsl = (0 until m).map(j =>
-        queries.select(col(idCol).as("query_id"),
-          lit(j).as("subspace"),
-          slice(col(vecCol), j * sub + 1, sub)
-            .cast("array<double>").as("__qv")))
-      .reduce(_ unionByName _)
-    val dtab = qsl.join(broadcast(codebooks), "subspace")
+    val pq = readBooks(codebooks)
+    pq.requireDim(queries, vecCol, "query vector")
+    val slices = (0 until pq.m).map(j => struct(lit(j).as("subspace"),
+      slice(col(vecCol), j * pq.sub + 1, pq.sub).cast("array<double>")
+        .as("qv")))
+    val dtab = queries
+      .select(col(idCol).as("query_id"), explode(array(slices: _*)).as("e"))
+      .select(col("query_id"), col("e.subspace").as("subspace"),
+        col("e.qv").as("__qv"))
+      .join(broadcast(pq.local), "subspace")
       .select(col("query_id"), col("subspace"), col("cluster"),
         sqDist(col("__qv"), col("centroid")).as("d"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
-    codes.select(col("vec_id").as("neighbor_id"), col("subspace"),
-        col("cluster"))
-      .join(broadcast(dtab), Seq("subspace", "cluster"))
+    score(broadcast(dtab))
       .where(col("neighbor_id") =!= col("query_id"))
       .groupBy("query_id", "neighbor_id")
       .agg(array_sort(collect_list(struct(col("subspace"), col("d"))))
@@ -1509,20 +1428,16 @@ object Similarity {
       .select("query_id", "neighbor_id", "rank", "adc_dist")
   }
 
-  /** Frozen-model ADC shortlist + exact cosine re-rank — [[pqTopKRerank]]
-    * with the training replaced by a persisted [[pqTrain]] model: the
-    * `candidates`-deep [[pqAdcTopKFrozen]] shortlist is the only code-table
-    * scan, then ONLY the shortlisted ids' raw vectors are fetched (id
-    * equi-join, broadcastable shortlist) and exactly cosine-ranked.
+  /** Exact cosine re-rank of a `(query_id, neighbor_id)` shortlist: ONLY
+    * the shortlisted ids' raw vectors are fetched (id equi-join against
+    * the broadcast queries), ranked (cos desc, id asc), top `topK` kept —
+    * the refine step every shortlist-then-refine search here shares.
+    * Scale shape: the exact distance touches |queries|·shortlist rows,
+    * never a corpus scan of vectors.
     */
-  def pqRerankFrozen(queries: DataFrame, corpus: DataFrame,
-      codebooks: DataFrame, codes: DataFrame, topK: Int, candidates: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    require(candidates >= topK,
-      s"candidates ($candidates) must be >= topK ($topK)")
-    val shortlist = pqAdcTopKFrozen(queries, codebooks, codes, candidates,
-        idCol, vecCol)
-      .select(col("query_id"), col("neighbor_id"))
+  private def rerank(shortlist: DataFrame, queries: DataFrame,
+      corpus: DataFrame, topK: Int, idCol: String,
+      vecCol: String): DataFrame = {
     val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
     val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
     val w = Window.partitionBy("query_id")
@@ -1536,6 +1451,21 @@ object Similarity {
       .select("query_id", "neighbor_id", "rank", "cos_sim")
   }
 
+  /** Frozen-model ADC shortlist + exact cosine re-rank — [[pqTopKRerank]]
+    * over a persisted [[pqTrain]] model: the `candidates`-deep
+    * [[pqAdcTopKFrozen]] shortlist is the only code-table scan, then
+    * [[rerank]].
+    */
+  def pqRerankFrozen(queries: DataFrame, corpus: DataFrame,
+      codebooks: DataFrame, codes: DataFrame, topK: Int, candidates: Int,
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    require(candidates >= topK,
+      s"candidates ($candidates) must be >= topK ($topK)")
+    rerank(pqAdcTopKFrozen(queries, codebooks, codes, candidates, idCol,
+        vecCol).select(col("query_id"), col("neighbor_id")),
+      queries, corpus, topK, idCol, vecCol)
+  }
+
   /** IVF-PQ top-k (Jégou et al. 2011 §V — the production ANN serving
     * shape): the coarse quantizer ([[ivfTopK]]'s cell-centroid probe)
     * prunes the search to each query's `nprobe` nearest cells, and
@@ -1543,11 +1473,9 @@ object Similarity {
     * through their m PQ codes ([[pqTopK]]'s table lookups) — never
     * touching a raw corpus vector after the (metadata-scale) codebooks
     * and centroids are trained. At 100 TB both levels matter: the probe
-    * cuts the scanned fraction to ~nprobe/#cells (cell-partitioned
-    * layout ⇒ partition pruning), and ADC cuts the per-row cost and the
-    * serving tier's memory by the PQ compression factor. The cell
-    * restriction is applied BEFORE the distance-table join, so unprobed
-    * cells never enter the scoring dataflow.
+    * cuts the scanned fraction to ~nprobe/#cells, and ADC cuts the
+    * per-row cost and the serving tier's memory by the PQ compression
+    * factor. [[ivfPqTrain]] then [[ivfPqAdcTopKFrozen]].
     *
     * Output: (query_id, neighbor_id, rank, adc_dist) — top `k` by
     * (adc asc, id asc) within probed cells, self excluded. May return
@@ -1559,52 +1487,9 @@ object Similarity {
       oversample: Int = 4): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val dim = corpus.select(size(col(vecCol))).head().getInt(0)
-    require(dim % m == 0, s"dimension $dim must divide into $m subspaces")
-    val sub = dim / m
-    def sliced(df: DataFrame, j: Int): DataFrame =
-      df.select(col(idCol), slice(col(vecCol), j * sub + 1, sub).as(vecCol))
-    // coarse probe: identical derivation to ivfTopK
-    val cents = centroids(corpus, cellCol, vecCol)
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("csim").desc, col("cell").asc)
-    val probed = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .crossJoin(broadcast(cents))
-      .withColumn("csim", cosine(col("qv"), col("centroid")))
-      .withColumn("prank", row_number().over(wq))
-      .where(col("prank") <= nprobe)
-      .select(col("query_id"), col("cell"))
-    val cellOf = corpus.select(col(idCol).as("neighbor_id"),
-      col(cellCol).as("cell"))
-    val parts = inParallel((0 until m).map(j => () => {
-      val pts = kmeansPts(sliced(corpus, j), idCol, vecCol)
-      val cbs = lloydCentroids(pts, kc, iters, oversample)
-      val codes = assignStep(pts, cbs)
-        .select(col("vec_id").as("neighbor_id"), lit(j).as("subspace"),
-          col("cluster"))
-        .join(cellOf, "neighbor_id")
-      val qtab = kmeansPts(sliced(queries, j), idCol, vecCol)
-        .select(col("vec_id").as("query_id"), col("v"))
-        .crossJoin(broadcast(cbs))
-        .select(col("query_id"), lit(j).as("subspace"), col("cluster"),
-          sqDist(col("v"), col("centroid")).as("d"))
-      // prune to probed cells FIRST, then attach the lookup-table entry
-      codes.join(broadcast(probed), Seq("cell"))
-        .join(broadcast(qtab), Seq("subspace", "cluster", "query_id"))
-    }))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
-    parts.reduce(_ unionByName _)
-      .where(col("neighbor_id") =!= col("query_id"))
-      .groupBy("query_id", "neighbor_id")
-      .agg(array_sort(collect_list(struct(col("subspace"), col("d")))).as("__sd"))
-      .select(col("query_id"), col("neighbor_id"),
-        aggregate(transform(col("__sd"), s => s.getField("d")),
-          lit(0.0), (acc, x) => acc + x).as("adc_dist"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "adc_dist")
+    val (cells, cb, cd) = ivfPqTrain(corpus, m, kc, iters, idCol, vecCol,
+      cellCol, oversample)
+    ivfPqAdcTopKFrozen(queries, cells, cb, cd, k, nprobe, idCol, vecCol)
   }
 
   /** The IVF-PQ index as DATA — [[ivfPqTopK]]'s two levels in the
@@ -1613,10 +1498,7 @@ object Similarity {
     * rows), and the corpus codes CARRYING their cell id (n·m rows — the
     * whole serving-tier corpus representation). Cells come from `cellCol`
     * (the corpus' existing partition assignment — at 100 TB that is the
-    * layout key the corpus is already clustered/partitioned by); the PQ
-    * training trajectory is identical to [[pqTrain]], so a model frozen
-    * here serves identically to the train-inline [[ivfPqTopK]]
-    * (SimilaritySpec-pinned).
+    * layout key the corpus is already clustered/partitioned by).
     */
   def ivfPqTrain(corpus: DataFrame, m: Int, kc: Int, iters: Int = 1,
       idCol: String = "vec_id", vecCol: String = "embedding",
@@ -1634,51 +1516,32 @@ object Similarity {
     * explicit `modelId` like [[pqFreeze]]. The two model-scale relations
     * (cell centroids — one row per cell — and codebooks) take the
     * single-file layout; the corpus-scale codes write CELL-PARTITIONED —
-    * `partitionBy(model_id, cell)`, sharded within each cell by an
-    * explicit-width `repartition(shuffle.partitions, cell, vec_id)`
-    * (REPARTITION_BY_NUM, AQE-proof) — so the serving probe's cell
-    * restriction becomes real PARTITION PRUNING on the codes scan: at
-    * 100 TB a nprobe-of-#cells query reads only nprobe directories of
-    * the code table instead of filtering after a full scan
-    * ([[ivfPqAdcTopKFrozen]] pushes the probed-cell set as a static IN
-    * filter; PlanSpec pins the pruned file set). Returns the read-back
-    * frames filtered to this model's partition.
+    * `partitionBy(model_id, cell)`, sharded within each cell
+    * ([[freezeCodes]]) — so the serving probe's cell restriction becomes
+    * real PARTITION PRUNING on the codes scan: at 100 TB a
+    * nprobe-of-#cells query reads only nprobe directories of the code
+    * table instead of filtering after a full scan ([[ivfPqAdcTopKFrozen]]
+    * pushes the probed-cell set as a static IN filter; PlanSpec pins the
+    * pruned file set). Each shard task opens one file per cell directory
+    * it holds, so the data-derived width ([[freezeShards]]) also bounds
+    * the file count. Returns the read-back frames
+    * ([[ivfPqReadFrozen]]).
     */
   def ivfPqFreeze(cells: DataFrame, cb: DataFrame, cd: DataFrame,
       modelId: String, base: String): (DataFrame, DataFrame, DataFrame) = {
-    val s = cells.sparkSession
     freezeModelScale(cells, modelId, s"$base/cells")
     freezeModelScale(cb, modelId, s"$base/codebooks")
-    // data-derived shard width (see [[freezeShards]]): each shard task
-    // opens one file per cell directory it holds, so an over-wide
-    // repartition multiplies the file count by the width — the dominant
-    // freeze cost at small n (one permission fork per file) and the
-    // small-files tax at read time
-    // one materialization serves the shard-count sizing AND the write —
-    // without it the count and the write each run the full encode + cell
-    // join pipeline (see pqFreeze)
-    val cdM = graft.core.Lineage.truncate(cd)
-    cdM.withColumn("model_id", lit(modelId))
-      .repartition(freezeShards(s, cdM.count()), col("cell"), col("vec_id"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("model_id", "cell")
-      .parquet(s"$base/codes")
-    (s.read.parquet(s"$base/cells")
-        .where(col("model_id") === modelId).drop("model_id"),
-      s.read.parquet(s"$base/codebooks")
-        .where(col("model_id") === modelId).drop("model_id"),
-      s.read.parquet(s"$base/codes")
-        .where(col("model_id") === modelId).drop("model_id"))
+    freezeCodes(cd, modelId, s"$base/codes", "cell")
+    ivfPqReadFrozen(cells.sparkSession, base, modelId)
   }
 
   /** ADC top-k over a FROZEN IVF-PQ index — the full production serving
     * read path (Jégou et al. 2011 §V over persisted artifacts): the query
     * ranks the frozen cell centroids by cosine and keeps `nprobe` cells
     * (broadcast, metadata-scale), the code table is pruned to probed
-    * cells BEFORE any scoring dataflow, and surviving codes are scored by
-    * the frozen codebooks' ADC tables exactly like [[pqAdcTopKFrozen]]
-    * (same geometry probe, same serving-side dimension guard, same
+    * cells BEFORE any scoring dataflow, and surviving codes are scored
+    * exactly like [[pqAdcTopKFrozen]] (the shared [[adcTopK]]: same
+    * geometry guard, same serving-side dimension guard, same
     * subspace-ordered sum). Nothing here trains and nothing touches a raw
     * corpus vector: at 100 TB the scan cost is ~nprobe/#cells of the code
     * table — REALIZED as partition pruning under [[ivfPqFreeze]]'s
@@ -1689,92 +1552,53 @@ object Similarity {
   def ivfPqAdcTopKFrozen(queries: DataFrame, cells: DataFrame,
       codebooks: DataFrame, codes: DataFrame, topK: Int, nprobe: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    require(topK >= 1, s"topK must be >= 1, got $topK")
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val geo = codebooks.select(col("subspace"),
-        size(col("centroid")).as("__w"))
-      .groupBy("subspace").agg(first("__w").as("__w"))
-      .collect().map(r => r.get(0).asInstanceOf[Number].intValue ->
-        r.get(1).asInstanceOf[Number].intValue).toMap
-    val m = geo.size
-    require(m >= 1, "codebooks must be non-empty")
-    require(geo.keySet == (0 until m).toSet,
-      s"codebooks must cover subspaces 0..${m - 1}, got ${geo.keySet}")
-    require(geo.values.toSet.size == 1,
-      s"all subspaces must share one centroid width, got ${geo.values.toSet}")
-    val sub = geo(0)
-    val qdim = queries.select(size(col(vecCol))).head().getInt(0)
-    require(qdim == m * sub,
-      s"query vector dimension $qdim must equal the frozen model's " +
-        s"m*sub = ${m * sub}")
-    // coarse probe against the FROZEN centroids — same ranking as
-    // ivfPqTopK's inline probe (csim desc, cell asc)
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("csim").desc, col("cell").asc)
-    val probed = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .crossJoin(broadcast(cells))
-      .withColumn("csim", cosine(col("qv"), col("centroid")))
-      .withColumn("prank", row_number().over(wq))
-      .where(col("prank") <= nprobe)
-      .select(col("query_id"), col("cell"))
-    // ONE materialization of the probe for BOTH consumers below (the
-    // static IN filter and the per-query probed join): the join is a
-    // broadcast anyway, so collecting here costs exactly what the plan
-    // would pay at execution — and it guarantees the collected IN set
-    // and the joined probe set are the SAME cells even when `queries` is
-    // a nondeterministic/re-evaluated source (two executions of the
-    // probe plan could otherwise diverge and silently drop candidates).
-    // The frame is #queries·nprobe rows — request-scale on a serve path.
-    val probedRows = probed.collect()
-    val probedLocal = broadcast(queries.sparkSession.createDataFrame(
-      java.util.Arrays.asList(probedRows: _*), probed.schema))
-    // Static partition pruning: the UNION of probed cells is bounded by
-    // #cells, and pushing it as an IN filter onto the code-table scan
-    // turns the nprobe/#cells saving into directory-level pruning under
-    // the [[ivfPqFreeze]] `partitionBy(model_id, cell)` layout — unprobed
-    // cells are never READ, not filtered post-scan (PlanSpec pins the
-    // pruned file set). Semantically redundant with the per-query probed
-    // join below (same materialized probe — it can neither widen nor
-    // narrow it), so the function stays correct over non-partitioned
-    // in-memory code frames too.
-    val probedCells = probedRows.map(_.get(1)).distinct.toSeq
-    val prunedCodes = codes.where(col("cell").isin(probedCells: _*))
-    val qsl = (0 until m).map(j =>
-        queries.select(col(idCol).as("query_id"),
-          lit(j).as("subspace"),
-          slice(col(vecCol), j * sub + 1, sub)
-            .cast("array<double>").as("__qv")))
-      .reduce(_ unionByName _)
-    val dtab = qsl.join(broadcast(codebooks), "subspace")
-      .select(col("query_id"), col("subspace"), col("cluster"),
-        sqDist(col("__qv"), col("centroid")).as("d"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
-    prunedCodes.select(col("vec_id").as("neighbor_id"), col("cell"),
-        col("subspace"), col("cluster"))
-      // cell restriction FIRST: unprobed cells never enter scoring
-      .join(probedLocal, Seq("cell"))
-      .join(broadcast(dtab), Seq("subspace", "cluster", "query_id"))
-      .where(col("neighbor_id") =!= col("query_id"))
-      .groupBy("query_id", "neighbor_id")
-      .agg(array_sort(collect_list(struct(col("subspace"), col("d"))))
-        .as("__sd"))
-      .select(col("query_id"), col("neighbor_id"),
-        aggregate(transform(col("__sd"), s => s.getField("d")),
-          lit(0.0), (acc, x) => acc + x).as("adc_dist"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= topK)
-      .select("query_id", "neighbor_id", "rank", "adc_dist")
+    adcTopK(queries, codebooks, topK, idCol, vecCol) { dtab =>
+      // coarse probe against the cell centroids (csim desc, cell asc)
+      val wq = Window.partitionBy("query_id")
+        .orderBy(col("csim").desc, col("cell").asc)
+      val probed = queries
+        .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+        .crossJoin(broadcast(cells))
+        .withColumn("csim", cosine(col("qv"), col("centroid")))
+        .withColumn("prank", row_number().over(wq))
+        .where(col("prank") <= nprobe)
+        .select(col("query_id"), col("cell"))
+      // ONE materialization of the probe for BOTH consumers below (the
+      // static IN filter and the per-query probed join): the join is a
+      // broadcast anyway, so collecting here costs exactly what the plan
+      // would pay at execution — and it guarantees the collected IN set
+      // and the joined probe set are the SAME cells even when `queries`
+      // is a nondeterministic/re-evaluated source (two executions of the
+      // probe plan could otherwise diverge and silently drop candidates).
+      // The frame is #queries·nprobe rows — request-scale on a serve path.
+      val probedRows = probed.collect()
+      val probedLocal = broadcast(queries.sparkSession.createDataFrame(
+        java.util.Arrays.asList(probedRows: _*), probed.schema))
+      // Static partition pruning: the UNION of probed cells is bounded by
+      // #cells, and pushing it as an IN filter onto the code-table scan
+      // turns the nprobe/#cells saving into directory-level pruning under
+      // the [[ivfPqFreeze]] `partitionBy(model_id, cell)` layout — unprobed
+      // cells are never READ, not filtered post-scan (PlanSpec pins the
+      // pruned file set). Semantically redundant with the per-query probed
+      // join (same materialized probe — it can neither widen nor narrow
+      // it), so the function stays correct over non-partitioned in-memory
+      // code frames too.
+      val probedCells = probedRows.map(_.get(1)).distinct.toSeq
+      codes.where(col("cell").isin(probedCells: _*))
+        .select(col("vec_id").as("neighbor_id"), col("cell"),
+          col("subspace"), col("cluster"))
+        // cell restriction FIRST: unprobed cells never enter scoring
+        .join(probedLocal, Seq("cell"))
+        .join(dtab, Seq("subspace", "cluster", "query_id"))
+    }
   }
 
   /** Frozen IVF-PQ shortlist + exact cosine re-rank — the complete
     * production read path: [[ivfPqAdcTopKFrozen]] retrieves `candidates`
     * approximate neighbors per query from the frozen index (probe + code
-    * scan only), then ONLY those ids' raw vectors are fetched (id
-    * equi-join against the broadcastable shortlist) and exactly
-    * cosine-ranked — the [[pqRerankFrozen]] refinement with cell pruning
-    * in front.
+    * scan only), then [[rerank]] — the [[pqRerankFrozen]] refinement with
+    * cell pruning in front.
     */
   def ivfPqRerankFrozen(queries: DataFrame, corpus: DataFrame,
       cells: DataFrame, codebooks: DataFrame, codes: DataFrame, topK: Int,
@@ -1782,20 +1606,9 @@ object Similarity {
       vecCol: String = "embedding"): DataFrame = {
     require(candidates >= topK,
       s"candidates ($candidates) must be >= topK ($topK)")
-    val shortlist = ivfPqAdcTopKFrozen(queries, cells, codebooks, codes,
-        candidates, nprobe, idCol, vecCol)
-      .select(col("query_id"), col("neighbor_id"))
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-    val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    shortlist
-      .join(broadcast(qv), "query_id")
-      .join(cv, "neighbor_id")
-      .withColumn("cos_sim", cosine(col("__qv"), col("__cv")))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= topK)
-      .select("query_id", "neighbor_id", "rank", "cos_sim")
+    rerank(ivfPqAdcTopKFrozen(queries, cells, codebooks, codes, candidates,
+        nprobe, idCol, vecCol).select(col("query_id"), col("neighbor_id")),
+      queries, corpus, topK, idCol, vecCol)
   }
 
   /** Top principal component of the embedding corpus by MATRIX-FREE power

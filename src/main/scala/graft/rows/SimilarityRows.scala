@@ -97,10 +97,11 @@ private[graft] object SimilarityRows {
         .select(col("vec_id"),
           array_join(col("codes").cast("array<string>"), ",").as("codes"),
           col("sq_err")),
-      // Mirrors Similarity.pqEncode(m=2, k=4, iters=1): one kmeansChain per
-      // 32-dim subspace slice (shared unrolled-kmeans builder — the PQ
-      // codebooks are literally per-subspace kmeans runs), codes in
-      // subspace order, sq_err the two squared distances summed.
+      // Mirrors Similarity.pqEncode(m=2, k=4, iters=1), which encodes with
+      // pqTrain's codebooks: one kmeansChain per 32-dim subspace slice
+      // (shared unrolled-kmeans builder — each pqTrain codebook follows
+      // that subspace's kmeans trajectory), codes in subspace order,
+      // sq_err the two squared distances summed.
       s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
          |e0 AS (SELECT vec_id, v[1:32] AS v FROM e),
          |e1 AS (SELECT vec_id, v[33:64] AS v FROM e),
@@ -207,8 +208,10 @@ private[graft] object SimilarityRows {
     // SQL-expressible, but the serving arithmetic is — the DuckDB twin
     // reads the same frozen parquet and independently recomputes the
     // ADC distance tables, code-table scoring, shortlist, and exact
-    // rerank (training itself stays oracle-covered at m=2 via the
-    // vec_pq/sim_pq_topk family — same code path, smaller constants).
+    // rerank. Training itself is oracle-covered at m=2: vec_pq and
+    // sim_pq_topk run pqTrain (then pqAdcTopKFrozen for sim_pq_topk)
+    // against unrolled per-subspace kmeans twins — the code path this row
+    // trains through, with smaller constants.
     // The freeze is keyed by corpus size so sf0.01/sf0.1 runs coexist
     // and the twin picks its own SF's partition.
     amortizedRow("sim_pq_prod", (s, dir) => {
@@ -233,7 +236,7 @@ private[graft] object SimilarityRows {
       // (adc asc, id asc), and the exact cosine rerank of the shortlisted
       // raw vectors. Training is deliberately out of the twin (not
       // SQL-expressible at kc=256) — it is oracle-covered at m=2 by
-      // vec_pq/sim_pq_topk, which run the identical code path.
+      // vec_pq/sim_pq_topk, which train through the same pqTrain.
       s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
          |q AS (SELECT vec_id AS query_id, v FROM e WHERE vec_id < 5),
          |mid AS (SELECT 'pqprod-' || CAST(count(*) AS VARCHAR) AS k FROM embeddings),

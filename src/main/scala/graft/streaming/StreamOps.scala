@@ -237,23 +237,6 @@ object StreamOps {
       }
   }
 
-  /** RocksDB state-store backend switch for every stateful operator here
-    * (ewma/near-dup/kmv state, dropDuplicates, windowed aggs). The default
-    * HDFS-backed provider keeps EVERY live group's state on-heap — fine for
-    * thousands of keys, an OOM by millions; RocksDB keeps state off-heap
-    * with disk spill, so state size stops bounding executor memory — the
-    * right backend once streaming keys reach production cardinality.
-    * Operator semantics are identical (StreamOpsSpec pins parity); only the
-    * state backend changes. Queries read the conf at START, so set it
-    * before `.start()`.
-    */
-  val RocksDbStateStoreProvider: String =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  def useRocksDbStateStore(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      RocksDbStateStoreProvider)
-
   final case class BandRow(doc_id: Long, sh: Seq[String], band: Int, band_hash: Long)
   final case class BucketState(docs: Seq[(Long, Seq[String])])
   final case class DupPair(id_a: Long, id_b: Long, jaccard: Double)

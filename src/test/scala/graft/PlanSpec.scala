@@ -1002,6 +1002,21 @@ class PlanSpec extends SparkSpec {
       "probed-cell restriction must reach the codes scan as a partition filter")
   }
 
+  test("the train-inline PQ rows train through pqTrain and run fewer jobs") {
+    // one spread table trains every subspace at once, and the frozen
+    // scorer they feed reads its codebooks once (counts at sf0.001)
+    Tables(spark, sfDir).embeddings // the first open infers the schema with a job
+    for ((q, most) <- Seq("vec_pq" -> 7, "sim_pq_topk" -> 12,
+        "sim_pq_rerank" -> 14, "sim_ivfpq_topk" -> 18)) {
+      val (ran, plans) = observe(SparkEntry.queries(q)(spark, sfDir).collect())
+      assert(ran <= most, s"$q ran $ran jobs, expected at most $most")
+      // the encode runs each of the m = 2 subspaces' argmin kernel once
+      // per vector (a generator's input gets no subexpression elimination)
+      val plan = plans.last.executedPlan
+      assert(evaluations(plan, "argminsqdist") == 2, s"$q:\n$plan")
+    }
+  }
+
   test("Bench's row counters equal observe's counts, stay with their row and add no job") {
     val rows = Seq("graph_pagerank", "sim_rp_topk")
     val fns = rows.map(SparkEntry.queries)

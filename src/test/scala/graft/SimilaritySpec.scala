@@ -1034,14 +1034,16 @@ class SimilaritySpec extends SparkSpec {
     // exactly m codes per vector
     assert(cbF.count() <= 8 && cbF.select("subspace").distinct().count() == 2)
     assert(cdF.groupBy("vec_id").count().select(max("count")).head().getLong(0) == 2)
-    // ADC face: frozen scoring == train-inline pqTopK (same trajectory)
-    assert(rowsOf9(Similarity.pqAdcTopKFrozen(queries, cbF, cdF, topK = 3))
-      == rowsOf9(Similarity.pqTopK(queries, emb, topK = 3)),
+    // ADC face: frozen scoring == train-inline pqTopK, which is pqTrain then
+    // the same scorer — only the parquet round trip differs, and it is
+    // bit-exact
+    assert(rowsOf(Similarity.pqAdcTopKFrozen(queries, cbF, cdF, topK = 3))
+      == rowsOf(Similarity.pqTopK(queries, emb, topK = 3)),
       "frozen ADC must equal train-inline ADC")
     // rerank face: frozen shortlist+rerank == train-inline pqTopKRerank
-    assert(rowsOf9(Similarity.pqRerankFrozen(queries, emb, cbF, cdF,
+    assert(rowsOf(Similarity.pqRerankFrozen(queries, emb, cbF, cdF,
         topK = 3, candidates = 20))
-      == rowsOf9(Similarity.pqTopKRerank(queries, emb, topK = 3,
+      == rowsOf(Similarity.pqTopKRerank(queries, emb, topK = 3,
         candidates = 20)),
       "frozen rerank must equal train-inline rerank")
     // serving-side geometry guard: a query whose vector length disagrees
@@ -1064,12 +1066,11 @@ class SimilaritySpec extends SparkSpec {
     // frozen layout: read-back columns, codes carry their cell id
     assert(ceF.columns.toSet == Set("cell", "centroid"))
     assert(cdF.columns.toSet == Set("vec_id", "subspace", "cluster", "cell"))
-    // cell-pruned frozen ADC == train-inline ivfPqTopK (same deterministic
-    // trajectory: same kmeans chain, same probe ranking; the freeze is a
-    // bit-exact parquet round trip)
-    assert(rowsOf9(Similarity.ivfPqAdcTopKFrozen(queries, ceF, cbF, cdF,
+    // cell-pruned frozen ADC == train-inline ivfPqTopK, which is ivfPqTrain
+    // then the same scorer; the freeze is a bit-exact parquet round trip
+    assert(rowsOf(Similarity.ivfPqAdcTopKFrozen(queries, ceF, cbF, cdF,
         topK = 3, nprobe = 3))
-      == rowsOf9(Similarity.ivfPqTopK(queries, emb, k = 3, nprobe = 3)),
+      == rowsOf(Similarity.ivfPqTopK(queries, emb, k = 3, nprobe = 3)),
       "frozen cell-pruned ADC must equal train-inline ivfPqTopK")
     // rerank-to-the-bottom equivalence: with the shortlist as deep as the
     // corpus, the frozen probe+ADC+rerank pipeline degenerates to exact
@@ -1102,6 +1103,29 @@ class SimilaritySpec extends SparkSpec {
     val bad = emb.selectExpr("vec_id", "slice(embedding, 1, 7) as embedding")
     intercept[IllegalArgumentException] {
       Similarity.pqEncodeFrozen(bad, cbF)
+    }
+  }
+
+  test("frozen PQ consumers reject a codebook missing a subspace or mixing " +
+    "centroid widths") {
+    val queries = emb.where(col("vec_id") < 5)
+    def books(spec: (Int, Int)*) =
+      spec.map { case (j, w) => (j, 0L, Seq.fill(w)(0.0)) }
+        .toDF("subspace", "cluster", "centroid")
+    val codes = Seq((0L, 0, 0L, 0)).toDF("vec_id", "subspace", "cluster", "cell")
+    val cells = Seq((0, Seq.fill(64)(0.0))).toDF("cell", "centroid")
+    // read at sub = 32 both books pass the 64-dim query guard: only the
+    // geometry guard stops them
+    for ((what, cb) <- Seq("missing subspace 1" -> books(0 -> 32, 2 -> 32),
+        "mixed centroid widths" -> books(0 -> 32, 1 -> 31))) {
+      withClue(s"$what: ") {
+        intercept[IllegalArgumentException](Similarity.pqEncodeFrozen(queries, cb))
+        intercept[IllegalArgumentException](
+          Similarity.pqAdcTopKFrozen(queries, cb, codes, topK = 3))
+        intercept[IllegalArgumentException](
+          Similarity.ivfPqAdcTopKFrozen(queries, cells, cb, codes, topK = 3,
+            nprobe = 1))
+      }
     }
   }
 

@@ -798,7 +798,8 @@ class StreamOpsSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
-    StreamOps.useRocksDbStateStore(spark)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val in = MemoryStream[PointIn]
       val q = StreamOps.ewmaStream(in.toDS(), alpha = 0.5)
