@@ -198,11 +198,19 @@ object Dedup {
   private[graft] def jaccardPairs(textsA: DataFrame, textsB: DataFrame,
       cands: DataFrame, idCol: String, textCol: String, shingleK: Int,
       threshold: Double): DataFrame =
-    pairShingleSets(textsA, textsB, cands, idCol, textCol, shingleK)
-      .withColumn("jaccard",
-        graft.functions.Signatures.sortedJaccard(col("sh_a"), col("sh_b")))
+    bindOnce(pairShingleSets(textsA, textsB, cands, idCol, textCol, shingleK),
+        Seq(col("id_a"), col("id_b")),
+        graft.functions.Signatures.sortedJaccard(col("sh_a"), col("sh_b")).as("jaccard"))
       .where(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+
+  /** `keep` and `bound`, each of `bound` evaluated once per row: they come
+    * out of a one-row `inline` generator, not a plain projection. A filter
+    * over a projected expression is pushed below the projection (into a
+    * join's condition, say) and evaluates it once more; a filter that
+    * reads a generator's output stays above the generator.
+    */
+  private def bindOnce(df: DataFrame, keep: Seq[Column], bound: Column*): DataFrame =
+    df.select(keep :+ inline(array(struct(bound: _*))): _*)
 
   /** Candidate pairs with each side's SORTED distinct shingle set attached
     * (`sh_a`/`sh_b`) — the shared tail of every LSH-candidate scorer
@@ -216,17 +224,14 @@ object Dedup {
   private def pairShingleSets(textsA: DataFrame, textsB: DataFrame,
       cands: DataFrame, idCol: String, textCol: String,
       shingleK: Int): DataFrame =
-    cands
-      .join(textsA.select(col(idCol).as("id_a"), col(textCol).as("__text_a")), "id_a")
-      .join(textsB.select(col(idCol).as("id_b"), col(textCol).as("__text_b")), "id_b")
-      // The sets come out of a one-row generator, not a plain projection:
-      // a caller's score filter over a projection is pushed into the second
-      // join's condition, where it evaluates the shingle kernel once more
-      // per pair than the projection above it does. A filter that reads a
-      // generator's output stays above the generator.
-      .select(col("id_a"), col("id_b"), inline(array(struct(
+    // the sets are bound once: a caller's score filter over a projection
+    // of them would be pushed into the second join's condition
+    bindOnce(cands
+        .join(textsA.select(col(idCol).as("id_a"), col(textCol).as("__text_a")), "id_a")
+        .join(textsB.select(col(idCol).as("id_b"), col(textCol).as("__text_b")), "id_b"),
+        Seq(col("id_a"), col("id_b")),
         TextOps.textShingleSortedSet(col("__text_a"), shingleK).as("sh_a"),
-        TextOps.textShingleSortedSet(col("__text_b"), shingleK).as("sh_b")))))
+        TextOps.textShingleSortedSet(col("__text_b"), shingleK).as("sh_b"))
       // a side with no shingles (null, blank or shorter than shingleK
       // tokens: another row under a candidate's id) has no set to score;
       // two empty sets would score 0/0 = NaN, which passes `>= threshold`
@@ -351,10 +356,10 @@ object Dedup {
     val texts = spreadById(df.select(col(idCol), col(textCol)), idCol)
     val cands = candidatesFromBuckets(
       bucketsOf(texts, idCol, textCol, shingleK, bands, rowsPerBand), idCol)
-    pairShingleSets(texts, texts, cands, idCol, textCol, shingleK)
-      .withColumn("__inter", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("containment",
-        col("__inter").cast("double") / least(size(col("sh_a")), size(col("sh_b"))))
+    bindOnce(pairShingleSets(texts, texts, cands, idCol, textCol, shingleK),
+        Seq(col("id_a"), col("id_b"), col("sh_a"), col("sh_b")),
+        (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
+          least(size(col("sh_a")), size(col("sh_b")))).as("containment"))
       .where(col("containment") >= threshold)
       .withColumn("jaccard",
         graft.functions.Signatures.sortedJaccard(col("sh_a"), col("sh_b")))

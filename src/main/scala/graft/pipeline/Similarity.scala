@@ -1191,7 +1191,7 @@ object Similarity {
     * `(vec_id, subspace, cluster, dist)`, dist the chosen centroid's
     * squared L2 (the per-subspace reconstruction error).
     */
-  private def pqCodes(base: DataFrame,
+  private[graft] def pqCodes(base: DataFrame,
       books: IndexedSeq[Seq[(Long, Seq[Double])]], sub: Int): DataFrame = {
     // the whole argmin struct rides the explode: a generator's input gets
     // no common-subexpression elimination, so reading two fields inside
@@ -1312,7 +1312,7 @@ object Similarity {
     * kernel's literals), and the same rows as a local relation for the
     * ADC lookup join.
     */
-  private final case class PqBooks(m: Int, sub: Int,
+  private[graft] final case class PqBooks(m: Int, sub: Int,
       books: IndexedSeq[Seq[(Long, Seq[Double])]], local: DataFrame) {
     /** Serving-side dimension guard: a vector whose length != m·sub would
       * slice short and null its distances — which the ascending rank
@@ -1323,9 +1323,21 @@ object Similarity {
       require(d == m * sub,
         s"$what dimension $d must equal the frozen model's m*sub = ${m * sub}")
     }
+
+    /** [[requireDim]] per row, for a frame no job may scan (a stream):
+      * a filter that keeps every row and raises from a row whose `vec`
+      * width is not m·sub (a null vector counts as width -1). A filter,
+      * not a projection, so that no column pruning skips it.
+      */
+    def dimGuard(vec: Column, what: String): Column = {
+      val d = coalesce(size(vec), lit(-1))
+      when(d =!= m * sub, raise_error(concat(lit(s"$what dimension "),
+        d.cast("string"), lit(s" must equal the frozen model's m*sub = ${m * sub}"))))
+        .otherwise(lit(true))
+    }
   }
 
-  private def readBooks(codebooks: DataFrame): PqBooks = {
+  private[graft] def readBooks(codebooks: DataFrame): PqBooks = {
     val cb = codebooks.select(col("subspace").cast("int").as("subspace"),
       col("cluster").cast("long").as("cluster"),
       col("centroid").cast("array<double>").as("centroid"))
@@ -1668,10 +1680,10 @@ object Similarity {
 
   /** VecCosine's exact arithmetic on the driver (same index-order
     * accumulation, same final expression) — shared by [[mmrSelect]]'s
-    * greedy stage so driver-computed pair similarities cannot drift from
-    * plan-computed ones.
+    * greedy stage and the streaming faces so driver- or group-computed
+    * pair similarities cannot drift from plan-computed ones.
     */
-  private[pipeline] def cosineLocal(a: Array[Double], b: Array[Double]): Double = {
+  private[graft] def cosineLocal(a: Array[Double], b: Array[Double]): Double = {
     val n = math.min(a.length, b.length)
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
     while (i < n) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }

@@ -305,11 +305,11 @@ private[graft] object SimilarityRows {
       // (dist, cluster) tie-break, recomputed from the same frozen parquet.
       pqAddTwinSql(PqAddFrozenDir)),
     // the same frozen-index maintenance AT INGEST: arriving vectors are
-    // encoded against driver-literal frozen codebooks by a stateless
-    // narrow map (the annServeStream frozen-model policy) — the batch
-    // face runs the streaming kernel verbatim, and StreamOpsSpec drives
-    // it as a real two-batch MemoryStream plus the foreachBatch append
-    // sink into the frozen codes relation
+    // encoded against the frozen codebooks by a stateless narrow map —
+    // pqEncodeFrozen's argmin kernel with a per-row width guard, so the
+    // op also runs on a stream; this row runs it in batch mode, and
+    // StreamOpsSpec drives it as a real two-batch MemoryStream plus the
+    // foreachBatch append sink into the frozen codes relation
     amortizedRow("stream_pq_addbatch", (s, dir) => {
       val e = Tables(s, dir).embeddings
       val boot = e.where(col("vec_id") % 3 =!= 0)
@@ -321,15 +321,11 @@ private[graft] object SimilarityRows {
         val (cb, cd) = Similarity.pqTrain(boot, m = 4, kc = 16, iters = 1)
         Similarity.pqFreeze(cb, cd, s"pqadd-$nBoot", StreamPqAddFrozenDir)._1
       }
-      val cbSeq = cbF.select("subspace", "cluster", "centroid").collect()
-        .map(r => (r.get(0).asInstanceOf[Number].intValue,
-          r.get(1).asInstanceOf[Number].longValue,
-          r.getSeq[Double](2).toSeq)).toSeq
-      graft.streaming.StreamOps.pqEncodeStream(batch, cbSeq).toDF()
+      graft.streaming.StreamOps.pqEncodeStream(batch, cbF)
     },
       // Mirrors stream_pq_addbatch: the SAME maintenance arithmetic (the
-      // streaming encode kernel replicates assignStep's fold and tie-break
-      // exactly), reading the stream face's own frozen dir.
+      // streaming encode runs assignStep's argmin kernel), reading the
+      // stream face's own frozen dir.
       pqAddTwinSql(StreamPqAddFrozenDir)),
     row("sim_ivfpq_prod", (s, dir) => {
       val e = Tables(s, dir).embeddings

@@ -73,16 +73,8 @@ private[graft] object StreamingRows {
           iters = 1)
         Similarity.ivfPqFreeze(cells, cb, cd, s"ivfpq-$n", StreamAnnFrozenDir)
       }
-      val cellsSeq = ceF.select("cell", "centroid").collect().map(r =>
-        (r.get(0).asInstanceOf[Number].longValue,
-          r.getSeq[Double](1).toSeq)).toSeq
-      val cbSeq = cbF.select("subspace", "cluster", "centroid").collect()
-        .map(r => (r.get(0).asInstanceOf[Number].intValue,
-          r.get(1).asInstanceOf[Number].intValue,
-          r.getSeq[Double](2).toSeq)).toSeq
       graft.streaming.StreamOps.annServeStream(
-        e.where(col("vec_id") < 5), cellsSeq, cbSeq, cdF,
-        topK = 3, nprobe = 3).toDF()
+        e.where(col("vec_id") < 5), ceF, cbF, cdF, topK = 3, nprobe = 3).toDF()
     },
       // Mirrors stream_ann_topk (m=8, kc=64, nprobe=3, topK=3): the frozen
       // ADC serving twin (no rerank tail — the streaming face serves raw

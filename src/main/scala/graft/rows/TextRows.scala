@@ -340,11 +340,12 @@ private[graft] object TextRows {
             "SELECT * FROM graft_clf_score('graft_sql_docs_clf', 'graft_sql_clf_model')")
         } }),
     // model-in-the-loop curation AT INGEST: the scoring kernel is a
-    // narrow stateless map, so the stream face is the batch operator
-    // verbatim (StreamOpsSpec drives it as a real MemoryStream)
+    // narrow stateless map against a model read once at plan time, so the
+    // operator runs on a stream as it is (StreamOpsSpec drives it as a
+    // real MemoryStream)
     amortizedRow("stream_clf_score", (s, dir) =>
       frozenClfScore(s, dir, ClfStreamFrozenDir)(
-        graft.streaming.StreamOps.scoreStream(_, _)),
+        TextOps.logregScoreFrozen(_, _)),
       clfFrozenTwinSql(ClfStreamFrozenDir)),
     row("text_hashed_features", (s, dir) =>
       TextOps.hashedFeatures(Tables(s, dir).documents, dims = 64),

@@ -112,10 +112,11 @@ private[graft] object WebRows {
          |WHERE c.domain NOT IN (SELECT pattern FROM bl WHERE kind = 'domain')
          |  AND NOT EXISTS (SELECT 1 FROM bl b WHERE b.kind = 'prefix'
          |    AND starts_with(c.canonical_url, b.pattern))""".stripMargin,
-      // blocklist gate at ingest: narrow map + stream-static broadcast
-      // anti-joins — batch parity by construction
+      // blocklist gate at ingest: the operator is a narrow map plus
+      // stream-static broadcast anti-joins, so it runs on a stream as it
+      // is (StreamOpsSpec drives it as a real MemoryStream)
       face("stream_blocklist") { (s, dir) =>
-        graft.streaming.StreamOps.blocklistStream(
+        WebOps.blocklistFilter(
             webSynthDocs(Tables(s, dir).documents), webBlocklist(s))
           .select("doc_id", "url", "canonical_url", "domain") },
       face("sql_web_blocklist") { (s, dir) =>
@@ -238,10 +239,10 @@ private[graft] object WebRows {
          |  coalesce(w.path_prefix, '') AS matched_prefix
          |FROM d LEFT JOIN w ON d.doc_id = w.doc_id""".stripMargin,
       // the robots verdict is a stateless narrow map over a stream-static
-      // broadcast, so the stream face is the batch operator verbatim
+      // broadcast, so the operator runs on a stream as it is
       // (StreamOpsSpec drives it as a real MemoryStream)
       face("stream_robots") { (s, dir) =>
-        graft.streaming.StreamOps.robotsStream(
+        WebOps.robotsEval(
             webSynthDocs(Tables(s, dir).documents), robotsRules(s))
           .select("doc_id", "url", "domain", "path", "allowed",
             "matched_prefix") },

@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import graft.core.Sessions
+import graft.pipeline.Similarity
 import graft.ts.SeriesStore
 import graft.ts.model.Period
 
@@ -167,11 +168,37 @@ object StreamOps {
     */
   final case class StreamProgress(batchId: Long, numInputRows: Long, batchDurationMs: Long)
 
-  final case class SeriesState(lastTs: Long, lastValue: Double,
-      minValue: Double, maxValue: Double, n: Long)
+  /** The one keyed-state path of every stateful operator here: `rows`
+    * grouped by `key`, and each key's rows of a micro-batch folded by
+    * `step` from the key's previous state to `(next state, rows out)`. A
+    * `None` next state leaves the key's state as it was. With
+    * `idleTimeoutMs` a key idle longer than that much processing time is
+    * evicted (ProcessingTimeTimeout) and emits nothing; without it, state
+    * is kept forever.
+    */
+  private def keyedState[In, K: Encoder, S: Encoder, Out: Encoder](
+      rows: Dataset[In], idleTimeoutMs: Option[Long] = None,
+      mode: OutputMode = OutputMode.Append())(key: In => K)(
+      step: (K, Iterator[In], Option[S]) => (Option[S], Iterator[Out])): Dataset[Out] = {
+    require(idleTimeoutMs.forall(_ > 0), s"idleTimeoutMs must be positive: $idleTimeoutMs")
+    val timeout =
+      if (idleTimeoutMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
+      else GroupStateTimeout.NoTimeout
+    rows.groupByKey(key).flatMapGroupsWithState[S, Out](mode, timeout) {
+      (k, it, state: GroupState[S]) =>
+        if (state.hasTimedOut) {
+          state.remove()
+          Iterator.empty
+        } else {
+          val (next, out) = step(k, it, state.getOption)
+          next.foreach(state.update)
+          idleTimeoutMs.foreach(state.setTimeoutDuration)
+          out
+        }
+    }
+  }
+
   final case class PointIn(series_id: String, ts: Long, value: Double)
-  final case class SeriesUpdate(series_id: String, lastTs: Long, lastValue: Double,
-      minValue: Double, maxValue: Double, n: Long)
 
   final case class EwmaState(lastTs: Long, ewma: Double, n: Long)
   final case class EwmaUpdate(series_id: String, ts: Long, value: Double, ewma: Double)
@@ -207,34 +234,21 @@ object StreamOps {
   def ewmaStream(points: Dataset[PointIn], alpha: Double = 0.5,
       idleTimeoutMs: Option[Long] = None): Dataset[EwmaUpdate] = {
     require(alpha > 0 && alpha < 1, s"alpha must be in (0,1), got $alpha")
-    require(idleTimeoutMs.forall(_ > 0), s"idleTimeoutMs must be positive: $idleTimeoutMs")
     val spark = points.sparkSession
     import spark.implicits._
-    val timeoutConf =
-      if (idleTimeoutMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    points.groupByKey(_.series_id)
-      .flatMapGroupsWithState[EwmaState, EwmaUpdate](
-        OutputMode.Append(), timeoutConf) {
-        (key, batch, state: GroupState[EwmaState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var st = state.getOption.getOrElse(EwmaState(Long.MinValue, Double.NaN, 0L))
-            val out = Vector.newBuilder[EwmaUpdate]
-            batch.toVector.sortBy(p => (p.ts, p.value)).foreach { p =>
-              if (p.ts > st.lastTs && !p.value.isNaN) {
-                val e = if (st.n == 0) p.value else alpha * st.ewma + (1 - alpha) * p.value
-                st = EwmaState(p.ts, e, st.n + 1)
-                out += EwmaUpdate(key, p.ts, p.value, e)
-              }
-            }
-            state.update(st)
-            idleTimeoutMs.foreach(state.setTimeoutDuration)
-            out.result().iterator
+    keyedState(points, idleTimeoutMs)(_.series_id) {
+      (key, batch, prev: Option[EwmaState]) =>
+        var st = prev.getOrElse(EwmaState(Long.MinValue, Double.NaN, 0L))
+        val out = Vector.newBuilder[EwmaUpdate]
+        batch.toVector.sortBy(p => (p.ts, p.value)).foreach { p =>
+          if (p.ts > st.lastTs && !p.value.isNaN) {
+            val e = if (st.n == 0) p.value else alpha * st.ewma + (1 - alpha) * p.value
+            st = EwmaState(p.ts, e, st.n + 1)
+            out += EwmaUpdate(key, p.ts, p.value, e)
           }
-      }
+        }
+        (Some(st), out.result().iterator)
+    }
   }
 
   final case class BandRow(doc_id: Long, sh: Seq[String], band: Int, band_hash: Long)
@@ -270,7 +284,6 @@ object StreamOps {
   def nearDupStream(docs: DataFrame, shingleK: Int = 3, bands: Int = 8,
       rowsPerBand: Int = 4, threshold: Double = 0.5,
       idleTimeoutMs: Option[Long] = None): Dataset[DupPair] = {
-    require(idleTimeoutMs.forall(_ > 0), s"idleTimeoutMs must be positive: $idleTimeoutMs")
     val spark = docs.sparkSession
     import spark.implicits._
     import graft.pipeline.{Dedup, TextOps}
@@ -305,36 +318,23 @@ object StreamOps {
       }
       inter.toDouble / (a.length + b.length - inter).toDouble
     }
-    val timeoutConf =
-      if (idleTimeoutMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    banded.groupByKey(r => (r.band, r.band_hash))
-      .flatMapGroupsWithState[BucketState, DupPair](
-        OutputMode.Append(), timeoutConf) {
-        (_, rows, state: GroupState[BucketState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var seen = state.getOption.map(_.docs).getOrElse(Vector.empty)
-            val out = Vector.newBuilder[DupPair]
-            // ingest-order determinism inside a micro-batch: by doc_id
-            rows.toVector.sortBy(_.doc_id).foreach { r =>
-              seen.foreach { case (oid, osh) =>
-                if (oid != r.doc_id) {
-                  val jv = jacc(osh, r.sh)
-                  if (jv >= threshold)
-                    out += DupPair(math.min(oid, r.doc_id), math.max(oid, r.doc_id), jv)
-                }
-              }
-              seen = seen :+ (r.doc_id -> r.sh)
+    keyedState(banded, idleTimeoutMs)(r => (r.band, r.band_hash)) {
+      (_, rows, prev: Option[BucketState]) =>
+        var seen = prev.map(_.docs).getOrElse(Vector.empty)
+        val out = Vector.newBuilder[DupPair]
+        // ingest-order determinism inside a micro-batch: by doc_id
+        rows.toVector.sortBy(_.doc_id).foreach { r =>
+          seen.foreach { case (oid, osh) =>
+            if (oid != r.doc_id) {
+              val jv = jacc(osh, r.sh)
+              if (jv >= threshold)
+                out += DupPair(math.min(oid, r.doc_id), math.max(oid, r.doc_id), jv)
             }
-            state.update(BucketState(seen))
-            idleTimeoutMs.foreach(state.setTimeoutDuration)
-            out.result().iterator
           }
-      }
-      .dropDuplicates("id_a", "id_b")
+          seen = seen :+ (r.doc_id -> r.sh)
+        }
+        (Some(BucketState(seen)), out.result().iterator)
+    }.dropDuplicates("id_a", "id_b")
   }
 
   final case class LineRow(k: String, doc_id: Long, line_no: Int, line: String)
@@ -368,7 +368,6 @@ object StreamOps {
     */
   def lineDedupStream(docs: DataFrame,
       idleTimeoutMs: Option[Long] = None): Dataset[KeptLine] = {
-    require(idleTimeoutMs.forall(_ > 0), s"idleTimeoutMs must be positive: $idleTimeoutMs")
     val spark = docs.sparkSession
     import spark.implicits._
     val lines = docs
@@ -378,27 +377,16 @@ object StreamOps {
       .where(col("k") =!= "")
       .select("k", "doc_id", "line_no", "line")
       .as[LineRow]
-    val timeoutConf =
-      if (idleTimeoutMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    lines.groupByKey(_.k)
-      .flatMapGroupsWithState[LineKeyState, KeptLine](
-        OutputMode.Append(), timeoutConf) {
-        (_, rows, state: GroupState[LineKeyState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val alreadySeen = state.exists
-            state.update(LineKeyState(true))
-            idleTimeoutMs.foreach(state.setTimeoutDuration)
-            if (alreadySeen) Iterator.empty
-            else {
-              val first = rows.minBy(r => (r.doc_id, r.line_no))
-              Iterator.single(KeptLine(first.doc_id, first.line_no, first.line))
-            }
+    keyedState(lines, idleTimeoutMs)(_.k) {
+      (_, rows, prev: Option[LineKeyState]) =>
+        val kept =
+          if (prev.isDefined) Iterator.empty
+          else {
+            val first = rows.minBy(r => (r.doc_id, r.line_no))
+            Iterator.single(KeptLine(first.doc_id, first.line_no, first.line))
           }
-      }
+        (Some(LineKeyState(true)), kept)
+    }
   }
 
   /** Per-domain crawl-rate windows AT INGEST — the streaming face of
@@ -462,77 +450,69 @@ object StreamOps {
       graft.pipeline.WebOps.urlDomain(col(urlCol)).as("domain"),
       expr(s"`$tsCol` div 1000000").cast("long").as("arrival_ms"))
       .as[FetchRow]
-    rows.groupByKey(_.domain)
-      .flatMapGroupsWithState[FetchSchedState, FetchSlot](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (key, it, state: GroupState[FetchSchedState]) =>
-          var n = state.getOption.map(_.n).getOrElse(0L)
-          var m = state.getOption.map(_.m).getOrElse(Long.MinValue)
-          val out = it.toArray.sortBy(_.event_id).map { r =>
-            val v = r.arrival_ms - delayMs * n
-            if (v > m) m = v
-            val sched = delayMs * n + m
-            val slot = FetchSlot(r.event_id, key, r.arrival_ms, n, sched,
-              sched - r.arrival_ms)
-            n += 1
-            slot
-          }
-          if (out.nonEmpty) state.update(FetchSchedState(n, m))
-          out.iterator
-      }
+    keyedState(rows)(_.domain) {
+      (key, it, prev: Option[FetchSchedState]) =>
+        var n = prev.map(_.n).getOrElse(0L)
+        var m = prev.map(_.m).getOrElse(Long.MinValue)
+        val out = it.toArray.sortBy(_.event_id).map { r =>
+          val v = r.arrival_ms - delayMs * n
+          if (v > m) m = v
+          val sched = delayMs * n + m
+          val slot = FetchSlot(r.event_id, key, r.arrival_ms, n, sched,
+            sched - r.arrival_ms)
+          n += 1
+          slot
+        }
+        (Some(FetchSchedState(n, m)), out.iterator)
+    }
   }
 
-  final case class UrlRow(canonical_url: String, doc_id: Long)
-  final case class UrlIdState(keeper: Long, n: Long)
+  final case class KeeperState(keeper: Long, n: Long)
   final case class UrlIdentity(canonical_url: String, keeper_doc_id: Long,
       n_variants: Long)
+  final case class ConvIdentity(conv_hash: String, keeper_conv_id: Long,
+      n_copies: Long)
+
+  /** The identity fold of [[urlDedupStream]] and [[convDedupStream]]:
+    * `keyed` holds one `(identity key, id)` row per arrival, and per key
+    * the state is TWO LONGS — the keeper (least id seen) and the row count.
+    * Each batch emits the UPDATED `(key, keeper, count)` row for the keys
+    * it touched (Update mode; the last emission per key is the batch
+    * answer). On a static frame every group is one invocation from empty
+    * state, so the output is the batch operator's row set.
+    */
+  private def keeperFold(keyed: DataFrame): DataFrame = {
+    val spark = keyed.sparkSession
+    import spark.implicits._
+    keyedState(keyed.as[(String, Long)], mode = OutputMode.Update())(_._1) {
+      (key, it, prev: Option[KeeperState]) =>
+        var keeper = prev.map(_.keeper).getOrElse(Long.MaxValue)
+        var n = prev.map(_.n).getOrElse(0L)
+        it.foreach { case (_, id) =>
+          if (id < keeper) keeper = id
+          n += 1
+        }
+        (Some(KeeperState(keeper, n)), Iterator.single((key, keeper, n)))
+    }.toDF()
+  }
 
   /** Streaming URL-identity dedup — the crawl-ingest face of
     * [[graft.pipeline.WebOps.urlDedup]]: refetches arriving across
     * micro-batches collapse onto their canonical identity
     * ([[graft.pipeline.WebOps.canonicalizeUrl]] as a stateless narrow map
-    * riding the ingest), and per canonical key the state is TWO LONGS —
-    * keeper id (min doc id seen) and variant count — bounded by #distinct
-    * pages, never by fetch volume. Each batch emits the UPDATED identity
-    * row for keys it touched (the running crawl-dedup report; the last
-    * emission per key is the batch answer). Batch parity is exact: on a
-    * static frame every group is one invocation from empty state, so the
-    * output IS urlDedup's row set (the stream_pq_addbatch gate pattern —
-    * the oracle row runs this kernel in batch mode against the batch
-    * face's twin SQL).
+    * riding the ingest), folded by [[keeperFold]] — state bounded by
+    * #distinct pages, never by fetch volume. Batch parity is exact (the
+    * oracle row runs this operator in batch mode against the batch face's
+    * twin SQL).
     */
   def urlDedupStream(docs: DataFrame, urlCol: String = "url",
       idCol: String = "doc_id"): Dataset[UrlIdentity] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val rows = docs.select(
-        graft.pipeline.WebOps.canonicalizeUrl(col(urlCol))
-          .as("canonical_url"),
-        col(idCol).cast("long").as("doc_id")).as[UrlRow]
-    rows.groupByKey(_.canonical_url)
-      .flatMapGroupsWithState[UrlIdState, UrlIdentity](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout) {
-        (key, it, state: GroupState[UrlIdState]) =>
-          var keeper = state.getOption.map(_.keeper).getOrElse(Long.MaxValue)
-          var n = state.getOption.map(_.n).getOrElse(0L)
-          var touched = false
-          it.foreach { r =>
-            touched = true
-            if (r.doc_id < keeper) keeper = r.doc_id
-            n += 1
-          }
-          if (!touched) Iterator.empty
-          else {
-            state.update(UrlIdState(keeper, n))
-            Iterator.single(UrlIdentity(key, keeper, n))
-          }
-      }
+    keeperFold(docs.select(graft.pipeline.WebOps.canonicalizeUrl(col(urlCol)),
+        col(idCol).cast("long")))
+      .toDF("canonical_url", "keeper_doc_id", "n_variants").as[UrlIdentity]
   }
-
-  final case class ConvRow(conv_hash: String, conv_id: Long)
-  final case class ConvIdState(keeper: Long, n: Long)
-  final case class ConvIdentity(conv_hash: String, keeper_conv_id: Long,
-      n_copies: Long)
 
   /** Streaming conversation dedup — the SFT-ingest face of
     * [[graft.pipeline.ChatOps.conversationDedup]]: conversations arriving
@@ -541,85 +521,18 @@ object StreamOps {
     * `(conv_id, text)` — an SFT ingest record is a whole conversation, and
     * [[graft.pipeline.ChatOps.renderChat]]'s template is per-record narrow
     * work at that point — so the md5 identity key is a stateless map
-    * riding the ingest, and per rendered identity the state is TWO LONGS
-    * (keeper conv id + copy count), bounded by #distinct conversations.
-    * Each batch emits the updated identity row for keys it touched; batch
-    * parity is exact (one invocation per group from empty state — the
-    * [[urlDedupStream]] pattern, and the oracle row runs this kernel in
-    * batch mode against the batch face's twin SQL).
+    * riding the ingest, folded by [[keeperFold]] (keeper conv id + copy
+    * count per rendered identity, bounded by #distinct conversations).
+    * Batch parity is exact (the oracle row runs this operator in batch
+    * mode against the batch face's twin SQL).
     */
   def convDedupStream(convs: DataFrame, idCol: String = "conv_id",
       textCol: String = "text"): Dataset[ConvIdentity] = {
     val spark = convs.sparkSession
     import spark.implicits._
-    val rows = convs.select(md5(col(textCol)).as("conv_hash"),
-      col(idCol).cast("long").as("conv_id")).as[ConvRow]
-    rows.groupByKey(_.conv_hash)
-      .flatMapGroupsWithState[ConvIdState, ConvIdentity](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout) {
-        (key, it, state: GroupState[ConvIdState]) =>
-          var keeper = state.getOption.map(_.keeper).getOrElse(Long.MaxValue)
-          var n = state.getOption.map(_.n).getOrElse(0L)
-          var touched = false
-          it.foreach { r =>
-            touched = true
-            if (r.conv_id < keeper) keeper = r.conv_id
-            n += 1
-          }
-          if (!touched) Iterator.empty
-          else {
-            state.update(ConvIdState(keeper, n))
-            Iterator.single(ConvIdentity(key, keeper, n))
-          }
-      }
+    keeperFold(convs.select(md5(col(textCol)), col(idCol).cast("long")))
+      .toDF("conv_hash", "keeper_conv_id", "n_copies").as[ConvIdentity]
   }
-
-  /** Blocklist gate on a crawl-ingest stream — the streaming face of
-    * [[graft.pipeline.WebOps.blocklistFilter]]: documents from blocked
-    * registered domains / canonical-URL prefixes are dropped the moment
-    * they arrive, BEFORE any content processing or state. Because the
-    * batch operator is a narrow map (canonical identities) plus two
-    * STREAM-STATIC broadcast anti-joins (the blocklist is a bounded batch
-    * relation, read once at plan time and frozen for the stream's
-    * lifetime — restart to pick up new rules), the SAME operator runs
-    * unmodified on a streaming frame: no state, no watermark, exact batch
-    * parity by construction. StreamOpsSpec drives it as a real
-    * MemoryStream.
-    */
-  def blocklistStream(docs: DataFrame, blocklist: DataFrame,
-      urlCol: String = "url"): DataFrame =
-    graft.pipeline.WebOps.blocklistFilter(docs, blocklist, urlCol)
-
-  /** Robots-rules verdicts on a crawl-ingest stream — the streaming face
-    * of [[graft.pipeline.WebOps.robotsEval]]: each arriving URL gets its
-    * (allowed, matched_prefix) verdict under longest-match/allow-tie REP
-    * semantics. The rules side is a bounded batch relation pre-grouped to
-    * per-domain arrays and broadcast (stream-static equi-join), and the
-    * verdict itself is a per-row fold over that domain's few rules — a
-    * stateless narrow map, so the batch operator runs unmodified on a
-    * streaming frame with exact batch parity (restart the stream to pick
-    * up re-fetched robots rules). StreamOpsSpec drives it as a real
-    * MemoryStream.
-    */
-  def robotsStream(docs: DataFrame, rules: DataFrame,
-      urlCol: String = "url"): DataFrame =
-    graft.pipeline.WebOps.robotsEval(docs, rules, urlCol)
-
-  /** Frozen-classifier scoring on a document stream — model-in-the-loop
-    * curation AT INGEST (the CCNet/fastText filter applied before a
-    * document ever lands in the corpus). Because
-    * [[graft.pipeline.TextOps.logregScoreFrozen]] is a NARROW map (the
-    * LogregLogit kernel scores each document in one JVM call against
-    * driver-literal weights — no shuffle, no aggregation, no state), the
-    * SAME operator runs unmodified on a streaming frame: this face just
-    * documents and pins that property. The model is a BATCH relation
-    * (read once at plan time, frozen for the query's lifetime — restart
-    * the stream to pick up a retrained model). Batch parity is exact by
-    * construction: there is no state to diverge.
-    */
-  def scoreStream(docs: DataFrame, model: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    graft.pipeline.TextOps.logregScoreFrozen(docs, model, idCol, textCol)
 
   final case class SemVecRow(vec_id: Long, cell: Long, v: Seq[Double])
   final case class SemCellState(vecs: Seq[(Long, Seq[Double])])
@@ -630,11 +543,12 @@ object StreamOps {
     * centroid codebook — the ingest-time companion of
     * [[graft.pipeline.IncrementalSemDedup]] (same frozen-codebook policy:
     * the coarse cells are trained once and never retrained by the stream).
-    * Each arriving vector routes to its nearest centroid (driver-local
-    * argmin over the metadata-scale codebook with EXACTLY the batch
-    * assignment's arithmetic: left-to-right squared-L2 fold, (dist,
-    * cluster) tie-break) and compares against the vectors its cell has
-    * seen so far by the same single-pass cosine as the VecCosine kernel —
+    * Each arriving vector routes to its nearest centroid through the
+    * ArgminSqDist kernel of [[graft.pipeline.Similarity.assignToCentroids]]
+    * (a vector the kernel assigns no cell — wrong width, a null or NaN
+    * element — is dropped, as the batch face's cell join drops it) and
+    * compares against the vectors its cell has seen so far by
+    * [[graft.pipeline.Similarity.cosineLocal]], VecCosine's exact fold —
     * a paraphrase-level duplicate is flagged the moment its second member
     * arrives, pairing across micro-batches through the cell state.
     *
@@ -652,82 +566,44 @@ object StreamOps {
       vecCol: String = "embedding",
       idleTimeoutMs: Option[Long] = None): Dataset[SemDupPair] = {
     require(centroids.nonEmpty, "centroids must be non-empty")
-    require(idleTimeoutMs.forall(_ > 0), s"idleTimeoutMs must be positive: $idleTimeoutMs")
     val spark = vecs.sparkSession
     import spark.implicits._
-    val cents: Array[(Long, Array[Double])] =
-      centroids.sortBy(_._1).map { case (c, v) => (c, v.toArray) }.toArray
-    // UNBOXED kernels: the decoded Seq[Double] pays a virtual boxed
-    // apply() per element inside the per-cell quadratic scan (measured
-    // ~7 µs/pair — ~100× the primitive loop); converting each vector to
-    // Array[Double] ONCE (per ingest row / per state load) makes the hot
-    // loop primitive. Arithmetic is unchanged: same element order, same
-    // double accumulation, so every emitted cosine is bit-identical.
-    def bestCell(v: Array[Double]): Long = {
-      var bestC = -1L
-      var bestD = Double.PositiveInfinity
-      cents.foreach { case (c, cv) =>
-        // same fold as Similarity.sqDist: (x-y)^2 accumulated in element
-        // order from 0.0; ties to the lowest cluster id (cents sorted asc,
-        // strict < keeps the first == lowest)
-        var d = 0.0
-        var i = 0
-        val n = math.min(v.length, cv.length)
-        while (i < n) { val t = v(i) - cv(i); d += t * t; i += 1 }
-        if (d < bestD) { bestD = d; bestC = c }
-      }
-      bestC
-    }
-    // same single-pass accumulation as the VecCosine kernel
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) {
-        val x = a(i); val y = b(i)
-        dot += x * y; na += x * x; nb += y * y; i += 1
-      }
-      dot / (math.sqrt(na) * math.sqrt(nb))
-    }
+    val cents = centroids.sortBy(_._1)
     val routed = vecs
       .select(col(idCol).cast("long").as("vec_id"),
         col(vecCol).cast("array<double>").as("v"))
-      .as[(Long, Seq[Double])]
-      .map { case (id, v) => SemVecRow(id, bestCell(v.toArray), v) }
-    val timeoutConf =
-      if (idleTimeoutMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    routed.groupByKey(_.cell)
-      .flatMapGroupsWithState[SemCellState, SemDupPair](
-        OutputMode.Append(), timeoutConf) {
-        (cell, rows, state: GroupState[SemCellState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var seen: Vector[(Long, Array[Double])] = state.getOption
-              .map(_.vecs.iterator.map { case (i, v) => (i, v.toArray) }.toVector)
-              .getOrElse(Vector.empty)
-            val out = Vector.newBuilder[SemDupPair]
-            // ingest-order determinism inside a micro-batch: by vec_id
-            rows.toVector.sortBy(_.vec_id).foreach { r =>
-              val rv = r.v.toArray
-              seen.foreach { case (oid, ov) =>
-                if (oid != r.vec_id) {
-                  val cv = cos(ov, rv)
-                  if (cv >= threshold)
-                    out += SemDupPair(cell, math.min(oid, r.vec_id),
-                      math.max(oid, r.vec_id), cv)
-                }
-              }
-              seen = seen :+ (r.vec_id -> rv)
+      .select(col("vec_id"), col("v"), graft.functions.Signatures.argminSqDist(
+        col("v"), cents.map(_._1), cents.map(_._2)).getField("cluster").as("cell"))
+      .as[(Long, Seq[Double], Option[Long])]
+      .flatMap { case (id, v, cell) => cell.map(SemVecRow(id, _, v)) }
+    // UNBOXED state: the decoded Seq[Double] pays a virtual boxed apply()
+    // per element inside the per-cell quadratic scan (measured ~7 µs/pair
+    // — ~100× the primitive loop); converting each vector to
+    // Array[Double] ONCE (per ingest row / per state load) makes the hot
+    // loop primitive
+    keyedState(routed, idleTimeoutMs)(_.cell) {
+      (cell, rows, prev: Option[SemCellState]) =>
+        var seen: Vector[(Long, Array[Double])] = prev
+          .map(_.vecs.iterator.map { case (i, v) => (i, v.toArray) }.toVector)
+          .getOrElse(Vector.empty)
+        val out = Vector.newBuilder[SemDupPair]
+        // ingest-order determinism inside a micro-batch: by vec_id
+        rows.toVector.sortBy(_.vec_id).foreach { r =>
+          val rv = r.v.toArray
+          seen.foreach { case (oid, ov) =>
+            if (oid != r.vec_id) {
+              val cv = Similarity.cosineLocal(ov, rv)
+              if (cv >= threshold)
+                out += SemDupPair(cell, math.min(oid, r.vec_id),
+                  math.max(oid, r.vec_id), cv)
             }
-            state.update(SemCellState(seen.map { case (i, a) =>
-              (i, scala.collection.immutable.ArraySeq.unsafeWrapArray(a): Seq[Double])
-            }))
-            idleTimeoutMs.foreach(state.setTimeoutDuration)
-            out.result().iterator
           }
-      }
+          seen = seen :+ (r.vec_id -> rv)
+        }
+        (Some(SemCellState(seen.map { case (i, a) =>
+          (i, scala.collection.immutable.ArraySeq.unsafeWrapArray(a): Seq[Double])
+        })), out.result().iterator)
+    }
   }
 
   final case class AnnProbe(query_id: Long, v: Seq[Double], cell: Long)
@@ -737,13 +613,15 @@ object StreamOps {
     adc_dist: Double)
 
   /** Streaming ANN serving over a FROZEN IVF-PQ index — the online face
-    * of [[graft.pipeline.Similarity.ivfPqAdcTopKFrozen]], for the
+    * of [[graft.pipeline.Similarity.ivfPqAdcTopKFrozen]], taking the same
+    * frozen `(cells, codebooks, codes)` frames, for the
     * retrieval-at-ingest shape (each arriving query vector is answered
     * from the persisted index; nothing retrains): the query probes the
-    * frozen cell centroids (driver-literal, metadata-scale — the
+    * frozen cell centroids (collected once, metadata-scale — the
     * [[semanticDupStream]] frozen-codebook policy) with EXACTLY the batch
-    * probe's arithmetic (VecCosine's one-pass fold, csim desc / cell asc,
-    * NaN ordered greatest like Spark's desc), fans out to its `nprobe`
+    * probe's arithmetic ([[graft.pipeline.Similarity.cosineLocal]],
+    * VecCosine's fold; csim desc / cell asc, NaN ordered greatest like
+    * Spark's desc), fans out to its `nprobe`
     * cells, stream-static-joins the frozen code table on the cell key —
     * so unprobed cells never enter the stream — and a per-query group
     * computes the subspace-ordered ADC sums and the (adc asc, id asc)
@@ -759,63 +637,48 @@ object StreamOps {
     * from the same frozen parquet). Contract: one arrival per query id —
     * a query id re-arriving in a later micro-batch is served again
     * against that batch alone (serving is stateless by design: the index
-    * is frozen, so there is nothing to remember between queries). A
-    * query whose dimension disagrees with the frozen geometry raises
-    * (the [[graft.pipeline.Similarity.pqAdcTopKFrozen]] serving guard).
+    * is frozen, so there is nothing to remember between queries). The
+    * codebooks' geometry is checked as every frozen consumer checks it,
+    * and a query whose dimension disagrees with it raises from its row.
     */
-  def annServeStream(queries: DataFrame, cells: Seq[(Long, Seq[Double])],
-      codebooks: Seq[(Int, Int, Seq[Double])], codes: DataFrame,
+  def annServeStream(queries: DataFrame, cells: DataFrame,
+      codebooks: DataFrame, codes: DataFrame,
       topK: Int, nprobe: Int, idCol: String = "vec_id",
       vecCol: String = "embedding"): Dataset[AnnHit] = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    require(cells.nonEmpty, "cells must be non-empty")
-    require(codebooks.nonEmpty, "codebooks must be non-empty")
     val spark = queries.sparkSession
     import spark.implicits._
-    val m = codebooks.map(_._1).distinct.size
-    require(codebooks.map(_._1).toSet == (0 until m).toSet,
-      s"codebooks must cover subspaces 0..${m - 1}")
-    val subs = codebooks.map(_._3.length).toSet
-    require(subs.size == 1,
-      s"all codebook centroids must share one width, got $subs")
-    val sub = subs.head
+    val pq = Similarity.readBooks(codebooks)
+    val sub = pq.sub
+    val cents: Array[(Long, Array[Double])] = cells
+      .select(col("cell").cast("long"), col("centroid").cast("array<double>"))
+      .as[(Long, Seq[Double])].collect().map { case (c, v) => (c, v.toArray) }
+    require(cents.nonEmpty, "cells must be non-empty")
     // geometry guard on the FROZEN CELLS too: a mis-shaped cells relation
     // (centroid width != m·sub) would silently truncate the probe fold
     // and diverge from the batch probe — fail loudly at construction,
     // like the query-side dimension guard below
-    require(cells.forall(_._2.length == m * sub),
-      s"every frozen cell centroid must have the model's m*sub = ${m * sub} " +
-        s"dimensions, got widths ${cells.map(_._2.length).distinct.sorted}")
-    val cents: Array[(Long, Array[Double])] =
-      cells.map { case (c, v) => (c, v.toArray) }.toArray
+    require(cents.forall(_._2.length == pq.m * sub),
+      s"every frozen cell centroid must have the model's m*sub = ${pq.m * sub} " +
+        s"dimensions, got widths ${cents.map(_._2.length).distinct.sorted.mkString(", ")}")
     val cbMap: Map[(Int, Int), Array[Double]] =
-      codebooks.map { case (j, c, v) => (j, c) -> v.toArray }.toMap
-    // VecCosine's exact fold (dot/na/nb accumulated per element in order)
-    def cos(a: Seq[Double], b: Array[Double]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) {
-        val x = a(i); val y = b(i)
-        dot += x * y; na += x * x; nb += y * y; i += 1
-      }
-      dot / (math.sqrt(na) * math.sqrt(nb))
-    }
+      pq.books.zipWithIndex.flatMap { case (book, j) =>
+        book.map { case (c, v) => (j, c.toInt) -> v.toArray }
+      }.toMap
     // VecSqDist's exact fold over one subspace slice
     def sqd(v: Seq[Double], j: Int, c: Array[Double]): Double = {
       var acc = 0.0; var i = 0
       while (i < sub) { val t = v(j * sub + i) - c(i); acc += t * t; i += 1 }
       acc
     }
-    val probed = queries
+    val probed = queries.where(pq.dimGuard(col(vecCol), "query vector"))
       .select(col(idCol).cast("long").as("query_id"),
         col(vecCol).cast("array<double>").as("v"))
       .as[(Long, Seq[Double])]
       .flatMap { case (qid, v) =>
-        if (v.length != m * sub) throw new IllegalArgumentException(
-          s"query vector dimension ${v.length} must equal the frozen " +
-            s"model's m*sub = ${m * sub}")
-        cents.map { case (c, cv) => (c, cos(v, cv)) }
+        val va = v.toArray
+        cents.map { case (c, cv) => (c, Similarity.cosineLocal(va, cv)) }
           .sortWith { (a, b) =>
             val cmp = java.lang.Double.compare(a._2, b._2)
             if (cmp != 0) cmp > 0 else a._1 < b._1
@@ -831,120 +694,82 @@ object StreamOps {
       .select(col("query_id"), col("v"), col("neighbor_id"),
         col("subspace"), col("cluster"))
       .as[AnnCand]
-    cand.groupByKey(_.query_id)
-      .flatMapGroupsWithState[Boolean, AnnHit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (qid, rows, _: GroupState[Boolean]) =>
-          // INCREMENTAL fold over the candidate iterator — never
-          // materialize the candidate row set (m·nprobe·(n/#cells) rows,
-          // each carrying a deserialized copy of the query vector: at real
-          // corpus sizes a toVector here is hundreds of MB of executor
-          // heap per in-flight query). Retained state is O(#neighbors·m):
-          // one (subspace, dist) slot per neighbor code — the distances
-          // are memoized per (subspace, cluster), and the query vector is
-          // kept ONCE from the first row. The final per-neighbor sum runs
-          // subspace-ordered from 0.0 — the batch fold's exact float-op
-          // sequence — so this face stays bit-equal to ivfPqAdcTopKFrozen.
-          if (!rows.hasNext) Iterator.empty
-          else {
-            var v: Seq[Double] = null
-            // per-(subspace, cluster) distance table, memoized per query
-            val dt = scala.collection.mutable.HashMap.empty[(Int, Int), Double]
-            // neighbor -> its (subspace, dist) pairs, filled as rows stream
-            val perN = scala.collection.mutable.HashMap
-              .empty[Long, scala.collection.mutable.ArrayBuffer[(Int, Double)]]
-            rows.foreach { c =>
-              if (v == null) v = c.v
-              if (c.neighbor_id != qid) {
-                val d = dt.getOrElseUpdate((c.subspace, c.cluster),
-                  sqd(v, c.subspace, cbMap((c.subspace, c.cluster))))
-                perN.getOrElseUpdate(c.neighbor_id,
-                  scala.collection.mutable.ArrayBuffer.empty) += ((c.subspace, d))
-              }
-            }
-            val scoredN = perN.iterator
-              .map { case (nid, ds0) =>
-                // subspace-ordered sum from 0.0 — the batch fold's order
-                // (stable sort: ties keep arrival order, as the batch
-                // face's sortBy does)
-                val ds = ds0.sortBy(_._1)
-                var acc = 0.0
-                ds.foreach { case (_, d) => acc += d }
-                (nid, acc)
-              }
-              .toVector
-              .sortWith { (a, b) =>
-                val cmp = java.lang.Double.compare(a._2, b._2)
-                if (cmp != 0) cmp < 0 else a._1 < b._1
-              }
-            scoredN.take(topK).zipWithIndex.map { case ((nid, d), i) =>
-              AnnHit(qid, nid, i + 1, d)
-            }.iterator
+    keyedState(cand)(_.query_id) {
+      (qid, rows, _: Option[Boolean]) =>
+        // INCREMENTAL fold over the candidate iterator — never
+        // materialize the candidate row set (m·nprobe·(n/#cells) rows,
+        // each carrying a deserialized copy of the query vector: at real
+        // corpus sizes a toVector here is hundreds of MB of executor
+        // heap per in-flight query). Retained state is O(#neighbors·m):
+        // one (subspace, dist) slot per neighbor code — the distances
+        // are memoized per (subspace, cluster), and the query vector is
+        // kept ONCE from the first row. The final per-neighbor sum runs
+        // subspace-ordered from 0.0 — the batch fold's exact float-op
+        // sequence — so this face stays bit-equal to ivfPqAdcTopKFrozen.
+        var v: Seq[Double] = null
+        // per-(subspace, cluster) distance table, memoized per query
+        val dt = scala.collection.mutable.HashMap.empty[(Int, Int), Double]
+        // neighbor -> its (subspace, dist) pairs, filled as rows stream
+        val perN = scala.collection.mutable.HashMap
+          .empty[Long, scala.collection.mutable.ArrayBuffer[(Int, Double)]]
+        rows.foreach { c =>
+          if (v == null) v = c.v
+          if (c.neighbor_id != qid) {
+            val d = dt.getOrElseUpdate((c.subspace, c.cluster),
+              sqd(v, c.subspace, cbMap((c.subspace, c.cluster))))
+            perN.getOrElseUpdate(c.neighbor_id,
+              scala.collection.mutable.ArrayBuffer.empty) += ((c.subspace, d))
           }
-      }
+        }
+        val scoredN = perN.iterator
+          .map { case (nid, ds0) =>
+            // subspace-ordered sum from 0.0 — the batch fold's order
+            // (stable sort: ties keep arrival order, as the batch
+            // face's sortBy does)
+            val ds = ds0.sortBy(_._1)
+            var acc = 0.0
+            ds.foreach { case (_, d) => acc += d }
+            (nid, acc)
+          }
+          .toVector
+          .sortWith { (a, b) =>
+            val cmp = java.lang.Double.compare(a._2, b._2)
+            if (cmp != 0) cmp < 0 else a._1 < b._1
+          }
+        // serving keeps no state: the index is frozen
+        (Option.empty[Boolean], scoredN.take(topK).zipWithIndex.map { case ((nid, d), i) =>
+          AnnHit(qid, nid, i + 1, d)
+        }.iterator)
+    }
   }
-
-  final case class PqCode(vec_id: Long, subspace: Int, cluster: Long,
-    dist: Double)
 
   /** Streaming PQ-index MAINTENANCE — the online face of
     * [[graft.pipeline.Similarity.pqEncodeFrozen]], for the
     * encode-at-arrival shape (each arriving vector is encoded against the
-    * persisted codebooks; nothing retrains): per subspace slice the
-    * argmin cluster by squared L2 with EXACTLY the training assignment's
-    * arithmetic — VecSqDist's element-order fold over the slice, clusters
-    * scanned ascending so equal distances keep the smallest cluster (the
-    * batch assignStep's (dist, cluster) struct-min tie-break) — so codes
-    * produced at ingest are indistinguishable from codes the original
-    * training would have assigned. Codebooks are driver-literal
-    * (metadata-scale, the [[annServeStream]] frozen-model policy); the op
+    * persisted codebooks; nothing retrains). The codebooks are read once
+    * on the driver with pqEncodeFrozen's geometry check, and each vector
+    * is encoded by the same ArgminSqDist pass (`Similarity.pqCodes`), so
+    * codes produced at ingest are the batch maintenance codes bit for bit
+    * — a subspace slice the kernel assigns no cluster (a NaN or null
+    * element) gets a null cluster and dist, as in the batch face. The op
     * is a stateless narrow map, so it runs identically on a batch frame
     * (the `stream_pq_addbatch` gate aliases the `sim_pq_addbatch` twin)
-    * and on a stream in Append mode with zero state. A vector whose
-    * dimension disagrees with the frozen geometry raises (the
-    * pqEncodeFrozen guard). Output: (vec_id, subspace, cluster, dist),
-    * one row per (vector, subspace).
+    * and on a stream in Append mode with zero state; since no job may
+    * scan a stream, the vector width is checked per row, and a vector
+    * whose width is not the frozen model's m·sub raises from its row.
+    * Output: (vec_id, subspace, cluster, dist), one row per (vector,
+    * subspace).
     */
-  def pqEncodeStream(vecs: DataFrame,
-      codebooks: Seq[(Int, Long, Seq[Double])], idCol: String = "vec_id",
-      vecCol: String = "embedding"): Dataset[PqCode] = {
-    require(codebooks.nonEmpty, "codebooks must be non-empty")
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val m = codebooks.map(_._1).distinct.size
-    require(codebooks.map(_._1).toSet == (0 until m).toSet,
-      s"codebooks must cover subspaces 0..${m - 1}")
-    val subs = codebooks.map(_._3.length).toSet
-    require(subs.size == 1,
-      s"all codebook centroids must share one width, got $subs")
-    val sub = subs.head
-    // per subspace, clusters ASCENDING: scanning order IS the tie-break
-    val cbArr: Array[Array[(Long, Array[Double])]] =
-      (0 until m).map(j => codebooks.filter(_._1 == j).sortBy(_._2)
-        .map { case (_, c, v) => (c, v.toArray) }.toArray).toArray
-    vecs.select(col(idCol).cast("long").as("vec_id"),
-        col(vecCol).cast("array<double>").as("v"))
-      .as[(Long, Seq[Double])]
-      .flatMap { case (id, v) =>
-        if (v.length != m * sub) throw new IllegalArgumentException(
-          s"vector dimension ${v.length} must equal the frozen " +
-            s"model's m*sub = ${m * sub}")
-        (0 until m).iterator.map { j =>
-          var bestC = -1L; var bestD = 0.0; var first = true
-          cbArr(j).foreach { case (c, cent) =>
-            // VecSqDist's exact fold over the subspace slice
-            var acc = 0.0; var i = 0
-            while (i < sub) {
-              val t = v(j * sub + i) - cent(i); acc += t * t; i += 1
-            }
-            if (first || java.lang.Double.compare(acc, bestD) < 0) {
-              bestC = c; bestD = acc; first = false
-            }
-          }
-          PqCode(id, j, bestC, bestD)
-        }
-      }
-  }
+  def pqEncodeStream(vecs: DataFrame, codebooks: DataFrame,
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    encodeCodes(vecs, Similarity.readBooks(codebooks), idCol, vecCol)
+
+  private def encodeCodes(vecs: DataFrame, pq: Similarity.PqBooks,
+      idCol: String, vecCol: String): DataFrame =
+    Similarity.pqCodes(vecs.where(pq.dimGuard(col(vecCol), "vector"))
+        .select(col(idCol).cast("long").as("vec_id"),
+          col(vecCol).cast("array<double>").as("v0")),
+      pq.books, pq.sub)
 
   /** One micro-batch of [[pqEncodeAppendSink]], IDEMPOTENT per
     * `batchId`: Structured Streaming's foreachBatch is at-least-once —
@@ -962,10 +787,15 @@ object StreamOps {
     * directory carries it), matching what `partitionBy` bootstrap writes
     * put inside the partition.
     */
-  def pqEncodeAppendBatch(batch: DataFrame,
-      codebooks: Seq[(Int, Long, Seq[Double])], base: String,
-      modelId: String, batchId: Long,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
+  def pqEncodeAppendBatch(batch: DataFrame, codebooks: DataFrame,
+      base: String, modelId: String, batchId: Long,
+      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
+    appendCodes(batch, Similarity.readBooks(codebooks), base, modelId,
+      batchId, idCol, vecCol)
+
+  private def appendCodes(batch: DataFrame, pq: Similarity.PqBooks,
+      base: String, modelId: String, batchId: Long, idCol: String,
+      vecCol: String): Unit = {
     val s = batch.sparkSession
     val shuffleN = Sessions.partsOf(s)
     val hconf = s.sparkContext.hadoopConfiguration
@@ -978,7 +808,7 @@ object StreamOps {
     // (vec_id, subspace, cluster): the per-subspace dist is a batch
     // diagnostic, and appending it would fork the relation's schema
     // against the bootstrap rows pqFreeze wrote
-    pqEncodeStream(batch, codebooks, idCol, vecCol).toDF()
+    encodeCodes(batch, pq, idCol, vecCol)
       .select(col("vec_id"), col("subspace"), col("cluster"))
       .repartition(shuffleN, col("vec_id"))
       .write.mode("overwrite").parquet(staging.toString)
@@ -1003,49 +833,23 @@ object StreamOps {
     * codes to the frozen model's code relation under its `model_id`
     * partition — the [[graft.pipeline.Similarity.pqFreeze]] layout, so
     * serving reads never distinguish bootstrap codes from ingested ones.
-    * Cost per micro-batch is proportional to the BATCH (m broadcast-free
-    * local argmins per vector), never the corpus or the index; each
-    * batch commits idempotently by batch id ([[pqEncodeAppendBatch]]),
-    * so at-least-once replay cannot duplicate code rows.
+    * The codebooks are read once, when the query starts. Cost per
+    * micro-batch is proportional to the BATCH (m broadcast-free local
+    * argmins per vector), never the corpus or the index; each batch
+    * commits idempotently by batch id ([[pqEncodeAppendBatch]]), so
+    * at-least-once replay cannot duplicate code rows.
     */
-  def pqEncodeAppendSink(vecs: DataFrame,
-      codebooks: Seq[(Int, Long, Seq[Double])], base: String,
-      modelId: String, triggerMs: Long = 1000,
-      idCol: String = "vec_id", vecCol: String = "embedding"): StreamingQuery =
+  def pqEncodeAppendSink(vecs: DataFrame, codebooks: DataFrame,
+      base: String, modelId: String, triggerMs: Long = 1000,
+      idCol: String = "vec_id", vecCol: String = "embedding"): StreamingQuery = {
+    val pq = Similarity.readBooks(codebooks)
     vecs.writeStream
       .outputMode(OutputMode.Append)
       .trigger(Trigger.ProcessingTime(triggerMs))
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        pqEncodeAppendBatch(batch.toDF(), codebooks, base, modelId,
-          batchId, idCol, vecCol)
+        appendCodes(batch.toDF(), pq, base, modelId, batchId, idCol, vecCol)
       }
       .start()
-
-  /** Custom per-series running state (last/min/max/count) via
-    * mapGroupsWithState — the streaming "current dashboard value" of the
-    * reference (A1/A2 continuously maintained).
-    */
-  def runningStats(points: Dataset[PointIn]): Dataset[SeriesUpdate] = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    points.groupByKey(_.series_id)
-      .mapGroupsWithState[SeriesState, SeriesUpdate](GroupStateTimeout.NoTimeout) {
-        (key, batch, state: GroupState[SeriesState]) =>
-          val prev = state.getOption.getOrElse(
-            SeriesState(Long.MinValue, Double.NaN, Double.PositiveInfinity,
-              Double.NegativeInfinity, 0L))
-          val next = batch.foldLeft(prev) { (s, p) =>
-            SeriesState(
-              lastTs = math.max(s.lastTs, p.ts),
-              lastValue = if (p.ts >= s.lastTs) p.value else s.lastValue,
-              minValue = math.min(s.minValue, p.value),
-              maxValue = math.max(s.maxValue, p.value),
-              n = s.n + 1)
-          }
-          state.update(next)
-          SeriesUpdate(key, next.lastTs, next.lastValue, next.minValue,
-            next.maxValue, next.n)
-      }
   }
 
   final case class KmvIn(grp: String, h: Long)
@@ -1053,30 +857,6 @@ object StreamOps {
   final case class KmvEstimate(grp: String, n_kept: Long, kth_min: Long,
       est_distinct: Double)
 
-  /** Streaming KMV distinct-count sketch: per group, the k smallest
-    * distinct mixed hashes seen so far ([[graft.pipeline.Sketches.kmvHash]]
-    * — same mixer as the batch face), re-estimated on every micro-batch
-    * that touches the group. The live "distinct users so far" dashboard
-    * figure, at O(k) state per group instead of the full distinct set a
-    * streaming exact count would hold — the whole point of a sketch in a
-    * stream.
-    *
-    * Run on a BATCH frame this emits exactly
-    * [[graft.pipeline.Sketches.kmvDistinct]] (one "micro-batch" per group;
-    * same merge, same estimator — the `stream_kmv` gate aliases the
-    * `sketch_kmv` oracle). Run on a stream it emits the group's refreshed
-    * estimate per micro-batch (Append mode), each strictly refining the
-    * last: the k-min merge is associative and insensitive to arrival
-    * order, so the final estimate equals the batch estimate over the
-    * union of all batches regardless of how rows were split — pinned by
-    * StreamOpsSpec.
-    *
-    * STATE RETENTION CONTRACT: state is a FIXED k longs per group —
-    * unbounded group cardinality is the only growth axis. `idleTimeoutMs`
-    * evicts idle groups (ProcessingTimeTimeout); an evicted group restarts
-    * its sketch from empty, UNDER-estimating until it re-fills — the
-    * recency trade a bounded-state deployment makes explicit.
-    */
   final case class HllIn(grp: String, idx: Int, rho: Int)
   final case class HllState(regs: Map[Int, Int])
   final case class HllEstimate(grp: String, n_registers_hit: Long, est_distinct: Double)
@@ -1101,34 +881,21 @@ object StreamOps {
   def hllStream(df: DataFrame, p: Int = 10, groupCol: String, valueCol: String,
       idleTimeoutMs: Option[Long] = None): Dataset[HllEstimate] = {
     require(p >= 7 && p <= 16, s"hllStream needs p in [7, 16], got $p")
-    require(idleTimeoutMs.forall(_ > 0), s"idleTimeoutMs must be positive: $idleTimeoutMs")
     val spark = df.sparkSession
     import spark.implicits._
     import graft.pipeline.Sketches
     val rows = df.select(col(groupCol).cast("string").as("grp"),
       Sketches.hllIdx(valueCol, p).cast("int").as("idx"),
       Sketches.hllRho(valueCol, p).as("rho")).as[HllIn]
-    val timeoutConf =
-      if (idleTimeoutMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    rows.groupByKey(_.grp)
-      .flatMapGroupsWithState[HllState, HllEstimate](
-        OutputMode.Append(), timeoutConf) {
-        (grp, batch, state: GroupState[HllState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var regs = state.getOption.map(_.regs).getOrElse(Map.empty[Int, Int])
-            batch.foreach { r =>
-              if (r.rho > regs.getOrElse(r.idx, 0)) regs = regs.updated(r.idx, r.rho)
-            }
-            state.update(HllState(regs))
-            idleTimeoutMs.foreach(state.setTimeoutDuration)
-            val (hit, est) = Sketches.hllEstimate(p, regs.values)
-            Iterator.single(HllEstimate(grp, hit, est))
-          }
-      }
+    keyedState(rows, idleTimeoutMs)(_.grp) {
+      (grp, batch, prev: Option[HllState]) =>
+        var regs = prev.map(_.regs).getOrElse(Map.empty[Int, Int])
+        batch.foreach { r =>
+          if (r.rho > regs.getOrElse(r.idx, 0)) regs = regs.updated(r.idx, r.rho)
+        }
+        val (hit, est) = Sketches.hllEstimate(p, regs.values)
+        (Some(HllState(regs)), Iterator.single(HllEstimate(grp, hit, est)))
+    }
   }
 
   final case class CmsIn(j: Int, bucket: Long)
@@ -1164,50 +931,58 @@ object StreamOps {
     val rows = df.select(posexplode(array((0 until d).map(j =>
       PolyHash(col(valueCol).cast("string"), 201L + j) % w): _*))
       .as(Seq("j", "bucket"))).as[CmsIn]
-    rows.groupByKey(r => r.j.toLong * w + r.bucket)
-      .flatMapGroupsWithState[CmsState, CmsCell](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (key, batch, state: GroupState[CmsState]) =>
-          val cnt = state.getOption.map(_.cnt).getOrElse(0L) + batch.length
-          state.update(CmsState(cnt))
-          Iterator.single(CmsCell((key / w).toInt, key % w, cnt))
-      }
+    keyedState(rows)(r => r.j.toLong * w + r.bucket) {
+      (key, batch, prev: Option[CmsState]) =>
+        val cnt = prev.map(_.cnt).getOrElse(0L) + batch.length
+        (Some(CmsState(cnt)), Iterator.single(CmsCell((key / w).toInt, key % w, cnt)))
+    }
   }
 
+  /** Streaming KMV distinct-count sketch: per group, the k smallest
+    * distinct mixed hashes seen so far ([[graft.pipeline.Sketches.kmvHash]]
+    * — same mixer as the batch face), re-estimated on every micro-batch
+    * that touches the group. The live "distinct users so far" dashboard
+    * figure, at O(k) state per group instead of the full distinct set a
+    * streaming exact count would hold — the whole point of a sketch in a
+    * stream.
+    *
+    * Run on a BATCH frame this emits exactly
+    * [[graft.pipeline.Sketches.kmvDistinct]] (one "micro-batch" per group;
+    * same merge, same estimator — the `stream_kmv` gate aliases the
+    * `sketch_kmv` oracle). Run on a stream it emits the group's refreshed
+    * estimate per micro-batch (Append mode), each strictly refining the
+    * last: the k-min merge is associative and insensitive to arrival
+    * order, so the final estimate equals the batch estimate over the
+    * union of all batches regardless of how rows were split — pinned by
+    * StreamOpsSpec.
+    *
+    * STATE RETENTION CONTRACT: state is a FIXED k longs per group —
+    * unbounded group cardinality is the only growth axis. `idleTimeoutMs`
+    * evicts idle groups (ProcessingTimeTimeout); an evicted group restarts
+    * its sketch from empty, UNDER-estimating until it re-fills — the
+    * recency trade a bounded-state deployment makes explicit.
+    */
   def kmvStream(df: DataFrame, k: Int, groupCol: String, valueCol: String,
       idleTimeoutMs: Option[Long] = None): Dataset[KmvEstimate] = {
     require(k >= 2, s"KMV needs k >= 2, got $k")
-    require(idleTimeoutMs.forall(_ > 0), s"idleTimeoutMs must be positive: $idleTimeoutMs")
     val spark = df.sparkSession
     import spark.implicits._
     import graft.functions.PolyHash
     import graft.pipeline.Sketches
     val rows = df.select(col(groupCol).cast("string").as("grp"),
       Sketches.kmvHash(valueCol).as("h")).as[KmvIn]
-    val timeoutConf =
-      if (idleTimeoutMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    rows.groupByKey(_.grp)
-      .flatMapGroupsWithState[KmvState, KmvEstimate](
-        OutputMode.Append(), timeoutConf) {
-        (grp, batch, state: GroupState[KmvState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val prev = state.getOption.map(_.hs).getOrElse(Vector.empty)
-            // merge-then-cut: distinct keeps the sketch a SET of hashes;
-            // take(k) after sort is the associative k-min reduction
-            val hs = (prev ++ batch.map(_.h)).distinct.sorted.take(k)
-            state.update(KmvState(hs))
-            idleTimeoutMs.foreach(state.setTimeoutDuration)
-            val n = hs.size.toLong
-            val est =
-              if (n < k) n.toDouble
-              else (k - 1).toDouble * PolyHash.Mod / math.max(hs.last, 1L)
-            Iterator.single(KmvEstimate(grp, n, hs.last, est))
-          }
-      }
+    keyedState(rows, idleTimeoutMs)(_.grp) {
+      (grp, batch, prev: Option[KmvState]) =>
+        // merge-then-cut: distinct keeps the sketch a SET of hashes;
+        // take(k) after sort is the associative k-min reduction
+        val hs = (prev.map(_.hs).getOrElse(Vector.empty) ++ batch.map(_.h))
+          .distinct.sorted.take(k)
+        val n = hs.size.toLong
+        val est =
+          if (n < k) n.toDouble
+          else (k - 1).toDouble * PolyHash.Mod / math.max(hs.last, 1L)
+        (Some(KmvState(hs)), Iterator.single(KmvEstimate(grp, n, hs.last, est)))
+    }
   }
 
   final case class QuantileIn(grp: String, h: Long, key: Long, x: Double)
@@ -1243,7 +1018,6 @@ object StreamOps {
     require(k >= 2, s"quantileStream needs k >= 2, got $k")
     require(qs.nonEmpty && qs.forall(q => q >= 0.0 && q <= 1.0),
       s"quantiles must lie in [0,1], got $qs")
-    require(idleTimeoutMs.forall(_ > 0), s"idleTimeoutMs must be positive: $idleTimeoutMs")
     val spark = df.sparkSession
     import spark.implicits._
     import graft.pipeline.{Sampling, Sketches}
@@ -1254,37 +1028,25 @@ object StreamOps {
       .select(col(groupCol).cast("string").as("grp"), h.as("h"),
         col(keyCol).cast("long").as("key"),
         col(valueCol).cast("double").as("x")).as[QuantileIn]
-    val timeoutConf =
-      if (idleTimeoutMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    rows.groupByKey(_.grp)
-      .flatMapGroupsWithState[QuantileState, QuantileEstimate](
-        OutputMode.Append(), timeoutConf) {
-        (grp, batch, state: GroupState[QuantileState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val prev = state.getOption.map(_.rows).getOrElse(Vector.empty)
-            // merge-then-cut on (h, key): distinct guards re-delivered rows,
-            // the (h, key) sort is the batch face's exact sample order
-            val kept = (prev ++ batch.map(r => (r.h, r.key, r.x)))
-              .distinct.sortBy(t => (t._1, t._2)).take(k)
-            state.update(QuantileState(kept))
-            idleTimeoutMs.foreach(state.setTimeoutDuration)
-            val vs = kept.map(_._3).sorted
-            val n = vs.length
-            qs.iterator.map { q =>
-              val pos = q * (n - 1)
-              val lo = math.floor(pos).toInt
-              val frac = pos - lo
-              val est = vs(lo) + frac * (vs(math.min(lo + 1, n - 1)) - vs(lo))
-              QuantileEstimate(grp, q, n.toLong,
-                BigDecimal(est).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-                  .toDouble)
-            }
-          }
-      }
+    keyedState(rows, idleTimeoutMs)(_.grp) {
+      (grp, batch, prev: Option[QuantileState]) =>
+        // merge-then-cut on (h, key): distinct guards re-delivered rows,
+        // the (h, key) sort is the batch face's exact sample order
+        val kept = (prev.map(_.rows).getOrElse(Vector.empty) ++
+            batch.map(r => (r.h, r.key, r.x)))
+          .distinct.sortBy(t => (t._1, t._2)).take(k)
+        val vs = kept.map(_._3).sorted
+        val n = vs.length
+        (Some(QuantileState(kept)), qs.iterator.map { q =>
+          val pos = q * (n - 1)
+          val lo = math.floor(pos).toInt
+          val frac = pos - lo
+          val est = vs(lo) + frac * (vs(math.min(lo + 1, n - 1)) - vs(lo))
+          QuantileEstimate(grp, q, n.toLong,
+            BigDecimal(est).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+              .toDouble)
+        })
+    }
   }
 
   final case class CdcIn(id: Long, payload: Option[String], seq: Long, op: String)
@@ -1309,32 +1071,19 @@ object StreamOps {
   def cdcStream(log: DataFrame, idCol: String = "doc_id",
       payloadCol: String = "text", seqCol: String = "seq", opCol: String = "op",
       idleTimeoutMs: Option[Long] = None): Dataset[CdcLatestOut] = {
-    require(idleTimeoutMs.forall(_ > 0), s"idleTimeoutMs must be positive: $idleTimeoutMs")
     val spark = log.sparkSession
     import spark.implicits._
     val rows = log.select(col(idCol).cast("long").as("id"),
       col(payloadCol).cast("string").as("payload"),
       col(seqCol).cast("long").as("seq"), col(opCol).cast("string").as("op"))
       .as[CdcIn]
-    val timeoutConf =
-      if (idleTimeoutMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    rows.groupByKey(_.id)
-      .flatMapGroupsWithState[CdcLatestState, CdcLatestOut](
-        OutputMode.Append(), timeoutConf) {
-        (id, batch, state: GroupState[CdcLatestState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val all = state.getOption.map(s => (s.seq, s.op, s.payload)).toSeq ++
-              batch.map(r => (r.seq, r.op, r.payload))
-            val (bs, bo, bp) = all.maxBy { case (sq, o, _) => (sq, o) }
-            state.update(CdcLatestState(bs, bo, bp))
-            idleTimeoutMs.foreach(state.setTimeoutDuration)
-            Iterator.single(CdcLatestOut(id, bs, bo, bp))
-          }
-      }
+    keyedState(rows, idleTimeoutMs)(_.id) {
+      (id, batch, prev: Option[CdcLatestState]) =>
+        val all = prev.map(s => (s.seq, s.op, s.payload)).toSeq ++
+          batch.map(r => (r.seq, r.op, r.payload))
+        val (bs, bo, bp) = all.maxBy { case (sq, o, _) => (sq, o) }
+        (Some(CdcLatestState(bs, bo, bp)), Iterator.single(CdcLatestOut(id, bs, bo, bp)))
+    }
   }
 
   final case class DwIn(user_id: Long, event_type: String,
@@ -1363,7 +1112,6 @@ object StreamOps {
   def dedupWindowStream(df: DataFrame, windowNs: Long,
       idleTimeoutMs: Option[Long] = None): Dataset[DwCell] = {
     require(windowNs > 0, s"windowNs must be positive, got $windowNs")
-    require(idleTimeoutMs.forall(_ > 0), s"idleTimeoutMs must be positive: $idleTimeoutMs")
     val spark = df.sparkSession
     import spark.implicits._
     val rows = df.select(col("user_id").cast("long").as("user_id"),
@@ -1371,28 +1119,16 @@ object StreamOps {
       (col("ts") - pmod(col("ts"), lit(windowNs))).cast("long").as("window_start"),
       col("ts").cast("long").as("ts"),
       col("event_id").cast("long").as("event_id")).as[DwIn]
-    val timeoutConf =
-      if (idleTimeoutMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    rows.groupByKey(r => (r.user_id, r.event_type, r.window_start))
-      .flatMapGroupsWithState[DwState, DwCell](
-        OutputMode.Append(), timeoutConf) {
-        case ((u, t, w), batch, state: GroupState[DwState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val b = batch.toVector
-            val prev = state.getOption
-            val cand = prev.map(s => (s.firstTs, s.firstId)).toVector ++
-              b.map(r => (r.ts, r.event_id))
-            val (ft, fi) = cand.min
-            val n = prev.map(_.n).getOrElse(0L) + b.size
-            state.update(DwState(ft, fi, n))
-            idleTimeoutMs.foreach(state.setTimeoutDuration)
-            Iterator.single(DwCell(u, t, w, ft, fi, n - 1))
-          }
-      }
+    keyedState(rows, idleTimeoutMs)(r => (r.user_id, r.event_type, r.window_start)) {
+      (cell, batch, prev: Option[DwState]) =>
+        val (u, t, w) = cell
+        val b = batch.toVector
+        val cand = prev.map(s => (s.firstTs, s.firstId)).toVector ++
+          b.map(r => (r.ts, r.event_id))
+        val (ft, fi) = cand.min
+        val n = prev.map(_.n).getOrElse(0L) + b.size
+        (Some(DwState(ft, fi, n)), Iterator.single(DwCell(u, t, w, ft, fi, n - 1)))
+    }
   }
 
   final case class SessIn(user_id: Long, ts: Long, event_id: Long)
@@ -1401,7 +1137,7 @@ object StreamOps {
       end_ns: Long, duration_ns: Long, n_events: Long)
 
   /** Streaming face of [[graft.ops.Sessionize.sessions]]: per user, the
-    * open session rides flatMapGroupsWithState as four longs (1-based
+    * open session rides the keyed state as four longs (1-based
     * index, start, end, count); each micro-batch folds its events in the
     * batch operator's exact (ts, id) order — a gap > `gapNs` closes the
     * session (emitted final) and opens the next; the still-open session is
@@ -1426,45 +1162,32 @@ object StreamOps {
   def sessionStream(df: DataFrame, gapNs: Long,
       idleTimeoutMs: Option[Long] = None): Dataset[SessRow] = {
     require(gapNs > 0, s"gapNs must be positive, got $gapNs")
-    require(idleTimeoutMs.forall(_ > 0), s"idleTimeoutMs must be positive: $idleTimeoutMs")
     val spark = df.sparkSession
     import spark.implicits._
     val rows = df.select(col("user_id").cast("long").as("user_id"),
       col("ts").cast("long").as("ts"),
       col("event_id").cast("long").as("event_id")).as[SessIn]
-    val timeoutConf =
-      if (idleTimeoutMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    rows.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessState, SessRow](
-        OutputMode.Append(), timeoutConf) {
-        case (u, batch, state: GroupState[SessState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val evs = batch.toVector.sortBy(e => (e.ts, e.event_id))
-            val closed = Vector.newBuilder[SessRow]
-            var cur = state.getOption
-            evs.foreach { e =>
-              cur match {
-                case None =>
-                  cur = Some(SessState(1L, e.ts, e.ts, 1L))
-                case Some(s) if e.ts - s.end > gapNs =>
-                  closed += SessRow(u, s.idx, s.start, s.end,
-                    s.end - s.start, s.n)
-                  cur = Some(SessState(s.idx + 1, e.ts, e.ts, 1L))
-                case Some(s) =>
-                  cur = Some(SessState(s.idx, math.min(s.start, e.ts),
-                    math.max(s.end, e.ts), s.n + 1))
-              }
-            }
-            cur.foreach(state.update)
-            idleTimeoutMs.foreach(state.setTimeoutDuration)
-            val snap = cur.filter(_ => evs.nonEmpty).map(s =>
-              SessRow(u, s.idx, s.start, s.end, s.end - s.start, s.n))
-            (closed.result() ++ snap).iterator
+    keyedState(rows, idleTimeoutMs)(_.user_id) {
+      (u, batch, prev: Option[SessState]) =>
+        val evs = batch.toVector.sortBy(e => (e.ts, e.event_id))
+        val closed = Vector.newBuilder[SessRow]
+        var cur = prev
+        evs.foreach { e =>
+          cur match {
+            case None =>
+              cur = Some(SessState(1L, e.ts, e.ts, 1L))
+            case Some(s) if e.ts - s.end > gapNs =>
+              closed += SessRow(u, s.idx, s.start, s.end,
+                s.end - s.start, s.n)
+              cur = Some(SessState(s.idx + 1, e.ts, e.ts, 1L))
+            case Some(s) =>
+              cur = Some(SessState(s.idx, math.min(s.start, e.ts),
+                math.max(s.end, e.ts), s.n + 1))
           }
-      }
+        }
+        val snap = cur.filter(_ => evs.nonEmpty).map(s =>
+          SessRow(u, s.idx, s.start, s.end, s.end - s.start, s.n))
+        (cur, (closed.result() ++ snap).iterator)
+    }
   }
 }

@@ -611,6 +611,21 @@ class PlanSpec extends SparkSpec {
     assert(checked > 0, "lint never saw the shingle kernel — its name is stale")
   }
 
+  test("the near-dup verify scores each candidate pair once") {
+    // a score filter over a projected score is pushed below the
+    // projection and scores every pair a second time; the score comes out
+    // of a one-row generator instead, so each kernel sits in one operator
+    val sf001 = s"${new java.io.File(sfDir).getParent}/sf0.01"
+    for ((q, kernels) <- Seq(
+        "dedup_minhash" -> Seq("sortedarrayjaccard"),
+        "dedup_containment" -> Seq("sortedarrayjaccard", "array_intersect"))) {
+      val (_, plans) = observe(SparkEntry.queries(q)(spark, sf001).collect())
+      val plan = plans.last.executedPlan
+      for (k <- kernels)
+        assert(evaluations(plan, k) == 1, s"$q: $k evaluated ${evaluations(plan, k)} times:\n$plan")
+    }
+  }
+
   test("dedup_minhash at sf0.01 builds with no job and runs at most 4") {
     val sf001 = s"${new java.io.File(sfDir).getParent}/sf0.01"
     Tables(spark, sf001).documents // the first open infers the schema with a job

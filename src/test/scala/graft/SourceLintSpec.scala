@@ -43,6 +43,25 @@ class SourceLintSpec extends AnyFunSuite {
     assert(bad.isEmpty, s"\nudf( sites in main:\n${bad.mkString("\n")}")
   }
 
+  test("keyed streaming state has one call site in main: the StreamOps helper") {
+    // every stateful stream operator folds through StreamOps.keyedState,
+    // which owns the idle-timeout check, the timeout choice, eviction and
+    // the timeout refresh; a second call site would fork that path
+    def sites(call: String) = for {
+      p <- mainScala
+      (line, i) <- Files.readString(p).linesIterator.zipWithIndex
+      code = line.trim
+      if !code.startsWith("//") && !code.startsWith("*") &&
+        s"\\b$call\\s*[\\[(]".r.findFirstIn(code).isDefined
+    } yield s"$p:${i + 1}: $code"
+    val fmgws = sites("flatMapGroupsWithState")
+    assert(fmgws.size == 1 &&
+      fmgws.head.startsWith("src/main/scala/graft/streaming/StreamOps.scala:"),
+      s"\nflatMapGroupsWithState call sites:\n${fmgws.mkString("\n")}")
+    val mgws = sites("mapGroupsWithState")
+    assert(mgws.isEmpty, s"\nmapGroupsWithState call sites:\n${mgws.mkString("\n")}")
+  }
+
   test("no ??? stubs in main") {
     val bad = for {
       p <- mainScala

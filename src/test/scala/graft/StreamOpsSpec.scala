@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.{col, explode, transform, when}
+import org.apache.spark.sql.functions.{col, explode, slice, transform, when}
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.streaming.StreamOps
@@ -11,7 +11,8 @@ import graft.ts.model.Period
 
 /** Structured-Streaming analogs of the reference's micro-batch loop:
   * foreachBatch collection merges each batch with last-wins semantics, and
-  * mapGroupsWithState maintains the running dashboard stats across batches.
+  * the keyed-state operators carry their state across micro-batches and
+  * equal their batch operators on a batch frame.
   */
 class StreamOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -89,7 +90,7 @@ class StreamOpsSpec extends SparkSpec {
       (0 until dims).map(b => (b, 0.2 * (b + 1), 0.1 * b, 1.0 + 0.5 * b)))
       .toDF("b", "w", "mu", "sd")
     val in = MemoryStream[(Long, String)]
-    val q = StreamOps.scoreStream(in.toDF().toDF("doc_id", "text"), model)
+    val q = graft.pipeline.TextOps.logregScoreFrozen(in.toDF().toDF("doc_id", "text"), model)
       .writeStream.format("memory").queryName("clf_score_out")
       .outputMode("append").start()
     try {
@@ -216,28 +217,6 @@ class StreamOpsSpec extends SparkSpec {
     }
   }
 
-  test("runningStats: per-series state persists across micro-batches") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val in = MemoryStream[PointIn]
-    val out = StreamOps.runningStats(in.toDS())
-    val q = out.writeStream.format("memory").queryName("running_stats")
-      .outputMode("update").trigger(Trigger.ProcessingTime(50)).start()
-    try {
-      in.addData(PointIn("a", 1 * S, 5.0), PointIn("a", 2 * S, 3.0))
-      q.processAllAvailable()
-      in.addData(PointIn("a", 3 * S, 9.0)) // state must carry min=3 forward
-      q.processAllAvailable()
-      val rows = spark.table("running_stats").where($"series_id" === "a")
-        .orderBy($"n").collect()
-      val last = rows.last
-      assert(last.getAs[Long]("n") == 3L)
-      assert(last.getAs[Double]("lastValue") == 9.0)
-      assert(last.getAs[Double]("minValue") == 3.0)
-      assert(last.getAs[Double]("maxValue") == 9.0)
-      assert(last.getAs[Long]("lastTs") == 3 * S)
-    } finally q.stop()
-  }
-
   test("nearDupStream: batch face == minhashNearDups; pairs span micro-batches") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val docsDf = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -320,12 +299,6 @@ class StreamOpsSpec extends SparkSpec {
     val (cells, cb, cd) = Similarity.ivfPqTrain(e, m = 2, kc = 4, iters = 1)
     val (ceF, cbF, cdF) = Similarity.ivfPqFreeze(cells, cb, cd, s"spec-$n",
       tmpDir("graft-stream-ann"))
-    val cellsSeq = ceF.select("cell", "centroid").collect().map(r =>
-      (r.get(0).asInstanceOf[Number].longValue, r.getSeq[Double](1).toSeq)).toSeq
-    val cbSeq = cbF.select("subspace", "cluster", "centroid").collect()
-      .map(r => (r.get(0).asInstanceOf[Number].intValue,
-        r.get(1).asInstanceOf[Number].intValue,
-        r.getSeq[Double](2).toSeq)).toSeq
     val queries = e.where(col("vec_id") < 6).select("vec_id", "embedding")
 
     // batch face: exact parity with the frozen batch server (same frozen
@@ -333,7 +306,7 @@ class StreamOpsSpec extends SparkSpec {
     val reference = rowsOf9(Similarity.ivfPqAdcTopKFrozen(
       queries, ceF, cbF, cdF, topK = 3, nprobe = 2))
     assert(reference.nonEmpty, "fixture must produce ANN hits")
-    assert(rowsOf9(StreamOps.annServeStream(queries, cellsSeq, cbSeq, cdF,
+    assert(rowsOf9(StreamOps.annServeStream(queries, ceF, cbF, cdF,
         topK = 3, nprobe = 2).toDF()) == reference)
 
     // streaming face: queries arriving across micro-batches are each
@@ -342,7 +315,7 @@ class StreamOpsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getSeq[Float](1).toSeq))
     val in = MemoryStream[(Long, Seq[Float])]
     val out = StreamOps.annServeStream(
-      in.toDS().toDF("vec_id", "embedding"), cellsSeq, cbSeq, cdF,
+      in.toDS().toDF("vec_id", "embedding"), ceF, cbF, cdF,
       topK = 3, nprobe = 2)
     val q = out.toDF().writeStream.format("memory").queryName("ann_hits")
       .outputMode("append").trigger(Trigger.ProcessingTime(50)).start()
@@ -360,7 +333,7 @@ class StreamOpsSpec extends SparkSpec {
     // query width must raise, not return garbage ranks
     val badQ = queries.selectExpr("vec_id", "slice(embedding, 1, 7) as embedding")
     val err = intercept[Exception] {
-      StreamOps.annServeStream(badQ, cellsSeq, cbSeq, cdF,
+      StreamOps.annServeStream(badQ, ceF, cbF, cdF,
         topK = 3, nprobe = 2).toDF().count()
     }
     // the GUARD must be what raised — an unrelated analysis/runtime
@@ -381,29 +354,23 @@ class StreamOpsSpec extends SparkSpec {
     val (cells, cb, cd) = Similarity.ivfPqTrain(e, m = 2, kc = 4, iters = 1)
     val (ceF, cbF, cdF) = Similarity.ivfPqFreeze(cells, cb, cd,
       s"spec-many-${e.count()}", tmpDir("graft-stream-ann-many"))
-    val cellsSeq = ceF.select("cell", "centroid").collect().map(r =>
-      (r.get(0).asInstanceOf[Number].longValue, r.getSeq[Double](1).toSeq)).toSeq
-    val cbSeq = cbF.select("subspace", "cluster", "centroid").collect()
-      .map(r => (r.get(0).asInstanceOf[Number].intValue,
-        r.get(1).asInstanceOf[Number].intValue,
-        r.getSeq[Double](2).toSeq)).toSeq
     // nprobe = every cell → each query's candidate group is the ENTIRE
     // code table (n·m rows) — the shape the incremental fold exists for:
     // the group function must stream it without materializing, and the
     // result must still be the batch server's exact rows
-    val np = cellsSeq.size
+    val np = ceF.count().toInt
     val queries = e.where(col("vec_id") < 3).select("vec_id", "embedding")
     val reference = rowsOf9(Similarity.ivfPqAdcTopKFrozen(
       queries, ceF, cbF, cdF, topK = 5, nprobe = np))
     assert(reference.nonEmpty)
-    assert(rowsOf9(StreamOps.annServeStream(queries, cellsSeq, cbSeq, cdF,
+    assert(rowsOf9(StreamOps.annServeStream(queries, ceF, cbF, cdF,
         topK = 5, nprobe = np).toDF()) == reference,
       "corpus-wide candidate groups must fold to the batch server's rows")
     // mis-shaped frozen cells (wrong centroid width) must fail loudly at
     // construction, not silently truncate the probe fold
-    val badCells = cellsSeq.map { case (c, v) => (c, v.take(7)) }
+    val badCells = ceF.select(col("cell"), slice(col("centroid"), 1, 7).as("centroid"))
     val g = intercept[IllegalArgumentException] {
-      StreamOps.annServeStream(queries, badCells, cbSeq, cdF,
+      StreamOps.annServeStream(queries, badCells, cbF, cdF,
         topK = 5, nprobe = np)
     }
     assert(g.getMessage.contains("every frozen cell centroid"))
@@ -474,7 +441,7 @@ class StreamOpsSpec extends SparkSpec {
       .blocklistFilter(docs.toDF("doc_id", "url"), bl)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val in = MemoryStream[(Long, String)]
-    val out = StreamOps.blocklistStream(in.toDS().toDF("doc_id", "url"), bl)
+    val out = graft.pipeline.WebOps.blocklistFilter(in.toDS().toDF("doc_id", "url"), bl)
       .select("doc_id", "canonical_url", "domain")
     val q = out.writeStream.outputMode("append").format("memory")
       .queryName("blocklist_stream").start()
@@ -505,7 +472,7 @@ class StreamOpsSpec extends SparkSpec {
       .select("doc_id", "allowed", "matched_prefix").collect()
       .map(r => r.getLong(0) -> ((r.getBoolean(1), r.getString(2)))).toMap
     val in = MemoryStream[(Long, String)]
-    val out = StreamOps.robotsStream(in.toDS().toDF("doc_id", "url"), rules)
+    val out = graft.pipeline.WebOps.robotsEval(in.toDS().toDF("doc_id", "url"), rules)
       .select("doc_id", "allowed", "matched_prefix")
     val q = out.writeStream.outputMode("append").format("memory")
       .queryName("robots_stream").start()
@@ -663,17 +630,13 @@ class StreamOpsSpec extends SparkSpec {
     val base = tmpDir("graft-stream-pqadd")
     val modelId = s"spec-add-${boot.count()}"
     val (cbF, _) = Similarity.pqFreeze(cb, cd, modelId, base)
-    val cbSeq = cbF.select("subspace", "cluster", "centroid").collect()
-      .map(r => (r.get(0).asInstanceOf[Number].intValue,
-        r.get(1).asInstanceOf[Number].longValue,
-        r.getSeq[Double](2).toSeq)).toSeq
 
-    // batch face: the streaming encode kernel must land on exactly the
-    // batch maintenance rows (same fold order, same tie-break)
+    // batch face: the streaming encode must land on exactly the batch
+    // maintenance rows (the same argmin kernel)
     val reference = rowsOf(Similarity.pqEncodeFrozen(batch, cbF)
       .select("vec_id", "subspace", "cluster", "dist"))
     assert(reference.nonEmpty)
-    assert(rowsOf(StreamOps.pqEncodeStream(batch, cbSeq).toDF()
+    assert(rowsOf(StreamOps.pqEncodeStream(batch, cbF)
         .select("vec_id", "subspace", "cluster", "dist")) == reference,
       "stream encode kernel must equal pqEncodeFrozen bit-for-bit")
 
@@ -687,7 +650,7 @@ class StreamOpsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
     val in = MemoryStream[(Long, Seq[Double])]
     val q = StreamOps.pqEncodeAppendSink(
-      in.toDS().toDF("vec_id", "embedding"), cbSeq, base, modelId,
+      in.toDS().toDF("vec_id", "embedding"), cbF, base, modelId,
       triggerMs = 50)
     try {
       in.addData(rows.filter(_._1 % 2 == 0).toIndexedSeq)
@@ -713,7 +676,7 @@ class StreamOpsSpec extends SparkSpec {
     // (per-batch deterministic file names, delete-then-rename)
     val replayRows = rows.filter(_._1 % 2 == 1).toIndexedSeq
     StreamOps.pqEncodeAppendBatch(
-      replayRows.toDF("vec_id", "embedding"), cbSeq, base, modelId,
+      replayRows.toDF("vec_id", "embedding"), cbF, base, modelId,
       batchId = 1L)
     val replayed = spark.read.parquet(s"$base/codes")
       .where(col("model_id") === modelId)
@@ -725,7 +688,7 @@ class StreamOpsSpec extends SparkSpec {
     // geometry guard survives the stream kernel
     val bad = batch.selectExpr("vec_id", "slice(embedding, 1, 7) as embedding")
     val err = intercept[Exception] {
-      StreamOps.pqEncodeStream(bad, cbSeq).toDF().count()
+      StreamOps.pqEncodeStream(bad, cbF).count()
     }
     def messages(t: Throwable): Seq[String] =
       if (t == null) Seq.empty
@@ -1197,5 +1160,85 @@ class StreamOpsSpec extends SparkSpec {
       rowsOf(graft.ops.Sessionize.sessions(events, gap)
         .select("user_id", "session_idx", "start_ns", "end_ns",
           "duration_ns", "n_events")))
+  }
+
+  test("every idle-timeout operator rejects a non-positive idleTimeoutMs at construction") {
+    val docs = Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text")
+    val vecs = Seq((1L, Seq(1.0, 0.0))).toDF("vec_id", "embedding")
+    val vals = Seq(("g", 1L, 1.0)).toDF("grp", "key", "v")
+    val log = Seq((1L, "a", 1L, "I")).toDF("doc_id", "text", "seq", "op")
+    val events = Seq((1L, "click", 0L, 1L)).toDF("user_id", "event_type", "ts", "event_id")
+    val ops: Seq[(String, Option[Long] => Any)] = Seq(
+      "ewmaStream" -> (t => StreamOps.ewmaStream(Seq(PointIn("s", 0L, 1.0)).toDS(),
+        idleTimeoutMs = t)),
+      "nearDupStream" -> (t => StreamOps.nearDupStream(docs, idleTimeoutMs = t)),
+      "lineDedupStream" -> (t => StreamOps.lineDedupStream(docs, idleTimeoutMs = t)),
+      "semanticDupStream" -> (t => StreamOps.semanticDupStream(vecs,
+        Seq((0L, Seq(1.0, 0.0))), 0.9, idleTimeoutMs = t)),
+      "hllStream" -> (t => StreamOps.hllStream(vals, 10, "grp", "v", idleTimeoutMs = t)),
+      "kmvStream" -> (t => StreamOps.kmvStream(vals, 8, "grp", "v", idleTimeoutMs = t)),
+      "quantileStream" -> (t => StreamOps.quantileStream(vals, 8, "grp", "key", "v",
+        idleTimeoutMs = t)),
+      "cdcStream" -> (t => StreamOps.cdcStream(log, idleTimeoutMs = t)),
+      "dedupWindowStream" -> (t => StreamOps.dedupWindowStream(events, 1000L,
+        idleTimeoutMs = t)),
+      "sessionStream" -> (t => StreamOps.sessionStream(events, 1000L, idleTimeoutMs = t)))
+    for ((name, build) <- ops; t <- Seq(0L, -1L)) {
+      val e = intercept[IllegalArgumentException](build(Some(t)))
+      assert(e.getMessage.contains("idleTimeoutMs must be positive"), s"$name($t): $e")
+    }
+    // the same inputs build with a positive timeout: the rejection above
+    // is the timeout check, not a schema problem of the table's inputs
+    ops.foreach { case (_, build) => build(Some(1000L)) }
+  }
+
+  test("semanticDupStream drops the vectors the argmin kernel assigns no cell, " +
+    "as the batch face does") {
+    import graft.pipeline.Similarity
+    val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select("vec_id", "embedding")
+    val centsDf = graft.core.Lineage.truncate(
+      Similarity.kmeansCentroids(e, k = 4, iters = 1))
+    val cents = centsDf.collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).toSeq
+    // a truncated copy of vector 0 (near-identical to it on the shared
+    // prefix) and a copy of vector 1 with a NaN element: the kernel
+    // assigns neither a cell
+    val d = e.select(org.apache.spark.sql.functions.size(col("embedding"))).head().getInt(0)
+    val extra = e.where(col("vec_id") === 0)
+      .select(org.apache.spark.sql.functions.lit(100000L).as("vec_id"),
+        slice(col("embedding"), 1, d - 1).as("embedding"))
+      .unionByName(e.where(col("vec_id") === 1)
+        .select(org.apache.spark.sql.functions.lit(100001L).as("vec_id"),
+          transform(col("embedding"), (x, i) =>
+            when(i === 0, org.apache.spark.sql.functions.lit(Float.NaN)).otherwise(x))
+            .as("embedding")))
+    val corpus = e.unionByName(extra)
+    val cells = corpus.join(
+      Similarity.assignToCentroids(corpus, centsDf).select("vec_id", "cluster"),
+      "vec_id")
+    val reference = rowsOf(
+      Similarity.embeddingNearDups(cells, threshold = 0.4, cellCol = "cluster"))
+    assert(reference.nonEmpty)
+    assert(rowsOf(StreamOps.semanticDupStream(corpus, cents, 0.4).toDF()) == reference)
+  }
+
+  test("pqEncodeStream encodes a vector with a NaN element as pqEncodeFrozen does") {
+    import graft.pipeline.Similarity
+    val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val (cb, cd) = Similarity.pqTrain(e.where(col("vec_id") % 3 =!= 0), m = 2,
+      kc = 4, iters = 1)
+    val (cbF, _) = Similarity.pqFreeze(cb, cd, "spec-nan",
+      tmpDir("graft-stream-pqnan"))
+    val nanVec = e.where(col("vec_id") === 3).select(col("vec_id"),
+      transform(col("embedding"), (x, i) =>
+        when(i === 0, org.apache.spark.sql.functions.lit(Float.NaN)).otherwise(x))
+        .as("embedding"))
+    val reference = rowsOf(Similarity.pqEncodeFrozen(nanVec, cbF)
+      .select("vec_id", "subspace", "cluster", "dist"))
+    // the NaN slice has no argmin: its subspace gets a null code
+    assert(reference.size == 2 && reference.exists(_(2) == "null"), s"$reference")
+    assert(rowsOf(StreamOps.pqEncodeStream(nanVec, cbF)
+      .select("vec_id", "subspace", "cluster", "dist")) == reference)
   }
 }
