@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.{col, explode, slice, transform, when}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{col, explode, lit, size, slice, transform, when}
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.streaming.StreamOps
@@ -1192,6 +1193,10 @@ class StreamOpsSpec extends SparkSpec {
     ops.foreach { case (_, build) => build(Some(1000L)) }
   }
 
+  /** `vec` with its first element replaced by NaN. */
+  private def nanFirst(vec: Column): Column =
+    transform(vec, (x, i) => when(i === 0, lit(Float.NaN)).otherwise(x))
+
   test("semanticDupStream drops the vectors the argmin kernel assigns no cell, " +
     "as the batch face does") {
     import graft.pipeline.Similarity
@@ -1204,15 +1209,12 @@ class StreamOpsSpec extends SparkSpec {
     // a truncated copy of vector 0 (near-identical to it on the shared
     // prefix) and a copy of vector 1 with a NaN element: the kernel
     // assigns neither a cell
-    val d = e.select(org.apache.spark.sql.functions.size(col("embedding"))).head().getInt(0)
+    val d = e.select(size(col("embedding"))).head().getInt(0)
     val extra = e.where(col("vec_id") === 0)
-      .select(org.apache.spark.sql.functions.lit(100000L).as("vec_id"),
+      .select(lit(100000L).as("vec_id"),
         slice(col("embedding"), 1, d - 1).as("embedding"))
       .unionByName(e.where(col("vec_id") === 1)
-        .select(org.apache.spark.sql.functions.lit(100001L).as("vec_id"),
-          transform(col("embedding"), (x, i) =>
-            when(i === 0, org.apache.spark.sql.functions.lit(Float.NaN)).otherwise(x))
-            .as("embedding")))
+        .select(lit(100001L).as("vec_id"), nanFirst(col("embedding")).as("embedding")))
     val corpus = e.unionByName(extra)
     val cells = corpus.join(
       Similarity.assignToCentroids(corpus, centsDf).select("vec_id", "cluster"),
@@ -1230,10 +1232,8 @@ class StreamOpsSpec extends SparkSpec {
       kc = 4, iters = 1)
     val (cbF, _) = Similarity.pqFreeze(cb, cd, "spec-nan",
       tmpDir("graft-stream-pqnan"))
-    val nanVec = e.where(col("vec_id") === 3).select(col("vec_id"),
-      transform(col("embedding"), (x, i) =>
-        when(i === 0, org.apache.spark.sql.functions.lit(Float.NaN)).otherwise(x))
-        .as("embedding"))
+    val nanVec = e.where(col("vec_id") === 3)
+      .select(col("vec_id"), nanFirst(col("embedding")).as("embedding"))
     val reference = rowsOf(Similarity.pqEncodeFrozen(nanVec, cbF)
       .select("vec_id", "subspace", "cluster", "dist"))
     // the NaN slice has no argmin: its subspace gets a null code
